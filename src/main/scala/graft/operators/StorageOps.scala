@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.{Formats, Tables}
+import graft.Scratch
+import graft.sources.{Formats, GraftFs, Tables}
 
 /** [EXT] Storage-layout operators (SURVEY.md §2.1-§2.2 at scale, §4):
   * format roundtrips beyond CSV, date/key-partitioned layouts that readers
@@ -21,85 +22,20 @@ object StorageOps extends QueryModule {
   // after their last action, and a shutdown hook covers other JVMs.
   private def scratch(prefix: String): String = graft.Scratch.dir(prefix)
 
-  /** Per-(session, sfDir) FIXTURE memo (round 22, optimization guide §1.2
-    * "don't compute things you throw away"): the layouts/tables these
-    * queries READ are deterministic pure functions of the fixture parquet —
-    * pre-existing input the measured operator consumes, not something the
-    * query computes — yet each execution used to rebuild them from scratch,
-    * so Bench's warm + >=2 timed runs paid the identical setup writes three
-    * or more times per query and the timed figure was mostly fixture
-    * construction, not the scan/join/changelog path the query exists to
-    * measure. Same per-session reuse pattern as StreamShapes.boundedLanding
-    * / joinLandings (r13, judged across rounds 13-21).
-    *
-    * STRICT SCOPE — input setup only. Never memoized: anything the query
-    * computes or the bench times as its operator — mutation commands
-    * (DELETE/UPDATE/MERGE and their tables), maintenance CALLs
-    * (compact/cluster) and their target tables, streaming drains and their
-    * sinks/checkpoints, write-path roundtrips (json/orc, dsv2 sinks,
-    * pipeline_dsv2_flagship). Those rebuild per execution exactly as
-    * before. A fixture that a later phase MUTATES is only memoized when
-    * the mutation is part of the build closure itself (e.g. the changes
-    * fixtures' correction waves) — the memoized artifact is immutable
-    * after build.
-    *
-    * Keyed by (applicationId, sfDir, tag); invalidated by Scratch.purge
-    * like every landing cache. Values are opaque (paths, stamps, table
-    * names) — the build closure returns whatever handle the read needs. */
-  private val fixtures = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-  graft.Scratch.onPurge(() => fixtures.clear())
-  private def fixture[A <: AnyRef](s: SparkSession, dir: String, tag: String)(
-      build: => A): A =
-    fixtures.computeIfAbsent(s.sparkContext.applicationId + "|" + dir + "|" + tag,
-      _ => build).asInstanceOf[A]
-
-  private def copyTree(src: String, dst: String): Unit = {
-    val sp = java.nio.file.Paths.get(src)
-    val dp = java.nio.file.Paths.get(dst)
-    val it = java.nio.file.Files.walk(sp)
-    try it.forEach { p =>
-      val t = dp.resolve(sp.relativize(p))
-      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } finally it.close()
-  }
-
-  private def deleteTree(path: String): Unit = {
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root)) {
-      val it = java.nio.file.Files.walk(root)
-      try it.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally it.close()
+  /** The graftq catalog on this session, returning its warehouse dir. The
+    * catalog binds its options at first load and keeps them for the
+    * session, so the warehouse is chosen once and read back from the
+    * session conf afterwards. Its tables are staged inputs (DROP/CREATE in
+    * their build); a query that mutates its table gets a [[Scratch.fresh]]
+    * copy per execution. */
+  private def catalog(s: SparkSession): String = {
+    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
+    val key = "spark.sql.catalog.graftq.warehouse"
+    s.conf.getOption(key).getOrElse {
+      val wh = scratch("graft_catalog_wh")
+      s.conf.set(key, wh)
+      wh
     }
-  }
-
-  /** Pristine-table CLONE for the mutation/maintenance queries (round 22):
-    * the pre-command catalog table is a deterministic function of the
-    * fixture parquet, but the command MUTATES it, so the plain fixture
-    * memo above cannot apply — each execution needs its own copy. Build
-    * the pristine table once per (session, sfDir), stage its directory,
-    * and give every execution a byte-for-byte copy to mutate: manifests
-    * reference directory-relative file names (GraftSnapshot), so a
-    * recursive dir copy IS an independent table. The measured operator —
-    * the DELETE/UPDATE/MERGE rewrite or the maintenance CALL — still runs
-    * fully against a fresh pristine table every execution; only the
-    * identical setup WRITE is staged (a multi-second Spark write job
-    * becomes a ~10 ms copy of a few MB).  `build` must create
-    * graftq.<table> from scratch (its own DROP/CREATE/append). */
-  private def cloneTable(s: SparkSession, dir: String, table: String)(
-      build: => Unit): Unit = {
-    val stage = fixture(s, dir, s"stage_$table") {
-      build
-      val src = graft.sources.GraftFs.child(catalogWarehouse, table)
-      val st = scratch(s"graft_stage_$table")
-      copyTree(src, st)
-      st
-    }
-    val dst = graft.sources.GraftFs.child(catalogWarehouse, table)
-    deleteTree(dst)
-    copyTree(stage, dst)
   }
 
   // ------------------------------------------------------------------
@@ -157,7 +93,7 @@ object StorageOps extends QueryModule {
   // layout this is the difference between reading a day and reading a year.
   // ------------------------------------------------------------------
   def partitionPruned(s: SparkSession, dir: String): DataFrame = {
-    val landing = fixture(s, dir, "part_landing") {
+    val landing = Scratch.staged(s, dir, "part_landing") {
       val p = scratch("graft_part_landing")
       Tables.load(s, dir, "events")
         .select("event_id", "ts", "user_id", "value", "event_type")
@@ -183,7 +119,7 @@ object StorageOps extends QueryModule {
   // many queries in one session.
   // ------------------------------------------------------------------
   def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    val (custT, ordT) = fixture(s, dir, "bucketed_tables") {
+    val (custT, ordT) = Scratch.staged(s, dir, "bucketed_tables") {
       val cT = graft.Scratch.table(s, "cust_bq")
       val oT = graft.Scratch.table(s, "ord_bq")
       Tables.load(s, dir, "customer")
@@ -233,7 +169,7 @@ object StorageOps extends QueryModule {
   }
 
   def rangeClusteredScan(s: SparkSession, dir: String): DataFrame = {
-    val landing = fixture(s, dir, "range_landing")(writeRangeClustered(s, dir))
+    val landing = Scratch.staged(s, dir, "range_landing")(writeRangeClustered(s, dir))
     s.read.parquet(landing)
       .filter(col("ts") >= lit("2024-01-10").cast("timestamp") &&
         col("ts") < lit("2024-01-11").cast("timestamp"))
@@ -290,7 +226,7 @@ object StorageOps extends QueryModule {
   }
 
   def zorderScan(s: SparkSession, dir: String): DataFrame = {
-    val landing = fixture(s, dir, "zorder_landing")(writeZOrdered(s, dir))
+    val landing = Scratch.staged(s, dir, "zorder_landing")(writeZOrdered(s, dir))
     s.read.parquet(landing)
       .filter(col("user_id") >= 4 && col("user_id") <= 7 &&
         col("ts") >= lit("2024-01-08").cast("timestamp") &&
@@ -332,7 +268,7 @@ object StorageOps extends QueryModule {
   }
 
   def datePartitionPrune(s: SparkSession, dir: String): DataFrame = {
-    val landing = fixture(s, dir, "date_part_landing")(writeDatePartitioned(s, dir))
+    val landing = Scratch.staged(s, dir, "date_part_landing")(writeDatePartitioned(s, dir))
     s.read.parquet(landing)
       .filter(col("event_date") >= lit("2024-01-03").cast("date") &&
         col("event_date") < lit("2024-01-10").cast("date"))
@@ -369,7 +305,7 @@ object StorageOps extends QueryModule {
   // for the format and the 100 TB scan story.
   // ------------------------------------------------------------------
   def dsv2Pushdown(s: SparkSession, dir: String): DataFrame = {
-    val landing = fixture(s, dir, "log_landing") {
+    val landing = Scratch.staged(s, dir, "log_landing") {
       val p = scratch("graft_log_landing")
       Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
@@ -399,7 +335,7 @@ object StorageOps extends QueryModule {
   // pushed tree and the absence of a post-scan Filter.
   // ------------------------------------------------------------------
   def dsv2OrPushdown(s: SparkSession, dir: String): DataFrame = {
-    val landing = fixture(s, dir, "log_or") {
+    val landing = Scratch.staged(s, dir, "log_or") {
       val p = scratch("graft_log_or")
       Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
@@ -431,16 +367,12 @@ object StorageOps extends QueryModule {
   // fact tables and shuffling nothing. The merge-join hint is
   // plan-embedded (a conf toggle would not survive this function's lazy
   // return); at fixture scale the optimizer would otherwise broadcast the
-  // small side, which is exactly the plan the pin must exclude. The
-  // catalog name and warehouse are JVM-stable (a catalog binds its
-  // options at first load), with per-run DROP/CREATE for isolation.
+  // small side, which is exactly the plan the pin must exclude.
   // ------------------------------------------------------------------
-  private lazy val catalogWarehouse = scratch("graft_catalog_wh")
   def dsv2PartitionedJoin(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
+    val wh = catalog(s)
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    fixture(s, dir, "spj_tables") {
+    Scratch.staged(s, dir, "spj_tables") {
       val cols = "(event_id BIGINT, user_id BIGINT, value DOUBLE, event_type STRING)"
       Seq("spj_events", "spj_signups").foreach { t =>
         s.sql(s"DROP TABLE IF EXISTS graftq.$t")
@@ -451,7 +383,7 @@ object StorageOps extends QueryModule {
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
       ev.writeTo("graftq.spj_events").append()
       ev.filter(col("event_type") === "signup").writeTo("graftq.spj_signups").append()
-      "spj"
+      (GraftFs.child(wh, "spj_events"), GraftFs.child(wh, "spj_signups"))
     }
     s.table("graftq.spj_events")
       .join(s.table("graftq.spj_signups").select(col("user_id")).hint("merge"), "user_id")
@@ -484,7 +416,7 @@ object StorageOps extends QueryModule {
   // 100 TB landing needs to avoid rescanning its own history.
   // ------------------------------------------------------------------
   def dsv2Since(s: SparkSession, dir: String): DataFrame = {
-    val (landing, t) = fixture(s, dir, "log_since") {
+    val (landing, t) = Scratch.staged(s, dir, "log_since") {
       val p = scratch("graft_log_since")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
@@ -519,9 +451,8 @@ object StorageOps extends QueryModule {
   // the file counts, layout survival, order preservation, idempotence.
   // ------------------------------------------------------------------
   def dsv2Compact(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
-    cloneTable(s, dir, "cmp_ev") {
+    val wh = catalog(s)
+    Scratch.fresh(s, dir, "cmp_ev", GraftFs.child(wh, "cmp_ev")) {
       s.sql("DROP TABLE IF EXISTS graftq.cmp_ev")
       s.sql("CREATE TABLE graftq.cmp_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog " +
@@ -553,21 +484,20 @@ object StorageOps extends QueryModule {
   // tmps age out behind a grace window).
   // ------------------------------------------------------------------
   def dsv2Expire(s: SparkSession, dir: String): DataFrame = {
-    // the two-chunk landing is memoized input; the expire itself re-runs
-    // every execution (idempotent: a second pass over the same horizon
-    // finds nothing left to delete, which is the contract's no-op case)
-    val (landing, t) = fixture(s, dir, "log_expire") {
-      val p = scratch("graft_log_expire")
+    // the two-chunk landing is staged input; every execution expires its
+    // own fresh copy of it, so the expire deletes chunk 1 every time
+    val landing = scratch("graft_log_expire")
+    val t = Scratch.fresh(s, dir, "log_expire", landing) {
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
       ev.filter(col("event_id") % 3 === 0)
-        .write.format("graftlog").mode("append").save(p)
-      val hw = graft.sources.GraftFs.listNames(p)
+        .write.format("graftlog").mode("append").save(landing)
+      val hw = graft.sources.GraftFs.listNames(landing)
         .filter(_.endsWith(".graftlog"))
         .map(graft.sources.GraftLog.testStampOf).max
       ev.filter(col("event_id") % 3 =!= 0)
-        .write.format("graftlog").mode("append").save(p)
-      (p, hw)
+        .write.format("graftlog").mode("append").save(landing)
+      hw
     }
     // path landing (no catalog table needed): call the engine entry the
     // procedure wraps — the procedure surface itself is spec-covered
@@ -593,9 +523,8 @@ object StorageOps extends QueryModule {
   // the compared values stay run-independent (paths and stamps are not).
   // ------------------------------------------------------------------
   def dsv2Meta(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
-    fixture(s, dir, "meta_ev") {
+    val wh = catalog(s)
+    Scratch.staged(s, dir, "meta_ev") {
       s.sql("DROP TABLE IF EXISTS graftq.meta_ev")
       s.sql("CREATE TABLE graftq.meta_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog " +
@@ -603,7 +532,7 @@ object StorageOps extends QueryModule {
       Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
         .writeTo("graftq.meta_ev").append()
-      "meta_ev"
+      GraftFs.child(wh, "meta_ev")
     }
     s.table("graftq.meta_ev")
       .filter(col("_file").isNotNull && col("_pub_stamp") > 0L)
@@ -631,9 +560,8 @@ object StorageOps extends QueryModule {
   // files keep their names); this query pins the end-to-end semantics.
   // ------------------------------------------------------------------
   def dsv2Delete(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
-    cloneTable(s, dir, "del_ev") {
+    val wh = catalog(s)
+    Scratch.fresh(s, dir, "del_ev", GraftFs.child(wh, "del_ev")) {
       s.sql("DROP TABLE IF EXISTS graftq.del_ev")
       s.sql("CREATE TABLE graftq.del_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog " +
@@ -659,9 +587,8 @@ object StorageOps extends QueryModule {
   // floating point, so the DuckDB CASE twin hashes identically.
   // ------------------------------------------------------------------
   def dsv2Update(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
-    cloneTable(s, dir, "upd_ev") {
+    val wh = catalog(s)
+    Scratch.fresh(s, dir, "upd_ev", GraftFs.child(wh, "upd_ev")) {
       s.sql("DROP TABLE IF EXISTS graftq.upd_ev")
       s.sql("CREATE TABLE graftq.upd_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog " +
@@ -689,11 +616,10 @@ object StorageOps extends QueryModule {
   // table as a CASE + UNION ALL over the parquet twin.
   // ------------------------------------------------------------------
   def dsv2Merge(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
+    val wh = catalog(s)
     val ev = Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-    cloneTable(s, dir, "mrg_ev") {
+    Scratch.fresh(s, dir, "mrg_ev", GraftFs.child(wh, "mrg_ev")) {
       s.sql("DROP TABLE IF EXISTS graftq.mrg_ev")
       s.sql("CREATE TABLE graftq.mrg_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog " +
@@ -809,9 +735,8 @@ object StorageOps extends QueryModule {
   // moved, one .graftdel published, compaction absorbs).
   // ------------------------------------------------------------------
   def dsv2DeleteMor(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
-    cloneTable(s, dir, "mor_ev") {
+    val wh = catalog(s)
+    Scratch.fresh(s, dir, "mor_ev", GraftFs.child(wh, "mor_ev")) {
       s.sql("DROP TABLE IF EXISTS graftq.mor_ev")
       s.sql("CREATE TABLE graftq.mor_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog " +
@@ -842,15 +767,14 @@ object StorageOps extends QueryModule {
   // file (r15's documented gap). The oracle is the second chunk.
   // ------------------------------------------------------------------
   def dsv2SinceCompact(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
+    val wh = catalog(s)
     // fixture = two ingests + the mid-window compaction (the layout being
     // read through); the timed operator is the stamp-pushed segment scan
-    val t = fixture(s, dir, "sincec_ev") {
+    val (_, t) = Scratch.staged(s, dir, "sincec_ev") {
       s.sql("DROP TABLE IF EXISTS graftq.sincec_ev")
       s.sql("CREATE TABLE graftq.sincec_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog")
-      val landing = graft.sources.GraftFs.child(catalogWarehouse, "sincec_ev")
+      val landing = GraftFs.child(wh, "sincec_ev")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
       ev.filter(col("event_id") % 3 === 0).writeTo("graftq.sincec_ev").append()
@@ -859,7 +783,7 @@ object StorageOps extends QueryModule {
         .map(graft.sources.GraftLog.testStampOf).max
       ev.filter(col("event_id") % 3 =!= 0).writeTo("graftq.sincec_ev").append()
       s.sql("CALL graftq.system.compact(table => 'sincec_ev', target_mb => 64)").collect()
-      java.lang.Long.valueOf(hw)
+      (landing, hw)
     }
     s.table("graftq.sincec_ev")
       .filter(col("_pub_stamp") > t)
@@ -883,9 +807,8 @@ object StorageOps extends QueryModule {
   // generations as a UNION ALL with CAST(NULL AS ...) for the old one.
   // ------------------------------------------------------------------
   def dsv2Evolved(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
-    fixture(s, dir, "evo_ev") {
+    val wh = catalog(s)
+    Scratch.staged(s, dir, "evo_ev") {
       s.sql("DROP TABLE IF EXISTS graftq.evo_ev")
       s.sql("CREATE TABLE graftq.evo_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog")
@@ -897,7 +820,7 @@ object StorageOps extends QueryModule {
         .withColumn("score", col("value") * 2)
         .withColumn("tag", upper(col("event_type")))
         .writeTo("graftq.evo_ev").append()
-      "evo_ev"
+      GraftFs.child(wh, "evo_ev")
     }
     s.table("graftq.evo_ev").orderBy(col("event_id"))
   }
@@ -924,9 +847,8 @@ object StorageOps extends QueryModule {
   // so a path confusion cannot cancel out.
   // ------------------------------------------------------------------
   def dsv2UpdateMor(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
-    cloneTable(s, dir, "updm_ev") {
+    val wh = catalog(s)
+    Scratch.fresh(s, dir, "updm_ev", GraftFs.child(wh, "updm_ev")) {
       s.sql("DROP TABLE IF EXISTS graftq.updm_ev")
       s.sql("CREATE TABLE graftq.updm_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog " +
@@ -955,11 +877,10 @@ object StorageOps extends QueryModule {
   // so the two paths cannot be confused.
   // ------------------------------------------------------------------
   def dsv2MergeMor(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
+    val wh = catalog(s)
     val ev = Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-    cloneTable(s, dir, "mrgm_ev") {
+    Scratch.fresh(s, dir, "mrgm_ev", GraftFs.child(wh, "mrgm_ev")) {
       s.sql("DROP TABLE IF EXISTS graftq.mrgm_ev")
       s.sql("CREATE TABLE graftq.mrgm_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog " +
@@ -1002,19 +923,18 @@ object StorageOps extends QueryModule {
   // same resolution (GraftCatalogSpec pins all three surfaces).
   // ------------------------------------------------------------------
   def dsv2AsOf(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
-    val t = fixture(s, dir, "asof_ev") {
+    val wh = catalog(s)
+    val (_, t) = Scratch.staged(s, dir, "asof_ev") {
       s.sql("DROP TABLE IF EXISTS graftq.asof_ev")
       s.sql("CREATE TABLE graftq.asof_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog")
-      val landing = graft.sources.GraftFs.child(catalogWarehouse, "asof_ev")
+      val landing = GraftFs.child(wh, "asof_ev")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
       ev.filter(col("event_id") % 3 === 0).writeTo("graftq.asof_ev").append()
       val mid = graft.sources.GraftLog.testLatestSnapshotStamp(landing)
       ev.filter(col("event_id") % 3 =!= 0).writeTo("graftq.asof_ev").append()
-      java.lang.Long.valueOf(mid)
+      (landing, mid)
     }
     s.sql(s"SELECT event_id, user_id, value, event_type " +
       s"FROM graftq.asof_ev VERSION AS OF '$t' ORDER BY event_id")
@@ -1037,22 +957,21 @@ object StorageOps extends QueryModule {
   // proves the historical read really bypasses the delete.
   // ------------------------------------------------------------------
   def dsv2AsOfRetained(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
+    val wh = catalog(s)
     // fixture = ingest + the retained DELETE (the history being read
     // through); the timed operator is the VERSION AS OF resolution + scan
-    val t = fixture(s, dir, "ret_ev") {
+    val (_, t) = Scratch.staged(s, dir, "ret_ev") {
       s.sql("DROP TABLE IF EXISTS graftq.ret_ev")
       s.sql("CREATE TABLE graftq.ret_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog " +
         "TBLPROPERTIES ('snapshot.retain' = 'true')")
-      val landing = graft.sources.GraftFs.child(catalogWarehouse, "ret_ev")
+      val landing = GraftFs.child(wh, "ret_ev")
       Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
         .writeTo("graftq.ret_ev").append()
       val mid = graft.sources.GraftLog.testLatestSnapshotStamp(landing)
       s.sql("DELETE FROM graftq.ret_ev WHERE event_type = 'click'")
-      java.lang.Long.valueOf(mid)
+      (landing, mid)
     }
     s.sql(s"SELECT event_id, user_id, value, event_type " +
       s"FROM graftq.ret_ev VERSION AS OF '$t' ORDER BY event_id")
@@ -1106,7 +1025,7 @@ object StorageOps extends QueryModule {
   // latency/bytes measurements at 10^3..10^5 files.
   // ------------------------------------------------------------------
   def dsv2Chain(s: SparkSession, dir: String): DataFrame = {
-    val landing = fixture(s, dir, "log_chain") {
+    val landing = Scratch.staged(s, dir, "log_chain") {
       val p = scratch("graft_log_chain")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
@@ -1304,9 +1223,8 @@ object StorageOps extends QueryModule {
   // partition counts; this oracle pins the rows.
   // ------------------------------------------------------------------
   def dsv2StatsEvolved(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
-    fixture(s, dir, "stats_ev") {
+    val wh = catalog(s)
+    Scratch.staged(s, dir, "stats_ev") {
       s.sql("DROP TABLE IF EXISTS graftq.stats_ev")
       s.sql("CREATE TABLE graftq.stats_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog")
@@ -1319,7 +1237,7 @@ object StorageOps extends QueryModule {
         .repartitionByRange(6, col("score"))
         .sortWithinPartitions("score")
         .writeTo("graftq.stats_ev").append()
-      "stats_ev"
+      GraftFs.child(wh, "stats_ev")
     }
     s.table("graftq.stats_ev")
       .filter(col("score") > 40.0)
@@ -1342,9 +1260,8 @@ object StorageOps extends QueryModule {
   // skipping; this oracle pins the rows and the CALL surface).
   // ------------------------------------------------------------------
   def dsv2ClusterMulti(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
-    cloneTable(s, dir, "mcl_ev") {
+    val wh = catalog(s)
+    Scratch.fresh(s, dir, "mcl_ev", GraftFs.child(wh, "mcl_ev")) {
       s.sql("DROP TABLE IF EXISTS graftq.mcl_ev")
       s.sql("CREATE TABLE graftq.mcl_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog")
@@ -1376,12 +1293,11 @@ object StorageOps extends QueryModule {
   // chain link or a wrong change record fails the hash.
   // ------------------------------------------------------------------
   def dsv2Snapshots(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
+    val wh = catalog(s)
     // fixture = the deterministic commit sequence whose history is being
     // introspected; the timed operator is the snapshots procedure (a
     // read-only walk of the manifest chain)
-    fixture(s, dir, "snap_ev") {
+    Scratch.staged(s, dir, "snap_ev") {
       s.sql("DROP TABLE IF EXISTS graftq.snap_ev")
       s.sql("CREATE TABLE graftq.snap_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog")
@@ -1393,7 +1309,7 @@ object StorageOps extends QueryModule {
       }
       s.sql("DELETE FROM graftq.snap_ev WHERE event_type = 'click'")
       s.sql("CALL graftq.system.compact(table => 'snap_ev', target_mb => 1024)").collect()
-      "snap_ev"
+      GraftFs.child(wh, "snap_ev")
     }
     s.sql("CALL graftq.system.snapshots(table => 'snap_ev')")
       .drop("stamp").orderBy(col("version"))
@@ -1426,7 +1342,7 @@ object StorageOps extends QueryModule {
   // rows.
   // ------------------------------------------------------------------
   def dsv2StatsPruned(s: SparkSession, dir: String): DataFrame = {
-    val landing = fixture(s, dir, "log_stats") {
+    val landing = Scratch.staged(s, dir, "log_stats") {
       val p = scratch("graft_log_stats")
       Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
@@ -1454,7 +1370,7 @@ object StorageOps extends QueryModule {
   // stats-served aggregates.
   // ------------------------------------------------------------------
   def dsv2AggStats(s: SparkSession, dir: String): DataFrame = {
-    val landing = fixture(s, dir, "log_metaagg") {
+    val landing = Scratch.staged(s, dir, "log_metaagg") {
       val p = scratch("graft_log_metaagg")
       Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
@@ -1487,9 +1403,8 @@ object StorageOps extends QueryModule {
   // GraftCatalogSpec pins the planned-file counts before/after.
   // ------------------------------------------------------------------
   def dsv2Cluster(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
-    cloneTable(s, dir, "clu_ev") {
+    val wh = catalog(s)
+    Scratch.fresh(s, dir, "clu_ev", GraftFs.child(wh, "clu_ev")) {
       s.sql("DROP TABLE IF EXISTS graftq.clu_ev")
       s.sql("CREATE TABLE graftq.clu_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog")
@@ -1519,7 +1434,7 @@ object StorageOps extends QueryModule {
   // element-exact drop semantics; PlanShapeSpec pins offset-in-scan.
   // ------------------------------------------------------------------
   def dsv2Offset(s: SparkSession, dir: String): DataFrame = {
-    val landing = fixture(s, dir, "log_offset") {
+    val landing = Scratch.staged(s, dir, "log_offset") {
       val p = scratch("graft_log_offset")
       Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
@@ -1551,7 +1466,7 @@ object StorageOps extends QueryModule {
   // PlanShapeSpec; per-file heap honesty pinned in GraftLogSpec.
   // ------------------------------------------------------------------
   def dsv2TopN(s: SparkSession, dir: String): DataFrame = {
-    val landing = fixture(s, dir, "log_topn") {
+    val landing = Scratch.staged(s, dir, "log_topn") {
       val p = scratch("graft_log_topn")
       Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
@@ -1582,7 +1497,7 @@ object StorageOps extends QueryModule {
   // discipline). Plan + scan-output-row-count pinned in the specs.
   // ------------------------------------------------------------------
   def dsv2Agg(s: SparkSession, dir: String): DataFrame = {
-    val landing = fixture(s, dir, "log_agg") {
+    val landing = Scratch.staged(s, dir, "log_agg") {
       val p = scratch("graft_log_agg")
       Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
@@ -1617,7 +1532,7 @@ object StorageOps extends QueryModule {
   // condition, so a dropped filter can never change the answer.
   // ------------------------------------------------------------------
   def dsv2RuntimeFilter(s: SparkSession, dir: String): DataFrame = {
-    val landing = fixture(s, dir, "log_rtf") {
+    val landing = Scratch.staged(s, dir, "log_rtf") {
       val p = scratch("graft_log_rtf")
       Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
@@ -1653,9 +1568,9 @@ object StorageOps extends QueryModule {
   // protocol corner from r13 (the write half was batch-only).
   // ------------------------------------------------------------------
   def dsv2StreamSink(s: SparkSession, dir: String): DataFrame = {
-    // the INPUT landing is memoized setup; the V2 StreamingWrite drain into
+    // the INPUT landing is a staged input; the V2 StreamingWrite drain into
     // a fresh sink + checkpoint is the operator and re-runs per execution
-    val in = fixture(s, dir, "log_sink_in") {
+    val in = Scratch.staged(s, dir, "log_sink_in") {
       val p = scratch("graft_log_sink_in")
       Tables.load(s, dir, "events")
         .filter(col("event_id") < 20000)
@@ -1696,9 +1611,9 @@ object StorageOps extends QueryModule {
   // read-back.
   // ------------------------------------------------------------------
   def dsv2StreamComplete(s: SparkSession, dir: String): DataFrame = {
-    // the INPUT landing is memoized setup; the truncate-per-epoch drain
+    // the INPUT landing is a staged input; the truncate-per-epoch drain
     // into a fresh sink + checkpoint is the operator, per execution
-    val in = fixture(s, dir, "log_complete_in") {
+    val in = Scratch.staged(s, dir, "log_complete_in") {
       val p = scratch("graft_log_complete_in")
       // two input files x one-file triggers = two data epochs: the minimum
       // that PROVES replacement (epoch 2's snapshot must replace epoch 1's)
@@ -1750,7 +1665,7 @@ object StorageOps extends QueryModule {
   // oracle; decimal-accumulate / double-render house discipline.
   // ------------------------------------------------------------------
   def dsv2StreamSource(s: SparkSession, dir: String): DataFrame = {
-    val landing = fixture(s, dir, "log_stream") {
+    val landing = Scratch.staged(s, dir, "log_stream") {
       val p = scratch("graft_log_stream")
       Tables.load(s, dir, "events")
         .filter(col("event_id") < 20000)
@@ -1789,18 +1704,17 @@ object StorageOps extends QueryModule {
   // ------------------------------------------------------------------
   def dsv2Changes(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
+    val wh = catalog(s)
     // fixture = the upsert-stream ingest history (baseline wave, correction
     // wave, mid-window compaction) — the standing table whose window is
     // being read; the timed operator is the changelog DERIVATION itself
     // (readChanges over the manifest chain), which re-runs every execution
-    val (sink, s1, s2) = fixture(s, dir, "cdf_ev") {
+    val (sink, s1, s2) = Scratch.staged(s, dir, "cdf_ev") {
       s.sql("DROP TABLE IF EXISTS graftq.cdf_ev")
       s.sql("CREATE TABLE graftq.cdf_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog " +
         "TBLPROPERTIES ('snapshot.retain'='true')")
-      val snk = catalogWarehouse + "/cdf_ev"
+      val snk = wh + "/cdf_ev"
       val src = scratch("graft_cdf_src")
       val ckpt = graft.Scratch.streamCkptDir("graft_cdf_ckpt")
       val ev = Tables.load(s, dir, "events")
@@ -1857,17 +1771,16 @@ object StorageOps extends QueryModule {
   // ------------------------------------------------------------------
   def dsv2StreamChanges(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
+    val wh = catalog(s)
     // fixture = the same standing-table history as scan_dsv2_changes; the
     // timed operator is the changelog STREAM (fresh checkpoint + memory
     // sink per execution via runToCompletion)
-    val (sink, s1) = fixture(s, dir, "cdfs_ev") {
+    val (sink, s1) = Scratch.staged(s, dir, "cdfs_ev") {
       s.sql("DROP TABLE IF EXISTS graftq.cdfs_ev")
       s.sql("CREATE TABLE graftq.cdfs_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog " +
         "TBLPROPERTIES ('snapshot.retain'='true')")
-      val snk = catalogWarehouse + "/cdfs_ev"
+      val snk = wh + "/cdfs_ev"
       val src = scratch("graft_cdfs_src")
       val ckpt = graft.Scratch.streamCkptDir("graft_cdfs_ckpt")
       val ev = Tables.load(s, dir, "events")
@@ -1930,18 +1843,17 @@ object StorageOps extends QueryModule {
   // ------------------------------------------------------------------
   def dsv2ChangesU(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
+    val wh = catalog(s)
     // fixture = the standing-table history (baseline, correction + insert
     // waves, MoR DELETE); the timed operator is the typed changelog
     // derivation (readChanges with update images) over that window
-    val (sink, s1, s2) = fixture(s, dir, "cdfu_ev") {
+    val (sink, s1, s2) = Scratch.staged(s, dir, "cdfu_ev") {
       s.sql("DROP TABLE IF EXISTS graftq.cdfu_ev")
       s.sql("CREATE TABLE graftq.cdfu_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog " +
         "TBLPROPERTIES ('snapshot.retain'='true', " +
         "'delete.mode'='merge-on-read')")
-      val snk = catalogWarehouse + "/cdfu_ev"
+      val snk = wh + "/cdfu_ev"
       val src = scratch("graft_cdfu_src")
       val ckpt = graft.Scratch.streamCkptDir("graft_cdfu_ckpt")
       val ev = Tables.load(s, dir, "events")
@@ -2009,9 +1921,8 @@ object StorageOps extends QueryModule {
   // formula, and filters on `quality`: both generations must answer.
   // ------------------------------------------------------------------
   def dsv2Renamed(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
-    fixture(s, dir, "ren_ev") {
+    val wh = catalog(s)
+    Scratch.staged(s, dir, "ren_ev") {
       s.sql("DROP TABLE IF EXISTS graftq.ren_ev")
       s.sql("CREATE TABLE graftq.ren_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog")
@@ -2030,7 +1941,7 @@ object StorageOps extends QueryModule {
         .withColumn("quality", col("value") * lit(0.25))
         .repartitionByRange(4, col("quality")).sortWithinPartitions("quality")
         .writeTo("graftq.ren_ev").append()
-      "ren_ev"
+      GraftFs.child(wh, "ren_ev")
     }
     s.table("graftq.ren_ev")
       .filter(col("quality") > 40.0)
@@ -2065,17 +1976,16 @@ object StorageOps extends QueryModule {
   // reads the retained publish snapshot — the branch view, lazily.
   // ------------------------------------------------------------------
   def dsv2Branch(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graftq.warehouse", catalogWarehouse)
+    val wh = catalog(s)
     // fixture = the write-audit-publish commit SEQUENCE (append, branch,
     // staged append, publish) whose three observable states the query
     // reads; the timed operator is the stamp-pinned three-phase read
-    val (sink, stagedStamp, publishStamp) = fixture(s, dir, "br_ev") {
+    val (sink, stagedStamp, publishStamp) = Scratch.staged(s, dir, "br_ev") {
       s.sql("DROP TABLE IF EXISTS graftq.br_ev")
       s.sql("CREATE TABLE graftq.br_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog " +
         "TBLPROPERTIES ('snapshot.retain'='true')")
-      val snk = catalogWarehouse + "/br_ev"
+      val snk = wh + "/br_ev"
       val ev = Tables.load(s, dir, "events")
         .filter(col("event_id") < 30000)
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))

@@ -527,20 +527,15 @@ object VectorOps extends QueryModule {
     pqSearch(s, e, pqTrain(e))
   }
 
-  /** Bench-only: the search path alone, codebooks trained once per
-    * (session, dir) and reused — plain driver-side arrays, no Spark
-    * resources to leak. Registered via BenchOnly so BENCH_r{N}.json
+  /** Bench-only: the search path alone, over codebooks staged as an input
+    * (trained once per (session, dir) — plain driver-side arrays, no Spark
+    * resources to leak). Registered via BenchOnly so BENCH_r{N}.json
     * carries an honest steady-state search cost next to emb_pq_topk's
     * train+search cost. */
-  private val pqCbCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[Seq[(Long, Array[Double])]]]()
-
   private[graft] def pqTopKSearchOnly(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("de"))
-    val cbs = pqCbCache.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir, _ => pqTrain(e))
-    pqSearch(s, e, cbs)
+    pqSearch(s, e, graft.Scratch.staged(s, dir, "pq_codebooks")(pqTrain(e)))
   }
 
   /** Shared oracle fragments: the PQ train/encode CTE chain (`e`, `s`,

@@ -156,13 +156,6 @@ object Tables {
     * to canonical TimestampType — the four real-streaming queries share this
     * instead of hard-coding a physical type that the next fixture
     * regeneration invalidates. */
-  /** Physical ts type per (app, glob): the footer peek + per-file agreement
-    * check below costs a driver-side listing and one footer read per file;
-    * the physical layout of a fixture dir cannot change within a session,
-    * so pay it once, not once per streaming query execution. */
-  private val tsTypeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.DataType]()
-
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Peek the schema over the SAME glob the stream reads (round-9 advice:
@@ -172,19 +165,22 @@ object Tables {
     // one physical ts type — mixed generations under ONE stream schema
     // would silently misread some files, which is exactly the drift
     // normalizeTs exists to absorb, so fail loudly instead.
+    // The peek costs a driver-side listing and one footer read per file,
+    // and a fixture dir's physical layout cannot change within a session,
+    // so the physical ts type is a staged input: paid once, not once per
+    // streaming query execution.
     val glob = s"$sfDir/events.parqu*"
-    val physicalTs = tsTypeCache.computeIfAbsent(
-      spark.sparkContext.applicationId + "|" + glob, _ => {
-        val peek = spark.read.parquet(glob)
-        val top = peek.schema("ts").dataType
-        val perFile = peek.inputFiles.toSeq
-          .map(p => spark.read.parquet(p).schema("ts").dataType).distinct
-        require(perFile.forall(_ == top),
-          s"events stream glob $glob matches files with mixed physical ts types " +
-            s"(${perFile.mkString(", ")}); one stream schema cannot read them all — " +
-            "split the landing by writer generation")
-        top
-      })
+    val physicalTs = graft.Scratch.staged(spark, sfDir, "events_stream_ts") {
+      val peek = spark.read.parquet(glob)
+      val top = peek.schema("ts").dataType
+      val perFile = peek.inputFiles.toSeq
+        .map(p => spark.read.parquet(p).schema("ts").dataType).distinct
+      require(perFile.forall(_ == top),
+        s"events stream glob $glob matches files with mixed physical ts types " +
+          s"(${perFile.mkString(", ")}); one stream schema cannot read them all — " +
+          "split the landing by writer generation")
+      top
+    }
     val streamSchema = StructType(events.map(f =>
       if (f.name == "ts") StructField("ts", physicalTs) else f))
     // maxFilesPerTrigger knob (unset in normal runs): the streaming scale

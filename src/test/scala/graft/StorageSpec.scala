@@ -209,4 +209,41 @@ class StorageSpec extends SparkTestBase {
     assert(matched > 0 && read == matched, s"read $read files, window holds $matched")
     assert(read < total, s"no pruning: read $read of $total files")
   }
+
+  // ------------------------------------------------------------------
+  // call_dsv2_expire times the expire itself, so every execution must
+  // find chunk 1 to delete. A landing shared across executions would let
+  // the first (untimed) run delete it and every later run expire nothing.
+  // Each landing is a byte copy, so one the second execution creates
+  // started as a directory present before it; its deleted files are the
+  // ones that source still holds and it does not.
+  // ------------------------------------------------------------------
+  test("call_dsv2_expire deletes files again on a second execution in one session") {
+    Scratch.purge(spark) // the first execution below builds the landing
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def landings: Map[String, Set[String]] = tmp.listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("graft_"))
+      .map(d => d.getName -> d.list().filter(_.endsWith(".graftlog")).toSet)
+      .filter(_._2.nonEmpty).toMap
+    val preexisting = landings.keySet
+    StorageOps.dsv2Expire(spark, sfDir).collect()
+    val before = landings -- preexisting
+    val second = StorageOps.dsv2Expire(spark, sfDir).collect()
+    val after = landings -- preexisting
+    val deletedInPlace = before.keySet.intersect(after.keySet).toSeq
+      .map(d => (before(d) -- after(d)).size).sum
+    val deletedInCopies = (after.keySet -- before.keySet).toSeq.map { d =>
+      val sources = before.values.filter(src => after(d).subsetOf(src))
+      if (sources.isEmpty) 0 else sources.map(_.size).max - after(d).size
+    }.sum
+    assert(deletedInPlace + deletedInCopies >= 1,
+      s"second execution deleted no file: landings before $before, after $after")
+
+    Tables.load(spark, sfDir, "events").createOrReplaceTempView("events")
+    try {
+      val oracle = spark.sql(StorageOps.dsv2ExpireSql).collect().map(_.toSeq).toSeq
+      assert(oracle.nonEmpty && second.map(_.toSeq).toSeq == oracle,
+        s"second execution differs from dsv2ExpireSql (${second.length} vs ${oracle.length} rows)")
+    } finally spark.catalog.dropTempView("events")
+  }
 }

@@ -263,4 +263,17 @@ class StreamingSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
       .filter(col("n_users") > col("cohort_size")).count() == 0)
     ret.unpersist()
   }
+
+  test("stream stage copy fails naming a missing or empty stage directory") {
+    val landing = Scratch.dir("graft_arrive_landing")
+    val missing = Scratch.dir("graft_arrive_missing") // registered, never created
+    val e1 = intercept[IllegalArgumentException](
+      graft.operators.StreamShapes.arrive(missing, landing, "c1"))
+    assert(e1.getMessage.contains(missing), e1.getMessage)
+    val empty = Scratch.dir("graft_arrive_empty")
+    Files.createDirectories(java.nio.file.Paths.get(empty))
+    val e2 = intercept[IllegalArgumentException](
+      graft.operators.StreamShapes.arrive(empty, landing, "c1"))
+    assert(e2.getMessage.contains(empty), e2.getMessage)
+  }
 }
