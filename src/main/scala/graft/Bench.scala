@@ -48,6 +48,13 @@ object Bench {
     if (c != null && c.isCompilationTimeMonitoringSupported) c.getTotalCompilationTime else -1L
   }
 
+  /** Cumulative Janino compiles of this JVM: each is a miss in Spark's
+    * compiled-class cache (sized in [[Sessions.CodegenCacheEntries]]). A
+    * timed run that compiles more than a few classes is re-paying the
+    * compile and the JIT's work on the fresh classes. */
+  private def codegenCount: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Host-memory telemetry (round 12, verdict #3): the r11 driver session
     * carried a GC-heavy storm signature (flat jit, 9-20 s GC, 50-60x CPU,
     * identical stages) that matches neither fixed in-JVM mechanism and is
@@ -188,6 +195,8 @@ object Bench {
     val stg = scala.collection.mutable.ArrayBuffer.empty[Int]
     val spl = scala.collection.mutable.ArrayBuffer.empty[Long]
     val jit = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val codegen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var warmCodegen = -1L
     val memMb = scala.collection.mutable.ArrayBuffer.empty[Long]
     val psi = scala.collection.mutable.ArrayBuffer.empty[Double]
     var retries = 0
@@ -337,7 +346,8 @@ object Bench {
       rec.memMb += memAvailableMb
       rec.psi += memPsiSome10
       stats.reset()
-      val j0 = jitMillis; val g0 = gcMillis; val c0 = cpuNanos; val t0 = System.nanoTime()
+      val j0 = jitMillis; val g0 = gcMillis; val c0 = cpuNanos; val n0 = codegenCount
+      val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
       rec.wall += (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
       rec.gcMs += gcMillis - g0
@@ -346,6 +356,7 @@ object Bench {
       rec.stg += sg
       rec.spl += sp / (1024 * 1024)
       rec.jit += (if (j0 < 0) -1L else jitMillis - j0)
+      rec.codegen += codegenCount - n0
     }
 
     def stormSuspect(name: String, rec: Rec): Boolean =
@@ -356,9 +367,11 @@ object Bench {
       val rec = new Rec
       recs(name) = rec
       withAqeScope(name) {
-        val warmJit0 = jitMillis; val warmCpu0 = cpuNanos; val warmT0 = System.nanoTime()
+        val warmJit0 = jitMillis; val warmCpu0 = cpuNanos; val warmN0 = codegenCount
+        val warmT0 = System.nanoTime()
         try { benchable(name)(spark, sfDir).count() } catch { case _: Throwable => () }
         rec.warmS = (System.nanoTime() - warmT0) / 1e9
+        rec.warmCodegen = codegenCount - warmN0
         rec.warmCpuS = if (warmCpu0 < 0) -1.0 else (cpuNanos - warmCpu0) / 1e9
         // JIT-drain barrier (round 11): the warm pass queues C2 compilation
         // of the plan's freshly generated classes, and a first timed run
@@ -450,6 +463,8 @@ object Bench {
     val ss = jmap { case (_, r) => r.stg.mkString("[", ",", "]") }
     val ps = jmap { case (_, r) => r.spl.mkString("[", ",", "]") }
     val js = jmap { case (_, r) => r.jit.mkString("[", ",", "]") }
+    val ns = jmap { case (_, r) => r.codegen.mkString("[", ",", "]") }
+    val wn = jmap { case (_, r) => r.warmCodegen.toString }
     val ws = jmap { case (_, r) => fmt(r.warmS) }
     val wc = jmap { case (_, r) => fmt(r.warmCpuS) }
     val hm = jmap { case (_, r) => r.memMb.mkString("[", ",", "]") }
@@ -499,7 +514,7 @@ object Bench {
         "ReuseProbe; if the isolated-JVM band matches the session best, the anchor is stale - " +
         "regenerate bench_reference.json")
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"runs":$rs,"gc_ms":$gs,"cpu_s":$cs,"stages":$ss,"spill_mb":$ps,"jit_ms":$js,"warm_s":$ws,"warm_cpu_s":$wc,"host_mem_mb":$hm,"psi_some10":$hp,"deferred":$defJson,"storm_suspect":$suspectJson,"retry_failed":$retryFailJson,"reference_n":${reference.size},"session_drift":${fmt(drift)},"drift_n":$driftN,"drift_outliers":${outliers.map("\"" + _ + "\"").mkString("[", ",", "]")},"ref_stale":${stale.map("\"" + _ + "\"").mkString("[", ",", "]")}$probeJson,"written_at_ms":${System.currentTimeMillis()},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"runs":$rs,"gc_ms":$gs,"cpu_s":$cs,"stages":$ss,"spill_mb":$ps,"jit_ms":$js,"codegen_n":$ns,"warm_s":$ws,"warm_cpu_s":$wc,"codegen_warm_n":$wn,"host_mem_mb":$hm,"psi_some10":$hp,"deferred":$defJson,"storm_suspect":$suspectJson,"retry_failed":$retryFailJson,"reference_n":${reference.size},"session_drift":${fmt(drift)},"drift_n":$driftN,"drift_outliers":${outliers.map("\"" + _ + "\"").mkString("[", ",", "]")},"ref_stale":${stale.map("\"" + _ + "\"").mkString("[", ",", "]")}$probeJson,"written_at_ms":${System.currentTimeMillis()},"sf":"$sfDir"}"""
     println(full)
     // Self-contained artifact: the full per-query JSON also lands in
     // bench_out.json next to the repo, so post-hoc analysis never depends

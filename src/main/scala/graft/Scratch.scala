@@ -42,9 +42,13 @@ object Scratch {
 
   /** Fresh run-unique scratch dir path (not yet created), registered for
     * deletion at purge/shutdown. */
-  def dir(prefix: String): String = {
-    val p = System.getProperty("java.io.tmpdir") +
-      s"/${prefix}_${java.util.UUID.randomUUID()}"
+  def dir(prefix: String): String =
+    register(System.getProperty("java.io.tmpdir") + s"/${prefix}_${java.util.UUID.randomUUID()}")
+
+  /** Register an existing path for deletion at purge/shutdown; returns it.
+    * Idempotent, so a path reused across purges can be registered on
+    * every use. */
+  def register(p: String): String = {
     paths.add(p)
     p
   }

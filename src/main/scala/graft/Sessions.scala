@@ -21,6 +21,30 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** Entries in Spark's compiled-class cache (`spark.sql.codegen.cache.maxEntries`,
+    * default 100). The cache is keyed by generated source and evicts the
+    * least recently used class, so a re-executed plan reuses its classes
+    * only if its whole working set fits. A loop over more distinct classes
+    * than the cache holds evicts each one just before it is needed again
+    * and gets no hits: every execution re-runs Janino on every class, and
+    * the JIT compiles the fresh classes again. Working sets measured in
+    * Janino compiles into an empty cache:
+    *  - one perfbench `llm_curation` iteration (curate, rrfFusion, blocked
+    *    near-dup search): 161, so at 100 every timed iteration recompiled
+    *    153-154 classes; at 1000 it compiles 0-4 (AQE plan variants);
+    *  - one perfbench `flagship_etl` iteration: 23; a `lake_upsert` run:
+    *    24, plus 2 new classes per landed batch;
+    *  - one `graft.Bench` query at sf0.1, warm run plus timed runs: at most
+    *    132 (`emb_ann_recall`); a full pass compiles about 3,300 over 229
+    *    queries.
+    * The unit that must fit is one query or pipeline, since Bench re-runs
+    * one query at a time and a resident driver re-runs one pipeline; 1000
+    * holds the largest several times over. The whole Bench pass need not
+    * fit. A static conf: `CodeGenerator` reads it once per JVM, from the
+    * session active when it is first used (Spark's default if none is), so
+    * it goes on the builder; `spark.conf.set` cannot change it. */
+  val CodegenCacheEntries: Int = 1000
+
   /** Local session shaped like the driver harness runs it. */
   def local(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -60,6 +84,7 @@ object Sessions {
       // nanos-long back into canonical timestamps; ad-hoc parquet reads
       // outside Tables.load will surface NANOS columns as raw longs.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     plans.GraftFunctions.ensureRegistered(spark)
@@ -77,4 +102,5 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       // same sticky session contract as local() — see the note there
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 }

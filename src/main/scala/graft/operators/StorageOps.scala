@@ -25,17 +25,16 @@ object StorageOps extends QueryModule {
   /** The graftq catalog on this session, returning its warehouse dir. The
     * catalog binds its options at first load and keeps them for the
     * session, so the warehouse is chosen once and read back from the
-    * session conf afterwards. Its tables are staged inputs (DROP/CREATE in
-    * their build); a query that mutates its table gets a [[Scratch.fresh]]
-    * copy per execution. */
+    * session conf afterwards. A purge deletes it and forgets it, so it is
+    * registered with [[Scratch]] again on every call. Its tables are staged
+    * inputs (DROP/CREATE in their build); a query that mutates its table
+    * gets a [[Scratch.fresh]] copy per execution. */
   private def catalog(s: SparkSession): String = {
     s.conf.set("spark.sql.catalog.graftq", classOf[graft.sources.GraftCatalog].getName)
     val key = "spark.sql.catalog.graftq.warehouse"
-    s.conf.getOption(key).getOrElse {
-      val wh = scratch("graft_catalog_wh")
-      s.conf.set(key, wh)
-      wh
-    }
+    val wh = Scratch.register(s.conf.getOption(key).getOrElse(scratch("graft_catalog_wh")))
+    s.conf.set(key, wh)
+    wh
   }
 
   // ------------------------------------------------------------------

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import graft.operators.StorageOps
 
 /** The scratch-artifact registry must actually tear down what the engine
   * creates: registered dirs deleted recursively and registered managed
@@ -22,5 +23,18 @@ class ScratchSpec extends SparkTestBase {
 
     assert(!Files.exists(Paths.get(d)), s"registered dir survived purge: $d")
     assert(!spark.catalog.tableExists(t), s"registered table survived purge: $t")
+  }
+
+  test("purge deletes the graftq warehouse reused after an earlier purge") {
+    StorageOps.dsv2PartitionedJoin(spark, sfDir).collect()
+    Scratch.purge(spark)
+    // the session keeps its warehouse path; this query writes there again
+    StorageOps.dsv2PartitionedJoin(spark, sfDir).collect()
+    val wh = spark.conf.get("spark.sql.catalog.graftq.warehouse")
+    assert(Files.exists(Paths.get(wh)), s"catalog query wrote no warehouse at $wh")
+
+    Scratch.purge(spark)
+
+    assert(!Files.exists(Paths.get(wh)), s"graftq warehouse survived purge: $wh")
   }
 }
