@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,18 +29,6 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
 
   private val ID_OFF = 1000000000000L
-
-  private class StageStats extends SparkListener {
-    private val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = synchronized {
-      val si = sc.stageInfo
-      val m = si.taskMetrics
-      val bytes = m.inputMetrics.bytesRead + m.shuffleReadMetrics.totalBytesRead
-      buf += ((si.numTasks, bytes))
-    }
-    def reset(): Unit = synchronized(buf.clear())
-    def snapshot(): Seq[(Int, Long)] = synchronized(buf.toSeq)
-  }
 
   /** private[graft]: ScaleGateSpec reuses the character-preserving replica
     * to gate the no-serial-funnel property inside `sbt test`. */
@@ -107,7 +94,7 @@ object ScaleProbe {
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val big = s"/tmp/graft_scale/${new java.io.File(base).getName}_x$factor"
     replicate(spark, base, big, factor)
-    val stats = new StageStats
+    val stats = new StageLog
     spark.sparkContext.addSparkListener(stats)
     def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", v)
     // Round-12 verdict #7: accumulate per-(dir, query) walls so the run
@@ -126,9 +113,9 @@ object ScaleProbe {
       val secs = (System.nanoTime() - t0) / 1e9
       Thread.sleep(800) // let the async listener bus drain
       val st = stats.snapshot()
-      val heavy1 = st.count { case (n, b) => n == 1 && b > HEAVY_BYTES }
-      val maxTasks = if (st.isEmpty) 0 else st.map(_._1).max
-      val maxBytes = if (st.isEmpty) 0L else st.map(_._2).max
+      val heavy1 = st.count(g => g.tasks == 1 && g.bytesIn > HEAVY_BYTES)
+      val maxTasks = if (st.isEmpty) 0 else st.map(_.tasks).max
+      val maxBytes = if (st.isEmpty) 0L else st.map(_.bytesIn).max
       println(s"""SCALEPROBE {"dir":"$dir","query":"$name","secs":${fmt(secs)},""" +
         s""""stages":${st.size},"max_tasks":$maxTasks,"one_task_heavy":$heavy1,""" +
         s""""max_stage_mb":${maxBytes / 1024 / 1024}}""")

@@ -56,7 +56,7 @@ object Scratch {
   /** Fresh run-unique STREAMING-CHECKPOINT dir path, on tmpfs (/dev/shm)
     * when available. Micro-batch progress (offset/commit WAL) and state
     * store deltas fsync into the checkpoint every batch — measured ~180ms
-    * of a ~1.3s fixture-scale micro-batch (StreamProfile). For the
+    * of a ~1.3s fixture-scale micro-batch (round 10). For the
     * memory-sink bench/verify streams the checkpoint is EPHEMERAL BY
     * SEMANTICS (the query dies with the run), so a RAM-backed dir is the
     * honest medium; production streams pass a durable checkpointLocation

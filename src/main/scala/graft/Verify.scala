@@ -24,7 +24,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failed += name
       }
-      finally graft.streaming.Streams.purgeMemorySinks(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

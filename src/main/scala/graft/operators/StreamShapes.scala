@@ -94,7 +94,7 @@ object StreamShapes extends QueryModule {
   // the GROUP BY oracles) already exercise the data-volume path at full
   // scale. Streaming the full sf0.1 table through 14 cold query starts
   // was pure bench ballast (~0.3s single-file scan + proportional state
-  // and sink cost per query, measured in StreamProfile). The landing is
+  // and sink cost per query, measured in round 10). The landing is
   // a deterministic event_id < 20000 slice — the WHOLE table at the
   // sf0.001/sf0.01 spec+oracle scales, so every oracle hash and
   // batch-vs-stream spec is unchanged there — written once per session
@@ -106,24 +106,17 @@ object StreamShapes extends QueryModule {
   // stream_user_state (arbitrary state), stream_tumbling_full
   // (aggregation state), stream_join_full (join state).
   // ------------------------------------------------------------------
-  private[graft] val STREAM_BOUND = 20000L
+  private val STREAM_BOUND = 20000L
 
   private def boundedLanding(s: SparkSession, dir: String): String =
     graft.Scratch.staged(s, dir, "stream_bounded") {
       val p = graft.Scratch.dir("graft_stream_events")
-      // Round 13: RANGE-partitioned by event time (was hash repartition(4))
-      // and modtime-stamped in file order. Identical rows either way; the
-      // difference only matters when GRAFT_STREAM_MAX_FILES chunks the
-      // drain (streaming scale probe): time-ordered files mean the
-      // watermark advances monotonically batch over batch and no row ever
-      // arrives behind it (the probe asserts droppedByWatermark == 0), so
-      // the probe measures eviction, not late-data loss. File count is
-      // data-derived — ~5k rows per file, floor 4 (the historical layout;
-      // every standard fixture's bounded slice is exactly STREAM_BOUND =
-      // 20k rows, so bench/verify keep their 4-file landing bit-for-bit)
-      // — so a bigger probe fixture keeps a CONSTANT volume (and, with
-      // the probe's density-preserving time-shifted replica, a constant
-      // TIME SPAN) per file.
+      // RANGE-partitioned by event time and modtime-stamped in file order,
+      // so a drain split over several micro-batches sees the watermark
+      // advance monotonically and no row arrives behind it. File count is
+      // data-derived, ~5k rows per file with a floor of 4: every standard
+      // fixture's bounded slice is exactly STREAM_BOUND = 20k rows, so
+      // bench and verify read the same 4-file landing on every fixture.
       val bounded = ev(s, dir).filter(col("event_id") < STREAM_BOUND)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       val nFiles = math.max(4, (bounded.count() / 5000L).toInt)
@@ -143,9 +136,9 @@ object StreamShapes extends QueryModule {
   /** File stream over the bounded canonical landing (ts already normalized
     * by Tables.load at landing-write time). */
   private def boundedStream(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.Streams.withMaxFiles(s.readStream
+    s.readStream
       .schema(org.apache.spark.sql.types.StructType(
-        Tables.events.filterNot(_.name == "props"))))
+        Tables.events.filterNot(_.name == "props")))
       .parquet(boundedLanding(s, dir))
 
   /** The oracle-side twin of [[boundedLanding]]: rewrite an events-reading

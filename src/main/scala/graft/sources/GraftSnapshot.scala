@@ -1726,26 +1726,6 @@ private[graft] object GraftSnapshotTestHook {
     GraftSnapshotIO.commit(path)(_ => GraftChange(removeData = Set(name)))
     ()
   }
-  /** One commit adding many names — the manifest-scale probe's fixture
-    * builder (a synthetic N-file live set without N data files). */
-  def addDataBulk(path: String, names: Seq[String]): Unit = {
-    GraftSnapshotIO.commit(path)(_ =>
-      GraftChange(addData = names.map(GraftLiveFile(_, None)).toVector))
-    ()
-  }
-  /** Bulk add with synthetic event_id zone maps — the upsert-scale
-    * probe's clustered-landing fixture (coverage narrowing needs
-    * stats-bearing entries). */
-  def addDataBulkStats(path: String, entries: Seq[(String, Long, Long)]): Unit = {
-    GraftSnapshotIO.commit(path)(_ =>
-      GraftChange(addData = entries.map { case (n, lo, hi) =>
-        GraftLiveFile(n, None, Some(GraftStats(1L, lo, hi, 0L, 0L, 0.0, 0.0)))
-      }.toVector))
-    ()
-  }
-  /** Manifest byte sizes in commit order — probe surface. */
-  def manifestBytes(path: String): Seq[Long] =
-    manifestShapes(path).map(_._4)
   /** (startOffset, originStamp) segments of a live file, None = unmapped. */
   def segmentsOf(path: String, name: String): Option[Seq[(Long, Long)]] =
     GraftSnapshotIO.resolve(path).files.find(_.name == name)
@@ -1767,10 +1747,6 @@ private[graft] object GraftSnapshotTestHook {
     * data). */
   def sweepRetired(path: String, graceMs: Long): Int =
     GraftSnapshotIO.sweepRetired(path, graceMs)
-  /** Live-file COUNT via a full resolve — the probe's resolution-latency
-    * surface without liveNames' O(n log n) name sort. */
-  def resolveFileCount(path: String): Int =
-    GraftSnapshotIO.resolve(path).files.length
   /** Randomized equivalence pin for the r18 one-pass resolve: applyAll
     * over a change chain must equal the sequential GraftChange.apply
     * fold on every (snapshot, chain) — throws with the diverging case

@@ -183,11 +183,6 @@ object Tables {
     }
     val streamSchema = StructType(events.map(f =>
       if (f.name == "ts") StructField("ts", physicalTs) else f))
-    // maxFilesPerTrigger knob (unset in normal runs): the streaming scale
-    // probe chunks full-volume streams into real micro-batches — see
-    // Streams.streamMaxFilesPerTrigger
-    val raw = graft.streaming.Streams.withMaxFiles(
-      spark.readStream.schema(streamSchema)).parquet(glob)
-    normalizeTs(raw, "ts")
+    normalizeTs(spark.readStream.schema(streamSchema).parquet(glob), "ts")
   }
 }

@@ -204,40 +204,6 @@ object Streams {
     n
   }
 
-  /** Optional maxFilesPerTrigger for the file-source streams
-    * (GRAFT_STREAM_MAX_FILES). Unset in normal runs — every stream drains
-    * its closed landing in one (or few) batches, which is the cheapest
-    * path for the bench and changes nothing semantically. The streaming
-    * SCALE probe sets it so a run has real micro-batch structure: state
-    * eviction by watermark only shows up when the watermark ADVANCES
-    * BETWEEN batches, and the bounded-state property (peak state tracks
-    * the watermark horizon, not stream length) is only measurable across
-    * many batches. Validated here like GRAFT_STREAM_SHUFFLE. */
-  val streamMaxFilesPerTrigger: Option[Int] = sys.env.get("GRAFT_STREAM_MAX_FILES").map { raw =>
-    val n = try raw.toInt catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"GRAFT_STREAM_MAX_FILES must be a positive integer, got '$raw'")
-    }
-    require(n > 0, s"GRAFT_STREAM_MAX_FILES must be > 0, got $raw")
-    n
-  }
-
-  /** Apply [[streamMaxFilesPerTrigger]] to a file-source reader (no-op
-    * when the knob is unset). */
-  def withMaxFiles(r: org.apache.spark.sql.streaming.DataStreamReader)
-      : org.apache.spark.sql.streaming.DataStreamReader =
-    streamMaxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n))
-
-  /** Progress telemetry of the most recent [[runToCompletion]] stream, for
-    * the streaming scale probe (wall time alone can't show whether state
-    * stayed bounded). Captured from the query's own progress feed just
-    * before stop(); volatile single-slot because runs are sequential
-    * within a session (Bench/Verify/probe all serialize queries). */
-  final case class RunTelemetry(batches: Int, dataBatches: Int, inputRows: Long,
-      peakStateRows: Long, droppedByWatermark: Long,
-      checkpointBytes: Long = -1L, stateCheckpointBytes: Long = -1L)
-  @volatile var lastRunTelemetry: Option[RunTelemetry] = None
-
   /** Run `body` with spark.sql.shuffle.partitions scoped to
     * [[streamShufflePartitions]] — the streaming query must START inside
     * the scope (the state-store layout is fixed at query start). */
@@ -245,63 +211,6 @@ object Streams {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions.toString)
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** Recursive byte total of a checkpoint (sub)tree; -1 if absent. With
-    * GRAFT_CKPT_DUMP=1 and subdir=None, also prints the 30 largest
-    * per-subtree aggregates for probe forensics. */
-  private def ckptBytes(ckptDir: String, subdir: Option[String]): Long = {
-    val root = subdir.foldLeft(new java.io.File(ckptDir))(new java.io.File(_, _)).toPath
-    if (!java.nio.file.Files.isDirectory(root)) return -1L
-    // RocksDB maintenance (changelog purges run every 500 ms under the
-    // scale probe) deletes files and whole version directories mid-walk:
-    // Files.walk itself then throws UncheckedIOException(NoSuchFileException)
-    // from the traversal stream, not just from the per-file size() call —
-    // so the WALK is guarded too, returning the partial sum rather than
-    // crashing the measurement (r15 advice; a spurious probe failure, the
-    // probe requires stateCkptRatio > 0).
-    // Some(sum) = the walk COMPLETED (a legitimately empty tree is
-    // Some(0)); None = the traversal itself lost the race — tracked
-    // separately so "raced" and "sum == 0" cannot be conflated (r16
-    // advice: the old `if (first > 0) first else retry` could return 0
-    // when both passes raced, failing the probe's stateCkptRatio > 0)
-    def walkSum(): Option[Long] = {
-      val s = java.nio.file.Files.walk(root)
-      try Some(s.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(p => try java.nio.file.Files.size(p) catch {
-          case _: java.io.IOException => 0L // maintenance races are fine
-        }).sum())
-      catch {
-        case e: java.io.UncheckedIOException
-            if e.getCause.isInstanceOf[java.nio.file.NoSuchFileException] => None
-      } finally s.close()
-    }
-    if (subdir.isEmpty && sys.env.contains("GRAFT_CKPT_DUMP")) {
-      val s = java.nio.file.Files.walk(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-          .toSeq.groupBy(p => root.relativize(p).toString.split('/').take(4).mkString("/"))
-          .map { case (k, ps) => (k, ps.map(p =>
-            try java.nio.file.Files.size(p) catch {
-              case _: java.io.IOException => 0L
-            }).sum, ps.size) }
-          .toSeq.sortBy(-_._2).take(30)
-          .foreach { case (k, b, n) => println(s"CKPTDUMP $b bytes $n files $k") }
-      } catch {
-        case e: java.io.UncheckedIOException
-            if e.getCause.isInstanceOf[java.nio.file.NoSuchFileException] =>
-          println("CKPTDUMP aborted: file deleted mid-walk")
-      } finally s.close()
-    }
-    // bounded retry until a walk completes without racing RocksDB
-    // maintenance (purges run every 500 ms under the scale probe; each
-    // pass is milliseconds, so losing 8 in a row means something else is
-    // wrong — return the last partial measurement rather than loop)
-    var attempt = 0
-    var done: Option[Long] = walkSum()
-    while (done.isEmpty && attempt < 8) { attempt += 1; done = walkSum() }
-    done.getOrElse(0L)
   }
 
   /** Drive a streaming DataFrame to completion over a static input dir and
@@ -323,34 +232,6 @@ object Streams {
         .option("checkpointLocation", ckptDir)
       val q = trigger.fold(writer)(writer.trigger).start()
       q.processAllAvailable()
-      // snapshot progress BEFORE stop() (stop clears the feed); spark's
-      // default retains the last 100 progress entries — more than any
-      // drained landing produces, probe runs included
-      val prog = q.recentProgress
-      lastRunTelemetry = Some(RunTelemetry(
-        batches = prog.length,
-        // data batches exclude the no-data watermark-finalization batches
-        // stateful queries run after the last input — a chunking guard
-        // that counted those would pass on an unchunked drain (r13 review)
-        dataBatches = prog.count(_.numInputRows > 0),
-        inputRows = prog.map(_.numInputRows).sum,
-        peakStateRows = if (prog.isEmpty) 0L
-          else prog.map(p => p.stateOperators.map(_.numRowsTotal).sum).max,
-        droppedByWatermark =
-          prog.map(_.stateOperators.map(_.numRowsDroppedByWatermark).sum).sum,
-        // On-disk checkpoint footprint at drain end, measured before
-        // stop() because the dir is purged with the scratch space. TWO
-        // numbers, deliberately: `state/` (snapshots + changelogs + SSTs
-        // after retention cleanup — the subtree the RocksDB changelog
-        // claim is about) and the total, which additionally carries the
-        // FILE SOURCE manifest (`sources/*.compact` lists every input
-        // file ever seen — O(history) by Spark's own design, and exactly
-        // the pathology the graftlog streaming source's compacted
-        // hw+lag-tail offsets exist to avoid). Asserting the state claim
-        // on the total would conflate the two. GRAFT_CKPT_DUMP=1 prints
-        // a per-subtree breakdown for probe forensics.
-        checkpointBytes = ckptBytes(ckptDir, None),
-        stateCheckpointBytes = ckptBytes(ckptDir, Some("state"))))
       q.stop()
     }
     // Return a SELF-CONTAINED handle and drop the UUID-named temp view
@@ -369,10 +250,4 @@ object Streams {
     s.catalog.dropTempView(queryName)
     out
   }
-
-  /** Historical hook: [[runToCompletion]] now drops each memory-sink view
-    * eagerly, so there is nothing left to purge between queries. Kept as a
-    * no-op because Bench/Verify call it as their between-queries hygiene
-    * point. */
-  def purgeMemorySinks(s: org.apache.spark.sql.SparkSession): Unit = ()
 }

@@ -130,6 +130,40 @@ class ContractSpec extends SparkTestBase {
       "4x under is inside the band")
   }
 
+  /** The environment variables the engine reads; README "Environment" lists
+    * each with its default and reader. A new knob needs a row there and an
+    * entry here, and a knob whose last reader is deleted must leave both. */
+  private val envKnobs = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS",
+    "GRAFT_BENCH_REF", "GRAFT_STREAM_SHUFFLE", "GRAFT_PERIODIC_GC_INTERVAL")
+
+  test("env-knob inventory: src/main reads exactly the documented variables") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main")
+    val files = {
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    assert(files.nonEmpty, s"no .scala file under ${root.toAbsolutePath}")
+    val read = """(?:sys\.env|System\.getenv)""".r
+    val keyed = """(?:sys\.env(?:\.getOrElse|\.get|\.contains|\.apply)?|System\.getenv)\(\s*"([A-Za-z0-9_]+)"""".r
+    val found = files.flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f),
+        java.nio.charset.StandardCharsets.UTF_8)
+      val keys = keyed.findAllMatchIn(text).map(_.group(1)).toList
+      assert(read.findAllMatchIn(text).size == keys.size,
+        s"$f reads the environment with a key that is not a string literal")
+      keys
+    }.toSet
+    assert(found.contains("SPARK_GRAFT_CPUS"),
+      s"scanned ${files.size} files but found no SPARK_GRAFT_CPUS read; the scan is broken")
+    val undocumented = found -- envKnobs
+    val unread = envKnobs -- found
+    assert(undocumented.isEmpty && unread.isEmpty,
+      s"env knobs read but not in the inventory: ${undocumented.toSeq.sorted.mkString(", ")}; " +
+        s"in the inventory but never read: ${unread.toSeq.sorted.mkString(", ")}")
+  }
+
   test("every oracle key has a query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")

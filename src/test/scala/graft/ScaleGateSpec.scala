@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-
 /** Round-11 gate for SCALING.md's central claim: NO SERIAL FUNNEL — no
   * stage that moves real corpus data through one task. The 10x probes in
   * SCALING.md are rerun by hand (ScaleProbe); this spec wires a scaled-
@@ -32,17 +30,6 @@ class ScaleGateSpec extends SparkTestBase {
   private val HEAVY = 1536L * 1024
   private val FACTOR = 12
 
-  private class StageStats extends SparkListener {
-    private val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = synchronized {
-      val m = sc.stageInfo.taskMetrics
-      buf += ((sc.stageInfo.numTasks,
-        m.inputMetrics.bytesRead + m.shuffleReadMetrics.totalBytesRead))
-    }
-    def reset(): Unit = synchronized(buf.clear())
-    def snapshot(): Seq[(Int, Long)] = synchronized(buf.toSeq)
-  }
-
   // ngram_jaccard carries the guaranteed-heavy md5-keyed shingle
   // self-join; minhash_pairs is the signature-exchange shape whose reuse
   // regressions round 5 chased; token_budget is the two-phase sharded
@@ -65,7 +52,7 @@ class ScaleGateSpec extends SparkTestBase {
     // under /tmp/graft_scale, rebuilt only after a /tmp wipe).
     val out = s"/tmp/graft_scale/sf0.01_x$FACTOR"
     ScaleProbe.replicate(spark, base, out, FACTOR)
-    val stats = new StageStats
+    val stats = new StageLog
     spark.sparkContext.addSparkListener(stats)
     try {
       var sawWideHeavy = false
@@ -76,7 +63,7 @@ class ScaleGateSpec extends SparkTestBase {
         stats.reset()
         fn(spark, out).count()
         Thread.sleep(800) // async listener bus drain
-        val st = stats.snapshot()
+        val st = stats.snapshot().map(g => (g.tasks, g.bytesIn))
         val funnels = st.filter { case (n, b) => n == 1 && b > HEAVY }
         assert(funnels.isEmpty,
           s"$name: serial funnel — 1-task stage(s) moved " +
