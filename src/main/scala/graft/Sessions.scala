@@ -69,14 +69,12 @@ object Sessions {
       // the whole bench, so shuffle files / broadcasts of finished queries
       // pile up. Force the periodic sweep down from the 30min default.
       // (ExplicitGCInvokesConcurrent in build.sbt keeps this sweep from
-      // being a stop-the-world full GC.) Env-tunable because the sweep
-      // itself is a measured noise source: each forced cycle steals cores
-      // from whatever query is running (round-10 forensics), so the bench
-      // wants it rare, while a days-resident production driver wants it
-      // regular. 300s bounds accumulation to ~5 min of finished-query
-      // debris — at fixture scale a few MB of shuffle files.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("GRAFT_PERIODIC_GC_INTERVAL", "300s"))
+      // being a stop-the-world full GC.) The sweep itself is a measured
+      // noise source: each forced cycle steals cores from whatever query
+      // is running (round-10 forensics), so the bench wants it rare.
+      // 300s bounds accumulation to ~5 min of finished-query debris — at
+      // fixture scale a few MB of shuffle files.
+      .config("spark.cleaner.periodicGC.interval", "300s")
       // SESSION CONTRACT: TIMESTAMP(NANOS) parquet (one of the fixture's
       // writer generations) is only readable under this legacy conf, and
       // it must be on BEFORE any such scan. It is session-wide and STICKY

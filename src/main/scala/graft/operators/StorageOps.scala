@@ -423,7 +423,7 @@ object StorageOps extends QueryModule {
         .write.format("graftlog").mode("append").save(p)
       val hw = graft.sources.GraftFs.listNames(p)
         .filter(_.endsWith(".graftlog"))
-        .map(graft.sources.GraftLog.testStampOf).max
+        .map(graft.sources.GraftLog.stampOf).max
       ev.filter(col("event_id") % 3 =!= 0)
         .write.format("graftlog").mode("append").save(p)
       (p, hw)
@@ -493,7 +493,7 @@ object StorageOps extends QueryModule {
         .write.format("graftlog").mode("append").save(landing)
       val hw = graft.sources.GraftFs.listNames(landing)
         .filter(_.endsWith(".graftlog"))
-        .map(graft.sources.GraftLog.testStampOf).max
+        .map(graft.sources.GraftLog.stampOf).max
       ev.filter(col("event_id") % 3 =!= 0)
         .write.format("graftlog").mode("append").save(landing)
       hw
@@ -779,7 +779,7 @@ object StorageOps extends QueryModule {
       ev.filter(col("event_id") % 3 === 0).writeTo("graftq.sincec_ev").append()
       val hw = graft.sources.GraftFs.listNames(landing)
         .filter(_.endsWith(".graftlog"))
-        .map(graft.sources.GraftLog.testStampOf).max
+        .map(graft.sources.GraftLog.stampOf).max
       ev.filter(col("event_id") % 3 =!= 0).writeTo("graftq.sincec_ev").append()
       s.sql("CALL graftq.system.compact(table => 'sincec_ev', target_mb => 64)").collect()
       (landing, hw)
@@ -931,7 +931,7 @@ object StorageOps extends QueryModule {
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
       ev.filter(col("event_id") % 3 === 0).writeTo("graftq.asof_ev").append()
-      val mid = graft.sources.GraftLog.testLatestSnapshotStamp(landing)
+      val mid = graft.sources.GraftLog.latestSnapshotStamp(landing)
       ev.filter(col("event_id") % 3 =!= 0).writeTo("graftq.asof_ev").append()
       (landing, mid)
     }
@@ -968,7 +968,7 @@ object StorageOps extends QueryModule {
       Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
         .writeTo("graftq.ret_ev").append()
-      val mid = graft.sources.GraftLog.testLatestSnapshotStamp(landing)
+      val mid = graft.sources.GraftLog.latestSnapshotStamp(landing)
       s.sql("DELETE FROM graftq.ret_ev WHERE event_type = 'click'")
       (landing, mid)
     }
@@ -1730,7 +1730,7 @@ object StorageOps extends QueryModule {
       }
       ev.repartition(2).write.format("graftlog").mode("append").save(src)
       drain() // wave 1: the baseline snapshot
-      val a = graft.sources.GraftLog.testLatestSnapshotStamp(snk)
+      val a = graft.sources.GraftLog.latestSnapshotStamp(snk)
       ev.filter(col("event_id") % 5 === 0)
         .withColumn("value", col("value") * 2)
         .withColumn("event_type", lit("fix"))
@@ -1738,7 +1738,7 @@ object StorageOps extends QueryModule {
         .repartition(1).write.format("graftlog").mode("append").save(src)
       drain() // wave 2: keyed corrections (the change window's content)
       s.sql("CALL graftq.system.compact(table => 'cdf_ev')").collect()
-      val b = graft.sources.GraftLog.testLatestSnapshotStamp(snk)
+      val b = graft.sources.GraftLog.latestSnapshotStamp(snk)
       (snk, java.lang.Long.valueOf(a), java.lang.Long.valueOf(b))
     }
     graft.sources.GraftLog.readChanges(s, sink, s1, s2)
@@ -1796,7 +1796,7 @@ object StorageOps extends QueryModule {
       }
       ev.repartition(2).write.format("graftlog").mode("append").save(src)
       drain() // baseline
-      val a = graft.sources.GraftLog.testLatestSnapshotStamp(snk)
+      val a = graft.sources.GraftLog.latestSnapshotStamp(snk)
       ev.filter(col("event_id") % 5 === 0)
         .withColumn("value", col("value") * 2)
         .withColumn("event_type", lit("fix"))
@@ -1869,7 +1869,7 @@ object StorageOps extends QueryModule {
       }
       ev.repartition(2).write.format("graftlog").mode("append").save(src)
       drain() // baseline
-      val a = graft.sources.GraftLog.testLatestSnapshotStamp(snk)
+      val a = graft.sources.GraftLog.latestSnapshotStamp(snk)
       ev.filter(col("event_id") % 5 === 0) // corrections: update images
         .withColumn("value", col("value") * 2)
         .withColumn("event_type", lit("fix"))
@@ -1879,7 +1879,7 @@ object StorageOps extends QueryModule {
         .repartition(1).write.format("graftlog").mode("append").save(src)
       drain()
       s.sql("DELETE FROM graftq.cdfu_ev WHERE event_id % 11 = 1")
-      val b = graft.sources.GraftLog.testLatestSnapshotStamp(snk)
+      val b = graft.sources.GraftLog.latestSnapshotStamp(snk)
       (snk, java.lang.Long.valueOf(a), java.lang.Long.valueOf(b))
     }
     graft.sources.GraftLog.readChanges(s, sink, s1, s2,
@@ -1989,12 +1989,12 @@ object StorageOps extends QueryModule {
         .filter(col("event_id") < 30000)
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
       ev.filter(col("event_id") % 2 === 0).writeTo("graftq.br_ev").append()
-      val staged = graft.sources.GraftLog.testLatestSnapshotStamp(snk)
+      val staged = graft.sources.GraftLog.latestSnapshotStamp(snk)
       s.sql("CALL graftq.system.branch(table => 'br_ev', name => 'fix')").collect()
       ev.filter(col("event_id") % 2 === 1)
         .writeTo("graftq.br_ev").option("branch", "fix").append()
       s.sql("CALL graftq.system.publish_branch(table => 'br_ev', name => 'fix')").collect()
-      val pub = graft.sources.GraftLog.testLatestSnapshotStamp(snk)
+      val pub = graft.sources.GraftLog.latestSnapshotStamp(snk)
       (snk, java.lang.Long.valueOf(staged), java.lang.Long.valueOf(pub))
     }
     def phase(stamp: Long, label: String) =

@@ -235,7 +235,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
   // ---- time travel (round 16): `SELECT ... FROM t VERSION AS OF '<stamp>'`
   // and `TIMESTAMP AS OF <ts>` — Spark routes both through these
   // overloads; the version handle is a snapshot-manifest stamp (epoch
-  // millis, the value `GraftLog.testLatestSnapshotStamp` / any manifest
+  // millis, the value `GraftLog.latestSnapshotStamp` / any manifest
   // name carries), and a timestamp resolves to the newest snapshot
   // committed at or before it. The returned table is read-only and
   // pinned; see GraftLogTable's AS OF notes.

@@ -272,11 +272,7 @@ private[sources] class GraftLogTable(path: String,
     // CAS base holds is what gets emptied.
     val committed = GraftSnapshotIO.commit(path, force = true)(base =>
       GraftChange(removeData = base.fileNames))
-    if (!ret.keepVictims)
-      ((committed.base.fileNames -- committed.result.fileNames)
-        ++ committed.deadDeletes)
-        .foreach(n => GraftFs.delete(GraftFs.child(path, n)))
-    if (ret.sweeps) { GraftSnapshotIO.sweepRetired(path, ret.unlinkGraceMs); () }
+    GraftSnapshotIO.retire(path, committed, ret)
   }
   override def partitioning(): Array[Transform] =
     bucket.map(b => Expressions.bucket(b.n, b.col): Transform).toArray
@@ -563,12 +559,22 @@ private final class GraftStatsTracker(extra: Array[StructField] = Array.empty) {
       }.toMap))
 }
 
-private case class GraftLogCommit(tmp: String, partitionId: Int,
-    stats: Option[GraftStats] = None) extends WriterCommitMessage
-
-/** Bucketed task commit: one (bucket, tmp, stats) per bucket the task saw. */
-private case class GraftLogBucketedCommit(parts: Seq[(Int, String, Option[GraftStats])],
+/** Task commit: one (bucket, tmp, stats) per output the task wrote —
+  * bucket -1 on plain landings. */
+private case class GraftLogCommit(parts: Seq[(Int, String, Option[GraftStats])],
     partitionId: Int) extends WriterCommitMessage
+
+private object GraftLogCommit {
+  /** The one abort: unlink every tmp the tasks' messages name. */
+  def abort(messages: Array[WriterCommitMessage]): Unit =
+    messages.foreach {
+      case GraftLogCommit(parts, _) =>
+        parts.foreach { case (_, tmp, _) => GraftFs.delete(tmp) }
+      case u: GraftLogUpsertCommit => abort(Array(u.data)); GraftFs.delete(u.delTmp); ()
+      case d: GraftLogDeltaCommit => abort(Array(d.data)); GraftFs.delete(d.delTmp); ()
+      case _ => ()
+    }
+}
 
 private class GraftLogBatchWrite(path: String, truncate: Boolean,
     bucket: Option[GraftLogBucketSpec],
@@ -626,21 +632,11 @@ private class GraftLogBatchWrite(path: String, truncate: Boolean,
     // UNSTAMPED names, which carry no in-flight commit). Stamped
     // crash garbage is left to expire/sweep — truncate no longer claims
     // it, because it is indistinguishable from an in-flight publish.
-    // No existence require — a racing truncate may have unlinked first.
-    if (!ret.keepVictims && truncate)
-      ((committed.base.fileNames -- committed.result.fileNames)
-        ++ committed.deadDeletes)
-        .foreach(n => GraftFs.delete(GraftFs.child(path, n)))
-    // graced tables GC lazily: every commit sweeps retirements past grace
-    if (ret.sweeps) { GraftSnapshotIO.sweepRetired(path, ret.unlinkGraceMs); () }
+    // An append removes nothing, so its tail only sweeps.
+    GraftSnapshotIO.retire(path, committed, ret)
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case GraftLogCommit(tmp, _, _) => GraftFs.delete(tmp); ()
-      case GraftLogBucketedCommit(parts, _) =>
-        parts.foreach { case (_, tmp, _) => GraftFs.delete(tmp) }
-      case _ => ()
-    }
+    GraftLogCommit.abort(messages)
 }
 
 /** Epoch-committed streaming write: the one V2 protocol corner the batch
@@ -685,31 +681,18 @@ private class GraftLogStreamingWrite(path: String, truncate: Boolean,
     // upsert messages split into their data half (publishes like any
     // epoch append) and the equality-delete tmps with their key ranges
     // (round 18)
-    val (dataMsgs, delTmps) = messages.foldLeft(
-        (Vector.empty[WriterCommitMessage],
-          Vector.empty[(String, Long, Long, Array[Byte], Array[Byte])])) {
-      case ((ms, ds), GraftLogUpsertCommit(tmp, delTmp, pid, stats, kMin, kMax, kMinB, kMaxB)) =>
-        (ms :+ GraftLogCommit(tmp, pid, stats), ds :+ ((delTmp, kMin, kMax, kMinB, kMaxB)))
-      case ((ms, ds), m) => (ms :+ m, ds)
-    }
-    val pub = GraftLogNames.publishAll(path, dataMsgs.toArray,
+    val pub = GraftLogNames.publishAll(path,
+      messages.map { case u: GraftLogUpsertCommit => u.data; case m => m },
       pid => s"q$queryId-e$epochId-" + f"p$pid%05d")
-    // the epoch's equality-delete files: header-only (zero-key task)
-    // tmps drop; the rest publish under the SAME epoch marker so a
-    // replay retires them with the epoch's data
-    val eqDels = delTmps.zipWithIndex.flatMap { case ((tmp, kMin, kMax, kMinB, kMaxB), i) =>
-      if (kMin > kMax && kMinB == null) {
-        // zero-key task: header-only tmp, nothing to retire
-        require(GraftFs.delete(tmp), s"failed to drop empty $tmp"); None
-      } else {
-        val uuid = java.util.UUID.randomUUID().toString.take(8)
-        val name = GraftLogNames.publish(GraftLogNames.nextStamp(), i,
-          s"q$queryId-e$epochId-" + f"eq$i%05d-$uuid", ext = ".graftdel")
-        require(GraftFs.rename(tmp, GraftFs.child(path, name)),
-          s"epoch commit failed to publish $tmp -> $name")
-        Some((name, kMin, kMax, kMinB, kMaxB))
+    // the epoch's equality-delete files: a zero-key task's empty tmp
+    // drops; the rest publish under the SAME epoch marker so a replay
+    // retires them with the epoch's data
+    val eqDels = messages.collect { case u: GraftLogUpsertCommit => u }
+      .toSeq.zipWithIndex.flatMap { case (u, i) =>
+        GraftLogNames.publishOrDrop(path, u.delTmp, i, -1,
+          s"q$queryId-e$epochId-" + f"eq$i%05d", ".graftdel")
+          .map(name => (name, u.keyMin, u.keyMax, u.keyMinB, u.keyMaxB))
       }
-    }
     // swap FIRST, unlink after (the uniform commit discipline): readers
     // flip atomically, and a crash between swap and unlink leaves only
     // unreferenced garbage (expired on the stamp horizon), never a
@@ -803,22 +786,10 @@ private class GraftLogStreamingWrite(path: String, truncate: Boolean,
     // withdraw it
     eqDels.map(_._1).filterNot(committed.result.deletes.keySet.contains)
       .foreach(n => GraftFs.delete(GraftFs.child(path, n)))
-    if (!ret.keepVictims) {
-      (committed.base.fileNames -- committed.result.fileNames)
-        .foreach(n => GraftFs.delete(GraftFs.child(path, n)))
-      (committed.base.deletes.keySet -- committed.result.deletes.keySet)
-        .foreach(n => GraftFs.delete(GraftFs.child(path, n)))
-      committed.deadDeletes.foreach(d => GraftFs.delete(GraftFs.child(path, d)))
-    }
-    if (ret.sweeps) { GraftSnapshotIO.sweepRetired(path, ret.unlinkGraceMs); () }
+    GraftSnapshotIO.retire(path, committed, ret)
   }
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case GraftLogCommit(tmp, _, _) => GraftFs.delete(tmp); ()
-      case GraftLogUpsertCommit(tmp, delTmp, _, _, _, _, _, _) =>
-        GraftFs.delete(tmp); GraftFs.delete(delTmp); ()
-      case _ => ()
-    }
+    GraftLogCommit.abort(messages)
 }
 
 // ---------------------------------------------------------------------------
@@ -893,7 +864,7 @@ private class GraftLogRewriteOperation(path: String,
     * or stacked a new position delete on it invalidates the rewrite, and
     * the command fails LOUDLY ([[GraftConflictException]]) instead of
     * resurrecting deleted rows or losing concurrent changes. */
-  @volatile private[sources] var scanned: Option[(Set[String], Map[String, Seq[String]])] = None
+  @volatile private[sources] var scanned: Option[GraftPremise] = None
 
   /** The group-selection formula, shared verbatim by the rewrite scan's
     * planInputPartitions and the replace commit — both sides apply it to
@@ -915,8 +886,7 @@ private class GraftLogRewriteOperation(path: String,
   private[sources] def selectedFiles(): Array[String] = {
     val snap = GraftSnapshotIO.resolve(path)
     val sel = selectedFilesFrom(snap)
-    val names = sel.map(GraftFs.nameOf).toSet
-    scanned = Some((names, names.toSeq.map(n => n -> snap.deletesFor(n)).toMap))
+    scanned = Some(GraftPremise.of("rewrite", snap, sel.map(GraftFs.nameOf)))
     sel
   }
 
@@ -1040,20 +1010,14 @@ private class GraftLogReplaceDataBatchWrite(path: String,
     // concurrent compact/rewrite of a replaced file (survivors would
     // resurrect its pre-change rows) or a new position delete on one
     // (the takedown would be silently undone by our rewrite).
-    val committed = GraftSnapshotIO.commit(path) { base =>
+    val committed = GraftSnapshotIO.commit(path, premise = op.scanned) { base =>
       val replacedNames = op.selectedFilesFrom(base).map(GraftFs.nameOf).toSet
-      op.scanned.foreach { case (names, dels) =>
-        if (replacedNames != names)
+      op.scanned.foreach { p =>
+        if (replacedNames != p.inputs.keySet)
           throw new GraftConflictException(
             s"concurrent commit changed the rewrite's file set on $path: " +
-              s"scanned ${names.size} files, commit-time selection has " +
+              s"scanned ${p.inputs.size} files, commit-time selection has " +
               s"${replacedNames.size} — retry the command")
-        names.foreach { n =>
-          if (base.deletesFor(n) != dels(n))
-            throw new GraftConflictException(
-              s"concurrent position deletes landed on $n after the rewrite " +
-                s"scan of $path read it — retry the command")
-        }
       }
       GraftChange(
         addData = pub.toVector,
@@ -1063,23 +1027,10 @@ private class GraftLogReplaceDataBatchWrite(path: String,
     // originals (and their now-uncovered delete files) on disk — still
     // referenced by RETAINED manifests, so VERSION AS OF stays readable
     // across the rewrite; expire's stamp-horizon pass is the GC
-    if (!op.ret.keepVictims) {
-      committed.manifest.foreach { _ =>
-        val removed = committed.base.fileNames -- committed.result.fileNames
-        removed.foreach(n => require(GraftFs.delete(GraftFs.child(path, n)),
-          s"replace-data commit failed to delete $path/$n"))
-        committed.deadDeletes.foreach(d => GraftFs.delete(GraftFs.child(path, d)))
-      }
-    }
-    if (op.ret.sweeps) { GraftSnapshotIO.sweepRetired(path, op.ret.unlinkGraceMs); () }
+    GraftSnapshotIO.retire(path, committed, op.ret)
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case GraftLogCommit(tmp, _, _) => GraftFs.delete(tmp); ()
-      case GraftLogBucketedCommit(parts, _) =>
-        parts.foreach { case (_, tmp, _) => GraftFs.delete(tmp) }
-      case _ => ()
-    }
+    GraftLogCommit.abort(messages)
 }
 
 // ---------------------------------------------------------------------------
@@ -1147,11 +1098,9 @@ private class GraftLogDeltaOperation(path: String,
 
 /** One task's delta output: the position-delete tmp (empty = no deletes)
   * with the DISTINCT data files it deleted from (the manifest's coverage
-  * index), plus (bucket, tmp) data parts for inserted/updated rows
-  * (bucket -1 on plain tables). */
+  * index), plus the task commit of its inserted/updated rows. */
 private case class GraftLogDeltaCommit(delTmp: String, covered: Seq[String],
-    dataParts: Seq[(Int, String, Option[GraftStats])],
-    partitionId: Int) extends WriterCommitMessage
+    data: GraftLogCommit) extends WriterCommitMessage
 
 /** Ships to executors: must not capture the (driver-only) batch write. */
 private class GraftLogDeltaWriterFactory(path: String,
@@ -1169,35 +1118,17 @@ private class GraftLogDeltaBatchWrite(path: String,
     new GraftLogDeltaWriterFactory(path, bucket, extra)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val dels = Seq.newBuilder[(String, Seq[String])]
-    val data = Vector.newBuilder[GraftLiveFile]
-    messages.zipWithIndex.foreach {
-      case (GraftLogDeltaCommit(delTmp, covered, dataParts, pid), i) =>
-        if (GraftFs.length(delTmp) == 0L) {
-          require(GraftFs.delete(delTmp), s"failed to drop empty $delTmp"); ()
-        } else {
-          val uuid = java.util.UUID.randomUUID().toString.take(8)
-          val name = GraftLogNames.publish(GraftLogNames.nextStamp(), i,
-            f"d$pid%05d-$uuid", ext = ".graftdel")
-          require(GraftFs.rename(delTmp, GraftFs.child(path, name)),
-            s"delta commit failed to publish $delTmp -> $name")
-          dels += ((name, covered))
-        }
-        dataParts.foreach { case (b, tmp, stats) =>
-          if (GraftFs.length(tmp) == 0L) {
-            require(GraftFs.delete(tmp), s"failed to drop empty $tmp"); ()
-          } else {
-            val uuid = java.util.UUID.randomUUID().toString.take(8)
-            val tag = (if (b >= 0) s"k$b-" else "") + f"u$pid%05d-$uuid"
-            val name = GraftLogNames.publish(GraftLogNames.nextStamp(), i, tag)
-            require(GraftFs.rename(tmp, GraftFs.child(path, name)),
-              s"delta commit failed to publish $tmp -> $name")
-            data += GraftLiveFile(name, None, stats)
-          }
-        }
-      case (other, _) =>
+    val deltas = messages.map {
+      case d: GraftLogDeltaCommit => d
+      case other =>
         throw new IllegalStateException(s"unexpected delta commit message $other")
     }
+    val d = deltas.toSeq.zipWithIndex.flatMap { case (m, i) =>
+      GraftLogNames.publishOrDrop(path, m.delTmp, i, -1,
+        f"d${m.data.partitionId}%05d", ".graftdel").map(name => (name, m.covered))
+    }
+    val f = GraftLogNames.publishAll(path, deltas.map(_.data),
+      pid => f"u$pid%05d").toVector
     // ONE manifest swap makes the deletes and the replacement rows
     // visible together — a reader sees the pre-command or post-command
     // table, never an updated row present twice or absent. Original data
@@ -1208,7 +1139,6 @@ private class GraftLogDeltaBatchWrite(path: String,
     // covered file, those ordinals now describe bytes that no longer
     // exist (or, worse, DIFFERENT rows in a merged file), so the premise
     // check fails the command loudly instead of committing stale deletes.
-    val d = dels.result(); val f = data.result()
     def validate(base: GraftSnapshot): GraftChange = {
       d.foreach { case (del, covered) =>
         covered.foreach { c =>
@@ -1231,17 +1161,12 @@ private class GraftLogDeltaBatchWrite(path: String,
     ()
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case GraftLogDeltaCommit(delTmp, _, dataParts, _) =>
-        GraftFs.delete(delTmp)
-        dataParts.foreach { case (_, tmp, _) => GraftFs.delete(tmp) }
-      case _ => ()
-    }
+    GraftLogCommit.abort(messages)
 }
 
 /** Executor-side delta writer: position deletes to one text tmp, insert
-  * rows to per-bucket data tmps (the same record codec as the plain
-  * writers, so the layout and schema-evolution tail are uniform).
+  * rows through the one task writer ([[GraftLogWriter]]: same record
+  * codec, bucket routing and schema-evolution tail as every write).
   * `update` never arrives — the operation represents updates as
   * delete + reinsert, and reinsert's default delegates to insert. */
 private class GraftLogDeltaWriter(path: String, partitionId: Int,
@@ -1252,18 +1177,7 @@ private class GraftLogDeltaWriter(path: String, partitionId: Int,
   private val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
     GraftFs.createData(delTmp), java.nio.charset.StandardCharsets.UTF_8))
   private val covered = scala.collection.mutable.LinkedHashSet.empty[String]
-  // insert-side data tmps, keyed by bucket (-1 = plain), opened lazily
-  private val dataOuts =
-    new java.util.HashMap[Int, (String, DataOutputStream, GraftStatsTracker)]()
-  private def dataOut(b: Int): (String, DataOutputStream, GraftStatsTracker) = {
-    var e = dataOuts.get(b)
-    if (e == null) {
-      val tmp = s"$path/.gl-${java.util.UUID.randomUUID().toString.take(16)}.tmp"
-      e = (tmp, GraftFs.createData(tmp), new GraftStatsTracker(extra))
-      dataOuts.put(b, e)
-    }
-    e
-  }
+  private val inserts = new GraftLogWriter(path, partitionId, bucket, extra)
 
   override def delete(metadata: InternalRow, id: InternalRow): Unit = {
     // rowId projection order = rowId(): (_file absolute path, _pos)
@@ -1275,28 +1189,16 @@ private class GraftLogDeltaWriter(path: String, partitionId: Int,
   override def update(metadata: InternalRow, id: InternalRow, row: InternalRow): Unit =
     throw new IllegalStateException(
       "graftlog represents updates as delete+reinsert (representUpdateAsDeleteAndInsert)")
-  override def insert(row: InternalRow): Unit = {
-    val e = dataOut(bucket.map(bs => bs.bucketOf(row.getLong(bs.ord))).getOrElse(-1))
-    GraftLog.encodeRecord(e._2, row, extra, 0, e._3)
-    ()
-  }
+  override def insert(row: InternalRow): Unit = inserts.write(row)
 
   override def commit(): WriterCommitMessage = {
     out.close()
-    dataOuts.forEach((_, e) => e._2.close())
-    val parts = scala.collection.mutable
-      .ArrayBuffer.empty[(Int, String, Option[GraftStats])]
-    dataOuts.forEach((b, e) => parts += ((b, e._1, e._3.result)))
-    GraftLogDeltaCommit(delTmp, covered.toSeq, parts.sortBy(_._1).toSeq, partitionId)
+    GraftLogDeltaCommit(delTmp, covered.toSeq, inserts.commit())
   }
   override def abort(): Unit = {
-    out.close(); GraftFs.delete(delTmp)
-    dataOuts.forEach((_, e) => { e._2.close(); GraftFs.delete(e._1); () })
+    out.close(); GraftFs.delete(delTmp); inserts.abort()
   }
-  override def close(): Unit = {
-    out.close()
-    dataOuts.forEach((_, e) => e._2.close())
-  }
+  override def close(): Unit = { out.close(); inserts.close() }
 }
 
 private class GraftLogWriterFactory(path: String,
@@ -1305,40 +1207,63 @@ private class GraftLogWriterFactory(path: String,
     upsertOrds: Option[Seq[Int]] = None)
     extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    bucket match {
-      case Some(b) => new GraftLogBucketedWriter(path, partitionId, b, extra)
-      case None => new GraftLogWriter(path, partitionId, extra)
-    }
+    new GraftLogWriter(path, partitionId, bucket, extra)
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
     upsertOrds match {
       case Some(ords) => new GraftLogUpsertWriter(path, partitionId, extra, ords)
-      case None => new GraftLogWriter(path, partitionId, extra)
+      case None => new GraftLogWriter(path, partitionId, bucket, extra)
     }
 }
 
+/** The one task writer: routes each row to the tmp of its bucket =
+  * floorMod(<bucket column>, n), or to the single bucket -1 on a plain
+  * landing, opening a tmp only for buckets the task actually sees. With
+  * a bucketed Write's clustered distribution the incoming rows are
+  * hash-grouped by the bucket column, so a task touches
+  * ~numBuckets/tasks of the domain, not all of it (round 15). The commit
+  * message carries one (bucket, tmp, zone map) part per tmp; the
+  * driver's publish pass tags each bucketed name `-k<bucket>-` for the
+  * scan's partition grouping. A tmp is invisible to readers twice over:
+  * hidden dot-prefix AND a non-.graftlog suffix. Its publish name (with
+  * the rename-time stamp) is assigned by the driver's commit pass, never
+  * here — an executor clock must not decide publish order. */
 private class GraftLogWriter(path: String, partitionId: Int,
-    extra: Array[StructField] = Array.empty)
-    extends DataWriter[InternalRow] {
-  // invisible to readers twice over: hidden dot-prefix AND a non-.graftlog
-  // suffix; the publish name (with its rename-time stamp) is assigned by
-  // the driver's commit pass, never here — an executor clock must not
-  // decide publish order
-  private val tmp = s"$path/.gl-${java.util.UUID.randomUUID().toString.take(16)}.tmp"
+    bucket: Option[GraftLogBucketSpec],
+    extra: Array[StructField]) extends DataWriter[InternalRow] {
+  private val outs =
+    new java.util.HashMap[Int, (String, DataOutputStream, GraftStatsTracker)]()
   GraftFs.mkdirs(path) // defensive: factory mkdirs ran on the driver
-  private val out = GraftFs.createData(tmp)
-  private val stats = new GraftStatsTracker(extra)
+  // the last row's bucket and its tmp: a plain task never looks again
+  private var curB = Int.MinValue
+  private var cur: (String, DataOutputStream, GraftStatsTracker) = _
 
   override def write(r: InternalRow): Unit = {
-    GraftLog.encodeRecord(out, r, extra, 0, stats)
+    val b = bucket match {
+      case Some(bs) => bs.bucketOf(r.getLong(bs.ord))
+      case None => -1
+    }
+    if (b != curB) {
+      cur = outs.get(b)
+      if (cur == null) {
+        val tmp = s"$path/.gl-${java.util.UUID.randomUUID().toString.take(16)}.tmp"
+        cur = (tmp, GraftFs.createData(tmp), new GraftStatsTracker(extra))
+        outs.put(b, cur)
+      }
+      curB = b
+    }
+    GraftLog.encodeRecord(cur._2, r, extra, 0, cur._3)
     ()
   }
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    // publish happens in the driver's commit(); the zone map rides along
-    GraftLogCommit(tmp, partitionId, stats.result)
+  override def commit(): GraftLogCommit = {
+    close()
+    val parts = scala.collection.mutable
+      .ArrayBuffer.empty[(Int, String, Option[GraftStats])]
+    outs.forEach((b, e) => parts += ((b, e._1, e._3.result)))
+    GraftLogCommit(parts.sortBy(_._1).toSeq, partitionId)
   }
-  override def abort(): Unit = { out.close(); GraftFs.delete(tmp); () }
-  override def close(): Unit = out.close()
+  override def abort(): Unit =
+    outs.forEach((_, e) => { e._2.close(); GraftFs.delete(e._1); () })
+  override def close(): Unit = outs.forEach((_, e) => e._2.close())
 }
 
 /** Upsert task commit (round 18): the data tmp plus the task's DISTINCT
@@ -1347,10 +1272,8 @@ private class GraftLogWriter(path: String, partitionId: Int,
   * key's bytes, round 19) so the epoch commit can NARROW the eq-delete's
   * coverage to files whose key-column zone overlaps — on a key-clustered
   * landing the per-epoch manifest cost drops from O(live files) to
-  * O(overlapping files). A zero-key task signals with kMin > kMax (long)
-  * / null bounds (string). */
-private case class GraftLogUpsertCommit(tmp: String, delTmp: String,
-    partitionId: Int, stats: Option[GraftStats],
+  * O(overlapping files). A zero-key task's delete tmp is empty. */
+private case class GraftLogUpsertCommit(data: GraftLogCommit, delTmp: String,
     keyMin: Long, keyMax: Long,
     keyMinB: Array[Byte] = null, keyMaxB: Array[Byte] = null)
   extends WriterCommitMessage
@@ -1466,7 +1389,10 @@ private class GraftLogUpsertWriter(path: String, partitionId: Int,
         require(GraftFs.delete(tmp), s"failed to drop superseded $tmp")
         (tmp2, st2.result)
       }
-    val sb = new StringBuilder(GraftLog.eqDeleteHeaderOf(keyOrds)).append('\n')
+    // a zero-key task leaves its eq-delete tmp EMPTY, which the epoch's
+    // publish step drops; any key makes it header + one key per line
+    val sb = new StringBuilder
+    if (ord > 0) sb.append(GraftLog.eqDeleteHeaderOf(keyOrds)).append('\n')
     if (composite) // canonical tuple lines verbatim
       distinctT.foreach(k => sb.append(k).append('\n'))
     else if (strKey) // injective lines: "" encodes to the '.' marker, never blank
@@ -1474,8 +1400,9 @@ private class GraftLogUpsertWriter(path: String, partitionId: Int,
         sb.append(GraftLog.encEqKeyLine(k.getBytes)).append('\n'))
     else distinct.foreach(k => sb.append(k).append('\n'))
     GraftFs.writeString(delTmp, sb.toString)
+    val data = GraftLogCommit(Seq((-1, dataTmp, st)), partitionId)
     if (!composite)
-      GraftLogUpsertCommit(dataTmp, delTmp, partitionId, st,
+      GraftLogUpsertCommit(data, delTmp,
         if (distinct.isEmpty) Long.MaxValue else distinct.head,
         if (distinct.isEmpty) Long.MinValue else distinct.last,
         if (distinctS.isEmpty) null else distinctS.head.getBytes,
@@ -1493,11 +1420,10 @@ private class GraftLogUpsertWriter(path: String, partitionId: Int,
           if (mn == null || java.util.Arrays.compareUnsigned(b, mn) < 0) mn = b
           if (mx == null || java.util.Arrays.compareUnsigned(b, mx) > 0) mx = b
         }
-        GraftLogUpsertCommit(dataTmp, delTmp, partitionId, st,
-          Long.MaxValue, Long.MinValue, mn, mx)
+        GraftLogUpsertCommit(data, delTmp, Long.MaxValue, Long.MinValue, mn, mx)
       } else {
         val ls = firsts.map(_.toLong)
-        GraftLogUpsertCommit(dataTmp, delTmp, partitionId, st,
+        GraftLogUpsertCommit(data, delTmp,
           if (ls.isEmpty) Long.MaxValue else ls.min,
           if (ls.isEmpty) Long.MinValue else ls.max, null, null)
       }
@@ -1507,49 +1433,6 @@ private class GraftLogUpsertWriter(path: String, partitionId: Int,
     out.close(); GraftFs.delete(tmp); GraftFs.delete(delTmp); ()
   }
   override def close(): Unit = out.close()
-}
-
-/** Bucketed task writer (round 15): routes each row to the tmp file of its
-  * bucket = floorMod(<bucket column>, n), opening a file only for buckets
-  * the task actually sees — with the Write's clustered distribution the
-  * incoming rows are hash-grouped by the bucket column, so a task touches
-  * ~numBuckets/tasks of the domain, not all of it. Same tmp/rename commit
-  * protocol as the plain writer; the commit message carries (bucket, tmp)
-  * pairs and the driver's publish pass tags each name `-k<bucket>-` for
-  * the scan's partition grouping. */
-private class GraftLogBucketedWriter(path: String, partitionId: Int,
-    bucket: GraftLogBucketSpec,
-    extra: Array[StructField] = Array.empty) extends DataWriter[InternalRow] {
-  private val outs =
-    new java.util.HashMap[Int, (String, DataOutputStream, GraftStatsTracker)]()
-  GraftFs.mkdirs(path)
-
-  private def outFor(b: Int): (String, DataOutputStream, GraftStatsTracker) = {
-    var e = outs.get(b)
-    if (e == null) {
-      val tmp = s"$path/.gl-${java.util.UUID.randomUUID().toString.take(16)}.tmp"
-      e = (tmp, GraftFs.createData(tmp), new GraftStatsTracker(extra))
-      outs.put(b, e)
-    }
-    e
-  }
-
-  override def write(r: InternalRow): Unit = {
-    val e = outFor(bucket.bucketOf(r.getLong(bucket.ord)))
-    GraftLog.encodeRecord(e._2, r, extra, 0, e._3)
-    ()
-  }
-  override def commit(): WriterCommitMessage = {
-    outs.forEach((_, e) => e._2.close())
-    val parts = scala.collection.mutable
-      .ArrayBuffer.empty[(Int, String, Option[GraftStats])]
-    outs.forEach((b, e) => parts += ((b, e._1, e._3.result)))
-    GraftLogBucketedCommit(parts.sortBy(_._1).toSeq, partitionId)
-  }
-  override def abort(): Unit = {
-    outs.forEach((_, e) => { e._2.close(); GraftFs.delete(e._1); () })
-  }
-  override def close(): Unit = outs.forEach((_, e) => e._2.close())
 }
 
 // ---------------------------------------------------------------------------
@@ -2201,14 +2084,6 @@ private[sources] object GraftLogNames {
     name.substring(4, 17).toLong
   }
 
-  /** Driver-side publish pass shared by the batch and epoch commits: the
-    * stamp is taken PER FILE, immediately before its own rename — the
-    * stamp-to-visibility window is one syscall, so a GC pause or slow fs
-    * mid-loop cannot strand a stale-stamped file below another writer's
-    * advancing lag boundary (r14 review; a commit-wide stamp left the
-    * whole rename loop inside the window). The sequence number plus a
-    * fresh uuid keep names unique even across two commits inside the same
-    * millisecond. */
   /** Monotone per-writer publish stamps (r14 advice): the wall clock is
     * not monotone — a backwards step larger than the lag window between
     * commits would stamp new files BELOW an already-advanced offset
@@ -2220,42 +2095,49 @@ private[sources] object GraftLogNames {
   private[sources] def nextStamp(): Long =
     lastStamp.updateAndGet(prev => math.max(prev + 1, System.currentTimeMillis()))
 
-  /** @return the published file NAMES (for the commit's manifest swap). */
-  /** @return the published LIVE-FILE entries (name + task-recorded zone
+  /** The one publish step of every commit, driver-side: a zero-length
+    * tmp publishes NOTHING — an empty file is semantically absent in this
+    * format (no header/footer), it only costs listing at scale, and
+    * Spark deliberately runs one empty task over an empty write just to
+    * carry a commit message (e.g. a replace-data rewrite whose runtime
+    * group filter matched no files). Any other tmp is renamed visible as
+    * `pub-<stamp>-<seq>-[k<bucket>-]<tag>-<uuid><ext>`; the `k<bucket>`
+    * token leads so bucketOf() can parse it back at scan-planning time.
+    * The stamp is taken PER FILE, immediately before its own rename — the
+    * stamp-to-visibility window is one syscall, so a GC pause or slow fs
+    * mid-loop cannot strand a stale-stamped file below another writer's
+    * advancing lag boundary (r14 review; a commit-wide stamp left the
+    * whole rename loop inside the window). The sequence number plus a
+    * fresh uuid keep names unique even across two commits inside the same
+    * millisecond.
+    * @return the published name, None if the tmp was dropped. */
+  def publishOrDrop(path: String, tmp: String, seq: Int, bucket: Int,
+      tag: String, ext: String = ".graftlog"): Option[String] = {
+    if (GraftFs.length(tmp) == 0L) {
+      require(GraftFs.delete(tmp), s"failed to drop empty $tmp"); return None
+    }
+    val uuid = java.util.UUID.randomUUID().toString.take(8)
+    val name = publish(nextStamp(), seq,
+      (if (bucket >= 0) s"k$bucket-" else "") + s"$tag-$uuid", ext)
+    require(GraftFs.rename(tmp, GraftFs.child(path, name)),
+      s"commit failed to publish $tmp -> $name")
+    Some(name)
+  }
+
+  /** Publish every part of the tasks' [[GraftLogCommit]]s, in message
+    * order (the message index is the name's seq).
+    * @return the published LIVE-FILE entries (name + task-recorded zone
     *         map) for the commit's manifest swap. */
   def publishAll(path: String, messages: Array[WriterCommitMessage],
-      tag: Int => String): Seq[GraftLiveFile] = {
-    val published = Seq.newBuilder[GraftLiveFile]
-    def rename(tmp: String, seq: Int, t: String,
-        stats: Option[GraftStats]): Unit = {
-      // A zero-row task's tmp publishes NOTHING: an empty file is
-      // semantically absent in this format (no header/footer), it only
-      // costs listing at scale, and Spark deliberately runs one empty
-      // task over an empty write just to carry a commit message — e.g. a
-      // replace-data rewrite whose runtime group filter matched no files.
-      if (GraftFs.length(tmp) == 0L) {
-        require(GraftFs.delete(tmp), s"failed to drop empty $tmp"); return
-      }
-      val uuid = java.util.UUID.randomUUID().toString.take(8)
-      val name = publish(nextStamp(), seq, s"$t-$uuid")
-      val dest = s"$path/$name"
-      require(GraftFs.rename(tmp, dest),
-        s"commit failed to publish $tmp -> $dest")
-      published += GraftLiveFile(name, None, stats)
-    }
-    messages.zipWithIndex.foreach {
-      case (GraftLogCommit(tmp, pid, stats), i) =>
-        rename(tmp, i, tag(pid), stats)
-      case (GraftLogBucketedCommit(parts, pid), i) =>
-        // the `k<bucket>` token leads so bucketOf() can parse it back at
-        // scan-planning time; per-task publish keeps stamps monotone
-        parts.foreach { case (b, tmp, stats) =>
-          rename(tmp, i, s"k$b-${tag(pid)}", stats) }
+      tag: Int => String): Seq[GraftLiveFile] =
+    messages.toSeq.zipWithIndex.flatMap {
+      case (GraftLogCommit(parts, pid), i) =>
+        parts.flatMap { case (b, tmp, stats) =>
+          publishOrDrop(path, tmp, i, b, tag(pid)).map(GraftLiveFile(_, None, stats))
+        }
       case (other, _) =>
         throw new IllegalStateException(s"unexpected commit message $other")
     }
-    published.result()
-  }
 
   /** Bucket number of a published bucketed-landing name, or -1: the token
     * after the stamp/seq prefix is `k<bucket>` exactly. */
@@ -2385,31 +2267,6 @@ private case class GraftLogOffset(hw: String, lagMs: Long, tail: Seq[String],
   override def json(): String =
     s"""{"hw":"$hw","lag":$lagMs,"tail":${tail.map(f => s""""$f"""").mkString("[", ",", "]")},""" +
       s""""segs":${segStamps.mkString("[", ",", "]")}}"""
-}
-
-/** Spec hook: GraftLogOffset is private to the connector; the serde and
-  * the compaction arithmetic are correctness surfaces (a mis-parsed or
-  * mis-compacted offset silently re-reads or skips files across
-  * restarts), so GraftLogSpec pins them through this door. */
-private[graft] object GraftLogOffsetTestHook {
-  def make(hw: String, lagMs: Long, tail: Seq[String]): String =
-    GraftLogOffset(hw, lagMs, tail).json()
-  def parse(json: String): (String, Long, Seq[String]) = {
-    val o = GraftLogOffset.fromJson(json); (o.hw, o.lagMs, o.tail)
-  }
-  def seen(json: String, name: String): Boolean =
-    GraftLogOffset.fromJson(json).seen(name)
-  def seenStamp(json: String, stamp: Long): Boolean =
-    GraftLogOffset.fromJson(json).seenStamp(stamp)
-  def admit(json: String, admitted: Seq[String], sessionLagMs: Long): String =
-    GraftLogOffset.fromJson(json).admit(admitted, sessionLagMs).json()
-  def admitSegs(json: String, admitted: Seq[String], sessionLagMs: Long,
-      delivered: Seq[Long]): String =
-    GraftLogOffset.fromJson(json).admit(admitted, sessionLagMs, delivered).json()
-  def segsOf(json: String): Seq[Long] = GraftLogOffset.fromJson(json).segStamps
-  def publishName(millis: Long, seq: Int, tag: String): String =
-    GraftLogNames.publish(millis, seq, tag)
-  def nextStamp(): Long = GraftLogNames.nextStamp()
 }
 
 private object GraftLogOffset {
@@ -2556,13 +2413,13 @@ private class GraftLogReaderFactory(filterSource: () => Array[Filter],
           case Some(a) => new GraftLogAggReader(file, preds, a, spec)
           case None => topN match {
             case Some(t) => new GraftLogTopNReader(file, preds, columns, t, spec)
-            case None => new GraftLogRowReader(file, preds, columns, limit, spec)
+            case None => new GraftLogOffsetReader(Seq(file), preds, columns, 0, limit, spec)
           }
         }
       case GraftLogReplayPartition(file, dead) =>
         // streaming only (no agg/TopN/offset surface there): the row
         // reader with the seen segments suppressed in the cursor spec
-        new GraftLogRowReader(file, preds, columns, limit,
+        new GraftLogOffsetReader(Seq(file), preds, columns, 0, limit,
           spec.withDeadStamps(file, dead))
       case GraftLogStatsAggPartition(values) =>
         // the manifest already answered: emit the one pre-merged partial
@@ -2823,40 +2680,15 @@ private final class GraftLogCursor(file: String, filters: Array[Filter],
   def close(): Unit = in.close()
 }
 
-/** Plain row mode: emit each passing record's pruned columns, with the
-  * partially-pushed LIMIT as a per-file early stop. */
-private class GraftLogRowReader(file: String, filters: Array[Filter],
-    columns: Array[String], limit: Int,
-    spec: GraftLogCursorSpec) extends PartitionReader[InternalRow] {
-
-  private val proj: Array[Int] = columns.map(spec.fieldOrdinal)
-  private val cursor = spec.cursor(file, filters, proj.contains(3),
-    proj.contains(GraftLog.META_POS))
-  private var row: InternalRow = _
-  private var emitted = 0L
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false // partial limit: per-partition early stop
-    if (!cursor.advance()) return false
-    val vals = new Array[Any](proj.length)
-    var j = 0
-    while (j < proj.length) { vals(j) = cursor.field(proj(j)); j += 1 }
-    row = new GenericInternalRow(vals)
-    emitted += 1
-    true
-  }
-  override def get(): InternalRow = row
-  override def currentMetricsValues(): Array[CustomTaskMetric] = cursor.metricsValues()
-  override def close(): Unit = cursor.close()
-}
-
-/** Pushed-OFFSET mode (round 15): the single sequential partition over
-  * ALL files in publish-name order. Skips the first `offset` PASSING
-  * records of the global stream (predicates run during the skip, so the
-  * skipped prefix never builds a row), then emits like the plain reader,
-  * honoring a pushed LIMIT as rows-after-offset — exact in this
-  * single-stream plan, so Spark's retained global Limit just re-confirms
-  * it. O(1) memory; per-record cost identical to the plain reader. */
+/** Row reader over a chain of files. Pushed-OFFSET mode (round 15) is
+  * the single sequential partition over ALL files in publish-name order:
+  * it skips the first `offset` PASSING records of the global stream
+  * (predicates run during the skip, so the skipped prefix never builds a
+  * row), then emits each passing record's pruned columns, honoring a
+  * pushed LIMIT as rows-after-offset — exact in this single-stream plan,
+  * so Spark's retained global Limit just re-confirms it. With offset 0
+  * over one file it is the plain row mode, the LIMIT a per-file early
+  * stop. O(1) memory. */
 private class GraftLogOffsetReader(files: Seq[String], filters: Array[Filter],
     columns: Array[String], offset: Int, limit: Int,
     spec: GraftLogCursorSpec) extends PartitionReader[InternalRow] {
@@ -3394,18 +3226,14 @@ object GraftLog {
     metaCol("_pos", LongType, nullable = false,
       "raw record ordinal within the file (merge-on-read row identity)"))
 
-  /** Test hook: bucket token of a published name (see GraftLogNames). */
-  def testBucketOf(name: String): Int = GraftLogNames.bucketOf(name)
-  /** Test hook: publish stamp of a name, -1 if unstamped (GraftLogNames). */
-  def testStampOf(name: String): Long = GraftLogNames.stamp(name)
-  /** Test hook: the landing's newest snapshot-manifest stamp, -1 if none
-    * — the version handle `VERSION AS OF` resolves against. */
-  def testLatestSnapshotStamp(path: String): Long =
+  /** Publish stamp (epoch millis) of a graftlog file name, -1 if the name
+    * is unstamped (legacy/foreign) — the value `_pub_stamp` carries, and
+    * the bound an incremental `_pub_stamp > t` read takes. */
+  def stampOf(name: String): Long = GraftLogNames.stamp(name)
+  /** The landing's newest snapshot-manifest stamp, -1 if none — the
+    * version handle `VERSION AS OF` / `asOfStamp` resolves against. */
+  def latestSnapshotStamp(path: String): Long =
     GraftSnapshotIO.tipStamp(path)
-  /** Test hook: live-file count of the snapshot AS OF `stamp` — the
-    * round-17 chain-GC specs probe time travel without a SparkSession. */
-  def testResolveAsOfCount(path: String, stamp: Long): Int =
-    GraftSnapshotIO.resolveAsOf(path, stamp).files.length
 
   /** Compact a landing's small files — the maintenance operation a
     * 100 TB landing lives or dies by (every append/epoch adds files;
@@ -3574,38 +3402,16 @@ object GraftLog {
     // swap: publish merged files (monotone fresh name stamps, bucket
     // token carried over so bucketed scans keep parsing the layout), then
     // flip the manifest, then unlink the originals and absorbed deletes
-    val outFiles = Vector.newBuilder[GraftLiveFile]
-    merged.zipWithIndex.foreach { case ((tok, tmp, _, segs, _, stats), seq) =>
-      if (GraftFs.length(tmp) == 0L) {
-        require(GraftFs.delete(tmp), s"failed to drop empty $tmp"); ()
-      } else {
-        val uuid = java.util.UUID.randomUUID().toString.take(8)
-        val tag = (if (tok >= 0) s"k$tok-" else "") + s"c$seq-$uuid"
-        val name = GraftLogNames.publish(GraftLogNames.nextStamp(), seq, tag)
-        require(GraftFs.rename(tmp, GraftFs.child(path, name)),
-          s"compact failed to publish $tmp -> $name")
-        outFiles += GraftLiveFile(name, Some(segs), stats)
-      }
+    val outs = merged.toVector.zipWithIndex.flatMap {
+      case ((tok, tmp, _, segs, _, stats), seq) =>
+        GraftLogNames.publishOrDrop(path, tmp, seq, tok, s"c$seq")
+          .map(GraftLiveFile(_, Some(segs), stats))
     }
-    val outs = outFiles.result()
     val inputNames = merged.flatMap(_._3).toSet
     // Optimistic commit (round 17): the merged bytes were copied from the
-    // inputs AS PLANNED — an input that a concurrent commit replaced, or
-    // that gained a position delete after the merge tasks read it, makes
-    // the merged output wrong (it would resurrect taken-down rows or
-    // double concurrent rewrites), so the premise check fails loudly.
-    // Concurrent APPENDS are untouched inputs and rebase cleanly.
-    val committed = GraftSnapshotIO.commit(path) { base =>
-      inputNames.foreach { n =>
-        if (!base.fileNames.contains(n))
-          throw new GraftConflictException(
-            s"concurrent commit replaced compaction input $n on $path — " +
-              "retry the compaction")
-        if (base.deletesFor(n) != snap.deletesFor(n))
-          throw new GraftConflictException(
-            s"concurrent position deletes landed on compaction input $n " +
-              s"of $path after the merge read it — retry the compaction")
-      }
+    // inputs AS PLANNED, so the commit carries them as its premise.
+    val committed = GraftSnapshotIO.commit(path,
+        premise = Some(GraftPremise.of("compaction", snap, inputNames))) { base =>
       // absorbed delete files retire EXPLICITLY (X records, round 19):
       // semantically identical to the dead-coverage pruning that would
       // drop them anyway, but the explicit record makes a compaction
@@ -3619,16 +3425,7 @@ object GraftLog {
     }
     // a snapshot-retaining landing keeps the merged inputs readable for
     // time travel; expire's stamp-horizon pass is the GC
-    if (!ret.keepVictims) {
-      inputNames.foreach(n => require(GraftFs.delete(GraftFs.child(path, n)),
-        s"compact failed to delete $n"))
-      committed.deadDeletes.foreach(d => GraftFs.delete(GraftFs.child(path, d)))
-      // the X-retired absorbed dels are no longer in deadDeletes (the
-      // change removed them before the coverage pruning could)
-      (committed.base.deletes.keySet -- committed.result.deletes.keySet)
-        .foreach(d => GraftFs.delete(GraftFs.child(path, d)))
-    }
-    if (ret.sweeps) { GraftSnapshotIO.sweepRetired(path, ret.unlinkGraceMs); () }
+    GraftSnapshotIO.retire(path, committed, ret)
     val bytes = merged.map(_._5).sum
     (snap.files.length, snap.files.length - inputNames.size + outs.length, bytes)
   }
@@ -3831,38 +3628,16 @@ object GraftLog {
     }.collect()
     // publish in range order (fresh stamps; the ORIGIN stamps live in the
     // segment map), then one CAS swap, then unlink the inputs
-    val outFiles = Vector.newBuilder[GraftLiveFile]
-    parts.sortBy(_._1).foreach { case (pid, tmp, segs, coalesced, stats, _) =>
-      if (GraftFs.length(tmp) == 0L) {
-        require(GraftFs.delete(tmp), s"failed to drop empty $tmp"); ()
-      } else {
-        val uuid = java.util.UUID.randomUUID().toString.take(8)
-        val name = GraftLogNames.publish(GraftLogNames.nextStamp(), pid, s"s$pid-$uuid")
-        require(GraftFs.rename(tmp, GraftFs.child(path, name)),
-          s"cluster failed to publish $tmp -> $name")
-        outFiles += GraftLiveFile(name, Some(segs), stats, coalesced)
-      }
+    val outs = parts.sortBy(_._1).toVector.flatMap {
+      case (pid, tmp, segs, coalesced, stats, _) =>
+        GraftLogNames.publishOrDrop(path, tmp, pid, -1, s"s$pid")
+          .map(GraftLiveFile(_, Some(segs), stats, coalesced))
     }
-    val outs = outFiles.result()
-    val committed = GraftSnapshotIO.commit(path) { base =>
-      inputNames.foreach { n =>
-        if (!base.fileNames.contains(n))
-          throw new GraftConflictException(
-            s"concurrent commit replaced cluster input $n on $path — " +
-              "retry the clustering")
-        if (base.deletesFor(n) != snap.deletesFor(n))
-          throw new GraftConflictException(
-            s"concurrent position deletes landed on cluster input $n of " +
-              s"$path after the rewrite read it — retry the clustering")
-      }
+    val committed = GraftSnapshotIO.commit(path,
+        premise = Some(GraftPremise.of("clustering", snap, inputNames))) { _ =>
       GraftChange(addData = outs, removeData = inputNames.toSet)
     }
-    if (!ret.keepVictims) {
-      inputNames.foreach(n => require(GraftFs.delete(GraftFs.child(path, n)),
-        s"cluster failed to delete $n"))
-      committed.deadDeletes.foreach(d => GraftFs.delete(GraftFs.child(path, d)))
-    }
-    if (ret.sweeps) { GraftSnapshotIO.sweepRetired(path, ret.unlinkGraceMs); () }
+    GraftSnapshotIO.retire(path, committed, ret)
     (inputNames.length, outs.length, totalBytes)
   }
 
@@ -4564,14 +4339,6 @@ object GraftLog {
     }
     cowBranches.foldLeft(insertsTyped.unionByName(deletes))(_ unionByName _)
   }
-
-  /** The landing's visible log files, sorted (publish-name order) —
-    * snapshot-resolved since round 16: the newest manifest's live set
-    * (plus reconciled unstamped foreign files), or the directory listing
-    * for manifest-less legacy landings. */
-  private[sources] def listLogFiles(path: String): Array[String] =
-    GraftSnapshotIO.resolve(path).files
-      .map(f => GraftFs.child(path, f.name)).sorted.toArray
 
   /** File set named by runtime V2 group-filter predicates on `_file`:
     * =/IN constraints intersect across conjuncts; anything else
@@ -5312,9 +5079,6 @@ object GraftLog {
       i += 1
     }
   }
-
-  private[sources] def loadDeletePositions(delPaths: Seq[String],
-      dataName: String): Array[Long] = loadDeletes(delPaths, dataName).pos
 
   /** Compiled per-record predicate over the decoded fields. */
   private[sources] type Pred = (Long, Long, Double, UTF8String) => Boolean

@@ -479,11 +479,39 @@ private[sources] object GraftRetention {
 private[sources] final case class GraftResolved(snap: GraftSnapshot,
     seq: Long, depth: Int, stamp: Long)
 
-/** A finished optimistic commit: the manifest written (None = empty
-  * change, nothing swapped), the base it committed against, the
-  * resulting snapshot, and the delete files the change retired. */
-private[sources] final case class GraftCommitted(manifest: Option[String],
-    base: GraftSnapshot, result: GraftSnapshot, deadDeletes: Seq[String])
+/** What a rewrite read: each input file with the delete files covering
+  * it at read time. The rewrite's output was computed from exactly these
+  * bytes, so its commit re-checks the premise against every base it
+  * resolves: an input a concurrent commit replaced, or one that gained a
+  * delete since the read, fails the command LOUDLY — committing anyway
+  * would resurrect taken-down rows or double a concurrent rewrite.
+  * Concurrent APPENDS touch no input and rebase cleanly. Shared by the
+  * copy-on-write rewrite, compact and cluster. */
+private[sources] final case class GraftPremise(what: String,
+    inputs: Map[String, Seq[String]]) {
+  def check(path: String, base: GraftSnapshot): Unit =
+    inputs.foreach { case (n, dels) =>
+      if (!base.fileNames.contains(n))
+        throw new GraftConflictException(
+          s"concurrent commit replaced $what input $n on $path — retry the $what")
+      if (base.deletesFor(n) != dels)
+        throw new GraftConflictException(
+          s"concurrent deletes landed on $what input $n of $path after it " +
+            s"was read — retry the $what")
+    }
+}
+private[sources] object GraftPremise {
+  def of(what: String, snap: GraftSnapshot, names: Iterable[String]): GraftPremise =
+    GraftPremise(what, names.map(n => n -> snap.deletesFor(n)).toMap)
+}
+
+/** A finished optimistic commit: the base it committed against, the
+  * resulting snapshot (the base itself when the change was empty and
+  * nothing swapped), the delete files the change retired, and the
+  * premise it was validated under. */
+private[sources] final case class GraftCommitted(
+    base: GraftSnapshot, result: GraftSnapshot, deadDeletes: Seq[String],
+    premise: Option[GraftPremise] = None)
 
 private[sources] object GraftSnapshotIO {
   val EXT = ".graftsnap"
@@ -699,22 +727,6 @@ private[sources] object GraftSnapshotIO {
       stats.map(_.copy(etype = etype, extras = extras.result())), coalesced)
   }
 
-  private def parseSnapshotLines(lines: Array[String],
-      where: String): GraftSnapshot = {
-    val files = Vector.newBuilder[GraftLiveFile]
-    val dels = Map.newBuilder[String, Vector[String]]
-    lines.foreach { line =>
-      line.split(' ') match {
-        case Array("F", name, toks @ _*) =>
-          files += parseF(name, toks, where)
-        case Array("D", del, covSpec) => dels += ((del, covSpec.split(',').toVector))
-        case _ => throw new IllegalStateException(
-          s"unreadable manifest line in $where: '$line'")
-      }
-    }
-    GraftSnapshot(files.result(), dels.result())
-  }
-
   private def parseChangeLines(lines: Array[String],
       where: String): GraftChange = {
     val files = Vector.newBuilder[GraftLiveFile]
@@ -921,10 +933,10 @@ private[sources] object GraftSnapshotIO {
   // -------------------------------------------------------------------
 
   /** Commit a change with optimistic concurrency: resolve the current
-    * base, let `build` VALIDATE against it (throwing
-    * [[GraftConflictException]] when a concurrent commit broke its
-    * premise — that exception propagates, never retries) and produce the
-    * change, then claim manifest seq+1 with the atomic
+    * base, check the `premise` and let `build` VALIDATE against it
+    * (throwing [[GraftConflictException]] when a concurrent commit broke
+    * its premise — that exception propagates, never retries) and produce
+    * the change, then claim manifest seq+1 with the atomic
     * [[GraftFs.renameExclusive]] CAS. A lost CAS re-resolves and
     * re-validates — the loop a correct lake commit is, bounded by
     * `maxAttempts` against livelock.
@@ -936,7 +948,8 @@ private[sources] object GraftSnapshotIO {
     * The manifest is a DELTA unless the chain is due a base
     * ([[BASE_EVERY]]) or the base would be no bigger (truncate,
     * overwrite, tiny tables). */
-  def commit(path: String, force: Boolean = false, maxAttempts: Int = 64)
+  def commit(path: String, force: Boolean = false,
+      premise: Option[GraftPremise] = None, maxAttempts: Int = 64)
       (build: GraftSnapshot => GraftChange): GraftCommitted = {
     // livelock bound, not a timeout: every lost CAS means another commit
     // SUCCEEDED (system-wide progress is guaranteed), so attempts are
@@ -945,9 +958,10 @@ private[sources] object GraftSnapshotIO {
     var attempt = 1
     while (true) {
       val resolved = resolveCurrent(path)
+      premise.foreach(_.check(path, resolved.snap))
       val change = build(resolved.snap)
       if (change.isEmpty && !force)
-        return GraftCommitted(None, resolved.snap, resolved.snap, Nil)
+        return GraftCommitted(resolved.snap, resolved.snap, Nil, premise)
       val (next, dead) = change.apply(resolved.snap)
       val stamp = math.max(GraftLogNames.nextStamp(), resolved.stamp + 1)
       val baseLines = next.files.length + next.deletes.size
@@ -970,7 +984,7 @@ private[sources] object GraftSnapshotIO {
       else GraftFs.writeString(tmp, serializeDelta(stamp, change))
       val name = casName(resolved.seq + 1)
       if (GraftFs.renameExclusive(tmp, GraftFs.child(path, name)))
-        return GraftCommitted(Some(name), resolved.snap, next, dead)
+        return GraftCommitted(resolved.snap, next, dead, premise)
       // CAS lost: another committer claimed seq+1 first. Our files are
       // stamped-but-unreferenced (invisible); re-resolve and re-validate.
       GraftFs.delete(tmp)
@@ -980,6 +994,33 @@ private[sources] object GraftSnapshotIO {
       Thread.sleep(attempt.toLong) // linear backoff, single-digit ms
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** The post-swap tail of every commit, the last step of publish ->
+    * manifest swap -> unlink. Unless the table keeps victims (snapshot
+    * retention or an unlink grace), it unlinks the data and delete files
+    * the swap removed: replaced inputs, delete files left covering
+    * nothing (the commit's `deadDeletes`), and explicitly retired ones.
+    * Then a graced table sweeps
+    * retirements past their grace. A crash before this tail leaves only
+    * unreferenced files, which expire or the sweep collect.
+    *
+    * Strictness follows the premise: a commit validated under a
+    * [[GraftPremise]] proved every removed data file live at the swap, so
+    * a failed unlink is an error. A last-wins commit (truncate,
+    * overwrite, a streaming epoch) may find its victims already unlinked
+    * by a racing truncate, so its unlinks are lenient. */
+  def retire(path: String, committed: GraftCommitted, ret: GraftRetention): Unit = {
+    if (!ret.keepVictims) {
+      (committed.base.fileNames -- committed.result.fileNames).foreach { n =>
+        val gone = GraftFs.delete(GraftFs.child(path, n))
+        require(gone || committed.premise.isEmpty,
+          s"commit failed to delete $path/$n")
+      }
+      (committed.base.deletes.keySet -- committed.result.deletes.keySet)
+        .foreach(d => GraftFs.delete(GraftFs.child(path, d)))
+    }
+    if (ret.sweeps) { sweepRetired(path, ret.unlinkGraceMs); () }
   }
 
   // -------------------------------------------------------------------
@@ -1740,6 +1781,12 @@ private[graft] object GraftSnapshotTestHook {
     * zone-narrowed upsert coverage pin. */
   def deleteCoverage(path: String): Map[String, Seq[String]] =
     GraftSnapshotIO.resolve(path).deletes.map { case (d, c) => (d, c.toSeq) }
+  /** Bucket token of a published name, -1 if none (GraftLogNames). */
+  def bucketOf(name: String): Int = GraftLogNames.bucketOf(name)
+  /** Live-file count of the snapshot AS OF `stamp` — the round-17
+    * chain-GC specs probe time travel without a SparkSession. */
+  def resolveAsOfCount(path: String, stamp: Long): Int =
+    GraftSnapshotIO.resolveAsOf(path, stamp).files.length
   def publishedName(tag: String): String =
     GraftLogNames.publish(GraftLogNames.nextStamp(), 0, tag)
   /** Graced lazy-GC passthrough — the r18 chain-hole guard is a sweep
@@ -1783,7 +1830,7 @@ private[graft] object GraftSnapshotTestHook {
     }
   }
   /** All retained manifest stamps, oldest first — the version handles a
-    * spec can AS-OF against (testLatestSnapshotStamp gives only the tip). */
+    * spec can AS-OF against (GraftLog.latestSnapshotStamp gives only the tip). */
   def manifestStamps(path: String): Seq[Long] = {
     val ordered = GraftSnapshotIO.refs(GraftFs.listNames(path))
     ordered.map(GraftSnapshotIO.headOf(path, _)._1).toSeq

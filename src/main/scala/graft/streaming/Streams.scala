@@ -191,18 +191,7 @@ object Streams {
     * DuckDB oracles prove it per run.) Round 10: 8 -> 4 — the bench's 14
     * stream queries spend a fifth of the whole run on this fixed
     * machinery, and fixture-scale state fits 4 stores with headroom. */
-  val streamShufflePartitions: Int = {
-    // Round-12 advice: validate here with the env var named — an
-    // unvalidated .toInt at object init surfaces a malformed value as an
-    // opaque ExceptionInInitializerError far from the cause.
-    val raw = sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "4")
-    val n = try raw.toInt catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"GRAFT_STREAM_SHUFFLE must be a positive integer, got '$raw'")
-    }
-    require(n > 0, s"GRAFT_STREAM_SHUFFLE must be > 0, got $raw")
-    n
-  }
+  val streamShufflePartitions: Int = 4
 
   /** Run `body` with spark.sql.shuffle.partitions scoped to
     * [[streamShufflePartitions]] — the streaming query must START inside

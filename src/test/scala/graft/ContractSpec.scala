@@ -134,7 +134,7 @@ class ContractSpec extends SparkTestBase {
     * each with its default and reader. A new knob needs a row there and an
     * entry here, and a knob whose last reader is deleted must leave both. */
   private val envKnobs = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS",
-    "GRAFT_BENCH_REF", "GRAFT_STREAM_SHUFFLE", "GRAFT_PERIODIC_GC_INTERVAL")
+    "GRAFT_BENCH_REF")
 
   test("env-knob inventory: src/main reads exactly the documented variables") {
     import scala.jdk.CollectionConverters._

@@ -51,7 +51,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     val dir = new java.io.File(warehouse, "ev_a")
     val files = dir.listFiles().filter(_.getName.endsWith(".graftlog"))
     assert(files.nonEmpty)
-    val buckets = files.map(f => graft.sources.GraftLog.testBucketOf(f.getName))
+    val buckets = files.map(f => graft.sources.GraftSnapshotTestHook.bucketOf(f.getName))
     assert(buckets.forall(b => b >= 0 && b < 8), s"untagged file among ${files.map(_.getName).toSeq}")
     assert(buckets.toSet.size == 8, "sf0.001 users should touch all 8 buckets")
     // per-bucket key purity, via the table scan path itself
@@ -106,7 +106,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       val want = java.lang.Math.floorMod(r.getLong(0), 8L).toInt
       assert(!r.isNullAt(1) && r.getInt(1) == want,
         s"_bucket ${r.get(1)} != floorMod(${r.getLong(0)}, 8) = $want")
-      val tok = graft.sources.GraftLog.testBucketOf(new java.io.File(r.getString(2)).getName)
+      val tok = graft.sources.GraftSnapshotTestHook.bucketOf(new java.io.File(r.getString(2)).getName)
       assert(tok == r.getInt(1), s"_file k-token $tok != _bucket ${r.getInt(1)}")
     }
   }
@@ -177,7 +177,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     // the survivors' replacement files still carry the bucket layout
     // (user 42 lives in bucket floorMod(42, 8) = 2, so every affected
     // file was a k2 file and its replacement must be too)
-    assert(after.diff(before).forall(n => graft.sources.GraftLog.testBucketOf(n) == 2))
+    assert(after.diff(before).forall(n => graft.sources.GraftSnapshotTestHook.bucketOf(n) == 2))
   }
 
   test("row-level UPDATE rewrites ONLY the files with matching rows, applying the SET in place") {
@@ -245,7 +245,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     def names() = dir.listFiles().filter(_.getName.endsWith(".graftlog"))
       .map(_.getName).toSet
     val before = names()
-    val k2 = before.filter(n => graft.sources.GraftLog.testBucketOf(n) == 2)
+    val k2 = before.filter(n => graft.sources.GraftSnapshotTestHook.bucketOf(n) == 2)
     assert(k2.nonEmpty && k2.size < before.size)
     val key = "spark.sql.optimizer.runtime.rowLevelOperationGroupFilter.enabled"
     val prev = spark.conf.get(key)
@@ -291,7 +291,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       s"expected 4 compacted files (one per bucket), got ${after.length}")
     // layout survives: every file still k-tagged, per-bucket key purity
     after.foreach { f =>
-      val tok = graft.sources.GraftLog.testBucketOf(f.getName)
+      val tok = graft.sources.GraftSnapshotTestHook.bucketOf(f.getName)
       assert(tok >= 0 && tok < 4, s"compacted file lost its bucket token: ${f.getName}")
     }
     val back = spark.table("graft.cmp_t")
@@ -318,7 +318,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     val b = events.filter(col("event_id") >= 300)
     a.writeTo("graft.exp_t").append()
     val t = dir.listFiles().filter(_.getName.endsWith(".graftlog"))
-      .map(f => graft.sources.GraftLog.testStampOf(f.getName)).max
+      .map(f => graft.sources.GraftLog.stampOf(f.getName)).max
     b.writeTo("graft.exp_t").append()
     // a legacy (unstamped) file and two orphan tmps: one aged, one fresh
     val legacy = new java.io.File(dir, "foreign-legacy.graftlog")
@@ -342,7 +342,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       "a tmp inside the grace window was deleted (would break in-flight writes)")
     names.filter(_.endsWith(".graftlog")).filterNot(_ == "foreign-legacy.graftlog")
       .foreach { n =>
-        assert(graft.sources.GraftLog.testStampOf(n) > t, s"expired-range file survived: $n")
+        assert(graft.sources.GraftLog.stampOf(n) > t, s"expired-range file survived: $n")
       }
     assert(summary(0).getInt(2) == 1, "tmps_deleted must count only the aged orphan")
     // read-back: chunk B + the legacy copy's rows (legacy mirrors one A-file)
@@ -451,7 +451,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       s"expected appended replacement files + delete files, got +$added ${delNames()}")
     // bucket routing: appended files carry k-tokens and key purity holds
     added.foreach { n =>
-      val tok = graft.sources.GraftLog.testBucketOf(n)
+      val tok = graft.sources.GraftSnapshotTestHook.bucketOf(n)
       assert(tok >= 0 && tok < 4, s"replacement file lost its bucket token: $n")
     }
     val expect = events.withColumn("value",
@@ -556,10 +556,10 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     val a = events.filter(col("event_id") < 300)
     val b = events.filter(col("event_id") >= 300)
     a.writeTo("graft.tt_t").append()
-    val v1 = graft.sources.GraftLog.testLatestSnapshotStamp(dir)
+    val v1 = graft.sources.GraftLog.latestSnapshotStamp(dir)
     assert(v1 > 0)
     b.writeTo("graft.tt_t").append()
-    val v2 = graft.sources.GraftLog.testLatestSnapshotStamp(dir)
+    val v2 = graft.sources.GraftLog.latestSnapshotStamp(dir)
     assert(v2 > v1)
     // current read: both chunks; AS OF v1: chunk A exactly; AS OF v2 = current
     assert(spark.table("graft.tt_t").count() == a.count() + b.count())
@@ -606,7 +606,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     def dataNames() = dir.listFiles().filter(_.getName.endsWith(".graftlog"))
       .map(_.getName).toSet
     events.writeTo("graft.ret_t").append()
-    val v1 = graft.sources.GraftLog.testLatestSnapshotStamp(dir.getPath)
+    val v1 = graft.sources.GraftLog.latestSnapshotStamp(dir.getPath)
     val origFiles = dataNames()
     // CoW DELETE on a retaining table: replaced files stay ON DISK
     spark.sql("DELETE FROM graft.ret_t WHERE event_type = 'click'")
@@ -619,7 +619,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       == events.count(),
       "VERSION AS OF across a retained rewrite lost rows")
     // compaction also retains its inputs; history still reads the originals
-    val v2 = graft.sources.GraftLog.testLatestSnapshotStamp(dir.getPath)
+    val v2 = graft.sources.GraftLog.latestSnapshotStamp(dir.getPath)
     spark.sql("CALL graft.system.compact(table => 'ret_t', target_mb => 64)").collect()
     assert(spark.sql(s"SELECT * FROM graft.ret_t VERSION AS OF '$v1'").count()
       == events.count())
@@ -633,7 +633,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     // then every stamped file referenced by no remaining manifest —
     // current data untouched by construction, and the historical read
     // then fails LOUDLY, never silently partial
-    val horizon = graft.sources.GraftLog.testLatestSnapshotStamp(dir.getPath) + 1
+    val horizon = graft.sources.GraftLog.latestSnapshotStamp(dir.getPath) + 1
     val summary = spark.sql(
       s"CALL graft.system.expire_snapshots(table => 'ret_t', before_stamp => ${horizon}L)").collect()
     assert(summary.length == 1 && summary(0).getInt(0) > 0 && summary(0).getInt(1) > 0,
@@ -645,7 +645,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       spark.sql(s"SELECT * FROM graft.ret_t VERSION AS OF '$v1'").collect() }
     // INSERT OVERWRITE on a retaining table also keeps its pre-overwrite
     // history readable (the batch truncate path honors retention too)
-    val v3 = graft.sources.GraftLog.testLatestSnapshotStamp(dir.getPath)
+    val v3 = graft.sources.GraftLog.latestSnapshotStamp(dir.getPath)
     val filesBeforeOw = dataNames()
     events.limit(100).createOrReplaceTempView("ret_ow_src")
     spark.sql("INSERT OVERWRITE graft.ret_t SELECT * FROM ret_ow_src")
@@ -681,13 +681,13 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     // 'zzz.graftsnap' must be invisible to resolve/resolveAsOf/expire.
     val landing = Scratch.dir("graft_foreign_snap")
     events.limit(40).write.format("graftlog").mode("append").save(landing)
-    val v1 = graft.sources.GraftLog.testLatestSnapshotStamp(landing)
+    val v1 = graft.sources.GraftLog.latestSnapshotStamp(landing)
     assert(v1 > 0)
     java.nio.file.Files.writeString(
       java.nio.file.Path.of(landing, "zzz.graftsnap"), "not a manifest\n")
     assert(spark.read.format("graftlog").load(landing).count() == 40,
       "a foreign manifest name shadowed the live snapshot")
-    assert(graft.sources.GraftLog.testLatestSnapshotStamp(landing) == v1,
+    assert(graft.sources.GraftLog.latestSnapshotStamp(landing) == v1,
       "the version handle moved on a foreign manifest name")
     assert(spark.read.format("graftlog").option("asOfStamp", v1.toString)
       .load(landing).count() == 40,
@@ -898,7 +898,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(branchRead().count() == 18)
     assert(spark.table("graft.br_t").count() == 10)
     // maintenance never unlinks staged data and the fork stays resolvable
-    val tip = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val tip = sources.GraftLog.latestSnapshotStamp(dir)
     spark.sql("CALL graft.system.expire_snapshots(table => 'br_t', " +
       s"before_stamp => ${tip + 1}L)").collect()
     assert(branchRead().count() == 18,
@@ -1006,7 +1006,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       .writeTo("graft.br_rl.branch_fix").append()
     assert(spark.table("graft.br_rl.branch_fix").count() == 16,
       "the branch identifier must read fork + staged")
-    val s1 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s1 = sources.GraftLog.latestSnapshotStamp(dir)
     // the audit: kill one FORK row and one STAGED row, update a staged one
     val evenKill = ids.filter(_ % 2 == 0).head
     val oddKill = ids.filter(_ % 2 == 1).head
@@ -1037,7 +1037,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(mainRows(updId) == 123.5, "published main must carry the audit's update")
     // changelog across the publish derives: the fork row killed on the
     // branch is the delete side; the staged survivors are the inserts
-    val s2 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s2 = sources.GraftLog.latestSnapshotStamp(dir)
     val ch = sources.GraftLog.readChanges(spark, dir, s1, s2)
     val dels = ch.filter(col("_change_type") === "delete")
       .select(col("event_id")).collect().map(_.getLong(0)).toSet
@@ -1102,7 +1102,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       spark.conf.get("spark.sql.catalog.graft.warehouse"), "br_gc").getPath
     events.orderBy("event_id").limit(6).repartition(2)
       .writeTo("graft.br_gc").append()
-    val s1 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s1 = sources.GraftLog.latestSnapshotStamp(dir)
     spark.sql("CALL graft.system.branch(table => 'br_gc', name => 'aud')").collect()
     events.orderBy(desc("event_id")).limit(3)
       .writeTo("graft.br_gc").option("branch", "aud").append()
@@ -1146,7 +1146,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     // (a) a hand-planted DANGLING branch (fork stamp retained nowhere)
     java.nio.file.Files.writeString(
       new java.io.File(dir, "branch-ghost.graftbranch").toPath, "1\n")
-    val tip = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val tip = sources.GraftLog.latestSnapshotStamp(dir)
     // maintenance still runs (no resolveAsOf wedge) and prunes history
     spark.sql("CALL graft.system.expire_snapshots(table => 'br_edge', " +
       s"before_stamp => ${tip + 1}L)").collect()
@@ -1168,13 +1168,13 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     val dir = new java.io.File(
       spark.conf.get("spark.sql.catalog.graft.warehouse"), "cdf_dead").getPath
     events.orderBy("event_id").limit(10).writeTo("graft.cdf_dead").append()
-    val s1 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s1 = sources.GraftLog.latestSnapshotStamp(dir)
     // merge-on-read DELETE of every row (a real predicate, not truncate)
     spark.sql("DELETE FROM graft.cdf_dead WHERE event_id >= 0")
     assert(spark.table("graft.cdf_dead").count() == 0)
     // the absorb: every merged output is empty -> remove-only X commit
     spark.sql("CALL graft.system.compact(table => 'cdf_dead')").collect()
-    val s2 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s2 = sources.GraftLog.latestSnapshotStamp(dir)
     val changes = sources.GraftLog.readChanges(spark, dir, s1, s2)
     assert(changes.filter(col("_change_type") === "delete").count() == 10,
       "the window must carry the 10 recorded deletions")
@@ -1267,7 +1267,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     val base = events.orderBy("event_id").limit(30)
     base.repartition(2).write.format("graftlog").mode("append").save(src)
     drain() // baseline
-    val s1 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s1 = sources.GraftLog.latestSnapshotStamp(dir)
     val sumAtS1 = spark.read.format("graftlog").load(dir)
       .agg(sum(col("value"))).collect()(0).getDouble(0)
     // window: corrections (upsert: delete+insert), fresh inserts, and a
@@ -1280,7 +1280,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       .repartition(1).write.format("graftlog").mode("append").save(src)
     drain()
     spark.sql("CALL graft.system.compact(table => 'cdf_t')").collect()
-    val s2 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s2 = sources.GraftLog.latestSnapshotStamp(dir)
     val changes = sources.GraftLog.readChanges(spark, dir, s1, s2)
     val byType = changes.groupBy(col("_change_type"))
       .agg(sum(col("value")).as("v"), count(lit(1)).as("n"))
@@ -1339,7 +1339,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     val wave1 = events.orderBy("event_id").limit(10)
     wave1.repartition(1).write.format("graftlog").mode("append").save(src)
     drain() // the first attempt commits BEFORE the window
-    val s1 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s1 = sources.GraftLog.latestSnapshotStamp(dir)
     // simulate a sink-side replay: drop the last commit marker and
     // re-drain — the replayed epoch re-publishes wave 1 IN-window
     val commits = new java.io.File(s"$ckpt/commits").listFiles()
@@ -1356,7 +1356,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     // the mid-window compact merges replay re-publications with the
     // fresh files — the re-published names disappear into merged outputs
     spark.sql("CALL graft.system.compact(table => 'cdf_replay')").collect()
-    val s2 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s2 = sources.GraftLog.latestSnapshotStamp(dir)
     val changes = sources.GraftLog.readChanges(spark, dir, s1, s2)
     val ins = changes.filter(col("_change_type") === "insert")
       .select(col("event_id")).collect().map(_.getLong(0)).toSet
@@ -1394,7 +1394,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     val base = events.orderBy("event_id").limit(30)
     base.repartition(2).write.format("graftlog").mode("append").save(src)
     drain()
-    val s1 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s1 = sources.GraftLog.latestSnapshotStamp(dir)
     val sumS1 = spark.read.format("graftlog").load(dir)
       .agg(sum(col("value"))).collect()(0).getDouble(0)
     // corrections for %3 keys, fresh inserts on disjoint keys, and a
@@ -1407,7 +1407,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       .repartition(1).write.format("graftlog").mode("append").save(src)
     drain()
     spark.sql("DELETE FROM graft.cdf_u WHERE event_id % 7 = 1 AND event_id < 500000")
-    val s2 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s2 = sources.GraftLog.latestSnapshotStamp(dir)
     val ch = sources.GraftLog.readChanges(spark, dir, s1, s2, updateImages = true)
     val byType = ch.groupBy(col("_change_type"))
       .agg(sum(col("value")).as("v"), count(lit(1)).as("n"))
@@ -1476,12 +1476,12 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       when(col("id") < 3, lit("a")).otherwise(lit("b")).as("event_type"))
     six.repartition(1).write.format("graftlog").mode("append").save(src)
     drain()
-    val s1 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s1 = sources.GraftLog.latestSnapshotStamp(dir)
     six.filter(col("event_type") === "a") // correct the 'a' tuples only
       .withColumn("value", col("value") * 3)
       .repartition(1).write.format("graftlog").mode("append").save(src)
     drain()
-    val s2 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s2 = sources.GraftLog.latestSnapshotStamp(dir)
     val typed = sources.GraftLog.readChanges(spark, dir, s1, s2,
         updateImages = true)
       .select(col("user_id"), col("event_type"), col("value"),
@@ -1526,13 +1526,13 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     val base = events.orderBy("event_id").limit(40)
     base.repartition(2).write.format("graftlog").mode("append").save(src)
     drainUpsert()
-    val s1 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s1 = sources.GraftLog.latestSnapshotStamp(dir)
     base.filter(col("event_id") % 4 === 0)
       .withColumn("value", col("value") * 2)
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
       .repartition(1).write.format("graftlog").mode("append").save(src)
     drainUpsert() // window 1: corrections
-    val s2 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s2 = sources.GraftLog.latestSnapshotStamp(dir)
     // the changes stream, drained into an exactly-once file sink
     val outDir = Scratch.dir("graft_cdf_st_out")
     val chCkpt = Scratch.streamCkptDir("graft_cdf_st_chckpt")
@@ -1562,7 +1562,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     base.withColumn("event_id", col("event_id") + 700000L)
       .repartition(1).write.format("graftlog").mode("append").save(src)
     drainUpsert()
-    val s3 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s3 = sources.GraftLog.latestSnapshotStamp(dir)
     drainChanges()
     val streamedAll = rows(spark.read.parquet(outDir))
     val batchAll = batch1 ++ rows(sources.GraftLog.readChanges(spark, dir, s2, s3))
@@ -1590,7 +1590,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     val dir = new java.io.File(
       spark.conf.get("spark.sql.catalog.graft.warehouse"), "cdf_fx").getPath
     events.orderBy("event_id").limit(10).writeTo("graft.cdf_fx").append()
-    val s1 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s1 = sources.GraftLog.latestSnapshotStamp(dir)
     // a foreign unstamped file lands mid-window (written elsewhere with
     // the same record codec, then dropped in under a legacy name)
     val donor = Scratch.dir("graft_cdf_fx_donor")
@@ -1606,7 +1606,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     events.orderBy("event_id").limit(25).filter(col("event_id") >= 10)
       .writeTo("graft.cdf_fx").append()
     sources.GraftLog.compact(spark, dir, 1L << 30)
-    val s2 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s2 = sources.GraftLog.latestSnapshotStamp(dir)
     val batchIns = sources.GraftLog.readChanges(spark, dir, s1, s2)
       .filter(col("_change_type") === "insert")
       .select(col("event_id")).collect().map(_.getLong(0)).toSet
@@ -1658,7 +1658,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
     base.repartition(1).write.format("graftlog").mode("append").save(src)
     drain()
-    val s1 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s1 = sources.GraftLog.latestSnapshotStamp(dir)
     val orig = base.select(col("event_id"), col("value")).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toMap
     val evens = orig.keySet.filter(_ % 2 == 0)
@@ -1670,7 +1670,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       .withColumn("value", lit(777.0))
       .repartition(1).write.format("graftlog").mode("append").save(src)
     drain()
-    val s2 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s2 = sources.GraftLog.latestSnapshotStamp(dir)
     val ch = sources.GraftLog.readChanges(spark, dir, s1, s2)
       .select(col("event_id"), col("value"), col("_change_type")).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2)))
@@ -1711,11 +1711,11 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     val dir = new java.io.File(
       spark.conf.get("spark.sql.catalog.graft.warehouse"), "cdf_bad").getPath
     events.orderBy("event_id").limit(10).writeTo("graft.cdf_bad").append()
-    val s1 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s1 = sources.GraftLog.latestSnapshotStamp(dir)
     // a copy-on-write DELETE removes files and lands survivor files with
     // no segment maps — now derived as a row diff
     spark.sql("DELETE FROM graft.cdf_bad WHERE event_id % 2 = 0")
-    val s2 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s2 = sources.GraftLog.latestSnapshotStamp(dir)
     val ch1 = sources.GraftLog.readChanges(spark, dir, s1, s2)
     val dels = ch1.filter(col("_change_type") === "delete")
       .select(col("event_id")).collect().map(_.getLong(0)).toSet
@@ -1728,7 +1728,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       "a pure CoW DELETE must introduce no inserts")
     // a CoW UPDATE window: old images as deletes, new images as inserts
     spark.sql("UPDATE graft.cdf_bad SET value = value * 2 WHERE event_id % 3 = 0")
-    val s3 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s3 = sources.GraftLog.latestSnapshotStamp(dir)
     val ch2 = sources.GraftLog.readChanges(spark, dir, s2, s3)
       .select(col("event_id"), col("value"), col("_change_type")).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2)))
@@ -1763,7 +1763,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
       .createOrReplaceTempView("cdf_bad_ow")
     spark.sql("INSERT OVERWRITE TABLE graft.cdf_bad SELECT * FROM cdf_bad_ow")
-    val s4 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s4 = sources.GraftLog.latestSnapshotStamp(dir)
     val ch3 = sources.GraftLog.readChanges(spark, dir, s3, s4)
       .groupBy(col("_change_type")).count().collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
@@ -1772,7 +1772,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     // a SURVIVOR-LESS removal (truncate shape) still refuses loudly —
     // indistinguishable from expire's retention removals
     spark.sql("DELETE FROM graft.cdf_bad")
-    val s5 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s5 = sources.GraftLog.latestSnapshotStamp(dir)
     val err = intercept[IllegalArgumentException] {
       sources.GraftLog.readChanges(spark, dir, s4, s5).collect()
     }
@@ -1780,7 +1780,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       s"expected a loud underivable-window refusal, got: ${err.getMessage}")
     // pure appends after the truncate stay readable from the LATER anchor
     events.orderBy(desc("event_id")).limit(5).writeTo("graft.cdf_bad").append()
-    val s6 = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val s6 = sources.GraftLog.latestSnapshotStamp(dir)
     val tail = sources.GraftLog.readChanges(spark, dir, s5, s6)
     assert(tail.filter(col("_change_type") === "insert").count() == 5)
     assert(tail.filter(col("_change_type") === "delete").count() == 0)
@@ -1864,7 +1864,7 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
     val listed = spark.sql("CALL graft.system.tags(table => 'tag_t')").collect()
     assert(listed.map(_.getString(0)).toSeq == Seq("tip"),
       s"expected the one live tag, got ${listed.mkString(",")}")
-    assert(listed(0).getLong(1) == sources.GraftLog.testLatestSnapshotStamp(
+    assert(listed(0).getLong(1) == sources.GraftLog.latestSnapshotStamp(
       new java.io.File(spark.conf.get("spark.sql.catalog.graft.warehouse"),
         "tag_t").getPath))
   }

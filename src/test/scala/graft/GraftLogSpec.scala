@@ -798,7 +798,7 @@ class GraftLogSpec extends SparkTestBase with BeforeAndAfterAll {
     a.repartition(2).write.format("graftlog").mode("append").save(land)
     def stamps() = new java.io.File(land).listFiles()
       .filter(_.getName.endsWith(".graftlog"))
-      .map(f => GraftLog.testStampOf(f.getName))
+      .map(f => GraftLog.stampOf(f.getName))
     val t = stamps().max
     // monotone per-writer stamps: chunk B's publishes are STRICTLY above t
     b.repartition(3).write.format("graftlog").mode("append").save(land)
@@ -844,7 +844,7 @@ class GraftLogSpec extends SparkTestBase with BeforeAndAfterAll {
     val (b1, a1, bytes1) = GraftLog.compact(spark, land, target2)
     assert(b1 == 4 && a1 == 2 && bytes1 > 0, s"($b1, $a1, $bytes1)")
     assert(files().length == 2)
-    assert(files().forall(f => GraftLog.testBucketOf(f.getName) == -1),
+    assert(files().forall(f => graft.sources.GraftSnapshotTestHook.bucketOf(f.getName) == -1),
       "a plain landing's compacted file grew a bucket token")
     // then merge the rest: everything fits one file
     val (b2, a2, _) = GraftLog.compact(spark, land, Long.MaxValue)
@@ -867,7 +867,7 @@ class GraftLogSpec extends SparkTestBase with BeforeAndAfterAll {
       "_file must cover exactly the landing's published files")
     assert(rows.forall(_.isNullAt(2)), "plain landing files carry no bucket token")
     rows.foreach { r =>
-      val expect = GraftLog.testStampOf(new java.io.File(r.getString(1)).getName)
+      val expect = GraftLog.stampOf(new java.io.File(r.getString(1)).getName)
       assert(expect >= 0 && r.getLong(3) == expect,
         s"_pub_stamp ${r.getLong(3)} != name stamp $expect for ${r.getString(1)}")
     }
@@ -974,7 +974,7 @@ class GraftLogSpec extends SparkTestBase with BeforeAndAfterAll {
     a.write.format("graftlog").mode("append").save(land)
     val t = new java.io.File(land).listFiles()
       .filter(_.getName.endsWith(".graftlog"))
-      .map(f => GraftLog.testStampOf(f.getName)).max
+      .map(f => GraftLog.stampOf(f.getName)).max
     b.write.format("graftlog").mode("append").save(land)
     def read() = spark.read.format("graftlog").load(land)
     val preStamps = read().select("event_id", "_pub_stamp")

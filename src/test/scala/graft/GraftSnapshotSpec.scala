@@ -108,10 +108,10 @@ class GraftSnapshotSpec extends SparkTestBase {
       s"expected anchor base + 3 deltas, got $left")
     // history below the anchor is GONE and says so loudly
     intercept[IllegalArgumentException] {
-      sources.GraftLog.testResolveAsOfCount(dir, stamps(4))
+      Hook.resolveAsOfCount(dir, stamps(4))
     }
     // history at/above the anchor still time-travels
-    assert(sources.GraftLog.testResolveAsOfCount(dir, stamps(16)) == 17)
+    assert(Hook.resolveAsOfCount(dir, stamps(16)) == 17)
   }
 
   test("round-16 manifests stay readable; the first CAS commit chains on top of them") {
@@ -133,7 +133,7 @@ class GraftSnapshotSpec extends SparkTestBase {
       s"first CAS seq must continue at legacy stamp + 1, got ${shapes.last._2}")
     assert(Hook.liveNames(dir) == Seq(a, b, c).sorted)
     // time travel across the format boundary
-    assert(sources.GraftLog.testResolveAsOfCount(dir, stamp) == 2)
+    assert(Hook.resolveAsOfCount(dir, stamp) == 2)
   }
 
   test("offset seenStamp: the segment-level seen test matches the name-level one") {
@@ -241,7 +241,7 @@ class GraftSnapshotSpec extends SparkTestBase {
     }
     events.orderBy("event_id").limit(100).writeTo("graftg.gr_ev").append()
     val before = disk()
-    val t = sources.GraftLog.testLatestSnapshotStamp(landing)
+    val t = sources.GraftLog.latestSnapshotStamp(landing)
     spark.sql("DELETE FROM graftg.gr_ev WHERE event_type = 'click'")
     // the copy-on-write rewrite retired the originals, but within grace
     // they stay on disk and the OLD snapshot still reads in full
@@ -379,7 +379,7 @@ class GraftSnapshotSpec extends SparkTestBase {
     drain()
     assert(spark.read.parquet(out).count() == 20)
     val stampA = new java.io.File(dir).listFiles()
-      .map(f => sources.GraftLog.testStampOf(f.getName)).max
+      .map(f => sources.GraftLog.stampOf(f.getName)).max
     all.filter(col("event_id") % 2 === 1).repartition(2)
       .write.format("graftlog").mode("append").save(dir)
     val (b1, a1, _) = sources.GraftLog.cluster(spark, dir, "event_id", 512L)
@@ -536,7 +536,7 @@ class GraftSnapshotSpec extends SparkTestBase {
       events.filter(col("event_id") === r.getLong(0)).repartition(1)
         .write.format("graftlog").mode("append").save(dir)
     }
-    val preStamp = sources.GraftLog.testLatestSnapshotStamp(dir)
+    val preStamp = sources.GraftLog.latestSnapshotStamp(dir)
     val read0 = spark.read.format("graftlog").load(dir)
     val stamps = read0.select(col("_pub_stamp")).distinct()
       .collect().map(_.getLong(0)).sorted
@@ -569,7 +569,7 @@ class GraftSnapshotSpec extends SparkTestBase {
     // changelog windows crossing a coalesced rewrite refuse loudly
     val err = intercept[IllegalArgumentException] {
       sources.GraftLog.readChanges(spark, dir, preStamp,
-        sources.GraftLog.testLatestSnapshotStamp(dir)).collect()
+        sources.GraftLog.latestSnapshotStamp(dir)).collect()
     }
     assert(err.getMessage.contains("COALESCED"),
       s"expected the coalesced-window refusal, got: ${err.getMessage}")
