@@ -297,7 +297,7 @@ object StorageOps extends QueryModule {
   // per partition, executor-side DataWriters, tmp-file + driver-commit
   // rename), read back via format("graftlog") with an equality + range
   // predicate and a 3-column projection — both handled INSIDE the source
-  // (SupportsPushDownFilters / SupportsPushDownRequiredColumns), so the
+  // (SupportsPushDownV2Filters / SupportsPushDownRequiredColumns), so the
   // plan carries no post-scan Filter for the pushed conjuncts and the
   // reader never materializes the unrequested string except to test the
   // pushed predicate. PlanShapeSpec pins both. See sources/GraftLog.scala
@@ -326,12 +326,12 @@ object StorageOps extends QueryModule {
   // Custom source, V2 Predicate pushdown (round 15): a whole DISJUNCTION
   // of conjuncts — (type='purchase' AND value>=300) OR (type LIKE 'sig%'
   // AND value<50) — pushed into the source as ONE exact predicate tree
-  // through SupportsPushDownV2Filters. The v1 Filter ADT could only push
-  // top-level conjuncts, so this exact shape used to decode every record
-  // and re-filter above the scan; now the reader evaluates the OR (with
-  // the STARTS_WITH prefix byte-compare) during the sequential decode and
-  // non-matching records are never materialized. PlanShapeSpec pins the
-  // pushed tree and the absence of a post-scan Filter.
+  // through SupportsPushDownV2Filters and the data lane of GraftLog.v2ToV1,
+  // the one translator every graftlog predicate goes through. The reader
+  // evaluates the OR (with the STARTS_WITH prefix byte-compare) during
+  // the sequential decode and non-matching records are never
+  // materialized. PlanShapeSpec pins the pushed tree and the absence of a
+  // post-scan Filter.
   // ------------------------------------------------------------------
   def dsv2OrPushdown(s: SparkSession, dir: String): DataFrame = {
     val landing = Scratch.staged(s, dir, "log_or") {
@@ -1020,8 +1020,8 @@ object StorageOps extends QueryModule {
   // round's second claim (commit cost no longer O(live files)) exercised
   // on the real read path: resolution walks the chain back to the
   // nearest base and folds the deltas, and the oracle (the full table)
-  // fails if any link mis-applies. MANIFEST_SCALE_r17.json carries the
-  // latency/bytes measurements at 10^3..10^5 files.
+  // fails if any link mis-applies. artifacts/MANIFEST_SCALE_r17.json
+  // carries the latency/bytes measurements at 10^3..10^5 files.
   // ------------------------------------------------------------------
   def dsv2Chain(s: SparkSession, dir: String): DataFrame = {
     val landing = Scratch.staged(s, dir, "log_chain") {
@@ -1521,7 +1521,7 @@ object StorageOps extends QueryModule {
   // ------------------------------------------------------------------
   // Custom source, runtime filtering (round 14): the selective broadcast
   // dim side hands the graftlog scan its IN-set at execution time
-  // (SupportsRuntimeFiltering — the BatchScan line shows RuntimeFilters:
+  // (SupportsRuntimeV2Filtering — the BatchScan line shows RuntimeFilters:
   // [dynamicpruningexpression(user_id IN ...)]) and the reader drops
   // non-matching records during the decode, before the join ever probes
   // them — the join_bloom_runtime story extended from parquet to the

@@ -10,8 +10,8 @@ import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDeleteV2,
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Count => V2Count, Max => V2Max, Min => V2Min}
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
-import org.apache.spark.sql.connector.expressions.filter.{AlwaysTrue, And => V2And, Not => V2Not, Or => V2Or, Predicate => V2Predicate}
-import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownLimit, SupportsPushDownOffset, SupportsPushDownRequiredColumns, SupportsPushDownTopN, SupportsPushDownV2Filters, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeFiltering, SupportsRuntimeV2Filtering}
+import org.apache.spark.sql.connector.expressions.filter.{AlwaysTrue, Predicate => V2Predicate}
+import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownLimit, SupportsPushDownOffset, SupportsPushDownRequiredColumns, SupportsPushDownTopN, SupportsPushDownV2Filters, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
@@ -44,15 +44,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Optimizer surfaces implemented (each the real Spark SPI, each with an
   * oracle-green registered query and a plan pin — see StorageOps):
-  *  - SupportsPushDownV2Filters (round 15; the modern Predicate API,
-  *    upgraded from the v1 Filter ADT): exact =, <>, <, <=, >, >=, IN,
-  *    IS [NOT] NULL on all columns, STARTS_WITH/ENDS_WITH/CONTAINS on the
-  *    string column, composed recursively through AND/OR/NOT — a whole
-  *    disjunction is pushed as one exact predicate where v1 could only
-  *    push top-level conjuncts. Residuals (and only residuals) returned
-  *    to Spark. At 100 TB this is the scan-volume lever: the source skips
+  *  - SupportsPushDownV2Filters (round 15; the modern Predicate API):
+  *    exact =, <>, <, <=, >, >=, IN, IS [NOT] NULL on all columns,
+  *    STARTS_WITH/ENDS_WITH/CONTAINS on the string column, composed
+  *    recursively through AND/OR/NOT — a whole disjunction is pushed as
+  *    one exact predicate. Residuals (and only residuals) returned to
+  *    Spark. At 100 TB this is the scan-volume lever: the source skips
   *    record-building for non-matching rows while streaming sequentially
-  *    through each file.
+  *    through each file. Every predicate that enters a scan — pushed,
+  *    `_pub_stamp`, added-column hint, runtime and row-level group
+  *    filters — arrives as a V2 Predicate and goes through ONE translator,
+  *    [[GraftLog.v2ToV1]], in the lane of the columns it names.
   *  - SupportsPushDownRequiredColumns: decode only requested fields.
   *  - Columnar reads (round 15): the plain scan mode decodes into 4K-row
   *    ColumnarBatches over reused OnHeapColumnVectors and feeds
@@ -77,13 +79,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    the sequential read, so a telemetry rollup ships O(files x groups)
   *    partial rows to Spark's merge aggregate instead of O(records) —
   *    the map-side combine pushed all the way into the source.
-  *  - SupportsRuntimeFiltering (round 14): a selective broadcast-join dim
-  *    side hands the scan its IN-set at execution time and the reader
+  *  - SupportsRuntimeV2Filtering (round 14): a selective broadcast-join
+  *    dim side hands the scan its IN-set at execution time and the reader
   *    drops non-matching records before Spark ever sees them — the DPP /
   *    runtime-filter story extended from parquet (join_bloom_runtime) to
-  *    the custom source. Unsupported runtime filters are dropped (they
-  *    are a reduction, never a correctness surface — the join above still
-  *    applies the condition).
+  *    the custom source. Runtime predicates the data lane cannot
+  *    translate are dropped (they are a reduction, never a correctness
+  *    surface — the join above still applies the condition).
   *  - SupportsReportStatistics: real on-disk sizes so a small graftlog
   *    dimension is broadcastable.
   *
@@ -243,7 +245,7 @@ private[sources] class GraftLogTable(path: String,
     }
     () =>
       if (modes.of(info.command()) == GraftLog.MERGE_ON_READ)
-        new GraftLogDeltaOperation(path, bucket, extra, info.command(), tableBranch)
+        new GraftLogDeltaOperation(path, bucket, extra, info.command(), ret, tableBranch)
       else new GraftLogRewriteOperation(path, bucket, info.command(), extra, ret)
   }
   override def canDeleteWhere(predicates: Array[V2Predicate]): Boolean =
@@ -846,8 +848,9 @@ private class GraftLogRewriteOperation(path: String,
     * filter() (driver-side; the commit re-derives the replace set from
     * it). None = unfiltered (full rewrite). */
   @volatile private[sources] var allowedFiles: Option[Set[String]] = None
-  /** The pushed COMMAND condition, recorded by the rewrite scan builder's
-    * pushFilters — the static half of the group-selection formula. The
+  /** The pushed COMMAND condition in its data-lane translation, recorded
+    * by the rewrite scan builder's pushPredicates — the static half of
+    * the group-selection formula. The
     * commit MUST reproduce the scan's exact file-set arithmetic
     * (static ∩ runtime): a replace set larger than the scanned set
     * deletes unread rows, a smaller one duplicates rewritten ones.
@@ -930,24 +933,24 @@ private class GraftLogRewriteOperation(path: String,
 /** Rewrite-side scan: column pruning only — NO row-predicate pushdown
   * (see [[GraftLogRewriteOperation]] step 3) and no limit/TopN/agg surface
   * (none can arrive under a ReplaceData plan). Group-level pruning comes
-  * exclusively through the V2 runtime filter on `_file`. */
+  * from the command condition (buckets, below) and the V2 runtime filter
+  * on `_file` (files). */
 private class GraftLogRewriteScanBuilder(path: String, op: GraftLogRewriteOperation)
     extends ScanBuilder with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
+    with SupportsPushDownV2Filters {
   private var required: StructType = StructType(GraftLog.schema.fields ++ GraftLog.activeExtra(op.extra))
-  private var groupHint: Array[Filter] = Array.empty
   override def pruneColumns(r: StructType): Unit = required = r
   // GROUP-SELECTION pushdown: Spark's GroupBasedRowLevelOperationScanPlanning
   // offers the COMMAND condition here (not the rewrite query's survivor
   // filter). EVERYTHING is returned as residual — this scan must emit
-  // every row of every affected file — and the recorded copy serves only
-  // group-level pruning in planInputPartitions.
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    groupHint = filters
-    op.groupFilters = filters // the commit reproduces the scan's formula
-    filters // all residual: nothing is claimed as row-filtering
+  // every row of every affected file — and the data-lane translation
+  // serves only group-level pruning in planInputPartitions.
+  override def pushPredicates(predicates: Array[V2Predicate]): Array[V2Predicate] = {
+    // the commit reproduces the scan's formula from the same filters
+    op.groupFilters = predicates.flatMap(GraftLog.v2ToV1(_))
+    predicates
   }
-  override def pushedFilters(): Array[Filter] = Array.empty
+  override def pushedPredicates(): Array[V2Predicate] = Array.empty
   override def build(): Scan = new GraftLogRewriteScan(path, required, op)
 }
 
@@ -1075,6 +1078,7 @@ private class GraftLogDeltaOperation(path: String,
     bucket: Option[GraftLogBucketSpec],
     extra: Array[StructField],
     cmd: RowLevelOperation.Command,
+    ret: GraftRetention,
     branch: Option[String] = None) extends RowLevelOperation with SupportsDelta {
   override def command(): RowLevelOperation.Command = cmd
   override def description(): String =
@@ -1091,7 +1095,7 @@ private class GraftLogDeltaOperation(path: String,
     new DeltaWriteBuilder {
       override def build(): DeltaWrite = new DeltaWrite {
         override def toBatch: DeltaBatchWrite =
-          new GraftLogDeltaBatchWrite(path, bucket, extra, branch)
+          new GraftLogDeltaBatchWrite(path, bucket, extra, ret, branch)
       }
     }
 }
@@ -1113,6 +1117,7 @@ private class GraftLogDeltaWriterFactory(path: String,
 private class GraftLogDeltaBatchWrite(path: String,
     bucket: Option[GraftLogBucketSpec],
     extra: Array[StructField],
+    ret: GraftRetention,
     branch: Option[String] = None) extends DeltaBatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
     new GraftLogDeltaWriterFactory(path, bucket, extra)
@@ -1156,9 +1161,9 @@ private class GraftLogDeltaBatchWrite(path: String,
       // the same stale-premise validation runs against the BRANCH view,
       // and publish later remaps staged names in the delete files
       case Some(b) => GraftSnapshotIO.commitToBranch(path, b)(validate)
-      case None => GraftSnapshotIO.commit(path)(validate); ()
+      // the delta removes no file, so its tail only sweeps
+      case None => GraftSnapshotIO.retire(path, GraftSnapshotIO.commit(path)(validate), ret)
     }
-    ()
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     GraftLogCommit.abort(messages)
@@ -1454,36 +1459,32 @@ private class GraftLogScanBuilder(path: String, bucket: Option[GraftLogBucketSpe
   private var stampPushed: Array[Filter] = Array.empty
   private var required: StructType = StructType(GraftLog.schema.fields ++ GraftLog.activeExtra(extra))
 
-  // V2 Predicate pushdown (round 15; replaces the v1 Filter ADT — the
-  // modern DSv2 contract): each conjunct arrives as a connector Predicate
-  // tree and is translated to the reader's internal (v1-shaped) filter
-  // form, recursively through AND/OR/NOT — so a whole disjunction like
-  // (type='a' AND v>x) OR (type='b' AND v<y) is pushed as ONE exact
-  // predicate the reader evaluates during the sequential decode, where
-  // the v1 interface could only push top-level conjuncts. STARTS_WITH /
-  // ENDS_WITH / CONTAINS on the string column ride along (binary UTF8
-  // comparison, matching Spark's default collation). Untranslatable
-  // predicates (and only those) are returned as residuals for Spark's
-  // post-scan Filter — the claim stays EXACT.
-  // `_pub_stamp` predicates take a second translation lane (stampToV1):
-  // the stamp is constant per file, so a pure-stamp tree prunes FILES
-  // exactly and is claimed as pushed — the time-travel / incremental-read
-  // surface. The two lanes are disjoint by construction (v2ToV1 accepts
-  // only data columns, stampToV1 only `_pub_stamp`); mixed trees fall
-  // through both and stay residual.
-  // round 18: predicates over ADDED (schema-evolution) columns translate
-  // into PRUNING HINTS — never claimed (they stay residual and Spark
-  // re-evaluates them), but a file whose W bounds provably exclude the
-  // predicate is never opened. The no-pushdown contract for extras is
-  // about row-filtering claims; a sound reduction needs no claim.
+  // V2 Predicate pushdown (round 15): each conjunct arrives as a
+  // connector Predicate tree and takes one of three lanes of
+  // GraftLog.v2ToV1, tried in turn:
+  //  - the data lane: claimed as pushed and evaluated by the reader during
+  //    the sequential decode, recursively through AND/OR/NOT — so a whole
+  //    disjunction like (type='a' AND v>x) OR (type='b' AND v<y) is ONE
+  //    exact pushed predicate;
+  //  - the stamp lane: a pure `_pub_stamp` tree, constant per file,
+  //    claimed and pruning FILES exactly;
+  //  - the hint lane (round 18, added columns): never claimed — the
+  //    predicate stays residual and Spark re-evaluates it — but a file
+  //    whose W bounds provably exclude it is never opened. The
+  //    no-pushdown contract for extras is about row-filtering claims; a
+  //    sound reduction needs no claim.
+  // The lanes' columns are disjoint, so mixed trees fit none and stay
+  // residual. Untranslatable predicates (and only those) are returned for
+  // Spark's post-scan Filter — the claim stays EXACT.
   private var statsHints: Array[Filter] = Array.empty
   override def pushPredicates(predicates: Array[V2Predicate]): Array[V2Predicate] = {
-    val trans = predicates.map(p => (p, GraftLog.v2ToV1(p), GraftLog.stampToV1(p)))
+    val trans = predicates.map(p =>
+      (p, GraftLog.v2ToV1(p), GraftLog.v2ToV1(p, GraftLog.STAMP_LANE)))
     pushedV2 = trans.collect { case (p, d, s) if d.isDefined || s.isDefined => p }
     pushed = trans.collect { case (_, Some(f), _) => f }
     stampPushed = trans.collect { case (_, None, Some(f)) => f }
     val residual = trans.collect { case (p, None, None) => p }
-    statsHints = residual.flatMap(p => GraftLog.extrasHintV1(p, extra))
+    statsHints = residual.flatMap(GraftLog.v2ToV1(_, GraftLog.hintLane(extra)))
     residual
   }
   override def pushedPredicates(): Array[V2Predicate] = pushedV2
@@ -1636,7 +1637,7 @@ private class GraftLogScan(path: String, bucket: Option[GraftLogBucketSpec],
     branch: Option[String] = None)
     extends Scan with Batch
     with SupportsReportStatistics with SupportsReportPartitioning
-    with SupportsRuntimeFiltering with Serializable {
+    with SupportsRuntimeV2Filtering with Serializable {
 
   override def readSchema(): StructType = agg.map(_.schema).getOrElse(required)
   override def toBatch: Batch = this
@@ -1655,7 +1656,7 @@ private class GraftLogScan(path: String, bucket: Option[GraftLogBucketSpec],
   // sequential decode, so join probe rows never materialize. This is the
   // row-level analog of parquet DPP: a reduction, not a correctness
   // surface (the join above still applies its condition), which is why
-  // unsupported runtime filters are silently dropped.
+  // runtime predicates the data lane cannot translate are silently dropped.
   private var runtime: Array[Filter] = Array.empty
   // Only columns present in THIS scan's (pruned) output are offerable:
   // Spark resolves the references against the scan output and fails hard
@@ -1674,8 +1675,8 @@ private class GraftLogScan(path: String, bucket: Option[GraftLogBucketSpec],
       Array("event_id", "user_id", "event_type")
         .filter(out.contains).map(Expressions.column)
     }
-  override def filter(fs: Array[Filter]): Unit =
-    runtime = fs.filter(GraftLog.supportedFilter)
+  override def filter(predicates: Array[V2Predicate]): Unit =
+    runtime = predicates.flatMap(GraftLog.v2ToV1(_))
   private[sources] def allFilters: Array[Filter] = filters ++ runtime
 
   // ---- snapshot, resolved ONCE per Scan (r15 advice #3 + the round-16
@@ -2109,7 +2110,10 @@ private[sources] object GraftLogNames {
     * advancing lag boundary (r14 review; a commit-wide stamp left the
     * whole rename loop inside the window). The sequence number plus a
     * fresh uuid keep names unique even across two commits inside the same
-    * millisecond.
+    * millisecond. Branch publish ([[GraftSnapshotIO.publishBranch]]) keeps
+    * its own journaled rename: a retried publish must resume the renames a
+    * crash left half done, and this step mints a fresh name on every call,
+    * so it cannot.
     * @return the published name, None if the tmp was dropped. */
   def publishOrDrop(path: String, tmp: String, seq: Int, bucket: Int,
       tag: String, ext: String = ".graftlog"): Option[String] = {
@@ -3040,8 +3044,6 @@ object GraftLog {
     StructField("value", DoubleType, nullable = false),
     StructField("event_type", StringType, nullable = false)))
 
-  private val cols = Set("event_id", "user_id", "value", "event_type")
-
   private[sources] def ordinal(name: String): Int = name match {
     case "event_id" => 0; case "user_id" => 1; case "value" => 2
     case "event_type" => 3; case _ => -1
@@ -3056,10 +3058,10 @@ object GraftLog {
   // names) and `_pub_stamp` (publish millis from the stamped name, null
   // for unstamped legacy names). All three are CONSTANT PER FILE — the
   // readers surface them from the cursor without touching the record
-  // decode loop — and none is claimable by any pushdown surface:
-  // `ordinal()` (the pushdown validator) keeps returning -1 for them, so
-  // TopN/agg/predicate pushdown over metadata names is declined wholesale
-  // and Spark evaluates those above the scan. `_file` is additionally the
+  // decode loop. `ordinal()` keeps returning -1 for them, so TopN/agg
+  // pushdown over metadata names is declined and Spark evaluates those
+  // above the scan; of the predicates, only `_pub_stamp` trees are
+  // claimed (the stamp lane of [[v2ToV1]]). `_file` is additionally the
   // GROUP identity of the row-level DELETE rewrite: runtime group
   // filtering collects matching `_file`s through a subquery scan and the
   // rewrite replaces exactly those files.
@@ -4340,42 +4342,17 @@ object GraftLog {
     cowBranches.foldLeft(insertsTyped.unionByName(deletes))(_ unionByName _)
   }
 
-  /** File set named by runtime V2 group-filter predicates on `_file`:
-    * =/IN constraints intersect across conjuncts; anything else
-    * contributes no constraint. None = unconstrained (sound fallback —
-    * the caller rewrites everything). An IN with zero literal children
-    * is the genuine empty set (no file contains a matching row). */
-  private[sources] def runtimeFileSet(preds: Array[V2Predicate]): Option[Set[String]] = {
-    import org.apache.spark.sql.connector.expressions.{Expression => V2Expr, Literal => V2Lit}
-    def isFile(e: V2Expr): Boolean = e match {
-      case nr: NamedReference =>
-        nr.fieldNames.length == 1 && nr.fieldNames()(0) == "_file"
-      case _ => false
-    }
-    def str(e: V2Expr): Option[String] = e match {
-      case l: V2Lit[_] if l.dataType == StringType && l.value != null =>
-        Some(l.value.toString)
+  /** File set named by the runtime group filter: the `_file` =/IN
+    * predicates intersect across conjuncts; anything else contributes no
+    * constraint. None = unconstrained (sound fallback — the caller
+    * rewrites everything). An IN with no literals is the genuine empty
+    * set (no file contains a matching row). */
+  private[sources] def runtimeFileSet(preds: Array[V2Predicate]): Option[Set[String]] =
+    preds.toSeq.flatMap(v2ToV1(_, FILE_LANE)).flatMap {
+      case EqualTo(_, f: String) => Some(Set(f))
+      case In(_, fs) => Some(fs.map(_.asInstanceOf[String]).toSet)
       case _ => None
-    }
-    val sets = preds.toSeq.flatMap { p =>
-      p.name() match {
-        case "IN" =>
-          val c = p.children()
-          if (c.nonEmpty && isFile(c(0))) {
-            val vs = c.tail.map(str)
-            if (vs.forall(_.isDefined)) Some(vs.flatten.toSet) else None
-          } else None
-        case "=" =>
-          val c = p.children()
-          if (c.length != 2) None
-          else if (isFile(c(0))) str(c(1)).map(Set(_))
-          else if (isFile(c(1))) str(c(0)).map(Set(_))
-          else None
-        case _ => None
-      }
-    }
-    sets.reduceOption(_ intersect _)
-  }
+    }.reduceOption(_ intersect _)
 
   /** Buckets a pushed filter tree allows on the bucket column, None = no
     * constraint. Conjuncts (the array, and And nodes) intersect; Or nodes
@@ -4400,244 +4377,120 @@ object GraftLog {
     filters.flatMap(one).reduceOption(_ intersect _)
   }
 
-  private[sources] def supportedFilter(f: Filter): Boolean = f match {
-    // null comparison values are declined (they would NPE in compile()'s
-    // constant conversion, and their SQL semantics are three-valued —
-    // see litOf); runtime filters are a reduction, so declining is free.
-    // In-lists keep nulls acceptable: compile() drops them, which is the
-    // exact positive-IN semantics, and a Not over the runtime path never
-    // arrives (Spark's runtime filters are bare In/EqualTo).
-    case EqualTo(a, v) => cols(a) && v != null
-    case GreaterThan(a, v) => cols(a) && v != null
-    case GreaterThanOrEqual(a, v) => cols(a) && v != null
-    case LessThan(a, v) => cols(a) && v != null
-    case LessThanOrEqual(a, v) => cols(a) && v != null
-    case In(a, _) => cols(a)
-    // the format encodes no nulls, so IsNotNull is vacuously true (and
-    // IsNull vacuously false) — accept both as pushed constants
-    case IsNotNull(a) => cols(a)
-    case IsNull(a) => cols(a)
-    // boolean composition recurses: with no nulls anywhere, two-valued
-    // logic applies and &&/||/! are exact over exact children
-    case And(l, r) => supportedFilter(l) && supportedFilter(r)
-    case Or(l, r) => supportedFilter(l) && supportedFilter(r)
-    case Not(c) => supportedFilter(c)
-    // string predicates on the one string column: byte-wise UTF8String
-    // prefix/suffix/substring, identical to Spark's binary collation
-    case StringStartsWith(a, _) => a == "event_type"
-    case StringEndsWith(a, _) => a == "event_type"
-    case StringContains(a, _) => a == "event_type"
-    case _ => false
-  }
+  /** A lane a predicate takes into a graftlog scan: the columns it may
+    * reference, with their types, and whether it yields pruning HINTS.
+    * A claimed lane's translation is exact, evaluated in Spark's place. A
+    * hint only bounds which files can match, and Spark still evaluates
+    * the predicate: so a hint may keep one side of an AND (each conjunct
+    * bounds the file on its own) and never negates (the negation of a
+    * bound is no bound). */
+  private[sources] final case class GraftLane(cols: Seq[StructField], hint: Boolean = false)
 
-  /** Translate a connector V2 [[V2Predicate]] tree to the reader's
-    * internal (v1-shaped) filter form — None = untranslatable, returned
-    * to Spark as a residual. Literal values arrive Catalyst-internal
-    * (UTF8String for strings) and are converted to the external form the
-    * compile() constants expect, exactly once, here. Comparisons accept
-    * the literal on either side (flipped operator). Only translations the
-    * reader evaluates EXACTLY are claimed. */
-  private[graft] def v2ToV1(p: V2Predicate): Option[Filter] = {
+  /** The data columns: claimed (`pushed=[…]`), compiled per record, and
+    * pruning buckets and zone maps. Also the runtime-filter and the
+    * row-level command's group-filter lane. */
+  private[sources] val DATA_LANE = GraftLane(schema.fields.toSeq)
+  /** `_pub_stamp`, constant per file: claimed (`stampPruned=[…]`) and
+    * evaluated per file, so it prunes files exactly — the time-travel /
+    * incremental-read surface (`_pub_stamp > lastSeen` opens only the
+    * files published since). */
+  private[sources] val STAMP_LANE =
+    GraftLane(Seq(StructField("_pub_stamp", LongType, nullable = true)))
+  /** `_file`, the group identity of the copy-on-write rewrite. */
+  private[sources] val FILE_LANE =
+    GraftLane(Seq(StructField("_file", StringType, nullable = false)))
+  /** A table's ADDED columns (round 18): zone-map pruning hints only —
+    * extras are never claimed, but a file whose W bounds provably exclude
+    * the predicate is never opened. */
+  private[sources] def hintLane(extra: Array[StructField]): GraftLane =
+    GraftLane(extra.toSeq, hint = true)
+
+  /** The one translation of a connector [[V2Predicate]] into the internal
+    * (v1-shaped) filter tree the evaluators read: `compile` per record,
+    * `evalStamp` per stamp, `statsAccepts` per file and `prunedBuckets`
+    * per bucket. None = untranslatable in `lane`: returned to Spark as a
+    * residual. Shapes: =, <=> (as =), <>, <, <=, >, >= with the literal
+    * on either side (flipped operator); IN (no literals = the empty set);
+    * IS [NOT] NULL; STARTS_WITH / ENDS_WITH / CONTAINS on a string column
+    * (binary UTF8 comparison, Spark's default collation); AND / OR / NOT
+    * over such. A literal must carry its column's type (an int literal
+    * widens to a long column) and arrives Catalyst-internal (UTF8String
+    * for strings): it is converted to the external form the evaluators
+    * expect exactly once, here.
+    *
+    * NULL literals decline the whole subtree (r15 advice): the reader
+    * evaluates pushed trees with two-valued logic, sound only over
+    * non-null values, but a null LITERAL brings three-valued semantics
+    * back above the rows — `col NOT IN (1, NULL)` selects zero rows in
+    * SQL, while a two-valued NOT over a null-dropped IN-set keeps every
+    * `col != 1` row. Catalyst folds most of these away, but an IN list
+    * with a null survives to the source. Mixed trees (stamp and data
+    * columns under one OR) fit no lane and stay residual: never wrong,
+    * just unpruned. */
+  private[graft] def v2ToV1(p: V2Predicate, lane: GraftLane = DATA_LANE): Option[Filter] = {
     import org.apache.spark.sql.connector.expressions.{Expression => V2Expr, Literal => V2Lit}
-    def colOf(e: V2Expr): Option[String] = e match {
-      case nr: NamedReference if nr.fieldNames.length == 1 && cols(nr.fieldNames()(0)) =>
-        Some(nr.fieldNames()(0))
+    def colOf(e: V2Expr): Option[StructField] = e match {
+      case nr: NamedReference if nr.fieldNames.length == 1 =>
+        lane.cols.find(_.name == nr.fieldNames()(0))
       case _ => None
     }
-    // NULL literals are NOT translatable (r15 advice, a r15 regression
-    // surface): the reader evaluates pushed trees with two-valued logic
-    // (sound only over non-null values — the format encodes no nulls),
-    // but a null LITERAL reintroduces three-valued semantics ABOVE the
-    // row values: `col NOT IN (1, NULL)` selects zero rows in SQL, while
-    // a two-valued NOT over a null-dropped IN-set keeps every col != 1
-    // row — silent wrong results under an EXACT-pushdown claim (plain
-    // comparisons against NULL would NPE in compile()'s cmp instead).
-    // Catalyst's NullPropagation folds most of these away, but an IN list
-    // with a null survives the optimizer and reaches the source under the
-    // recursive NOT support — so the whole subtree is declined here and
-    // falls back to Spark's residual evaluation.
-    def litOf(e: V2Expr): Option[Any] = e match {
-      case l: V2Lit[_] if l.value != null =>
+    def litOf(e: V2Expr, c: StructField): Option[Any] = e match {
+      case l: V2Lit[_] if l.value == null => None
+      case l: V2Lit[_] if l.dataType == c.dataType =>
         Some(org.apache.spark.sql.catalyst.CatalystTypeConverters
           .convertToScala(l.value, l.dataType))
-      case _ => None
-    }
-    def binary(mk: (String, Any) => Filter, flipped: (String, Any) => Filter): Option[Filter] = {
-      val c = p.children()
-      if (c.length != 2) None
-      else colOf(c(0)).zip(litOf(c(1))).map { case (a, v) => mk(a, v) }
-        .orElse(colOf(c(1)).zip(litOf(c(0))).map { case (a, v) => flipped(a, v) })
-    }
-    def stringPred(mk: (String, String) => Filter): Option[Filter] = {
-      val c = p.children()
-      if (c.length != 2) None
-      else colOf(c(0)).zip(litOf(c(1))).collect {
-        case (a, v: String) if a == "event_type" => mk(a, v)
-      }
-    }
-    p.name() match {
-      case "AND" =>
-        val a = p.asInstanceOf[V2And]
-        v2ToV1(a.left()).zip(v2ToV1(a.right())).map { case (l, r) => And(l, r) }
-      case "OR" =>
-        val o = p.asInstanceOf[V2Or]
-        v2ToV1(o.left()).zip(v2ToV1(o.right())).map { case (l, r) => Or(l, r) }
-      case "NOT" =>
-        v2ToV1(p.asInstanceOf[V2Not].child()).map(Not)
-      // `<=>` (null-safe equality) degenerates to `=` in a null-free format
-      case "=" | "<=>" => binary(EqualTo, EqualTo)
-      case "<>" => binary((a, v) => Not(EqualTo(a, v)), (a, v) => Not(EqualTo(a, v)))
-      case ">" => binary(GreaterThan, LessThan)
-      case ">=" => binary(GreaterThanOrEqual, LessThanOrEqual)
-      case "<" => binary(LessThan, GreaterThan)
-      case "<=" => binary(LessThanOrEqual, GreaterThanOrEqual)
-      case "IN" =>
-        val c = p.children()
-        if (c.length < 2) None
-        else colOf(c(0)).flatMap { a =>
-          val vals = c.drop(1).map(litOf)
-          if (vals.exists(_.isEmpty)) None else Some(In(a, vals.map(_.get)))
-        }
-      case "IS_NULL" =>
-        p.children() match { case Array(e) => colOf(e).map(IsNull); case _ => None }
-      case "IS_NOT_NULL" =>
-        p.children() match { case Array(e) => colOf(e).map(IsNotNull); case _ => None }
-      case "STARTS_WITH" => stringPred(StringStartsWith)
-      case "ENDS_WITH" => stringPred(StringEndsWith)
-      case "CONTAINS" => stringPred(StringContains)
-      case _ => None
-    }
-  }
-
-  /** Translate predicates over ADDED (schema-evolution) columns into
-    * v1-shaped PRUNING HINTS (round 18). Hints are never claimed as
-    * pushed — extras keep their no-pushdown contract and Spark evaluates
-    * the predicate above the scan — but a file whose W-token bounds
-    * provably exclude the predicate need not be opened for Spark to
-    * reject its rows. Partial AND translation is sound (each translated
-    * conjunct independently constrains the file); OR needs both sides;
-    * NOT and unknown shapes translate to nothing (keep-file). */
-  private[sources] def extrasHintV1(p: V2Predicate,
-      extra: Array[StructField]): Option[Filter] = {
-    if (extra.isEmpty) return None
-    import org.apache.spark.sql.connector.expressions.{Expression => V2Expr, Literal => V2Lit}
-    val names = extra.map(_.name).toSet
-    def colOf(e: V2Expr): Option[String] = e match {
-      case nr: NamedReference if nr.fieldNames.length == 1 &&
-          names.contains(nr.fieldNames()(0)) =>
-        Some(nr.fieldNames()(0))
-      case _ => None
-    }
-    def litOf(e: V2Expr): Option[Any] = e match {
-      case l: V2Lit[_] if l.value != null =>
-        Some(org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .convertToScala(l.value, l.dataType))
-      case _ => None
-    }
-    def binary(mk: (String, Any) => Filter,
-        flipped: (String, Any) => Filter): Option[Filter] = {
-      val c = p.children()
-      if (c.length != 2) None
-      else colOf(c(0)).zip(litOf(c(1))).map { case (a, v) => mk(a, v) }
-        .orElse(colOf(c(1)).zip(litOf(c(0))).map { case (a, v) => flipped(a, v) })
-    }
-    p.name() match {
-      case "AND" =>
-        val a = p.asInstanceOf[V2And]
-        (extrasHintV1(a.left(), extra), extrasHintV1(a.right(), extra)) match {
-          case (Some(l), Some(r)) => Some(And(l, r))
-          case (l, r) => l.orElse(r) // partial conjunct: still a constraint
-        }
-      case "OR" =>
-        val o = p.asInstanceOf[V2Or]
-        extrasHintV1(o.left(), extra).zip(extrasHintV1(o.right(), extra))
-          .map { case (l, r) => Or(l, r) }
-      case "=" | "<=>" => binary(EqualTo, EqualTo)
-      case ">" => binary(GreaterThan, LessThan)
-      case ">=" => binary(GreaterThanOrEqual, LessThanOrEqual)
-      case "<" => binary(LessThan, GreaterThan)
-      case "<=" => binary(LessThanOrEqual, GreaterThanOrEqual)
-      case "IN" =>
-        val c = p.children()
-        if (c.length < 2) None
-        else colOf(c(0)).flatMap { a =>
-          val vals = c.drop(1).map(litOf)
-          if (vals.exists(_.isEmpty)) None else Some(In(a, vals.map(_.get)))
-        }
-      case "IS_NULL" =>
-        p.children() match { case Array(e) => colOf(e).map(IsNull); case _ => None }
-      case "IS_NOT_NULL" =>
-        p.children() match { case Array(e) => colOf(e).map(IsNotNull); case _ => None }
-      case "STARTS_WITH" =>
-        val c = p.children()
-        if (c.length != 2) None
-        else colOf(c(0)).zip(litOf(c(1))).collect {
-          case (a, v: String) => StringStartsWith(a, v)
-        }
-      case _ => None
-    }
-  }
-
-  /** Translate a PURE `_pub_stamp` predicate tree — comparisons/IN
-    * against integer literals, IS [NOT] NULL, and AND/OR/NOT over such —
-    * to a v1-shaped filter the scan evaluates PER FILE. The stamp is
-    * CONSTANT across a file's rows, so file-level pruning is EXACTLY
-    * row-level filtering and the predicate is claimed as pushed: this is
-    * the connector's time-travel / incremental-batch surface —
-    * `.filter($"_pub_stamp" > lastSeenStamp)` reads only files published
-    * since, pruning everything else without opening it. Mixed trees
-    * (stamp AND data columns under one OR) are declined here and by
-    * v2ToV1, so they stay residual and Spark evaluates them row-by-row
-    * against the emitted metadata column — never wrong, just unpruned. */
-  private[sources] def stampToV1(p: V2Predicate): Option[Filter] = {
-    import org.apache.spark.sql.connector.expressions.{Expression => V2Expr, Literal => V2Lit}
-    def isStamp(e: V2Expr): Boolean = e match {
-      case nr: NamedReference =>
-        nr.fieldNames.length == 1 && nr.fieldNames()(0) == "_pub_stamp"
-      case _ => false
-    }
-    def lit(e: V2Expr): Option[Long] = e match {
-      case l: V2Lit[_] if l.value != null &&
-          (l.dataType == LongType || l.dataType == IntegerType) =>
+      case l: V2Lit[_] if l.dataType == IntegerType && c.dataType == LongType =>
         Some(l.value.asInstanceOf[Number].longValue())
       case _ => None
     }
-    def binary(mk: Long => Filter, flipped: Long => Filter): Option[Filter] = {
-      val c = p.children()
-      if (c.length != 2) None
-      else if (isStamp(c(0))) lit(c(1)).map(mk)
-      else if (isStamp(c(1))) lit(c(0)).map(flipped)
-      else None
+    def binary(mk: (String, Any) => Filter, flipped: (String, Any) => Filter): Option[Filter] =
+      p.children() match {
+        case Array(l, r) =>
+          colOf(l).flatMap(c => litOf(r, c).map(mk(c.name, _)))
+            .orElse(colOf(r).flatMap(c => litOf(l, c).map(flipped(c.name, _))))
+        case _ => None
+      }
+    def string(mk: (String, String) => Filter): Option[Filter] = p.children() match {
+      case Array(l, r) => colOf(l).filter(_.dataType == StringType)
+        .flatMap(c => litOf(r, c).map(v => mk(c.name, v.asInstanceOf[String])))
+      case _ => None
     }
-    val A = "_pub_stamp"
+    def child(i: Int): Option[Filter] =
+      v2ToV1(p.children()(i).asInstanceOf[V2Predicate], lane)
+    def notEq(a: String, v: Any): Filter = Not(EqualTo(a, v))
     p.name() match {
-      case "AND" =>
-        val a = p.asInstanceOf[V2And]
-        stampToV1(a.left()).zip(stampToV1(a.right())).map { case (l, r) => And(l, r) }
-      case "OR" =>
-        val o = p.asInstanceOf[V2Or]
-        stampToV1(o.left()).zip(stampToV1(o.right())).map { case (l, r) => Or(l, r) }
-      case "NOT" => stampToV1(p.asInstanceOf[V2Not].child()).map(Not)
-      // <=> against a non-null literal differs from = only on a NULL
-      // stamp, where both evaluate to not-selected under evalStamp's
-      // top-level null collapse — safe to share the translation
-      case "=" | "<=>" => binary(v => EqualTo(A, v), v => EqualTo(A, v))
-      case ">" => binary(v => GreaterThan(A, v), v => LessThan(A, v))
-      case ">=" => binary(v => GreaterThanOrEqual(A, v), v => LessThanOrEqual(A, v))
-      case "<" => binary(v => LessThan(A, v), v => GreaterThan(A, v))
-      case "<=" => binary(v => LessThanOrEqual(A, v), v => GreaterThanOrEqual(A, v))
-      case "IN" =>
-        val c = p.children()
-        if (c.length < 2 || !isStamp(c(0))) None
-        else {
-          val vs = c.drop(1).map(lit)
-          if (vs.exists(_.isEmpty)) None
-          else Some(In(A, vs.map(v => Long.box(v.get): Any)))
+      case "AND" => (child(0), child(1)) match {
+        case (Some(l), Some(r)) => Some(And(l, r))
+        case (l, r) if lane.hint => l.orElse(r)
+        case _ => None
+      }
+      case "OR" => child(0).zip(child(1)).map { case (l, r) => Or(l, r) }
+      case "NOT" if !lane.hint => child(0).map(Not)
+      // `<=>` against a non-null literal differs from = only on a NULL
+      // row, which neither selects
+      case "=" | "<=>" => binary(EqualTo, EqualTo)
+      // `<>` only over non-nullable columns: on `_pub_stamp` it stays residual
+      case "<>" if lane.cols.forall(!_.nullable) => binary(notEq, notEq)
+      case ">" => binary(GreaterThan, LessThan)
+      case ">=" => binary(GreaterThanOrEqual, LessThanOrEqual)
+      case "<" => binary(LessThan, GreaterThan)
+      case "<=" => binary(LessThanOrEqual, GreaterThanOrEqual)
+      case "IN" => p.children().toSeq match {
+        case c +: vs => colOf(c).flatMap { f =>
+          val xs = vs.map(litOf(_, f))
+          if (xs.forall(_.isDefined)) Some(In(f.name, xs.flatten.toArray)) else None
         }
-      case "IS_NULL" =>
-        p.children() match { case Array(e) if isStamp(e) => Some(IsNull(A)); case _ => None }
-      case "IS_NOT_NULL" =>
-        p.children() match { case Array(e) if isStamp(e) => Some(IsNotNull(A)); case _ => None }
+        case _ => None
+      }
+      case "IS_NULL" => p.children() match {
+        case Array(e) => colOf(e).map(c => IsNull(c.name)); case _ => None
+      }
+      case "IS_NOT_NULL" => p.children() match {
+        case Array(e) => colOf(e).map(c => IsNotNull(c.name)); case _ => None
+      }
+      case "STARTS_WITH" => string(StringStartsWith)
+      case "ENDS_WITH" => string(StringEndsWith)
+      case "CONTAINS" => string(StringContains)
       case _ => None
     }
   }
@@ -4668,8 +4521,8 @@ object GraftLog {
       case _ => None
     }
     case Not(c) => evalStamp(c, s).map(!_)
-    // stampToV1 is the only constructor of these trees — an unknown shape
-    // here is a code bug, and silence would mean wrong pruning
+    // the stamp lane builds only these shapes — an unknown one here is a
+    // code bug, and silence would mean wrong pruning
     case other => throw new IllegalStateException(s"unexpected stamp filter $other")
   }
 

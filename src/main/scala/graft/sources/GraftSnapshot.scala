@@ -1009,7 +1009,11 @@ private[sources] object GraftSnapshotIO {
     * [[GraftPremise]] proved every removed data file live at the swap, so
     * a failed unlink is an error. A last-wins commit (truncate,
     * overwrite, a streaming epoch) may find its victims already unlinked
-    * by a racing truncate, so its unlinks are lenient. */
+    * by a racing truncate, so its unlinks are lenient.
+    *
+    * Main-line commits only: a branch commit ([[commitToBranch]]) swaps
+    * no main manifest and removes nothing, so it has no tail; branch
+    * files reach main through [[publishBranch]]. */
   def retire(path: String, committed: GraftCommitted, ret: GraftRetention): Unit = {
     if (!ret.keepVictims) {
       (committed.base.fileNames -- committed.result.fileNames).foreach { n =>

@@ -131,6 +131,26 @@ class CommitProtocolSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(steps.result().length == 7)
   }
 
+  test("a merge-on-read DELETE past the unlink grace sweeps retired files, as an append does") {
+    val dir = create("cp_grace",
+      "'delete.mode' = 'merge-on-read', 'snapshot.unlink.grace.ms' = '400'")
+    val t = "gcp.cp_grace"
+    def compactThenAge(): Unit = {
+      spark.sql("CALL gcp.system.compact(table => 'cp_grace', target_mb => 64)").collect()
+      assert(onDisk(dir) != referenced(dir), "compact retired nothing within the grace")
+      Thread.sleep(700) // age the retirements past the 400 ms grace
+    }
+    events.orderBy("event_id").repartition(3).writeTo(t).append()
+    compactThenAge()
+    spark.sql(s"DELETE FROM $t WHERE event_type = 'click'")
+    assert(GraftSnapshotTestHook.deleteFiles(dir).nonEmpty,
+      "the DELETE published no position delete")
+    exact(dir)("merge-on-read DELETE")
+    compactThenAge()
+    events.orderBy("event_id").limit(5).writeTo(t).append()
+    exact(dir)("append")
+  }
+
   test("a retaining table keeps every replaced file on disk until expire_snapshots") {
     val dir = create("cp_retain",
       "'merge.mode' = 'merge-on-read', 'snapshot.retain' = 'true'")

@@ -136,7 +136,8 @@ class ContractSpec extends SparkTestBase {
   private val envKnobs = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS",
     "GRAFT_BENCH_REF")
 
-  test("env-knob inventory: src/main reads exactly the documented variables") {
+  /** Every `.scala` file under src/main. */
+  private def mainSources(): List[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main")
     val files = {
@@ -145,6 +146,11 @@ class ContractSpec extends SparkTestBase {
       finally s.close()
     }
     assert(files.nonEmpty, s"no .scala file under ${root.toAbsolutePath}")
+    files
+  }
+
+  test("env-knob inventory: src/main reads exactly the documented variables") {
+    val files = mainSources()
     val read = """(?:sys\.env|System\.getenv)""".r
     val keyed = """(?:sys\.env(?:\.getOrElse|\.get|\.contains|\.apply)?|System\.getenv)\(\s*"([A-Za-z0-9_]+)"""".r
     val found = files.flatMap { f =>
@@ -162,6 +168,19 @@ class ContractSpec extends SparkTestBase {
     assert(undocumented.isEmpty && unread.isEmpty,
       s"env knobs read but not in the inventory: ${undocumented.toSeq.sorted.mkString(", ")}; " +
         s"in the inventory but never read: ${unread.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("one predicate lane: src/main implements no v1 filter SPI") {
+    // every predicate enters a graftlog scan as a V2 Predicate and goes
+    // through GraftLog.v2ToV1; the v1 SPIs would bring back Spark's own
+    // second translation in front of it
+    val v1 = """SupportsPushDownFilters|SupportsRuntimeFiltering\b""".r
+    val hits = mainSources().flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f),
+        java.nio.charset.StandardCharsets.UTF_8)
+      v1.findAllIn(text).map(m => s"$f: $m")
+    }
+    assert(hits.isEmpty, s"v1 filter SPI named in src/main:\n${hits.mkString("\n")}")
   }
 
   test("every oracle key has a query") {

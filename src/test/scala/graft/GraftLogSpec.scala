@@ -58,7 +58,7 @@ class GraftLogSpec extends SparkTestBase with BeforeAndAfterAll {
   }
 
   test("a residual (unsupported) filter is NOT pushed and Spark evaluates it post-scan") {
-    // A function call over a column (UPPER) has no v2ToV1 translation ->
+    // A function call over a column (UPPER) fits no lane of v2ToV1 ->
     // must come back as residual; the pushed one (value bound) stays in
     // the scan. (endsWith was this test's residual example through r14 —
     // round 15's V2 Predicate pushdown promoted it to pushed, so the
@@ -115,9 +115,9 @@ class GraftLogSpec extends SparkTestBase with BeforeAndAfterAll {
   test("IsNotNull on the non-nullable schema is eliminated BEFORE the source (no filter at all)") {
     // The format encodes no nulls and the schema says so (nullable=false
     // on every field), so Catalyst constant-folds isNotNull away upstream:
-    // the scan sees pushed=[] and no Filter survives anywhere. (The
-    // supportedFilter IsNotNull case still matters for engines/sessions
-    // that hand the source a nullable view of the schema.)
+    // the scan sees pushed=[] and no Filter survives anywhere. (v2ToV1's
+    // IS_NOT_NULL case still matters for engines/sessions that hand the
+    // source a nullable view of the schema.)
     val df = scan().filter(col("user_id").isNotNull)
     val plan = df.queryExecution.executedPlan.toString
     val scanLine = plan.split("\n").find(_.contains("GraftLogScan")).get
@@ -405,7 +405,7 @@ class GraftLogSpec extends SparkTestBase with BeforeAndAfterAll {
 
   test("runtime filtering reaches the READER: scan emits only join-live rows") {
     // a selective dim (one customer segment): without
-    // SupportsRuntimeFiltering the scan emits every record and the join
+    // SupportsRuntimeV2Filtering the scan emits every record and the join
     // drops the rest; with it the BatchScan line carries the dynamic IN
     // and the reader's emitted-row metric collapses to just the matching
     // users' rows. The dim MUST carry a selective predicate — Spark's

@@ -581,7 +581,7 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("graftlog DSv2 runtime filter: the broadcast dim's IN-set lands on the BatchScan") {
-    // SupportsRuntimeFiltering (round 14): the join's build side feeds a
+    // SupportsRuntimeV2Filtering (round 14): the join's build side feeds a
     // dynamic IN back into the scan, which drops non-matching records in
     // the reader (GraftLogSpec pins the emitted-row collapse); here the
     // injection itself, reusing the join's own broadcast.
