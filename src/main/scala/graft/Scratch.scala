@@ -56,12 +56,13 @@ object Scratch {
   /** Fresh run-unique STREAMING-CHECKPOINT dir path, on tmpfs (/dev/shm)
     * when available. Micro-batch progress (offset/commit WAL) and state
     * store deltas fsync into the checkpoint every batch — measured ~180ms
-    * of a ~1.3s fixture-scale micro-batch (round 10). For the
-    * memory-sink bench/verify streams the checkpoint is EPHEMERAL BY
-    * SEMANTICS (the query dies with the run), so a RAM-backed dir is the
-    * honest medium; production streams pass a durable checkpointLocation
-    * and never come through here. Registered for deletion like any
-    * scratch dir. */
+    * of a ~1.3s fixture-scale micro-batch (round 10). The caller is
+    * [[graft.streaming.Streams.drain]]: its default checkpoint, or one a
+    * query mints here to resume several drains on. These checkpoints are
+    * EPHEMERAL BY SEMANTICS (the query dies with the run), so a RAM-backed
+    * dir is the honest medium; production streams pass a durable
+    * checkpointLocation and never come through here. Registered for
+    * deletion like any scratch dir. */
   def streamCkptDir(prefix: String): String = {
     val shm = new java.io.File("/dev/shm")
     val base = if (shm.isDirectory && shm.canWrite) "/dev/shm"

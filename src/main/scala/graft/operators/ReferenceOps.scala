@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import scala.annotation.unused
 
 /** Reference-derived operator queries (SURVEY.md §2.1-§2.9): every
   * relational operation the reference performs, re-expressed Spark-first and
@@ -21,7 +22,7 @@ object ReferenceOps extends QueryModule {
   // (the reference uses today(); a pinned end keeps the oracle stable).
   // Scale: generated on the driver as a single-row explode — zero scan.
   // ------------------------------------------------------------------
-  def windowGen(s: SparkSession, dir: String): DataFrame =
+  def windowGen(s: SparkSession, @unused dir: String): DataFrame =
     s.range(1)
       .select(explode(sequence(
         to_date(lit("2020-01-01")),

@@ -2,8 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.Scratch
 import graft.sources.{Formats, GraftFs, Tables}
+import graft.streaming.Streams
 
 /** [EXT] Storage-layout operators (SURVEY.md §2.1-§2.2 at scale, §4):
   * format roundtrips beyond CSV, date/key-partitioned layouts that readers
@@ -1060,20 +1062,14 @@ object StorageOps extends QueryModule {
   // doubles chunk A and fails this oracle's row count and hash.
   // ------------------------------------------------------------------
   def dsv2StreamCompact(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val landing = scratch("graft_stream_compact")
     val out = scratch("graft_stream_compact_out")
     val ckpt = graft.Scratch.streamCkptDir("graft_stream_compact_ckpt")
     val ev = Tables.load(s, dir, "events")
       .filter(col("event_id") < 30000)
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-    def drain(): Unit = {
-      val q = s.readStream.format("graftlog").load(landing)
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    def drain(): Unit = Streams.drain(s.readStream.format("graftlog").load(landing),
+      Streams.Sink.Parquet(out), Trigger.AvailableNow(), ckpt = Some(ckpt))
     ev.filter(col("event_id") % 2 === 0)
       .write.format("graftlog").mode("append").save(landing)
     drain()
@@ -1089,6 +1085,16 @@ object StorageOps extends QueryModule {
   val dsv2StreamCompactSql: String =
     """SELECT event_id, user_id, value, event_type FROM events
       |WHERE event_id < 30000 ORDER BY event_id""".stripMargin
+
+  /** One AvailableNow drain of the graftlog landing `src`, two files per
+    * trigger, into the upsert sink at `sink` keyed on `key`, resuming on
+    * the caller's checkpoint `ckpt` (each call picks up only the files
+    * that landed since the last one). */
+  private def upsertDrain(s: SparkSession, src: String, sink: String, key: String,
+      ckpt: String): Unit =
+    Streams.drain(s.readStream.format("graftlog").option("maxFilesPerTrigger", 2).load(src),
+      Streams.Sink.GraftLog(sink, Map("upsertKey" -> key)), Trigger.AvailableNow(),
+      ckpt = Some(ckpt))
 
   // ------------------------------------------------------------------
   // NATIVE streaming upsert sink (round 18, r17 verdict #2): the keyed
@@ -1107,22 +1113,13 @@ object StorageOps extends QueryModule {
   // identically).
   // ------------------------------------------------------------------
   def dsv2StreamUpsert(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val src = scratch("graft_upsert_src")
     val sink = scratch("graft_upsert_sink")
     val ckpt = graft.Scratch.streamCkptDir("graft_upsert_ckpt")
     val ev = Tables.load(s, dir, "events")
       .filter(col("event_id") < 30000)
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-    def drain(): Unit = {
-      val q = s.readStream.format("graftlog")
-        .option("maxFilesPerTrigger", 2).load(src)
-        .writeStream.format("graftlog")
-        .option("upsertKey", "event_id")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start(sink)
-      q.awaitTermination()
-    }
+    def drain(): Unit = upsertDrain(s, src, sink, "event_id", ckpt)
     ev.repartition(3).write.format("graftlog").mode("append").save(src)
     drain() // two epochs (3 files at maxFilesPerTrigger=2): inserts
     // one correction epoch with INTRA-EPOCH duplicate keys (round 19):
@@ -1166,21 +1163,12 @@ object StorageOps extends QueryModule {
   // the canonical tuple encode) before the read.
   // ------------------------------------------------------------------
   def dsv2StreamUpsertCk(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val src = scratch("graft_upsert_ck_src")
     val sink = scratch("graft_upsert_ck_sink")
     val ckpt = graft.Scratch.streamCkptDir("graft_upsert_ck_ckpt")
     val ev = Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-    def drain(): Unit = {
-      val q = s.readStream.format("graftlog")
-        .option("maxFilesPerTrigger", 2).load(src)
-        .writeStream.format("graftlog")
-        .option("upsertKey", "user_id,event_type")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start(sink)
-      q.awaitTermination()
-    }
+    def drain(): Unit = upsertDrain(s, src, sink, "user_id,event_type", ckpt)
     ev.repartition(1).sortWithinPartitions(col("event_id"))
       .write.format("graftlog").mode("append").save(src)
     drain() // keep-last leaves the max-event_id row per tuple
@@ -1579,12 +1567,8 @@ object StorageOps extends QueryModule {
       p
     }
     val out = scratch("graft_log_sink_out")
-    val q = s.readStream.format("graftlog").load(in)
-      .writeStream.format("graftlog")
-      .option("checkpointLocation", graft.Scratch.streamCkptDir("gl_sink_ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start(out)
-    q.awaitTermination()
+    Streams.drain(s.readStream.format("graftlog").load(in), Streams.Sink.GraftLog(out),
+      Trigger.AvailableNow())
     s.read.format("graftlog").load(out)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -1625,23 +1609,13 @@ object StorageOps extends QueryModule {
       p
     }
     val out = scratch("graft_log_complete_out")
-    // stateful stream: the house low-shuffle-partition discipline (every
-    // epoch pays one state-store fsync per shuffle partition; 32 of them
-    // per micro-batch is pure checkpoint tax at fixture scale)
-    val q = graft.streaming.Streams.withStreamShuffle(s) {
-      s.readStream.format("graftlog")
-        .option("maxFilesPerTrigger", "1").load(in)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("event_id"), min(col("user_id")).as("user_id"),
-          max(col("value")).as("value"))
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .writeStream.format("graftlog")
-        .option("checkpointLocation", graft.Scratch.streamCkptDir("gl_complete_ckpt"))
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start(out)
-    }
-    q.awaitTermination()
+    val agg = s.readStream.format("graftlog")
+      .option("maxFilesPerTrigger", "1").load(in)
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("event_id"), min(col("user_id")).as("user_id"),
+        max(col("value")).as("value"))
+      .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
+    Streams.drain(agg, Streams.Sink.GraftLog(out), Trigger.AvailableNow(), OutputMode.Complete())
     s.read.format("graftlog").load(out)
       .select(col("event_type"), col("event_id").as("n"),
         col("user_id").as("min_user"), col("value").as("max_value"))
@@ -1677,9 +1651,7 @@ object StorageOps extends QueryModule {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,4)")).cast("double").as("total_value"))
-    graft.streaming.Streams.runToCompletion(agg,
-      s"dsv2src_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      org.apache.spark.sql.streaming.OutputMode.Complete())
+    Streams.runToCompletion(agg, OutputMode.Complete())
       .orderBy(col("event_type"))
   }
 
@@ -1702,13 +1674,24 @@ object StorageOps extends QueryModule {
   // projected away for the oracle.
   // ------------------------------------------------------------------
   def dsv2Changes(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+    // the timed operator is the changelog DERIVATION itself (readChanges
+    // over the manifest chain), which re-runs every execution
+    val (sink, s1, s2) = changesFixture(s, dir)
+    graft.sources.GraftLog.readChanges(s, sink, s1, s2)
+      .select(col("event_id"), col("user_id"), col("value"),
+        col("event_type"), col("_change_type"))
+      .orderBy(col("_change_type"), col("event_id"))
+  }
+
+  /** The standing table both changelog queries read, a staged input: the
+    * upsert-stream ingest history of the events slice into the
+    * snapshot-retaining catalog table `cdf_ev` (baseline wave, a correction
+    * wave for every fifth key, mid-window compaction). Returns the table
+    * path and the window's two snapshot stamps. */
+  private def changesFixture(s: SparkSession, dir: String)
+      : (String, java.lang.Long, java.lang.Long) = {
     val wh = catalog(s)
-    // fixture = the upsert-stream ingest history (baseline wave, correction
-    // wave, mid-window compaction) — the standing table whose window is
-    // being read; the timed operator is the changelog DERIVATION itself
-    // (readChanges over the manifest chain), which re-runs every execution
-    val (sink, s1, s2) = Scratch.staged(s, dir, "cdf_ev") {
+    Scratch.staged(s, dir, "cdf_ev") {
       s.sql("DROP TABLE IF EXISTS graftq.cdf_ev")
       s.sql("CREATE TABLE graftq.cdf_ev (event_id BIGINT, user_id BIGINT, " +
         "value DOUBLE, event_type STRING) USING graftlog " +
@@ -1719,32 +1702,20 @@ object StorageOps extends QueryModule {
       val ev = Tables.load(s, dir, "events")
         .filter(col("event_id") < 30000)
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-      def drain(): Unit = {
-        val q = s.readStream.format("graftlog")
-          .option("maxFilesPerTrigger", 2).load(src)
-          .writeStream.format("graftlog")
-          .option("upsertKey", "event_id")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start(snk)
-        q.awaitTermination()
-      }
       ev.repartition(2).write.format("graftlog").mode("append").save(src)
-      drain() // wave 1: the baseline snapshot
+      upsertDrain(s, src, snk, "event_id", ckpt) // wave 1: the baseline snapshot
       val a = graft.sources.GraftLog.latestSnapshotStamp(snk)
       ev.filter(col("event_id") % 5 === 0)
         .withColumn("value", col("value") * 2)
         .withColumn("event_type", lit("fix"))
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
         .repartition(1).write.format("graftlog").mode("append").save(src)
-      drain() // wave 2: keyed corrections (the change window's content)
+      // wave 2: keyed corrections (the change window's content)
+      upsertDrain(s, src, snk, "event_id", ckpt)
       s.sql("CALL graftq.system.compact(table => 'cdf_ev')").collect()
       val b = graft.sources.GraftLog.latestSnapshotStamp(snk)
       (snk, java.lang.Long.valueOf(a), java.lang.Long.valueOf(b))
     }
-    graft.sources.GraftLog.readChanges(s, sink, s1, s2)
-      .select(col("event_id"), col("user_id"), col("value"),
-        col("event_type"), col("_change_type"))
-      .orderBy(col("_change_type"), col("event_id"))
   }
 
   val dsv2ChangesSql: String =
@@ -1769,50 +1740,13 @@ object StorageOps extends QueryModule {
   // the stream sees through the rewrite like the batch surface.
   // ------------------------------------------------------------------
   def dsv2StreamChanges(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val wh = catalog(s)
-    // fixture = the same standing-table history as scan_dsv2_changes; the
-    // timed operator is the changelog STREAM (fresh checkpoint + memory
-    // sink per execution via runToCompletion)
-    val (sink, s1) = Scratch.staged(s, dir, "cdfs_ev") {
-      s.sql("DROP TABLE IF EXISTS graftq.cdfs_ev")
-      s.sql("CREATE TABLE graftq.cdfs_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog " +
-        "TBLPROPERTIES ('snapshot.retain'='true')")
-      val snk = wh + "/cdfs_ev"
-      val src = scratch("graft_cdfs_src")
-      val ckpt = graft.Scratch.streamCkptDir("graft_cdfs_ckpt")
-      val ev = Tables.load(s, dir, "events")
-        .filter(col("event_id") < 30000)
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-      def drain(): Unit = {
-        val q = s.readStream.format("graftlog")
-          .option("maxFilesPerTrigger", 2).load(src)
-          .writeStream.format("graftlog")
-          .option("upsertKey", "event_id")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start(snk)
-        q.awaitTermination()
-      }
-      ev.repartition(2).write.format("graftlog").mode("append").save(src)
-      drain() // baseline
-      val a = graft.sources.GraftLog.latestSnapshotStamp(snk)
-      ev.filter(col("event_id") % 5 === 0)
-        .withColumn("value", col("value") * 2)
-        .withColumn("event_type", lit("fix"))
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .repartition(1).write.format("graftlog").mode("append").save(src)
-      drain() // the window's corrections
-      s.sql("CALL graftq.system.compact(table => 'cdfs_ev')").collect()
-      (snk, java.lang.Long.valueOf(a))
-    }
+    // the standing table is scan_dsv2_changes' fixture; the timed operator
+    // is the changelog STREAM (fresh checkpoint + memory sink per execution)
+    val (sink, s1, _) = changesFixture(s, dir)
     val changes = s.readStream.format("graftlog")
       .option("readChanges", "true").option("changesFrom", s1)
       .load(sink)
-    graft.streaming.Streams.runToCompletion(changes,
-      s"cdfs_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      org.apache.spark.sql.streaming.OutputMode.Append(),
-      Some(Trigger.AvailableNow()))
+    Streams.runToCompletion(changes, OutputMode.Append(), Trigger.AvailableNow())
       .select(col("event_id"), col("user_id"), col("value"),
         col("event_type"), col("_change_type"))
       .orderBy(col("_change_type"), col("event_id"))
@@ -1841,7 +1775,6 @@ object StorageOps extends QueryModule {
   // and a fresh row born and killed in-window appears on neither side).
   // ------------------------------------------------------------------
   def dsv2ChangesU(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val wh = catalog(s)
     // fixture = the standing-table history (baseline, correction + insert
     // waves, MoR DELETE); the timed operator is the typed changelog
@@ -1858,15 +1791,7 @@ object StorageOps extends QueryModule {
       val ev = Tables.load(s, dir, "events")
         .filter(col("event_id") < 30000)
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-      def drain(): Unit = {
-        val q = s.readStream.format("graftlog")
-          .option("maxFilesPerTrigger", 2).load(src)
-          .writeStream.format("graftlog")
-          .option("upsertKey", "event_id")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start(snk)
-        q.awaitTermination()
-      }
+      def drain(): Unit = upsertDrain(s, src, snk, "event_id", ckpt)
       ev.repartition(2).write.format("graftlog").mode("append").save(src)
       drain() // baseline
       val a = graft.sources.GraftLog.latestSnapshotStamp(snk)

@@ -2,7 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.sources.Tables
+import graft.streaming.Streams
+import scala.annotation.unused
 
 /** [EXT] Event-time window shapes (SURVEY.md §2.10 ST1/ST2) run in BATCH
   * mode over `events` — the same `window`/`session_window` expressions the
@@ -184,17 +187,14 @@ object StreamShapes extends QueryModule {
     }
 
   private def dedupedStream(s: SparkSession, landing: String): DataFrame =
-    graft.streaming.Streams.dedupStream(s.readStream
+    Streams.dedupStream(s.readStream
       .schema(org.apache.spark.sql.types.StructType(
         Tables.events.filterNot(_.name == "props")))
       .parquet(landing))
 
   def streamDedup(s: SparkSession, dir: String): DataFrame = {
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value").map(col)
-    graft.streaming.Streams.runToCompletion(
-      dedupedStream(s, dedupLanding(s, dir, cols)),
-      s"dedup_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      org.apache.spark.sql.streaming.OutputMode.Append())
+    Streams.runToCompletion(dedupedStream(s, dedupLanding(s, dir, cols)), OutputMode.Append())
       .select(cols: _*)
       .orderBy(col("event_id"))
   }
@@ -210,11 +210,8 @@ object StreamShapes extends QueryModule {
   // ------------------------------------------------------------------
   def streamPaced(s: SparkSession, dir: String): DataFrame = {
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value").map(col)
-    graft.streaming.Streams.runToCompletion(
-      dedupedStream(s, dedupLanding(s, dir, cols)),
-      s"paced_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      org.apache.spark.sql.streaming.OutputMode.Append(),
-      Some(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds")))
+    Streams.runToCompletion(dedupedStream(s, dedupLanding(s, dir, cols)), OutputMode.Append(),
+      Trigger.ProcessingTime("100 milliseconds"))
       .select(cols: _*)
       .orderBy(col("event_id"))
   }
@@ -240,10 +237,8 @@ object StreamShapes extends QueryModule {
     // (round-11 advice; the fixed-schema Streams.eventsStream remains
     // spec-covered via StreamingSpec's canonical-schema landings).
     val stream = graft.sources.Tables.eventsStream(s, dir)
-    val snapshots = graft.streaming.Streams.runToCompletion(
-      graft.streaming.Streams.runningUserState(stream).toDF(),
-      s"ustate_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      org.apache.spark.sql.streaming.OutputMode.Update())
+    val snapshots =
+      Streams.runToCompletion(Streams.runningUserState(stream).toDF(), OutputMode.Update())
     val w = Window.partitionBy(col("user_id")).orderBy(col("n").desc)
     snapshots
       .withColumn("rn", row_number().over(w))
@@ -272,10 +267,7 @@ object StreamShapes extends QueryModule {
     val snapshots =
       try {
         val stream = boundedStream(s, dir)
-        graft.streaming.Streams.runToCompletion(
-          graft.streaming.Streams.runningUserStateTws(stream).toDF(),
-          s"ustate_tws_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-          org.apache.spark.sql.streaming.OutputMode.Update())
+        Streams.runToCompletion(Streams.runningUserStateTws(stream).toDF(), OutputMode.Update())
       } finally prev match {
         case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
         case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -304,7 +296,6 @@ object StreamShapes extends QueryModule {
     * re-deriving the identical chunk parquet with two Spark write jobs
     * every execution. */
   def streamIncremental(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value").map(col)
     val (stage1, stage2) = graft.Scratch.staged(s, dir, "stream_incr_chunks") {
       val (a, b) = (graft.Scratch.dir("graft_incr_c1"), graft.Scratch.dir("graft_incr_c2"))
@@ -320,13 +311,9 @@ object StreamShapes extends QueryModule {
     val ckpt = graft.Scratch.streamCkptDir("graft_stream_incr_ckpt")
     val schema = org.apache.spark.sql.types.StructType(
       Tables.events.filterNot(_.name == "props"))
-    def drainOnce(): Unit = {
-      val q = s.readStream.schema(schema).parquet(landing)
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    def drainOnce(): Unit =
+      Streams.drain(s.readStream.schema(schema).parquet(landing),
+        Streams.Sink.Parquet(out), Trigger.AvailableNow(), ckpt = Some(ckpt))
     arrive(stage1, landing, "c1") // chunk 1 lands
     drainOnce()
     arrive(stage2, landing, "c2") // chunk 2 lands
@@ -395,15 +382,10 @@ object StreamShapes extends QueryModule {
     // A stream-stream join opens FOUR state stores per shuffle partition
     // (left/right x key-index layouts); at the default partition count the
     // store setup dwarfs the actual matching on any bounded batch. The
-    // stateful width comes from Streams.streamShufflePartitions (4), set
-    // by runToCompletion at start(); on a real cluster this knob is
+    // stateful width is Streams.streamShufflePartitions (4), scoped by
+    // Streams.drain around start(); on a real cluster this knob is
     // sized to state volume, not cores.
-    // stateful width is governed by Streams.streamShufflePartitions via
-    // runToCompletion's withStreamShuffle scope (a local conf set here
-    // would be overridden by it before start() — round-10 review)
-    graft.streaming.Streams.runToCompletion(joined,
-      s"ssjoin_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      org.apache.spark.sql.streaming.OutputMode.Append())
+    Streams.runToCompletion(joined, OutputMode.Append())
       .select(col("a_id"), col("b_id"), col("user_id"))
       .orderBy(col("a_id"), col("b_id"))
   }
@@ -439,9 +421,7 @@ object StreamShapes extends QueryModule {
       col("user_id") === col("b_user") &&
         col("b_ts") >= col("a_ts") &&
         col("b_ts") <= col("a_ts") + expr("interval 2 hours"))
-    graft.streaming.Streams.runToCompletion(joined,
-      s"ssjoinf_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      org.apache.spark.sql.streaming.OutputMode.Append())
+    Streams.runToCompletion(joined, OutputMode.Append())
       .select(col("a_id"), col("b_id"), col("user_id"))
       .orderBy(col("a_id"), col("b_id"))
   }
@@ -481,12 +461,9 @@ object StreamShapes extends QueryModule {
         col("b_ts") >= col("a_ts") &&
         col("b_ts") <= col("a_ts") + expr("interval 2 hours"),
       "leftOuter")
-    // stateful width is governed by Streams.streamShufflePartitions via
-    // runToCompletion's withStreamShuffle scope (a local conf set here
-    // would be overridden by it before start() — round-10 review)
-    graft.streaming.Streams.runToCompletion(joined,
-      s"ssjoino_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      org.apache.spark.sql.streaming.OutputMode.Append())
+    // stateful width is Streams.streamShufflePartitions, scoped by
+    // Streams.drain (a local conf set here would be overridden by it)
+    Streams.runToCompletion(joined, OutputMode.Append())
       .select(col("a_id"), col("b_id"), col("user_id"))
       .orderBy(col("a_id"), col("b_id").asc_nulls_first)
   }
@@ -658,10 +635,7 @@ object StreamShapes extends QueryModule {
       .schema(org.apache.spark.sql.types.StructType(
         Tables.events.filterNot(_.name == "props")))
       .parquet(sessionLanding(s, dir))
-    graft.streaming.Streams.runToCompletion(
-      graft.streaming.Streams.sessionizeStream(in).toDF(),
-      s"sess_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      org.apache.spark.sql.streaming.OutputMode.Append())
+    Streams.runToCompletion(Streams.sessionizeStream(in).toDF(), OutputMode.Append())
       .orderBy(col("user_id"), col("session_start"))
   }
 
@@ -756,9 +730,7 @@ object StreamShapes extends QueryModule {
         sum(col("value").cast("decimal(18,4)")).cast("double").as("total_value"))
       .select(col("window.start").as("window_start"), col("window.end").as("window_end"),
         col("event_type"), col("n"), col("total_value"))
-    graft.streaming.Streams.runToCompletion(agg,
-      s"tumb_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      org.apache.spark.sql.streaming.OutputMode.Complete())
+    Streams.runToCompletion(agg, OutputMode.Complete())
       .orderBy(col("window_start"), col("event_type"))
   }
 
@@ -781,9 +753,7 @@ object StreamShapes extends QueryModule {
         sum(col("value").cast("decimal(18,4)")).cast("double").as("total_value"))
       .select(col("window.start").as("window_start"), col("window.end").as("window_end"),
         col("event_type"), col("n"), col("total_value"))
-    graft.streaming.Streams.runToCompletion(agg,
-      s"tumbf_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      org.apache.spark.sql.streaming.OutputMode.Complete())
+    Streams.runToCompletion(agg, OutputMode.Complete())
       .orderBy(col("window_start"), col("event_type"))
   }
 
@@ -796,9 +766,7 @@ object StreamShapes extends QueryModule {
       .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("window_start"), col("event_type"), col("n"))
-    graft.streaming.Streams.runToCompletion(agg,
-      s"slide_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      org.apache.spark.sql.streaming.OutputMode.Complete())
+    Streams.runToCompletion(agg, OutputMode.Complete())
       .orderBy(col("window_start"), col("event_type"))
   }
 
@@ -821,9 +789,7 @@ object StreamShapes extends QueryModule {
         sum(col("value").cast("decimal(18,4)")).cast("double").as("total_value"))
       .select(col("window.start").as("window_start"),
         col("event_type"), col("n"), col("total_value"))
-    graft.streaming.Streams.runToCompletion(agg,
-      s"tumba_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      org.apache.spark.sql.streaming.OutputMode.Append())
+    Streams.runToCompletion(agg, OutputMode.Append())
       .orderBy(col("window_start"), col("event_type"))
   }
 
@@ -862,9 +828,7 @@ object StreamShapes extends QueryModule {
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("n"), col("total_value"))
-    graft.streaming.Streams.runToCompletion(agg,
-      s"sessa_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      org.apache.spark.sql.streaming.OutputMode.Append())
+    Streams.runToCompletion(agg, OutputMode.Append())
       .orderBy(col("user_id"), col("session_start"))
   }
 
@@ -979,14 +943,16 @@ object StreamShapes extends QueryModule {
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,4)")).cast("decimal(38,4)").as("total_value"),
         max(struct(col("ts"), col("event_id"))).as("last"))
-    val writer = s.readStream
+    val in = s.readStream
       .schema(org.apache.spark.sql.types.StructType(
         Tables.events.filter(f => Seq("user_id", "ts", "event_id", "value").contains(f.name))))
       .option("maxFilesPerTrigger", 3)
       .parquet(landing)
-      .writeStream
-      .option("checkpointLocation", graft.Scratch.streamCkptDir("graft_stream_merge_ckpt"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    // Streams.drain's shuffle scope covers the whole drain, so the
+    // foreachBatch merge aggregations (per-batch BATCH jobs that read the
+    // conf at batch-planning time) run at the stream width too
+    Streams.drain(in, Streams.Sink.ForeachBatch {
+      (batch: DataFrame, _: Long) =>
         val d = delta(batch)
         val merged = cur match {
           case None => d
@@ -1001,15 +967,7 @@ object StreamShapes extends QueryModule {
         val next = s"$stateBase/gen_$gen"
         merged.write.mode("overwrite").parquet(next)
         cur = Some(next)
-        ()
-      }
-    // scope covers start AND drain: the foreachBatch merge aggregations
-    // are per-batch BATCH jobs that read the conf at batch-planning time
-    graft.streaming.Streams.withStreamShuffle(s) {
-      val q = writer.start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    })
     s.read.parquet(cur.getOrElse(sys.error("stream produced no batches")))
       .select(col("user_id"), col("n_events"),
         col("total_value").cast("double").as("total_value"),
@@ -1051,9 +1009,7 @@ object StreamShapes extends QueryModule {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(when(col("user_total") >= 100, 1L).otherwise(0L)).as("n_heavy_user_events"))
-    graft.streaming.Streams.runToCompletion(agg,
-      s"sstatic_${java.util.UUID.randomUUID().toString.replace("-", "")}",
-      org.apache.spark.sql.streaming.OutputMode.Complete())
+    Streams.runToCompletion(agg, OutputMode.Complete())
       .orderBy(col("event_type"))
   }
 
@@ -1084,8 +1040,7 @@ object StreamShapes extends QueryModule {
   private val RATE_ROWS = 1000L
   private val RATE_BATCHES = 3L  // minimum that still proves multi-batch unbounded consumption
 
-  def streamRateSource(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+  def streamRateSource(s: SparkSession, @unused dir: String): DataFrame = {
     val stream = s.readStream.format("rate-micro-batch")
       .option("rowsPerBatch", RATE_ROWS)
       .option("numPartitions", 2)
@@ -1095,33 +1050,13 @@ object StreamShapes extends QueryModule {
     val agg = stream.filter(col("value") < RATE_ROWS * RATE_BATCHES)
       .groupBy(pmod(col("value"), lit(10L)).as("bucket"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
+    // unbounded source: stop once the bounded value domain is fully
+    // committed — progress for batch b means b is done, and batches
+    // 0..RATE_BATCHES-1 carry exactly the values < RATE_ROWS*RATE_BATCHES
+    // that the filter keeps; later batches contribute nothing
     val name = s"rate_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    graft.streaming.Streams.withStreamShuffle(s) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-        .option("checkpointLocation", graft.Scratch.streamCkptDir("graft_rate_ckpt"))
-        .trigger(Trigger.ProcessingTime("50 milliseconds"))
-        .start()
-      // unbounded source: stop once the bounded value domain is fully
-      // committed — progress for batch b means b is done, and batches
-      // 0..RATE_BATCHES-1 carry exactly the values < RATE_ROWS*RATE_BATCHES
-      // that the filter keeps; later batches contribute nothing. Guard on
-      // query liveness + a deadline so a failed query surfaces its error
-      // instead of spinning this loop forever (round-10 review).
-      // try/finally (round-11 advice): if the deadline expires or the
-      // require fails while the query is still live, the 50ms-trigger
-      // UNBOUNDED rate stream must not keep running for the rest of the
-      // bench/verify session as a CPU-noise source.
-      try {
-        val deadline = System.nanoTime() + 120L * 1000L * 1000L * 1000L
-        while (q.isActive && System.nanoTime() < deadline &&
-            (q.lastProgress == null || q.lastProgress.batchId < RATE_BATCHES))
-          Thread.sleep(20)
-        q.exception.foreach(throw _)
-        require(q.lastProgress != null && q.lastProgress.batchId >= RATE_BATCHES,
-          s"rate-source drain did not reach batch $RATE_BATCHES within the deadline")
-      } finally if (q.isActive) q.stop()
-    }
+    Streams.drain(agg, Streams.Sink.Memory(name), Trigger.ProcessingTime("50 milliseconds"),
+      OutputMode.Complete(), stopAtBatch = Some(RATE_BATCHES))
     val out = s.table(name)
     s.catalog.dropTempView(name)
     out.orderBy(col("bucket"))

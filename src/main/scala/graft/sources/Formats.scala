@@ -54,12 +54,9 @@ object Formats {
       .json(path)
 
   /** K1: full-refresh overwrite sink (the reference's replace-the-range
-    * publish, trading212.py:136). */
-  def overwriteParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
-  /** K1 at scale: date/key-partitioned layout so readers prune partitions
-    * instead of scanning history (cf. the S6 365-day windows). */
+    * publish, trading212.py:136), with a date/key-partitioned layout so
+    * readers prune partitions instead of scanning history (cf. the S6
+    * 365-day windows). */
   def writePartitioned(df: DataFrame, path: String, partitionCols: String*): Unit =
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 }

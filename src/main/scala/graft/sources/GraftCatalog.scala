@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchNa
 import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, ProcedureCatalog, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
-import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference, Transform}
+import org.apache.spark.sql.connector.expressions.{Literal, NamedReference, Transform}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, FileInputStream, FileOutputStream}
+import java.io.{DataInputStream, DataOutputStream, EOFException}
 import java.util.{Map => JMap}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -1357,7 +1357,7 @@ private class GraftLogUpsertWriter(path: String, partitionId: Int,
       if (!composite) Array.empty
       else { val a = lastOrdT.keySet().toArray(new Array[String](0))
         java.util.Arrays.sort(a.asInstanceOf[Array[AnyRef]]); a }
-    def lastOf(buf: Array[Byte], len: Int): Long =
+    def lastOf(buf: Array[Byte]): Long =
       if (composite)
         lastOrdT.get(GraftLog.encTupleOfBuf(buf, keyOrds)).longValue()
       else if (strKey) {
@@ -1383,7 +1383,7 @@ private class GraftLogUpsertWriter(path: String, partitionId: Int,
               in.readFully(buf, 0, len)
               // the key sits at its fixed offset: event_id at 0, user_id
               // at 8, event_type length-prefixed at 24
-              if (lastOf(buf, len) == ordIn) {
+              if (lastOf(buf) == ordIn) {
                 os.writeInt(len); os.write(buf, 0, len)
                 GraftLog.trackRecordStats(buf, len, extra, st2)
               }
@@ -4469,8 +4469,9 @@ object GraftLog {
       // `<=>` against a non-null literal differs from = only on a NULL
       // row, which neither selects
       case "=" | "<=>" => binary(EqualTo, EqualTo)
-      // `<>` only over non-nullable columns: on `_pub_stamp` it stays residual
-      case "<>" if lane.cols.forall(!_.nullable) => binary(notEq, notEq)
+      // `<>` over non-nullable columns, and on `_pub_stamp`: evalStamp is
+      // three-valued, so a NULL (unstamped) file is not selected
+      case "<>" if lane == STAMP_LANE || lane.cols.forall(!_.nullable) => binary(notEq, notEq)
       case ">" => binary(GreaterThan, LessThan)
       case ">=" => binary(GreaterThanOrEqual, LessThanOrEqual)
       case "<" => binary(LessThan, GreaterThan)

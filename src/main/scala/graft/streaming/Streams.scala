@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.sources.Tables
 
 /** [EXT] Structured Streaming slice (SURVEY.md §2.9, §2.10 ST1-ST4).
@@ -17,6 +17,14 @@ import graft.sources.Tables
   * is per (window x key) and evicted past the watermark; dropDuplicates
   * keyed state is bounded by the watermark horizon. mapGroupsWithState
   * keeps one counter per user — the 100 TB-safe shape for per-entity state.
+  *
+  * One lifecycle: every bounded streaming run in the engine starts, waits
+  * and stops in [[drain]], which owns the checkpoint, the shuffle scope
+  * and the rethrow of a failed query's error. The scope is always taken,
+  * because a stateful operator, a key-clustered sink and a foreachBatch
+  * body all read the shuffle width while the query runs, and a drain
+  * with no shuffle never reads it. [[notificationDeleteSink]] is the one
+  * long-running query: its caller owns it.
   */
 object Streams {
 
@@ -167,7 +175,7 @@ object Streams {
     * notification is a no-op). The head-8 is a distributed TakeOrdered;
     * only 8 ids ever reach the driver. */
   def notificationDeleteSink(events: DataFrame, deleteAction: Seq[Long] => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : StreamingQuery =
     events.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val ids = batch.orderBy(col("ts").desc, col("event_id").desc)
@@ -196,47 +204,84 @@ object Streams {
   /** Run `body` with spark.sql.shuffle.partitions scoped to
     * [[streamShufflePartitions]] — the streaming query must START inside
     * the scope (the state-store layout is fixed at query start). */
-  def withStreamShuffle[A](s: org.apache.spark.sql.SparkSession)(body: => A): A = {
+  def withStreamShuffle[A](s: SparkSession)(body: => A): A = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions.toString)
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Drive a streaming DataFrame to completion over a static input dir and
-    * return the final result (memory sink; default-trigger micro-batches,
-    * or a caller-supplied trigger, e.g. ProcessingTime pacing — §2.9).
-    * processAllAvailable blocks until every available input is processed,
-    * so the final state is deterministic under any trigger. */
-  def runToCompletion(df: DataFrame, queryName: String, outputMode: OutputMode,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None): DataFrame = {
+  /** Where a [[drain]] writes. */
+  sealed trait Sink
+  object Sink {
+    /** In-memory table registered as the temp view `name`. */
+    final case class Memory(name: String) extends Sink
+    final case class Parquet(path: String) extends Sink
+    final case class GraftLog(path: String, options: Map[String, String] = Map.empty) extends Sink
+    final case class ForeachBatch(f: (DataFrame, Long) => Unit) extends Sink
+  }
+
+  /** Run a bounded streaming query to its end: the one start-wait-stop
+    * lifecycle for every bounded stream in the engine.
+    *
+    *  - The [[withStreamShuffle]] scope covers start, wait and stop, on
+    *    every drain: stateful operators fix their state-store layout at
+    *    start, a key-clustered sink (the graftlog upsert write) shuffles
+    *    at that width, and foreachBatch bodies plan their batch jobs
+    *    while the query runs. A stateless drain plans no shuffle, so the
+    *    scope costs it nothing.
+    *  - `ckpt`: a fresh tmpfs checkpoint ([[graft.Scratch.streamCkptDir]])
+    *    unless the caller passes its own, to resume on it.
+    *  - Wait rule: an `AvailableNow` query stops itself and is awaited;
+    *    any other trigger drains with `processAllAvailable`. `stopAtBatch`
+    *    is for an unbounded source: wait until batch `n` is committed
+    *    (120 s deadline) and fail if it never is.
+    *  - A failed query's exception is rethrown.
+    *
+    * On return and on throw the query is stopped. The stopped query is
+    * returned so callers can read its `recentProgress`. */
+  def drain(df: DataFrame, sink: Sink, trigger: Trigger = Trigger.ProcessingTime(0L),
+      mode: OutputMode = OutputMode.Append(), ckpt: Option[String] = None,
+      stopAtBatch: Option[Long] = None): StreamingQuery =
     withStreamShuffle(df.sparkSession) {
-      val ckptDir = graft.Scratch.streamCkptDir("graft_ckpt")
-      val writer = df.writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode(outputMode)
-        // tmpfs checkpoint: this query's checkpoint is ephemeral by
-        // construction (memory sink, drained to completion, then stopped);
-        // see Scratch.streamCkptDir for the measured fsync tax it removes
-        .option("checkpointLocation", ckptDir)
-      val q = trigger.fold(writer)(writer.trigger).start()
-      q.processAllAvailable()
-      q.stop()
+      val w = df.writeStream.outputMode(mode).trigger(trigger)
+        .option("checkpointLocation", ckpt.getOrElse(graft.Scratch.streamCkptDir("graft_ckpt")))
+      val q = sink match {
+        case Sink.Memory(name) => w.format("memory").queryName(name).start()
+        case Sink.Parquet(path) => w.format("parquet").start(path)
+        case Sink.GraftLog(path, opts) => w.format("graftlog").options(opts).start(path)
+        case Sink.ForeachBatch(f) => w.foreachBatch(f).start()
+      }
+      try {
+        stopAtBatch match {
+          case Some(n) =>
+            val deadline = System.nanoTime() + 120L * 1000L * 1000L * 1000L
+            while (q.isActive && System.nanoTime() < deadline &&
+                (q.lastProgress == null || q.lastProgress.batchId < n))
+              Thread.sleep(20)
+            q.exception.foreach(throw _)
+            require(q.lastProgress != null && q.lastProgress.batchId >= n,
+              s"stream did not reach batch $n within the deadline")
+          case None if trigger == Trigger.AvailableNow() => q.awaitTermination()
+          case None => q.processAllAvailable()
+        }
+        q
+      } finally q.stop()
     }
-    // Return a SELF-CONTAINED handle and drop the UUID-named temp view
-    // immediately. Round-9 advice: the old lazy `table(queryName)` handle
-    // depended on a caller convention ("purge only between top-level
-    // queries") — a composition holding the handle across a purge failed
-    // at runtime with a missing-view error. `table()` analyzes EAGERLY,
-    // so the returned Dataset's plan already contains the resolved memory
-    // sink relation (not the view name): dropping the view right here
-    // costs nothing, copies nothing, and the handle stays valid for the
-    // rest of the session while the view-accumulation hazard is gone.
-    // (Memory sinks are a test/bench surface; production streams write
-    // real sinks — see streamIncremental.)
+
+  /** Drain a streaming DataFrame into a memory sink under a fresh query
+    * name and return the final result (default-trigger micro-batches, or
+    * a caller-supplied trigger, e.g. ProcessingTime pacing — §2.9). */
+  def runToCompletion(df: DataFrame, outputMode: OutputMode,
+      trigger: Trigger = Trigger.ProcessingTime(0L)): DataFrame = {
+    val name = s"graft_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    drain(df, Sink.Memory(name), trigger, outputMode)
+    // Return a SELF-CONTAINED handle and drop the temp view immediately:
+    // `table()` analyzes EAGERLY, so the returned Dataset's plan already
+    // holds the resolved memory-sink relation, not the view name, and
+    // stays valid for the rest of the session across a purge.
     val s = df.sparkSession
-    val out = s.table(queryName)
-    s.catalog.dropTempView(queryName)
+    val out = s.table(name)
+    s.catalog.dropTempView(name)
     out
   }
 }

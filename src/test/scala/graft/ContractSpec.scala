@@ -183,6 +183,27 @@ class ContractSpec extends SparkTestBase {
     assert(hits.isEmpty, s"v1 filter SPI named in src/main:\n${hits.mkString("\n")}")
   }
 
+  test("one stream lifecycle: only Streams.scala starts or waits on a streaming query") {
+    // every bounded streaming run goes through Streams.drain, which owns
+    // the checkpoint, the shuffle scope, the wait and the stop
+    import scala.jdk.CollectionConverters._
+    val lifecycle = """\.writeStream|awaitTermination|processAllAvailable""".r
+    val comment = """^\s*(//|\*|/\*)""".r
+    val files = mainSources()
+    val owner = files.filter(_.endsWith("streaming/Streams.scala"))
+    assert(owner.size == 1, s"streaming/Streams.scala not among ${files.size} scanned files")
+    assert(lifecycle.findFirstIn(new String(java.nio.file.Files.readAllBytes(owner.head),
+      java.nio.charset.StandardCharsets.UTF_8)).isDefined,
+      "Streams.scala names no streaming lifecycle call; the scan is broken")
+    val hits = files.filterNot(owner.contains).flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if comment.findFirstIn(line).isEmpty &&
+          lifecycle.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(hits.isEmpty, s"streaming lifecycle outside Streams.drain:\n${hits.mkString("\n")}")
+  }
+
   test("every oracle key has a query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")

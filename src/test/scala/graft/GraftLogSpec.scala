@@ -239,7 +239,7 @@ class GraftLogSpec extends SparkTestBase with BeforeAndAfterAll {
       streaming.Streams.runToCompletion(
         spark.readStream.format("graftlog").load(dir)
           .select(col("event_id"), col("_file")),
-        "meta_stream_boundary", org.apache.spark.sql.streaming.OutputMode.Append())
+        org.apache.spark.sql.streaming.OutputMode.Append())
     }
   }
 

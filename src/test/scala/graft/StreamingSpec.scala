@@ -53,7 +53,7 @@ class StreamingSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
   test("ST1: streaming tumbling agg == batch tumbling agg on closed input") {
     val streamed = Streams.runToCompletion(
       Streams.tumblingAgg(Streams.eventsStream(spark, streamDir)),
-      "tumbling_out", OutputMode.Append())
+      OutputMode.Append())
     val batch = graft.operators.StreamShapes.tumbling(spark, sfDir)
     // watermark append-mode emits only finalized windows; on a closed input
     // every window except those near the max event time is final
@@ -76,14 +76,14 @@ class StreamingSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
     val streamed = Streams.runToCompletion(
       Streams.dedupStream(spark.readStream.schema(Tables.events).parquet(dir))
         .groupBy().count(),
-      "dedup_out", OutputMode.Complete())
+      OutputMode.Complete())
     assert(streamed.head().getLong(0) == ev.count())
   }
 
   test("ST4: mapGroupsWithState final per-user counts match batch groupBy") {
     val streamed = Streams.runToCompletion(
       Streams.runningUserState(Streams.eventsStream(spark, streamDir)).toDF(),
-      "state_out", OutputMode.Update())
+      OutputMode.Update())
     // update mode re-emits snapshots per batch; the LAST snapshot per user
     // must equal the batch aggregate
     val finalSnap = streamed.groupBy("user_id")
@@ -96,6 +96,53 @@ class StreamingSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
       .filter(col("n") =!= col("bn") || col("total_cents") =!= col("bc"))
     assert(bad.count() == 0)
     assert(finalSnap.count() == batch.count())
+  }
+
+  /** A fresh landing of `files` parquet files holding `rows`. */
+  private def land(dir: String, rows: org.apache.spark.sql.DataFrame, files: Int): Long = {
+    rows.repartition(files).write.mode("append").parquet(dir)
+    rows.count()
+  }
+
+  private def eventsFrom(dir: String) =
+    spark.readStream.schema(Tables.events).option("maxFilesPerTrigger", "1").parquet(dir)
+
+  test("drain: an AvailableNow drain reports one progress record per data trigger") {
+    import org.apache.spark.sql.streaming.Trigger
+    val landing = Scratch.dir("drain_progress_landing")
+    val n = land(landing, Tables.load(spark, sfDir, "events"), 3)
+    val q = Streams.drain(eventsFrom(landing),
+      Streams.Sink.Parquet(Scratch.dir("drain_progress_out")), Trigger.AvailableNow())
+    assert(!q.isActive)
+    val data = q.recentProgress.filter(_.numInputRows > 0)
+    assert(data.length == 3, s"${data.length} data triggers over 3 one-file triggers")
+    assert(data.map(_.numInputRows).sum == n)
+  }
+
+  test("drain: a second drain on the same checkpoint reads only the files landed since") {
+    import org.apache.spark.sql.streaming.Trigger
+    val (landing, out) = (Scratch.dir("drain_resume_landing"), Scratch.dir("drain_resume_out"))
+    val ckpt = Some(Scratch.streamCkptDir("drain_resume_ckpt"))
+    val ev = Tables.load(spark, sfDir, "events")
+    val first = land(landing, ev, 3)
+    Streams.drain(eventsFrom(landing), Streams.Sink.Parquet(out), Trigger.AvailableNow(),
+      ckpt = ckpt)
+    val added = land(landing, ev.limit(100), 2)
+    val q = Streams.drain(eventsFrom(landing), Streams.Sink.Parquet(out),
+      Trigger.AvailableNow(), ckpt = ckpt)
+    val data = q.recentProgress.filter(_.numInputRows > 0)
+    assert(data.length == 2, s"${data.length} data triggers over the 2 new files")
+    assert(data.map(_.numInputRows).sum == added)
+    assert(spark.read.schema(Tables.events).parquet(out).count() == first + added)
+  }
+
+  test("drain: a failing foreachBatch sink rethrows its error and leaves no active query") {
+    val e = intercept[Exception] {
+      Streams.drain(Streams.eventsStream(spark, streamDir),
+        Streams.Sink.ForeachBatch((_, _) => throw new IllegalStateException("sink refused batch")))
+    }
+    assert(e.getMessage.contains("sink refused batch"), s"drain threw $e")
+    assert(spark.streams.active.isEmpty)
   }
 
   test("trigger wiring: AvailableNow drains the closed input and terminates") {
@@ -158,7 +205,7 @@ class StreamingSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
     try {
       val streamed = Streams.runToCompletion(
         Streams.runningUserStateTws(Streams.eventsStream(spark, streamDir)).toDF(),
-        "tws_out", OutputMode.Update())
+        OutputMode.Update())
       val finalSnap = streamed.groupBy("user_id")
         .agg(max(col("n")).as("n"), max(col("total_cents")).as("total_cents"))
       val batch = Tables.load(spark, sfDir, "events")

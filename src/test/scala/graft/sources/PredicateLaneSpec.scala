@@ -167,9 +167,22 @@ class PredicateLaneSpec extends SparkTestBase with BeforeAndAfterAll {
         s"[] stampPruned=[In(_pub_stamp, [${c1.mkString(",")}])]", 4, "commit = 1"),
       Shape("NOT", s"NOT (_pub_stamp IN (${c0.mkString(", ")}))",
         s"[] stampPruned=[Not(In(_pub_stamp, [${c0.mkString(",")}]))]", 8, "commit <> 0"),
+      Shape("<>", c1.map(st => s"_pub_stamp <> $st").mkString(" AND "),
+        "[] stampPruned=[IsNotNull(_pub_stamp), " +
+          c1.map(st => s"Not(EqualTo(_pub_stamp,$st))").mkString(", ") + "]",
+        8, "commit <> 1"),
       Shape("stamp OR data", s"_pub_stamp > ${c1.max} OR event_type = 'buy'", "[]",
         12, "commit > 1 OR event_type = 'buy'")
     )
+    // Spark pushes a WHERE `<>` as NOT(=), the "<>" shape above; the V2
+    // `<>` predicate itself (V2ExpressionBuilder's form of a leaf
+    // Not(EqualTo)) is claimed on the stamp lane to the same filter
+    import org.apache.spark.sql.connector.expressions.{Expression => V2Expr, Expressions}
+    import org.apache.spark.sql.connector.expressions.filter.Predicate
+    val ne = new Predicate("<>", Array[V2Expr](Expressions.column("_pub_stamp"),
+      Expressions.literal(java.lang.Long.valueOf(c1.head))))
+    assert(GraftLog.v2ToV1(ne, GraftLog.STAMP_LANE) ==
+      Some(org.apache.spark.sql.sources.Not(org.apache.spark.sql.sources.EqualTo("_pub_stamp", c1.head))))
   }
 
   test("hint lane: an added-column range prunes files through a partial AND, unclaimed") {
