@@ -113,7 +113,10 @@ object Bench {
     * 2 s floor deliberately ignores sub-second queries (5x there is noise
     * worth zero retry churn), but a genuine 5x regression on a 0.2 s query
     * should still be visible in the artifact. These are LISTED, never
-    * deferred; adjudicate with a `graft.Bench <query>` subset run. */
+    * deferred; adjudicate by running one `graft.Bench <query...>` subset
+    * list on both trees and comparing the two (a subset run reads slower
+    * than the same query inside a larger run, so never compare it with a
+    * full session). */
   private[graft] val DRIFT_OUTLIER_RATIO = 5.0
   private[graft] def driftOutliers(
       best: Seq[(String, Double)], ref: Map[String, Double], drift: Double): Seq[String] =
@@ -236,8 +239,9 @@ object Bench {
     // typically outside the storm window. All samples stay in the arrays;
     // a query still slow after two retry passes is reported at its slow
     // value AND listed in "storm_suspect", so a genuine regression is
-    // never hidden (adjudicate those with `graft.Bench <query>` subset runs,
-    // each in its own JVM).
+    // never hidden (adjudicate those by running one `graft.Bench <query...>`
+    // subset list on both trees and comparing the two; a subset reads
+    // slower than the same query inside a larger run).
     val TIMED_RUNS = 2
     val MAX_RUNS = 4
     val reference = loadReference(
@@ -399,9 +403,11 @@ object Bench {
         s"best is >${STORM_RATIO}x UNDER the committed band - regenerate bench_reference.json " +
         "from this round's cleanest full local run")
     if (stillSuspect.nonEmpty)
-      System.err.println("[bench] storm_suspect nonempty at session end: adjudicate with " +
-        "`graft.Bench <query>` subset runs, each in a fresh JVM; if their best matches the " +
-        "session best, the anchor is stale - regenerate bench_reference.json")
+      System.err.println("[bench] storm_suspect nonempty at session end: adjudicate by " +
+        "running one `graft.Bench <query...>` subset list on the parent tree and on this " +
+        "one; if the two agree, the anchor is stale - regenerate bench_reference.json from " +
+        "a full run. A subset reads slower than the same query inside a larger run, so " +
+        "compare subset with subset only")
     val full =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"runs":$rs,"gc_ms":$gs,"cpu_s":$cs,"stages":$ss,"spill_mb":$ps,"jit_ms":$js,"codegen_n":$ns,"warm_s":$ws,"warm_cpu_s":$wc,"codegen_warm_n":$wn,"host_mem_mb":$hm,"psi_some10":$hp,"deferred":$defJson,"storm_suspect":$suspectJson,"retry_failed":$retryFailJson,"reference_n":${reference.size},"session_drift":${fmt(drift)},"drift_n":$driftN,"drift_outliers":${outliers.map("\"" + _ + "\"").mkString("[", ",", "]")},"ref_stale":${stale.map("\"" + _ + "\"").mkString("[", ",", "]")},"written_at_ms":${System.currentTimeMillis()},"sf":"$sfDir"}"""
     println(full)

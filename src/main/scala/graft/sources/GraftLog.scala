@@ -693,7 +693,7 @@ private class GraftLogStreamingWrite(path: String, truncate: Boolean,
       .toSeq.zipWithIndex.flatMap { case (u, i) =>
         GraftLogNames.publishOrDrop(path, u.delTmp, i, -1,
           s"q$queryId-e$epochId-" + f"eq$i%05d", ".graftdel")
-          .map(name => (name, u.keyMin, u.keyMax, u.keyMinB, u.keyMaxB))
+          .map(name => (name, u.range))
       }
     // swap FIRST, unlink after (the uniform commit discipline): readers
     // flip atomically, and a crash between swap and unlink leaves only
@@ -728,42 +728,21 @@ private class GraftLogStreamingWrite(path: String, truncate: Boolean,
       // manifest-less landing the resolved base IS the directory
       // listing, which already shows them — covering them would delete
       // the very rows this epoch inserts. Coverage is NARROWED by the
-      // zone maps: a file whose KEY-column bounds (event_id or user_id,
-      // per upsertOrd) cannot overlap the task's key range contains none
-      // of the deleted keys, so on a key-clustered landing the per-epoch
-      // manifest cost is O(overlapping files), not O(live files).
-      // Stats-less files stay covered (unknown bounds must not skip a
-      // takedown).
+      // zone maps (the one zone test, GraftDeletes.KeyRange): a file
+      // whose bounds on the key's first column cannot overlap the task's
+      // key range contains none of the deleted keys, so on a
+      // key-clustered landing the per-epoch manifest cost is
+      // O(overlapping files), not O(live files). Stats-less files stay
+      // covered (unknown bounds must not skip a takedown).
       val excluded = removeData ++ pub.map(_.name)
       val candidates = base.files.filterNot(f => excluded.contains(f.name))
-      // composite keys narrow coverage on their FIRST component's zone
-      val keyOrd = upsertOrds.map(_.head).getOrElse(0)
-      def coverageFor(kMin: Long, kMax: Long,
-          kMinB: Array[Byte], kMaxB: Array[Byte]): Seq[String] =
-        candidates.collect {
-          case f if f.stats.forall { st =>
-              if (keyOrd == 3) st.etype match {
-                case None => true // no string bounds recorded: stay covered
-                case Some(b) =>
-                  // TRUNCATED bounds prune only when PROVABLY disjoint:
-                  // minBytes is a lower bound on the file's true min and
-                  // maxBytes an upper bound on its true max, so disjoint
-                  // = (file min above the keys) or (file max below them)
-                  !(java.util.Arrays.compareUnsigned(b.minBytes, kMaxB) > 0 ||
-                    b.maxBytes.exists(m =>
-                      java.util.Arrays.compareUnsigned(m, kMinB) < 0))
-              } else {
-                val (lo, hi) =
-                  if (keyOrd == 0) (st.eidMin, st.eidMax) else (st.uidMin, st.uidMax)
-                hi >= kMin && lo <= kMax
-              }
-            } => f.name
-        }.sorted
       GraftChange(
         addData = pub.toVector,
         removeData = removeData,
-        addDeletes = eqDels.flatMap { case (d, kMin, kMax, kMinB, kMaxB) =>
-          val cov = coverageFor(kMin, kMax, kMinB, kMaxB)
+        addDeletes = eqDels.flatMap { case (d, range) =>
+          val cov = candidates.collect {
+            case f if range.exists(r => f.stats.forall(r.overlaps)) => f.name
+          }.sorted
           if (cov.isEmpty) None else Some((d, cov))
         },
         removeDeletes = removeDels)
@@ -1272,16 +1251,14 @@ private class GraftLogWriter(path: String, partitionId: Int,
 }
 
 /** Upsert task commit (round 18): the data tmp plus the task's DISTINCT
-  * keys, written as an equality-delete tmp at task commit. `keyMin`/
-  * `keyMax` bound the task's LONG keys (`keyMinB`/`keyMaxB` the STRING
-  * key's bytes, round 19) so the epoch commit can NARROW the eq-delete's
-  * coverage to files whose key-column zone overlaps — on a key-clustered
-  * landing the per-epoch manifest cost drops from O(live files) to
-  * O(overlapping files). A zero-key task's delete tmp is empty. */
+  * keys, written as an equality-delete tmp at task commit. `range` bounds
+  * the keys' first component so the epoch commit can NARROW the
+  * eq-delete's coverage to files whose key-column zone overlaps — on a
+  * key-clustered landing the per-epoch manifest cost drops from O(live
+  * files) to O(overlapping files). A zero-key task's delete tmp is empty
+  * and its range None. */
 private case class GraftLogUpsertCommit(data: GraftLogCommit, delTmp: String,
-    keyMin: Long, keyMax: Long,
-    keyMinB: Array[Byte] = null, keyMaxB: Array[Byte] = null)
-  extends WriterCommitMessage
+    range: Option[GraftDeletes.KeyRange]) extends WriterCommitMessage
 
 /** Streaming upsert task writer (round 18; keep-last round 19): the
   * plain record encode plus key tracking — at commit the task's distinct
@@ -1332,8 +1309,9 @@ private class GraftLogUpsertWriter(path: String, partitionId: Int,
 
   override def write(r: InternalRow): Unit = {
     if (composite) {
-      if (lastOrdT.put(GraftLog.encTupleOfRow(r, keyOrds), Long.box(ord)) != null)
-        dup = true
+      val k = GraftDeletes.encKey(r.getLong(0), r.getLong(1),
+        r.getUTF8String(3), keyOrds)
+      if (lastOrdT.put(k, Long.box(ord)) != null) dup = true
     } else if (strKey) {
       val k = r.getUTF8String(3)
       if (lastOrdS.containsKey(k)) dup = true
@@ -1345,25 +1323,13 @@ private class GraftLogUpsertWriter(path: String, partitionId: Int,
   }
   override def commit(): WriterCommitMessage = {
     out.close()
-    val distinct = { val a = lastOrd.keysIterator.toArray; java.util.Arrays.sort(a); a }
-    val distinctS: Array[UTF8String] =
-      if (!strKey) Array.empty
-      else {
-        val a = lastOrdS.keySet().toArray(new Array[UTF8String](0))
-        java.util.Arrays.sort(a.asInstanceOf[Array[AnyRef]])
-        a
-      }
-    val distinctT: Array[String] =
-      if (!composite) Array.empty
-      else { val a = lastOrdT.keySet().toArray(new Array[String](0))
-        java.util.Arrays.sort(a.asInstanceOf[Array[AnyRef]]); a }
     def lastOf(buf: Array[Byte]): Long =
       if (composite)
-        lastOrdT.get(GraftLog.encTupleOfBuf(buf, keyOrds)).longValue()
-      else if (strKey) {
-        val l = ((buf(24) & 0xff) << 8) | (buf(25) & 0xff)
-        lastOrdS.get(UTF8String.fromBytes(buf, 26, l)).longValue()
-      } else lastOrd(java.nio.ByteBuffer.wrap(buf, keyOrd * 8, 8).getLong)
+        lastOrdT.get(GraftDeletes.encKey(GraftDeletes.recordLong(buf, 0),
+          GraftDeletes.recordLong(buf, 1), GraftDeletes.recordEtype(buf),
+          keyOrds)).longValue()
+      else if (strKey) lastOrdS.get(GraftDeletes.recordEtype(buf)).longValue()
+      else lastOrd(GraftDeletes.recordLong(buf, keyOrd))
     val (dataTmp, st) =
       if (!dup) (tmp, stats.result)
       else {
@@ -1396,43 +1362,15 @@ private class GraftLogUpsertWriter(path: String, partitionId: Int,
       }
     // a zero-key task leaves its eq-delete tmp EMPTY, which the epoch's
     // publish step drops; any key makes it header + one key per line
-    val sb = new StringBuilder
-    if (ord > 0) sb.append(GraftLog.eqDeleteHeaderOf(keyOrds)).append('\n')
-    if (composite) // canonical tuple lines verbatim
-      distinctT.foreach(k => sb.append(k).append('\n'))
-    else if (strKey) // injective lines: "" encodes to the '.' marker, never blank
-      distinctS.foreach(k =>
-        sb.append(GraftLog.encEqKeyLine(k.getBytes)).append('\n'))
-    else distinct.foreach(k => sb.append(k).append('\n'))
-    GraftFs.writeString(delTmp, sb.toString)
-    val data = GraftLogCommit(Seq((-1, dataTmp, st)), partitionId)
-    if (!composite)
-      GraftLogUpsertCommit(data, delTmp,
-        if (distinct.isEmpty) Long.MaxValue else distinct.head,
-        if (distinct.isEmpty) Long.MinValue else distinct.last,
-        if (distinctS.isEmpty) null else distinctS.head.getBytes,
-        if (distinctS.isEmpty) null else distinctS.last.getBytes)
-    else {
-      // coverage narrows on the FIRST key component: a file whose
-      // first-component zone cannot overlap the task's range contains
-      // none of the tuples (sound — every tuple's first component lies
-      // inside the range)
-      val firsts = distinctT.map(_.split(":", 2)(0))
-      if (keyOrds.head == 3) {
-        val bs = firsts.map(GraftLog.decEqKeyLine)
-        var mn: Array[Byte] = null; var mx: Array[Byte] = null
-        bs.foreach { b =>
-          if (mn == null || java.util.Arrays.compareUnsigned(b, mn) < 0) mn = b
-          if (mx == null || java.util.Arrays.compareUnsigned(b, mx) > 0) mx = b
-        }
-        GraftLogUpsertCommit(data, delTmp, Long.MaxValue, Long.MinValue, mn, mx)
-      } else {
-        val ls = firsts.map(_.toLong)
-        GraftLogUpsertCommit(data, delTmp,
-          if (ls.isEmpty) Long.MaxValue else ls.min,
-          if (ls.isEmpty) Long.MinValue else ls.max, null, null)
-      }
-    }
+    val keys: GraftDeletes.KeySet =
+      if (composite) new GraftDeletes.TupleKeys(keyOrds,
+        lastOrdT.keySet().toArray(new Array[String](0)).sorted, null)
+      else if (strKey) new GraftDeletes.StrKeys(
+        lastOrdS.keySet().toArray(new Array[UTF8String](0)).sorted, null)
+      else new GraftDeletes.LongKeys(keyOrd, lastOrd.keysIterator.toArray.sorted, null)
+    GraftFs.writeString(delTmp, GraftDeletes.render(keys))
+    GraftLogUpsertCommit(GraftLogCommit(Seq((-1, dataTmp, st)), partitionId),
+      delTmp, keys.range)
   }
   override def abort(): Unit = {
     out.close(); GraftFs.delete(tmp); GraftFs.delete(delTmp); ()
@@ -2340,14 +2278,9 @@ private case class GraftLogCursorSpec(
   def cursor(file: String, preds: Array[Filter], needType: Boolean,
       needPos: Boolean): GraftLogCursor = {
     val name = GraftFs.nameOf(file)
-    val dels = delsOf.get(name) match {
-      case Some(paths) => GraftLog.loadDeletes(paths, name)
-      case None => GraftLog.NO_DELETES
-    }
     new GraftLogCursor(file, preds, needType, segsOf.get(name),
-      stampFilters, dels.pos, needPos, extra,
-      deadStampsOf.getOrElse(name, Array.emptyLongArray), dels.eqEid, dels.eqUid,
-      dels.eqEtype, dels.eqTuples)
+      stampFilters, GraftDeletes.load(delsOf.getOrElse(name, Nil), name),
+      needPos, extra, deadStampsOf.getOrElse(name, Array.emptyLongArray))
   }
 
   /** Streaming replay partitions (round 17): suppress the file's
@@ -2475,27 +2408,16 @@ private final class GraftLogCursor(file: String, filters: Array[Filter],
     needTypeHint: Boolean,
     segs: Option[Vector[GraftSegment]] = None,
     stampFilters: Array[Filter] = Array.empty,
-    deletePositions: Array[Long] = Array.emptyLongArray,
+    dels: GraftDeletes = GraftDeletes.NONE,
     needPos: Boolean = false,
     extra: Array[StructField] = Array.empty,
-    deadStamps: Array[Long] = Array.emptyLongArray,
-    eqDeleteEid: Array[Long] = Array.emptyLongArray,
-    eqDeleteUid: Array[Long] = Array.emptyLongArray,
-    eqDeleteEtype: Array[UTF8String] = Array.empty,
-    eqDeleteTuples: Seq[(Seq[Int], Array[String])] = Nil) {
+    deadStamps: Array[Long] = Array.emptyLongArray) {
   private val in: DataInputStream = GraftFs.openData(file)
   private val preds: Array[GraftLog.Pred] = filters.map(GraftLog.compile)
-  // first-component pre-filtered composite probes (round 21, r20 advice):
-  // built once per cursor so the hot decode loop only pays the tuple
-  // encode allocation on candidate rows
-  private val tupleProbes: Array[GraftLog.TupleKindProbe] =
-    eqDeleteTuples.map { case (ords, keys) =>
-      new GraftLog.TupleKindProbe(ords, keys)
-    }.toArray
+  private val deletePositions = dels.pos
   private val needType = needTypeHint ||
     filters.exists(_.references.contains("event_type")) ||
-    eqDeleteEtype.nonEmpty || // the keyed takedown must decode the key
-    eqDeleteTuples.exists(_._1.contains(3))
+    dels.needsEtype // the keyed takedown must decode the key
 
   var eventId: Long = 0L
   var userId: Long = 0L
@@ -2638,19 +2560,9 @@ private final class GraftLogCursor(file: String, filters: Array[Filter],
         while (delIdx < deletePositions.length && deletePositions(delIdx) < recOrd) delIdx += 1
         delIdx < deletePositions.length && deletePositions(delIdx) == recOrd
       }) { delIdx += 1; skipped += 1 }
-      // equality delete (round 18; either long key since round 19): the
-      // upsert sink's keyed takedown — covered files drop every record
-      // whose key is in the set
-      else if ((eqDeleteEid.length > 0 &&
-          java.util.Arrays.binarySearch(eqDeleteEid, eventId) >= 0) ||
-        (eqDeleteUid.length > 0 &&
-          java.util.Arrays.binarySearch(eqDeleteUid, userId) >= 0) ||
-        (eqDeleteEtype.length > 0 && java.util.Arrays.binarySearch(
-          eqDeleteEtype.asInstanceOf[Array[AnyRef]], etype) >= 0) ||
-        (tupleProbes.length > 0 &&
-          tupleProbes.exists(_.dead(eventId, userId, etype)))) {
-        skipped += 1
-      }
+      // equality delete: the upsert sink's keyed takedown — covered
+      // files drop every record whose key is in the set
+      else if (dels.dead(eventId, userId, etype)) skipped += 1
       else {
         var ok = true
         var i = 0
@@ -3268,8 +3180,10 @@ object GraftLog {
     * but delivers ONLY the segments whose origin stamps its offset has
     * not processed (round 17 — see GraftLogOffset.seenStamp), so batch
     * and streaming now share ONE consistency model across compaction.
-    * (c) pending position-delete files are ABSORBED: an input carrying
-    * deletes is record-walked instead of byte-copied, its dead rows
+    * (c) pending delete files are ABSORBED: an input carrying deletes is
+    * record-walked instead of byte-copied; each record's keys are decoded
+    * from its buffer and probed with [[GraftDeletes.dead]], the probe the
+    * scan cursor uses, so its dead rows (position or equality) are
     * dropped and its delete files retired with it.
     *
     * @return (files before, files after, bytes rewritten) */
@@ -3328,14 +3242,9 @@ object GraftLog {
             GraftFs.copyInto(in.abs, os)
             outOff += in.size
           } else {
-            val loaded = loadDeletes(in.dels, in.name)
+            val loaded = GraftDeletes.load(in.dels, in.name)
             val dels = loaded.pos
-            // first-component pre-filtered composite probes (round 21):
-            // built once per input file, so the absorb walk only pays the
-            // tuple encode allocation on candidate records
-            val tupleProbes = loaded.eqTuples.map { case (ords, keys) =>
-              new GraftLog.TupleKindProbe(ords, keys)
-            }
+            val needType = loaded.needsEtype
             val segStarts = in.segs.map(_.start).toArray
             val din = GraftFs.openData(in.abs)
             val dout: DataOutputStream = os
@@ -3353,26 +3262,12 @@ object GraftLog {
                   if (buf.length < len) buf = new Array[Byte](len)
                   din.readFully(buf, 0, len)
                   inOff += 4 + len; ord += 1
-                  // the record's keys sit at fixed offsets (event_id at
-                  // 0, user_id at 8) — the contract the eq-delete absorb
-                  // leans on
-                  def eqDead: Boolean =
-                    (loaded.eqEid.length > 0 && java.util.Arrays.binarySearch(
-                      loaded.eqEid,
-                      java.nio.ByteBuffer.wrap(buf, 0, 8).getLong) >= 0) ||
-                    (loaded.eqUid.length > 0 && java.util.Arrays.binarySearch(
-                      loaded.eqUid,
-                      java.nio.ByteBuffer.wrap(buf, 8, 8).getLong) >= 0) ||
-                    (loaded.eqEtype.length > 0 && {
-                      val l = ((buf(24) & 0xff) << 8) | (buf(25) & 0xff)
-                      java.util.Arrays.binarySearch(
-                        loaded.eqEtype.asInstanceOf[Array[AnyRef]],
-                        UTF8String.fromBytes(buf, 26, l)) >= 0
-                    }) ||
-                    (tupleProbes.nonEmpty && tupleProbes.exists(_.deadBuf(buf)))
                   while (delIdx < dels.length && dels(delIdx) < ord) delIdx += 1
                   if (delIdx < dels.length && dels(delIdx) == ord) delIdx += 1 // dropped
-                  else if (eqDead) () // upsert-retired key: dropped
+                  else if (loaded.dead(GraftDeletes.recordLong(buf, 0),
+                      GraftDeletes.recordLong(buf, 1),
+                      if (needType) GraftDeletes.recordEtype(buf) else null))
+                    () // upsert-retired key: dropped
                   else { dout.writeInt(len); dout.write(buf, 0, len); outOff += 4 + len }
                 }
               }
@@ -4034,108 +3929,51 @@ object GraftLog {
     // spanning a mass takedown no longer builds O(deleted keys) driver
     // maps. Commit stamps increase with manifest order, so min(stamp)
     // IS the first kill. Only each file's one-line header (its kind) is
-    // read driver-side. The typed decode reuses the writer's exact line
-    // codecs — symmetry the distributed parse must not drift from.
+    // read driver-side. Each line decodes through GraftDeletes, the
+    // writer's own codec, on the executors.
     import spark.implicits._
-    val eqHeaders =
-      Set(EQ_DELETE_HEADER, EQ_DELETE_HEADER_UID, EQ_DELETE_HEADER_ETYPE)
-    // kind = the eq header line (single-column or composite), or "" for
-    // position-delete files (no header — every line is a record)
-    val delMeta: Seq[(String, Long, String)] = commits.flatMap { c =>
+    // kind = the eq header's key ordinals, None for position-delete
+    // files (no header — every line is a record)
+    val delMeta: Seq[(String, Long, Option[Seq[Int]])] = commits.flatMap { c =>
       c.addedDels.filterNot(xed.contains).map { d =>
-        val head = GraftFs.readHeadLine(GraftFs.child(path, d))
-        val kind =
-          if (eqHeaders.contains(head) ||
-              GraftLog.tupleHeaderOrds(head).isDefined) head
-          else ""
-        (d, c.stamp, kind)
+        (d, c.stamp,
+          GraftDeletes.headerOrds(GraftFs.readHeadLine(GraftFs.child(path, d))))
       }
     }
-    /** Record lines of the `kind` delete files, each joined to its
-      * commit's stamp (by file name, via a broadcast of the O(files)
-      * name->stamp map). For eq kinds the header line is dropped; a
-      * header string can never collide with a record line (headers
-      * contain a space; long lines are digits, string-key lines are
-      * base64url/'.', position lines carry a tab). */
-    def delLines(kind: String): Option[Dataset[(String, Long)]] = {
+    /** Record lines of the `kind` delete files, each with its file's path
+      * and its commit's stamp (joined by file name, via a broadcast of the
+      * O(files) name->stamp map). For eq kinds the header line is dropped;
+      * a header can never equal a record line. */
+    def delLines(kind: Option[Seq[Int]]): Dataset[(String, String, Long)] = {
       val files = delMeta.filter(_._3 == kind)
-      if (files.isEmpty) None
-      else Some {
-        val stampByName = files.map { case (n, st, _) => (n, st) }.toDF("_dn", "_cs")
-        spark.read.textFile(files.map(f => GraftFs.child(path, f._1)): _*)
-          .select(col("value").as("_line"),
-            substring_index(input_file_name(), "/", -1).as("_dn"))
-          .filter(col("_line") =!= lit("") &&
-            (if (kind.isEmpty) lit(true) else col("_line") =!= lit(kind)))
-          .join(broadcast(stampByName), "_dn")
-          .select(col("_line"), col("_cs")).as[(String, Long)]
-      }
+      val stampByName = files.map { case (n, st, _) => (n, st) }.toDF("_dn", "_cs")
+      spark.read.textFile(files.map(f => GraftFs.child(path, f._1)): _*)
+        .select(col("value").as("_line"),
+          substring_index(input_file_name(), "/", -1).as("_dn"))
+        .filter(col("_line") =!= lit("") &&
+          kind.fold(lit(true))(k => col("_line") =!= lit(GraftDeletes.header(k))))
+        .join(broadcast(stampByName), "_dn")
+        .select(col("_line"), col("_dn"), col("_cs")).as[(String, String, Long)]
     }
-    def eqLongKeys(kind: String): Option[DataFrame] = delLines(kind).map { ds =>
-      ds.map { case (line, st) =>
-        // r20 advice: a lone "-" used to pass (empty tail's forall is
-        // vacuously true) and an over-Long digit string threw a bare
-        // NumberFormatException from the executor — both now fail with
-        // the labeled corrupt-record error
-        require(line.forall(_.isDigit) ||
-            (line.length > 1 && line.head == '-' && line.tail.forall(_.isDigit)),
-          s"corrupt equality-delete record in $path: '$line'")
-        val k = try line.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"corrupt equality-delete record in $path: '$line' (out of Long range)")
-        }
-        (k, st)
-      }.toDF("_ck", "_cs").groupBy("_ck").agg(min("_cs").as("_cs"))
-    }
-    val eqEid = eqLongKeys(EQ_DELETE_HEADER)
-    val eqUid = eqLongKeys(EQ_DELETE_HEADER_UID)
-    val eqEty = delLines(EQ_DELETE_HEADER_ETYPE).map { ds =>
-      ds.map { case (line, st) =>
-        (UTF8String.fromBytes(GraftLog.decEqKeyLine(line)).toString, st)
-      }.toDF("_ck", "_cs").groupBy("_ck").agg(min("_cs").as("_cs"))
-    }
-    val posRec = delLines("").map { ds =>
-      ds.map { case (line, st) =>
-        val t = line.indexOf('\t')
-        require(t > 0, s"corrupt delete record in $path: '$line'")
-        (line.substring(0, t), line.substring(t + 1).toLong, st)
+    val posRec = delMeta.find(_._3.isEmpty).map { _ =>
+      delLines(None).map { case (line, dn, st) =>
+        val (f, p) = GraftDeletes.decPos(line, GraftFs.child(path, dn))
+        (f, p, st)
       }.toDF("_cf", "_cp", "_cs")
         .groupBy("_cf", "_cp").agg(min("_cs").as("_cs"))
     }
-    // COMPOSITE-key delete files (round 20): per distinct key column
-    // list, decode the canonical tuple lines into typed component
-    // columns and reduce to first-kill stamps the same way
-    val compKeyDfs: Seq[(Seq[Int], DataFrame)] = delMeta.map(_._3)
-      .filter(k => k.nonEmpty && !eqHeaders.contains(k)).distinct
-      .map { kind =>
-        val ords = GraftLog.tupleHeaderOrds(kind).get
-        val keysDf = delLines(kind).get.map { case (line, st) =>
-          val parts = line.split(":", -1)
-          require(parts.length == ords.length,
-            s"corrupt composite equality-delete record in $path: '$line'")
-          var eid: Option[Long] = None
-          var uid: Option[Long] = None
-          var ety: Option[String] = None
-          def longPart(p: String): Long = try p.toLong catch {
-            case _: NumberFormatException => throw new IllegalArgumentException(
-              s"corrupt composite equality-delete record in $path: '$line'")
-          }
-          ords.zip(parts).foreach {
-            case (0, p) => eid = Some(longPart(p))
-            case (1, p) => uid = Some(longPart(p))
-            case (3, p) =>
-              ety = Some(UTF8String.fromBytes(GraftLog.decEqKeyLine(p)).toString)
-          }
-          (eid, uid, ety, st)
-        }.toDF("_ce", "_cu", "_cy", "_cs")
-        val compCols = ords.map {
-          case 0 => "_ce"
-          case 1 => "_cu"
-          case 3 => "_cy"
-        }
-        (ords, keysDf.groupBy(compCols.map(col).toIndexedSeq: _*)
-          .agg(min("_cs").as("_cs")))
-      }
+    // per eq kind (one column or a composite list): the typed key
+    // components — null outside the key — reduced to first-kill stamps
+    val compColOf = Map(0 -> "_ce", 1 -> "_cu", 3 -> "_cy")
+    val keyDfs: Seq[(Seq[Int], DataFrame)] = delMeta.flatMap(_._3).distinct.map { ords =>
+      val keysDf = delLines(Some(ords)).map { case (line, dn, st) =>
+        val (e, u, t) = GraftDeletes.decKey(line, ords, GraftFs.child(path, dn))
+        (Option.when(ords.contains(0))(e), Option.when(ords.contains(1))(u),
+          Option(t).map(_.toString), st)
+      }.toDF("_ce", "_cu", "_cy", "_cs")
+      (ords, keysDf.groupBy(ords.map(o => col(compColOf(o))): _*)
+        .agg(min("_cs").as("_cs")))
+    }
     val tableCols = (GraftLog.schema.fields ++ GraftLog.activeExtra(extra)).map(f => col(f.name))
     def reader = {
       val r = spark.read.format("graftlog")
@@ -4183,20 +4021,7 @@ object GraftLog {
     def localDf(rows: Array[org.apache.spark.sql.Row],
         schema: StructType): DataFrame =
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    val singleKinds = Seq("event_id" -> eqEid, "user_id" -> eqUid,
-      "event_type" -> eqEty).collect { case (kc, Some(keysDf)) =>
-      val sample = keysDf.limit(1001).collect()
-      val (pre, right) =
-        if (sample.length <= 1000)
-          (fromDf.filter(col(kc).isin(sample.map(_.get(0)).toIndexedSeq: _*)),
-            broadcast(localDf(sample, keysDf.schema)))
-        else (fromDf, keysDf)
-      (Seq(kc), pre.join(right, col(kc) === col("_ck")).drop("_ck")
-        .select(withIdent.toIndexedSeq: _*))
-    }
-    val compKinds = compKeyDfs.map { case (ords, keysDf) =>
-      val keyCols = ords.map(GraftLog.colName)
-      val compColOf = Map(0 -> "_ce", 1 -> "_cu", 3 -> "_cy")
+    val eqKinds = keyDfs.map { case (ords, keysDf) =>
       val cond = ords.map(o =>
         col(GraftLog.colName(o)) === col(compColOf(o))).reduce(_ && _)
       // the bounded pushdown probe narrows on the FIRST component
@@ -4207,10 +4032,9 @@ object GraftLog {
             sample.map(_.getAs[Any](compColOf(ords.head))).toIndexedSeq: _*)),
             broadcast(localDf(sample, keysDf.schema)))
         else (fromDf, keysDf)
-      (keyCols, pre.join(right, cond).drop("_ce", "_cu", "_cy")
-        .select(withIdent.toIndexedSeq: _*))
+      (ords.map(GraftLog.colName), pre.join(right, cond)
+        .drop("_ce", "_cu", "_cy").select(withIdent.toIndexedSeq: _*))
     }
-    val eqKinds = singleKinds ++ compKinds
     val posBranch = posRec.map { posDf =>
       // size probe by COUNT of the limited subquery — no row payload
       // ships to the driver just to be measured (round-20 review)
@@ -4316,18 +4140,10 @@ object GraftLog {
           .select(tableCols.toIndexedSeq: _*)
       val oldRows = slice(d.preStamp, d.removed)
       val newRows = slice(toStamp, d.added)
-      val killKeySpecs: Seq[(DataFrame, org.apache.spark.sql.Column)] =
-        Seq("event_id" -> eqEid, "user_id" -> eqUid, "event_type" -> eqEty)
-          .collect { case (kc, Some(kdf)) =>
-            (kdf.select(col("_ck").as(s"_kk$kc")),
-              col(kc) === col(s"_kk$kc"))
-          } ++ compKeyDfs.map { case (ords, kdf) =>
-            val compColOf = Map(0 -> "_ce", 1 -> "_cu", 3 -> "_cy")
-            (kdf.select(ords.map(o =>
-                col(compColOf(o)).as(s"_kk$o")).toIndexedSeq: _*).distinct(),
-              ords.map(o =>
-                col(GraftLog.colName(o)) === col(s"_kk$o")).reduce(_ && _))
-          }
+      val killKeySpecs = keyDfs.map { case (ords, kdf) =>
+        (kdf.select(ords.map(o => col(compColOf(o)).as(s"_kk$o")).toIndexedSeq: _*),
+          ords.map(o => col(GraftLog.colName(o)) === col(s"_kk$o")).reduce(_ && _))
+      }
       val cowDel = killKeySpecs.foldLeft(oldRows.exceptAll(newRows)) {
         case (df, (kdf, cond)) => df.join(kdf, cond, "left_anti")
       }
@@ -4688,217 +4504,6 @@ object GraftLog {
       // Not and anything else: no file-level claim
       case _ => true
     }
-  }
-
-  /** Sorted positions deleted from `dataName`, read from its covering
-    * position-delete files (text lines `<dataFileName>\t<pos>`). Cost is
-    * O(entries in the covering delete files) per task — the manifest's
-    * coverage index keeps "covering" tight. */
-  /** Header line of an EQUALITY-delete file (round 18; keyed by either
-    * long column since round 19): the `.graftdel` keyed variant behind
-    * the native streaming upsert sink. Body = one decimal key per line;
-    * the file applies to every data file its manifest coverage names
-    * (the upsert epoch covers the pre-commit live set), where a
-    * position-delete record names one (file, ordinal) identity. */
-  private[sources] val EQ_DELETE_HEADER = "eq event_id"
-  private[sources] val EQ_DELETE_HEADER_UID = "eq user_id"
-  private[sources] val EQ_DELETE_HEADER_ETYPE = "eq event_type"
-  private[sources] def eqDeleteHeader(keyOrd: Int): String = keyOrd match {
-    case 0 => EQ_DELETE_HEADER
-    case 1 => EQ_DELETE_HEADER_UID
-    case 3 => EQ_DELETE_HEADER_ETYPE
-    case o => throw new IllegalStateException(s"no equality-delete key at ordinal $o")
-  }
-  /** Header for a key column list: the single-column headers verbatim,
-    * composite keys as "eq c1,c2,..." in key order. */
-  private[sources] def eqDeleteHeaderOf(ords: Seq[Int]): String =
-    if (ords.size == 1) eqDeleteHeader(ords.head)
-    else "eq " + ords.map(colName).mkString(",")
-
-  /** Injective line codec for STRING equality-delete keys (round 20):
-    * base64url of the key bytes, with the EMPTY key encoded as the lone
-    * marker '.', a character outside the base64url alphabet. Plain
-    * enc("") emits an EMPTY line, which every reader skips as a blank —
-    * the takedown for the "" key was silently lost (the superseded row
-    * survived alongside its replacement). Nonempty keys are unchanged,
-    * so files written before this codec still decode identically. */
-  private[sources] def encEqKeyLine(k: Array[Byte]): String =
-    if (k.isEmpty) "." else GraftBinBounds.enc(k)
-  private[sources] def decEqKeyLine(line: String): Array[Byte] =
-    if (line == ".") Array.emptyByteArray else GraftBinBounds.dec(line)
-
-  // ----- composite upsert keys (round 20, r19 verdict missing #2) -----
-  // A composite key's eq-delete line is the ':'-joined canonical encode
-  // of its components in key order: long components as decimal digits,
-  // the string component through the injective base64url/'.' codec.
-  // ':' appears in no component encoding, so the join is injective; a
-  // composite line always contains ':' and can never collide with a
-  // single-key line or a header.
-  private[sources] def encTupleOfRow(r: InternalRow, ords: Seq[Int]): String =
-    ords.map {
-      case 3 => encEqKeyLine(r.getUTF8String(3).getBytes)
-      case o => r.getLong(o).toString
-    }.mkString(":")
-  /** Same canonical encode from a raw encoded record's fixed offsets
-    * (event_id at 0, user_id at 8, event_type length-prefixed at 24). */
-  private[sources] def encTupleOfBuf(buf: Array[Byte], ords: Seq[Int]): String =
-    ords.map {
-      case 3 =>
-        val l = ((buf(24) & 0xff) << 8) | (buf(25) & 0xff)
-        encEqKeyLine(java.util.Arrays.copyOfRange(buf, 26, 26 + l))
-      case o => java.nio.ByteBuffer.wrap(buf, o * 8, 8).getLong.toString
-    }.mkString(":")
-  /** Same canonical encode from a cursor's decoded column values. */
-  private[sources] def encTupleOfCols(eid: Long, uid: Long,
-      ety: UTF8String, ords: Seq[Int]): String =
-    ords.map {
-      case 0 => eid.toString
-      case 1 => uid.toString
-      case 3 => encEqKeyLine(ety.getBytes)
-    }.mkString(":")
-  /** Composite eq-delete probe with a FIRST-COMPONENT pre-filter
-    * (round 21, r20 advice): the plain probe built a fresh ':'-joined
-    * String (including a base64 encode of event_type) for EVERY decoded
-    * row per composite kind — O(rows x kinds) garbage on the hot decode
-    * path, unlike the allocation-free single-key probes. Most rows are
-    * not deleted, so this probes the sorted first components first
-    * (allocation-free long binary search, or a pre-decoded UTF8String
-    * array for a string first component) and only builds the full tuple
-    * encode on a first-component hit. `indexOf` returns the position in
-    * the original sorted `keys` array (so callers with aligned stamp
-    * arrays keep working), -1 when absent. */
-  private[sources] final class TupleKindProbe(
-      val ords: Seq[Int], val keys: Array[String]) extends Serializable {
-    private val firstKind: Int = ords.head
-    private def firstPart(k: String): String = k.substring(0, k.indexOf(':'))
-    private val firstLongs: Array[Long] =
-      if (firstKind == 3) null
-      else { val a = keys.map(k => firstPart(k).toLong); java.util.Arrays.sort(a); a }
-    private val firstStrs: Array[AnyRef] =
-      if (firstKind != 3) null
-      else {
-        val a: Array[AnyRef] =
-          keys.map(k => UTF8String.fromBytes(decEqKeyLine(firstPart(k))): AnyRef)
-        java.util.Arrays.sort(a)
-        a
-      }
-    private def firstHit(eid: Long, uid: Long, ety: => UTF8String): Boolean =
-      firstKind match {
-        case 0 => java.util.Arrays.binarySearch(firstLongs, eid) >= 0
-        case 1 => java.util.Arrays.binarySearch(firstLongs, uid) >= 0
-        case _ =>
-          val e = ety
-          e != null &&
-            java.util.Arrays.binarySearch(firstStrs, e.asInstanceOf[AnyRef]) >= 0
-      }
-    def indexOf(eid: Long, uid: Long, ety: UTF8String): Int =
-      if (!firstHit(eid, uid, ety)) -1
-      else java.util.Arrays.binarySearch(keys.asInstanceOf[Array[AnyRef]],
-        encTupleOfCols(eid, uid, ety, ords))
-    def dead(eid: Long, uid: Long, ety: UTF8String): Boolean =
-      indexOf(eid, uid, ety) >= 0
-    /** Raw-record-buffer variant (the compaction absorb walk): keys sit
-      * at the fixed encode offsets — event_id at 0, user_id at 8,
-      * event_type length-prefixed at 24. The event_type UTF8String wraps
-      * the buffer range only when the first component is the string. */
-    def deadBuf(buf: Array[Byte]): Boolean = {
-      def eid = java.nio.ByteBuffer.wrap(buf, 0, 8).getLong
-      def uid = java.nio.ByteBuffer.wrap(buf, 8, 8).getLong
-      def ety = {
-        val l = ((buf(24) & 0xff) << 8) | (buf(25) & 0xff)
-        UTF8String.fromBytes(buf, 26, l)
-      }
-      firstHit(eid, uid, ety) && java.util.Arrays.binarySearch(
-        keys.asInstanceOf[Array[AnyRef]], encTupleOfBuf(buf, ords)) >= 0
-    }
-  }
-
-  /** Ordinals of a composite eq-delete header ("eq c1,c2,..."), None if
-    * `header` is not a composite header. */
-  private[sources] def tupleHeaderOrds(header: String): Option[Seq[Int]] =
-    if (!header.startsWith("eq ") || !header.contains(',')) None
-    else {
-      val ords = header.substring(3).split(',').toSeq.map(ordinal)
-      require(ords.forall(o => o == 0 || o == 1 || o == 3) &&
-          ords.distinct.size == ords.size && ords.size >= 2,
-        s"corrupt composite equality-delete header: '$header'")
-      Some(ords)
-    }
-
-  /** Per-file deletes loaded for a cursor: position ordinals plus the
-    * equality keys per key column — all sorted for binary-search probes.
-    * `eqTuples` holds COMPOSITE-key sets (round 20): per distinct key
-    * column list, the sorted canonical ':'-joined line encodes. */
-  private[sources] final case class GraftLoadedDeletes(pos: Array[Long],
-      eqEid: Array[Long], eqUid: Array[Long],
-      eqEtype: Array[UTF8String] = Array.empty,
-      eqTuples: Seq[(Seq[Int], Array[String])] = Nil) {
-    def any: Boolean =
-      pos.nonEmpty || eqEid.nonEmpty || eqUid.nonEmpty || eqEtype.nonEmpty ||
-        eqTuples.nonEmpty
-  }
-  private[sources] val NO_DELETES =
-    GraftLoadedDeletes(Array.emptyLongArray, Array.emptyLongArray, Array.emptyLongArray)
-
-  /** Load the deletes covering `dataName` from its covering delete
-    * files, split by kind and key column. */
-  private[sources] def loadDeletes(delPaths: Seq[String],
-      dataName: String): GraftLoadedDeletes = {
-    if (delPaths.isEmpty) return NO_DELETES
-    val pos = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val eid = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val uid = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val ety = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
-    val tup = scala.collection.mutable.LinkedHashMap
-      .empty[Seq[Int], scala.collection.mutable.ArrayBuffer[String]]
-    delPaths.foreach { p =>
-      val lines = GraftFs.readString(p).split('\n')
-      val head = if (lines.nonEmpty) lines(0) else ""
-      val eqInto =
-        if (head == EQ_DELETE_HEADER) eid
-        else if (head == EQ_DELETE_HEADER_UID) uid
-        else null
-      val tupOrds = GraftLog.tupleHeaderOrds(head)
-      if (head == EQ_DELETE_HEADER_ETYPE)
-        // injective key lines: the '.' marker IS the empty key
-        lines.iterator.drop(1).foreach { line =>
-          if (line.nonEmpty) ety += UTF8String.fromBytes(GraftLog.decEqKeyLine(line))
-        }
-      else if (tupOrds.isDefined) {
-        val into = tup.getOrElseUpdate(tupOrds.get,
-          scala.collection.mutable.ArrayBuffer.empty[String])
-        lines.iterator.drop(1).foreach { line =>
-          if (line.nonEmpty) into += line
-        }
-      }
-      else if (eqInto != null)
-        lines.iterator.drop(1).foreach { line =>
-          if (line.nonEmpty) {
-            require(line.forall(_.isDigit) ||
-                (line.head == '-' && line.tail.forall(_.isDigit)),
-              s"corrupt equality-delete record in $p: '$line'")
-            eqInto += line.toLong
-          }
-        }
-      else lines.foreach { line =>
-        if (line.nonEmpty) {
-          val i = line.indexOf('\t')
-          require(i > 0, s"corrupt delete record in $p: '$line'")
-          if (line.regionMatches(0, dataName, 0, i) && dataName.length == i)
-            pos += line.substring(i + 1).toLong
-        }
-      }
-    }
-    val etySorted = ety.distinct.toArray
-    java.util.Arrays.sort(etySorted.asInstanceOf[Array[AnyRef]])
-    val tuples = tup.toSeq.map { case (ords, keys) =>
-      val a = keys.distinct.toArray
-      java.util.Arrays.sort(a.asInstanceOf[Array[AnyRef]])
-      (ords, a)
-    }
-    GraftLoadedDeletes(pos.toArray.sorted,
-      eid.distinct.sorted.toArray, uid.distinct.sorted.toArray, etySorted,
-      tuples)
   }
 
   /** Re-track a raw encoded record's zone-map stats — the upsert

@@ -45,7 +45,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * partitions are the FROM-state files zone-overlapping the window's
   * killed keys, read with the FROM-state drop sets (rows already dead
   * before the window never re-report) and filtered to the kill sets,
-  * emitting each FROM row once with its first-kill stamp. */
+  * emitting each FROM row once with its first-kill stamp. Kill sets,
+  * drop sets, the zone test and the probe all come from [[GraftDeletes]]:
+  * `loadStamped` builds the window's kill sets, and
+  * [[GraftDeletes.killStamp]] is the scan's dead-row probe returning the
+  * first-kill stamp. */
 private[sources] object GraftLogChanges {
   def changesSchema(extra: Array[StructField]): StructType =
     StructType((GraftLog.schema.fields ++ GraftLog.activeExtra(extra)) ++ Seq(
@@ -100,20 +104,6 @@ private[sources] case class GraftLogChangesPartition(
     segs: Option[Vector[GraftSegment]],
     delPaths: Seq[String],
     winStart: Long, winEnd: Long) extends InputPartition
-
-/** The window's kill sets: sorted key arrays with ALIGNED first-kill
-  * stamp arrays, per key kind. */
-private[sources] case class GraftLogChangesKills(
-    eqEid: Array[Long], eqEidStamp: Array[Long],
-    eqUid: Array[Long], eqUidStamp: Array[Long],
-    eqEty: Array[String], eqEtyStamp: Array[Long],
-    eqTuples: Seq[(Seq[Int], Array[String], Array[Long])])
-private[sources] object GraftLogChangesKills {
-  val EMPTY: GraftLogChangesKills = GraftLogChangesKills(
-    Array.emptyLongArray, Array.emptyLongArray,
-    Array.emptyLongArray, Array.emptyLongArray,
-    Array.empty, Array.emptyLongArray, Nil)
-}
 
 private[sources] class GraftLogChangesStream(path: String,
     extra: Array[StructField], startStamp: Option[Long])
@@ -184,112 +174,22 @@ private[sources] class GraftLogChangesStream(path: String,
     // window kill sets, first-kill stamp per key (commit order = stamp
     // order). Bounded by ONE micro-batch's delete records — the same
     // envelope as the upsert epochs that wrote them.
-    val eid = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
-    val uid = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
-    val ety = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val tup = scala.collection.mutable.LinkedHashMap
-      .empty[Seq[Int], scala.collection.mutable.LinkedHashMap[String, Long]]
-    win.commits.foreach { c =>
-      c.addedDels.filterNot(win.xedDels.contains).foreach { d =>
-        val lines = GraftFs.readString(GraftFs.child(path, d)).split('\n')
-        val head = if (lines.nonEmpty) lines(0) else ""
-        val tupOrds = GraftLog.tupleHeaderOrds(head)
-        def recs = lines.iterator.drop(1).filter(_.nonEmpty)
-        if (head == GraftLog.EQ_DELETE_HEADER)
-          recs.foreach(k => eid.getOrElseUpdate(k.toLong, c.stamp))
-        else if (head == GraftLog.EQ_DELETE_HEADER_UID)
-          recs.foreach(k => uid.getOrElseUpdate(k.toLong, c.stamp))
-        else if (head == GraftLog.EQ_DELETE_HEADER_ETYPE)
-          recs.foreach(k => ety.getOrElseUpdate(
-            UTF8String.fromBytes(GraftLog.decEqKeyLine(k)).toString, c.stamp))
-        else if (tupOrds.isDefined) {
-          val into = tup.getOrElseUpdate(tupOrds.get,
-            scala.collection.mutable.LinkedHashMap.empty[String, Long])
-          recs.foreach(k => into.getOrElseUpdate(k, c.stamp))
-        }
-        else throw new IllegalArgumentException(
-          s"the graftlog changes STREAM supports equality-delete windows " +
-            s"(the streaming upsert sink's shape); the commit stamped " +
-            s"${c.stamp} added position-delete records ($d) — read that " +
-            "window with the batch readChanges surface instead")
-      }
-    }
-    def sortedWithStamps[K](m: scala.collection.mutable.LinkedHashMap[K, Long],
-        sort: Array[K] => Unit)(implicit ct: scala.reflect.ClassTag[K]): (Array[K], Array[Long]) = {
-      val ks = m.keysIterator.toArray
-      sort(ks)
-      (ks, ks.map(m))
-    }
-    val (eidK, eidS) = sortedWithStamps[Long](eid, a => java.util.Arrays.sort(a))
-    val (uidK, uidS) = sortedWithStamps[Long](uid, a => java.util.Arrays.sort(a))
-    val (etyK, etyS) = sortedWithStamps[String](ety,
-      a => java.util.Arrays.sort(a.asInstanceOf[Array[AnyRef]]))
-    val tups = tup.toSeq.map { case (ords, m) =>
-      val (k, s) = sortedWithStamps[String](m,
-        a => java.util.Arrays.sort(a.asInstanceOf[Array[AnyRef]]))
-      (ords, k, s)
-    }
+    val kills = GraftDeletes.loadStamped(for {
+      c <- win.commits
+      d <- c.addedDels if !win.xedDels.contains(d)
+    } yield (GraftFs.child(path, d), c.stamp))
+    // zone-prune the FROM files: keep a file iff ANY kind's key range
+    // could overlap it (stats-less files always stay)
+    val ranges = kills.keys.flatMap(_.range)
     val deletes =
-      if (eidK.isEmpty && uidK.isEmpty && etyK.isEmpty && tups.isEmpty) Nil
-      else {
-        // zone-prune the FROM files: keep a file iff ANY kind could
-        // match it (overlap checks are the coverage logic's — sound
-        // supersets; stats-less files always stay). Per-kind key ranges
-        // are computed ONCE (round-20 review): string ranges in UTF-8
-        // BYTE order — the probe arrays are String-sorted (UTF-16
-        // order, which binarySearch needs), and for non-BMP code points
-        // the two orders DIVERGE, so min/max extraction from the sorted
-        // array would build an unsound byte range and prune files that
-        // hold killed keys.
-        def byteRange(bs: Iterable[Array[Byte]]): Option[(Array[Byte], Array[Byte])] =
-          bs.foldLeft(Option.empty[(Array[Byte], Array[Byte])]) {
-            case (None, b) => Some((b, b))
-            case (Some((mn, mx)), b) => Some((
-              if (java.util.Arrays.compareUnsigned(b, mn) < 0) b else mn,
-              if (java.util.Arrays.compareUnsigned(b, mx) > 0) b else mx))
-          }
-        def longOverlap(lo: Long, hi: Long, ks: Array[Long]): Boolean =
-          ks.nonEmpty && ks(ks.length - 1) >= lo && ks(0) <= hi
-        def etyOverlap(b: GraftBinBounds,
-            range: Option[(Array[Byte], Array[Byte])]): Boolean =
-          range.exists { case (mn, mx) =>
-            !(java.util.Arrays.compareUnsigned(b.minBytes, mx) > 0 ||
-              b.maxBytes.exists(m => java.util.Arrays.compareUnsigned(m, mn) < 0))
-          }
-        val etyRange = byteRange(etyK.map(_.getBytes("UTF-8")))
-        // per composite kind: the FIRST component's range, decoded once
-        val tupRanges: Seq[(Int, Either[(Long, Long), Option[(Array[Byte], Array[Byte])]])] =
-          tups.map { case (ords, ks, _) =>
-            val firsts = ks.map(_.split(":", 2)(0))
-            ords.head match {
-              case o @ (0 | 1) =>
-                val ls = firsts.map(_.toLong)
-                (o, Left((ls.min, ls.max)))
-              case 3 =>
-                (3, Right(byteRange(firsts.map(GraftLog.decEqKeyLine))))
-            }
-          }
-        win.stateFrom.files.flatMap { f =>
-          val keep = f.stats match {
-            case None => true
-            case Some(st) =>
-              longOverlap(st.eidMin, st.eidMax, eidK) ||
-              longOverlap(st.uidMin, st.uidMax, uidK) ||
-              (etyK.nonEmpty && st.etype.forall(etyOverlap(_, etyRange))) ||
-              tupRanges.exists {
-                case (0, Left((lo, hi))) => hi >= st.eidMin && lo <= st.eidMax
-                case (1, Left((lo, hi))) => hi >= st.uidMin && lo <= st.uidMax
-                case (_, Right(range)) => st.etype.forall(etyOverlap(_, range))
-                case _ => true
-              }
-          }
-          if (!keep) None
-          else Some(GraftLogChangesPartition(GraftFs.child(path, f.name),
-            insert = false, Array.emptyLongArray,
-            segs = f.segs,
-            delPaths = win.stateFrom.deletesFor(f.name).map(GraftFs.child(path, _)),
-            winStart = a, winEnd = b))
-        }
+      if (ranges.isEmpty) Nil
+      else win.stateFrom.files.flatMap { f =>
+        if (!f.stats.forall(st => ranges.exists(_.overlaps(st)))) None
+        else Some(GraftLogChangesPartition(GraftFs.child(path, f.name),
+          insert = false, Array.emptyLongArray,
+          segs = f.segs,
+          delPaths = win.stateFrom.deletesFor(f.name).map(GraftFs.child(path, _)),
+          winStart = a, winEnd = b))
       }
     // Stash this window's kill sets KEYED BY the (start, end] stamps the
     // partitions themselves carry (round 21, r20 advice): the old single
@@ -302,7 +202,7 @@ private[sources] class GraftLogChangesStream(path: String,
     // partition's window, so mispairing is structurally impossible; an
     // unknown window fails loudly instead of reading stale kills.
     killsByWindow.synchronized {
-      killsByWindow.put((a, b), GraftLogChangesKills(eidK, eidS, uidK, uidS, etyK, etyS, tups))
+      killsByWindow.put((a, b), kills)
     }
     (inserts ++ deletes).map(p => p: InputPartition).toArray
   }
@@ -313,9 +213,9 @@ private[sources] class GraftLogChangesStream(path: String,
     * eviction of a still-running batch's entry surfaces as the reader's
     * loud unknown-window error, never as wrong rows. */
   private val killsByWindow =
-    new java.util.LinkedHashMap[(Long, Long), GraftLogChangesKills]() {
+    new java.util.LinkedHashMap[(Long, Long), GraftDeletes]() {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(Long, Long), GraftLogChangesKills]): Boolean = size() > 8
+          e: java.util.Map.Entry[(Long, Long), GraftDeletes]): Boolean = size() > 8
     }
   override def createReaderFactory(): PartitionReaderFactory = {
     val snapshot = killsByWindow.synchronized {
@@ -328,7 +228,7 @@ private[sources] class GraftLogChangesStream(path: String,
 
 private[sources] class GraftLogChangesReaderFactory(
     extra: Array[StructField],
-    killsByWindow: Map[(Long, Long), GraftLogChangesKills]) extends PartitionReaderFactory {
+    killsByWindow: Map[(Long, Long), GraftDeletes]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftLogChangesPartition]
     val kills = killsByWindow.getOrElse((p.winStart, p.winEnd),
@@ -343,49 +243,17 @@ private[sources] class GraftLogChangesReaderFactory(
 private[sources] class GraftLogChangesReader(
     p: GraftLogChangesPartition,
     extra: Array[StructField],
-    kills: GraftLogChangesKills) extends PartitionReader[InternalRow] {
-  private val name = GraftFs.nameOf(p.file)
-  private val dels = GraftLog.loadDeletes(p.delPaths, name)
+    kills: GraftDeletes) extends PartitionReader[InternalRow] {
   private val cursor = new GraftLogCursor(p.file, Array.empty[Filter],
-    needTypeHint = true, p.segs, Array.empty, dels.pos, needPos = false,
-    extra, p.deadStamps, dels.eqEid, dels.eqUid, dels.eqEtype, dels.eqTuples)
+    needTypeHint = true, p.segs, Array.empty,
+    GraftDeletes.load(p.delPaths, GraftFs.nameOf(p.file)), needPos = false,
+    extra, p.deadStamps)
   private val nExtra = GraftLog.activeExtra(extra).length
   private val extraOrds: Array[Int] = GraftLog.activeExtra(extra)
     .map(f => GraftLog.EXTRA_BASE + extra.indexWhere(_.name == f.name))
   private val insertTag = UTF8String.fromString("insert")
   private val deleteTag = UTF8String.fromString("delete")
-  // first-component pre-filtered composite probes (round 21, r20 advice):
-  // built once per reader; aligned stamp arrays are indexed by the probe's
-  // position in the original sorted key array
-  private val tupleProbes: Array[(GraftLog.TupleKindProbe, Array[Long])] =
-    kills.eqTuples.map { case (ords, keys, stamps) =>
-      (new GraftLog.TupleKindProbe(ords, keys), stamps)
-    }.toArray
   private var row: InternalRow = _
-
-  /** First-kill stamp for the current cursor row, Long.MinValue = not
-    * killed in this window. */
-  private def killStamp(): Long = {
-    var st = Long.MaxValue
-    if (kills.eqEid.length > 0) {
-      val i = java.util.Arrays.binarySearch(kills.eqEid, cursor.eventId)
-      if (i >= 0) st = math.min(st, kills.eqEidStamp(i))
-    }
-    if (kills.eqUid.length > 0) {
-      val i = java.util.Arrays.binarySearch(kills.eqUid, cursor.userId)
-      if (i >= 0) st = math.min(st, kills.eqUidStamp(i))
-    }
-    if (kills.eqEty.length > 0) {
-      val i = java.util.Arrays.binarySearch(
-        kills.eqEty.asInstanceOf[Array[AnyRef]], cursor.etype.toString)
-      if (i >= 0) st = math.min(st, kills.eqEtyStamp(i))
-    }
-    tupleProbes.foreach { case (probe, stamps) =>
-      val i = probe.indexOf(cursor.eventId, cursor.userId, cursor.etype)
-      if (i >= 0) st = math.min(st, stamps(i))
-    }
-    if (st == Long.MaxValue) Long.MinValue else st
-  }
 
   override def next(): Boolean = {
     while (cursor.advance()) {
@@ -396,7 +264,10 @@ private[sources] class GraftLogChangesReader(
       // stamped segments, so the guard lives here)
       val stamp =
         if (p.insert) cursor.field(GraftLog.META_STAMP).asInstanceOf[java.lang.Long]
-        else { val k = killStamp(); if (k == Long.MinValue) null else Long.box(k) }
+        else {
+          val k = kills.killStamp(cursor.eventId, cursor.userId, cursor.etype)
+          if (k == Long.MinValue) null else Long.box(k)
+        }
       if (stamp != null) {
         val vals = new Array[Any](4 + nExtra + 2)
         vals(0) = cursor.eventId; vals(1) = cursor.userId

@@ -183,25 +183,41 @@ class ContractSpec extends SparkTestBase {
     assert(hits.isEmpty, s"v1 filter SPI named in src/main:\n${hits.mkString("\n")}")
   }
 
+  /** `file:line: text` of every non-comment src/main line outside the
+    * one `owner` file that matches `pattern`. The owner must match it
+    * itself, or the scan is broken. */
+  private def outsideOwner(owner: String, pattern: scala.util.matching.Regex): List[String] = {
+    import scala.jdk.CollectionConverters._
+    val comment = """^\s*(//|\*|/\*)""".r
+    val files = mainSources()
+    val own = files.filter(_.endsWith(owner))
+    assert(own.size == 1, s"$owner not among ${files.size} scanned files")
+    assert(pattern.findFirstIn(new String(java.nio.file.Files.readAllBytes(own.head),
+      java.nio.charset.StandardCharsets.UTF_8)).isDefined,
+      s"$owner names nothing matching $pattern; the scan is broken")
+    files.filterNot(own.contains).flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if comment.findFirstIn(line).isEmpty &&
+          pattern.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+  }
+
   test("one stream lifecycle: only Streams.scala starts or waits on a streaming query") {
     // every bounded streaming run goes through Streams.drain, which owns
     // the checkpoint, the shuffle scope, the wait and the stop
-    import scala.jdk.CollectionConverters._
-    val lifecycle = """\.writeStream|awaitTermination|processAllAvailable""".r
-    val comment = """^\s*(//|\*|/\*)""".r
-    val files = mainSources()
-    val owner = files.filter(_.endsWith("streaming/Streams.scala"))
-    assert(owner.size == 1, s"streaming/Streams.scala not among ${files.size} scanned files")
-    assert(lifecycle.findFirstIn(new String(java.nio.file.Files.readAllBytes(owner.head),
-      java.nio.charset.StandardCharsets.UTF_8)).isDefined,
-      "Streams.scala names no streaming lifecycle call; the scan is broken")
-    val hits = files.filterNot(owner.contains).flatMap { f =>
-      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
-        case (line, i) if comment.findFirstIn(line).isEmpty &&
-          lifecycle.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
-      }
-    }
+    val hits = outsideOwner("streaming/Streams.scala",
+      """\.writeStream|awaitTermination|processAllAvailable""".r)
     assert(hits.isEmpty, s"streaming lifecycle outside Streams.drain:\n${hits.mkString("\n")}")
+  }
+
+  test("one delete-key codec: only GraftDeletes.scala names the eq-delete line codec") {
+    // headers, key lines, the loader, the probe and the zone test of
+    // graftlog's delete files live in GraftDeletes; every writer and
+    // reader goes through its API
+    val hits = outsideOwner("sources/GraftDeletes.scala",
+      """EQ_DELETE_HEADER\w*|encEqKeyLine|decEqKeyLine|tupleHeaderOrds""".r)
+    assert(hits.isEmpty, s"eq-delete codec named outside GraftDeletes:\n${hits.mkString("\n")}")
   }
 
   test("every oracle key has a query") {

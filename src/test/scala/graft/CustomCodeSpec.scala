@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.{VectorFns, VwapAggregator}
-import graft.operators.{Relational, VectorOps}
+import graft.operators.VectorOps
 
 /** The custom-code surface: VwapAggregator (UD1) and the codegen'd
   * CosineSimilarity expression (graft.plans). */

@@ -1575,6 +1575,87 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       "an idle drain re-delivered rows")
   }
 
+  /** Upserts `wave1`, then `wave2`, into a new snapshot-retaining table
+    * keyed on `key`, then drains the changes stream over the wave-2
+    * window: it must equal the batch readChanges over the same stamps.
+    * Returns the window's rows as (event_id, event_type, value,
+    * _change_type). */
+  private def drainEqualsBatch(table: String, key: String,
+      wave1: org.apache.spark.sql.DataFrame,
+      wave2: org.apache.spark.sql.DataFrame): Set[(Long, String, Double, String)] = {
+    import org.apache.spark.sql.streaming.Trigger
+    spark.sql(s"CREATE TABLE graft.$table (event_id BIGINT, user_id BIGINT, " +
+      "value DOUBLE, event_type STRING) USING graftlog " +
+      "TBLPROPERTIES ('snapshot.retain'='true')")
+    val dir = new java.io.File(
+      spark.conf.get("spark.sql.catalog.graft.warehouse"), table).getPath
+    val src = Scratch.dir(s"graft_${table}_src")
+    val ckpt = Scratch.streamCkptDir(s"graft_${table}_ckpt")
+    def drainUpsert(): Unit =
+      spark.readStream.format("graftlog").load(src)
+        .writeStream.format("graftlog")
+        .option("upsertKey", key)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start(dir)
+        .awaitTermination()
+    val cols = Seq("event_id", "user_id", "value", "event_type").map(col)
+    wave1.select(cols: _*).repartition(2).write.format("graftlog").mode("append").save(src)
+    drainUpsert()
+    val s1 = sources.GraftLog.latestSnapshotStamp(dir)
+    wave2.select(cols: _*).repartition(1).write.format("graftlog").mode("append").save(src)
+    drainUpsert()
+    val s2 = sources.GraftLog.latestSnapshotStamp(dir)
+    val outDir = Scratch.dir(s"graft_${table}_out")
+    spark.readStream.format("graftlog")
+      .option("readChanges", "true").option("changesFrom", s1).load(dir)
+      .writeStream.format("parquet").option("path", outDir)
+      .option("checkpointLocation", Scratch.streamCkptDir(s"graft_${table}_chckpt"))
+      .trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("event_id"), col("event_type"), col("value"),
+        col("_change_type"), col("_change_stamp")).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getString(3),
+          r.getLong(4))).toSet
+    val streamed = rows(spark.read.parquet(outDir))
+    val batch = rows(sources.GraftLog.readChanges(spark, dir, s1, s2))
+    assert(streamed == batch,
+      s"streamed window != batch readChanges: extra ${streamed -- batch}, " +
+        s"missing ${batch -- streamed}")
+    streamed.map(r => (r._1, r._2, r._3, r._4))
+  }
+
+  test("changes STREAM drain equals batch readChanges on an event_type-keyed window with the empty key") {
+    // the string kill probe: keys compared as UTF-8 bytes on both sides,
+    // and the '.' marker line decodes to the empty key
+    val base = events.orderBy("event_id").limit(10)
+    val minId = base.agg(min("event_id")).collect()(0).getLong(0)
+    val typed = base.withColumn("event_type",
+      when(col("event_id") === minId, lit(""))
+        .otherwise(concat(lit("t"), col("event_id").cast("string"))))
+    val fix = typed.filter(col("event_id") % 2 === 0 || col("event_id") === minId)
+      .withColumn("value", col("value") + 1000)
+    val window = drainEqualsBatch("cdf_st_ety", "event_type", typed, fix)
+    val fixed = fix.select(col("event_type")).collect().map(_.getString(0)).toSet
+    val deleted = window.filter(_._4 == "delete").map(_._2)
+    assert(deleted == fixed && deleted.contains(""),
+      s"the window must delete exactly the corrected keys, the empty one included: $deleted")
+  }
+
+  test("changes STREAM drain equals batch readChanges on a (user_id,event_type)-keyed window") {
+    // the composite kill probe: a correction of (u, 'a') must not touch
+    // (u, 'b'), which shares its first component
+    val six = spark.range(6).select(
+      col("id").as("event_id"), (col("id") % 3).as("user_id"),
+      (col("id") * 10 + 10).cast("double").as("value"),
+      when(col("id") < 3, lit("a")).otherwise(lit("b")).as("event_type"))
+    val fix = six.filter(col("event_type") === "a").withColumn("value", col("value") * 3)
+    val window = drainEqualsBatch("cdf_st_ck", "user_id,event_type", six, fix)
+    val deleted = window.filter(_._4 == "delete")
+    assert(deleted.size == 3 && deleted.forall(_._2 == "a"),
+      s"the window must delete exactly the three corrected 'a' tuples: $deleted")
+  }
+
   test("changes stream excludes unstamped foreign segments, like the batch reader") {
     // round-20 self-review: a rewrite can merge a RECONCILED foreign
     // (unstamped) file with in-window stamped files — the merged file's

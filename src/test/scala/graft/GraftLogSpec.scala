@@ -156,6 +156,55 @@ class GraftLogSpec extends SparkTestBase with BeforeAndAfterAll {
       s"expected a 'corrupt record' failure, got: $e")
   }
 
+  test("a corrupt equality-delete record fails LOUDLY on the scan, compaction and changes-stream paths") {
+    // a lone '-' and an over-Long key are not keys: every reader of the
+    // published .graftdel must name the file, never throw a bare
+    // NumberFormatException or apply a garbage takedown
+    import org.apache.spark.sql.streaming.Trigger
+    val src = Scratch.dir("graftlog_spec_baddel_src")
+    val sink = Scratch.dir("graftlog_spec_baddel_sink")
+    val ckpt = Scratch.streamCkptDir("graftlog_spec_baddel_ckpt")
+    def drain(): Unit =
+      spark.readStream.format("graftlog").load(src)
+        .writeStream.format("graftlog")
+        .option("upsertKey", "event_id")
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start(sink)
+        .awaitTermination()
+    val base = events.orderBy("event_id").limit(10)
+    base.repartition(1).write.format("graftlog").mode("append").save(src)
+    drain()
+    val s1 = GraftLog.latestSnapshotStamp(sink)
+    base.withColumn("value", col("value") * 2)
+      .repartition(1).write.format("graftlog").mode("append").save(src)
+    drain()
+    val dels = new java.io.File(sink).listFiles().filter(_.getName.endsWith(".graftdel"))
+    assert(dels.length == 1, s"fixture: expected one published eq-delete, got ${dels.length}")
+    def labeled(t: Throwable): Boolean =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(12)
+        .exists { c =>
+          val m = String.valueOf(c.getMessage)
+          m.contains("corrupt equality-delete record in ") && m.contains(dels.head.getName)
+        }
+    Seq("-", "99999999999999999999").foreach { bad =>
+      java.nio.file.Files.writeString(dels.head.toPath, s"eq event_id\n$bad\n")
+      val paths = Seq[(String, () => Any)](
+        "batch scan" -> (() => spark.read.format("graftlog").load(sink).collect()),
+        "compact" -> (() => GraftLog.compact(spark, sink, 1L << 30)),
+        "changes stream" -> (() =>
+          spark.readStream.format("graftlog")
+            .option("readChanges", "true").option("changesFrom", s1).load(sink)
+            .writeStream.format("noop")
+            .option("checkpointLocation", Scratch.streamCkptDir("graftlog_spec_baddel_ch"))
+            .trigger(Trigger.AvailableNow()).start()
+            .awaitTermination()))
+      paths.foreach { case (what, run) =>
+        val e = intercept[Exception](run())
+        assert(labeled(e), s"$what on '$bad': expected the labeled corrupt-record error, got: $e")
+      }
+    }
+  }
+
   test("V2 write commit publishes atomically: no .tmp leftovers, append adds, overwrite truncates") {
     val dir = Scratch.dir("graftlog_spec_write")
     val five = events.orderBy("event_id").limit(5)

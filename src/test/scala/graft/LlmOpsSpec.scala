@@ -607,7 +607,6 @@ class LlmOpsSpec extends SparkTestBase with BeforeAndAfterAll {
     // determinism + collision semantics: identical payloads MUST collide
     // (fingerprint is a pure function of bytes) — check by fingerprinting
     // a two-copy corpus via the same code path on a temp dir.
-    import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("ahash_dup").toString
     val docs = graft.sources.Tables.load(spark, sfDir, "documents").limit(5)
     docs.union(docs.withColumn("doc_id", col("doc_id") + 1000000L))
