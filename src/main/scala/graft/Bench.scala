@@ -1,4 +1,7 @@
 package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 object Bench {
 
   /** Cumulative stop-the-world GC time of this JVM, ms. */
@@ -60,12 +63,51 @@ object Bench {
       finally src.close()
     } catch { case _: Throwable => -1.0 }
 
+  /** Every query Bench can time: the registry plus the bench-only sketch
+    * variants, which measure the sketch-path plan shape that the
+    * oracle-checkable registered forms no longer exercise. */
+  val benchable: Map[String, (SparkSession, String) => DataFrame] =
+    SparkEntry.queries ++ BenchOnly.queries
+
   /** The positional basis of the q_cs tail line: benchable registry names
     * in ascending order. ContractSpec pins the artifact contract against
     * this (round-12 verdict #5) so a registry insertion cannot silently
     * shift the positional map. */
-  def registryNamesSorted: Seq[String] =
-    (SparkEntry.queries.keySet ++ BenchOnly.queries.keySet).toSeq.sorted
+  def registryNamesSorted: Seq[String] = benchable.keys.toSeq.sorted
+
+  /** One measured run: this JVM's deltas over it and the stages it
+    * completed. `wallS` is the elapsed time even when the run threw;
+    * `error` says whether it did. -1 where the JVM does not report CPU or
+    * JIT time. */
+  private[graft] final case class Run(wallS: Double, gcMs: Long, cpuS: Double,
+      jitMs: Long, codegenN: Long, stages: Seq[StageLog.Stage], error: Option[Throwable]) {
+    /** This run, or its error rethrown. */
+    def orThrow: Run = { error.foreach(e => throw e); this }
+  }
+
+  /** Times `build` plus a noop write of the result: the whole optimized
+    * plan, as Verify and perfbench run it, writing nothing. A `count()`
+    * would let Catalyst prune the final sort, every unused column and the
+    * joins that cannot change the row count. The run's [[StageLog]] is
+    * read after the clock stops and the listener bus has drained, so no
+    * stage of the run is missed. */
+  private[graft] def measure(spark: SparkSession)(build: => DataFrame): Run = {
+    val sc = spark.sparkContext
+    val log = new StageLog
+    sc.addSparkListener(log)
+    try {
+      val j0 = jitMillis; val g0 = gcMillis; val c0 = cpuNanos; val n0 = codegenCount
+      val t0 = System.nanoTime()
+      val error =
+        try { build.write.format("noop").mode("overwrite").save(); None }
+        catch { case e: Throwable => Some(e) }
+      val run = Run((System.nanoTime() - t0) / 1e9, gcMillis - g0,
+        if (c0 < 0) -1.0 else (cpuNanos - c0) / 1e9,
+        if (j0 < 0) -1L else jitMillis - j0, codegenCount - n0, Nil, error)
+      org.apache.spark.GraftBus.drain(sc)
+      run.copy(stages = log.snapshot())
+    } finally sc.removeSparkListener(log)
+  }
 
   private def fmt(v: Double) =
     if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.4f", v)
@@ -166,17 +208,10 @@ object Bench {
   /** Mutable per-query record; retry runs at session end append to the
     * same arrays, so the artifact keeps every sample (a storm run stays
     * visible even after a clean retry replaces it as the best). */
-  private final class Rec {
-    var warmS = -1.0
-    var warmCpuS = -1.0
-    val wall = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val gcMs = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val cpuS = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val stg = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val spl = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val jit = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val codegen = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var warmCodegen = -1L
+  private final class Rec(val warm: Run) {
+    val runs = scala.collection.mutable.ArrayBuffer.empty[Run]
+    /** Wall per timed run, -1 for a run that threw. */
+    def wall: Seq[Double] = runs.map(r => if (r.error.isEmpty) r.wallS else -1.0).toSeq
     val memMb = scala.collection.mutable.ArrayBuffer.empty[Long]
     val psi = scala.collection.mutable.ArrayBuffer.empty[Double]
     var retries = 0
@@ -206,17 +241,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.local()
     // Optional args = run only these queries (local iteration aid; the
-    // driver passes none and benches everything). Bench-only sketch
-    // variants ride along: they measure the sketch-path plan shape that
-    // the oracle-checkable registered forms no longer exercise.
-    val benchable = SparkEntry.queries ++ BenchOnly.queries
+    // driver passes none and benches everything).
     val selected: Seq[String] =
       if (args.isEmpty) benchable.keys.toSeq
       else benchable.keys.filter(args.toSet).toSeq
-    // Steady-state measurement: run each query once untimed (pays one-off
+    // Steady-state measurement: each run is one `measure` of the query's
+    // whole plan. Run each query once untimed (pays one-off
     // whole-stage-codegen compilation + file listing, both cached by Spark),
     // then time TIMED_RUNS further executions and report the MIN — the
     // figure that scales with data volume rather than with plan complexity
@@ -246,34 +278,13 @@ object Bench {
     val MAX_RUNS = 4
     val reference = loadReference(
       sys.env.getOrElse("GRAFT_BENCH_REF", "bench_reference.json"))
-    // (Round-11 negative result, kept for the record: warming
-    // dedup_embedding_cosine TWICE did not remove its recurring
-    // first-timed-run spike, and the query is stable in an isolated JVM
-    // (2.4-3.8 s every run). The spike is a session-context JVM effect on
-    // this query's large generated classes, not an invocation-threshold
-    // warmup, so the extra warm was removed; the adaptive extra runs keep
-    // it out of the reported best.)
-    val stats = new StageLog
-    spark.sparkContext.addSparkListener(stats)
 
     val recs = scala.collection.mutable.LinkedHashMap.empty[String, Rec]
 
     def timedRun(name: String, rec: Rec): Unit = {
-      val fn = benchable(name)
       rec.memMb += memAvailableMb
       rec.psi += memPsiSome10
-      stats.reset()
-      val j0 = jitMillis; val g0 = gcMillis; val c0 = cpuNanos; val n0 = codegenCount
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-      rec.wall += (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-      rec.gcMs += gcMillis - g0
-      rec.cpuS += (if (c0 < 0) -1.0 else (cpuNanos - c0) / 1e9)
-      val st = stats.snapshot()
-      rec.stg += st.size
-      rec.spl += st.map(_.spilledBytes).sum / (1024 * 1024)
-      rec.jit += (if (j0 < 0) -1L else jitMillis - j0)
-      rec.codegen += codegenCount - n0
+      rec.runs += measure(spark)(benchable(name)(spark, sfDir))
     }
 
     def stormSuspect(name: String, rec: Rec): Boolean =
@@ -281,14 +292,8 @@ object Bench {
 
     val deferred = scala.collection.mutable.ArrayBuffer.empty[String]
     selected.foreach { name =>
-      val rec = new Rec
+      val rec = new Rec(measure(spark)(benchable(name)(spark, sfDir)))
       recs(name) = rec
-      val warmJit0 = jitMillis; val warmCpu0 = cpuNanos; val warmN0 = codegenCount
-      val warmT0 = System.nanoTime()
-      try { benchable(name)(spark, sfDir).count() } catch { case _: Throwable => () }
-      rec.warmS = (System.nanoTime() - warmT0) / 1e9
-      rec.warmCodegen = codegenCount - warmN0
-      rec.warmCpuS = if (warmCpu0 < 0) -1.0 else (cpuNanos - warmCpu0) / 1e9
       // JIT-drain barrier (round 11): the warm pass queues C2 compilation
       // of the plan's freshly generated classes, and a first timed run
       // that starts while the queue drains executes deoptimized code — the
@@ -296,7 +301,7 @@ object Bench {
       // jit_ms, absorbed only by the adaptive extra runs). When the warm
       // pass compiled enough to matter (>300ms), wait until compilation
       // time stops advancing (<=20ms over 200ms) before timing, 3s cap.
-      if (jitMillis - warmJit0 > 300) {
+      if (rec.warm.jitMs > 300) {
         val deadline = System.nanoTime() + 3L * 1000 * 1000 * 1000
         var last = jitMillis
         var stable = false
@@ -364,16 +369,17 @@ object Bench {
       ordered.map(kv => s"\"" + kv._1 + "\":" + f(kv)).mkString("{", ",", "}")
     val qs = best.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
+    def perRun(f: Run => Any) = jmap { case (_, r) => r.runs.map(f).mkString("[", ",", "]") }
     val rs = jmap { case (_, r) => r.wall.map(fmt).mkString("[", ",", "]") }
-    val gs = jmap { case (_, r) => r.gcMs.mkString("[", ",", "]") }
-    val cs = jmap { case (_, r) => r.cpuS.map(fmt).mkString("[", ",", "]") }
-    val ss = jmap { case (_, r) => r.stg.mkString("[", ",", "]") }
-    val ps = jmap { case (_, r) => r.spl.mkString("[", ",", "]") }
-    val js = jmap { case (_, r) => r.jit.mkString("[", ",", "]") }
-    val ns = jmap { case (_, r) => r.codegen.mkString("[", ",", "]") }
-    val wn = jmap { case (_, r) => r.warmCodegen.toString }
-    val ws = jmap { case (_, r) => fmt(r.warmS) }
-    val wc = jmap { case (_, r) => fmt(r.warmCpuS) }
+    val gs = perRun(_.gcMs)
+    val cs = perRun(r => fmt(r.cpuS))
+    val ss = perRun(_.stages.size)
+    val ps = perRun(_.stages.map(_.spilledBytes).sum / (1024 * 1024))
+    val js = perRun(_.jitMs)
+    val ns = perRun(_.codegenN)
+    val wn = jmap { case (_, r) => r.warm.codegenN.toString }
+    val ws = jmap { case (_, r) => fmt(r.warm.wallS) }
+    val wc = jmap { case (_, r) => fmt(r.warm.cpuS) }
     val hm = jmap { case (_, r) => r.memMb.mkString("[", ",", "]") }
     val hp = jmap { case (_, r) => r.psi.map(fmt).mkString("[", ",", "]") }
     val defJson = deferred.map(n => s"\"" + n + "\":" + recs(n).retries)
@@ -430,7 +436,7 @@ object Bench {
     // are small, so they emit a NAMED map instead.
     val tail =
       if (args.isEmpty)
-        s""""q_cs":${qcsJson(best)},"q_cs_doc":"best wall per query, centiseconds, queries sorted by name asc (names: bench_out.json or SparkEntry.queries++BenchOnly.queries)""""
+        s""""q_cs":${qcsJson(best)},"q_cs_doc":"best wall per query, centiseconds, queries sorted by name asc (names: bench_out.json or Bench.benchable)""""
       else
         s""""subset":true,"q_named":$qs"""
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nqueries":${best.size},"nfailed":${best.count(_._2 < 0)},"ndeferred":${deferred.size},"nsuspect":${stillSuspect.size},"session_drift":${fmt(drift)},"drift_n":$driftN,"ndrift_outliers":${outliers.size},"nref_stale":${stale.size},$tail,"sf":"$sfDir"}""")

@@ -10,7 +10,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val account = if (args.length > 1) args(1) else "ACC-EQ-1"
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = Sessions.local()
     val out = operators.Flagship.pipeline(spark, sfDir, account)
     println(s"flagship pipeline on $sfDir (account $account): " +
       s"${out.columns.length} columns, ${out.count()} rows")

@@ -18,11 +18,10 @@ object ExplainDump {
     val suffix = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val benchable = SparkEntry.queries ++ BenchOnly.queries
+    val spark = Sessions.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"plans/$tag"))
     names.foreach { name =>
-      val df = benchable(name)(spark, sfDir)
+      val df = Bench.benchable(name)(spark, sfDir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.writeString(

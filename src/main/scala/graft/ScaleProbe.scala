@@ -23,6 +23,8 @@ import org.apache.spark.sql.functions._
   *    count is fixed while the searched corpus grows FACTOR-fold — the
   *    production scaling axis.
   *
+  * Each run is one [[Bench.measure]]: the query's whole plan, warmed once.
+  *
   * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.ScaleProbe [baseDir] [factor]"
   * Prints one JSON line per (dir, query); SCALING.md is written from these.
   */
@@ -91,11 +93,9 @@ object ScaleProbe {
     val factor = if (args.length > 1) args(1).toInt else 10
     // optional 3rd+ args: probe only these FAMILY queries (local iteration)
     val only = args.drop(2).toSet
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Sessions.local()
     val big = s"/tmp/graft_scale/${new java.io.File(base).getName}_x$factor"
     replicate(spark, base, big, factor)
-    val stats = new StageLog
-    spark.sparkContext.addSparkListener(stats)
     def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", v)
     // Round-12 verdict #7: accumulate per-(dir, query) walls so the run
     // also lands as ONE machine-checkable JSON (scale_out.json: query ->
@@ -106,21 +106,17 @@ object ScaleProbe {
       .empty[String, scala.collection.mutable.Map[String, Double]]
     for (dir <- Seq(base, big); name <- FAMILY if only.isEmpty || only(name)) {
       val fn = SparkEntry.queries(name)
-      fn(spark, dir).count() // warm: codegen + listing cached, inputs staged
-      stats.reset()
-      val t0 = System.nanoTime()
-      fn(spark, dir).count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(800) // let the async listener bus drain
-      val st = stats.snapshot()
+      Bench.measure(spark)(fn(spark, dir)).orThrow // warm: codegen + listing cached, inputs staged
+      val run = Bench.measure(spark)(fn(spark, dir)).orThrow
+      val st = run.stages
       val heavy1 = st.count(g => g.tasks == 1 && g.bytesIn > HEAVY_BYTES)
       val maxTasks = if (st.isEmpty) 0 else st.map(_.tasks).max
       val maxBytes = if (st.isEmpty) 0L else st.map(_.bytesIn).max
-      println(s"""SCALEPROBE {"dir":"$dir","query":"$name","secs":${fmt(secs)},""" +
+      println(s"""SCALEPROBE {"dir":"$dir","query":"$name","secs":${fmt(run.wallS)},""" +
         s""""stages":${st.size},"max_tasks":$maxTasks,"one_task_heavy":$heavy1,""" +
         s""""max_stage_mb":${maxBytes / 1024 / 1024}}""")
       walls.getOrElseUpdate(name, scala.collection.mutable.Map.empty)(
-        if (dir == base) "base_s" else "big_s") = secs
+        if (dir == base) "base_s" else "big_s") = run.wallS
     }
     val entries = walls.toSeq.sortBy(_._1).map { case (name, w) =>
       val b = w.getOrElse("base_s", -1.0)

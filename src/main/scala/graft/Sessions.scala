@@ -45,6 +45,10 @@ object Sessions {
     * it goes on the builder; `spark.conf.set` cannot change it. */
   val CodegenCacheEntries: Int = 1000
 
+  /** The mains' local session: `SPARK_GRAFT_CPUS` executor threads,
+    * default 4. */
+  def local(): SparkSession = local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+
   /** Local session shaped like the driver harness runs it. */
   def local(cpus: String): SparkSession = {
     val spark = SparkSession.builder()

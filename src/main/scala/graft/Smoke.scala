@@ -2,7 +2,7 @@ package graft
 /** t1-style smoke: SparkEntry.entry must return rows on sf0.001. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = Sessions.local()
     val n = SparkEntry.entry(spark).count()
     println(s"""{"smoke_rows":$n}""")
     spark.stop()

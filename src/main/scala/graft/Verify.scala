@@ -8,8 +8,7 @@ object Verify {
     // optional extra args: run only the named queries (local iteration;
     // the driver's 2-arg invocation is unaffected)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     // Failed queries (no parquet written) are recorded in _failures.json so
     // the compare step has a positive signal even for oracle-less queries,

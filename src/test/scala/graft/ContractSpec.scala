@@ -56,9 +56,8 @@ class ContractSpec extends SparkTestBase {
     // ascending name order). r11 verified the 188-entry alignment by hand;
     // this pins it so a registry insertion cannot silently shift the map.
     val names = Bench.registryNamesSorted
-    val registry = SparkEntry.queries ++ BenchOnly.queries
-    assert(names.length == registry.size,
-      s"q_cs basis has ${names.length} entries for ${registry.size} benchable queries")
+    assert(names.length == Bench.benchable.size,
+      s"q_cs basis has ${names.length} entries for ${Bench.benchable.size} benchable queries")
     assert(names == names.sorted, "q_cs basis is not name-sorted")
     assert(names.distinct.length == names.length, "duplicate names in q_cs basis")
     // Round-trip one entry: name -> position -> centiseconds. Encode a
@@ -91,8 +90,7 @@ class ContractSpec extends SparkTestBase {
       "failed queries are reported as failures, not deferred")
     val ref = Bench.loadReference("bench_reference.json")
     assert(ref.nonEmpty, "committed bench_reference.json failed to parse")
-    val registry = (SparkEntry.queries ++ BenchOnly.queries).keySet
-    val stale = ref.keySet -- registry
+    val stale = ref.keySet -- Bench.benchable.keySet
     assert(stale.isEmpty, s"reference entries with no registry query: $stale")
     assert(ref.values.forall(v => v > 0 && v < 120),
       "reference seconds outside sane bounds — regenerated from a bad run?")
@@ -218,6 +216,27 @@ class ContractSpec extends SparkTestBase {
     val hits = outsideOwner("sources/GraftDeletes.scala",
       """EQ_DELETE_HEADER\w*|encEqKeyLine|decEqKeyLine|tupleHeaderOrds""".r)
     assert(hits.isEmpty, s"eq-delete codec named outside GraftDeletes:\n${hits.mkString("\n")}")
+  }
+
+  test("one measured run: only Bench.scala builds a StageLog or registers a listener") {
+    // Bench.measure owns the one stage log of every timed run: it
+    // registers it, drains the bus after the clock stops and removes it
+    val hits = outsideOwner("graft/Bench.scala", """new\s+StageLog|addSparkListener""".r)
+    assert(hits.isEmpty, s"stage listener outside Bench.measure:\n${hits.mkString("\n")}")
+  }
+
+  test("Bench.measure runs the whole plan: a column a count would prune is evaluated") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val evaluated = spark.sparkContext.longAccumulator("measure-evaluated")
+    val touch = udf { (x: Long) => evaluated.add(1); x }
+    val n = 1000L
+    val run = Bench.measure(spark)(
+      spark.range(n).select(col("id"), touch(col("id")).as("touched")))
+    assert(run.error.isEmpty, s"measured run failed: ${run.error}")
+    assert(evaluated.value == n,
+      s"the pruned column ran on ${evaluated.value} of $n rows; the timed action is not the full plan")
+    assert(run.wallS > 0 && run.stages.nonEmpty,
+      s"measured run recorded wall ${run.wallS} s and ${run.stages.size} stages")
   }
 
   test("every oracle key has a query") {

@@ -12,7 +12,7 @@ package graft
   * design), so the spec replicates sf0.01 FACTOR-fold with ScaleProbe's
   * character-preserving replica and asserts, over a 3-query sample with
   * distinct shuffle spines (shingle self-join / signature agg+band join /
-  * sharded prefix-sum):
+  * sharded prefix-sum), each run one [[Bench.measure]] of the whole plan:
   *  - no 1-task stage moved more than HEAVY bytes (input + shuffle read);
   *  - at least one stage moved more than HEAVY bytes across MANY tasks —
   *    the non-vacuity guard: if the probe corpus ever shrinks below the
@@ -52,30 +52,23 @@ class ScaleGateSpec extends SparkTestBase {
     // under /tmp/graft_scale, rebuilt only after a /tmp wipe).
     val out = s"/tmp/graft_scale/sf0.01_x$FACTOR"
     ScaleProbe.replicate(spark, base, out, FACTOR)
-    val stats = new StageLog
-    spark.sparkContext.addSparkListener(stats)
-    try {
-      var sawWideHeavy = false
-      var widestWide = 0L
-      SAMPLE.foreach { name =>
-        val fn = SparkEntry.queries(name)
-        fn(spark, out).count() // warm: codegen + file listing
-        stats.reset()
-        fn(spark, out).count()
-        Thread.sleep(800) // async listener bus drain
-        val st = stats.snapshot().map(g => (g.tasks, g.bytesIn))
-        val funnels = st.filter { case (n, b) => n == 1 && b > HEAVY }
-        assert(funnels.isEmpty,
-          s"$name: serial funnel — 1-task stage(s) moved " +
-            s"${funnels.map(_._2 / 1024 / 1024).mkString(", ")} MB")
-        widestWide = math.max(widestWide,
-          st.collect { case (n, b) if n > 1 => b }.foldLeft(0L)(math.max))
-        if (st.exists { case (n, b) => n > 1 && b > HEAVY }) sawWideHeavy = true
-      }
-      assert(sawWideHeavy,
-        s"probe corpus never crossed the ${HEAVY / 1024 / 1024} MB stage " +
-          s"threshold (widest multi-task stage: $widestWide bytes) — raise " +
-          "FACTOR or recalibrate HEAVY so the funnel assert stays non-vacuous")
-    } finally spark.sparkContext.removeSparkListener(stats)
+    var sawWideHeavy = false
+    var widestWide = 0L
+    SAMPLE.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      Bench.measure(spark)(fn(spark, out)).orThrow // warm: codegen + file listing
+      val st = Bench.measure(spark)(fn(spark, out)).orThrow.stages.map(g => (g.tasks, g.bytesIn))
+      val funnels = st.filter { case (n, b) => n == 1 && b > HEAVY }
+      assert(funnels.isEmpty,
+        s"$name: serial funnel — 1-task stage(s) moved " +
+          s"${funnels.map(_._2 / 1024 / 1024).mkString(", ")} MB")
+      widestWide = math.max(widestWide,
+        st.collect { case (n, b) if n > 1 => b }.foldLeft(0L)(math.max))
+      if (st.exists { case (n, b) => n > 1 && b > HEAVY }) sawWideHeavy = true
+    }
+    assert(sawWideHeavy,
+      s"probe corpus never crossed the ${HEAVY / 1024 / 1024} MB stage " +
+        s"threshold (widest multi-task stage: $widestWide bytes) — raise " +
+        "FACTOR or recalibrate HEAVY so the funnel assert stays non-vacuous")
   }
 }
