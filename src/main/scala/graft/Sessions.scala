@@ -2,7 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory — the engine's operational knobs in one place.
+/** Session factory: one recipe for every session the engine and its
+  * tests build. [[builder]] holds every conf the engine relies on plus
+  * [[plans.GraftExtensions]], the one registration path of the custom
+  * SQL functions; [[local]] adds what only a single-JVM session wants.
+  * New and cloned sessions (`newSession`, streaming) inherit both.
   *
   * Sizing rationale (SURVEY.md §4 / the 100 TB mandate):
   *  - shuffle partitions = executor threads locally; on a real cluster this
@@ -18,6 +22,10 @@ import org.apache.spark.sql.SparkSession
   *    caveat (single-row-group files) is handled by Tables.loadParallel,
   *    not by shrinking this global.
   *  - UTC session timezone is load-bearing for oracle parity.
+  *
+  * Local-only: the `local[n]` master, shuffle partitions = n (a cluster
+  * sizes both from its own cores), the UI off (nobody browses a bench or
+  * test driver; a cluster driver keeps it) and the WARN log level.
   */
 object Sessions {
 
@@ -49,15 +57,15 @@ object Sessions {
     * default 4. */
   def local(): SparkSession = local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
 
-  /** Local session shaped like the driver harness runs it. */
-  def local(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+  /** The engine's session recipe: every shared conf plus the extension.
+    * A cluster driver (spark-submit supplies master and resources) calls
+    * `Sessions.builder().getOrCreate()`. */
+  def builder(): SparkSession.Builder =
+    SparkSession.builder()
+      .withExtensions(new plans.GraftExtensions)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // Long many-query sessions (Bench runs 180 queries x 3 executions;
       // a production driver is resident for days): the app-status stores
       // retain 1000 jobs/stages/SQL executions by default even with the UI
@@ -81,28 +89,22 @@ object Sessions {
       .config("spark.cleaner.periodicGC.interval", "300s")
       // SESSION CONTRACT: TIMESTAMP(NANOS) parquet (one of the fixture's
       // writer generations) is only readable under this legacy conf, and
-      // it must be on BEFORE any such scan. It is session-wide and STICKY
-      // by design — Tables.load/normalizeTs own turning the surfaced
-      // nanos-long back into canonical timestamps; ad-hoc parquet reads
-      // outside Tables.load will surface NANOS columns as raw longs.
+      // it must be on BEFORE any such scan. Tables.load/normalizeTs turn
+      // the surfaced nanos-long back into canonical timestamps, and they
+      // require the conf rather than set it; ad-hoc parquet reads outside
+      // Tables.load will surface NANOS columns as raw longs.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+
+  /** Local session shaped like the driver harness runs it: [[builder]]
+    * plus `cpus` executor threads and the local-only confs. */
+  def local(cpus: String): SparkSession = {
+    val spark = builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    plans.GraftFunctions.ensureRegistered(spark)
     spark
   }
-
-  /** Production builder: same knobs, cluster master/resources come from
-    * spark-submit; custom expressions arrive via extensions so SQL-only
-    * clients get them too. */
-  def productionBuilder(): SparkSession.Builder =
-    SparkSession.builder()
-      .withExtensions(new plans.GraftExtensions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // same sticky session contract as local() — see the note there
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 }

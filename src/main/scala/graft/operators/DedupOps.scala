@@ -950,7 +950,6 @@ object DedupOps extends QueryModule {
   // is a 64-bit fingerprint with 4 x 16-bit bands, same plan.
   // ------------------------------------------------------------------
   def simhashPairs(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(s)
     // Materialize the fingerprint relation ONCE (round 22, guide §1.2
     // "don't compute things you throw away" — the scratch-parquet lineage
     // cut cappedShingles/rfm use): the pairwise core consumes fp from

@@ -240,7 +240,6 @@ object Multimodal extends QueryModule {
   // all-pairs and the oracle covers the whole decision.
   // ------------------------------------------------------------------
   def dedupPhash(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(s)
     DedupOps.simhashPairsOf(ahashFp(s, dir).withColumnRenamed("fp", "simhash"))
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-handling join utility (SURVEY.md §4.2 / builder scale mandate).
@@ -27,15 +27,5 @@ object Skew {
     val replicated = right
       .withColumn("__salt", explode(sequence(lit(0), lit(factor - 1))))
     salted.join(replicated, Seq(key, "__salt"), "inner").drop("__salt")
-  }
-
-  /** Salt only the listed hot keys; the rest join un-salted. The union of
-    * the two joins is exactly the plain join (asserted in SkewSpec). */
-  def saltedJoinHotKeys(left: DataFrame, right: DataFrame, key: String,
-      hotKeys: Seq[Any], factor: Int): DataFrame = {
-    val isHot: Column = col(key).isin(hotKeys: _*)
-    val cold = left.filter(!isHot).join(right.filter(!isHot), Seq(key), "inner")
-    val hot = saltedJoin(left.filter(isHot), right.filter(isHot), key, factor)
-    cold.unionByName(hot)
   }
 }

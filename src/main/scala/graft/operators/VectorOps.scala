@@ -142,7 +142,6 @@ object VectorOps extends QueryModule {
   // the same oracle; Bench shows the speedup.
   // ------------------------------------------------------------------
   def cosineTopKFast(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(s)
     val q = emb(s, dir).filter(col("vec_id") < NQUERY)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val d = emb(s, dir).select(col("vec_id").as("did"), col("embedding").as("de"))
@@ -153,23 +152,6 @@ object VectorOps extends QueryModule {
       .filter(col("rank") <= TOPK)
       .select(col("qid"), col("rank"), col("did"), col("cos"))
       .orderBy(col("qid"), col("rank"))
-  }
-
-  // ------------------------------------------------------------------
-  // Embedding-cosine near-duplicate pairs: all (i < j) pairs above a
-  // similarity threshold, scored by the fused codegen expression.
-  // BRUTE-FORCE form — O(n²), kept as the exact baseline the blocked
-  // variant below is cross-checked against (VectorSpec); the REGISTERED
-  // query is the blocked one.
-  // ------------------------------------------------------------------
-  def embeddingNearDup(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(s)
-    val a = emb(s, dir).select(col("vec_id").as("d1"), col("embedding").as("e1"))
-    val b = emb(s, dir).select(col("vec_id").as("d2"), col("embedding").as("e2"))
-    a.join(broadcast(b), col("d1") < col("d2"))
-      .select(col("d1"), col("d2"), expr("cosine_fast(e1, e2)").as("cos"))
-      .filter(col("cos") >= 0.5)
-      .orderBy(col("d1"), col("d2"))
   }
 
   // ------------------------------------------------------------------
@@ -189,7 +171,7 @@ object VectorOps extends QueryModule {
   // of n²); the cell id is the shuffle key; candidates are a vanishing
   // fraction of the corpus, so the single id-join that rehydrates
   // embeddings moves candidate-sized data. Same result as the brute force
-  // on the fixture (oracle + VectorSpec cross-check).
+  // on the fixture (oracle + LlmOpsSpec's brute-force cross-check).
   // ------------------------------------------------------------------
   def embeddingNearDupBlocked(s: SparkSession, dir: String): DataFrame =
     embeddingNearDupBlockedOn(emb(s, dir))
@@ -200,7 +182,6 @@ object VectorOps extends QueryModule {
     * whole plan to an EmptyRelation, which no plan-shape guard survives). */
   private[graft] def embeddingNearDupBlockedOn(e: DataFrame): DataFrame = {
     val s = e.sparkSession
-    graft.plans.GraftFunctions.ensureRegistered(s)
     val centroids = e
       .select(col("label"), posexplode(col("embedding").cast("array<double>")).as(Seq("pos", "v")))
       .groupBy(col("label"), col("pos"))
@@ -238,7 +219,7 @@ object VectorOps extends QueryModule {
     // (d1, d2) pair surfaces exactly once — at d2's chunk key — and each
     // cell's pair space splits across NCHUNK independent tasks. Same rows
     // as the plain cell join, verified by the brute-force cross-check in
-    // VectorSpec and the DuckDB oracle.
+    // LlmOpsSpec and the DuckDB oracle.
     val nShuffle = s.sessionState.conf.numShufflePartitions
     // coalesce makes the chunk key NON-NULLABLE (pmod is nullable in the
     // abstract): otherwise the join infers isnotnull(pmod(hash(vec_id)))
@@ -270,7 +251,7 @@ object VectorOps extends QueryModule {
     // candidates are distinct, vec_id is unique in the corpus, and both
     // joins are inner on ids that exist by construction — one row per
     // candidate pair DEPENDS on vec_id being unique in the corpus (the
-    // old first() aggregate collapsed hypothetical duplicates; VectorSpec's
+    // old first() aggregate collapsed hypothetical duplicates; LlmOpsSpec's
     // brute-force cross-check pins the invariant). Trade-off made
     // knowingly: in the no-broadcast fallback the corpus relation flows
     // through TWO vec_id exchanges (one per side) where the old shape paid
@@ -453,7 +434,6 @@ object VectorOps extends QueryModule {
     * driver state (PQ_M * PQ_K * PQ_SUB doubles), the literal-broadcast
     * pattern kmeansTrain uses. */
   private def pqTrain(e: DataFrame): IndexedSeq[Seq[(Long, Array[Double])]] = {
-    graft.plans.GraftFunctions.ensureRegistered(e.sparkSession)
     val initRows = e.filter(col("vec_id") < PQ_K)
       .select(col("vec_id"), col("de")).collect().sortBy(_.getLong(0))
     val init = (0 until PQ_M).map(m => initRows.toSeq.map(r => (r.getLong(0),
@@ -510,7 +490,6 @@ object VectorOps extends QueryModule {
     * not retrained per query). */
   private def pqSearch(s: SparkSession, e: DataFrame,
       cbs: IndexedSeq[Seq[(Long, Array[Double])]]): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(s)
     val withCents = pqEncodeWithCents(s, e, cbs, Seq.empty)
     val adc = withCents.crossJoin(broadcast(pqQueries(e).drop("qe")))
       .withColumn("adc", pqAdc)
@@ -615,7 +594,6 @@ object VectorOps extends QueryModule {
   // memory-volume reductions compose multiplicatively.
   // ------------------------------------------------------------------
   def annIvfPq(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(s)
     val e = emb(s, dir)
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("de"))
     val cbs = pqTrain(e.select(col("vec_id"), col("de")))
@@ -694,7 +672,6 @@ object VectorOps extends QueryModule {
   // label-bounded centroid set.
   // ------------------------------------------------------------------
   def annIvfPqResidual(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(s)
     val e = emb(s, dir)
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("de"))
     val centroidsAgg = e

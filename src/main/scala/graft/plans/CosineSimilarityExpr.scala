@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -76,24 +75,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Session-level registration so the expressions are usable from SQL and
-  * the Column API via expr("cosine_fast(a, b)") / expr("hamming_dist(a, b)").
-  * Idempotent. */
-object GraftFunctions {
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_fast",
-      { exprs: Seq[Expression] => CosineSimilarity(exprs(0), exprs(1)) },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming_dist",
-      { exprs: Seq[Expression] => HammingDistance(exprs(0), exprs(1)) },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2sq_fast",
-      { exprs: Seq[Expression] => L2Squared(exprs(0), exprs(1)) },
-      "scala_udf")
-  }
 }

@@ -52,11 +52,4 @@ object Formats {
     df.write.mode("overwrite")
       .option("timestampFormat", tsFormat)
       .json(path)
-
-  /** K1: full-refresh overwrite sink (the reference's replace-the-range
-    * publish, trading212.py:136), with a date/key-partitioned layout so
-    * readers prune partitions instead of scanning history (cf. the S6
-    * 365-day windows). */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: String*): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 }

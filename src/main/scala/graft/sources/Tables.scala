@@ -119,6 +119,17 @@ object Tables {
       case _ => df
     }
 
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Part of the session contract (graft.Sessions sets it at build time):
+    * the conf is read when the lazy scan executes, so a reader that set it
+    * here would change the caller's session for good, and one that
+    * restored it afterwards would race the action. */
+  private def requireNanosAsLong(spark: SparkSession): Unit =
+    require(spark.conf.get(NanosAsLong) == "true",
+      s"$NanosAsLong must be true before a fixture timestamp is read; " +
+        "build the session with graft.Sessions")
+
   /** Load a fixture table. Fails fast if a declared column is missing.
     * EVERY declared-timestamp column (events.ts, orders.o_orderdate,
     * lineitem.l_shipdate) is normalized to canonical TimestampType
@@ -131,13 +142,8 @@ object Tables {
     // PARQUET_TYPE_ILLEGAL at scan time otherwise, before normalizeTs can
     // see it (gating this on events-only was the round-9 review's catch:
     // a NANOS o_orderdate would have crashed every orders query).
-    // The conf is deliberately STICKY (not set/restored): the plan built
-    // here is lazy, and the scan re-reads the conf when it executes — a
-    // try/finally restore would race the action. It is therefore part of
-    // the documented session contract (Sessions sets it at build time);
-    // this set is the belt for sessions built elsewhere.
     if (expected.get(name).exists(_.fields.exists(_.dataType == TimestampType)))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      requireNanosAsLong(spark)
     val raw = spark.read.parquet(s"$sfDir/$name.parquet")
     val tsCols = expected.get(name).toSeq.flatMap(_.fields)
       .collect { case f if f.dataType == TimestampType && raw.columns.contains(f.name) => f.name }
@@ -157,7 +163,7 @@ object Tables {
     * instead of hard-coding a physical type that the next fixture
     * regeneration invalidates. */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    requireNanosAsLong(spark)
     // Peek the schema over the SAME glob the stream reads (round-9 advice:
     // peeking events.parquet alone while streaming events.parqu* mirrors
     // the wrong physical type if the glob ever matches files from a

@@ -33,16 +33,6 @@ object Streams {
   def eventsStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(Tables.events).parquet(dir)
 
-  /** ST1: tumbling 1-hour window aggregate with a 2-hour watermark. */
-  def tumblingAgg(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,4)")).cast("decimal(38,4)").as("total_value"))
-      .select(col("window.start").as("window_start"), col("window.end").as("window_end"),
-        col("event_type"), col("n"), col("total_value"))
-
   /** ST3: watermarked exactly-once dedup on the event key. */
   def dedupStream(events: DataFrame): DataFrame =
     events.withWatermark("ts", "1 hour").dropDuplicates("event_id")

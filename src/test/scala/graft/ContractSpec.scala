@@ -134,10 +134,10 @@ class ContractSpec extends SparkTestBase {
   private val envKnobs = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS",
     "GRAFT_BENCH_REF")
 
-  /** Every `.scala` file under src/main. */
-  private def mainSources(): List[java.nio.file.Path] = {
+  /** Every `.scala` file under `dir` (src/main by default). */
+  private def scalaFiles(dir: String = "src/main"): List[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main")
+    val root = java.nio.file.Paths.get(dir)
     val files = {
       val s = java.nio.file.Files.walk(root)
       try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
@@ -148,7 +148,7 @@ class ContractSpec extends SparkTestBase {
   }
 
   test("env-knob inventory: src/main reads exactly the documented variables") {
-    val files = mainSources()
+    val files = scalaFiles()
     val read = """(?:sys\.env|System\.getenv)""".r
     val keyed = """(?:sys\.env(?:\.getOrElse|\.get|\.contains|\.apply)?|System\.getenv)\(\s*"([A-Za-z0-9_]+)"""".r
     val found = files.flatMap { f =>
@@ -173,7 +173,7 @@ class ContractSpec extends SparkTestBase {
     // through GraftLog.v2ToV1; the v1 SPIs would bring back Spark's own
     // second translation in front of it
     val v1 = """SupportsPushDownFilters|SupportsRuntimeFiltering\b""".r
-    val hits = mainSources().flatMap { f =>
+    val hits = scalaFiles().flatMap { f =>
       val text = new String(java.nio.file.Files.readAllBytes(f),
         java.nio.charset.StandardCharsets.UTF_8)
       v1.findAllIn(text).map(m => s"$f: $m")
@@ -181,13 +181,14 @@ class ContractSpec extends SparkTestBase {
     assert(hits.isEmpty, s"v1 filter SPI named in src/main:\n${hits.mkString("\n")}")
   }
 
-  /** `file:line: text` of every non-comment src/main line outside the
+  /** `file:line: text` of every non-comment line under `dirs` outside the
     * one `owner` file that matches `pattern`. The owner must match it
     * itself, or the scan is broken. */
-  private def outsideOwner(owner: String, pattern: scala.util.matching.Regex): List[String] = {
+  private def outsideOwner(owner: String, pattern: scala.util.matching.Regex,
+      dirs: Seq[String] = Seq("src/main")): List[String] = {
     import scala.jdk.CollectionConverters._
     val comment = """^\s*(//|\*|/\*)""".r
-    val files = mainSources()
+    val files = dirs.toList.flatMap(scalaFiles)
     val own = files.filter(_.endsWith(owner))
     assert(own.size == 1, s"$owner not among ${files.size} scanned files")
     assert(pattern.findFirstIn(new String(java.nio.file.Files.readAllBytes(own.head),
@@ -223,6 +224,22 @@ class ContractSpec extends SparkTestBase {
     // registers it, drains the bus after the clock stops and removes it
     val hits = outsideOwner("graft/Bench.scala", """new\s+StageLog|addSparkListener""".r)
     assert(hits.isEmpty, s"stage listener outside Bench.measure:\n${hits.mkString("\n")}")
+  }
+
+  test("one session recipe: only Sessions.scala builds a session, in src/main and src/test") {
+    // Sessions.builder holds every conf and the extension; the mains, the
+    // suite and perfbench all build through it
+    val hits = outsideOwner("graft/Sessions.scala", """SparkSession\s*\.\s*builder""".r,
+      Seq("src/main", "src/test"))
+    assert(hits.isEmpty, s"session built outside Sessions:\n${hits.mkString("\n")}")
+  }
+
+  test("one registration path: the extension alone installs the custom functions") {
+    // the runtime registrar is named only where it is defined; its one
+    // remaining caller is perfbench
+    val hits = outsideOwner("plans/GraftExtensions.scala", """\bensureRegistered\b""".r,
+      Seq("src/main", "src/test"))
+    assert(hits.isEmpty, s"custom functions registered outside the extension:\n${hits.mkString("\n")}")
   }
 
   test("Bench.measure runs the whole plan: a column a count would prune is evaluated") {

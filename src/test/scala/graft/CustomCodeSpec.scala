@@ -46,7 +46,6 @@ class CustomCodeSpec extends SparkTestBase {
   }
 
   test("l2sq_fast expression is bit-identical to the three-fold HOF identity") {
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     def hof(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       VectorFns.dot(a, a) + VectorFns.dot(b, b) - lit(2.0) * VectorFns.dot(a, b)
     val e = graft.sources.Tables.load(spark, sfDir, "embeddings")
@@ -67,7 +66,6 @@ class CustomCodeSpec extends SparkTestBase {
   }
 
   test("hamming_dist: hand-computed values, null propagation, codegen") {
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     val df = Seq[(java.lang.Long, java.lang.Long)](
       (0L, 0L), (0L, 15L), (0b1010L, 0b0101L), (Long.MaxValue, 0L), (null, 3L))
       .toDF("a", "b")
@@ -90,7 +88,6 @@ class CustomCodeSpec extends SparkTestBase {
   }
 
   test("cosine_fast agrees with VectorFns.cosine on raw pairs and stays in codegen") {
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     val e = graft.sources.Tables.load(spark, sfDir, "embeddings").limit(50)
     val pairs = e.select(col("vec_id").as("i"), col("embedding").as("a"))
       .crossJoin(e.select(col("vec_id").as("j"), col("embedding").as("b")))

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.{Formats, Tables}
 
@@ -10,6 +11,13 @@ import graft.sources.{Formats, Tables}
 class FormatsSpec extends SparkTestBase {
 
   private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+
+  /** K1: full-refresh overwrite sink (the reference's replace-the-range
+    * publish, trading212.py:136), with a date/key-partitioned layout so
+    * readers prune partitions instead of scanning history (cf. the S6
+    * 365-day windows). */
+  private def writePartitioned(df: DataFrame, path: String, partitionCols: String*): Unit =
+    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 
   lazy val events = Tables.load(spark, sfDir, "events").cache()
 
@@ -42,7 +50,7 @@ class FormatsSpec extends SparkTestBase {
 
   test("dynamic partition pruning: joining a filtered dim prunes fact partitions") {
     val dir = tmp("dpp")
-    Formats.writePartitioned(
+    writePartitioned(
       events.withColumn("dt", to_date(col("ts")).cast("string")), dir, "dt")
     val fact = spark.read.parquet(dir)
     // dim: one row per date, filtered to a single date at runtime
@@ -59,7 +67,7 @@ class FormatsSpec extends SparkTestBase {
 
   test("partitioned sink: layout prunes partitions at read time") {
     val dir = tmp("part")
-    Formats.writePartitioned(
+    writePartitioned(
       events.withColumn("dt", to_date(col("ts")).cast("string")), dir, "dt")
     val pruned = spark.read.parquet(dir).filter(col("dt") === "2024-01-05")
     val expected = events.filter(to_date(col("ts")) === "2024-01-05").count()

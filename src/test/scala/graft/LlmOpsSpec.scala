@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import graft.operators.{CorpusOps, DedupOps, Multimodal, TextOps, VectorOps}
@@ -223,7 +224,6 @@ class LlmOpsSpec extends SparkTestBase with BeforeAndAfterAll {
 
   test("simhash band buckets are capped: an identical-fingerprint cluster cannot explode") {
     import spark.implicits._
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     // 100 docs with the IDENTICAL 32-bit fingerprint: all 4 band buckets
     // have size 100 > MAX_BAND_BUCKET, so the pairwise query must drop
     // them (100*99/2 pairs would be the quadratic blow-up); docs 200/201
@@ -242,11 +242,26 @@ class LlmOpsSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(df.count() == graft.sources.Tables.load(spark, sfDir, "documents").count())
   }
 
+  /** Embedding-cosine near-duplicate pairs: all (i < j) pairs above a
+    * similarity threshold, scored by the fused codegen expression.
+    * BRUTE-FORCE form — O(n²), the exact baseline the blocked search is
+    * cross-checked against. */
+  private def embeddingNearDup(s: SparkSession, dir: String): DataFrame = {
+    val a = graft.sources.Tables.load(s, dir, "embeddings")
+      .select(col("vec_id").as("d1"), col("embedding").as("e1"))
+    val b = graft.sources.Tables.load(s, dir, "embeddings")
+      .select(col("vec_id").as("d2"), col("embedding").as("e2"))
+    a.join(broadcast(b), col("d1") < col("d2"))
+      .select(col("d1"), col("d2"), expr("cosine_fast(e1, e2)").as("cos"))
+      .filter(col("cos") >= 0.5)
+      .orderBy(col("d1"), col("d2"))
+  }
+
   test("blocked embedding near-dup finds exactly the brute-force pair set") {
     // sf0.01, not the suite default sf0.001: the smallest fixture has zero
     // qualifying pairs, which would make this check vacuous.
     val dir = "/root/testdata/sf0.01"
-    val brute = VectorOps.embeddingNearDup(spark, dir)
+    val brute = embeddingNearDup(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val blocked = VectorOps.embeddingNearDupBlocked(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -514,7 +529,6 @@ class LlmOpsSpec extends SparkTestBase with BeforeAndAfterAll {
       .groupBy(col("method")).agg(avg(col("recall")).as("mean_recall"))
       .collect().map(r => r.getAs[String]("method") -> r.getAs[Double]("mean_recall")).toMap
     assert(rec("ivf") >= 0.15, s"ivf mean recall degraded: ${rec("ivf")}")
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     val e = graft.sources.Tables.load(spark, sf01, "embeddings")
     // only the NQUERY=5 query vectors need an exact ranking
     val q = e.filter(col("vec_id") < 5)

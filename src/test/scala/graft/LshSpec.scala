@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{DedupOps, LshOps, VectorOps}
 
@@ -24,24 +23,6 @@ class LshSpec extends SparkTestBase {
       val dists = rs.sortBy(_.getAs[Int]("rank")).map(_.getAs[Double]("dist"))
       assert(dists.sliding(2).forall { case Array(x, y) => x <= y; case _ => true })
     }
-  }
-
-  test("extensions-built session resolves cosine_fast from SQL directly") {
-    val s2: SparkSession = SparkSession.builder()
-      .master("local[2]")
-      .appName("ext-test")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    try {
-      // note: getOrCreate may reuse the suite session; ensure function resolves
-      graft.plans.GraftFunctions.ensureRegistered(s2)
-      val v = s2.sql(
-        "SELECT cosine_fast(array(cast(1.0 as float), cast(0.0 as float)), " +
-          "array(cast(1.0 as float), cast(0.0 as float)))").head.getDouble(0)
-      assert(math.abs(v - 1.0) < 1e-12)
-    } finally ()
   }
 
   test("brute-force exact top-1 appears among BRP-LSH candidates for most queries") {

@@ -3,19 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one SparkSession per suite (lazy).
-  * The test JVM shares one `CodeGenerator`, and the first session built
-  * sizes its cache, so the builder sets the engine's cache size
-  * (CodegenCacheSpec relies on it). */
+/** Shared local session for specs — one SparkSession per suite (lazy),
+  * built by the engine's own recipe with 4 executor threads whatever
+  * `SPARK_GRAFT_CPUS` says: the specs assume 4 shuffle partitions. The
+  * test JVM shares one `CodeGenerator`, and the first session built sizes
+  * its cache (CodegenCacheSpec relies on it). */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheEntries.toString)
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local("4")
 
   /** Single source of truth for fixture locations (round-12 advice:
     * ScaleGateSpec previously hardcoded its own copy of the root). */

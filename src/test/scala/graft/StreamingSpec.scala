@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.sources.Tables
@@ -19,6 +20,16 @@ class StreamingSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
     spark.catalog.clearCache()
     super.afterAll()
   }
+
+  /** ST1: tumbling 1-hour window aggregate with a 2-hour watermark. */
+  private def tumblingAgg(events: DataFrame): DataFrame =
+    events
+      .withWatermark("ts", "2 hours")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(18,4)")).cast("decimal(38,4)").as("total_value"))
+      .select(col("window.start").as("window_start"), col("window.end").as("window_end"),
+        col("event_type"), col("n"), col("total_value"))
 
   /** Events re-materialized as standard µs-timestamp parquet chunks (the
     * fixture file is ns-typed, which the streaming schema reader can't
@@ -52,7 +63,7 @@ class StreamingSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
 
   test("ST1: streaming tumbling agg == batch tumbling agg on closed input") {
     val streamed = Streams.runToCompletion(
-      Streams.tumblingAgg(Streams.eventsStream(spark, streamDir)),
+      tumblingAgg(Streams.eventsStream(spark, streamDir)),
       OutputMode.Append())
     val batch = graft.operators.StreamShapes.tumbling(spark, sfDir)
     // watermark append-mode emits only finalized windows; on a closed input
@@ -147,7 +158,7 @@ class StreamingSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
 
   test("trigger wiring: AvailableNow drains the closed input and terminates") {
     import org.apache.spark.sql.streaming.Trigger
-    val q = Streams.tumblingAgg(Streams.eventsStream(spark, streamDir))
+    val q = tumblingAgg(Streams.eventsStream(spark, streamDir))
       .writeStream.format("memory").queryName("avail_now_out")
       .outputMode(OutputMode.Append())
       .trigger(Trigger.AvailableNow())
