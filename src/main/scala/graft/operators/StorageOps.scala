@@ -302,8 +302,8 @@ object StorageOps extends QueryModule {
   // (SupportsPushDownV2Filters / SupportsPushDownRequiredColumns), so the
   // plan carries no post-scan Filter for the pushed conjuncts and the
   // reader never materializes the unrequested string except to test the
-  // pushed predicate. PlanShapeSpec pins both. See sources/GraftLog.scala
-  // for the format and the 100 TB scan story.
+  // pushed predicate. PlanShapeSpec pins both. See sources/GraftLogCodec.scala
+  // for the format and sources/GraftLogScan.scala for the 100 TB scan story.
   // ------------------------------------------------------------------
   def dsv2Pushdown(s: SparkSession, dir: String): DataFrame = {
     val landing = Scratch.staged(s, dir, "log_landing") {

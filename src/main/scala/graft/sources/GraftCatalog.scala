@@ -2,14 +2,18 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, ProcedureCatalog, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.connector.expressions.{Literal, NamedReference, Transform}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
+import org.apache.spark.sql.connector.read.{LocalScan, Scan}
+import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Catalog plugin for graftlog landings (round 15) — the missing half of
   * the storage-partitioned-join story. `spark.read.format("graftlog")`
@@ -221,7 +225,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
         val parent = Identifier.of(ident.namespace().init, ident.namespace().last)
         val pdir = tableDir(parent)
         val b = ident.name.stripPrefix("branch_")
-        if (hasMeta(pdir) && GraftSnapshotIO.branches(pdir).contains(b)) {
+        if (hasMeta(pdir) && GraftBranches.branches(pdir).contains(b)) {
           val (bucket, modes, ret, extra) = readMeta(pdir)
           return new GraftLogTable(pdir, bucket, modes, extra, None, ret, Some(b))
         }
@@ -247,7 +251,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
       else {
         val dir = tableDir(ident)
         if (!hasMeta(dir)) throw new NoSuchTableException(ident)
-        GraftSnapshotIO.tags(dir).getOrElse(v,
+        GraftBranches.tags(dir).getOrElse(v,
           throw new IllegalArgumentException(
             s"graft VERSION AS OF takes a snapshot stamp (epoch millis) " +
               s"or a tag name; '$v' is neither " +
@@ -487,44 +491,23 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
   // ---- ProcedureCatalog: table maintenance as SQL CALL ----
 
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
-    Array(Identifier.of(namespace, "compact"), Identifier.of(namespace, "cluster"),
-      Identifier.of(namespace, "expire"),
-      Identifier.of(namespace, "expire_snapshots"),
-      Identifier.of(namespace, "snapshots"),
-      Identifier.of(namespace, "tag"), Identifier.of(namespace, "drop_tag"),
-      Identifier.of(namespace, "tags"),
-      Identifier.of(namespace, "branch"),
-      Identifier.of(namespace, "publish_branch"),
-      Identifier.of(namespace, "drop_branch"))
+    GraftProcedure.all.map(p => Identifier.of(namespace, p.name)).toArray
 
-  override def loadProcedure(ident: Identifier): UnboundProcedure = ident.name() match {
-    case "compact" => new GraftCompactProcedure(this)
-    case "expire" => new GraftExpireProcedure(this)
-    case "expire_snapshots" => new GraftExpireSnapshotsProcedure(this)
-    case "snapshots" => new GraftSnapshotsProcedure(this)
-    case "cluster" => new GraftClusterProcedure(this)
-    case "tag" => new GraftTagProcedure(this, drop = false)
-    case "drop_tag" => new GraftTagProcedure(this, drop = true)
-    case "tags" => new GraftTagsListProcedure(this)
-    case "branch" => new GraftBranchProcedure(this, GraftBranchProcedure.CREATE)
-    case "publish_branch" => new GraftBranchProcedure(this, GraftBranchProcedure.PUBLISH)
-    case "drop_branch" => new GraftBranchProcedure(this, GraftBranchProcedure.DROP)
-    case other => throw new IllegalArgumentException(
-      s"no such procedure ${(ident.namespace() :+ other).mkString(".")} " +
-        "in the graft catalog (available: compact, cluster, expire, " +
-        "expire_snapshots, snapshots, tag, drop_tag, tags, branch, " +
-        "publish_branch, drop_branch)")
-  }
+  override def loadProcedure(ident: Identifier): UnboundProcedure =
+    GraftProcedure.all.find(_.name == ident.name()) match {
+      case Some(p) => new GraftBoundProcedure(this, p)
+      case None => throw new IllegalArgumentException(
+        s"no such procedure ${(ident.namespace() :+ ident.name()).mkString(".")} " +
+          s"in the graft catalog (available: ${GraftProcedure.all.map(_.name).mkString(", ")})")
+    }
+
+  /** Full resolved metadata of a landing (the compact and cluster
+    * procedures). */
+  private[sources] def metaOf(dir: String): (Option[GraftLogBucketSpec],
+      GraftLogModes, GraftRetention, Array[StructField]) = readMeta(dir)
 
   /** Resolve a table name (optionally namespaced with dots) used as a
     * procedure argument to its landing directory. */
-  /** A resolved landing's retirement policy (compact procedure). */
-  private[sources] def retentionOf(dir: String): GraftRetention = readMeta(dir)._3
-  /** Full resolved metadata of a landing (cluster procedure). */
-  private[sources] def metaOf(dir: String): (Option[GraftLogBucketSpec],
-      GraftLogModes, GraftRetention,
-      Array[org.apache.spark.sql.types.StructField]) = readMeta(dir)
-
   private[sources] def resolveTableDir(table: String): String = {
     val parts = table.split('.')
     val ident = Identifier.of(parts.dropRight(1), parts.last)
@@ -534,418 +517,192 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
   }
 }
 
-/** `CALL <catalog>.system.cluster(table => '...', by => '<column>',
-  * target_mb => <n>)` — sort-rewrite the table so its zone maps become
-  * selective (see [[GraftLog.cluster]]): range-repartition the live rows
-  * on `by` and rewrite them as ~target_mb files with disjoint min/max,
-  * after which a range predicate on that column opens ~1/N of the
-  * landing. The maintenance command that turns the round-17 zone maps
-  * from an opportunistic win (sorted ingest) into a guaranteed one.
-  * Returns one summary row. */
-private class GraftClusterProcedure(cat: GraftCatalog)
-    extends UnboundProcedure with BoundProcedure {
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-  import org.apache.spark.sql.types.{LongType, StringType, StructField}
+/** One `CALL <catalog>.system.<name>(...)` procedure: its name,
+  * description, parameters, result schema and body. The body runs on the
+  * driver against the catalog and the bound arguments and returns the
+  * result rows. [[GraftProcedure.all]] is the one table that
+  * `listProcedures`, `loadProcedure` and the unknown-name error read. */
+private final case class GraftProcedure(name: String, description: String,
+    parameters: Seq[ProcedureParameter], result: StructType,
+    body: (GraftCatalog, InternalRow) => Seq[Array[Any]])
 
-  override def name(): String = "cluster"
-  override def description(): String =
-    "sort-rewrite a graftlog table by a column so zone maps prune ranges"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType)
-      .comment("table name within this catalog").build(),
-    ProcedureParameter.in("by", StringType)
-      .comment("column to range-cluster on (event_id, user_id or value)").build(),
-    ProcedureParameter.in("target_mb", IntegerType).defaultValue("64")
-      .comment("target clustered-file size in MiB").build(),
-    ProcedureParameter.in("max_origins", IntegerType).defaultValue("64")
-      .comment("segment-map cap per output file: more distinct origin " +
-        "stamps coalesce (newest-label, manifest-flagged)").build())
-  override def isDeterministic: Boolean = false
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
-    val byCol = input.getUTF8String(1).toString
-    val targetMb = input.getInt(2)
-    val maxOrigins = input.getInt(3)
-    require(targetMb > 0, s"target_mb must be positive, got $targetMb")
-    val dir = cat.resolveTableDir(table)
-    val (bucket, _, ret, extra) = readMetaOf(dir)
-    require(bucket.isEmpty,
-      s"$table is bucketed: the k-token layout is the join contract; " +
-        "cluster would destroy it (use compact)")
-    val (before, after, bytes) = GraftLog.cluster(
-      org.apache.spark.sql.SparkSession.active, dir, byCol,
-      targetMb.toLong << 20, extra, ret, maxOrigins)
-    val summary: Scan = new LocalScan {
-      override def readSchema(): StructType = StructType(Seq(
-        StructField("files_before", IntegerType, nullable = false),
-        StructField("files_after", IntegerType, nullable = false),
-        StructField("bytes_rewritten", LongType, nullable = false)))
-      override def rows(): Array[InternalRow] = Array(
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](before, after, bytes)))
-    }
-    java.util.List.of(summary).iterator()
+private object GraftProcedure {
+  private def param(name: String, tpe: DataType, comment: String,
+      default: String = null): ProcedureParameter = {
+    val b = ProcedureParameter.in(name, tpe).comment(comment)
+    (if (default == null) b else b.defaultValue(default)).build()
   }
-  private def readMetaOf(dir: String) = cat.metaOf(dir)
-}
+  private val table = param("table", StringType, "table name within this catalog")
+  private def result(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t, nullable = false) })
+  private def str(s: String): UTF8String = UTF8String.fromString(s)
+  private def dirOf(cat: GraftCatalog, in: InternalRow): String =
+    cat.resolveTableDir(in.getUTF8String(0).toString)
 
-/** `CALL <catalog>.system.tag(table => '...', name => '...', version =>
-  * <stamp>)` — name a retained snapshot (round 18; Iceberg's tag refs).
-  * `version` defaults to the current tip. The tagged snapshot is pinned:
-  * [[GraftSnapshotIO.prunable]] clamps every GC horizon to the oldest
-  * tag, so `VERSION AS OF '<name>'` keeps resolving across
-  * expire/expire_snapshots passes that shed all untagged history around
-  * it. `drop_tag` releases the pin. Returns (name, stamp) / (name,
-  * existed). */
-private class GraftTagProcedure(cat: GraftCatalog, drop: Boolean)
-    extends UnboundProcedure with BoundProcedure {
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-  import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField}
-
-  override def name(): String = if (drop) "drop_tag" else "tag"
-  override def description(): String =
-    if (drop) "drop a named snapshot tag (its history becomes GC-eligible)"
-    else "name a retained snapshot; tagged history survives expire horizons"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def parameters(): Array[ProcedureParameter] =
-    if (drop) Array(
-      ProcedureParameter.in("table", StringType)
-        .comment("table name within this catalog").build(),
-      ProcedureParameter.in("name", StringType)
-        .comment("tag name to drop").build())
-    else Array(
-      ProcedureParameter.in("table", StringType)
-        .comment("table name within this catalog").build(),
-      ProcedureParameter.in("name", StringType)
-        .comment("tag name ([A-Za-z0-9_][A-Za-z0-9_.-]*)").build(),
-      ProcedureParameter.in("version", LongType).defaultValue("-1")
-        .comment("snapshot stamp to tag; -1 (default) tags the current tip").build())
-  override def isDeterministic: Boolean = false
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val dir = cat.resolveTableDir(input.getUTF8String(0).toString)
-    val tagName = input.getUTF8String(1).toString
-    val out: Scan =
-      if (drop) {
-        val existed = GraftSnapshotIO.dropTag(dir, tagName)
-        new LocalScan {
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("name", StringType, nullable = false),
-            StructField("existed", BooleanType, nullable = false)))
-          override def rows(): Array[InternalRow] = Array(
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(tagName),
-                existed)))
-        }
-      } else {
-        val requested = input.getLong(2)
+  val all: Seq[GraftProcedure] = Seq(
+    // small-file maintenance (see GraftLogMaintenance.compact for the
+    // merge strategy and the swap/stamp contract)
+    GraftProcedure("compact",
+      "merge a graftlog table's small files per bucket, publish order preserved",
+      Seq(table, param("target_mb", IntegerType, "target merged-file size in MiB", "64")),
+      result("files_before" -> IntegerType, "files_after" -> IntegerType,
+        "bytes_compacted" -> LongType),
+      (cat, in) => {
+        val targetMb = in.getInt(1)
+        require(targetMb > 0, s"target_mb must be positive, got $targetMb")
+        val dir = dirOf(cat, in)
+        val (before, after, bytes) = GraftLogMaintenance.compact(SparkSession.active,
+          dir, targetMb.toLong << 20, cat.metaOf(dir)._3)
+        Seq(Array[Any](before, after, bytes))
+      }),
+    // sort-rewrite by a column so its zone maps become selective (see
+    // GraftLogMaintenance.cluster); bucketed tables are refused
+    GraftProcedure("cluster",
+      "sort-rewrite a graftlog table by a column so zone maps prune ranges",
+      Seq(table,
+        param("by", StringType, "column to range-cluster on (event_id, user_id or value)"),
+        param("target_mb", IntegerType, "target clustered-file size in MiB", "64"),
+        param("max_origins", IntegerType, "segment-map cap per output file: more " +
+          "distinct origin stamps coalesce (newest-label, manifest-flagged)", "64")),
+      result("files_before" -> IntegerType, "files_after" -> IntegerType,
+        "bytes_rewritten" -> LongType),
+      (cat, in) => {
+        val name = in.getUTF8String(0).toString
+        val targetMb = in.getInt(2)
+        require(targetMb > 0, s"target_mb must be positive, got $targetMb")
+        val dir = dirOf(cat, in)
+        val (bucket, _, ret, extra) = cat.metaOf(dir)
+        require(bucket.isEmpty,
+          s"$name is bucketed: the k-token layout is the join contract; " +
+            "cluster would destroy it (use compact)")
+        val (before, after, bytes) = GraftLogMaintenance.cluster(SparkSession.active,
+          dir, in.getUTF8String(1).toString, targetMb.toLong << 20, extra, ret,
+          in.getInt(3))
+        Seq(Array[Any](before, after, bytes))
+      }),
+    // data retention by stamp horizon (see GraftLogMaintenance.expire for
+    // the horizon semantics and the consumer-coordination contract)
+    GraftProcedure("expire",
+      "delete a graftlog table's publishes below a stamp horizon + aged orphan tmps",
+      Seq(table,
+        param("before_stamp", LongType,
+          "delete stamped files published before this epoch-millis horizon"),
+        param("tmp_grace_minutes", IntegerType,
+          "orphan .tmp files older than this are removed", "60")),
+      result("files_deleted" -> IntegerType, "bytes_deleted" -> LongType,
+        "tmps_deleted" -> IntegerType),
+      (cat, in) => {
+        val graceMin = in.getInt(2)
+        require(graceMin >= 0, s"tmp_grace_minutes must be >= 0, got $graceMin")
+        val (files, bytes, tmps) = GraftLogMaintenance.expire(
+          dirOf(cat, in), in.getLong(1), graceMin.toLong * 60000L)
+        Seq(Array[Any](files, bytes, tmps))
+      }),
+    // snapshot-history GC, the complement of expire's data horizon (see
+    // GraftLogMaintenance.expireSnapshots)
+    GraftProcedure("expire_snapshots",
+      "delete a graftlog table's superseded snapshot manifests below a stamp " +
+        "horizon + unreferenced files",
+      Seq(table, param("before_stamp", LongType,
+        "delete superseded manifests stamped before this epoch-millis horizon")),
+      result("manifests_deleted" -> IntegerType, "files_deleted" -> IntegerType,
+        "bytes_deleted" -> LongType),
+      (cat, in) => {
+        val (manifests, files, bytes) =
+          GraftLogMaintenance.expireSnapshots(dirOf(cat, in), in.getLong(1))
+        Seq(Array[Any](manifests, files, bytes))
+      }),
+    // the retained snapshot history, oldest first: read-only, but it
+    // reflects live filesystem state, so it is never constant-folded
+    GraftProcedure("snapshots",
+      "list a graftlog table's retained snapshot history, oldest first",
+      Seq(table),
+      result("version" -> IntegerType, "stamp" -> LongType, "kind" -> StringType,
+        "live_files" -> IntegerType, "delete_files" -> IntegerType,
+        "added_files" -> IntegerType, "removed_files" -> IntegerType),
+      (cat, in) => GraftSnapshotIO.history(dirOf(cat, in)).map(i =>
+        Array[Any](i.version, i.stamp, str(i.kind), i.liveFiles, i.deleteFiles,
+          i.addedFiles, i.removedFiles))),
+    // tags name retained snapshots; a tag pins its history against every
+    // GC horizon (see GraftBranches)
+    GraftProcedure("tag",
+      "name a retained snapshot; tagged history survives expire horizons",
+      Seq(table,
+        param("name", StringType, "tag name ([A-Za-z0-9_][A-Za-z0-9_.-]*)"),
+        param("version", LongType,
+          "snapshot stamp to tag; -1 (default) tags the current tip", "-1")),
+      result("name" -> StringType, "stamp" -> LongType),
+      (cat, in) => {
+        val dir = dirOf(cat, in)
+        val tagName = in.getUTF8String(1).toString
+        val requested = in.getLong(2)
         val stamp =
           if (requested >= 0) requested
           else {
             val tip = GraftSnapshotIO.tipStamp(dir)
-            require(tip >= 0,
-              s"no snapshot history in $dir: nothing to tag")
+            require(tip >= 0, s"no snapshot history in $dir: nothing to tag")
             tip
           }
-        GraftSnapshotIO.createTag(dir, tagName, stamp)
-        new LocalScan {
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("name", StringType, nullable = false),
-            StructField("stamp", LongType, nullable = false)))
-          override def rows(): Array[InternalRow] = Array(
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(tagName),
-                stamp)))
-        }
-      }
-    java.util.List.of(out).iterator()
-  }
+        GraftBranches.createTag(dir, tagName, stamp)
+        Seq(Array[Any](str(tagName), stamp))
+      }),
+    GraftProcedure("drop_tag",
+      "drop a named snapshot tag (its history becomes GC-eligible)",
+      Seq(table, param("name", StringType, "tag name to drop")),
+      result("name" -> StringType, "existed" -> BooleanType),
+      (cat, in) => {
+        val tagName = in.getUTF8String(1).toString
+        Seq(Array[Any](str(tagName), GraftBranches.dropTag(dirOf(cat, in), tagName)))
+      }),
+    GraftProcedure("tags", "list a graftlog table's named snapshot tags",
+      Seq(table),
+      result("name" -> StringType, "stamp" -> LongType),
+      (cat, in) => GraftBranches.tags(dirOf(cat, in)).toSeq.sortBy(_._1).map {
+        case (n, st) => Array[Any](str(n), st)
+      }),
+    // writable branches (write-audit-publish): fork, fast-forward into
+    // main in one CAS commit, or abandon (see GraftBranches)
+    GraftProcedure("branch", "fork a writable branch at the table's current tip",
+      Seq(table, param("name", StringType, "branch name ([A-Za-z0-9_]+)")),
+      result("name" -> StringType, "fork_stamp" -> LongType),
+      (cat, in) => {
+        val b = in.getUTF8String(1).toString
+        Seq(Array[Any](str(b), GraftBranches.createBranch(dirOf(cat, in), b)))
+      }),
+    GraftProcedure("publish_branch",
+      "atomically fast-forward a branch's staged appends into main",
+      Seq(table, param("name", StringType, "branch name ([A-Za-z0-9_]+)")),
+      result("name" -> StringType, "files_published" -> IntegerType),
+      (cat, in) => {
+        val b = in.getUTF8String(1).toString
+        Seq(Array[Any](str(b), GraftBranches.publishBranch(dirOf(cat, in), b).size))
+      }),
+    GraftProcedure("drop_branch", "abandon a branch and unlink its staged files",
+      Seq(table, param("name", StringType, "branch name ([A-Za-z0-9_]+)")),
+      result("name" -> StringType, "existed" -> BooleanType),
+      (cat, in) => {
+        val b = in.getUTF8String(1).toString
+        Seq(Array[Any](str(b), GraftBranches.dropBranch(dirOf(cat, in), b)))
+      }))
 }
 
-/** Writable-branch procedures (round 19; write-audit-publish):
-  * `CALL system.branch(table, name)` forks a branch at the current tip;
-  * staged writes go `df.writeTo(t).option("branch", name).append()` /
-  * `df.write.format("graftlog").option("branch", name)` and audit reads
-  * `spark.read...option("branch", name)` — invisible to main readers.
-  * `CALL system.publish_branch(table, name)` fast-forwards the staged
-  * change into main atomically (one CAS commit; a main commit since the
-  * fork fails loudly). `CALL system.drop_branch(table, name)` abandons
-  * the staged files. Returns (name, stamp) / (name, files_published) /
-  * (name, existed). */
-private object GraftBranchProcedure {
-  val CREATE = 0; val PUBLISH = 1; val DROP = 2
-}
-private class GraftBranchProcedure(cat: GraftCatalog, mode: Int)
+/** A [[GraftProcedure]] bound to its catalog: the procedure SPI's one
+  * implementation. Every procedure has filesystem side effects or reads
+  * live filesystem state, so none is deterministic, and each returns its
+  * rows as one local scan. */
+private class GraftBoundProcedure(cat: GraftCatalog, p: GraftProcedure)
     extends UnboundProcedure with BoundProcedure {
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-  import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField}
-  import GraftBranchProcedure._
-
-  override def name(): String = mode match {
-    case CREATE => "branch"; case PUBLISH => "publish_branch"; case _ => "drop_branch"
-  }
-  override def description(): String = mode match {
-    case CREATE => "fork a writable branch at the table's current tip"
-    case PUBLISH => "atomically fast-forward a branch's staged appends into main"
-    case _ => "abandon a branch and unlink its staged files"
-  }
+  override def name(): String = p.name
+  override def description(): String = p.description
   override def bind(inputType: StructType): BoundProcedure = this
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType)
-      .comment("table name within this catalog").build(),
-    ProcedureParameter.in("name", StringType)
-      .comment("branch name ([A-Za-z0-9_]+)").build())
+  override def parameters(): Array[ProcedureParameter] = p.parameters.toArray
   override def isDeterministic: Boolean = false
-
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val dir = cat.resolveTableDir(input.getUTF8String(0).toString)
-    val branchName = input.getUTF8String(1).toString
-    val nameU = org.apache.spark.unsafe.types.UTF8String.fromString(branchName)
-    val out: Scan = mode match {
-      case CREATE =>
-        val stamp = GraftSnapshotIO.createBranch(dir, branchName)
-        new LocalScan {
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("name", StringType, nullable = false),
-            StructField("fork_stamp", LongType, nullable = false)))
-          override def rows(): Array[InternalRow] = Array(
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              Array[Any](nameU, stamp)))
-        }
-      case PUBLISH =>
-        val published = GraftSnapshotIO.publishBranch(dir, branchName)
-        new LocalScan {
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("name", StringType, nullable = false),
-            StructField("files_published", IntegerType, nullable = false)))
-          override def rows(): Array[InternalRow] = Array(
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              Array[Any](nameU, published.size)))
-        }
-      case _ =>
-        val existed = GraftSnapshotIO.dropBranch(dir, branchName)
-        new LocalScan {
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("name", StringType, nullable = false),
-            StructField("existed", BooleanType, nullable = false)))
-          override def rows(): Array[InternalRow] = Array(
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              Array[Any](nameU, existed)))
-        }
-    }
-    java.util.List.of(out).iterator()
-  }
-}
-
-/** `CALL <catalog>.system.tags(table => '...')` — the table's named
-  * snapshot refs, sorted by name: one (name, stamp) row per tag (round
-  * 18). The operability half of the tag surface: an expire-horizon
-  * decision starts from "what is pinned and where". Read-only. */
-private class GraftTagsListProcedure(cat: GraftCatalog)
-    extends UnboundProcedure with BoundProcedure {
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-  import org.apache.spark.sql.types.{LongType, StringType, StructField}
-
-  override def name(): String = "tags"
-  override def description(): String =
-    "list a graftlog table's named snapshot tags"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType)
-      .comment("table name within this catalog").build())
-  override def isDeterministic: Boolean = false
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val tags = GraftSnapshotIO.tags(cat.resolveTableDir(input.getUTF8String(0).toString))
-    val out: Scan = new LocalScan {
-      override def readSchema(): StructType = StructType(Seq(
-        StructField("name", StringType, nullable = false),
-        StructField("stamp", LongType, nullable = false)))
-      override def rows(): Array[InternalRow] = tags.toSeq.sortBy(_._1).map {
-        case (n, st) =>
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(n),
-              st)): InternalRow
-      }.toArray
-    }
-    java.util.List.of(out).iterator()
-  }
-}
-
-/** `CALL <catalog>.system.snapshots(table => '...')` — the table's
-  * retained snapshot history, oldest first (round 17; Iceberg's
-  * snapshots metadata table as a procedure): one row per retained
-  * manifest with its 1-based version ordinal, commit stamp, manifest
-  * kind (base/delta), live data/delete file counts, and the commit's
-  * added/removed file counts. The audit surface behind every "what
-  * changed, when, and how big is the history I'm paying for" question,
-  * and the thing to consult before choosing an expire/expire_snapshots
-  * horizon. Read-only: folds the manifest chain once, touches nothing. */
-private class GraftSnapshotsProcedure(cat: GraftCatalog)
-    extends UnboundProcedure with BoundProcedure {
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-  import org.apache.spark.sql.types.{LongType, StringType, StructField}
-
-  override def name(): String = "snapshots"
-  override def description(): String =
-    "list a graftlog table's retained snapshot history, oldest first"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType)
-      .comment("table name within this catalog").build())
-  // read-only, but the result reflects live filesystem state: never
-  // constant-fold or reuse across commits
-  override def isDeterministic: Boolean = false
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
-    val infos = GraftSnapshotIO.history(cat.resolveTableDir(table))
-    val out: Scan = new LocalScan {
-      override def readSchema(): StructType = StructType(Seq(
-        StructField("version", IntegerType, nullable = false),
-        StructField("stamp", LongType, nullable = false),
-        StructField("kind", StringType, nullable = false),
-        StructField("live_files", IntegerType, nullable = false),
-        StructField("delete_files", IntegerType, nullable = false),
-        StructField("added_files", IntegerType, nullable = false),
-        StructField("removed_files", IntegerType, nullable = false)))
-      override def rows(): Array[InternalRow] = infos.map(i =>
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](i.version, i.stamp,
-            org.apache.spark.unsafe.types.UTF8String.fromString(i.kind),
-            i.liveFiles, i.deleteFiles, i.addedFiles,
-            i.removedFiles)): InternalRow).toArray
-    }
-    java.util.List.of(out).iterator()
-  }
-}
-
-/** `CALL <catalog>.system.expire(table => '...', before_stamp => <ms>,
-  * tmp_grace_minutes => 60)` — retention over a graftlog table, the V2
-  * procedure SPI wrapping [[GraftLog.expire]] (see there for the horizon
-  * semantics and the stated consumer-coordination contract). Returns one
-  * summary row: (files_deleted, bytes_deleted, tmps_deleted). */
-private class GraftExpireProcedure(cat: GraftCatalog)
-    extends UnboundProcedure with BoundProcedure {
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-  import org.apache.spark.sql.types.{LongType, StringType, StructField}
-
-  override def name(): String = "expire"
-  override def description(): String =
-    "delete a graftlog table's publishes below a stamp horizon + aged orphan tmps"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType)
-      .comment("table name within this catalog").build(),
-    ProcedureParameter.in("before_stamp", LongType)
-      .comment("delete stamped files published before this epoch-millis horizon").build(),
-    ProcedureParameter.in("tmp_grace_minutes", IntegerType).defaultValue("60")
-      .comment("orphan .tmp files older than this are removed").build())
-  override def isDeterministic: Boolean = false
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
-    val beforeStamp = input.getLong(1)
-    val graceMin = input.getInt(2)
-    require(graceMin >= 0, s"tmp_grace_minutes must be >= 0, got $graceMin")
-    val (files, bytes, tmps) = GraftLog.expire(
-      cat.resolveTableDir(table), beforeStamp, graceMin.toLong * 60000L)
-    val summary: Scan = new LocalScan {
-      override def readSchema(): StructType = StructType(Seq(
-        StructField("files_deleted", IntegerType, nullable = false),
-        StructField("bytes_deleted", LongType, nullable = false),
-        StructField("tmps_deleted", IntegerType, nullable = false)))
-      override def rows(): Array[InternalRow] = Array(
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](files, bytes, tmps)))
-    }
-    java.util.List.of(summary).iterator()
-  }
-}
-
-/** `CALL <catalog>.system.expire_snapshots(table => '...', before_stamp
-  * => <ms>)` — snapshot-history GC, the complement of `expire`'s DATA
-  * horizon (see [[GraftLog.expireSnapshots]]): superseded manifests below
-  * the horizon go, then every stamped file referenced by no remaining
-  * manifest. Current data is untouched by construction — the operation a
-  * `snapshot.retain = true` table runs periodically to shed rewrite and
-  * compaction history. Returns one summary row. */
-private class GraftExpireSnapshotsProcedure(cat: GraftCatalog)
-    extends UnboundProcedure with BoundProcedure {
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-  import org.apache.spark.sql.types.{LongType, StringType, StructField}
-
-  override def name(): String = "expire_snapshots"
-  override def description(): String =
-    "delete a graftlog table's superseded snapshot manifests below a stamp horizon + unreferenced files"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType)
-      .comment("table name within this catalog").build(),
-    ProcedureParameter.in("before_stamp", LongType)
-      .comment("delete superseded manifests stamped before this epoch-millis horizon").build())
-  override def isDeterministic: Boolean = false
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
-    val beforeStamp = input.getLong(1)
-    val (manifests, files, bytes) = GraftLog.expireSnapshots(
-      cat.resolveTableDir(table), beforeStamp)
-    val summary: Scan = new LocalScan {
-      override def readSchema(): StructType = StructType(Seq(
-        StructField("manifests_deleted", IntegerType, nullable = false),
-        StructField("files_deleted", IntegerType, nullable = false),
-        StructField("bytes_deleted", LongType, nullable = false)))
-      override def rows(): Array[InternalRow] = Array(
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](manifests, files, bytes)))
-    }
-    java.util.List.of(summary).iterator()
-  }
-}
-
-/** `CALL <catalog>.system.compact(table => '...', target_mb => 64)` —
-  * small-file maintenance over a graftlog table, the V2 procedure SPI
-  * wrapping [[GraftLog.compact]] (see there for the merge strategy and
-  * the stated swap/stamp contract). Returns one summary row:
-  * (files_before, files_after, bytes_compacted). */
-private class GraftCompactProcedure(cat: GraftCatalog)
-    extends UnboundProcedure with BoundProcedure {
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-  import org.apache.spark.sql.types.{LongType, StringType, StructField}
-
-  override def name(): String = "compact"
-  override def description(): String =
-    "merge a graftlog table's small files per bucket, publish order preserved"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType)
-      .comment("table name within this catalog").build(),
-    ProcedureParameter.in("target_mb", IntegerType).defaultValue("64")
-      .comment("target merged-file size in MiB").build())
-  // filesystem side effects: never constant-fold or re-execute freely
-  override def isDeterministic: Boolean = false
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val table = input.getUTF8String(0).toString
-    val targetMb = input.getInt(1)
-    require(targetMb > 0, s"target_mb must be positive, got $targetMb")
-    val dir = cat.resolveTableDir(table)
-    val (before, after, bytes) = GraftLog.compact(
-      org.apache.spark.sql.SparkSession.active, dir, targetMb.toLong << 20,
-      cat.retentionOf(dir))
-    val summary: Scan = new LocalScan {
-      override def readSchema(): StructType = StructType(Seq(
-        StructField("files_before", IntegerType, nullable = false),
-        StructField("files_after", IntegerType, nullable = false),
-        StructField("bytes_compacted", LongType, nullable = false)))
-      override def rows(): Array[InternalRow] = Array(
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](before, after, bytes)))
-    }
-    java.util.List.of(summary).iterator()
+    val out = p.body(cat, input).map(r => new GenericInternalRow(r): InternalRow).toArray
+    java.util.List.of[Scan](new LocalScan {
+      override def readSchema(): StructType = p.result
+      override def rows(): Array[InternalRow] = out
+    }).iterator()
   }
 }
 

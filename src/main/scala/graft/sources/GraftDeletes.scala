@@ -139,19 +139,6 @@ private[sources] object GraftDeletes {
     }
   }
 
-  /** A raw encoded record's long key at its fixed offset (event_id at 0,
-    * user_id at 8; big-endian). */
-  def recordLong(buf: Array[Byte], ord: Int): Long = {
-    var v = 0L
-    var i = ord * 8
-    while (i < ord * 8 + 8) { v = (v << 8) | (buf(i) & 0xffL); i += 1 }
-    v
-  }
-  /** A raw encoded record's event_type: length-prefixed at offset 24,
-    * wrapped without a copy. */
-  def recordEtype(buf: Array[Byte]): UTF8String =
-    UTF8String.fromBytes(buf, 26, ((buf(24) & 0xff) << 8) | (buf(25) & 0xff))
-
   // ---- loader ------------------------------------------------------------
 
   /** The deletes covering data file `dataName`, read from the delete files

@@ -1,27 +1,16 @@
 package graft.sources
 
-import java.io.{DataInputStream, DataOutputStream, EOFException}
 import java.util.{Map => JMap}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDeleteV2, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder, Transform}
-import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Count => V2Count, Max => V2Max, Min => V2Min}
-import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
+import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.expressions.filter.{AlwaysTrue, Predicate => V2Predicate}
-import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownLimit, SupportsPushDownOffset, SupportsPushDownRequiredColumns, SupportsPushDownTopN, SupportsPushDownV2Filters, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeV2Filtering}
-import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or, StringContains, StringEndsWith, StringStartsWith}
-import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+import org.apache.spark.sql.connector.read.ScanBuilder
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, WriteBuilder}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** [EXT] Custom DataSource V2 connector over a length-prefixed binary log
   * (round 13, extended round 14): the engine consumed external data only
@@ -31,92 +20,31 @@ import org.apache.spark.unsafe.types.UTF8String
   * DuckDB oracle (the zero-egress sandbox cannot host a broker, so the
   * unbounded half of that residual stays documented in SURVEY §6).
   *
-  * Format, chosen to make pushdown REAL rather than cosmetic:
-  *   file   := record*
-  *   record := [len: int32][event_id: int64][user_id: int64]
-  *             [value: float64][etype_len: int16][etype: utf8 bytes]
-  * Fixed-width fields sit at fixed offsets, the one var-width field last —
-  * so the reader evaluates pushed predicates on the fixed fields WITHOUT
-  * materializing the string, and column pruning decodes only requested
-  * fields. One log file per writing partition; one InputPartition per
+  * This file holds the provider and the table (`GraftLogSource`,
+  * `GraftLogTable`) and `object GraftLog`: the schema, the metadata and
+  * added columns, the stamps, and the public entry points of the other
+  * files. Each other concern of the connector has one file here:
+  *  - GraftLogCodec: the record format, its encoder, the raw-record walk;
+  *  - GraftLogWrite: the batch, streaming and row-level write paths and
+  *    their commits;
+  *  - GraftLogScan: the scan builder, its pushdown surfaces and the
+  *    planned partitions;
+  *  - GraftLogReaders: the cursor and the columnar, TopN and aggregate
+  *    readers;
+  *  - GraftLogStream: the micro-batch source, its offsets and the
+  *    publish-name scheme;
+  *  - GraftLogPredicates: the predicate lanes, the one V2 translator and
+  *    the evaluators behind it;
+  *  - GraftLogMaintenance: compact, cluster, expire, expire_snapshots;
+  *  - GraftLogChanges: the changelog, batch and streaming;
+  *  - GraftSnapshot (manifests and the commit protocol), GraftStats (the
+  *    zone-map model), GraftBranches (tags and branches), GraftDeletes
+  *    (delete files), GraftFs (every IO call) and GraftCatalog (tables
+  *    and CALL procedures).
+  *
+  * One log file per writing partition; one InputPartition per
   * file — the distributed-scan shape (a 1000-executor cluster gets one
   * task per file, no driver-side row handling anywhere).
-  *
-  * Optimizer surfaces implemented (each the real Spark SPI, each with an
-  * oracle-green registered query and a plan pin — see StorageOps):
-  *  - SupportsPushDownV2Filters (round 15; the modern Predicate API):
-  *    exact =, <>, <, <=, >, >=, IN, IS [NOT] NULL on all columns,
-  *    STARTS_WITH/ENDS_WITH/CONTAINS on the string column, composed
-  *    recursively through AND/OR/NOT — a whole disjunction is pushed as
-  *    one exact predicate. Residuals (and only residuals) returned to
-  *    Spark. At 100 TB this is the scan-volume lever: the source skips
-  *    record-building for non-matching rows while streaming sequentially
-  *    through each file. Every predicate that enters a scan — pushed,
-  *    `_pub_stamp`, added-column hint, runtime and row-level group
-  *    filters — arrives as a V2 Predicate and goes through ONE translator,
-  *    [[GraftLog.v2ToV1]], in the lane of the columns it names.
-  *  - SupportsPushDownRequiredColumns: decode only requested fields.
-  *  - Columnar reads (round 15): the plain scan mode decodes into 4K-row
-  *    ColumnarBatches over reused OnHeapColumnVectors and feeds
-  *    whole-stage codegen vectorized, exactly like the parquet reader —
-  *    closing the last architecture gap between the custom source and
-  *    first-class parquet at 100 TB scan volume (the r14 verdict's top
-  *    item). TopN/agg modes stay row-at-a-time: they emit O(k)/O(groups)
-  *    rows, nothing to amortize.
-  *  - SupportsPushDownLimit (partial): per-file early stop, Spark keeps
-  *    the global Limit.
-  *  - SupportsPushDownOffset (round 15, FULL — the SPI has no partial
-  *    variant): the scan collapses to one sequential partition chaining
-  *    files in publish-name order (the format's deterministic global row
-  *    order) and skips the first k passing records without building rows.
-  *  - SupportsPushDownTopN (partial, round 14): ORDER BY k LIMIT n keeps
-  *    only a size-n heap per file instead of every decoded record; Spark
-  *    keeps the global TakeOrdered over the <= n*files survivors — the
-  *    same partial contract as the limit (one task per file cannot claim
-  *    a global property).
-  *  - SupportsPushDownAggregates (partial, round 14): COUNT(*)/COUNT/
-  *    MIN/MAX with simple-column GROUP BY are computed per file inside
-  *    the sequential read, so a telemetry rollup ships O(files x groups)
-  *    partial rows to Spark's merge aggregate instead of O(records) —
-  *    the map-side combine pushed all the way into the source.
-  *  - SupportsRuntimeV2Filtering (round 14): a selective broadcast-join
-  *    dim side hands the scan its IN-set at execution time and the reader
-  *    drops non-matching records before Spark ever sees them — the DPP /
-  *    runtime-filter story extended from parquet (join_bloom_runtime) to
-  *    the custom source. Runtime predicates the data lane cannot
-  *    translate are dropped (they are a reduction, never a correctness
-  *    surface — the join above still applies the condition).
-  *  - SupportsReportStatistics: real on-disk sizes so a small graftlog
-  *    dimension is broadcastable.
-  *
-  * The WRITE half is the V2 sink protocol, both batch and streaming
-  * (round 14): per-task `.tmp` files published by the driver's commit()
-  * rename pass (truncate on Overwrite, abort cleanup, by-name column
-  * resolution), and a [[StreamingWrite]] whose epoch commit is IDEMPOTENT
-  * — a replayed micro-batch retires the epoch's previously-published
-  * files, so exactly-once visible state survives a restart that lost the
-  * checkpoint's commit marker. All IO goes through the Hadoop FileSystem
-  * API ([[GraftFs]], round 16), so a landing can live on HDFS/S3A/local;
-  * every commit follows one order — publish, swap the snapshot manifest
-  * ([[GraftSnapshotIO]]), unlink retired files — and visibility flips at
-  * the manifest rename alone.
-  *
-  * PUBLISH-STAMPED NAMES AND THE COMPACTED OFFSET (round 14, closing the
-  * r13 "offset grows without bound" residual): commit() names every
-  * published file `pub-<millis13>-<seq>-<tag>.graftlog`, stamped AT RENAME
-  * TIME — so lexicographic name order IS publish order (13-digit
-  * zero-padded millis). A streaming offset is then (high-water name +
-  * boundary tail) instead of the full name list: any stamped name older
-  * than the high-water stamp minus a lag window is implicitly seen, and
-  * the tail holds only (a) seen stamped names inside the lag window and
-  * (b) seen UNSTAMPED (legacy/foreign) names, which never compact and are
-  * bounded by the landing's pre-existing file count. Correctness
-  * assumption, stated: a file becomes VISIBLE within `publishLagMs`
-  * (default 10 s) of its stamp — true by construction here, where the
-  * stamp is taken in the same driver commit pass that renames, and the
-  * visibility delay is one rename loop. Checkpoint offset size is thereby
-  * bounded by the publish rate inside one lag window, not by the
-  * landing's lifetime file count (GraftLogSpec pins the compaction).
   */
 class GraftLogSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -326,2624 +254,6 @@ private[sources] class GraftLogTable(path: String,
   }
 }
 
-// ---------------------------------------------------------------------------
-// Write path (batch + streaming)
-// ---------------------------------------------------------------------------
-
-/** V2 write path (`df.write.format("graftlog")` and
-  * `df.writeStream.format("graftlog")`): each task streams its rows to a
-  * UUID-named `.tmp` file (speculative/retried attempts cannot collide and
-  * the reader ignores non-`.graftlog` names, so a failed job leaves NO
-  * visible partial data); the driver's commit() assigns publish-stamped
-  * names and renames the committed attempts' files into visibility in one
-  * pass (truncating first for Overwrite). The STREAMING commit is keyed by
-  * epoch: file names embed `-e<epochId>-`, and a re-commit of the same
-  * epoch (micro-batch replay after a restart that lost the commit marker)
-  * deletes the epoch's earlier files before publishing — idempotent,
-  * exactly-once visible state. One streaming writer per landing (epoch ids
-  * are query-scoped; two concurrent streaming queries appending to the
-  * same directory would collide on replay cleanup — same single-writer
-  * contract as Spark's own file sink). */
-private class GraftLogWriteBuilder(path: String, info: LogicalWriteInfo,
-    bucket: Option[GraftLogBucketSpec],
-    extra: Array[StructField] = Array.empty,
-    ret: GraftRetention = GraftRetention.NONE,
-    tableBranch: Option[String] = None) extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = {
-    // positional writes would silently swap misordered columns into the
-    // wrong fixed-offset fields — require the exact table schema up front
-    val got = info.schema().fields.map(f => (f.name, f.dataType)).toSeq
-    val want = (GraftLog.schema.fields ++ GraftLog.activeExtra(extra)).map(f => (f.name, f.dataType)).toSeq
-    require(got == want,
-      s"graftlog write schema must be exactly $want (in order); got $got — " +
-        "select the columns in table order before writing")
-    // Bucketed writes additionally implement RequiresDistributionAndOrdering
-    // (round 15): Spark clusters the incoming rows by the bucket column
-    // BEFORE the tasks run, so each task sees a hash-disjoint slice of the
-    // key domain and the landing's total file count stays
-    // O(tasks_touching_each_bucket), not O(tasks x buckets) — the same
-    // reason Spark's own bucketBy shuffles first. Identity clustering (not
-    // the bucket transform) keeps the requirement resolvable without the
-    // function catalog on the write path.
-    val branch = Option(info.options.get("branch")).orElse(tableBranch)
-    branch.foreach { _ =>
-      require(!doTruncate,
-        "branch writes are append-only (write-audit-publish staging): " +
-          "no truncate/overwrite — publish, then overwrite main")
-      require(bucket.isEmpty,
-        "branch writes support plain landings; a bucketed layout's " +
-          "k-token contract is main-only")
-    }
-    bucket match {
-      case Some(b) =>
-        import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-        import org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering
-        new Write with RequiresDistributionAndOrdering {
-          override def requiredDistribution(): Distribution =
-            Distributions.clustered(Array(Expressions.column(b.col)))
-          override def requiredOrdering(): Array[SortOrder] = Array.empty
-          override def toBatch: BatchWrite =
-            new GraftLogBatchWrite(path, doTruncate, Some(b), extra, ret)
-          override def toStreaming: StreamingWrite =
-            throw new UnsupportedOperationException(
-              "bucketed graftlog tables are a batch-join layout; stream into a plain landing")
-        }
-      case None =>
-        // UPSERT sink (round 18, r17 verdict #2; generalized round 19):
-        // `.option("upsertKey", "event_id"|"user_id"|"event_type")` on a
-        // streaming write makes each epoch REPLACE rows by key — the
-        // epoch publishes its data plus ONE equality-delete file per
-        // task covering the pre-commit live set, all in the one manifest
-        // swap. The keyed MERGE that previously needed a foreachBatch
-        // batch-MERGE detour becomes a native exactly-once V2 sink.
-        // Key contract: the LONG columns are probed at their fixed byte
-        // offsets without decoding the record; the STRING column rides a
-        // keyed decode (the cursor's needType path, and the absorb-walk
-        // reading the length-prefixed field at its fixed offset).
-        // COMPOSITE keys (round 20, r19 verdict missing #2): a
-        // comma-separated column list — the key is the TUPLE, tracked
-        // and probed through the canonical ':'-joined line encode; the
-        // write clusters on ALL key columns. Unsupported columns are
-        // refused loudly.
-        val upsertOrds: Option[Seq[Int]] =
-          Option(info.options.get("upsertKey")).map { k =>
-            val ords = k.split(',').map(_.trim).filter(_.nonEmpty)
-              .map(GraftLog.ordinal).toSeq
-            require(ords.nonEmpty && ords.forall(o => o == 0 || o == 1 || o == 3),
-              s"graftlog upsertKey supports the fixed-offset long key " +
-                s"columns (event_id, user_id), the string column " +
-                s"(event_type), and comma-separated composites of them; " +
-                s"got '$k'")
-            require(ords.distinct.size == ords.size,
-              s"duplicate column in composite upsertKey '$k'")
-            require(!doTruncate,
-              "upsertKey with Complete output mode is contradictory: " +
-                "Complete already replaces the whole landing each epoch")
-            ords
-          }
-        branch.foreach { _ => require(upsertOrds.isEmpty,
-          "branch writes do not compose with the upsert sink: publish " +
-            "first, then upsert on main") }
-        upsertOrds match {
-          case Some(ords) =>
-            import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-            import org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering
-            // An upsert write REQUIRES a key-clustered distribution
-            // (round 19, the r18 verdict's one weak component): without
-            // it a key arriving in two source partitions of one
-            // micro-batch lands in two tasks, BOTH copies survive (each
-            // epoch's eq-delete coverage must exclude the epoch's own
-            // publishes), and every read returns a duplicate key. The
-            // shuffle routes all of a key's occurrences to ONE task,
-            // where the writer keeps the last — the same template as the
-            // bucketed batch write above.
-            new Write with RequiresDistributionAndOrdering {
-              override def requiredDistribution(): Distribution =
-                Distributions.clustered(ords.map(o =>
-                  Expressions.column(GraftLog.colName(o))
-                    : org.apache.spark.sql.connector.expressions.Expression).toArray)
-              override def requiredOrdering(): Array[SortOrder] = Array.empty
-              override def toBatch: BatchWrite =
-                throw new UnsupportedOperationException(
-                  "upsertKey is a streaming-sink option; batch upserts are " +
-                    "MERGE INTO on a catalog table")
-              override def toStreaming: StreamingWrite =
-                new GraftLogStreamingWrite(path, truncate = false,
-                  info.queryId(), extra, ret, Some(ords))
-            }
-          case None =>
-            new Write {
-              override def toBatch: BatchWrite =
-                new GraftLogBatchWrite(path, doTruncate, None, extra, ret, branch)
-              override def toStreaming: StreamingWrite = {
-                require(branch.isEmpty,
-                  "streaming into a branch is unsupported — branches stage " +
-                    "batch audit data; stream into main")
-                // truncate-per-epoch is COMPLETE output mode (Spark routes Complete
-                // through SupportsTruncate.truncate() — ignoring the flag here
-                // would silently APPEND a full snapshot every epoch); queryId keys
-                // the replay cleanup so a new query's epoch 0 cannot delete a
-                // previous query's epoch-0 files in a shared landing (r14 review)
-                new GraftLogStreamingWrite(path, doTruncate, info.queryId(), extra, ret)
-              }
-            }
-        }
-    }
-  }
-}
-
-/** Executor-side min/max tracker for every zone-mapped column — the
-  * per-file stats recorded while encoding: the fixed numerics (round 17),
-  * plus `event_type` string bounds and the ADDED schema-evolution
-  * columns (round 18). A NaN `value` poisons the whole record of stats
-  * (NaN orders with nothing — bounds that ignored it would wrongly
-  * prune); a NaN in an ADDED double column poisons only that column's
-  * bounds (GraftAbsentBounds with its present count). String bounds are
-  * tracked full-length and truncated soundly at result() (Iceberg's
-  * truncate-16 upper-bound increment). */
-private final class GraftStatsTracker(extra: Array[StructField] = Array.empty) {
-  private var n = 0L
-  private var nan = false
-  private var eidMin = Long.MaxValue; private var eidMax = Long.MinValue
-  private var uidMin = Long.MaxValue; private var uidMax = Long.MinValue
-  private var valMin = Double.MaxValue; private var valMax = Double.MinValue
-  private var etMin: Array[Byte] = null
-  private var etMax: Array[Byte] = null
-  private val nx = extra.length
-  private val exPresent = if (nx == 0) null else new Array[Long](nx)
-  private val exNan = if (nx == 0) null else new Array[Boolean](nx)
-  private val exLongMin = if (nx == 0) null else Array.fill(nx)(Long.MaxValue)
-  private val exLongMax = if (nx == 0) null else Array.fill(nx)(Long.MinValue)
-  private val exDblMin = if (nx == 0) null else Array.fill(nx)(Double.MaxValue)
-  private val exDblMax = if (nx == 0) null else Array.fill(nx)(Double.MinValue)
-  private val exBinMin = if (nx == 0) null else new Array[Array[Byte]](nx)
-  private val exBinMax = if (nx == 0) null else new Array[Array[Byte]](nx)
-
-  def add(eid: Long, uid: Long, v: Double): Unit = {
-    n += 1
-    if (eid < eidMin) eidMin = eid
-    if (eid > eidMax) eidMax = eid
-    if (uid < uidMin) uidMin = uid
-    if (uid > uidMax) uidMax = uid
-    if (v.isNaN) nan = true
-    else {
-      if (v < valMin) valMin = v
-      if (v > valMax) valMax = v
-    }
-  }
-  /** `b` must be a freshly-allocated array (the encoder's own copy). */
-  def addEtype(b: Array[Byte]): Unit = {
-    if (etMin == null || java.util.Arrays.compareUnsigned(b, etMin) < 0) etMin = b
-    if (etMax == null || java.util.Arrays.compareUnsigned(b, etMax) > 0) etMax = b
-  }
-  /** `v` is the encoder's boxed value: Long / Double / byte[] / null. */
-  def addExtra(i: Int, v: AnyRef): Unit = v match {
-    case null => ()
-    case l: java.lang.Long =>
-      exPresent(i) += 1
-      val x = l.longValue()
-      if (x < exLongMin(i)) exLongMin(i) = x
-      if (x > exLongMax(i)) exLongMax(i) = x
-    case d: java.lang.Double =>
-      exPresent(i) += 1
-      val x = d.doubleValue()
-      if (x.isNaN) exNan(i) = true
-      else {
-        if (x < exDblMin(i)) exDblMin(i) = x
-        if (x > exDblMax(i)) exDblMax(i) = x
-      }
-    case b: Array[Byte] =>
-      exPresent(i) += 1
-      if (exBinMin(i) == null ||
-          java.util.Arrays.compareUnsigned(b, exBinMin(i)) < 0) exBinMin(i) = b
-      if (exBinMax(i) == null ||
-          java.util.Arrays.compareUnsigned(b, exBinMax(i)) > 0) exBinMax(i) = b
-    case other => throw new IllegalStateException(s"untrackable value $other")
-  }
-  def result: Option[GraftStats] =
-    if (n == 0 || nan) None
-    else Some(GraftStats(n, eidMin, eidMax, uidMin, uidMax, valMin, valMax,
-      etype =
-        if (etMin == null) None else Some(GraftBinBounds.of(etMin, etMax)),
-      extras = (0 until nx).map { i =>
-        (i,
-          if (exPresent(i) == 0) GraftAbsentBounds(0)
-          else extra(i).dataType match {
-            case LongType => GraftLongBounds(exPresent(i), exLongMin(i), exLongMax(i))
-            case DoubleType =>
-              if (exNan(i)) GraftAbsentBounds(exPresent(i))
-              else GraftDoubleBounds(exPresent(i), exDblMin(i), exDblMax(i))
-            case _ => GraftStrColBounds(exPresent(i),
-              GraftBinBounds.of(exBinMin(i), exBinMax(i)))
-          })
-      }.toMap))
-}
-
-/** Task commit: one (bucket, tmp, stats) per output the task wrote —
-  * bucket -1 on plain landings. */
-private case class GraftLogCommit(parts: Seq[(Int, String, Option[GraftStats])],
-    partitionId: Int) extends WriterCommitMessage
-
-private object GraftLogCommit {
-  /** The one abort: unlink every tmp the tasks' messages name. */
-  def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case GraftLogCommit(parts, _) =>
-        parts.foreach { case (_, tmp, _) => GraftFs.delete(tmp) }
-      case u: GraftLogUpsertCommit => abort(Array(u.data)); GraftFs.delete(u.delTmp); ()
-      case d: GraftLogDeltaCommit => abort(Array(d.data)); GraftFs.delete(d.delTmp); ()
-      case _ => ()
-    }
-}
-
-private class GraftLogBatchWrite(path: String, truncate: Boolean,
-    bucket: Option[GraftLogBucketSpec],
-    extra: Array[StructField] = Array.empty,
-    ret: GraftRetention = GraftRetention.NONE,
-    branch: Option[String] = None) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    GraftFs.mkdirs(path)
-    new GraftLogWriterFactory(path, bucket, extra)
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // BRANCH append (round 19): publish the task files exactly like a
-    // main append — stamped names, invisible until referenced — then
-    // swap the BRANCH manifest: main readers never see them until
-    // publish_branch fast-forwards the accumulated change in one CAS
-    branch.foreach { b =>
-      val pub = GraftLogNames.publishAll(path, messages,
-        pid => s"br$b-" + f"b$pid%05d")
-      GraftSnapshotIO.commitToBranch(path, b)(_ =>
-        GraftChange(addData = pub.toVector))
-      return
-    }
-    // Snapshot-commit protocol (round 16): resolve the pre-commit live
-    // set, publish, then swap ONE manifest — a concurrent reader observes
-    // the old snapshot or the new one atomically; files published before
-    // the swap are stamped-but-unreferenced, i.e. invisible, which is
-    // exactly what makes a mid-commit crash leave no partial state.
-    val pub = GraftLogNames.publishAll(path, messages, pid => f"b$pid%05d")
-    // no-op appends (zero rows, no truncate) swap no manifest: idempotence
-    // stays file-identical, same discipline as the no-op expire.
-    // Optimistic commit (round 17): an APPEND has no conflictable premise
-    // (its files are brand new), so a lost CAS rebases unconditionally
-    // onto the winner's snapshot — two concurrent appends both land, in
-    // CAS order. An OVERWRITE is last-wins by definition: it empties
-    // whatever the FINAL base holds, including files a concurrent append
-    // committed after our victim listing.
-    val committed = GraftSnapshotIO.commit(path, force = truncate) { base =>
-      GraftChange(
-        addData = pub.toVector,
-        removeData = if (truncate) base.fileNames else Set.empty)
-    }
-    // a snapshot-retaining table's OVERWRITE keeps the pre-overwrite
-    // files readable via VERSION AS OF; expire_snapshots is the GC.
-    // Unlink set = what the final CAS base referenced MINUS what the
-    // result still references (round 18, r17 advice — two bugs shared
-    // this line): (a) on a manifest-less landing resolveCurrent's base
-    // is the directory listing, which already contains this commit's own
-    // just-published stamped files — unlinking raw base names destroyed
-    // the data the overwrite just wrote; (b) a raw directory listing
-    // also catches a concurrent appender's published-but-not-yet-
-    // CAS-committed files, whose later winning commit would then
-    // reference unlinked bytes. base -- result can include neither: the
-    // result re-adds our own files, and an uncommitted concurrent
-    // publish is in no manifest (and reconciliation only surfaces
-    // UNSTAMPED names, which carry no in-flight commit). Stamped
-    // crash garbage is left to expire/sweep — truncate no longer claims
-    // it, because it is indistinguishable from an in-flight publish.
-    // An append removes nothing, so its tail only sweeps.
-    GraftSnapshotIO.retire(path, committed, ret)
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftLogCommit.abort(messages)
-}
-
-/** Epoch-committed streaming write: the one V2 protocol corner the batch
-  * path cannot exercise. Spark re-runs an uncommitted micro-batch with the
-  * SAME epoch id after a restart, so commit(epoch, _) must be idempotent —
-  * delete-then-publish keyed on the `-q<queryId>-e<epoch>-` name token
-  * makes the replayed epoch REPLACE its earlier attempt instead of
-  * duplicating it (GraftLogSpec deletes the checkpoint's commit marker and
-  * re-drains to prove it). The queryId (stable across restarts of one
-  * query — it is exactly Spark's idempotence key for V2 sinks) scopes the
-  * cleanup: epoch ids restart at 0 for every NEW query, so without it a
-  * fresh query appending to a landing would delete a previous query's
-  * epoch-0 files at its own first commit (r14 review). In COMPLETE output
-  * mode (truncate=true) every epoch replaces the whole landing — the
-  * snapshot semantics Spark requested via SupportsTruncate. */
-private class GraftLogStreamingWrite(path: String, truncate: Boolean,
-    queryId: String, extra: Array[StructField] = Array.empty,
-    ret: GraftRetention = GraftRetention.NONE,
-    upsertOrds: Option[Seq[Int]] = None) extends StreamingWrite {
-  require(!queryId.contains("\"") && !queryId.contains(",") && !queryId.contains("\\"),
-    s"unusable queryId for file naming: $queryId")
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    GraftFs.mkdirs(path)
-    new GraftLogWriterFactory(path, None, extra, upsertOrds)
-  }
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val marker = s"-q$queryId-e$epochId-"
-    // replay-victim discovery stays DIRECTORY-based (not manifest-based)
-    // but is MARKER-SCOPED even in Complete mode (round 18, r17 advice):
-    // a replayed epoch may have published files and crashed before its
-    // manifest swap — those are invisible garbage this query OWNS (the
-    // marker proves it), and re-publishing without unlinking them would
-    // strand them forever. A raw whole-directory listing, by contrast,
-    // would also catch a concurrent batch appender's published-but-not-
-    // yet-CAS-committed files, whose later winning commit would then
-    // reference unlinked bytes. Complete-mode replacement of OTHER files
-    // rides the manifest instead: removeData = the final base, unlinked
-    // as base -- result below.
-    val victims = GraftFs.listNames(path)
-      .filter(n => (n.endsWith(".graftlog") || n.endsWith(".graftdel")) &&
-        n.contains(marker))
-    // upsert messages split into their data half (publishes like any
-    // epoch append) and the equality-delete tmps with their key ranges
-    // (round 18)
-    val pub = GraftLogNames.publishAll(path,
-      messages.map { case u: GraftLogUpsertCommit => u.data; case m => m },
-      pid => s"q$queryId-e$epochId-" + f"p$pid%05d")
-    // the epoch's equality-delete files: a zero-key task's empty tmp
-    // drops; the rest publish under the SAME epoch marker so a replay
-    // retires them with the epoch's data
-    val eqDels = messages.collect { case u: GraftLogUpsertCommit => u }
-      .toSeq.zipWithIndex.flatMap { case (u, i) =>
-        GraftLogNames.publishOrDrop(path, u.delTmp, i, -1,
-          s"q$queryId-e$epochId-" + f"eq$i%05d", ".graftdel")
-          .map(name => (name, u.range))
-      }
-    // swap FIRST, unlink after (the uniform commit discipline): readers
-    // flip atomically, and a crash between swap and unlink leaves only
-    // unreferenced garbage (expired on the stamp horizon), never a
-    // manifest pointing at deleted files. The victim set was computed
-    // BEFORE the publish pass, so the replayed epoch's new files — which
-    // carry the SAME epoch marker — can never enter it. Optimistic
-    // commit (round 17): an epoch is an append plus the replacement of
-    // its OWN earlier files — no premise a concurrent batch commit can
-    // break — so a lost CAS rebases unconditionally; Complete mode is
-    // last-wins by definition and empties whatever the final base holds.
-    val committed = GraftSnapshotIO.commit(path) { base =>
-      val removeData =
-        if (truncate) base.fileNames
-        else victims.filter(_.endsWith(".graftlog")).toSet
-          .intersect(base.fileNames)
-      // a replayed upsert epoch also withdraws its FIRST attempt's
-      // committed equality-delete files (round 18). The epoch's OWN
-      // just-published eq-dels join the withdrawal set: on a
-      // manifest-less landing the resolved base is the directory
-      // listing, which classifies them as legacy delete files with "*"
-      // coverage — they must re-enter through addDeletes below with
-      // their explicit coverage (or not at all), never as cover-all.
-      val removeDels =
-        (victims.filter(_.endsWith(".graftdel")).toSet ++ eqDels.map(_._1))
-          .intersect(base.deletes.keySet)
-      // upsert coverage: the data files live BEFORE this epoch, by
-      // explicit name — so removeData pruning and the dead-delete
-      // machinery retire the eq-delete naturally once compaction (or a
-      // later truncate) absorbs or removes the covered files. The
-      // epoch's OWN publishes are excluded explicitly: on a
-      // manifest-less landing the resolved base IS the directory
-      // listing, which already shows them — covering them would delete
-      // the very rows this epoch inserts. Coverage is NARROWED by the
-      // zone maps (the one zone test, GraftDeletes.KeyRange): a file
-      // whose bounds on the key's first column cannot overlap the task's
-      // key range contains none of the deleted keys, so on a
-      // key-clustered landing the per-epoch manifest cost is
-      // O(overlapping files), not O(live files). Stats-less files stay
-      // covered (unknown bounds must not skip a takedown).
-      val excluded = removeData ++ pub.map(_.name)
-      val candidates = base.files.filterNot(f => excluded.contains(f.name))
-      GraftChange(
-        addData = pub.toVector,
-        removeData = removeData,
-        addDeletes = eqDels.flatMap { case (d, range) =>
-          val cov = candidates.collect {
-            case f if range.exists(r => f.stats.forall(r.overlaps)) => f.name
-          }.sorted
-          if (cov.isEmpty) None else Some((d, cov))
-        },
-        removeDeletes = removeDels)
-    }
-    // Snapshot retention applies to STREAMING epochs too (r16 advice,
-    // medium): on a retaining table the victims the pre-commit snapshot
-    // referenced stay on disk — retained manifests point at them, so
-    // `VERSION AS OF` across any streamed epoch (including Complete-mode
-    // truncate, which victims every file each epoch) keeps reading.
-    // Unreferenced replayed-epoch garbage — files a crashed attempt
-    // published but never committed, which NO manifest references — is
-    // still unlinked unconditionally: retention retains history, not
-    // garbage.
-    val resultNames = committed.result.fileNames ++ committed.result.deletes.keySet
-    val baseNames = committed.base.fileNames ++ committed.base.deletes.keySet
-    val garbage = victims
-      .filterNot(resultNames.contains).filterNot(baseNames.contains)
-    garbage.foreach(n => require(GraftFs.delete(GraftFs.child(path, n)),
-      s"epoch commit failed to delete $path/$n"))
-    // an eq-delete published against an EMPTY (or fully zone-disjoint)
-    // pre-epoch live set covers nothing and was never referenced —
-    // withdraw it
-    eqDels.map(_._1).filterNot(committed.result.deletes.keySet.contains)
-      .foreach(n => GraftFs.delete(GraftFs.child(path, n)))
-    GraftSnapshotIO.retire(path, committed, ret)
-  }
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    GraftLogCommit.abort(messages)
-}
-
-// ---------------------------------------------------------------------------
-// Row-level DELETE / UPDATE / MERGE (round 15): group-based copy-on-write
-// ---------------------------------------------------------------------------
-
-/** `DELETE FROM / UPDATE / MERGE INTO <graft catalog table>` — the
-  * takedown (right-to-be-forgotten), correction, and upsert operations a
-  * 100 TB training-data landing needs as first-class commands, via
-  * Spark's SupportsRowLevelOperations contract (GROUP-based, the file is
-  * the group). One operation serves all three commands — the analyzer
-  * builds a different ReplaceData query per command (survivors for
-  * DELETE; If(cond, updated, original) for UPDATE; the matched/unmatched
-  * action union for MERGE), but the connector's job is identical: read
-  * the affected files in full, land the replacement rows, swap the
-  * files. The DELETE walkthrough:
-  *
-  *  1. The analyzer rewrites the DELETE into ReplaceData(Filter(NOT cond,
-  *     scan)) over this operation's scan, with `_file` (the metadata
-  *     column) as the operation's required metadata attribute — the group
-  *     identity.
-  *  2. The optimizer's runtime group filtering plants a subquery that
-  *     collects `_file` FROM the table WHERE cond — only files that
-  *     actually CONTAIN matching rows — and hands the set to the rewrite
-  *     scan as a V2 runtime filter. At 100 TB a DELETE touching 0.1% of
-  *     files rewrites 0.1% of the landing, not all of it.
-  *  3. The rewrite scan reads the affected files IN FULL (no row-predicate
-  *     pushdown here, deliberately: pushing the survivor filter would be
-  *     sound for the rows, but this scan's FILE SET is the replace set,
-  *     and only group-level pruning may shrink it), Spark applies
-  *     NOT cond, and the write lands the survivors.
-  *  4. commit() publishes the survivors, swaps the snapshot manifest
-  *     (old files out, survivors in — readers flip atomically at the one
-  *     rename), then unlinks the replaced originals. A crash before the
-  *     swap leaves the survivors as invisible garbage and the table
-  *     unchanged; after it, only unreferenced originals awaiting the
-  *     stamp-horizon GC — never duplicates, never lost survivors
-  *     (round 16; the r15 publish-then-delete window is closed).
-  *
-  * If runtime group filtering does not fire (conf off, exotic condition),
-  * the scan's file set is the whole landing and the command degrades to a
-  * full rewrite — always correct, never silently wrong. Whole-table
-  * DELETE (no WHERE) never reaches this path: SupportsDeleteV2 serves it
-  * as a metadata-only truncate. MERGE's unmatched-source INSERT rows ride
-  * the same replacement write (they belong to no existing group; the
-  * publish adds them alongside the rewritten files). */
-private class GraftLogRewriteOperation(path: String,
-    private[sources] val bucket: Option[GraftLogBucketSpec],
-    cmd: RowLevelOperation.Command,
-    private[sources] val extra: Array[StructField] = Array.empty,
-    private[sources] val ret: GraftRetention = GraftRetention.NONE) extends RowLevelOperation {
-
-  /** Runtime group-filter file set, recorded by the rewrite scan's
-    * filter() (driver-side; the commit re-derives the replace set from
-    * it). None = unfiltered (full rewrite). */
-  @volatile private[sources] var allowedFiles: Option[Set[String]] = None
-  /** The pushed COMMAND condition in its data-lane translation, recorded
-    * by the rewrite scan builder's pushPredicates — the static half of
-    * the group-selection formula. The
-    * commit MUST reproduce the scan's exact file-set arithmetic
-    * (static ∩ runtime): a replace set larger than the scanned set
-    * deletes unread rows, a smaller one duplicates rewritten ones.
-    * Written exactly once per command: only the main rewrite scan plans
-    * through [[GraftLogRewriteScanBuilder]] (the matching-rows subquery
-    * scans the ORIGINAL table), so there is no second writer. */
-  @volatile private[sources] var groupFilters: Array[Filter] = Array.empty
-
-  /** The rewrite scan's PREMISE, recorded at plan time (round 17): the
-    * file set it read and each file's position-delete coverage. The
-    * survivors the write lands were computed from exactly these bytes, so
-    * the commit re-validates the premise against its freshly-resolved
-    * base — a concurrent commit that rewrote/compacted one of these files
-    * or stacked a new position delete on it invalidates the rewrite, and
-    * the command fails LOUDLY ([[GraftConflictException]]) instead of
-    * resurrecting deleted rows or losing concurrent changes. */
-  @volatile private[sources] var scanned: Option[GraftPremise] = None
-
-  /** The group-selection formula, shared verbatim by the rewrite scan's
-    * planInputPartitions and the replace commit — both sides apply it to
-    * a snapshot they resolve themselves (identical when no concurrent
-    * commit intervenes; the `scanned` premise check is what catches one
-    * that does). */
-  private[sources] def selectedFilesFrom(snap: GraftSnapshot): Array[String] = {
-    val files = snap.files.map(f => GraftFs.child(path, f.name)).toArray
-    val staticSet = bucket.flatMap(b => GraftLog.prunedBuckets(b, groupFilters)) match {
-      case Some(ks) => files.filter(f =>
-        ks.contains(GraftLogNames.bucketOf(GraftFs.nameOf(f))))
-      case None => files
-    }
-    allowedFiles match {
-      case Some(s) => staticSet.filter(s.contains)
-      case None => staticSet
-    }
-  }
-  private[sources] def selectedFiles(): Array[String] = {
-    val snap = GraftSnapshotIO.resolve(path)
-    val sel = selectedFilesFrom(snap)
-    scanned = Some(GraftPremise.of("rewrite", snap, sel.map(GraftFs.nameOf)))
-    sel
-  }
-
-  override def command(): RowLevelOperation.Command = cmd
-  override def description(): String = s"GraftLogRewrite($cmd, $path)"
-  // `_file` is the group identity the rewrite plan carries row-by-row;
-  // the runtime group-filter subquery projects exactly this column
-  override def requiredMetadataAttributes(): Array[NamedReference] =
-    Array(Expressions.column("_file"))
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftLogRewriteScanBuilder(path, this)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = new WriteBuilder {
-    override def build(): Write = {
-      // positional writers: require the exact data schema, in order (the
-      // rewrite plan projects metadata columns away before the write)
-      val got = info.schema().fields.map(f => (f.name, f.dataType)).toSeq
-      val want = (GraftLog.schema.fields ++ GraftLog.activeExtra(extra)).map(f => (f.name, f.dataType)).toSeq
-      require(got == want,
-        s"replace-data write schema must be exactly $want; got $got")
-      bucket match {
-        case Some(b) =>
-          import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-          import org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering
-          new Write with RequiresDistributionAndOrdering {
-            override def requiredDistribution(): Distribution =
-              Distributions.clustered(Array(Expressions.column(b.col)))
-            override def requiredOrdering(): Array[SortOrder] = Array.empty
-            override def toBatch: BatchWrite =
-              new GraftLogReplaceDataBatchWrite(path, bucket, GraftLogRewriteOperation.this)
-          }
-        case None =>
-          new Write {
-            override def toBatch: BatchWrite =
-              new GraftLogReplaceDataBatchWrite(path, None, GraftLogRewriteOperation.this)
-          }
-      }
-    }
-  }
-}
-
-/** Rewrite-side scan: column pruning only — NO row-predicate pushdown
-  * (see [[GraftLogRewriteOperation]] step 3) and no limit/TopN/agg surface
-  * (none can arrive under a ReplaceData plan). Group-level pruning comes
-  * from the command condition (buckets, below) and the V2 runtime filter
-  * on `_file` (files). */
-private class GraftLogRewriteScanBuilder(path: String, op: GraftLogRewriteOperation)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownV2Filters {
-  private var required: StructType = StructType(GraftLog.schema.fields ++ GraftLog.activeExtra(op.extra))
-  override def pruneColumns(r: StructType): Unit = required = r
-  // GROUP-SELECTION pushdown: Spark's GroupBasedRowLevelOperationScanPlanning
-  // offers the COMMAND condition here (not the rewrite query's survivor
-  // filter). EVERYTHING is returned as residual — this scan must emit
-  // every row of every affected file — and the data-lane translation
-  // serves only group-level pruning in planInputPartitions.
-  override def pushPredicates(predicates: Array[V2Predicate]): Array[V2Predicate] = {
-    // the commit reproduces the scan's formula from the same filters
-    op.groupFilters = predicates.flatMap(GraftLog.v2ToV1(_))
-    predicates
-  }
-  override def pushedPredicates(): Array[V2Predicate] = Array.empty
-  override def build(): Scan = new GraftLogRewriteScan(path, required, op)
-}
-
-private class GraftLogRewriteScan(path: String, required: StructType,
-    op: GraftLogRewriteOperation) extends Scan with Batch
-    with SupportsRuntimeV2Filtering {
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"GraftLogRewriteScan path=$path columns=[${required.fieldNames.mkString(", ")}]"
-
-  override def filterAttributes(): Array[NamedReference] =
-    Array(Expressions.column("_file"))
-  override def filter(predicates: Array[V2Predicate]): Unit =
-    // recorded on the operation: both this scan's partitions and the
-    // replace commit derive from op.selectedFiles
-    op.allowedFiles = GraftLog.runtimeFileSet(predicates)
-
-  // STATIC group pruning from the pushed COMMAND condition (via
-  // op.selectedFiles): on a bucketed landing, =/IN on the bucket column
-  // names the only buckets that can contain matching rows — a file
-  // outside them has no match, the command leaves it untouched, so
-  // excluding it from the replace set is sound (the same argument as
-  // scan-side bucket pruning, lifted to group selection). Coarser than
-  // the runtime filter (bucket vs file granularity) but needs no
-  // subquery pass. The formula lives on the OPERATION so the commit
-  // reproduces it exactly — see op.selectedFiles.
-  override def planInputPartitions(): Array[InputPartition] =
-    op.selectedFiles().map(f => GraftLogPartition(f): InputPartition)
-  // plain per-file readers, unfiltered; metadata columns (the plan carries
-  // `_file` per row) ride the shared reader projection. The cursor spec
-  // carries the snapshot's position deletes and segment maps: a rewrite
-  // over a merge-on-read table must NOT resurrect already-deleted rows.
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftLogReaderFactory(() => Array.empty, required.fieldNames, -1, -1, None, None,
-      GraftLogCursorSpec.of(path, GraftSnapshotIO.resolve(path), Array.empty, op.extra))
-}
-
-/** The replace commit. The replace set is derived AT COMMIT TIME as
-  * (files present) ∩ (runtime group-filter set, if one arrived) — listed
-  * BEFORE the survivors publish, so the new files can never enter it.
-  * Deriving from the op's filter() state rather than a planInputPartitions
-  * side-channel keeps it insensitive to how many times Spark re-plans
-  * partitions (stats probes, AQE) and to the matching-rows subquery,
-  * which shares this operation but is never runtime-filtered. */
-private class GraftLogReplaceDataBatchWrite(path: String,
-    bucket: Option[GraftLogBucketSpec], op: GraftLogRewriteOperation)
-    extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftLogWriterFactory(path, bucket, op.extra)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val pub = GraftLogNames.publishAll(path, messages, pid => f"d$pid%05d")
-    // manifest swap FIRST, physical deletes after: readers flip from the
-    // old file set to the new one at the rename; the replaced files (and
-    // any position-delete files now covering nothing) are dead to every
-    // resolver before they are unlinked. Optimistic commit (round 17):
-    // the survivors were computed from the files the SCAN read, so the
-    // premise check rejects any base where that set changed — a
-    // concurrent compact/rewrite of a replaced file (survivors would
-    // resurrect its pre-change rows) or a new position delete on one
-    // (the takedown would be silently undone by our rewrite).
-    val committed = GraftSnapshotIO.commit(path, premise = op.scanned) { base =>
-      val replacedNames = op.selectedFilesFrom(base).map(GraftFs.nameOf).toSet
-      op.scanned.foreach { p =>
-        if (replacedNames != p.inputs.keySet)
-          throw new GraftConflictException(
-            s"concurrent commit changed the rewrite's file set on $path: " +
-              s"scanned ${p.inputs.size} files, commit-time selection has " +
-              s"${replacedNames.size} — retry the command")
-      }
-      GraftChange(
-        addData = pub.toVector,
-        removeData = replacedNames)
-    }
-    // snapshot retention (round 16): a retaining table keeps the replaced
-    // originals (and their now-uncovered delete files) on disk — still
-    // referenced by RETAINED manifests, so VERSION AS OF stays readable
-    // across the rewrite; expire's stamp-horizon pass is the GC
-    GraftSnapshotIO.retire(path, committed, op.ret)
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftLogCommit.abort(messages)
-}
-
-// ---------------------------------------------------------------------------
-// Merge-on-read row-level commands (round 16): SupportsDelta
-// ---------------------------------------------------------------------------
-
-/** Row-level commands as a DELTA of row changes instead of a file
-  * rewrite — Spark's [[SupportsDelta]] contract, the merge-on-read half
-  * of the row-level story (r15 verdict #2, extended to UPDATE/MERGE).
-  * The copy-on-write path rewrites every file containing a match; at
-  * 100 TB with compacted multi-GB files, a takedown or correction of a
-  * handful of rows must not move terabytes. Here the analyzer plans
-  * WriteDelta over this operation's scan, and each row change reaches
-  * the writer as:
-  *
-  *  - DELETE: the row's identity — (`_file`, `_pos`), file name and raw
-  *    record ordinal — appended to a position-delete file
-  *    (`pub-...-.graftdel`, text `<file>\t<pos>` records);
-  *  - UPDATE: split by `representUpdateAsDeleteAndInsert` into the
-  *    delete of the OLD position plus an insert of the replacement row
-  *    (the format cannot edit a record in place — splitting is the
-  *    honest contract, and it is exactly Iceberg's MoR update shape);
-  *  - INSERT (MERGE's unmatched actions, and the reinsert half of an
-  *    update): encoded into a fresh DATA file — bucket-routed on
-  *    bucketed tables so the layout's key purity survives.
-  *
-  * The commit publishes the delete and data files and swaps ONE
-  * manifest (delete-file coverage + new data files); every reader's
-  * cursor then drops the deleted ordinals during the sequential decode
-  * (O(1) per record against a sorted positions array) while the
-  * replacement rows ride the new files, and `CALL system.compact`
-  * absorbs pending deletes by rewriting only the files that carry them.
-  *
-  * Selected per table and per command via the `delete.mode` /
-  * `update.mode` / `merge.mode = merge-on-read` properties
-  * ([[GraftCatalog]]); each defaults to copy-on-write. The scan is the
-  * NORMAL scan builder: the command condition pushes down as row
-  * predicates, and `_pos` stays the raw ordinal because pushed
-  * predicates drop rows inside the cursor without disturbing the record
-  * count. */
-private class GraftLogDeltaOperation(path: String,
-    bucket: Option[GraftLogBucketSpec],
-    extra: Array[StructField],
-    cmd: RowLevelOperation.Command,
-    ret: GraftRetention,
-    branch: Option[String] = None) extends RowLevelOperation with SupportsDelta {
-  override def command(): RowLevelOperation.Command = cmd
-  override def description(): String =
-    s"GraftLogDelta($cmd, $path${branch.map(b => s"#$b").getOrElse("")})"
-  override def rowId(): Array[NamedReference] =
-    Array(Expressions.column("_file"), Expressions.column("_pos"))
-  override def requiredMetadataAttributes(): Array[NamedReference] = Array.empty
-  // the writer appends; it cannot edit a record in place
-  override def representUpdateAsDeleteAndInsert(): Boolean = true
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftLogScanBuilder(path, bucket, None, GraftLogNames.DEFAULT_LAG_MS,
-      extra, None, branch)
-  override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
-    new DeltaWriteBuilder {
-      override def build(): DeltaWrite = new DeltaWrite {
-        override def toBatch: DeltaBatchWrite =
-          new GraftLogDeltaBatchWrite(path, bucket, extra, ret, branch)
-      }
-    }
-}
-
-/** One task's delta output: the position-delete tmp (empty = no deletes)
-  * with the DISTINCT data files it deleted from (the manifest's coverage
-  * index), plus the task commit of its inserted/updated rows. */
-private case class GraftLogDeltaCommit(delTmp: String, covered: Seq[String],
-    data: GraftLogCommit) extends WriterCommitMessage
-
-/** Ships to executors: must not capture the (driver-only) batch write. */
-private class GraftLogDeltaWriterFactory(path: String,
-    bucket: Option[GraftLogBucketSpec],
-    extra: Array[StructField]) extends DeltaWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new GraftLogDeltaWriter(path, partitionId, bucket, extra)
-}
-
-private class GraftLogDeltaBatchWrite(path: String,
-    bucket: Option[GraftLogBucketSpec],
-    extra: Array[StructField],
-    ret: GraftRetention,
-    branch: Option[String] = None) extends DeltaBatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
-    new GraftLogDeltaWriterFactory(path, bucket, extra)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val deltas = messages.map {
-      case d: GraftLogDeltaCommit => d
-      case other =>
-        throw new IllegalStateException(s"unexpected delta commit message $other")
-    }
-    val d = deltas.toSeq.zipWithIndex.flatMap { case (m, i) =>
-      GraftLogNames.publishOrDrop(path, m.delTmp, i, -1,
-        f"d${m.data.partitionId}%05d", ".graftdel").map(name => (name, m.covered))
-    }
-    val f = GraftLogNames.publishAll(path, deltas.map(_.data),
-      pid => f"u$pid%05d").toVector
-    // ONE manifest swap makes the deletes and the replacement rows
-    // visible together — a reader sees the pre-command or post-command
-    // table, never an updated row present twice or absent. Original data
-    // files are untouched: that absence of rewrite IS merge-on-read.
-    // A command matching nothing publishes nothing and swaps nothing.
-    // Optimistic commit (round 17): position deletes name (file, pos)
-    // identities — if a concurrent commit rewrote/compacted/truncated a
-    // covered file, those ordinals now describe bytes that no longer
-    // exist (or, worse, DIFFERENT rows in a merged file), so the premise
-    // check fails the command loudly instead of committing stale deletes.
-    def validate(base: GraftSnapshot): GraftChange = {
-      d.foreach { case (del, covered) =>
-        covered.foreach { c =>
-          if (!base.fileNames.contains(c))
-            throw new GraftConflictException(
-              s"concurrent commit replaced $c after this command read " +
-                s"it — the position deletes in $del are stale; retry " +
-                "the command")
-        }
-      }
-      GraftChange(addData = f, addDeletes = d)
-    }
-    if (d.nonEmpty || f.nonEmpty) branch match {
-      // branch audit commands land as BRANCH delta manifests (round 20):
-      // the same stale-premise validation runs against the BRANCH view,
-      // and publish later remaps staged names in the delete files
-      case Some(b) => GraftSnapshotIO.commitToBranch(path, b)(validate)
-      // the delta removes no file, so its tail only sweeps
-      case None => GraftSnapshotIO.retire(path, GraftSnapshotIO.commit(path)(validate), ret)
-    }
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftLogCommit.abort(messages)
-}
-
-/** Executor-side delta writer: position deletes to one text tmp, insert
-  * rows through the one task writer ([[GraftLogWriter]]: same record
-  * codec, bucket routing and schema-evolution tail as every write).
-  * `update` never arrives — the operation represents updates as
-  * delete + reinsert, and reinsert's default delegates to insert. */
-private class GraftLogDeltaWriter(path: String, partitionId: Int,
-    bucket: Option[GraftLogBucketSpec],
-    extra: Array[StructField]) extends DeltaWriter[InternalRow] {
-  private val delTmp = s"$path/.gd-${java.util.UUID.randomUUID().toString.take(16)}.tmp"
-  GraftFs.mkdirs(path)
-  private val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-    GraftFs.createData(delTmp), java.nio.charset.StandardCharsets.UTF_8))
-  private val covered = scala.collection.mutable.LinkedHashSet.empty[String]
-  private val inserts = new GraftLogWriter(path, partitionId, bucket, extra)
-
-  override def delete(metadata: InternalRow, id: InternalRow): Unit = {
-    // rowId projection order = rowId(): (_file absolute path, _pos)
-    val name = GraftFs.nameOf(id.getUTF8String(0).toString)
-    out.write(name); out.write('\t')
-    out.write(java.lang.Long.toString(id.getLong(1))); out.write('\n')
-    covered += name
-  }
-  override def update(metadata: InternalRow, id: InternalRow, row: InternalRow): Unit =
-    throw new IllegalStateException(
-      "graftlog represents updates as delete+reinsert (representUpdateAsDeleteAndInsert)")
-  override def insert(row: InternalRow): Unit = inserts.write(row)
-
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    GraftLogDeltaCommit(delTmp, covered.toSeq, inserts.commit())
-  }
-  override def abort(): Unit = {
-    out.close(); GraftFs.delete(delTmp); inserts.abort()
-  }
-  override def close(): Unit = { out.close(); inserts.close() }
-}
-
-private class GraftLogWriterFactory(path: String,
-    bucket: Option[GraftLogBucketSpec] = None,
-    extra: Array[StructField] = Array.empty,
-    upsertOrds: Option[Seq[Int]] = None)
-    extends DataWriterFactory with StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftLogWriter(path, partitionId, bucket, extra)
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    upsertOrds match {
-      case Some(ords) => new GraftLogUpsertWriter(path, partitionId, extra, ords)
-      case None => new GraftLogWriter(path, partitionId, bucket, extra)
-    }
-}
-
-/** The one task writer: routes each row to the tmp of its bucket =
-  * floorMod(<bucket column>, n), or to the single bucket -1 on a plain
-  * landing, opening a tmp only for buckets the task actually sees. With
-  * a bucketed Write's clustered distribution the incoming rows are
-  * hash-grouped by the bucket column, so a task touches
-  * ~numBuckets/tasks of the domain, not all of it (round 15). The commit
-  * message carries one (bucket, tmp, zone map) part per tmp; the
-  * driver's publish pass tags each bucketed name `-k<bucket>-` for the
-  * scan's partition grouping. A tmp is invisible to readers twice over:
-  * hidden dot-prefix AND a non-.graftlog suffix. Its publish name (with
-  * the rename-time stamp) is assigned by the driver's commit pass, never
-  * here — an executor clock must not decide publish order. */
-private class GraftLogWriter(path: String, partitionId: Int,
-    bucket: Option[GraftLogBucketSpec],
-    extra: Array[StructField]) extends DataWriter[InternalRow] {
-  private val outs =
-    new java.util.HashMap[Int, (String, DataOutputStream, GraftStatsTracker)]()
-  GraftFs.mkdirs(path) // defensive: factory mkdirs ran on the driver
-  // the last row's bucket and its tmp: a plain task never looks again
-  private var curB = Int.MinValue
-  private var cur: (String, DataOutputStream, GraftStatsTracker) = _
-
-  override def write(r: InternalRow): Unit = {
-    val b = bucket match {
-      case Some(bs) => bs.bucketOf(r.getLong(bs.ord))
-      case None => -1
-    }
-    if (b != curB) {
-      cur = outs.get(b)
-      if (cur == null) {
-        val tmp = s"$path/.gl-${java.util.UUID.randomUUID().toString.take(16)}.tmp"
-        cur = (tmp, GraftFs.createData(tmp), new GraftStatsTracker(extra))
-        outs.put(b, cur)
-      }
-      curB = b
-    }
-    GraftLog.encodeRecord(cur._2, r, extra, 0, cur._3)
-    ()
-  }
-  override def commit(): GraftLogCommit = {
-    close()
-    val parts = scala.collection.mutable
-      .ArrayBuffer.empty[(Int, String, Option[GraftStats])]
-    outs.forEach((b, e) => parts += ((b, e._1, e._3.result)))
-    GraftLogCommit(parts.sortBy(_._1).toSeq, partitionId)
-  }
-  override def abort(): Unit =
-    outs.forEach((_, e) => { e._2.close(); GraftFs.delete(e._1); () })
-  override def close(): Unit = outs.forEach((_, e) => e._2.close())
-}
-
-/** Upsert task commit (round 18): the data tmp plus the task's DISTINCT
-  * keys, written as an equality-delete tmp at task commit. `range` bounds
-  * the keys' first component so the epoch commit can NARROW the
-  * eq-delete's coverage to files whose key-column zone overlaps — on a
-  * key-clustered landing the per-epoch manifest cost drops from O(live
-  * files) to O(overlapping files). A zero-key task's delete tmp is empty
-  * and its range None. */
-private case class GraftLogUpsertCommit(data: GraftLogCommit, delTmp: String,
-    range: Option[GraftDeletes.KeyRange]) extends WriterCommitMessage
-
-/** Streaming upsert task writer (round 18; keep-last round 19): the
-  * plain record encode plus key tracking — at commit the task's distinct
-  * keys become an equality-delete tmp (header + one key per line) that
-  * the epoch commit publishes covering the pre-commit live set.
-  *
-  * INTRA-EPOCH duplicate keys (round 19, the r18 verdict's weak
-  * component): eq-delete coverage must exclude the epoch's own publishes
-  * (or the epoch would delete its own inserts), so a key written twice in
-  * one micro-batch would land BOTH rows and silently violate the
-  * replace-by-key contract. The write's required key-clustered
-  * distribution routes every occurrence of a key to THIS one task, and
-  * the writer keeps the LAST occurrence in task-arrival order: rows
-  * stream to the tmp as before (no buffering), a key→last-ordinal map
-  * tracks supersession, and only a task that actually saw a duplicate
-  * pays a second pass — a record walk that drops superseded ordinals and
-  * recomputes the file's zone-map stats from the survivors (the
-  * streaming tracker saw the dead rows too, and a superset row COUNT
-  * would corrupt the pushed-aggregate path). Arrival order within one
-  * source file is deterministic (shuffle writers and readers both
-  * preserve a map partition's row order); across source partitions the
-  * stream itself defines no order, so neither does the sink — exactly
-  * the Flink/Iceberg upsert contract. */
-private class GraftLogUpsertWriter(path: String, partitionId: Int,
-    extra: Array[StructField] = Array.empty,
-    keyOrds: Seq[Int] = Seq(0))
-    extends DataWriter[InternalRow] {
-  require(keyOrds.nonEmpty && keyOrds.forall(o => o == 0 || o == 1 || o == 3),
-    s"upsert key columns must be the longs or the string column, got $keyOrds")
-  // COMPOSITE keys (round 20): the task tracks keep-last per canonical
-  // ':'-joined tuple encode; the single-column paths keep their
-  // allocation-free fixed-offset probes.
-  private val composite = keyOrds.size > 1
-  private val keyOrd = keyOrds.head
-  private val strKey = !composite && keyOrd == 3
-  private val tmp = s"$path/.gl-${java.util.UUID.randomUUID().toString.take(16)}.tmp"
-  private val delTmp = s"$path/.gd-${java.util.UUID.randomUUID().toString.take(16)}.tmp"
-  GraftFs.mkdirs(path)
-  private val out = GraftFs.createData(tmp)
-  private val stats = new GraftStatsTracker(extra)
-  private val lastOrd = scala.collection.mutable.LongMap.empty[Long]
-  // string keys: UnsafeRow-backed UTF8Strings view a reused buffer, so
-  // map keys are CLONES; probes use the transient value
-  private val lastOrdS = new java.util.HashMap[UTF8String, java.lang.Long]()
-  private val lastOrdT = new java.util.HashMap[String, java.lang.Long]()
-  private var ord = 0L
-  private var dup = false
-
-  override def write(r: InternalRow): Unit = {
-    if (composite) {
-      val k = GraftDeletes.encKey(r.getLong(0), r.getLong(1),
-        r.getUTF8String(3), keyOrds)
-      if (lastOrdT.put(k, Long.box(ord)) != null) dup = true
-    } else if (strKey) {
-      val k = r.getUTF8String(3)
-      if (lastOrdS.containsKey(k)) dup = true
-      lastOrdS.put(k.clone(), Long.box(ord))
-    } else if (lastOrd.put(r.getLong(keyOrd), ord).isDefined) dup = true
-    ord += 1
-    GraftLog.encodeRecord(out, r, extra, 0, stats)
-    ()
-  }
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    def lastOf(buf: Array[Byte]): Long =
-      if (composite)
-        lastOrdT.get(GraftDeletes.encKey(GraftDeletes.recordLong(buf, 0),
-          GraftDeletes.recordLong(buf, 1), GraftDeletes.recordEtype(buf),
-          keyOrds)).longValue()
-      else if (strKey) lastOrdS.get(GraftDeletes.recordEtype(buf)).longValue()
-      else lastOrd(GraftDeletes.recordLong(buf, keyOrd))
-    val (dataTmp, st) =
-      if (!dup) (tmp, stats.result)
-      else {
-        // duplicate keys in this task: keep each key's LAST record
-        val tmp2 = s"$path/.gl-${java.util.UUID.randomUUID().toString.take(16)}.tmp"
-        val in = GraftFs.openData(tmp)
-        val os = GraftFs.createData(tmp2)
-        val st2 = new GraftStatsTracker(extra)
-        try {
-          var buf = new Array[Byte](256)
-          var ordIn = 0L
-          var done = false
-          while (!done) {
-            val len = try in.readInt() catch { case _: EOFException => done = true; -1 }
-            if (!done) {
-              if (buf.length < len) buf = new Array[Byte](len)
-              in.readFully(buf, 0, len)
-              // the key sits at its fixed offset: event_id at 0, user_id
-              // at 8, event_type length-prefixed at 24
-              if (lastOf(buf) == ordIn) {
-                os.writeInt(len); os.write(buf, 0, len)
-                GraftLog.trackRecordStats(buf, len, extra, st2)
-              }
-              ordIn += 1
-            }
-          }
-        } finally { in.close(); os.close() }
-        require(GraftFs.delete(tmp), s"failed to drop superseded $tmp")
-        (tmp2, st2.result)
-      }
-    // a zero-key task leaves its eq-delete tmp EMPTY, which the epoch's
-    // publish step drops; any key makes it header + one key per line
-    val keys: GraftDeletes.KeySet =
-      if (composite) new GraftDeletes.TupleKeys(keyOrds,
-        lastOrdT.keySet().toArray(new Array[String](0)).sorted, null)
-      else if (strKey) new GraftDeletes.StrKeys(
-        lastOrdS.keySet().toArray(new Array[UTF8String](0)).sorted, null)
-      else new GraftDeletes.LongKeys(keyOrd, lastOrd.keysIterator.toArray.sorted, null)
-    GraftFs.writeString(delTmp, GraftDeletes.render(keys))
-    GraftLogUpsertCommit(GraftLogCommit(Seq((-1, dataTmp, st)), partitionId),
-      delTmp, keys.range)
-  }
-  override def abort(): Unit = {
-    out.close(); GraftFs.delete(tmp); GraftFs.delete(delTmp); ()
-  }
-  override def close(): Unit = out.close()
-}
-
-// ---------------------------------------------------------------------------
-// Read path
-// ---------------------------------------------------------------------------
-
-private class GraftLogScanBuilder(path: String, bucket: Option[GraftLogBucketSpec],
-    maxFiles: Option[Int], lagMs: Long,
-    extra: Array[StructField] = Array.empty,
-    asOf: Option[Long] = None,
-    branch: Option[String] = None)
-    extends ScanBuilder
-    with SupportsPushDownV2Filters with SupportsPushDownRequiredColumns
-    with SupportsPushDownLimit with SupportsPushDownOffset
-    with SupportsPushDownTopN with SupportsPushDownAggregates {
-
-  private var pushedV2: Array[V2Predicate] = Array.empty
-  private var pushed: Array[Filter] = Array.empty
-  private var stampPushed: Array[Filter] = Array.empty
-  private var required: StructType = StructType(GraftLog.schema.fields ++ GraftLog.activeExtra(extra))
-
-  // V2 Predicate pushdown (round 15): each conjunct arrives as a
-  // connector Predicate tree and takes one of three lanes of
-  // GraftLog.v2ToV1, tried in turn:
-  //  - the data lane: claimed as pushed and evaluated by the reader during
-  //    the sequential decode, recursively through AND/OR/NOT — so a whole
-  //    disjunction like (type='a' AND v>x) OR (type='b' AND v<y) is ONE
-  //    exact pushed predicate;
-  //  - the stamp lane: a pure `_pub_stamp` tree, constant per file,
-  //    claimed and pruning FILES exactly;
-  //  - the hint lane (round 18, added columns): never claimed — the
-  //    predicate stays residual and Spark re-evaluates it — but a file
-  //    whose W bounds provably exclude it is never opened. The
-  //    no-pushdown contract for extras is about row-filtering claims; a
-  //    sound reduction needs no claim.
-  // The lanes' columns are disjoint, so mixed trees fit none and stay
-  // residual. Untranslatable predicates (and only those) are returned for
-  // Spark's post-scan Filter — the claim stays EXACT.
-  private var statsHints: Array[Filter] = Array.empty
-  override def pushPredicates(predicates: Array[V2Predicate]): Array[V2Predicate] = {
-    val trans = predicates.map(p =>
-      (p, GraftLog.v2ToV1(p), GraftLog.v2ToV1(p, GraftLog.STAMP_LANE)))
-    pushedV2 = trans.collect { case (p, d, s) if d.isDefined || s.isDefined => p }
-    pushed = trans.collect { case (_, Some(f), _) => f }
-    stampPushed = trans.collect { case (_, None, Some(f)) => f }
-    val residual = trans.collect { case (p, None, None) => p }
-    statsHints = residual.flatMap(GraftLog.v2ToV1(_, GraftLog.hintLane(extra)))
-    residual
-  }
-  override def pushedPredicates(): Array[V2Predicate] = pushedV2
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    // with an aggregation pushed, the scan's output IS the aggregate
-    // schema — the pushed agg already names the minimal column set, so
-    // later pruning (phrased in post-agg names) has nothing to prune
-    if (agg.isEmpty) required = requiredSchema
-
-  // LIMIT pushdown, PARTIALLY: each partition reader early-stops after
-  // `limit` matching records (at 100 TB a LIMIT-k probe query stops
-  // decoding after k matches per file instead of streaming every file to
-  // the end), while isPartiallyPushed=true makes Spark keep its global
-  // Limit over the <= k*files surviving rows — the source must not claim
-  // a global property one task per file cannot enforce.
-  private var limit: Int = -1
-  override def pushLimit(l: Int): Boolean =
-    if (agg.isDefined) false else { limit = l; true }
-  // one override serves BOTH SupportsPushDownLimit and SupportsPushDownTopN
-  // — the contract is identical: per-partition reduction, global op kept
-  override def isPartiallyPushed(): Boolean = true
-
-  // OFFSET pushdown (round 15), FULLY — the SPI has no partial variant,
-  // and a per-file skip is NOT a global skip, so claiming this forces an
-  // execution-model decision: a pushed-offset scan collapses to ONE
-  // sequential InputPartition chaining the files in publish-name order
-  // (stamped names sort in publish order by construction — the format
-  // HAS a deterministic global row order, unlike a generic file source)
-  // and skips the first k PASSING records of that stream. OFFSET is an
-  // inherently sequential prefix operation — Spark's own alternative is
-  // a single-partition global skip above the scan, after shipping every
-  // row; here the skipped prefix never materializes rows at all. Declined
-  // under TopN/agg (their per-file reductions change what "first k rows"
-  // means before the offset could apply).
-  private var offset: Int = -1
-  override def pushOffset(o: Int): Boolean =
-    // a bucketed scan plans one partition PER BUCKET — a global skip is
-    // not enforceable across them, so the full-push claim must decline
-    if (agg.isDefined || topN.isDefined || bucket.isDefined) false
-    else { offset = o; true }
-
-  // TopN pushdown (ORDER BY ... LIMIT k), PARTIALLY: the reader keeps a
-  // size-k bounded heap per file — O(k) memory against an arbitrarily
-  // large file — and Spark's global TakeOrdered merges the per-file
-  // candidates. Only simple column sort keys are claimable; anything else
-  // (expressions, unknown columns) is declined and Spark plans the full
-  // Sort+Limit itself.
-  private var topN: Option[GraftLogTopN] = None
-  override def pushTopN(orders: Array[SortOrder], l: Int): Boolean = {
-    // bucketed scans keep TopN/agg in Spark (scope: the bucketed layout's
-    // win is the zero-exchange join; per-bucket chained heaps/partials are
-    // future work, and declining is always-correct under both contracts)
-    if (agg.isDefined || offset >= 0 || bucket.isDefined) return false
-    val keys = orders.map { so =>
-      so.expression() match {
-        case nr: NamedReference if nr.fieldNames.length == 1 &&
-            GraftLog.ordinal(nr.fieldNames()(0)) >= 0 =>
-          (GraftLog.ordinal(nr.fieldNames()(0)),
-            so.direction() == SortDirection.DESCENDING)
-        case _ => return false
-      }
-    }
-    topN = Some(GraftLogTopN(keys, l)); true
-  }
-
-  // Aggregate pushdown, PARTIALLY (supportCompletePushDown stays false —
-  // one task per file yields per-file partials, never the global answer):
-  // COUNT(*), COUNT(col), MIN(col), MAX(col) over simple columns, grouped
-  // by simple columns. Spark plans its merge aggregate (SUM of counts,
-  // MIN of mins, MAX of maxes) over the scan's O(files x groups) partial
-  // rows; the positional contract is readSchema = groupBy columns ++ one
-  // column per aggregate, in push order. SUM is deliberately NOT claimed:
-  // the format's value column is a double, and a source-side partial sum
-  // would commit to an addition order — the engine keeps floating-point
-  // aggregation in Spark where its decimal-accumulate discipline applies.
-  private var agg: Option[GraftLogAgg] = None
-  override def supportCompletePushDown(a: Aggregation): Boolean = false
-  override def pushAggregation(a: Aggregation): Boolean = {
-    if (offset >= 0 || bucket.isDefined) return false
-    def simpleCol(e: org.apache.spark.sql.connector.expressions.Expression): Int = e match {
-      case nr: NamedReference if nr.fieldNames.length == 1 => GraftLog.ordinal(nr.fieldNames()(0))
-      case _ => -1
-    }
-    val groupBy = a.groupByExpressions().map(simpleCol)
-    if (groupBy.exists(_ < 0)) return false
-    val fns = a.aggregateExpressions().map {
-      case _: CountStar => GraftLogAggFn(GraftLogAggFn.COUNT_STAR, -1)
-      case c: V2Count if !c.isDistinct && simpleCol(c.column()) >= 0 =>
-        GraftLogAggFn(GraftLogAggFn.COUNT, simpleCol(c.column()))
-      case m: V2Min if simpleCol(m.column()) >= 0 =>
-        GraftLogAggFn(GraftLogAggFn.MIN, simpleCol(m.column()))
-      case m: V2Max if simpleCol(m.column()) >= 0 =>
-        GraftLogAggFn(GraftLogAggFn.MAX, simpleCol(m.column()))
-      case _ => return false
-    }
-    agg = Some(GraftLogAgg(groupBy, fns)); true
-  }
-
-  override def build(): Scan =
-    new GraftLogScan(path, bucket, pushed, stampPushed, statsHints, required,
-      limit, offset, topN, agg, maxFiles, lagMs, extra, asOf, branch)
-}
-
-/** Pushed ORDER BY keys as (column ordinal, descending) plus the limit. */
-private case class GraftLogTopN(keys: Array[(Int, Boolean)], k: Int) {
-  override def toString: String = keys.map { case (ord, desc) =>
-    GraftLog.colName(ord) + (if (desc) " DESC" else " ASC")
-  }.mkString("[", ", ", s"] limit=$k")
-}
-
-/** One pushed aggregate function: kind x column ordinal (-1 for COUNT(*)). */
-private case class GraftLogAggFn(kind: Int, ord: Int) {
-  import GraftLogAggFn._
-  def resultField: StructField = kind match {
-    case COUNT_STAR => StructField("count(*)", LongType, nullable = false)
-    case COUNT => StructField(s"count(${GraftLog.colName(ord)})", LongType, nullable = false)
-    case MIN => StructField(s"min(${GraftLog.colName(ord)})", GraftLog.colType(ord), nullable = true)
-    case MAX => StructField(s"max(${GraftLog.colName(ord)})", GraftLog.colType(ord), nullable = true)
-  }
-  override def toString: String = kind match {
-    case COUNT_STAR => "count(*)"
-    case COUNT => s"count(${GraftLog.colName(ord)})"
-    case MIN => s"min(${GraftLog.colName(ord)})"
-    case MAX => s"max(${GraftLog.colName(ord)})"
-  }
-}
-private object GraftLogAggFn {
-  val COUNT_STAR = 0; val COUNT = 1; val MIN = 2; val MAX = 3
-}
-
-/** Pushed aggregation: group-by column ordinals + functions, in push
-  * order. The schema is the positional contract with Spark's merge agg. */
-private case class GraftLogAgg(groupBy: Array[Int], fns: Array[GraftLogAggFn]) {
-  def schema: StructType = StructType(
-    groupBy.map(ord => StructField(GraftLog.colName(ord), GraftLog.colType(ord), nullable = false)).toSeq ++
-      fns.map(_.resultField).toSeq)
-  override def toString: String =
-    fns.mkString("[", ", ", "]") +
-      (if (groupBy.nonEmpty) groupBy.map(GraftLog.colName).mkString(" groupBy=[", ", ", "]") else "")
-}
-
-private class GraftLogScan(path: String, bucket: Option[GraftLogBucketSpec],
-    filters: Array[Filter], stampFilters: Array[Filter],
-    statsHints: Array[Filter],
-    required: StructType, limit: Int, offset: Int, topN: Option[GraftLogTopN],
-    agg: Option[GraftLogAgg], maxFiles: Option[Int], lagMs: Long,
-    extra: Array[StructField] = Array.empty,
-    asOf: Option[Long] = None,
-    branch: Option[String] = None)
-    extends Scan with Batch
-    with SupportsReportStatistics with SupportsReportPartitioning
-    with SupportsRuntimeV2Filtering with Serializable {
-
-  override def readSchema(): StructType = agg.map(_.schema).getOrElse(required)
-  override def toBatch: Batch = this
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
-    require(asOf.isEmpty, "streaming from a time-travel (AS OF) snapshot " +
-      "is unsupported — a pinned snapshot is a bounded batch; read it as one")
-    require(branch.isEmpty, "streaming from a branch is unsupported — " +
-      "branches are the staging half of write-audit-publish; stream main")
-    new GraftLogMicroBatchStream(path, filters, required.fieldNames, maxFiles, lagMs, extra)
-  }
-
-  // Runtime filtering (round 14): at execution time Spark derives an
-  // IN-set from the other (filtered, broadcast) side of a join and hands
-  // it here BEFORE planInputPartitions/createReaderFactory run for the
-  // batch — the reader then drops non-matching records during the
-  // sequential decode, so join probe rows never materialize. This is the
-  // row-level analog of parquet DPP: a reduction, not a correctness
-  // surface (the join above still applies its condition), which is why
-  // runtime predicates the data lane cannot translate are silently dropped.
-  private var runtime: Array[Filter] = Array.empty
-  // Only columns present in THIS scan's (pruned) output are offerable:
-  // Spark resolves the references against the scan output and fails hard
-  // on a miss. And none at all once a limit/topN/agg is pushed — a
-  // runtime row filter under those would change WHICH rows the pushed
-  // operator keeps, not just drop join-dead rows (Spark's own pruning
-  // rule never matches through a Limit, but the source must not rely on
-  // the caller for its own correctness envelope).
-  override def filterAttributes(): Array[NamedReference] =
-    // offset joins the exclusion list (round 15): a runtime row filter
-    // under a pushed offset would change WHICH rows the skip drops —
-    // same correctness envelope as limit/TopN/agg
-    if (agg.isDefined || topN.isDefined || limit >= 0 || offset >= 0) Array.empty
-    else {
-      val out = readSchema().fieldNames.toSet
-      Array("event_id", "user_id", "event_type")
-        .filter(out.contains).map(Expressions.column)
-    }
-  override def filter(predicates: Array[V2Predicate]): Unit =
-    runtime = predicates.flatMap(GraftLog.v2ToV1(_))
-  private[sources] def allFilters: Array[Filter] = filters ++ runtime
-
-  // ---- snapshot, resolved ONCE per Scan (r15 advice #3 + the round-16
-  // manifest protocol): planned partitions, reported partitioning and
-  // statistics all derive from this single resolution, so they can never
-  // observe different landings (the r15-noted SPJ desync window), and a
-  // Scan reads one atomic snapshot end to end.
-  @transient private lazy val snapshot: GraftSnapshot = branch match {
-    case Some(b) => GraftSnapshotIO.resolveBranch(path, b) // round 19
-    case None => asOf match {
-      case Some(s) => GraftSnapshotIO.resolveAsOf(path, s)
-      case None => GraftSnapshotIO.resolve(path)
-    }
-  }
-  // stamp pruning (time-travel/incremental slices) then zone-map pruning
-  // (round 17): a pushed range/equality predicate on the numeric columns
-  // drops every file whose manifest min/max provably excludes it — the
-  // files are never opened, and estimateStatistics reports the skipped
-  // slice so broadcast decisions see the post-skip size
-  @transient private lazy val prunedFiles: Seq[GraftLiveFile] =
-    GraftLog.statsPrune(
-      GraftLog.stampPrune(snapshot.files, stampFilters),
-      filters ++ statsHints, extra)
-  private def pathOf(f: GraftLiveFile): String = GraftFs.child(path, f.name)
-
-  /** Size statistics from the log files themselves — without this a V2
-    * scan reports "unknown", Catalyst assumes it is huge, and a small
-    * graftlog dimension can never be broadcast: the optimizer integration
-    * that makes a custom source a first-class join citizen, not just
-    * readable. Sizes are on-disk bytes (compression-free format, so
-    * in-memory ~= on-disk); row count is estimated from an average-record
-    * floor rather than decoded — statistics must stay O(files), never
-    * O(records). */
-  override def estimateStatistics(): Statistics = {
-    // stamp-pruned, like the planned partitions: an incremental
-    // `_pub_stamp > t` slice of a huge landing must report the SLICE's
-    // size, or Catalyst can never broadcast it. For compacted files the
-    // slice is per SEGMENT — the byte spans the cursor will actually emit.
-    val bytes = prunedFiles.map { f =>
-      val len = GraftFs.length(GraftFs.child(path, f.name))
-      f.segs match {
-        case None => len
-        case Some(ss) =>
-          val ends = ss.map(_.start).drop(1) :+ len
-          ss.zip(ends).collect {
-            case (seg, end) if stampFilters.forall(GraftLog.stampAccepts(_, seg.stamp)) =>
-              end - seg.start
-          }.sum
-      }
-    }.sum
-    new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(bytes)
-      override def numRows(): java.util.OptionalLong =
-        // len(4) + fixed(26) + short etype: ~34 bytes/record floor
-        java.util.OptionalLong.of(bytes / 34)
-    }
-  }
-  override def description(): String =
-    s"GraftLogScan path=$path pushed=[${filters.mkString(", ")}] " +
-      (if (stampFilters.nonEmpty) s"stampPruned=[${stampFilters.mkString(", ")}] " else "") +
-      s"columns=[${readSchema().fieldNames.mkString(", ")}]" +
-      (if (limit >= 0) s" limit=$limit" else "") +
-      (if (offset >= 0) s" offset=$offset" else "") +
-      topN.map(t => s" topn=$t").getOrElse("") +
-      agg.map(a => s" agg=$a").getOrElse("")
-
-  // planned ONCE per Scan from the cached snapshot: Spark may consult
-  // partitions repeatedly (stats probes, outputPartitioning, AQE) and
-  // each call re-listing the directory could observe a different landing
-  // mid-publish — the r15-noted numPartitions/SPJ desync (r15 advice #3)
-  @transient private lazy val plannedPartitions: Array[InputPartition] = {
-    // stamp pruning first, uniformly across the three planning shapes:
-    // pushed `_pub_stamp` predicates hold for all of a file's rows or
-    // none (per segment for compacted files — the cursor finishes the
-    // segment-exact part), so dropping non-matching files here IS the
-    // pushed filter
-    val files = prunedFiles.map(pathOf).toArray
-    // pushed OFFSET = one sequential partition over all files in publish
-    // order: the only plan under which "skip the first k rows" is a global
-    // statement a task can enforce (see pushOffset)
-    if (offset >= 0) Array(GraftLogFilesPartition(files.toSeq))
-    else bucket match {
-      case Some(b) =>
-        // one partition PER BUCKET (all its files, publish order) keyed by
-        // the bucket number — the HasPartitionKey half of the SPJ contract;
-        // files without a bucket token (foreign appends to a bucketed
-        // landing) would silently break the co-partitioning claim, so they
-        // fail loudly here instead
-        val byBucket = files.groupBy { f =>
-          val k = GraftLogNames.bucketOf(GraftFs.nameOf(f))
-          require(k >= 0 && k < b.n,
-            s"non-bucketed or out-of-range file in bucketed landing: $f")
-          k
-        }
-        // BUCKET PRUNING (round 15): a pushed =/IN on the bucket column
-        // names the only buckets that can match — the other buckets'
-        // files are never opened, the layout's second scale lever after
-        // the zero-exchange join (a point lookup on a 100 TB landing
-        // touches 1/n of it). PUSHED filters only: runtime filters
-        // arrive after outputPartitioning() has been consulted, and
-        // pruning on them would desync the reported partitioning from
-        // the planned partitions mid-SPJ.
-        val allowed = GraftLog.prunedBuckets(b, filters)
-        byBucket.toArray.sortBy(_._1)
-          .filter { case (k, _) => allowed.forall(_.contains(k)) }
-          .map { case (k, fs) =>
-            GraftLogBucketPartition(k, fs.toSeq): InputPartition
-          }
-      case None =>
-        agg match {
-          case Some(a) if a.groupBy.isEmpty && filters.isEmpty =>
-            // metadata aggregate (round 17): an ungrouped, unfiltered
-            // COUNT/MIN/MAX over tracked columns reads NOTHING for files
-            // whose zone maps answer it exactly — no covering position
-            // deletes (they change the count), every stamp segment live
-            // (a dead segment's rows are excluded from the query but not
-            // from the stats), and every pushed function servable. A
-            // landing where that holds for all files makes `SELECT
-            // count(*)` a pure metadata query.
-            val (served, opened) = prunedFiles.partition(f =>
-              f.stats.isDefined &&
-                snapshot.deletesFor(f.name).isEmpty &&
-                f.stampedSegments.forall(seg =>
-                  stampFilters.forall(GraftLog.stampAccepts(_, seg.stamp))) &&
-                a.fns.forall(fn => fn.kind match {
-                  case GraftLogAggFn.COUNT_STAR => true
-                  case GraftLogAggFn.COUNT => fn.ord <= 3 // base cols: non-null
-                  case _ => fn.ord <= 2 // MIN/MAX: numeric zone-map columns
-                }))
-            val statsRow: Option[InputPartition] =
-              if (served.isEmpty) None
-              else {
-                val m = served.flatMap(_.stats).reduce(_.merge(_))
-                val values: Seq[Any] = a.fns.toSeq.map { fn =>
-                  fn.kind match {
-                    case GraftLogAggFn.COUNT_STAR | GraftLogAggFn.COUNT => Long.box(m.n)
-                    case GraftLogAggFn.MIN => fn.ord match {
-                      case 0 => Long.box(m.eidMin)
-                      case 1 => Long.box(m.uidMin)
-                      case _ => Double.box(m.valMin)
-                    }
-                    case GraftLogAggFn.MAX => fn.ord match {
-                      case 0 => Long.box(m.eidMax)
-                      case 1 => Long.box(m.uidMax)
-                      case _ => Double.box(m.valMax)
-                    }
-                  }
-                }
-                Some(GraftLogStatsAggPartition(values))
-              }
-            (opened.map(f => GraftLogPartition(pathOf(f)): InputPartition)
-              ++ statsRow).toArray
-          case _ => files.map(f => GraftLogPartition(f): InputPartition)
-        }
-    }
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = plannedPartitions
-
-  /** SPJ surface (round 15): a bucketed landing reports
-    * KeyGroupedPartitioning over the SAME `bucket(n, col)` transform the
-    * writer applied and [[GraftCatalog]] serves as a V2 ScalarFunction —
-    * so a join of two such scans on the bucket column plans with ZERO
-    * exchange (storage-partitioned join), the connector twin of
-    * `join_bucketed`. numPartitions must be the count of partitions
-    * actually planned, which is the count of non-empty buckets — both
-    * derive from the one cached snapshot, so they cannot desync. */
-  override def outputPartitioning(): Partitioning = bucket match {
-    case Some(b) =>
-      new KeyGroupedPartitioning(
-        Array(Expressions.bucket(b.n, b.col)), plannedPartitions.length)
-    case None => new UnknownPartitioning(plannedPartitions.length)
-  }
-
-  // the factory carries the scan itself: runtime filters arrive via
-  // filter() after planning, and the scan's state is snapshotted at TASK
-  // serialization time (post-filter) — so the readers see them regardless
-  // of when Spark first touched the (lazily cached) factory
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftLogReaderFactory(() => allFilters,
-      required.fieldNames, limit, offset, topN, agg,
-      GraftLogCursorSpec.of(path, snapshot, stampFilters, extra))
-
-  // Observability (round 14): the records the readers DROPPED via pushed
-  // and runtime predicates, surfaced as a first-class SQL metric on the
-  // BatchScan node — pushdown savings become a number in the UI/plan
-  // metrics instead of an inference from row counts. Sum across tasks.
-  override def supportedCustomMetrics(): Array[CustomMetric] =
-    Array(new GraftLogSkippedMetric)
-}
-
-private case class GraftLogPartition(file: String) extends InputPartition
-
-/** A pushed ungrouped COUNT/MIN/MAX answered ENTIRELY from the manifest's
-  * zone maps (round 17): the partition carries the pre-merged partial
-  * values of every servable file — those files are never opened. Spark's
-  * merge aggregation combines this row with the partials of files that
-  * DID need opening (no stats, covering position deletes, partially-dead
-  * stamp segments), so mixed landings stay exact. */
-private case class GraftLogStatsAggPartition(values: Seq[Any]) extends InputPartition
-
-/** Single sequential partition chaining `files` in publish order — the
-  * pushed-OFFSET execution shape (see GraftLogScanBuilder.pushOffset). */
-private case class GraftLogFilesPartition(files: Seq[String]) extends InputPartition
-
-/** A streaming micro-batch read of a file whose segment map shows some
-  * origins ALREADY delivered under the batch's start offset (a compaction
-  * merged processed inputs with unprocessed ones mid-stream): segments
-  * stamped in `deadStamps` are suppressed — byte-skipped wholesale when
-  * nothing needs raw ordinals, decoded-and-dropped when position deletes
-  * or `_pos` do (round 17; closes the r16 "streaming re-delivers across
-  * compaction" gap). */
-private case class GraftLogReplayPartition(file: String,
-    deadStamps: Seq[Long]) extends InputPartition
-
-/** One bucket of a bucketed landing: all its files, keyed by the bucket
-  * number — HasPartitionKey is what lets Spark line partitions up across
-  * the two sides of a storage-partitioned join. */
-private case class GraftLogBucketPartition(bucket: Int, files: Seq[String])
-    extends InputPartition with HasPartitionKey {
-  override def partitionKey(): InternalRow =
-    new GenericInternalRow(Array[Any](bucket))
-}
-
-private class GraftLogSkippedMetric extends CustomSumMetric {
-  override def name(): String = "recordsSkipped"
-  override def description(): String =
-    "records dropped inside the source by pushed/runtime predicates"
-}
-
-// ---------------------------------------------------------------------------
-// Streaming source
-// ---------------------------------------------------------------------------
-
-/** Micro-batch (streaming) read of the log directory — the Kafka-shaped
-  * half of the connector, offline: an OFFSET names the exact set of files
-  * already visible, `latestOffset(start, limit)` discovers newly-published
-  * files (optionally throttled by maxFilesPerTrigger — the same admission
-  * control as Kafka's maxOffsetsPerTrigger), and
-  * `planInputPartitions(start, end)` plans precisely the difference — so a
-  * checkpointed query that restarts resumes from its committed offset and
-  * processes every appended record EXACTLY ONCE (GraftLogSpec proves the
-  * resume). Offsets are COMPACTED set arithmetic on publish-stamped names
-  * (see the header): high-water + lag-window tail, never the lifetime
-  * file list. Pushed filters and pruned columns ride into each
-  * micro-batch reader unchanged. */
-private class GraftLogMicroBatchStream(path: String, filters: Array[Filter],
-    columns: Array[String], maxFiles: Option[Int], lagMs: Long,
-    extra: Array[StructField] = Array.empty)
-    extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow with ReportsSourceMetrics {
-
-  // snapshot-resolved (round 16): a published-but-uncommitted file (its
-  // commit's manifest swap still pending, or crashed) must not be
-  // admitted — streaming discovery sees exactly the batch-visible set
-  private def listNames(): Array[String] =
-    GraftSnapshotIO.resolve(path).files.map(_.name).sorted.toArray
-
-  // Trigger.AvailableNow, natively (round 14; previously Spark's
-  // compatibility wrapper supplied the semantics): prepare() snapshots the
-  // visible file set, and every subsequent admission is clipped to it —
-  // the query drains exactly the data that existed at start (in
-  // maxFilesPerTrigger-sized batches) and terminates, files landing
-  // mid-drain left for the next run. The snapshot is names, not an
-  // offset: admission still goes through the same seen/admit arithmetic.
-  @volatile private var availableNowCutoff: Option[Set[String]] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCutoff = Some(listNames().toSet)
-
-  override def initialOffset(): Offset = GraftLogOffset("", lagMs, Nil)
-  // SupportsAdmissionControl routes all discovery through the 2-arg form;
-  // the 0-arg form must not be silently different, so it refuses
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) should be called instead of this method")
-  override def deserializeOffset(json: String): Offset = GraftLogOffset.fromJson(json)
-  override def commit(end: Offset): Unit = () // progress lives in the checkpoint log
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxFiles.map(n => ReadLimit.maxFiles(n)).getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val cur = start.asInstanceOf[GraftLogOffset]
-    val snap = GraftSnapshotIO.resolve(path)
-    val names = snap.files.map(_.name).sorted.toArray
-    // sorted = publish order for stamped names: admission drains the
-    // backlog oldest-first, which is what keeps the high-water honest
-    // (everything still unadmitted sorts at or above the new high-water)
-    val visible = availableNowCutoff match {
-      case Some(cut) => names.filter(cut.contains)
-      case None => names
-    }
-    val fresh = visible.filterNot(cur.seen)
-    val admitted = limit match {
-      case r: org.apache.spark.sql.connector.read.streaming.ReadMaxFiles =>
-        fresh.take(r.maxFiles())
-      case _ => fresh
-    }
-    // an admitted merged file delivers its UNSEEN segments; their origin
-    // stamps ride the offset so a SECOND mid-stream compaction (the
-    // merged file re-merged under yet another fresh name) cannot
-    // re-deliver them — the name-level tail no longer identifies them
-    val segsOf = snap.files.collect {
-      case GraftLiveFile(n, Some(ss), _, _) => (n, ss)
-    }.toMap
-    val delivered = admitted.toSeq.flatMap(n => segsOf.get(n).toSeq.flatten
-      .map(_.stamp).filter(st => st >= 0 && !cur.seenStamp(st)))
-    cur.admit(admitted.toSeq, lagMs, delivered)
-  }
-
-  /** Backlog visibility in every StreamingQueryProgress: how many visible
-    * files the latest committed offset has not consumed — the file-source
-    * analog of Kafka's offsets-behind-latest, and the number an operator
-    * alarms on. The committed offset arrives as whatever Offset impl the
-    * engine holds (possibly a SerializedOffset read back from the
-    * checkpoint log), so it is re-parsed through the one serde. */
-  override def metrics(latestConsumed: java.util.Optional[Offset]): java.util.Map[String, String] = {
-    val consumed: Option[GraftLogOffset] =
-      if (latestConsumed.isPresent)
-        Some(GraftLogOffset.fromJson(latestConsumed.get.json()))
-      else None
-    val names = listNames()
-    val pending = consumed match {
-      case Some(off) => names.count(n => !off.seen(n))
-      case None => names.length
-    }
-    java.util.Map.of("visibleFiles", names.length.toString,
-      "pendingFiles", pending.toString)
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[GraftLogOffset]
-    // every name this batch admitted is retained verbatim in end's tail
-    // (admit() never compacts the batch it is admitting), so the
-    // difference is enumerable from the two offsets alone — including
-    // across a restart, where both come back from checkpoint JSON.
-    // Exactly-once ACROSS COMPACTION (round 17): an admitted file whose
-    // manifest segment map shows origins this reader already processed
-    // (a mid-stream compaction merged drained inputs with backlog) plans
-    // as a replay partition that suppresses the seen segments — and is
-    // skipped entirely when every origin was processed. The suppression
-    // derives from the CHECKPOINTED start offset plus the segment map,
-    // so a restart re-plans the batch identically while the merged file
-    // lives; a file re-compacted out from under an uncommitted batch
-    // fails loudly on open (fail-stop, same as every resolved-then-
-    // deleted window in this connector).
-    val segsOf = GraftSnapshotIO.resolve(path).files.collect {
-      case GraftLiveFile(n, Some(ss), _, _) => (n, ss)
-    }.toMap
-    end.asInstanceOf[GraftLogOffset].tail
-      .filterNot(from.seen).sorted
-      .flatMap { n =>
-        segsOf.get(n) match {
-          case Some(ss) =>
-            val dead = ss.map(_.stamp).distinct.filter(from.seenStamp)
-            if (dead.isEmpty) Some(GraftLogPartition(s"$path/$n"))
-            else if (ss.forall(s => from.seenStamp(s.stamp))) None
-            else Some(GraftLogReplayPartition(s"$path/$n", dead))
-          case None => Some(GraftLogPartition(s"$path/$n"))
-        }
-      }.map(p => p: InputPartition).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val fs = filters // no runtime filtering in streaming; snapshot, no scan capture
-    // position deletes known NOW apply to the whole drain (a stream of a
-    // merge-on-read landing must not emit taken-down rows); deletes
-    // committed mid-stream take effect from the next factory (restart)
-    new GraftLogReaderFactory(() => fs, columns, -1, -1, None, None,
-      GraftLogCursorSpec.of(path, GraftSnapshotIO.resolve(path), Array.empty, extra))
-  }
-
-  override def stop(): Unit = ()
-}
-
-/** Publish-name scheme shared by the write commits and the offsets. */
-private[sources] object GraftLogNames {
-  /** Max tolerated publish-to-visibility skew: a file whose name stamp is
-    * older than (high-water stamp - lag) may be compacted out of an offset
-    * tail, so it must already be visible by then. The stamp is assigned in
-    * the same driver pass that renames the file visible — the real skew is
-    * one rename loop, and 10 s is ~4 orders of magnitude of headroom. */
-  val DEFAULT_LAG_MS = 10000L
-
-  /** `pub-<millis13>-<seq>-<tag>.graftlog`; 13-digit zero-padded millis
-    * makes lexicographic name order publish order through year 2286.
-    * Position-delete files (merge-on-read DELETE) share the scheme under
-    * the `.graftdel` extension — same stamps, never data-listed. */
-  def publish(millis: Long, seq: Int, tag: String, ext: String = ".graftlog"): String =
-    f"pub-$millis%013d-$seq%04d-$tag$ext"
-
-  /** Publish stamp of a name, or -1 for unstamped (legacy/foreign) names,
-    * which never take part in watermark arithmetic. The FULL scheme shape
-    * is required — `pub-<13 digits>-<digits>-` — not just the prefix: a
-    * plausible foreign name like `pub-1690000000000.graftlog` must ride
-    * the never-compacts legacy path, not be silently classified as seen
-    * by the boundary (r14 review). */
-  def stamp(name: String): Long = {
-    if (name.length < 20 || !name.startsWith("pub-") ||
-        !name.substring(4, 17).forall(c => c >= '0' && c <= '9') ||
-        name.charAt(17) != '-') return -1L
-    val seqEnd = name.indexOf('-', 18)
-    if (seqEnd <= 18 ||
-        !name.substring(18, seqEnd).forall(c => c >= '0' && c <= '9')) return -1L
-    name.substring(4, 17).toLong
-  }
-
-  /** Monotone per-writer publish stamps (r14 advice): the wall clock is
-    * not monotone — a backwards step larger than the lag window between
-    * commits would stamp new files BELOW an already-advanced offset
-    * boundary and a streaming reader would silently skip them. Each stamp
-    * is max(lastStamp + 1, now), so within this driver JVM stamps only
-    * ever advance (multi-writer skew across JVMs remains covered by the
-    * lag window, as before). */
-  private val lastStamp = new java.util.concurrent.atomic.AtomicLong(0L)
-  private[sources] def nextStamp(): Long =
-    lastStamp.updateAndGet(prev => math.max(prev + 1, System.currentTimeMillis()))
-
-  /** The one publish step of every commit, driver-side: a zero-length
-    * tmp publishes NOTHING — an empty file is semantically absent in this
-    * format (no header/footer), it only costs listing at scale, and
-    * Spark deliberately runs one empty task over an empty write just to
-    * carry a commit message (e.g. a replace-data rewrite whose runtime
-    * group filter matched no files). Any other tmp is renamed visible as
-    * `pub-<stamp>-<seq>-[k<bucket>-]<tag>-<uuid><ext>`; the `k<bucket>`
-    * token leads so bucketOf() can parse it back at scan-planning time.
-    * The stamp is taken PER FILE, immediately before its own rename — the
-    * stamp-to-visibility window is one syscall, so a GC pause or slow fs
-    * mid-loop cannot strand a stale-stamped file below another writer's
-    * advancing lag boundary (r14 review; a commit-wide stamp left the
-    * whole rename loop inside the window). The sequence number plus a
-    * fresh uuid keep names unique even across two commits inside the same
-    * millisecond. Branch publish ([[GraftSnapshotIO.publishBranch]]) keeps
-    * its own journaled rename: a retried publish must resume the renames a
-    * crash left half done, and this step mints a fresh name on every call,
-    * so it cannot.
-    * @return the published name, None if the tmp was dropped. */
-  def publishOrDrop(path: String, tmp: String, seq: Int, bucket: Int,
-      tag: String, ext: String = ".graftlog"): Option[String] = {
-    if (GraftFs.length(tmp) == 0L) {
-      require(GraftFs.delete(tmp), s"failed to drop empty $tmp"); return None
-    }
-    val uuid = java.util.UUID.randomUUID().toString.take(8)
-    val name = publish(nextStamp(), seq,
-      (if (bucket >= 0) s"k$bucket-" else "") + s"$tag-$uuid", ext)
-    require(GraftFs.rename(tmp, GraftFs.child(path, name)),
-      s"commit failed to publish $tmp -> $name")
-    Some(name)
-  }
-
-  /** Publish every part of the tasks' [[GraftLogCommit]]s, in message
-    * order (the message index is the name's seq).
-    * @return the published LIVE-FILE entries (name + task-recorded zone
-    *         map) for the commit's manifest swap. */
-  def publishAll(path: String, messages: Array[WriterCommitMessage],
-      tag: Int => String): Seq[GraftLiveFile] =
-    messages.toSeq.zipWithIndex.flatMap {
-      case (GraftLogCommit(parts, pid), i) =>
-        parts.flatMap { case (b, tmp, stats) =>
-          publishOrDrop(path, tmp, i, b, tag(pid)).map(GraftLiveFile(_, None, stats))
-        }
-      case (other, _) =>
-        throw new IllegalStateException(s"unexpected commit message $other")
-    }
-
-  /** Bucket number of a published bucketed-landing name, or -1: the token
-    * after the stamp/seq prefix is `k<bucket>` exactly. */
-  def bucketOf(name: String): Int = {
-    val parts = name.split('-')
-    if (parts.length < 4 || parts(3).length < 2 || parts(3).charAt(0) != 'k') return -1
-    val digits = parts(3).substring(1)
-    if (!digits.forall(c => c >= '0' && c <= '9')) return -1
-    digits.toInt
-  }
-}
-
-/** Compacted streaming offset: `hw` is the highest publish-stamped name
-  * ever admitted ("" before any), `tail` the seen names not implied by it
-  * — stamped names inside the lag window plus all unstamped (legacy)
-  * names. A stamped name below (hw's stamp - lag) is implicitly seen; see
-  * the connector header for why that is sound. The lag the tail was
-  * COMPACTED under rides in the offset itself: seen() must use it, not
-  * the session's current `publishLagMs` — a restart with a raised lag
-  * would otherwise re-classify already-compacted (implicitly seen) names
-  * as fresh and re-process them (r14 review). Serialized as a flat JSON
-  * object; names are uuid/stamp tokens, so no escaping beyond quotes is
-  * ever needed, and fromJson rejects any name that would require it
-  * rather than parse wrongly. */
-private case class GraftLogOffset(hw: String, lagMs: Long, tail: Seq[String],
-    segStamps: Seq[Long] = Nil) extends Offset {
-  // commas are forbidden alongside quotes/backslashes: the tail parser
-  // splits elements on commas, so a comma-bearing (foreign) file name
-  // must fail HERE, loudly, not round-trip into a corrupted offset that
-  // silently re-reads or skips files
-  require((tail :+ hw).forall(f =>
-      !f.contains("\"") && !f.contains("\\") && !f.contains(",")),
-    s"unserializable file name among: hw=$hw tail=$tail")
-  require(hw.isEmpty || GraftLogNames.stamp(hw) >= 0,
-    s"offset high-water must be a publish-stamped name, got '$hw'")
-  require(lagMs >= 0, s"offset lag must be >= 0, got $lagMs")
-  require(segStamps.forall(_ >= 0),
-    s"offset delivered-segment stamps must be >= 0: $segStamps")
-
-  @transient private lazy val tailSet = tail.toSet
-  @transient private lazy val tailStamps: Set[Long] =
-    tail.map(GraftLogNames.stamp).filter(_ >= 0).toSet
-  @transient private lazy val segSeen: Set[Long] = segStamps.toSet
-  private def boundary: Long =
-    if (hw.isEmpty) Long.MinValue else GraftLogNames.stamp(hw) - lagMs
-
-  /** Has `name` already been processed under this offset? Uses the
-    * offset's OWN compaction lag — the only basis consistent with what
-    * its tail retained. */
-  def seen(name: String): Boolean = {
-    val s = GraftLogNames.stamp(name)
-    (s >= 0 && s < boundary) || tailSet.contains(name)
-  }
-
-  /** Segment-level twin of [[seen]] (round 17): was the ORIGINAL file
-    * published at `stamp` already processed under this offset? A
-    * compacted file's manifest segment map carries its merged inputs'
-    * original stamps, so an in-flight reader admits the merged file but
-    * delivers ONLY the segments whose origin it has not processed —
-    * compaction no longer re-delivers rows to streaming consumers.
-    * Sound on both sides of the boundary: below it, oldest-first
-    * admission guarantees every stamped name was admitted (the same
-    * argument seen() rests on); at or above it, the tail holds the
-    * admitted names verbatim and stamps identify them (stamps are unique
-    * per publish within a writer; the residual is a cross-writer
-    * same-millisecond tie inside the lag window COMBINED with a
-    * compaction — the single-compactor contract). Origins delivered
-    * through an earlier merged file ride `segStamps` — without them a
-    * SECOND mid-stream compaction of that merged file would re-deliver
-    * the segments its name no longer identifies. Unstamped origins
-    * (stamp < 0, foreign files) are never claimed seen: their rows
-    * re-deliver rather than silently vanish. */
-  def seenStamp(stamp: Long): Boolean =
-    stamp >= 0 && (stamp < boundary || tailStamps.contains(stamp) ||
-      segSeen.contains(stamp))
-
-  /** The offset after additionally processing `admitted`, compacted under
-    * the session's lag (which the new offset then carries). Every
-    * admitted name is retained verbatim in the new tail
-    * (planInputPartitions enumerates the batch from it);
-    * previously-retained names compact out once they age past the new
-    * high-water's lag window. */
-  def admit(admitted: Seq[String], sessionLagMs: Long,
-      delivered: Seq[Long] = Nil): GraftLogOffset = {
-    if (admitted.isEmpty) return this // identical offset => no empty batch
-    val adm = admitted.toSet
-    val newHw = (Seq(hw).filter(_.nonEmpty) ++ admitted.filter(GraftLogNames.stamp(_) >= 0))
-      .maxOption.getOrElse("")
-    // the implicit-seen boundary is clamped on BOTH sides of the carried
-    // lag (r14 review + r14 advice):
-    //  - it must be MONOTONE: names below the old boundary were compacted
-    //    out of the tail, so a new boundary below it (a RAISED session lag
-    //    on a barely-advanced high-water) would re-classify them as fresh
-    //    and duplicate their rows — the carried lag is capped at
-    //    stamp(newHw) - oldBoundary;
-    //  - it must advance NO FASTER than the high-water: a LOWERED session
-    //    lag would otherwise jump the boundary up to stamp(newHw) -
-    //    sessionLag in one admit, silently classifying fresh-but-unadmitted
-    //    stamped names below the high-water (late-visible files under
-    //    multi-writer clock skew, held back by maxFilesPerTrigger) as
-    //    already seen — row LOSS, the other half of exactly-once. The
-    //    carried lag therefore never shrinks: newLag >= lagMs, so
-    //    newBoundary - oldBoundary <= stamp(newHw) - stamp(oldHw).
-    // Both clamps compose as min(max(sessionLag, lagMs), stamp(newHw) -
-    // oldBoundary); the cap is >= lagMs whenever hw is nonEmpty (newHw >=
-    // hw lexicographically and the 13-digit stamp orders with the name),
-    // so the result is well-defined and >= lagMs. Cost of never-shrinking:
-    // a landing that once ran with a huge lag keeps tails sized to it —
-    // bounded by publish rate inside that window, same contract as before.
-    val newLag =
-      if (newHw.isEmpty || hw.isEmpty) sessionLagMs
-      else math.min(math.max(sessionLagMs, lagMs),
-        GraftLogNames.stamp(newHw) - boundary)
-    val bnd = if (newHw.isEmpty) Long.MinValue else GraftLogNames.stamp(newHw) - newLag
-    val keep = (tail ++ admitted).distinct.filter { n =>
-      val s = GraftLogNames.stamp(n)
-      s < 0 || s >= bnd || adm.contains(n)
-    }
-    // delivered ORIGIN stamps of admitted segment-mapped files compact
-    // out on the same boundary as names (below it they are implicitly
-    // seen); newly delivered ones are >= the admission-time boundary by
-    // construction (a below-boundary segment is seen, hence not delivered)
-    val keepSegs = (segStamps ++ delivered).distinct.filter(_ >= bnd)
-    GraftLogOffset(newHw, newLag, keep.sorted, keepSegs.sorted)
-  }
-
-  override def json(): String =
-    s"""{"hw":"$hw","lag":$lagMs,"tail":${tail.map(f => s""""$f"""").mkString("[", ",", "]")},""" +
-      s""""segs":${segStamps.mkString("[", ",", "]")}}"""
-}
-
-private object GraftLogOffset {
-  def fromJson(json: String): GraftLogOffset = {
-    val t = json.trim
-    require(t.startsWith("""{"hw":"""") && t.endsWith("]}"),
-      s"bad graftlog offset: $json")
-    val afterHw = t.stripPrefix("""{"hw":"""")
-    val hwEnd = afterHw.indexOf('"')
-    require(hwEnd >= 0, s"bad graftlog offset: $json")
-    val hw = afterHw.substring(0, hwEnd)
-    val rest = afterHw.substring(hwEnd + 1)
-    require(rest.startsWith(""","lag":"""), s"bad graftlog offset: $json")
-    val lagBody = rest.stripPrefix(""","lag":""")
-    val lagEnd = lagBody.indexOf(',')
-    require(lagEnd > 0 && lagBody.substring(0, lagEnd).forall(_.isDigit),
-      s"bad graftlog offset lag: $json")
-    val lagMs = lagBody.substring(0, lagEnd).toLong
-    val restTail = lagBody.substring(lagEnd)
-    require(restTail.startsWith(""","tail":["""), s"bad graftlog offset: $json")
-    val afterTail = restTail.stripPrefix(""","tail":[""")
-    // "segs" (round 17, delivered origin stamps) is OPTIONAL on read:
-    // a checkpoint written before the field existed parses as empty.
-    // Tail names cannot contain quotes/commas (enforced at construction),
-    // so the literal separator cannot occur inside an element.
-    val sep = """],"segs":["""
-    val (body, segsBody) = afterTail.indexOf(sep) match {
-      case -1 => (afterTail.stripSuffix("]}").trim, "")
-      case i => (afterTail.substring(0, i).trim,
-        afterTail.substring(i + sep.length).stripSuffix("]}").trim)
-    }
-    val tail =
-      if (body.isEmpty) Nil
-      else body.split(",").toSeq.map { s =>
-        val q = s.trim
-        require(q.length >= 2 && q.startsWith("\"") && q.endsWith("\""),
-          s"bad graftlog offset element: $s")
-        q.substring(1, q.length - 1)
-      }
-    val segs =
-      if (segsBody.isEmpty) Nil
-      else segsBody.split(",").toSeq.map { s =>
-        val d = s.trim
-        require(d.nonEmpty && d.forall(_.isDigit),
-          s"bad graftlog offset segment stamp: $s")
-        d.toLong
-      }
-    GraftLogOffset(hw, lagMs, tail, segs)
-  }
-}
-
-// ---------------------------------------------------------------------------
-// Readers
-// ---------------------------------------------------------------------------
-
-/** Per-task cursor construction context (round 16): the pushed stamp
-  * predicates (evaluated per SEGMENT inside mapped files), the snapshot's
-  * segment maps, and the position-delete coverage — resolved ONCE on the
-  * driver (from the scan's cached snapshot) and shipped to tasks as plain
-  * maps keyed by file name. O(compacted files + delete files) bytes. */
-private case class GraftLogCursorSpec(
-    stampFilters: Array[Filter],
-    segsOf: Map[String, Vector[GraftSegment]],
-    delsOf: Map[String, Seq[String]],
-    extra: Array[StructField] = Array.empty,
-    deadStampsOf: Map[String, Array[Long]] = Map.empty) extends Serializable {
-  def cursor(file: String, preds: Array[Filter], needType: Boolean,
-      needPos: Boolean): GraftLogCursor = {
-    val name = GraftFs.nameOf(file)
-    new GraftLogCursor(file, preds, needType, segsOf.get(name),
-      stampFilters, GraftDeletes.load(delsOf.getOrElse(name, Nil), name),
-      needPos, extra, deadStampsOf.getOrElse(name, Array.emptyLongArray))
-  }
-
-  /** Streaming replay partitions (round 17): suppress the file's
-    * segments stamped in `dead` — origins the batch's start offset
-    * already delivered. */
-  def withDeadStamps(file: String, dead: Seq[Long]): GraftLogCursorSpec =
-    copy(deadStampsOf = deadStampsOf + (GraftFs.nameOf(file) -> dead.toArray))
-  // per-TABLE field resolution: base + metadata statically, ADDED columns
-  // at EXTRA_BASE + index (schema evolution)
-  def fieldOrdinal(name: String): Int = GraftLog.fieldOrdinal(name) match {
-    case -1 =>
-      val i = extra.indexWhere(_.name == name)
-      if (i >= 0) GraftLog.EXTRA_BASE + i else -1
-    case o => o
-  }
-  def fieldType(ord: Int): DataType =
-    if (ord >= GraftLog.EXTRA_BASE) extra(ord - GraftLog.EXTRA_BASE).dataType
-    else GraftLog.fieldType(ord)
-  def fieldNullable(ord: Int): Boolean =
-    ord >= GraftLog.EXTRA_BASE || GraftLog.fieldNullable(ord)
-}
-private object GraftLogCursorSpec {
-  val plain: GraftLogCursorSpec =
-    GraftLogCursorSpec(Array.empty, Map.empty, Map.empty)
-  /** Driver-side: derive the spec for a resolved snapshot. */
-  def of(path: String, snap: GraftSnapshot, stampFilters: Array[Filter],
-      extra: Array[StructField] = Array.empty): GraftLogCursorSpec = {
-    val segsOf = snap.files.collect {
-      case GraftLiveFile(n, Some(ss), _, _) => (n, ss)
-    }.toMap
-    // inverted in ONE pass over the coverage index — building it per data
-    // file would be O(files x delete files) driver work, the wrong shape
-    // for a 100 TB landing carrying many small takedowns between compactions
-    val delsOf: Map[String, Seq[String]] =
-      if (snap.deletes.isEmpty) Map.empty
-      else {
-        val cov = scala.collection.mutable.Map.empty[String, List[String]]
-        snap.deletes.toSeq.sortBy(_._1).reverse.foreach { case (del, covered) =>
-          val abs = GraftFs.child(path, del)
-          covered.foreach {
-            case "*" => // legacy manifest-less coverage: applies to every file
-              snap.files.foreach(f => cov(f.name) = abs :: cov.getOrElse(f.name, Nil))
-            case c => cov(c) = abs :: cov.getOrElse(c, Nil)
-          }
-        }
-        // prepended in reverse-sorted order => each list ends up name-sorted,
-        // matching the old deletesFor ordering
-        cov.toMap
-      }
-    GraftLogCursorSpec(stampFilters, segsOf, delsOf, extra)
-  }
-}
-
-private class GraftLogReaderFactory(filterSource: () => Array[Filter],
-    columns: Array[String], limit: Int, offset: Int, topN: Option[GraftLogTopN],
-    agg: Option[GraftLogAgg],
-    spec: GraftLogCursorSpec = GraftLogCursorSpec.plain) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val preds = filterSource()
-    partition match {
-      case GraftLogFilesPartition(files) => // pushed offset: sequential chain
-        new GraftLogOffsetReader(files, preds, columns, offset, limit, spec)
-      case GraftLogBucketPartition(_, files) => // bucketed: per-bucket chain
-        new GraftLogOffsetReader(files, preds, columns, 0, limit, spec)
-      case GraftLogPartition(file) =>
-        agg match {
-          case Some(a) => new GraftLogAggReader(file, preds, a, spec)
-          case None => topN match {
-            case Some(t) => new GraftLogTopNReader(file, preds, columns, t, spec)
-            case None => new GraftLogOffsetReader(Seq(file), preds, columns, 0, limit, spec)
-          }
-        }
-      case GraftLogReplayPartition(file, dead) =>
-        // streaming only (no agg/TopN/offset surface there): the row
-        // reader with the seen segments suppressed in the cursor spec
-        new GraftLogOffsetReader(Seq(file), preds, columns, 0, limit,
-          spec.withDeadStamps(file, dead))
-      case GraftLogStatsAggPartition(values) =>
-        // the manifest already answered: emit the one pre-merged partial
-        new PartitionReader[InternalRow] {
-          private var done = false
-          override def next(): Boolean = !done && { done = true; true }
-          override def get(): InternalRow =
-            new GenericInternalRow(values.toArray)
-          override def close(): Unit = ()
-        }
-      case other => throw new IllegalStateException(s"unexpected partition $other")
-    }
-  }
-
-  // Columnar reads (round 15; the Scan's default PARTITION_DEFINED mode
-  // routes the decision here): the PLAIN scan mode — the one that emits
-  // O(records), where per-row overhead is the 100 TB cost — decodes into
-  // reused OnHeapColumnVector batches and feeds whole-stage codegen
-  // vectorized, like parquet. The decision depends only on scan-level
-  // state, so it is uniform across partitions as the exec contract
-  // requires. TopN/agg modes stay row-at-a-time deliberately: they emit
-  // O(k)/O(groups) rows per file, so there is no per-row cost to amortize
-  // and a heap/hash over vectors would complicate them for nothing.
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    agg.isEmpty && topN.isEmpty && offset < 0
-  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
-    require(agg.isEmpty && topN.isEmpty && offset < 0,
-      "columnar read requested for a pushed-TopN/agg/offset scan — supportColumnarReads said no")
-    val (files, effSpec) = partition match {
-      case GraftLogPartition(file) => (Seq(file), spec)
-      case GraftLogBucketPartition(_, fs) => (fs, spec) // bucketed partitions vectorize too
-      case GraftLogReplayPartition(file, dead) =>
-        (Seq(file), spec.withDeadStamps(file, dead))
-      case other => throw new IllegalStateException(s"unexpected partition $other")
-    }
-    new GraftLogColumnarReader(files, filterSource(), columns, limit, effSpec)
-  }
-}
-
-/** Streaming decoder for one log file, shared by the three reader modes:
-  * reads records sequentially, evaluates pushed (and runtime) predicates
-  * on the decoded fields, exposes the current record in its four fields.
-  * The string field is materialized ONLY when a predicate or the consumer
-  * needs it. Predicates are COMPILED ONCE at cursor construction — the
-  * per-record loop runs closures over primitives (and UTF8String byte
-  * comparisons, never toString), not a re-interpretation of the Filter
-  * ADT per row; at 100 TB the per-record constant IS the scan cost. */
-private final class GraftLogCursor(file: String, filters: Array[Filter],
-    needTypeHint: Boolean,
-    segs: Option[Vector[GraftSegment]] = None,
-    stampFilters: Array[Filter] = Array.empty,
-    dels: GraftDeletes = GraftDeletes.NONE,
-    needPos: Boolean = false,
-    extra: Array[StructField] = Array.empty,
-    deadStamps: Array[Long] = Array.emptyLongArray) {
-  private val in: DataInputStream = GraftFs.openData(file)
-  private val preds: Array[GraftLog.Pred] = filters.map(GraftLog.compile)
-  private val deletePositions = dels.pos
-  private val needType = needTypeHint ||
-    filters.exists(_.references.contains("event_type")) ||
-    dels.needsEtype // the keyed takedown must decode the key
-
-  var eventId: Long = 0L
-  var userId: Long = 0L
-  var value: Double = 0.0
-  var etype: UTF8String = _
-  /** Records decoded but dropped by the predicate chain, a dead stamp
-    * segment, or a position delete — the pushdown/MoR saving, fed to the
-    * scan's `recordsSkipped` SQL metric. */
-  var skipped: Long = 0L
-
-  // Metadata-column values. `_file`/`_bucket` are constant per file,
-  // computed once (string parses per FILE, invisible next to open+decode).
-  // `_pub_stamp` is constant per SEGMENT (round 16): a compacted file
-  // carries its merged inputs' ORIGINAL stamps in the manifest's segment
-  // map, so time-travel reads stay exact across compaction; plain files
-  // are one segment stamped by their name. `_pos` is the raw record
-  // ordinal within the file — the merge-on-read row identity.
-  private val fileName = GraftFs.nameOf(file)
-  private val metaFile: UTF8String = UTF8String.fromString(file)
-  private val metaBucket: Any = { // boxed Int or null (plain landing)
-    val k = GraftLogNames.bucketOf(fileName)
-    if (k >= 0) Int.box(k) else null
-  }
-  // schema-evolution tail state (see advance()): one slot per ADDED
-  // column, overwritten per record; zero-cost when the table has none
-  private val nExtra = extra.length
-  private val extraVals: Array[Any] =
-    if (nExtra == 0) null else new Array[Any](nExtra)
-
-  // ---- segment state ------------------------------------------------
-  // [start, end) byte ranges with the segment's origin stamp; `live` =
-  // the pushed stamp predicates accept it. For plain files this is one
-  // segment covering the whole file — file-level stamp pruning already
-  // removed dead ones, so the hot path stays as before. A dead segment
-  // in a mapped file is SKIPPED WHOLESALE by byte range when nothing
-  // downstream needs raw record ordinals (no position deletes, `_pos`
-  // not projected); otherwise its records are decoded and dropped so the
-  // ordinals stay absolute.
-  private val segments: Vector[GraftSegment] =
-    segs.getOrElse(Vector(GraftSegment(0L, GraftLogNames.stamp(fileName))))
-  private val nSegs = segments.length
-  private val segStarts: Array[Long] = segments.map(_.start).toArray
-  private val segEnds: Array[Long] = {
-    val ends = new Array[Long](nSegs)
-    var i = 0
-    while (i < nSegs - 1) { ends(i) = segStarts(i + 1); i += 1 }
-    ends(nSegs - 1) = GraftFs.length(file)
-    ends
-  }
-  private val segLive: Array[Boolean] = segments.map(s =>
-    stampFilters.forall(GraftLog.stampAccepts(_, s.stamp)) &&
-      !(s.stamp >= 0 && deadStamps.contains(s.stamp))).toArray
-  private val segStampBoxed: Array[Any] = segments.map(s =>
-    if (s.stamp >= 0) Long.box(s.stamp) else null).toArray
-  private val segsActive = nSegs > 1 || !segLive(0)
-  private val byteSkipOk = deletePositions.isEmpty && !needPos
-  private var segIdx = 0
-  private var bytePos = 0L
-  private var recOrd = -1L // ordinal of the CURRENT record, raw
-  private var delIdx = 0
-
-  /** Align segIdx with bytePos; byte-skip over dead segments when sound. */
-  private def syncSegment(): Unit = {
-    while (segIdx + 1 < nSegs && bytePos >= segStarts(segIdx + 1)) segIdx += 1
-    if (byteSkipOk) {
-      while (segIdx < nSegs && !segLive(segIdx) && bytePos < segEnds(segIdx)) {
-        in.skipNBytes(segEnds(segIdx) - bytePos)
-        bytePos = segEnds(segIdx)
-        if (segIdx + 1 < nSegs) segIdx += 1 else return // next read EOFs
-      }
-    }
-  }
-
-  /** Advance to the next record passing all predicates; false at EOF. */
-  def advance(): Boolean = {
-    while (true) {
-      if (segsActive) syncSegment()
-      val len = try in.readInt() catch { case _: EOFException => return false }
-      eventId = in.readLong()
-      userId = in.readLong()
-      value = in.readDouble()
-      val etypeLen = in.readShort()
-      etype =
-        if (needType) {
-          val b = new Array[Byte](etypeLen)
-          in.readFully(b)
-          UTF8String.fromBytes(b)
-        } else { in.skipNBytes(etypeLen); null }
-      if (nExtra == 0)
-        // exact-length check: the loud corrupt-record guard. A LONGER
-        // record here means an evolved table read without its catalog
-        // schema — name the cause, don't just say "corrupt".
-        require(len == 8 + 8 + 8 + 2 + etypeLen,
-          s"corrupt record in $file (or an evolved table read without " +
-            "its catalog schema — read it as <catalog>.<table>)")
-      else {
-        // schema-evolution tail: [present: byte][value] per added column,
-        // in table order; records written under an OLDER schema are
-        // shorter and null-fill, records under a NEWER one carry trailing
-        // fields this reader doesn't know and skips. `rem` bounds every
-        // read — a mid-field truncation is corruption and fails loudly.
-        var rem = len - (8 + 8 + 8 + 2 + etypeLen)
-        require(rem >= 0, s"corrupt record in $file")
-        var i = 0
-        while (i < nExtra) {
-          if (rem == 0) extraVals(i) = null // older-schema record: null-fill
-          else {
-            val present = in.readByte(); rem -= 1
-            if (present == 0) extraVals(i) = null
-            else {
-              require(present == 1, s"corrupt record tail in $file")
-              extra(i).dataType match {
-                case LongType =>
-                  require(rem >= 8, s"corrupt record tail in $file")
-                  extraVals(i) = Long.box(in.readLong()); rem -= 8
-                case DoubleType =>
-                  require(rem >= 8, s"corrupt record tail in $file")
-                  extraVals(i) = Double.box(in.readDouble()); rem -= 8
-                case _ =>
-                  require(rem >= 2, s"corrupt record tail in $file")
-                  val l = in.readShort(); rem -= 2
-                  require(l >= 0 && rem >= l, s"corrupt record tail in $file")
-                  val b = new Array[Byte](l)
-                  in.readFully(b)
-                  extraVals(i) = UTF8String.fromBytes(b); rem -= l
-              }
-            }
-          }
-          i += 1
-        }
-        if (rem > 0) in.skipNBytes(rem) // newer-schema trailing fields
-      }
-      bytePos += 4 + len
-      recOrd += 1
-      // dead stamp segment that could not be byte-skipped: drop decoded
-      if (segsActive && !segLive(segIdx)) { skipped += 1 }
-      else if (delIdx < deletePositions.length && {
-        // positions are sorted and recOrd strictly increases; duplicates
-        // (a row deleted twice) collapse here
-        while (delIdx < deletePositions.length && deletePositions(delIdx) < recOrd) delIdx += 1
-        delIdx < deletePositions.length && deletePositions(delIdx) == recOrd
-      }) { delIdx += 1; skipped += 1 }
-      // equality delete: the upsert sink's keyed takedown — covered
-      // files drop every record whose key is in the set
-      else if (dels.dead(eventId, userId, etype)) skipped += 1
-      else {
-        var ok = true
-        var i = 0
-        while (ok && i < preds.length) {
-          ok = preds(i)(eventId, userId, value, etype); i += 1
-        }
-        if (ok) return true
-        skipped += 1
-      }
-    }
-    false
-  }
-
-  def metricsValues(): Array[CustomTaskMetric] = {
-    val n = skipped
-    Array(new CustomTaskMetric {
-      override def name(): String = "recordsSkipped"
-      override def value(): Long = n
-    })
-  }
-
-  def field(ord: Int): Any = ord match {
-    case 0 => eventId; case 1 => userId; case 2 => value; case 3 => etype
-    case GraftLog.META_FILE => metaFile
-    case GraftLog.META_BUCKET => metaBucket
-    case GraftLog.META_STAMP => segStampBoxed(segIdx)
-    case GraftLog.META_POS => Long.box(recOrd)
-    case e => extraVals(e - GraftLog.EXTRA_BASE)
-  }
-
-  def close(): Unit = in.close()
-}
-
-/** Row reader over a chain of files. Pushed-OFFSET mode (round 15) is
-  * the single sequential partition over ALL files in publish-name order:
-  * it skips the first `offset` PASSING records of the global stream
-  * (predicates run during the skip, so the skipped prefix never builds a
-  * row), then emits each passing record's pruned columns, honoring a
-  * pushed LIMIT as rows-after-offset — exact in this single-stream plan,
-  * so Spark's retained global Limit just re-confirms it. With offset 0
-  * over one file it is the plain row mode, the LIMIT a per-file early
-  * stop. O(1) memory. */
-private class GraftLogOffsetReader(files: Seq[String], filters: Array[Filter],
-    columns: Array[String], offset: Int, limit: Int,
-    spec: GraftLogCursorSpec) extends PartitionReader[InternalRow] {
-
-  private val proj: Array[Int] = columns.map(spec.fieldOrdinal)
-  private val it = files.iterator
-  private var cursor: GraftLogCursor = _
-  private var skippedPast = 0L // records dropped by predicates, summed over closed cursors
-  private var toSkip = math.max(offset, 0)
-  private var emitted = 0L
-  private var row: InternalRow = _
-
-  /** Advance across the file chain; false at end of the LAST file. */
-  private def advanceChained(): Boolean = {
-    while (true) {
-      if (cursor == null) {
-        if (!it.hasNext) return false
-        cursor = spec.cursor(it.next(), filters, proj.contains(3),
-          proj.contains(GraftLog.META_POS))
-      }
-      if (cursor.advance()) return true
-      skippedPast += cursor.skipped
-      cursor.close()
-      cursor = null
-    }
-    false
-  }
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    while (toSkip > 0) {
-      if (!advanceChained()) return false
-      toSkip -= 1
-    }
-    if (!advanceChained()) return false
-    val vals = new Array[Any](proj.length)
-    var j = 0
-    while (j < proj.length) { vals(j) = cursor.field(proj(j)); j += 1 }
-    row = new GenericInternalRow(vals)
-    emitted += 1
-    true
-  }
-  override def get(): InternalRow = row
-  override def currentMetricsValues(): Array[CustomTaskMetric] = {
-    val n = skippedPast + (if (cursor != null) cursor.skipped else 0L)
-    Array(new CustomTaskMetric {
-      override def name(): String = "recordsSkipped"
-      override def value(): Long = n
-    })
-  }
-  override def close(): Unit = if (cursor != null) cursor.close()
-}
-
-/** Columnar mode (round 15): the plain scan decoded into 4K-row
-  * [[ColumnarBatch]]es over reused [[OnHeapColumnVector]]s instead of
-  * one [[InternalRow]] per record. Spark plans a codegen'd ColumnarToRow
-  * above the scan and the per-record iterator handshake — the dominant
-  * fixed cost of a row-at-a-time custom source at 100 TB scan volume —
-  * collapses into tight per-batch loops; this is exactly how the parquet
-  * reader feeds whole-stage codegen, applied to the custom format.
-  * Pushed + runtime predicates still run inside [[GraftLogCursor]] during
-  * the sequential decode (before any vector is written), and the partial
-  * LIMIT early-stop caps total emitted rows per file, mid-batch. Vectors
-  * are reset and reused across batches: allocation is O(1) per file, not
-  * O(batches). */
-private class GraftLogColumnarReader(files: Seq[String], filters: Array[Filter],
-    columns: Array[String], limit: Int,
-    spec: GraftLogCursorSpec) extends PartitionReader[ColumnarBatch] {
-
-  private val BATCH_ROWS = 4096
-  private val proj: Array[Int] = columns.map(spec.fieldOrdinal)
-  private val it = files.iterator
-  private var cursor: GraftLogCursor = _
-  private var skippedPast = 0L
-  private val vectors: Array[OnHeapColumnVector] =
-    OnHeapColumnVector.allocateColumns(BATCH_ROWS, StructType(
-      proj.zipWithIndex.map { case (o, i) => StructField(columns(i),
-        spec.fieldType(o), spec.fieldNullable(o)) }.toSeq))
-  private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
-  private var emitted = 0L
-  private var done = false
-
-  // chained across the partition's files (a plain scan partition is one
-  // file; a bucketed partition is all of its bucket's files): a batch may
-  // span a file boundary — the vectors don't care
-  private def advanceChained(): Boolean = {
-    while (true) {
-      if (cursor == null) {
-        if (!it.hasNext) return false
-        cursor = spec.cursor(it.next(), filters, proj.contains(3),
-          proj.contains(GraftLog.META_POS))
-      }
-      if (cursor.advance()) return true
-      skippedPast += cursor.skipped
-      cursor.close()
-      cursor = null
-    }
-    false
-  }
-
-  override def next(): Boolean = {
-    if (done) return false
-    val cap =
-      if (limit >= 0) math.min(BATCH_ROWS.toLong, limit - emitted).toInt
-      else BATCH_ROWS
-    if (cap <= 0) { done = true; return false }
-    var i = 0
-    while (i < vectors.length) { vectors(i).reset(); i += 1 }
-    var n = 0
-    while (n < cap && advanceChained()) {
-      var j = 0
-      while (j < proj.length) {
-        proj(j) match {
-          case 0 => vectors(j).putLong(n, cursor.eventId)
-          case 1 => vectors(j).putLong(n, cursor.userId)
-          case 2 => vectors(j).putDouble(n, cursor.value)
-          case 3 =>
-            val b = cursor.etype.getBytes // putByteArray copies; sharing safe
-            vectors(j).putByteArray(n, b, 0, b.length)
-          // metadata ordinals: per-file constants, written per row because
-          // a batch may span a file boundary in a chained partition
-          case m => cursor.field(m) match {
-            case null => vectors(j).putNull(n)
-            case u: UTF8String =>
-              val b = u.getBytes
-              vectors(j).putByteArray(n, b, 0, b.length)
-            case i: java.lang.Integer => vectors(j).putInt(n, i.intValue())
-            case l: java.lang.Long => vectors(j).putLong(n, l.longValue())
-            case d: java.lang.Double => vectors(j).putDouble(n, d.doubleValue())
-          }
-        }
-        j += 1
-      }
-      n += 1
-    }
-    emitted += n
-    // n < cap means the chain is exhausted; at the limit, stop before a
-    // needless extra advance on the next call
-    if (n < cap || (limit >= 0 && emitted >= limit)) done = true
-    if (n == 0) return false
-    batch.setNumRows(n)
-    true
-  }
-  override def get(): ColumnarBatch = batch
-  override def currentMetricsValues(): Array[CustomTaskMetric] = {
-    val n = skippedPast + (if (cursor != null) cursor.skipped else 0L)
-    Array(new CustomTaskMetric {
-      override def name(): String = "recordsSkipped"
-      override def value(): Long = n
-    })
-  }
-  override def close(): Unit = {
-    if (cursor != null) cursor.close()
-    batch.close() // frees the vectors
-  }
-}
-
-/** TopN mode: drain the file through a size-k bounded heap ordered by the
-  * pushed keys (heap root = current worst candidate, evicted on a better
-  * record), then emit the k survivors. O(k) memory, O(records * log k)
-  * compares per file; Spark's global TakeOrdered does the final merge, so
-  * emission order here is irrelevant. */
-private class GraftLogTopNReader(file: String, filters: Array[Filter],
-    columns: Array[String], topN: GraftLogTopN,
-    spec: GraftLogCursorSpec) extends PartitionReader[InternalRow] {
-
-  private val proj: Array[Int] = columns.map(spec.fieldOrdinal)
-  private val needType = proj.contains(3) || topN.keys.exists(_._1 == 3)
-  private val nExtraProj = spec.extra.length
-  private val cursor = spec.cursor(file, filters, needType,
-    proj.contains(GraftLog.META_POS))
-
-  // heap over full decoded records (4 fields): the projection may exclude
-  // a sort key, and the fixed-width format decodes them all anyway
-  private val cmp: java.util.Comparator[Array[Any]] = (a, b) => {
-    var i = 0
-    var c = 0
-    while (c == 0 && i < topN.keys.length) {
-      val (ord, desc) = topN.keys(i)
-      val x = ord match {
-        case 0 | 1 => java.lang.Long.compare(a(ord).asInstanceOf[Long], b(ord).asInstanceOf[Long])
-        case 2 => java.lang.Double.compare(a(2).asInstanceOf[Double] + 0.0, b(2).asInstanceOf[Double] + 0.0)
-        case 3 => a(3).asInstanceOf[UTF8String].compareTo(b(3).asInstanceOf[UTF8String])
-      }
-      c = if (desc) -x else x
-      i += 1
-    }
-    c
-  }
-
-  private var out: java.util.Iterator[Array[Any]] = _
-  private var row: InternalRow = _
-
-  override def next(): Boolean = {
-    if (out == null) {
-      // reversed comparator: the heap root is the WORST retained candidate
-      val heap = new java.util.PriorityQueue[Array[Any]](
-        math.max(1, topN.k), cmp.reversed())
-      while (cursor.advance()) {
-        // data fields + every NON-file-constant value (`_pub_stamp`
-        // varies per segment in a compacted file, `_pos` and added
-        // schema-evolution columns per record) ride the heap record;
-        // `_file`/`_bucket` stay file-constant and the drained cursor
-        // serves them at emit time
-        val rec = new Array[Any](6 + nExtraProj)
-        rec(0) = cursor.eventId; rec(1) = cursor.userId
-        rec(2) = cursor.value; rec(3) = cursor.etype
-        rec(4) = cursor.field(GraftLog.META_STAMP)
-        rec(5) = cursor.field(GraftLog.META_POS)
-        var x = 0
-        while (x < nExtraProj) {
-          rec(6 + x) = cursor.field(GraftLog.EXTRA_BASE + x); x += 1
-        }
-        if (heap.size < topN.k) heap.offer(rec)
-        else if (cmp.compare(rec, heap.peek()) < 0) { heap.poll(); heap.offer(rec) }
-      }
-      out = heap.iterator()
-    }
-    if (!out.hasNext) return false
-    val rec = out.next()
-    val vals = new Array[Any](proj.length)
-    var j = 0
-    while (j < proj.length) {
-      val p = proj(j)
-      vals(j) =
-        if (p < 4) rec(p)
-        else if (p == GraftLog.META_STAMP) rec(4)
-        else if (p == GraftLog.META_POS) rec(5)
-        else if (p >= GraftLog.EXTRA_BASE) rec(6 + p - GraftLog.EXTRA_BASE)
-        else cursor.field(p)
-      j += 1
-    }
-    row = new GenericInternalRow(vals)
-    true
-  }
-  override def get(): InternalRow = row
-  override def currentMetricsValues(): Array[CustomTaskMetric] = cursor.metricsValues()
-  override def close(): Unit = cursor.close()
-}
-
-/** Aggregate mode: one sequential pass accumulating per-group partials
-  * (count as long, min/max as typed values), then emit one row per group
-  * — O(groups) memory, zero row materialization. A no-group-by (global)
-  * aggregation emits exactly one row even over an empty file: COUNT 0 and
-  * null MIN/MAX are real partial states Spark's merge agg expects. */
-private class GraftLogAggReader(file: String, filters: Array[Filter],
-    agg: GraftLogAgg, spec: GraftLogCursorSpec) extends PartitionReader[InternalRow] {
-
-  private val needType = agg.groupBy.contains(3) || agg.fns.exists(_.ord == 3)
-  // metadata ordinals are unclaimable by agg pushdown (ordinal() = -1),
-  // so needPos is structurally false here
-  private val cursor = spec.cursor(file, filters, needType, needPos = false)
-  private var out: Iterator[InternalRow] = _
-  private var row: InternalRow = _
-
-  // per-group accumulator: counts at fn index i in longs(i); min/max as
-  // boxed values (null = empty) in refs(i)
-  private final class Accs {
-    val longs = new Array[Long](agg.fns.length)
-    val refs = new Array[Any](agg.fns.length)
-  }
-
-  private def update(a: Accs): Unit = {
-    var i = 0
-    while (i < agg.fns.length) {
-      val fn = agg.fns(i)
-      fn.kind match {
-        case GraftLogAggFn.COUNT_STAR | GraftLogAggFn.COUNT =>
-          a.longs(i) += 1L // the format encodes no nulls: COUNT(col) = COUNT(*)
-        case GraftLogAggFn.MIN | GraftLogAggFn.MAX =>
-          val v = cursor.field(fn.ord)
-          val cur = a.refs(i)
-          val take =
-            if (cur == null) true
-            else {
-              val c = fn.ord match {
-                case 0 | 1 => java.lang.Long.compare(v.asInstanceOf[Long], cur.asInstanceOf[Long])
-                case 2 => java.lang.Double.compare(v.asInstanceOf[Double] + 0.0, cur.asInstanceOf[Double] + 0.0)
-                case 3 => v.asInstanceOf[UTF8String].compareTo(cur.asInstanceOf[UTF8String])
-              }
-              if (fn.kind == GraftLogAggFn.MIN) c < 0 else c > 0
-            }
-          if (take) a.refs(i) = v
-      }
-      i += 1
-    }
-  }
-
-  private def emit(key: Seq[Any], a: Accs): InternalRow = {
-    val vals = new Array[Any](agg.groupBy.length + agg.fns.length)
-    var i = 0
-    while (i < agg.groupBy.length) { vals(i) = key(i); i += 1 }
-    var j = 0
-    while (j < agg.fns.length) {
-      val fn = agg.fns(j)
-      vals(agg.groupBy.length + j) =
-        if (fn.kind == GraftLogAggFn.COUNT_STAR || fn.kind == GraftLogAggFn.COUNT) a.longs(j)
-        else a.refs(j)
-      j += 1
-    }
-    new GenericInternalRow(vals)
-  }
-
-  override def next(): Boolean = {
-    if (out == null) {
-      if (agg.groupBy.isEmpty) {
-        val a = new Accs
-        while (cursor.advance()) update(a)
-        out = Iterator(emit(Nil, a))
-      } else if (agg.groupBy.length == 1) {
-        // the common telemetry shape gets the cheap probe: one boxed field
-        // per record (UTF8String is already a ref), no per-record Seq —
-        // the per-record constant IS the scan cost at 100 TB
-        val ord = agg.groupBy(0)
-        val groups = scala.collection.mutable.LinkedHashMap.empty[Any, Accs]
-        while (cursor.advance())
-          update(groups.getOrElseUpdate(cursor.field(ord), new Accs))
-        out = groups.iterator.map { case (k, a) => emit(k :: Nil, a) }
-      } else {
-        val ords = agg.groupBy
-        val groups = scala.collection.mutable.LinkedHashMap.empty[List[Any], Accs]
-        while (cursor.advance()) {
-          var key: List[Any] = Nil
-          var i = ords.length - 1
-          while (i >= 0) { key = cursor.field(ords(i)) :: key; i -= 1 }
-          update(groups.getOrElseUpdate(key, new Accs))
-        }
-        out = groups.iterator.map { case (k, a) => emit(k, a) }
-      }
-    }
-    if (!out.hasNext) return false
-    row = out.next()
-    true
-  }
-  override def get(): InternalRow = row
-  override def currentMetricsValues(): Array[CustomTaskMetric] = cursor.metricsValues()
-  override def close(): Unit = cursor.close()
-}
-
 object GraftLog {
   /** `delete.mode` table-property values ([[GraftCatalog]]): how DELETE
     * executes — file rewrite vs position-delete files. */
@@ -3049,80 +359,6 @@ object GraftLog {
   private[sources] def activeExtra(extra: Array[StructField]): Array[StructField] =
     if (extra.exists(droppedCol)) extra.filterNot(droppedCol) else extra
 
-  /** Encode one row: the fixed base (len-prefixed, fixed offsets — the
-    * pushdown contract) + the schema-evolution tail, one
-    * [present: byte][value] field per ADDED column (values: int64 /
-    * float64 / [int16 len][bytes]). Shared by the plain, bucketed and
-    * replace-data writers, and (with `off = 1`, round 18) by the cluster
-    * rewrite, whose rows lead with the carried `_pub_stamp` column.
-    * @param off ordinal of the row's first TABLE column
-    * @return total bytes written (length prefix included) — the cluster
-    *         rewrite's segment-boundary bookkeeping */
-  private[sources] def encodeRecord(out: DataOutputStream, r: InternalRow,
-      extra: Array[StructField], off: Int = 0,
-      stats: GraftStatsTracker = null): Int = {
-    val etype = r.getUTF8String(off + 3).getBytes
-    if (stats != null) {
-      stats.add(r.getLong(off), r.getLong(off + 1), r.getDouble(off + 2))
-      stats.addEtype(etype)
-    }
-    // int16 length field: a >32767-byte string would wrap silently here
-    // and only surface as a corrupt record at READ time, after commit —
-    // fail the task before publishing instead (r13 review)
-    require(etype.length <= Short.MaxValue,
-      s"event_type exceeds the format's int16 length field (${etype.length} bytes)")
-    var extraLen = 0
-    val vals: Array[AnyRef] =
-      if (extra.isEmpty) null
-      else {
-        val vs = new Array[AnyRef](extra.length)
-        var i = 0 // slot index (the record tail is positional by slot)
-        var ro = 0 // row ordinal among ACTIVE columns (Spark's view)
-        while (i < extra.length) {
-          if (droppedCol(extra(i))) { vs(i) = null; extraLen += 1 }
-          else {
-            if (r.isNullAt(off + 4 + ro)) { vs(i) = null; extraLen += 1 }
-            else extra(i).dataType match {
-              case LongType => vs(i) = Long.box(r.getLong(off + 4 + ro)); extraLen += 9
-              case DoubleType => vs(i) = Double.box(r.getDouble(off + 4 + ro)); extraLen += 9
-              case StringType =>
-                val b = r.getUTF8String(off + 4 + ro).getBytes
-                require(b.length <= Short.MaxValue,
-                  s"${extra(i).name} exceeds the format's int16 length field (${b.length} bytes)")
-                vs(i) = b; extraLen += 3 + b.length
-              case other => throw new IllegalStateException(
-                s"unencodable added-column type $other") // alterTable validates
-            }
-            ro += 1
-          }
-          if (stats != null) stats.addExtra(i, vs(i))
-          i += 1
-        }
-        vs
-      }
-    val len = 8 + 8 + 8 + 2 + etype.length + extraLen
-    out.writeInt(len)
-    out.writeLong(r.getLong(off))
-    out.writeLong(r.getLong(off + 1))
-    out.writeDouble(r.getDouble(off + 2))
-    out.writeShort(etype.length)
-    out.write(etype)
-    if (vals != null) {
-      var i = 0
-      while (i < vals.length) {
-        vals(i) match {
-          case null => out.writeByte(0)
-          case l: java.lang.Long => out.writeByte(1); out.writeLong(l.longValue())
-          case d: java.lang.Double => out.writeByte(1); out.writeDouble(d.doubleValue())
-          case b: Array[Byte] =>
-            out.writeByte(1); out.writeShort(b.length); out.write(b)
-        }
-        i += 1
-      }
-    }
-    4 + len
-  }
-
   private def metaCol(colName: String, tpe: DataType, nullable: Boolean,
       doc: String): MetadataColumn = new MetadataColumn {
     override def name(): String = colName
@@ -3149,1480 +385,33 @@ object GraftLog {
   def latestSnapshotStamp(path: String): Long =
     GraftSnapshotIO.tipStamp(path)
 
-  /** Compact a landing's small files — the maintenance operation a
-    * 100 TB landing lives or dies by (every append/epoch adds files;
-    * nothing else ever merges them, and at scale the scan's task count
-    * and the namenode's listing both degrade linearly in file count).
-    * Served as `CALL <catalog>.system.compact(table => ..., target_mb
-    * => ...)` through [[GraftCatalog]]; callable directly on a path for
-    * non-catalog landings.
-    *
-    * Files are grouped by bucket token (plain landings: one group) and
-    * bin-packed IN PUBLISH ORDER up to `targetBytes`; each bin with two
-    * or more files becomes ONE Spark task that merges it by raw BYTE
-    * CONCATENATION — the format is a headerless sequence of
-    * length-prefixed records, so concatenating whole files in publish
-    * order IS the merged file, no decode, no re-encode, and both the
-    * per-bucket key purity and the landing's publish-order row stream
-    * are preserved. The driver then swaps: publish the merged files
-    * (fresh stamps, k-tokens carried over), delete the originals.
-    *
-    * Contract notes, stated not implied: (a) single-writer — compaction
-    * IS a writer; visibility flips at its MANIFEST swap (round 16), so a
-    * concurrent reader resolves either the old file set or the new one,
-    * never both, and a crash before the swap leaves only invisible
-    * garbage (expired on the stamp horizon), never duplicates.
-    * (b) merged files carry NEW publish NAMES but their manifest segment
-    * map preserves every input's ORIGINAL stamp — `_pub_stamp` values and
-    * incremental `_pub_stamp > t` slices are IDENTICAL across a
-    * compaction (round 16, closing the r15 re-delivery gap for batch
-    * consumers), and an in-flight STREAMING reader admits the merged file
-    * but delivers ONLY the segments whose origin stamps its offset has
-    * not processed (round 17 — see GraftLogOffset.seenStamp), so batch
-    * and streaming now share ONE consistency model across compaction.
-    * (c) pending delete files are ABSORBED: an input carrying deletes is
-    * record-walked instead of byte-copied; each record's keys are decoded
-    * from its buffer and probed with [[GraftDeletes.dead]], the probe the
-    * scan cursor uses, so its dead rows (position or equality) are
-    * dropped and its delete files retired with it.
-    *
-    * @return (files before, files after, bytes rewritten) */
-  def compact(spark: SparkSession, path: String, targetBytes: Long,
-      ret: GraftRetention = GraftRetention.NONE): (Int, Int, Long) = {
-    require(targetBytes > 0, s"compact targetBytes must be positive, got $targetBytes")
-    val snap = GraftSnapshotIO.resolve(path)
-    // per-input plan: absolute path, on-disk size, origin-stamp segments,
-    // covering delete files — everything a merge task needs, shippable
-    final case class In(abs: String, name: String, size: Long,
-        segs: Vector[GraftSegment], dels: Seq[String],
-        stats: Option[GraftStats]) extends Serializable
-    val infos = snap.files.map { f =>
-      val abs = GraftFs.child(path, f.name)
-      In(abs, f.name, GraftFs.length(abs), f.stampedSegments,
-        snap.deletesFor(f.name).map(d => GraftFs.child(path, d)), f.stats)
-    }
-    val bins: Seq[(Int, Seq[In])] = infos
-      .groupBy(i => GraftLogNames.bucketOf(i.name))
-      .toSeq.sortBy(_._1)
-      .flatMap { case (tok, fs) =>
-        val out = Seq.newBuilder[Vector[In]]
-        var cur = Vector.empty[In]
-        var curBytes = 0L
-        fs.sortBy(_.name).foreach { i => // name order = publish order
-          if (cur.nonEmpty && curBytes + i.size > targetBytes) {
-            out += cur; cur = Vector.empty; curBytes = 0L
-          }
-          cur :+= i; curBytes += i.size
-        }
-        if (cur.nonEmpty) out += cur
-        // a bin of one is already compact — UNLESS it carries pending
-        // deletes, which only compaction can absorb
-        out.result().filter(b => b.length >= 2 || b.exists(_.dels.nonEmpty))
-          .map(b => (tok, b))
-      }
-    if (bins.isEmpty) return (snap.files.length, snap.files.length, 0L)
-    // one task per OUTPUT file, each streaming its inputs' bytes into a
-    // uuid tmp (failed/retried attempts cannot collide; readers ignore
-    // non-.graftlog names, so a failed job leaves no visible change).
-    // Delete-free inputs are RAW BYTE COPIES (concatenation IS the merged
-    // file in this headerless format); inputs with deletes are
-    // record-walked, dead ordinals dropped. Both paths track the output
-    // offset at every origin-stamp boundary — the merged file's segment
-    // map, which is what keeps `_pub_stamp` exact across the compaction.
-    val merged = spark.sparkContext
-      .parallelize(bins, bins.size)
-      .map { case (tok, group) =>
-        val tmp = GraftFs.child(path, s"compact-${java.util.UUID.randomUUID()}.tmp")
-        val os = GraftFs.createData(tmp)
-        val segsOut = Vector.newBuilder[GraftSegment]
-        var outOff = 0L
-        try group.foreach { in =>
-          if (in.dels.isEmpty) {
-            in.segs.foreach(s => segsOut += GraftSegment(outOff + s.start, s.stamp))
-            GraftFs.copyInto(in.abs, os)
-            outOff += in.size
-          } else {
-            val loaded = GraftDeletes.load(in.dels, in.name)
-            val dels = loaded.pos
-            val needType = loaded.needsEtype
-            val segStarts = in.segs.map(_.start).toArray
-            val din = GraftFs.openData(in.abs)
-            val dout: DataOutputStream = os
-            try {
-              var inOff = 0L; var ord = -1L; var delIdx = 0; var segIdx = -1
-              var buf = new Array[Byte](256)
-              var done = false
-              while (!done) {
-                while (segIdx + 1 < segStarts.length && inOff >= segStarts(segIdx + 1)) {
-                  segIdx += 1
-                  segsOut += GraftSegment(outOff, in.segs(segIdx).stamp)
-                }
-                val len = try din.readInt() catch { case _: EOFException => done = true; -1 }
-                if (!done) {
-                  if (buf.length < len) buf = new Array[Byte](len)
-                  din.readFully(buf, 0, len)
-                  inOff += 4 + len; ord += 1
-                  while (delIdx < dels.length && dels(delIdx) < ord) delIdx += 1
-                  if (delIdx < dels.length && dels(delIdx) == ord) delIdx += 1 // dropped
-                  else if (loaded.dead(GraftDeletes.recordLong(buf, 0),
-                      GraftDeletes.recordLong(buf, 1),
-                      if (needType) GraftDeletes.recordEtype(buf) else null))
-                    () // upsert-retired key: dropped
-                  else { dout.writeInt(len); dout.write(buf, 0, len); outOff += 4 + len }
-                }
-              }
-              dout.flush()
-            } finally din.close()
-          }
-        } finally os.close()
-        // normalize: drop empty segments (fully-deleted spans), merge
-        // consecutive same-stamp runs
-        val segs = segsOut.result()
-        val ends = segs.map(_.start).drop(1) :+ outOff
-        val nonEmpty = segs.zip(ends).collect { case (s, e) if e > s.start => s }
-        val norm = nonEmpty.foldLeft(Vector.empty[GraftSegment]) { (acc, s) =>
-          if (acc.nonEmpty && acc.last.stamp == s.stamp) acc else acc :+ s
-        }
-        // zone-map merge, no decode: the union of the inputs' bounds is a
-        // sound (superset) bound for the merged rows. A delete-absorbing
-        // walk DROPS rows, which keeps the bounds sound but falsifies the
-        // exact row count the metadata-aggregate path serves — so a group
-        // with any covered input carries no stats at all
-        val stats =
-          if (group.exists(_.dels.nonEmpty)) None
-          else group.map(_.stats).reduce[Option[GraftStats]] {
-            case (Some(a), Some(b)) => Some(a.merge(b))
-            case _ => None
-          }
-        (tok, tmp, group.map(_.name), norm, group.map(_.size).sum, stats)
-      }.collect()
-    // swap: publish merged files (monotone fresh name stamps, bucket
-    // token carried over so bucketed scans keep parsing the layout), then
-    // flip the manifest, then unlink the originals and absorbed deletes
-    val outs = merged.toVector.zipWithIndex.flatMap {
-      case ((tok, tmp, _, segs, _, stats), seq) =>
-        GraftLogNames.publishOrDrop(path, tmp, seq, tok, s"c$seq")
-          .map(GraftLiveFile(_, Some(segs), stats))
-    }
-    val inputNames = merged.flatMap(_._3).toSet
-    // Optimistic commit (round 17): the merged bytes were copied from the
-    // inputs AS PLANNED, so the commit carries them as its premise.
-    val committed = GraftSnapshotIO.commit(path,
-        premise = Some(GraftPremise.of("compaction", snap, inputNames))) { base =>
-      // absorbed delete files retire EXPLICITLY (X records, round 19):
-      // semantically identical to the dead-coverage pruning that would
-      // drop them anyway, but the explicit record makes a compaction
-      // whose outputs were ALL empty (every row dead) distinguishable in
-      // the manifest from a truncate — the changelog read needs that
-      // distinction to classify the commit as net-zero
-      GraftChange(addData = outs, removeData = inputNames,
-        removeDeletes = base.deletes.collect {
-          case (d, cov) if cov.forall(inputNames.contains) => d
-        }.toSet)
-    }
-    // a snapshot-retaining landing keeps the merged inputs readable for
-    // time travel; expire's stamp-horizon pass is the GC
-    GraftSnapshotIO.retire(path, committed, ret)
-    val bytes = merged.map(_._5).sum
-    (snap.files.length, snap.files.length - inputNames.size + outs.length, bytes)
-  }
+  // ---- the public entry points of the other files --------------------
 
-  /** Sort-rewrite a landing so its zone maps become selective (round 17;
-    * `CALL <catalog>.system.cluster(table, by, target_mb)`) — Iceberg's
-    * rewrite_data_files sort strategy. [[compact]] merges small files in
-    * PUBLISH order, which preserves layout but leaves every file's
-    * min/max spanning the whole domain on hash-landed data; clustering
-    * range-repartitions the live rows on `byCol` and rewrites them as
-    * ~targetBytes files with DISJOINT zones, so a pushed range predicate
-    * then opens ~1/N of the landing. The rewrite is a real distributed
-    * job (shuffle by range, sort within partitions); position deletes are
-    * ABSORBED (the scan already drops deleted ordinals) and the evolved
-    * column tail rides along.
-    *
-    * ORIGIN VISIBILITY (round 18, the r17 verdict's one weak component):
-    * each output file carries a REAL manifest segment map. The rewrite
-    * reads `_pub_stamp` (per-row origin stamp — segment-exact on already-
-    * compacted/clustered inputs) alongside the data and sorts within each
-    * range partition by (origin stamp, byCol), so every output file is a
-    * sequence of contiguous per-origin byte runs; the encode pass records
-    * the run boundaries. File-level byCol zones stay disjoint (the range
-    * SHUFFLE decides which file a row lands in; the within-file order
-    * only serves the segment map), so pruning is unchanged — while
-    * `_pub_stamp` values, incremental `_pub_stamp > t` slices, streaming
-    * suppression of already-delivered origins, and expire's data-age
-    * retention clock are now EXACT across a cluster, through the same
-    * segment machinery compaction uses. A mid-stream `CALL
-    * system.cluster` can no longer re-deliver one row to an in-flight
-    * consumer.
-    *
-    * Manifest-cost contract, stated not hidden: every output file's
-    * segment map holds one entry per DISTINCT origin stamp present in it,
-    * and a range shuffle scatters each input across many outputs — so
-    * clustering a landing of F small files into K outputs can write
-    * O(F x K) segment entries. The maintenance pipeline is therefore
-    * `compact` FIRST (collapse F to a few large files, whose own segment
-    * maps stay linear because compaction merges in publish order), THEN
-    * `cluster` — at which point origins-per-output is the compacted file
-    * count, not the append history.
-    *
-    * Each task writes a `.tmp` in the landing (invisible to resolution)
-    * and ONE optimistic commit swaps inputs out and the published outputs
-    * in — readers flip atomically, and the premise check (inputs still
-    * live, delete coverage unchanged since the read) fails loudly on a
-    * concurrent commit, exactly compact's contract. Bucketed landings are
-    * refused: their k-token layout IS their join contract, and a range
-    * layout would destroy it.
-    *
-    * SEGMENT-MAP COST CAP (round 19, r18 verdict #4): an output's map
-    * holds one entry per distinct origin stamp, and the range shuffle
-    * scatters every input across many outputs — clustering F small files
-    * into K outputs writes O(F x K) entries, which on a
-    * cluster-without-compact 10^5-file landing is a manifest blow-up.
-    * `maxOrigins` bounds it: an output exceeding the cap COALESCES
-    * adjacent stamped spans (rows arrive stamp-ascending, so spans chunk
-    * in order) into at most `maxOrigins` segments, each labeled with its
-    * NEWEST member stamp, and the file is flagged `C` in the manifest.
-    * The newest label is the uniformly conservative direction:
-    * incremental `_pub_stamp > t` readers OVER-read (never under-read),
-    * streaming consumers RE-deliver (never lose), and expire's data-age
-    * max(origin) is unchanged — while the unknown-age (-1) span is never
-    * merged with stamped ones, so unstamped data keeps its
-    * never-expire/always-redeliver contract. The changelog read refuses
-    * windows that add a coalesced file (exactness lost by construction);
-    * the compact-first pipeline keeps origins-per-output below any sane
-    * cap, so the flag is the escape hatch's receipt, not the norm.
-    *
-    * @return (files before, files after, bytes rewritten) */
+  /** See [[GraftLogMaintenance.compact]]. */
+  def compact(spark: SparkSession, path: String, targetBytes: Long,
+      ret: GraftRetention = GraftRetention.NONE): (Int, Int, Long) =
+    GraftLogMaintenance.compact(spark, path, targetBytes, ret)
+  /** See [[GraftLogMaintenance.cluster]]. */
   def cluster(spark: SparkSession, path: String, byCol: String,
       targetBytes: Long, extra: Array[StructField] = Array.empty,
       ret: GraftRetention = GraftRetention.NONE,
-      maxOrigins: Int = 64): (Int, Int, Long) = {
-    require(targetBytes > 0, s"cluster targetBytes must be positive, got $targetBytes")
-    require(maxOrigins >= 2, s"cluster maxOrigins must be >= 2, got $maxOrigins")
-    // round 18: every zone-mapped column clusters — the base numerics
-    // (Z), event_type (Y string bounds), and ADDED columns (W bounds).
-    // TWO comma-separated NUMERIC columns Z-ORDER (`by =>
-    // 'user_id,value'`): rows interleave quantile-rank bits of both
-    // dimensions, so each output file is a bounded RECTANGLE in both —
-    // a two-predicate range query opens ~1/N² of the landing instead of
-    // the 1/N a single-column sort gives one predicate.
-    val byCols = byCol.split(',').map(_.trim).filter(_.nonEmpty)
-    require(byCols.length == 1 || byCols.length == 2,
-      s"cluster by takes one column or two comma-separated columns, got '$byCol'")
-    byCols.foreach(c => require(
-      GraftLog.schema.fieldNames.contains(c) || GraftLog.activeExtra(extra).exists(_.name == c),
-      s"cluster by must name table columns (zone-mapped: " +
-        s"${(GraftLog.schema.fieldNames ++ GraftLog.activeExtra(extra).map(_.name)).mkString("/")}), " +
-        s"got '$c'"))
-    if (byCols.length == 2)
-      byCols.foreach { c =>
-        val dt = (GraftLog.schema.fields ++ GraftLog.activeExtra(extra)).find(_.name == c).get.dataType
-        require(dt == LongType || dt == DoubleType,
-          s"Z-order clustering interleaves NUMERIC ranks; '$c' is $dt " +
-            "(single-column cluster supports strings)")
-      }
-    val resolved = GraftSnapshotIO.resolveCurrent(path)
-    val snap = resolved.snap
-    val inputNames = snap.files.map(_.name)
-    if (inputNames.isEmpty) return (0, 0, 0L)
-    require(!inputNames.exists(n => GraftLogNames.bucketOf(n) >= 0),
-      s"$path is a bucketed landing: its k-token layout is the join " +
-        "contract; clustering would destroy it (compact preserves it)")
-    val inputAbs = inputNames.map(GraftFs.child(path, _))
-    val totalBytes = inputAbs.map(GraftFs.length).sum
-    val k = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    // read EXACTLY the premise files: rows a concurrent commit adds
-    // mid-job must not ride into the outputs, because the commit below
-    // removes only the premise inputs. The pin is the MANIFEST itself
-    // (round 19, r18 verdict #6): an `asOfStamp` read resolves the very
-    // snapshot this command just resolved — stamps are strictly monotone
-    // along the chain, so a concurrent commit's higher stamp can never
-    // shadow it — at O(1) plan cost where the previous `_file` IN-list of
-    // F literals was itself a planning hazard on a 10^4-file landing.
-    // Fallback to the literal pin only where the manifest cannot speak:
-    // a manifest-less legacy landing, or unstamped foreign files that
-    // time travel (correctly) refuses to see.
-    import org.apache.spark.sql.functions.col
-    // the rewrite rows carry the ACTIVE columns (Spark's view); the
-    // encoder writes tombstoned slots as absent, so a dropped column's
-    // bytes physically vanish on rewrite — Iceberg's rewrite semantics
-    val cols = (GraftLog.schema.fields ++ GraftLog.activeExtra(extra)).map(f => col(f.name))
-    val reader = spark.read.format("graftlog")
-    if (extra.nonEmpty)
-      reader.option("evolvedSchema", GraftLog.encodeExtraSchema(extra))
-    val premise =
-      if (resolved.stamp >= 0 &&
-          inputNames.forall(n => GraftLogNames.stamp(n) >= 0))
-        reader.option("asOfStamp", resolved.stamp).load(path)
-      else reader.load(path).filter(col("_file").isin(inputAbs: _*))
-    // the shuffle/sort key: the named column, or the Morton interleave of
-    // both columns' approximate-quantile ranks (64 buckets per dimension
-    // -> a 12-bit z; the quantile pass is one driver-side sketch over the
-    // premise rows, so skew cannot starve the z domain)
-    val sortKey: org.apache.spark.sql.Column =
-      if (byCols.length == 1) col(byCols(0))
-      else {
-        import org.apache.spark.sql.functions.{lit, shiftleft, shiftright, when}
-        val q = 63
-        val probs = (1 to q).map(_.toDouble / (q + 1)).toArray
-        // ONE sketch pass over both columns (not one scan per column)
-        val allCuts = premise.stat.approxQuantile(byCols, probs, 0.01)
-        val ranks = byCols.zip(allCuts).map { case (c, cuts) =>
-          cuts.distinct.foldLeft(lit(0L))((acc, cut) =>
-            acc + when(col(c) > lit(cut), 1L).otherwise(0L))
-        }
-        (0 until 6).map { i =>
-          shiftleft(shiftright(ranks(0), i).bitwiseAND(lit(1L)), 2 * i + 1)
-            .bitwiseOR(shiftleft(shiftright(ranks(1), i).bitwiseAND(lit(1L)), 2 * i))
-        }.reduce(_.bitwiseOR(_))
-      }
-    val sorted = premise
-      .select((col("_pub_stamp") +: cols :+ sortKey.as("_graft_zk")).toIndexedSeq: _*)
-      .repartitionByRange(k, col("_graft_zk"))
-      // the trailing sort-key column sits PAST the encoder's positional
-      // window (stamp + table columns), so it never lands in the bytes
-      .sortWithinPartitions(col("_pub_stamp").asc_nulls_first, col("_graft_zk"))
-    // one task per output file: encode rows shifted past the leading
-    // stamp column, recording a segment boundary at every origin-stamp
-    // change (rows arrive stamp-grouped by the sort above; unstamped
-    // origins sort first as the -1 segment, which streaming re-delivers
-    // rather than loses and expire never ages out — compaction's exact
-    // contract for unknown-age data)
-    val extraB = extra
-    val pathB = path
-    val maxOriginsB = maxOrigins
-    val parts = sorted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      val tmp = GraftFs.child(pathB,
-        s".cluster-${java.util.UUID.randomUUID().toString.take(16)}.tmp")
-      val os = GraftFs.createData(tmp)
-      val segs = Vector.newBuilder[GraftSegment]
-      val stats = new GraftStatsTracker(extraB)
-      var outOff = 0L
-      var cur = Long.MinValue
-      var any = false
-      try rows.foreach { r =>
-        val st = if (r.isNullAt(0)) -1L else r.getLong(0)
-        if (!any || st != cur) {
-          segs += GraftSegment(outOff, st); cur = st; any = true
-        }
-        outOff += GraftLog.encodeRecord(os, r, extraB, 1, stats).toLong
-      } finally os.close()
-      // max_origins cap: coalesce adjacent STAMPED spans (ascending by
-      // the sort above) into even chunks labeled by their newest member;
-      // the leading -1 (unknown-age) span never merges — see the scaladoc
-      val exact = segs.result()
-      val (out, coalesced) =
-        if (exact.length <= maxOriginsB) (exact, false)
-        else {
-          val unk = exact.takeWhile(_.stamp < 0)
-          val stamped = exact.drop(unk.length)
-          val budget = math.max(1, maxOriginsB - unk.length)
-          val per = math.ceil(stamped.length.toDouble / budget).toInt
-          (unk ++ stamped.grouped(per)
-            .map(g => GraftSegment(g.head.start, g.last.stamp)).toVector, true)
-        }
-      Iterator.single((pid, tmp, out, coalesced, stats.result, outOff))
-    }.collect()
-    // publish in range order (fresh stamps; the ORIGIN stamps live in the
-    // segment map), then one CAS swap, then unlink the inputs
-    val outs = parts.sortBy(_._1).toVector.flatMap {
-      case (pid, tmp, segs, coalesced, stats, _) =>
-        GraftLogNames.publishOrDrop(path, tmp, pid, -1, s"s$pid")
-          .map(GraftLiveFile(_, Some(segs), stats, coalesced))
-    }
-    val committed = GraftSnapshotIO.commit(path,
-        premise = Some(GraftPremise.of("clustering", snap, inputNames))) { _ =>
-      GraftChange(addData = outs, removeData = inputNames.toSet)
-    }
-    GraftSnapshotIO.retire(path, committed, ret)
-    (inputNames.length, outs.length, totalBytes)
-  }
-
-  /** Retention for a landing (the third lifecycle operation after ingest
-    * and [[compact]]; served as `CALL <catalog>.system.expire`): deletes
-    * every stamped file published BEFORE `beforeStamp` (exclusive) and
-    * every orphan `.tmp` older than `tmpGraceMs` (failed/abandoned write
-    * attempts — a grace window protects in-flight tasks, which hold
-    * their tmp open until the driver commit renames it). Unstamped
-    * legacy `.graftlog` files are NEVER expired: their age is unknown,
-    * and silently deleting data of unknown age is the unrecoverable
-    * failure mode retention must not have. Driver-side O(files)
-    * metadata work — deletion moves no bytes, so there is nothing to
-    * distribute. Single-writer contract: expiring below an in-flight
-    * streaming reader's unprocessed offset loses rows for that reader —
-    * coordinate retention horizons with consumers, exactly as with any
-    * log system's retention.
-    *
-    * @return (log files deleted, bytes deleted, orphan tmps deleted) */
+      maxOrigins: Int = 64): (Int, Int, Long) =
+    GraftLogMaintenance.cluster(spark, path, byCol, targetBytes, extra, ret, maxOrigins)
+  /** See [[GraftLogMaintenance.expire]]. */
   def expire(path: String, beforeStamp: Long,
-      tmpGraceMs: Long = 60L * 60 * 1000): (Int, Long, Int) = {
-    require(beforeStamp >= 0, s"expire beforeStamp must be >= 0, got $beforeStamp")
-    require(tmpGraceMs >= 0, s"expire tmpGraceMs must be >= 0, got $tmpGraceMs")
-    val snap = GraftSnapshotIO.resolve(path)
-    // DATA age, not name age (round 16): a compacted file's name stamp is
-    // fresh, but its manifest segment map carries the merged inputs'
-    // original stamps — retention keys on max(origin stamps), so
-    // compaction does not reset the retention clock, and a file holding
-    // ANY unstamped-origin segment is never expired (unknown age, same
-    // minimal claim as for legacy names).
-    val segsOf = snap.files.collect {
-      case GraftLiveFile(n, Some(ss), _, _) => (n, ss)
-    }.toMap
-    def retireStamp(name: String): Long = segsOf.get(name) match {
-      case Some(ss) => if (ss.exists(_.stamp < 0)) -1L else ss.map(_.stamp).max
-      case None => GraftLogNames.stamp(name)
-    }
-    val all = GraftFs.listEntries(path) // (name, bytes, mtime)
-    val victims = all.filter { case (n, _, _) =>
-      n.endsWith(".graftlog") && {
-        val s = retireStamp(n)
-        s >= 0 && s < beforeStamp
-      }
-    }
-    val bytes = victims.map(_._2).sum
-    // manifest swap BEFORE the unlink pass: readers flip off the expired
-    // files atomically; delete files covering nothing afterwards retire
-    // with them. No-op expires write no manifest (idempotence stays
-    // file-identical).
-    val victimNames = victims.map(_._1).toSet
-    // Optimistic commit (round 17): expiry removes OLD files; a rebase
-    // just drops victims a concurrent commit already removed, and
-    // concurrently-added files carry fresh stamps, never below the
-    // horizon of a sane caller — no conflictable premise.
-    val committed = GraftSnapshotIO.commit(path)(base =>
-      GraftChange(removeData = victimNames.intersect(base.fileNames)))
-    victimNames.foreach(n => require(GraftFs.delete(GraftFs.child(path, n)),
-      s"expire failed to delete $path/$n"))
-    committed.deadDeletes.foreach(d => GraftFs.delete(GraftFs.child(path, d)))
-    // superseded manifests below the horizon retire too — but only below
-    // the chain ANCHOR (round 17): a delta manifest above it is a chain
-    // link some retained snapshot still resolves through, and the newest
-    // manifest (the live table state) always survives. Validly-named
-    // manifests only: a foreign `.graftsnap` that sorts last must not
-    // displace the real newest manifest out of the survivor slot
-    // (r16 advice).
-    val (pruned, _) = GraftSnapshotIO.prunable(path, beforeStamp)
-    pruned.foreach(m => require(GraftFs.delete(GraftFs.child(path, m)),
-      s"expire failed to delete manifest $path/$m"))
-    val horizon = System.currentTimeMillis() - tmpGraceMs
-    val orphans = all.filter { case (n, _, mtime) =>
-      n.endsWith(".tmp") && mtime < horizon }
-    orphans.foreach { case (n, _, _) =>
-      require(GraftFs.delete(GraftFs.child(path, n)),
-        s"expire failed to delete orphan $path/$n") }
-    (victims.length, bytes, orphans.length)
-  }
-
-  /** Snapshot GC (round 16; `CALL system.expire_snapshots`) — the
-    * history-pruning HALF of retention, distinct from [[expire]]'s DATA
-    * horizon: deletes superseded manifests stamped below `beforeStamp`
-    * (the newest always survives — it IS the table) and then unlinks
-    * every STAMPED data/position-delete file referenced by NO remaining
-    * manifest. Current data is untouched by construction (the newest
-    * manifest references it), so a snapshot-retaining table can shed
-    * history without moving its live rows — Iceberg's expire_snapshots
-    * shape. Unstamped (foreign) files are never GC'd: they have no
-    * commit protocol, so "unreferenced" proves nothing about them.
-    * Single-writer: this IS a writer (same contract as compact/expire).
-    *
-    * @return (manifests deleted, files deleted, bytes deleted) */
-  def expireSnapshots(path: String, beforeStamp: Long): (Int, Int, Long) = {
-    require(beforeStamp >= 0, s"expireSnapshots beforeStamp must be >= 0, got $beforeStamp")
-    val all = GraftFs.listEntries(path) // (name, bytes, mtime)
-    // A manifest-less (legacy) landing has NO snapshot history: nothing is
-    // provably unreferenced, so there is nothing to GC — without this
-    // guard every stamped file would be classified as garbage and the
-    // whole table deleted (r16 advice, high). Mirrors resolveAsOf's
-    // manifests-nonEmpty require; resolve() treats the same landing as
-    // live via the directory listing.
-    if (!all.exists(e => GraftSnapshotIO.isManifest(e._1))) return (0, 0, 0L)
-    // chain-aware pruning (round 17): victims are the manifests strictly
-    // below the chain anchor — everything a retained snapshot resolves
-    // through survives, so delta chains never lose a link
-    val (victims, remaining) = GraftSnapshotIO.prunable(path, beforeStamp)
-    victims.foreach(m => require(GraftFs.delete(GraftFs.child(path, m)),
-      s"expire_snapshots failed to delete manifest $path/$m"))
-    // the live universe: every file ANY retained snapshot references,
-    // computed by folding the remaining chain once (anchor is a base) —
-    // plus staged branch data (round 19), referenced by no main snapshot
-    // yet but live until its branch publishes or drops
-    val referenced = GraftSnapshotIO.referencedBy(path, remaining) ++
-      GraftSnapshotIO.branchReferences(path)
-    val garbage = all.filter { case (n, _, _) =>
-      (n.endsWith(".graftlog") || n.endsWith(".graftdel")) &&
-        GraftLogNames.stamp(n) >= 0 && !referenced.contains(n)
-    }
-    val bytes = garbage.map(_._2).sum
-    garbage.foreach { case (n, _, _) =>
-      require(GraftFs.delete(GraftFs.child(path, n)),
-        s"expire_snapshots failed to delete $path/$n") }
-    (victims.length, garbage.length, bytes)
-  }
-
-  // -------------------------------------------------------------------
-  // Changelog read (round 19, r18 verdict #2): TABLE CHANGES between two
-  // snapshots, derived from the eq/pos-delete records the format stores
-  // -------------------------------------------------------------------
-
-  /** Epoch marker (`-q<queryId>-e<epoch>-`) of a streaming publish name,
-    * None for batch/rewrite names. The greedy first group makes
-    * `-e<digits>-` bind to the LAST candidate before the task token, so
-    * a queryId that itself contains a `-e<digits>-` shaped segment
-    * cannot confuse the parse. */
-  private val EpochMarkerRe = """^pub-\d{13}-\d+-q(.+)-e(\d+)-(?:p|eq)\d{5}-""".r
-  private[sources] def epochMarkerOf(name: String): Option[String] =
-    EpochMarkerRe.findFirstMatchIn(name).map(m => s"-q${m.group(1)}-e${m.group(2)}-")
-
-  /** NET row-level changes of a landing between the snapshot current AS
-    * OF `fromStamp` and the one current AS OF `toStamp` — Delta's change
-    * data feed / Iceberg's changelog scan, derived entirely from what
-    * the manifest chain already stores. Returns the table columns plus
-    * `_change_type` ('insert' | 'delete') and `_change_stamp` (the
-    * inserting origin's publish stamp / the killing commit's stamp). An
-    * upsert is its two halves: the replaced row as a delete, the
-    * replacement as an insert — exactly what a downstream incremental
-    * aggregate needs to stay equal to the full recompute.
-    *
-    * NET means squashed between the two snapshots: a row born and killed
-    * inside the window appears on neither side. Semantics per change
-    * source, each stated:
-    *  - appends / streaming (upsert) epochs: inserts are rows whose
-    *    ORIGIN publish stamp did not exist in the FROM snapshot — exact
-    *    across compaction/clustering, whose segment maps preserve
-    *    origins, so a mid-window rewrite contributes NOTHING;
-    *  - equality deletes (the upsert sink): the FROM-snapshot rows
-    *    matching the window's deleted keys are the delete side;
-    *  - position deletes (merge-on-read DELETE/UPDATE): the FROM-snapshot
-    *    rows at the deleted (file, ordinal) identities;
-    *  - copy-on-write rewrites, truncate, and expire REFUSE loudly: they
-    *    remove rows without recording which — deriving their changes
-    *    would require diffing row content, and a silently-partial
-    *    changelog is the one wrong answer this surface must never give.
-    *    Changelog-readable history wants merge-on-read modes + the
-    *    streaming upsert sink, which CDC workloads use anyway.
-    *
-    * The window is resolved against RETAINED snapshots (`resolveAsOf`
-    * ceilings), so the natural host is a `snapshot.retain = true` table;
-    * on a non-retaining landing a historical file may already be
-    * unlinked and the read fails loudly, never wrong. Driver cost is
-    * O(manifests + delete records in the window) metadata; the row work
-    * is two distributed scans (FROM keyed/position-filtered, TO
-    * stamp-filtered with zone/stamp file pruning). Unstamped foreign
-    * files have no timeline position and are invisible to both sides,
-    * matching resolveAsOf. */
-  /** One window commit: stamp, added/removed data files, added/removed
-    * delete files, delta vs base shape, and the all-rows-dead absorb
-    * signature (see [[readChanges]]). */
-  private[sources] final case class GraftChgRec(stamp: Long,
-      added: Vector[GraftLiveFile], removed: Set[String],
-      addedDels: Seq[String], removedDels: Set[String],
-      delta: Boolean, removedAllCovered: Boolean)
-  /** A copy-on-write rewrite inside a change window, derivable as a ROW
-    * DIFF (round 20, r19 verdict #7): the pre-commit view of the removed
-    * files EXCEPT ALL the added files' rows = the rows the rewrite
-    * dropped; the symmetric difference = the rows it introduced (a CoW
-    * UPDATE's new images). Requires the removed files to pre-exist the
-    * window and a retaining landing (the pre-commit snapshot must still
-    * read). */
-  private[sources] final case class GraftCowDiff(preStamp: Long, stamp: Long,
-      removed: Seq[String], added: Seq[String])
-
-  /** A resolved, derivability-checked change window: both boundary
-    * states, the walked commits, the replay re-publication stamps to
-    * exclude from the insert side, the re-published eq-delete names
-    * to skip from collection, and any copy-on-write rewrites derivable
-    * as row diffs. Shared by the batch [[readChanges]] and the
-    * streaming changes source. */
-  private[sources] final case class GraftChangesWindow(
-      stateFrom: GraftSnapshot, stateTo: GraftSnapshot,
-      commits: Seq[GraftChgRec], repubStamps: Set[Long], xedDels: Set[String],
-      cowDiffs: Seq[GraftCowDiff] = Nil)
-
-  /** Resolve and classify the change window [fromStamp, toStamp]; None
-    * when the window spans no commits. Refuses underivable windows
-    * (copy-on-write rewrite, truncate, expire, coalesced segment maps)
-    * loudly — a silently partial changelog is the one wrong answer this
-    * surface must never give. */
-  private[sources] def changesWindow(path: String, fromStamp: Long,
-      toStamp: Long): Option[GraftChangesWindow] = {
-    val ordered = GraftSnapshotIO.refs(GraftFs.listNames(path))
-    require(ordered.nonEmpty,
-      s"no snapshot history in $path (manifest-less landing): table " +
-        "changes need committed snapshots")
-    val heads = ordered.map(GraftSnapshotIO.headOf(path, _))
-    val iFrom = heads.lastIndexWhere(_._1 <= fromStamp)
-    require(iFrom >= 0,
-      s"no snapshot of $path at or before stamp $fromStamp (older than " +
-        "the retained history, or before the table existed)")
-    val iTo = heads.lastIndexWhere(_._1 <= toStamp)
-    if (iTo == iFrom) return None
-    // the walked range must be seq-contiguous — a hole would silently
-    // skip a commit's change, the exact failure resolveAt refuses
-    require(!((iFrom + 1) to iTo).exists(i =>
-        GraftSnapshotIO.seqOf(ordered(i)) != GraftSnapshotIO.seqOf(ordered(i - 1)) + 1),
-      s"manifest chain of $path has a seq hole inside the change window — " +
-        "a link was deleted outside the expire protocol")
-    val stateFrom = GraftSnapshotIO.resolveAsOf(path, fromStamp)
-    // walk the window's commits: per commit (stamp, added files, removed
-    // data names, added delete files, removed delete files); a BASE
-    // manifest in-window (every 16th commit, or an overwrite) yields its
-    // change as a state diff
-    var state = stateFrom
-    val commits = ((iFrom + 1) to iTo).map { i =>
-      GraftSnapshotIO.readBody(path, ordered(i)) match {
-        case GraftSnapshotIO.DeltaBody(st, c) =>
-          // was every removed data file covered, in the PRE-commit
-          // state, by a delete file this commit explicitly retires? —
-          // the all-rows-dead absorb signature only compaction writes
-          val covered = c.removeData.nonEmpty && c.removeData.forall(n =>
-            state.deletesFor(n).exists(d =>
-              c.removeDeletes.contains(GraftFs.nameOf(d))))
-          val rec = GraftChgRec(st, c.addData, c.removeData,
-            c.addDeletes.map(_._1), c.removeDeletes,
-            delta = true, removedAllCovered = covered)
-          state = c.apply(state)._1
-          rec
-        case GraftSnapshotIO.BaseBody(st, s) =>
-          val oldF = state.fileNames
-          val rec = GraftChgRec(st, s.files.filterNot(f => oldF.contains(f.name)),
-            oldF -- s.fileNames,
-            (s.deletes.keySet -- state.deletes.keySet).toSeq.sorted,
-            state.deletes.keySet -- s.deletes.keySet,
-            delta = false, removedAllCovered = false)
-          state = s
-          rec
-      }
-    }
-    // derivability + replay classification (see scaladoc): a commit that
-    // removes data files is a rewrite (all added files carry segment
-    // maps — net zero), a streaming epoch REPLAY (every removed name
-    // shares an added file's epoch marker), or underivable
-    // Re-published pre-window rows are tracked by their PUBLISH stamps,
-    // not file names (round 20, r19 advice): a mid-window compact/cluster
-    // that merges a replay-republished file preserves the replay's
-    // in-window origin stamps in the output's segment map under a NEW
-    // name — a name filter would misreport those pre-window rows as
-    // inserts. One stamp identifies exactly one published file's rows,
-    // and rewrites carry origin stamps forward by contract, so a stamp
-    // exclusion survives any in-window rewrite.
-    val replayRepub = Set.newBuilder[Long]
-    val skippedDels = Set.newBuilder[String] // their re-published eq-dels
-    val cow = Seq.newBuilder[GraftCowDiff]
-    val preStamps = ((iFrom + 1) to iTo).map(i => heads(i - 1)._1)
-    commits.zip(preStamps).foreach { case (c, preStamp) =>
-      // a COALESCED segment map (cluster's max_origins cap) coarsens
-      // `_pub_stamp` upward by construction — an in-window coalesced file
-      // could classify pre-existing rows as inserts, so refuse loudly
-      // (pre-window coalesced files are net-zero: their relabeled stamps
-      // are FROM-snapshot stamps on both sides)
-      c.added.find(_.coalesced).foreach { f =>
-        throw new IllegalArgumentException(
-          s"table changes of $path between $fromStamp and $toStamp are " +
-            s"not derivable: the commit stamped ${c.stamp} added " +
-            s"${f.name} with a COALESCED segment map (cluster " +
-            "max_origins cap) — origin stamps are coarsened; compact " +
-            "before clustering to keep changelog-exact history")
-      }
-      if (c.removed.nonEmpty) {
-        val rewriteLike = c.added.nonEmpty && c.added.forall(_.segs.isDefined)
-        // a DELTA commit that removes ONLY fully-absorbed files (every
-        // removed data file covered by a delete file the same commit
-        // X-retires) is a compaction whose merged outputs were all empty
-        // — net-zero for the changelog, since the killing delete records
-        // were collected when they landed (in-window) or were already
-        // applied in the FROM snapshot (pre-window). A truncate can
-        // never take this shape: it retires deletes via coverage pruning
-        // (no X records) and always lands as a BASE manifest.
-        val absorbLike = c.delta && c.added.isEmpty && c.removedAllCovered
-        if (!rewriteLike && !absorbLike) {
-          val markers = c.added.flatMap(f => epochMarkerOf(f.name)).toSet
-          val replayShape =
-            markers.nonEmpty && c.removed.forall(r => markers.exists(r.contains))
-          if (replayShape) {
-            if (c.removed.forall(stateFrom.fileNames.contains)) {
-              // a replayed epoch whose first attempt committed BEFORE the
-              // window: its re-published rows pre-exist (not inserts) and
-              // its re-published eq-del re-states pre-window takedowns
-              c.added.foreach { f =>
-                val st = GraftLogNames.stamp(f.name)
-                require(st >= 0, s"replay re-publication ${f.name} in " +
-                  s"$path is unstamped — epoch publishes are always stamped")
-                replayRepub += st
-              }
-              skippedDels ++= c.addedDels.filter(d => markers.exists(d.contains))
-            }
-          } else {
-            // COPY-ON-WRITE fallback (round 20, r19 verdict #7): a
-            // commit that replaces PRE-WINDOW files with plain fresh
-            // files derives as a ROW DIFF on a retaining landing — the
-            // added files' stamps are excluded from the insert side
-            // (they re-publish surviving rows), and [[readChanges]]
-            // computes removed-EXCEPT-ALL-added as deletes plus the
-            // symmetric difference as inserts (a CoW UPDATE's — or an
-            // overwrite's — new images). Delta vs base manifest shape
-            // does not matter (small tables base-compact eagerly);
-            // SURVIVOR-LESS removals stay refused: with no added files
-            // the shape is indistinguishable from expire, whose
-            // removals are retention, not logical deletes.
-            val cowShape = c.added.nonEmpty &&
-              c.added.forall(_.segs.isEmpty) &&
-              c.removed.forall(stateFrom.fileNames.contains)
-            require(cowShape,
-              s"table changes of $path between $fromStamp and $toStamp are " +
-                s"not derivable: the commit stamped ${c.stamp} removed data " +
-                "files outside a rewrite/replay/copy-on-write-diff shape " +
-                "(truncate and expire record no row identities, and a " +
-                "survivor-less or in-window copy-on-write rewrite is " +
-                "indistinguishable from them); changelog-readable history " +
-                "wants merge-on-read modes and the streaming upsert sink")
-            c.added.foreach { f =>
-              val st = GraftLogNames.stamp(f.name)
-              require(st >= 0, s"copy-on-write survivor ${f.name} in " +
-                s"$path is unstamped — batch publishes are always stamped")
-              replayRepub += st
-            }
-            cow += GraftCowDiff(preStamp, c.stamp,
-              c.removed.toSeq.sorted, c.added.map(_.name))
-          }
-        }
-      }
-    }
-    Some(GraftChangesWindow(stateFrom, state, commits,
-      replayRepub.result(), skippedDels.result(), cow.result()))
-  }
-
+      tmpGraceMs: Long = 60L * 60 * 1000): (Int, Long, Int) =
+    GraftLogMaintenance.expire(path, beforeStamp, tmpGraceMs)
+  /** See [[GraftLogMaintenance.expireSnapshots]]. */
+  def expireSnapshots(path: String, beforeStamp: Long): (Int, Int, Long) =
+    GraftLogMaintenance.expireSnapshots(path, beforeStamp)
+  /** See [[GraftLogChanges.readChanges]]. */
   def readChanges(spark: SparkSession, path: String, fromStamp: Long,
       toStamp: Long, extra: Array[StructField] = Array.empty,
-      updateImages: Boolean = false): DataFrame = {
-    require(fromStamp >= 0, s"readChanges fromStamp must be >= 0, got $fromStamp")
-    require(toStamp >= fromStamp,
-      s"readChanges window is [from, to]: $fromStamp > $toStamp")
-    import org.apache.spark.sql.functions.{broadcast, col, input_file_name,
-      lit, min, row_number, substring_index, when}
-    val schemaAll = StructType((GraftLog.schema.fields ++ GraftLog.activeExtra(extra)) ++ Seq(
-      StructField("_change_type", StringType, nullable = false),
-      StructField("_change_stamp", LongType, nullable = true)))
-    val win = changesWindow(path, fromStamp, toStamp) match {
-      case None =>
-        return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaAll)
-      case Some(w) => w
-    }
-    val stateFrom = win.stateFrom
-    val state = win.stateTo
-    val commits = win.commits
-    // collect the window's delete records. A delete file the window
-    // itself later retires still CONTRIBUTED its changes when it landed —
-    // a mid-window compaction absorbs an eq-delete physically, but the
-    // keyed takedown happened — so retirement never erases collection
-    // (the retaining table keeps the bytes readable). The only skips are
-    // the pre-window replay re-publications classified above (their keys
-    // re-state takedowns already applied in the FROM snapshot), and a
-    // replay's within-window X-retired first attempt is harmless to keep:
-    // its replacement carries the same keys and the first-stamp maps
-    // dedup them.
-    val xed = win.xedDels
-    // The window's delete records are collected DISTRIBUTED (round 20,
-    // r19 verdict hardening): the delete files are read as datasets and
-    // reduced to (key -> first kill stamp) with a group-by, so driver
-    // memory stays O(delete files + bounded pushdown sample) — a window
-    // spanning a mass takedown no longer builds O(deleted keys) driver
-    // maps. Commit stamps increase with manifest order, so min(stamp)
-    // IS the first kill. Only each file's one-line header (its kind) is
-    // read driver-side. Each line decodes through GraftDeletes, the
-    // writer's own codec, on the executors.
-    import spark.implicits._
-    // kind = the eq header's key ordinals, None for position-delete
-    // files (no header — every line is a record)
-    val delMeta: Seq[(String, Long, Option[Seq[Int]])] = commits.flatMap { c =>
-      c.addedDels.filterNot(xed.contains).map { d =>
-        (d, c.stamp,
-          GraftDeletes.headerOrds(GraftFs.readHeadLine(GraftFs.child(path, d))))
-      }
-    }
-    /** Record lines of the `kind` delete files, each with its file's path
-      * and its commit's stamp (joined by file name, via a broadcast of the
-      * O(files) name->stamp map). For eq kinds the header line is dropped;
-      * a header can never equal a record line. */
-    def delLines(kind: Option[Seq[Int]]): Dataset[(String, String, Long)] = {
-      val files = delMeta.filter(_._3 == kind)
-      val stampByName = files.map { case (n, st, _) => (n, st) }.toDF("_dn", "_cs")
-      spark.read.textFile(files.map(f => GraftFs.child(path, f._1)): _*)
-        .select(col("value").as("_line"),
-          substring_index(input_file_name(), "/", -1).as("_dn"))
-        .filter(col("_line") =!= lit("") &&
-          kind.fold(lit(true))(k => col("_line") =!= lit(GraftDeletes.header(k))))
-        .join(broadcast(stampByName), "_dn")
-        .select(col("_line"), col("_dn"), col("_cs")).as[(String, String, Long)]
-    }
-    val posRec = delMeta.find(_._3.isEmpty).map { _ =>
-      delLines(None).map { case (line, dn, st) =>
-        val (f, p) = GraftDeletes.decPos(line, GraftFs.child(path, dn))
-        (f, p, st)
-      }.toDF("_cf", "_cp", "_cs")
-        .groupBy("_cf", "_cp").agg(min("_cs").as("_cs"))
-    }
-    // per eq kind (one column or a composite list): the typed key
-    // components — null outside the key — reduced to first-kill stamps
-    val compColOf = Map(0 -> "_ce", 1 -> "_cu", 3 -> "_cy")
-    val keyDfs: Seq[(Seq[Int], DataFrame)] = delMeta.flatMap(_._3).distinct.map { ords =>
-      val keysDf = delLines(Some(ords)).map { case (line, dn, st) =>
-        val (e, u, t) = GraftDeletes.decKey(line, ords, GraftFs.child(path, dn))
-        (Option.when(ords.contains(0))(e), Option.when(ords.contains(1))(u),
-          Option(t).map(_.toString), st)
-      }.toDF("_ce", "_cu", "_cy", "_cs")
-      (ords, keysDf.groupBy(ords.map(o => col(compColOf(o))): _*)
-        .agg(min("_cs").as("_cs")))
-    }
-    val tableCols = (GraftLog.schema.fields ++ GraftLog.activeExtra(extra)).map(f => col(f.name))
-    def reader = {
-      val r = spark.read.format("graftlog")
-      if (extra.nonEmpty) r.option("evolvedSchema", encodeExtraSchema(extra))
-      r
-    }
-    // INSERT side: rows of the TO snapshot whose origin stamp the FROM
-    // snapshot never held. Stamps are (practically) monotone with commit
-    // order, so `> max(from origins)` prunes files via the pushed stamp
-    // lane; the rare concurrent-committer straggler (an in-window origin
-    // stamped below a FROM origin) rides an exact small IN-list instead
-    // of an O(live files) literal list.
-    val fromStamps = stateFrom.files
-      .flatMap(_.stampedSegments.map(_.stamp)).filter(_ >= 0).toSet
-    val toStamps = state.files
-      .flatMap(_.stampedSegments.map(_.stamp)).filter(_ >= 0).toSet
-    val maxFrom = if (fromStamps.isEmpty) -1L else fromStamps.max
-    val lowNew = (toStamps -- fromStamps).filter(_ <= maxFrom).toSeq.sorted
-    val insBase = lit(false) || col("_pub_stamp") > lit(maxFrom)
-    val insPred =
-      if (lowNew.isEmpty) insBase
-      else insBase || col("_pub_stamp").isin(lowNew: _*)
-    val repub = win.repubStamps
-    val toDf = reader.option("asOfStamp", toStamp).load(path)
-    val inserts0 = toDf.filter(col("_pub_stamp").isNotNull && insPred)
-    val inserts = (if (repub.isEmpty) inserts0
-      else inserts0.filter(!col("_pub_stamp").isin(repub.toSeq.sorted: _*)))
-      .select((tableCols :+ lit("insert").as("_change_type")
-        :+ col("_pub_stamp").as("_change_stamp")).toIndexedSeq: _*)
-    // DELETE side: FROM-snapshot rows matching the window's deleted keys
-    // or deleted (file, ordinal) identities. A SMALL key set (the common
-    // correction wave) is probed with a bounded limit-collect and still
-    // rides an exact pushed IN-list + broadcast stamp join — the same
-    // plan as before; a mass takedown skips the pushdown and joins
-    // distributed (AQE picks broadcast vs shuffle from the actual size),
-    // so no O(keys) ever lands on the driver.
-    val fromDf = reader.option("asOfStamp", fromStamp).load(path)
-    val withIdent = tableCols ++ Seq(col("_file"), col("_pos"), col("_cs"))
-    // (key columns, FROM rows it deletes) per eq kind — single-column
-    // kinds and composite kinds share the shape; pos rows are keyless
-    // the bounded probe's sample doubles as the SMALL-case key relation
-    // (round-20 review): ≤1000 keys — the common correction wave — join
-    // a local broadcast built from the already-collected rows instead of
-    // re-running the distributed key aggregation a second time
-    def localDf(rows: Array[org.apache.spark.sql.Row],
-        schema: StructType): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    val eqKinds = keyDfs.map { case (ords, keysDf) =>
-      val cond = ords.map(o =>
-        col(GraftLog.colName(o)) === col(compColOf(o))).reduce(_ && _)
-      // the bounded pushdown probe narrows on the FIRST component
-      val sample = keysDf.limit(1001).collect()
-      val (pre, right) =
-        if (sample.length <= 1000)
-          (fromDf.filter(col(GraftLog.colName(ords.head)).isin(
-            sample.map(_.getAs[Any](compColOf(ords.head))).toIndexedSeq: _*)),
-            broadcast(localDf(sample, keysDf.schema)))
-        else (fromDf, keysDf)
-      (ords.map(GraftLog.colName), pre.join(right, cond)
-        .drop("_ce", "_cu", "_cy").select(withIdent.toIndexedSeq: _*))
-    }
-    val posBranch = posRec.map { posDf =>
-      // size probe by COUNT of the limited subquery — no row payload
-      // ships to the driver just to be measured (round-20 review)
-      val small = posDf.limit(100001).count() <= 100000
-      fromDf.join(if (small) broadcast(posDf) else posDf,
-          substring_index(col("_file"), "/", -1) === col("_cf") &&
-            col("_pos") === col("_cp"))
-        .select(withIdent.toIndexedSeq: _*)
-    }
-    // UPDATE images (round 20, r19 verdict missing #1): with
-    // `updateImages` on, a keyed correction is typed as its two halves —
-    // the FROM row `update_preimage`, the TO row `update_postimage` —
-    // while a key deleted without replacement stays `delete` and a key
-    // inserted without a prior row stays `insert`. Classification is a
-    // pair of O(changes)-keyed joins per kind: a delete row is a
-    // preimage iff its key reappears on the insert side; an insert row
-    // is a postimage iff its key had a FROM-side row (the delete branch
-    // for that kind). Incremental MERGE consumers read the typed feed
-    // directly; an aggregate maintained from it equals full recompute.
-    val insertsTyped =
-      if (!updateImages || eqKinds.isEmpty) inserts
-      else {
-        var df = inserts
-        var isUpd = lit(false)
-        val dropCols = Seq.newBuilder[String]
-        eqKinds.zipWithIndex.foreach { case ((kcs, delRows), i) =>
-          val preKeys = delRows.select(kcs.zipWithIndex.map {
-            case (kc, j) => col(kc).as(s"_uk${i}_$j")
-          }.toIndexedSeq: _*).distinct()
-          val cond = kcs.zipWithIndex.map { case (kc, j) =>
-            col(kc) === col(s"_uk${i}_$j")
-          }.reduce(_ && _)
-          df = df.join(preKeys, cond, "left")
-          isUpd = isUpd || col(s"_uk${i}_0").isNotNull
-          dropCols ++= kcs.indices.map(j => s"_uk${i}_$j")
-        }
-        df.withColumn("_change_type",
-            when(isUpd, lit("update_postimage")).otherwise(lit("insert")))
-          .drop(dropCols.result(): _*)
-      }
-    val typedEq =
-      if (!updateImages) eqKinds.map { case (_, rows) =>
-        rows.withColumn("_ct", lit("delete"))
-      }
-      else eqKinds.map { case (kcs, rows) =>
-        val insKeys = inserts.select(kcs.zipWithIndex.map {
-          case (kc, j) => col(kc).as(s"_ik$j")
-        }.toIndexedSeq: _*).distinct()
-        val cond = kcs.zipWithIndex.map { case (kc, j) =>
-          col(kc) === col(s"_ik$j")
-        }.reduce(_ && _)
-        rows.join(insKeys, cond, "left")
-          .withColumn("_ct", when(col("_ik0").isNotNull,
-            lit("update_preimage")).otherwise(lit("delete")))
-          .drop(kcs.indices.map(j => s"_ik$j"): _*)
-      }
-    val branches = typedEq ++ posBranch.map(_.withColumn("_ct", lit("delete")))
-    val deletes = branches.reduceOption(_ unionByName _) match {
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaAll)
-      case Some(d) =>
-        // a row killed by MULTIPLE kinds in one window is ONE delete:
-        // (_file, _pos) is its identity, and the surviving row is
-        // DETERMINISTIC (round-20 review): the update label wins the
-        // tie (lexically greatest _ct) and the MINIMUM kill stamp wins
-        // among equals — the same min-across-kinds the streaming
-        // changes reader computes, so drain == batch holds on
-        // multi-kind windows too (dropDuplicates keeps an arbitrary
-        // branch row, which made _change_stamp shuffle-dependent).
-        val one =
-          if (branches.lengthIs == 1) d.dropDuplicates("_file", "_pos")
-          else {
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy("_file", "_pos")
-              .orderBy(col("_ct").desc, col("_cs"))
-            d.withColumn("_rn", row_number().over(w))
-              .filter(col("_rn") === 1).drop("_rn")
-          }
-        one.select((tableCols :+ col("_ct").as("_change_type")
-          :+ col("_cs").as("_change_stamp")).toIndexedSeq: _*)
-    }
-    // COPY-ON-WRITE row diffs (round 20, r19 verdict #7; NET-corrected
-    // by the round-20 review): per CoW commit, the pre-commit view of
-    // the removed files EXCEPT ALL the survivor files' rows AS OF THE
-    // WINDOW END = the rows the window net-dropped through the rewrite;
-    // the symmetric difference = the rows it net-introduced (a CoW
-    // UPDATE's new images, typed insert — content diffs carry no key
-    // contract, so they never type as update images). Slicing the
-    // survivor side at TO (not at the CoW commit) applies any LATER
-    // in-window MoR kills to the rewrite's own rows, so a row the CoW
-    // introduced and a later epoch replaced is in neither side; and a
-    // pre-image whose key the window ALSO eq-deleted is anti-joined out
-    // (the eq branch already reports that row — reporting it twice
-    // would double a consumer's decrement). The pre-commit read applies
-    // that state's own MoR drop sets, so a row already dead before the
-    // rewrite is in neither side; multiset EXCEPT ALL keeps
-    // duplicate-row counts exact.
-    val cowBranches = win.cowDiffs.flatMap { d =>
-      def slice(stamp: Long, names: Seq[String]) =
-        reader.option("asOfStamp", stamp).load(path)
-          .filter(substring_index(col("_file"), "/", -1)
-            .isin(names.toIndexedSeq: _*))
-          .select(tableCols.toIndexedSeq: _*)
-      val oldRows = slice(d.preStamp, d.removed)
-      val newRows = slice(toStamp, d.added)
-      val killKeySpecs = keyDfs.map { case (ords, kdf) =>
-        (kdf.select(ords.map(o => col(compColOf(o)).as(s"_kk$o")).toIndexedSeq: _*),
-          ords.map(o => col(GraftLog.colName(o)) === col(s"_kk$o")).reduce(_ && _))
-      }
-      val cowDel = killKeySpecs.foldLeft(oldRows.exceptAll(newRows)) {
-        case (df, (kdf, cond)) => df.join(kdf, cond, "left_anti")
-      }
-      Seq(
-        cowDel
-          .withColumn("_change_type", lit("delete"))
-          .withColumn("_change_stamp", lit(d.stamp)),
-        newRows.exceptAll(oldRows)
-          .withColumn("_change_type", lit("insert"))
-          .withColumn("_change_stamp", lit(d.stamp)))
-    }
-    cowBranches.foldLeft(insertsTyped.unionByName(deletes))(_ unionByName _)
-  }
-
-  /** File set named by the runtime group filter: the `_file` =/IN
-    * predicates intersect across conjuncts; anything else contributes no
-    * constraint. None = unconstrained (sound fallback — the caller
-    * rewrites everything). An IN with no literals is the genuine empty
-    * set (no file contains a matching row). */
-  private[sources] def runtimeFileSet(preds: Array[V2Predicate]): Option[Set[String]] =
-    preds.toSeq.flatMap(v2ToV1(_, FILE_LANE)).flatMap {
-      case EqualTo(_, f: String) => Some(Set(f))
-      case In(_, fs) => Some(fs.map(_.asInstanceOf[String]).toSet)
-      case _ => None
-    }.reduceOption(_ intersect _)
-
-  /** Buckets a pushed filter tree allows on the bucket column, None = no
-    * constraint. Conjuncts (the array, and And nodes) intersect; Or nodes
-    * union — and an Or branch with no constraint poisons the whole Or to
-    * None (rows could land in any bucket through that branch). Only
-    * =/IN on the bucket column itself constrain; every other predicate is
-    * bucket-agnostic. Soundness: a dropped bucket can only contain rows
-    * every retained filter rejects. */
-  private[sources] def prunedBuckets(b: GraftLogBucketSpec,
-      filters: Array[Filter]): Option[Set[Int]] = {
-    def one(f: Filter): Option[Set[Int]] = f match {
-      case EqualTo(a, v: Long) if a == b.col => Some(Set(b.bucketOf(v)))
-      case In(a, vs) if a == b.col && vs.forall(_.isInstanceOf[Long]) =>
-        Some(vs.map(v => b.bucketOf(v.asInstanceOf[Long])).toSet)
-      case And(l, r) => (one(l), one(r)) match {
-        case (Some(x), Some(y)) => Some(x intersect y)
-        case (x, y) => x.orElse(y)
-      }
-      case Or(l, r) => for { x <- one(l); y <- one(r) } yield x union y
-      case _ => None
-    }
-    filters.flatMap(one).reduceOption(_ intersect _)
-  }
-
-  /** A lane a predicate takes into a graftlog scan: the columns it may
-    * reference, with their types, and whether it yields pruning HINTS.
-    * A claimed lane's translation is exact, evaluated in Spark's place. A
-    * hint only bounds which files can match, and Spark still evaluates
-    * the predicate: so a hint may keep one side of an AND (each conjunct
-    * bounds the file on its own) and never negates (the negation of a
-    * bound is no bound). */
-  private[sources] final case class GraftLane(cols: Seq[StructField], hint: Boolean = false)
-
-  /** The data columns: claimed (`pushed=[…]`), compiled per record, and
-    * pruning buckets and zone maps. Also the runtime-filter and the
-    * row-level command's group-filter lane. */
-  private[sources] val DATA_LANE = GraftLane(schema.fields.toSeq)
-  /** `_pub_stamp`, constant per file: claimed (`stampPruned=[…]`) and
-    * evaluated per file, so it prunes files exactly — the time-travel /
-    * incremental-read surface (`_pub_stamp > lastSeen` opens only the
-    * files published since). */
-  private[sources] val STAMP_LANE =
-    GraftLane(Seq(StructField("_pub_stamp", LongType, nullable = true)))
-  /** `_file`, the group identity of the copy-on-write rewrite. */
-  private[sources] val FILE_LANE =
-    GraftLane(Seq(StructField("_file", StringType, nullable = false)))
-  /** A table's ADDED columns (round 18): zone-map pruning hints only —
-    * extras are never claimed, but a file whose W bounds provably exclude
-    * the predicate is never opened. */
-  private[sources] def hintLane(extra: Array[StructField]): GraftLane =
-    GraftLane(extra.toSeq, hint = true)
-
-  /** The one translation of a connector [[V2Predicate]] into the internal
-    * (v1-shaped) filter tree the evaluators read: `compile` per record,
-    * `evalStamp` per stamp, `statsAccepts` per file and `prunedBuckets`
-    * per bucket. None = untranslatable in `lane`: returned to Spark as a
-    * residual. Shapes: =, <=> (as =), <>, <, <=, >, >= with the literal
-    * on either side (flipped operator); IN (no literals = the empty set);
-    * IS [NOT] NULL; STARTS_WITH / ENDS_WITH / CONTAINS on a string column
-    * (binary UTF8 comparison, Spark's default collation); AND / OR / NOT
-    * over such. A literal must carry its column's type (an int literal
-    * widens to a long column) and arrives Catalyst-internal (UTF8String
-    * for strings): it is converted to the external form the evaluators
-    * expect exactly once, here.
-    *
-    * NULL literals decline the whole subtree (r15 advice): the reader
-    * evaluates pushed trees with two-valued logic, sound only over
-    * non-null values, but a null LITERAL brings three-valued semantics
-    * back above the rows — `col NOT IN (1, NULL)` selects zero rows in
-    * SQL, while a two-valued NOT over a null-dropped IN-set keeps every
-    * `col != 1` row. Catalyst folds most of these away, but an IN list
-    * with a null survives to the source. Mixed trees (stamp and data
-    * columns under one OR) fit no lane and stay residual: never wrong,
-    * just unpruned. */
-  private[graft] def v2ToV1(p: V2Predicate, lane: GraftLane = DATA_LANE): Option[Filter] = {
-    import org.apache.spark.sql.connector.expressions.{Expression => V2Expr, Literal => V2Lit}
-    def colOf(e: V2Expr): Option[StructField] = e match {
-      case nr: NamedReference if nr.fieldNames.length == 1 =>
-        lane.cols.find(_.name == nr.fieldNames()(0))
-      case _ => None
-    }
-    def litOf(e: V2Expr, c: StructField): Option[Any] = e match {
-      case l: V2Lit[_] if l.value == null => None
-      case l: V2Lit[_] if l.dataType == c.dataType =>
-        Some(org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .convertToScala(l.value, l.dataType))
-      case l: V2Lit[_] if l.dataType == IntegerType && c.dataType == LongType =>
-        Some(l.value.asInstanceOf[Number].longValue())
-      case _ => None
-    }
-    def binary(mk: (String, Any) => Filter, flipped: (String, Any) => Filter): Option[Filter] =
-      p.children() match {
-        case Array(l, r) =>
-          colOf(l).flatMap(c => litOf(r, c).map(mk(c.name, _)))
-            .orElse(colOf(r).flatMap(c => litOf(l, c).map(flipped(c.name, _))))
-        case _ => None
-      }
-    def string(mk: (String, String) => Filter): Option[Filter] = p.children() match {
-      case Array(l, r) => colOf(l).filter(_.dataType == StringType)
-        .flatMap(c => litOf(r, c).map(v => mk(c.name, v.asInstanceOf[String])))
-      case _ => None
-    }
-    def child(i: Int): Option[Filter] =
-      v2ToV1(p.children()(i).asInstanceOf[V2Predicate], lane)
-    def notEq(a: String, v: Any): Filter = Not(EqualTo(a, v))
-    p.name() match {
-      case "AND" => (child(0), child(1)) match {
-        case (Some(l), Some(r)) => Some(And(l, r))
-        case (l, r) if lane.hint => l.orElse(r)
-        case _ => None
-      }
-      case "OR" => child(0).zip(child(1)).map { case (l, r) => Or(l, r) }
-      case "NOT" if !lane.hint => child(0).map(Not)
-      // `<=>` against a non-null literal differs from = only on a NULL
-      // row, which neither selects
-      case "=" | "<=>" => binary(EqualTo, EqualTo)
-      // `<>` over non-nullable columns, and on `_pub_stamp`: evalStamp is
-      // three-valued, so a NULL (unstamped) file is not selected
-      case "<>" if lane == STAMP_LANE || lane.cols.forall(!_.nullable) => binary(notEq, notEq)
-      case ">" => binary(GreaterThan, LessThan)
-      case ">=" => binary(GreaterThanOrEqual, LessThanOrEqual)
-      case "<" => binary(LessThan, GreaterThan)
-      case "<=" => binary(LessThanOrEqual, GreaterThanOrEqual)
-      case "IN" => p.children().toSeq match {
-        case c +: vs => colOf(c).flatMap { f =>
-          val xs = vs.map(litOf(_, f))
-          if (xs.forall(_.isDefined)) Some(In(f.name, xs.flatten.toArray)) else None
-        }
-        case _ => None
-      }
-      case "IS_NULL" => p.children() match {
-        case Array(e) => colOf(e).map(c => IsNull(c.name)); case _ => None
-      }
-      case "IS_NOT_NULL" => p.children() match {
-        case Array(e) => colOf(e).map(c => IsNotNull(c.name)); case _ => None
-      }
-      case "STARTS_WITH" => string(StringStartsWith)
-      case "ENDS_WITH" => string(StringEndsWith)
-      case "CONTAINS" => string(StringContains)
-      case _ => None
-    }
-  }
-
-  /** Does a file with publish stamp `s` (-1 = unstamped, i.e. NULL)
-    * satisfy the pushed stamp predicate? SQL three-valued logic, NULL
-    * collapsed to not-selected at the top — exactly WHERE semantics, so
-    * the file-level claim matches what Spark's row filter would keep. */
-  private[sources] def stampAccepts(f: Filter, s: Long): Boolean =
-    evalStamp(f, s).getOrElse(false)
-  private def evalStamp(f: Filter, s: Long): Option[Boolean] = f match {
-    case IsNull(_) => Some(s < 0)
-    case IsNotNull(_) => Some(s >= 0)
-    case EqualTo(_, v) => if (s < 0) None else Some(s == v.asInstanceOf[Number].longValue())
-    case GreaterThan(_, v) => if (s < 0) None else Some(s > v.asInstanceOf[Number].longValue())
-    case GreaterThanOrEqual(_, v) => if (s < 0) None else Some(s >= v.asInstanceOf[Number].longValue())
-    case LessThan(_, v) => if (s < 0) None else Some(s < v.asInstanceOf[Number].longValue())
-    case LessThanOrEqual(_, v) => if (s < 0) None else Some(s <= v.asInstanceOf[Number].longValue())
-    case In(_, vs) => if (s < 0) None else Some(vs.exists(_.asInstanceOf[Number].longValue() == s))
-    case And(l, r) => (evalStamp(l, s), evalStamp(r, s)) match {
-      case (Some(false), _) | (_, Some(false)) => Some(false)
-      case (Some(true), Some(true)) => Some(true)
-      case _ => None
-    }
-    case Or(l, r) => (evalStamp(l, s), evalStamp(r, s)) match {
-      case (Some(true), _) | (_, Some(true)) => Some(true)
-      case (Some(false), Some(false)) => Some(false)
-      case _ => None
-    }
-    case Not(c) => evalStamp(c, s).map(!_)
-    // the stamp lane builds only these shapes — an unknown one here is a
-    // code bug, and silence would mean wrong pruning
-    case other => throw new IllegalStateException(s"unexpected stamp filter $other")
-  }
-
-  /** Apply pushed stamp predicates to a live-file list (conjuncts all
-    * hold). A plain file is one segment stamped by its name — pruning it
-    * IS the pushed filter, exactly. A compacted file keeps its merged
-    * inputs' ORIGINAL stamps as segments: the file survives if ANY
-    * segment matches, and the cursor then drops the non-matching
-    * segments (byte-skipped wholesale when possible) so the pushed claim
-    * stays exact per ROW — time-travel slices survive compaction. */
-  private[sources] def stampPrune(files: Seq[GraftLiveFile],
-      stampFilters: Array[Filter]): Seq[GraftLiveFile] =
-    if (stampFilters.isEmpty) files
-    else files.filter(_.stampedSegments.exists(seg =>
-      stampFilters.forall(stampAccepts(_, seg.stamp))))
-
-  /** Zone-map file skipping (round 17): drop files whose per-file min/max
-    * stats PROVE a pushed conjunct matches none of their rows. Soundness
-    * direction: a file survives unless some conjunct provably rejects it,
-    * so unknown predicate shapes, unknown columns (strings, added
-    * columns) and stats-less files (pre-r17 manifests, foreign appends)
-    * always survive. PUSHED filters only — runtime filters arrive after
-    * outputPartitioning() is consulted, the same reason bucket pruning
-    * ignores them. */
-  private[sources] def statsPrune(files: Seq[GraftLiveFile],
-      filters: Array[Filter],
-      extra: Array[StructField] = Array.empty): Seq[GraftLiveFile] =
-    if (filters.isEmpty) files
-    else files.filter(f => f.stats.forall(st =>
-      filters.forall(statsAccepts(_, st, extra))))
-
-  /** May any row within `st`'s bounds satisfy `f`? (true = keep file /
-    * unknown; only a provable full-file rejection returns false.) Covers
-    * the fixed numerics (round 17) plus `event_type` string bounds and
-    * ADDED schema-evolution columns (round 18): a range/=/IN conjunct on
-    * those prunes via the Y/W bounds, with SQL null semantics — value
-    * predicates reject null rows anyway, so bounds over the NON-NULL
-    * values prune soundly regardless of how many rows are null, an
-    * all-null (present = 0) column rejects every value predicate, and a
-    * no-nulls (present = n) column rejects IS NULL. */
-  private[sources] def statsAccepts(f: Filter, st: GraftStats,
-      extra: Array[StructField] = Array.empty): Boolean = {
-    def longRange(col: String): Option[(Long, Long)] = col match {
-      case "event_id" => Some((st.eidMin, st.eidMax))
-      case "user_id" => Some((st.uidMin, st.uidMax))
-      case _ => extraOf(col) match {
-        case Some(GraftLongBounds(_, lo, hi)) => Some((lo, hi))
-        case _ => None
-      }
-    }
-    def dblRange(col: String): Option[(Double, Double)] = col match {
-      case "value" => Some((st.valMin, st.valMax))
-      case _ => extraOf(col) match {
-        case Some(GraftDoubleBounds(_, lo, hi)) => Some((lo, hi))
-        case _ => None
-      }
-    }
-    /** Bounds entry of an ADDED column, None = untracked/unknown. */
-    def extraOf(col: String): Option[GraftColBounds] = {
-      val i = extra.indexWhere(_.name == col)
-      if (i < 0) None else st.extras.get(i)
-    }
-    /** String bounds of a column (event_type or a string extra). */
-    def binOf(col: String): Option[(Long, GraftBinBounds)] =
-      if (col == "event_type") st.etype.map(b => (st.n, b))
-      else extraOf(col) match {
-        case Some(GraftStrColBounds(p, b)) => Some((p, b))
-        case _ => None
-      }
-    /** Non-null count of the column, None = unknown. */
-    def presentOf(col: String): Option[Long] =
-      if (ordinal(col) >= 0) Some(st.n) // base columns: non-nullable
-      else extraOf(col).map(_.present)
-    def asLong(v: Any): Option[Long] = v match {
-      case l: Long => Some(l)
-      case i: Int => Some(i.toLong)
-      case s: Short => Some(s.toLong)
-      case b: Byte => Some(b.toLong)
-      case _ => None
-    }
-    def asDouble(v: Any): Option[Double] = v match {
-      case d: Double => Some(d)
-      case f2: Float => Some(f2.toDouble)
-      case _ => None
-    }
-    def asBytes(v: Any): Option[Array[Byte]] = v match {
-      case s: String => Some(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case u: UTF8String => Some(u.getBytes)
-      case _ => None
-    }
-    /** A value predicate on an all-null column matches nothing. */
-    def allNull(col: String): Boolean = presentOf(col).contains(0L)
-    // `nanKeeps` is the verdict for a NaN comparison LITERAL (r18 advice,
-    // low): a file carrying double bounds provably contains NO NaN in
-    // that column (a NaN row poisons `value`'s whole stats record and an
-    // added column's bounds to GraftAbsentBounds), and under Spark's
-    // ordering NaN sorts GREATER than every double — so `col < NaN` /
-    // `col <= NaN` is TRUE for every bounded row (keep the file), while
-    // `col = NaN` / `col > NaN` / `col >= NaN` can only match NaN rows
-    // the file provably lacks (prune it).
-    def cmp(col: String, v: Any, nanKeeps: Boolean = false)(
-        longTest: (Long, Long, Long) => Boolean,
-        dblTest: (Double, Double, Double) => Boolean,
-        binTest: (GraftBinBounds, Array[Byte]) => Boolean): Boolean = {
-      if (allNull(col)) return false
-      longRange(col) match {
-        case Some((lo, hi)) => asLong(v).forall(x => longTest(lo, hi, x))
-        case None => dblRange(col) match {
-          case Some((lo, hi)) =>
-            asDouble(v).forall(x => if (x.isNaN) nanKeeps else dblTest(lo, hi, x))
-          case None => binOf(col) match {
-            case Some((_, b)) => asBytes(v).forall(x => binTest(b, x))
-            case None => true // untracked column: no constraint
-          }
-        }
-      }
-    }
-    def le(a: Array[Byte], b: Array[Byte]): Boolean =
-      java.util.Arrays.compareUnsigned(a, b) <= 0
-    def lt(a: Array[Byte], b: Array[Byte]): Boolean =
-      java.util.Arrays.compareUnsigned(a, b) < 0
-    f match {
-      case EqualTo(c, v) =>
-        cmp(c, v)((lo, hi, x) => x >= lo && x <= hi,
-          (lo, hi, x) => x >= lo && x <= hi,
-          // min is a lower bound, max an upper bound: x must fit both
-          (b, x) => le(b.minBytes, x) && b.maxBytes.forall(m => le(x, m)))
-      case GreaterThan(c, v) =>
-        cmp(c, v)((_, hi, x) => hi > x, (_, hi, x) => hi > x,
-          (b, x) => b.maxBytes.forall(m => lt(x, m)))
-      case GreaterThanOrEqual(c, v) =>
-        cmp(c, v)((_, hi, x) => hi >= x, (_, hi, x) => hi >= x,
-          (b, x) => b.maxBytes.forall(m => le(x, m)))
-      case LessThan(c, v) =>
-        cmp(c, v, nanKeeps = true)((lo, _, x) => lo < x, (lo, _, x) => lo < x,
-          (b, x) => lt(b.minBytes, x))
-      case LessThanOrEqual(c, v) =>
-        cmp(c, v, nanKeeps = true)((lo, _, x) => lo <= x, (lo, _, x) => lo <= x,
-          (b, x) => le(b.minBytes, x))
-      case StringStartsWith(c, p) =>
-        // rows matching the prefix live in [p, upper(p)); disjoint bounds
-        // prove emptiness. The file's max is an UPPER bound and its min a
-        // LOWER bound, so both tests stay conservative.
-        if (allNull(c)) false
-        else binOf(c) match {
-          case Some((_, b)) =>
-            val px = p.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            b.maxBytes.forall(m => le(px, m)) &&
-              GraftBinBounds.upper(px).forall(up => lt(b.minBytes, up))
-          case None => true
-        }
-      case IsNull(c) =>
-        // prunable when the column provably has NO nulls in this file
-        presentOf(c) match {
-          case Some(p) => p < st.n
-          case None => true
-        }
-      case IsNotNull(c) => !allNull(c)
-      case In(c, vs) => vs.exists(v => statsAccepts(EqualTo(c, v), st, extra))
-      case And(l, r) => statsAccepts(l, st, extra) && statsAccepts(r, st, extra)
-      case Or(l, r) => statsAccepts(l, st, extra) || statsAccepts(r, st, extra)
-      // Not and anything else: no file-level claim
-      case _ => true
-    }
-  }
-
-  /** Re-track a raw encoded record's zone-map stats — the upsert
-    * writer's duplicate-drop pass recomputes its file's stats from the
-    * SURVIVING records (round 19): the streaming tracker saw the
-    * superseded rows too, and while superset BOUNDS would stay sound, a
-    * superset row COUNT would corrupt the pushed metadata-aggregate
-    * path. Mirrors the cursor's decode exactly (big-endian, nullable
-    * [present][value] tail). */
-  private[sources] def trackRecordStats(buf: Array[Byte], len: Int,
-      extra: Array[StructField], stats: GraftStatsTracker): Unit = {
-    val bb = java.nio.ByteBuffer.wrap(buf, 0, len)
-    val eid = bb.getLong; val uid = bb.getLong; val v = bb.getDouble
-    stats.add(eid, uid, v)
-    val etLen = bb.getShort
-    val et = new Array[Byte](etLen); bb.get(et)
-    stats.addEtype(et)
-    var i = 0
-    while (i < extra.length && bb.remaining() > 0) {
-      val present = bb.get()
-      if (present != 0) {
-        require(present == 1, "corrupt record tail in upsert rewrite")
-        extra(i).dataType match {
-          case LongType => stats.addExtra(i, Long.box(bb.getLong))
-          case DoubleType => stats.addExtra(i, Double.box(bb.getDouble))
-          case _ =>
-            val l = bb.getShort
-            val b = new Array[Byte](l); bb.get(b)
-            stats.addExtra(i, b)
-        }
-      }
-      i += 1
-    }
-  }
-
-  /** Compiled per-record predicate over the decoded fields. */
-  private[sources] type Pred = (Long, Long, Double, UTF8String) => Boolean
-
-  /** Compile one pushed Filter to a primitive-comparison closure (constants
-    * converted — numeric widening, String -> UTF8String — exactly once).
-    * IN-sets (planning-time IN lists and runtime join filters alike)
-    * compile to a sorted-array binary search for the numeric columns and a
-    * hash set for the string column — O(log n) / O(1) per record, no
-    * boxing in the probe. */
-  private[sources] def compile(f: Filter): Pred = {
-    type Cmp = (Long, Long, Double, UTF8String) => Int
-    def cmp(attr: String, v: Any): Cmp = attr match {
-      case "event_id" =>
-        val x = v.asInstanceOf[Number].longValue()
-        (e, _, _, _) => java.lang.Long.compare(e, x)
-      case "user_id" =>
-        val x = v.asInstanceOf[Number].longValue()
-        (_, u, _, _) => java.lang.Long.compare(u, x)
-      case "value" =>
-        // normalize signed zero on BOTH sides (r13 advice): Double.compare
-        // orders -0.0 below 0.0, but Spark SQL treats them as equal — and
-        // these conjuncts are claimed as EXACTLY pushed (no residual
-        // post-scan Filter), so a stored -0.0 row must match `value = 0.0`
-        // here or nothing re-checks it. IEEE: -0.0 + 0.0 == +0.0, other
-        // values (incl. NaN) unchanged.
-        val x = v.asInstanceOf[Number].doubleValue() + 0.0
-        (_, _, d, _) => java.lang.Double.compare(d + 0.0, x)
-      case "event_type" =>
-        val x = UTF8String.fromString(v.asInstanceOf[String])
-        (_, _, _, t) => t.compareTo(x)
-      case a => throw new IllegalArgumentException(s"unpushable comparison on $a")
-    }
-    def inSet(attr: String, values: Array[Any]): Pred = {
-      // a null in the IN list can never match a row (the format encodes no
-      // nulls, and SQL null-IN semantics resolve to not-matched for
-      // filtering) — drop them before compiling
-      val vs = values.filter(_ != null)
-      attr match {
-        case "event_id" | "user_id" =>
-          val xs = vs.map(_.asInstanceOf[Number].longValue()).sorted
-          if (attr == "event_id") (e, _, _, _) => java.util.Arrays.binarySearch(xs, e) >= 0
-          else (_, u, _, _) => java.util.Arrays.binarySearch(xs, u) >= 0
-        case "value" =>
-          // Double.compare ordering (same as the scalar branch): -0.0
-          // normalized in, NaN sorts last and IS matchable — Spark's
-          // EqualTo/In treat NaN = NaN as true
-          val xs = vs.map(_.asInstanceOf[Number].doubleValue() + 0.0).sorted
-          (_, _, d, _) => java.util.Arrays.binarySearch(xs, d + 0.0) >= 0
-        case "event_type" =>
-          val xs = vs.map(v => UTF8String.fromString(v.asInstanceOf[String])).toSet
-          (_, _, _, t) => xs.contains(t)
-        case a => throw new IllegalArgumentException(s"unpushable IN on $a")
-      }
-    }
-    f match {
-      case EqualTo(a, v) => val c = cmp(a, v); (e, u, d, t) => c(e, u, d, t) == 0
-      case GreaterThan(a, v) => val c = cmp(a, v); (e, u, d, t) => c(e, u, d, t) > 0
-      case GreaterThanOrEqual(a, v) => val c = cmp(a, v); (e, u, d, t) => c(e, u, d, t) >= 0
-      case LessThan(a, v) => val c = cmp(a, v); (e, u, d, t) => c(e, u, d, t) < 0
-      case LessThanOrEqual(a, v) => val c = cmp(a, v); (e, u, d, t) => c(e, u, d, t) <= 0
-      case In(a, vs) => inSet(a, vs)
-      case IsNotNull(_) => (_, _, _, _) => true // format encodes no nulls
-      case IsNull(_) => (_, _, _, _) => false   // dito: can never match
-      // two-valued boolean composition (sound because the format encodes
-      // no nulls — no three-valued-logic corner exists to get wrong);
-      // children compiled once, the per-record path is closure calls only
-      case And(l, r) =>
-        val a = compile(l); val b = compile(r)
-        (e, u, d, t) => a(e, u, d, t) && b(e, u, d, t)
-      case Or(l, r) =>
-        val a = compile(l); val b = compile(r)
-        (e, u, d, t) => a(e, u, d, t) || b(e, u, d, t)
-      case Not(c) =>
-        val a = compile(c)
-        (e, u, d, t) => !a(e, u, d, t)
-      // byte-wise UTF8String match — identical to Spark's binary collation
-      case StringStartsWith(_, v) =>
-        val x = UTF8String.fromString(v); (_, _, _, t) => t.startsWith(x)
-      case StringEndsWith(_, v) =>
-        val x = UTF8String.fromString(v); (_, _, _, t) => t.endsWith(x)
-      case StringContains(_, v) =>
-        val x = UTF8String.fromString(v); (_, _, _, t) => t.contains(x)
-      case other => throw new IllegalArgumentException(s"unexpected pushed filter $other")
-    }
-  }
-
+      updateImages: Boolean = false): DataFrame =
+    GraftLogChanges.readChanges(spark, path, fromStamp, toStamp, extra, updateImages)
+  /** See [[GraftLogPredicates.v2ToV1]]. */
+  private[graft] def v2ToV1(p: V2Predicate,
+      lane: GraftLane = GraftLogPredicates.DATA_LANE): Option[Filter] =
+    GraftLogPredicates.v2ToV1(p, lane)
+  private[sources] val STAMP_LANE: GraftLane = GraftLogPredicates.STAMP_LANE
 }

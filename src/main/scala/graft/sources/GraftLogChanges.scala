@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -15,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * "true").load(path)` delivers the table's typed change feed —
   * `_change_type` ('insert' | 'delete') and `_change_stamp` appended to
   * the table columns — so downstream incremental pipelines consume
-  * corrections natively instead of re-running batch [[GraftLog.readChanges]]
+  * corrections natively instead of re-running batch [[GraftLogChanges.readChanges]]
   * windows.
   *
   * Offsets are SNAPSHOT STAMPS: each micro-batch is the change window
@@ -55,6 +56,490 @@ private[sources] object GraftLogChanges {
     StructType((GraftLog.schema.fields ++ GraftLog.activeExtra(extra)) ++ Seq(
       StructField("_change_type", StringType, nullable = false),
       StructField("_change_stamp", LongType, nullable = true)))
+
+  /** One window commit: stamp, added/removed data files, added/removed
+    * delete files, delta vs base shape, and the all-rows-dead absorb
+    * signature (see [[readChanges]]). */
+  private[sources] final case class GraftChgRec(stamp: Long,
+      added: Vector[GraftLiveFile], removed: Set[String],
+      addedDels: Seq[String], removedDels: Set[String],
+      delta: Boolean, removedAllCovered: Boolean)
+  /** A copy-on-write rewrite inside a change window, derivable as a ROW
+    * DIFF (round 20, r19 verdict #7): the pre-commit view of the removed
+    * files EXCEPT ALL the added files' rows = the rows the rewrite
+    * dropped; the symmetric difference = the rows it introduced (a CoW
+    * UPDATE's new images). Requires the removed files to pre-exist the
+    * window and a retaining landing (the pre-commit snapshot must still
+    * read). */
+  private[sources] final case class GraftCowDiff(preStamp: Long, stamp: Long,
+      removed: Seq[String], added: Seq[String])
+
+  /** A resolved, derivability-checked change window: both boundary
+    * states, the walked commits, the replay re-publication stamps to
+    * exclude from the insert side, the re-published eq-delete names
+    * to skip from collection, and any copy-on-write rewrites derivable
+    * as row diffs. Shared by the batch [[readChanges]] and the
+    * streaming changes source. */
+  private[sources] final case class GraftChangesWindow(
+      stateFrom: GraftSnapshot, stateTo: GraftSnapshot,
+      commits: Seq[GraftChgRec], repubStamps: Set[Long], xedDels: Set[String],
+      cowDiffs: Seq[GraftCowDiff] = Nil)
+
+  /** Resolve and classify the change window [fromStamp, toStamp]; None
+    * when the window spans no commits. Refuses underivable windows
+    * (copy-on-write rewrite, truncate, expire, coalesced segment maps)
+    * loudly — a silently partial changelog is the one wrong answer this
+    * surface must never give. */
+  private[sources] def changesWindow(path: String, fromStamp: Long,
+      toStamp: Long): Option[GraftChangesWindow] = {
+    val ordered = GraftSnapshotIO.refs(GraftFs.listNames(path))
+    require(ordered.nonEmpty,
+      s"no snapshot history in $path (manifest-less landing): table " +
+        "changes need committed snapshots")
+    val heads = ordered.map(GraftSnapshotIO.headOf(path, _))
+    val iFrom = heads.lastIndexWhere(_._1 <= fromStamp)
+    require(iFrom >= 0,
+      s"no snapshot of $path at or before stamp $fromStamp (older than " +
+        "the retained history, or before the table existed)")
+    val iTo = heads.lastIndexWhere(_._1 <= toStamp)
+    if (iTo == iFrom) return None
+    // the walked range must be seq-contiguous — a hole would silently
+    // skip a commit's change, the exact failure resolveAt refuses
+    require(!((iFrom + 1) to iTo).exists(i =>
+        GraftSnapshotIO.seqOf(ordered(i)) != GraftSnapshotIO.seqOf(ordered(i - 1)) + 1),
+      s"manifest chain of $path has a seq hole inside the change window — " +
+        "a link was deleted outside the expire protocol")
+    val stateFrom = GraftSnapshotIO.resolveAsOf(path, fromStamp)
+    // walk the window's commits: per commit (stamp, added files, removed
+    // data names, added delete files, removed delete files); a BASE
+    // manifest in-window (every 16th commit, or an overwrite) yields its
+    // change as a state diff
+    var state = stateFrom
+    val commits = ((iFrom + 1) to iTo).map { i =>
+      GraftSnapshotIO.readBody(path, ordered(i)) match {
+        case GraftSnapshotIO.DeltaBody(st, c) =>
+          // was every removed data file covered, in the PRE-commit
+          // state, by a delete file this commit explicitly retires? —
+          // the all-rows-dead absorb signature only compaction writes
+          val covered = c.removeData.nonEmpty && c.removeData.forall(n =>
+            state.deletesFor(n).exists(d =>
+              c.removeDeletes.contains(GraftFs.nameOf(d))))
+          val rec = GraftChgRec(st, c.addData, c.removeData,
+            c.addDeletes.map(_._1), c.removeDeletes,
+            delta = true, removedAllCovered = covered)
+          state = c.apply(state)._1
+          rec
+        case GraftSnapshotIO.BaseBody(st, s) =>
+          val oldF = state.fileNames
+          val rec = GraftChgRec(st, s.files.filterNot(f => oldF.contains(f.name)),
+            oldF -- s.fileNames,
+            (s.deletes.keySet -- state.deletes.keySet).toSeq.sorted,
+            state.deletes.keySet -- s.deletes.keySet,
+            delta = false, removedAllCovered = false)
+          state = s
+          rec
+      }
+    }
+    // derivability + replay classification (see scaladoc): a commit that
+    // removes data files is a rewrite (all added files carry segment
+    // maps — net zero), a streaming epoch REPLAY (every removed name
+    // shares an added file's epoch marker), or underivable
+    // Re-published pre-window rows are tracked by their PUBLISH stamps,
+    // not file names (round 20, r19 advice): a mid-window compact/cluster
+    // that merges a replay-republished file preserves the replay's
+    // in-window origin stamps in the output's segment map under a NEW
+    // name — a name filter would misreport those pre-window rows as
+    // inserts. One stamp identifies exactly one published file's rows,
+    // and rewrites carry origin stamps forward by contract, so a stamp
+    // exclusion survives any in-window rewrite.
+    val replayRepub = Set.newBuilder[Long]
+    val skippedDels = Set.newBuilder[String] // their re-published eq-dels
+    val cow = Seq.newBuilder[GraftCowDiff]
+    val preStamps = ((iFrom + 1) to iTo).map(i => heads(i - 1)._1)
+    commits.zip(preStamps).foreach { case (c, preStamp) =>
+      // a COALESCED segment map (cluster's max_origins cap) coarsens
+      // `_pub_stamp` upward by construction — an in-window coalesced file
+      // could classify pre-existing rows as inserts, so refuse loudly
+      // (pre-window coalesced files are net-zero: their relabeled stamps
+      // are FROM-snapshot stamps on both sides)
+      c.added.find(_.coalesced).foreach { f =>
+        throw new IllegalArgumentException(
+          s"table changes of $path between $fromStamp and $toStamp are " +
+            s"not derivable: the commit stamped ${c.stamp} added " +
+            s"${f.name} with a COALESCED segment map (cluster " +
+            "max_origins cap) — origin stamps are coarsened; compact " +
+            "before clustering to keep changelog-exact history")
+      }
+      if (c.removed.nonEmpty) {
+        val rewriteLike = c.added.nonEmpty && c.added.forall(_.segs.isDefined)
+        // a DELTA commit that removes ONLY fully-absorbed files (every
+        // removed data file covered by a delete file the same commit
+        // X-retires) is a compaction whose merged outputs were all empty
+        // — net-zero for the changelog, since the killing delete records
+        // were collected when they landed (in-window) or were already
+        // applied in the FROM snapshot (pre-window). A truncate can
+        // never take this shape: it retires deletes via coverage pruning
+        // (no X records) and always lands as a BASE manifest.
+        val absorbLike = c.delta && c.added.isEmpty && c.removedAllCovered
+        if (!rewriteLike && !absorbLike) {
+          val markers = c.added.flatMap(f => GraftLogNames.epochMarkerOf(f.name)).toSet
+          val replayShape =
+            markers.nonEmpty && c.removed.forall(r => markers.exists(r.contains))
+          if (replayShape) {
+            if (c.removed.forall(stateFrom.fileNames.contains)) {
+              // a replayed epoch whose first attempt committed BEFORE the
+              // window: its re-published rows pre-exist (not inserts) and
+              // its re-published eq-del re-states pre-window takedowns
+              c.added.foreach { f =>
+                val st = GraftLogNames.stamp(f.name)
+                require(st >= 0, s"replay re-publication ${f.name} in " +
+                  s"$path is unstamped — epoch publishes are always stamped")
+                replayRepub += st
+              }
+              skippedDels ++= c.addedDels.filter(d => markers.exists(d.contains))
+            }
+          } else {
+            // COPY-ON-WRITE fallback (round 20, r19 verdict #7): a
+            // commit that replaces PRE-WINDOW files with plain fresh
+            // files derives as a ROW DIFF on a retaining landing — the
+            // added files' stamps are excluded from the insert side
+            // (they re-publish surviving rows), and [[readChanges]]
+            // computes removed-EXCEPT-ALL-added as deletes plus the
+            // symmetric difference as inserts (a CoW UPDATE's — or an
+            // overwrite's — new images). Delta vs base manifest shape
+            // does not matter (small tables base-compact eagerly);
+            // SURVIVOR-LESS removals stay refused: with no added files
+            // the shape is indistinguishable from expire, whose
+            // removals are retention, not logical deletes.
+            val cowShape = c.added.nonEmpty &&
+              c.added.forall(_.segs.isEmpty) &&
+              c.removed.forall(stateFrom.fileNames.contains)
+            require(cowShape,
+              s"table changes of $path between $fromStamp and $toStamp are " +
+                s"not derivable: the commit stamped ${c.stamp} removed data " +
+                "files outside a rewrite/replay/copy-on-write-diff shape " +
+                "(truncate and expire record no row identities, and a " +
+                "survivor-less or in-window copy-on-write rewrite is " +
+                "indistinguishable from them); changelog-readable history " +
+                "wants merge-on-read modes and the streaming upsert sink")
+            c.added.foreach { f =>
+              val st = GraftLogNames.stamp(f.name)
+              require(st >= 0, s"copy-on-write survivor ${f.name} in " +
+                s"$path is unstamped — batch publishes are always stamped")
+              replayRepub += st
+            }
+            cow += GraftCowDiff(preStamp, c.stamp,
+              c.removed.toSeq.sorted, c.added.map(_.name))
+          }
+        }
+      }
+    }
+    Some(GraftChangesWindow(stateFrom, state, commits,
+      replayRepub.result(), skippedDels.result(), cow.result()))
+  }
+
+  /** NET row-level changes of a landing between the snapshot current AS
+    * OF `fromStamp` and the one current AS OF `toStamp` — Delta's change
+    * data feed / Iceberg's changelog scan, derived entirely from what
+    * the manifest chain already stores. Returns the table columns plus
+    * `_change_type` ('insert' | 'delete') and `_change_stamp` (the
+    * inserting origin's publish stamp / the killing commit's stamp). An
+    * upsert is its two halves: the replaced row as a delete, the
+    * replacement as an insert — exactly what a downstream incremental
+    * aggregate needs to stay equal to the full recompute.
+    *
+    * NET means squashed between the two snapshots: a row born and killed
+    * inside the window appears on neither side. Semantics per change
+    * source, each stated:
+    *  - appends / streaming (upsert) epochs: inserts are rows whose
+    *    ORIGIN publish stamp did not exist in the FROM snapshot — exact
+    *    across compaction/clustering, whose segment maps preserve
+    *    origins, so a mid-window rewrite contributes NOTHING;
+    *  - equality deletes (the upsert sink): the FROM-snapshot rows
+    *    matching the window's deleted keys are the delete side;
+    *  - position deletes (merge-on-read DELETE/UPDATE): the FROM-snapshot
+    *    rows at the deleted (file, ordinal) identities;
+    *  - copy-on-write rewrites, truncate, and expire REFUSE loudly: they
+    *    remove rows without recording which — deriving their changes
+    *    would require diffing row content, and a silently-partial
+    *    changelog is the one wrong answer this surface must never give.
+    *    Changelog-readable history wants merge-on-read modes + the
+    *    streaming upsert sink, which CDC workloads use anyway.
+    *
+    * The window is resolved against RETAINED snapshots (`resolveAsOf`
+    * ceilings), so the natural host is a `snapshot.retain = true` table;
+    * on a non-retaining landing a historical file may already be
+    * unlinked and the read fails loudly, never wrong. Driver cost is
+    * O(manifests + delete records in the window) metadata; the row work
+    * is two distributed scans (FROM keyed/position-filtered, TO
+    * stamp-filtered with zone/stamp file pruning). Unstamped foreign
+    * files have no timeline position and are invisible to both sides,
+    * matching resolveAsOf. */
+  def readChanges(spark: SparkSession, path: String, fromStamp: Long,
+      toStamp: Long, extra: Array[StructField], updateImages: Boolean): DataFrame = {
+    require(fromStamp >= 0, s"readChanges fromStamp must be >= 0, got $fromStamp")
+    require(toStamp >= fromStamp,
+      s"readChanges window is [from, to]: $fromStamp > $toStamp")
+    import org.apache.spark.sql.functions.{broadcast, col, input_file_name,
+      lit, min, row_number, substring_index, when}
+    val schemaAll = StructType((GraftLog.schema.fields ++ GraftLog.activeExtra(extra)) ++ Seq(
+      StructField("_change_type", StringType, nullable = false),
+      StructField("_change_stamp", LongType, nullable = true)))
+    val win = changesWindow(path, fromStamp, toStamp) match {
+      case None =>
+        return spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaAll)
+      case Some(w) => w
+    }
+    val stateFrom = win.stateFrom
+    val state = win.stateTo
+    val commits = win.commits
+    // collect the window's delete records. A delete file the window
+    // itself later retires still CONTRIBUTED its changes when it landed —
+    // a mid-window compaction absorbs an eq-delete physically, but the
+    // keyed takedown happened — so retirement never erases collection
+    // (the retaining table keeps the bytes readable). The only skips are
+    // the pre-window replay re-publications classified above (their keys
+    // re-state takedowns already applied in the FROM snapshot), and a
+    // replay's within-window X-retired first attempt is harmless to keep:
+    // its replacement carries the same keys and the first-stamp maps
+    // dedup them.
+    val xed = win.xedDels
+    // The window's delete records are collected DISTRIBUTED (round 20,
+    // r19 verdict hardening): the delete files are read as datasets and
+    // reduced to (key -> first kill stamp) with a group-by, so driver
+    // memory stays O(delete files + bounded pushdown sample) — a window
+    // spanning a mass takedown no longer builds O(deleted keys) driver
+    // maps. Commit stamps increase with manifest order, so min(stamp)
+    // IS the first kill. Only each file's one-line header (its kind) is
+    // read driver-side. Each line decodes through GraftDeletes, the
+    // writer's own codec, on the executors.
+    import spark.implicits._
+    // kind = the eq header's key ordinals, None for position-delete
+    // files (no header — every line is a record)
+    val delMeta: Seq[(String, Long, Option[Seq[Int]])] = commits.flatMap { c =>
+      c.addedDels.filterNot(xed.contains).map { d =>
+        (d, c.stamp,
+          GraftDeletes.headerOrds(GraftFs.readHeadLine(GraftFs.child(path, d))))
+      }
+    }
+    /** Record lines of the `kind` delete files, each with its file's path
+      * and its commit's stamp (joined by file name, via a broadcast of the
+      * O(files) name->stamp map). For eq kinds the header line is dropped;
+      * a header can never equal a record line. */
+    def delLines(kind: Option[Seq[Int]]): Dataset[(String, String, Long)] = {
+      val files = delMeta.filter(_._3 == kind)
+      val stampByName = files.map { case (n, st, _) => (n, st) }.toDF("_dn", "_cs")
+      spark.read.textFile(files.map(f => GraftFs.child(path, f._1)): _*)
+        .select(col("value").as("_line"),
+          substring_index(input_file_name(), "/", -1).as("_dn"))
+        .filter(col("_line") =!= lit("") &&
+          kind.fold(lit(true))(k => col("_line") =!= lit(GraftDeletes.header(k))))
+        .join(broadcast(stampByName), "_dn")
+        .select(col("_line"), col("_dn"), col("_cs")).as[(String, String, Long)]
+    }
+    val posRec = delMeta.find(_._3.isEmpty).map { _ =>
+      delLines(None).map { case (line, dn, st) =>
+        val (f, p) = GraftDeletes.decPos(line, GraftFs.child(path, dn))
+        (f, p, st)
+      }.toDF("_cf", "_cp", "_cs")
+        .groupBy("_cf", "_cp").agg(min("_cs").as("_cs"))
+    }
+    // per eq kind (one column or a composite list): the typed key
+    // components — null outside the key — reduced to first-kill stamps
+    val compColOf = Map(0 -> "_ce", 1 -> "_cu", 3 -> "_cy")
+    val keyDfs: Seq[(Seq[Int], DataFrame)] = delMeta.flatMap(_._3).distinct.map { ords =>
+      val keysDf = delLines(Some(ords)).map { case (line, dn, st) =>
+        val (e, u, t) = GraftDeletes.decKey(line, ords, GraftFs.child(path, dn))
+        (Option.when(ords.contains(0))(e), Option.when(ords.contains(1))(u),
+          Option(t).map(_.toString), st)
+      }.toDF("_ce", "_cu", "_cy", "_cs")
+      (ords, keysDf.groupBy(ords.map(o => col(compColOf(o))): _*)
+        .agg(min("_cs").as("_cs")))
+    }
+    val tableCols = (GraftLog.schema.fields ++ GraftLog.activeExtra(extra)).map(f => col(f.name))
+    def reader = {
+      val r = spark.read.format("graftlog")
+      if (extra.nonEmpty) r.option("evolvedSchema", GraftLog.encodeExtraSchema(extra))
+      r
+    }
+    // INSERT side: rows of the TO snapshot whose origin stamp the FROM
+    // snapshot never held. Stamps are (practically) monotone with commit
+    // order, so `> max(from origins)` prunes files via the pushed stamp
+    // lane; the rare concurrent-committer straggler (an in-window origin
+    // stamped below a FROM origin) rides an exact small IN-list instead
+    // of an O(live files) literal list.
+    val fromStamps = stateFrom.files
+      .flatMap(_.stampedSegments.map(_.stamp)).filter(_ >= 0).toSet
+    val toStamps = state.files
+      .flatMap(_.stampedSegments.map(_.stamp)).filter(_ >= 0).toSet
+    val maxFrom = if (fromStamps.isEmpty) -1L else fromStamps.max
+    val lowNew = (toStamps -- fromStamps).filter(_ <= maxFrom).toSeq.sorted
+    val insBase = lit(false) || col("_pub_stamp") > lit(maxFrom)
+    val insPred =
+      if (lowNew.isEmpty) insBase
+      else insBase || col("_pub_stamp").isin(lowNew: _*)
+    val repub = win.repubStamps
+    val toDf = reader.option("asOfStamp", toStamp).load(path)
+    val inserts0 = toDf.filter(col("_pub_stamp").isNotNull && insPred)
+    val inserts = (if (repub.isEmpty) inserts0
+      else inserts0.filter(!col("_pub_stamp").isin(repub.toSeq.sorted: _*)))
+      .select((tableCols :+ lit("insert").as("_change_type")
+        :+ col("_pub_stamp").as("_change_stamp")).toIndexedSeq: _*)
+    // DELETE side: FROM-snapshot rows matching the window's deleted keys
+    // or deleted (file, ordinal) identities. A SMALL key set (the common
+    // correction wave) is probed with a bounded limit-collect and still
+    // rides an exact pushed IN-list + broadcast stamp join — the same
+    // plan as before; a mass takedown skips the pushdown and joins
+    // distributed (AQE picks broadcast vs shuffle from the actual size),
+    // so no O(keys) ever lands on the driver.
+    val fromDf = reader.option("asOfStamp", fromStamp).load(path)
+    val withIdent = tableCols ++ Seq(col("_file"), col("_pos"), col("_cs"))
+    // (key columns, FROM rows it deletes) per eq kind — single-column
+    // kinds and composite kinds share the shape; pos rows are keyless
+    // the bounded probe's sample doubles as the SMALL-case key relation
+    // (round-20 review): ≤1000 keys — the common correction wave — join
+    // a local broadcast built from the already-collected rows instead of
+    // re-running the distributed key aggregation a second time
+    def localDf(rows: Array[org.apache.spark.sql.Row],
+        schema: StructType): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val eqKinds = keyDfs.map { case (ords, keysDf) =>
+      val cond = ords.map(o =>
+        col(GraftLog.colName(o)) === col(compColOf(o))).reduce(_ && _)
+      // the bounded pushdown probe narrows on the FIRST component
+      val sample = keysDf.limit(1001).collect()
+      val (pre, right) =
+        if (sample.length <= 1000)
+          (fromDf.filter(col(GraftLog.colName(ords.head)).isin(
+            sample.map(_.getAs[Any](compColOf(ords.head))).toIndexedSeq: _*)),
+            broadcast(localDf(sample, keysDf.schema)))
+        else (fromDf, keysDf)
+      (ords.map(GraftLog.colName), pre.join(right, cond)
+        .drop("_ce", "_cu", "_cy").select(withIdent.toIndexedSeq: _*))
+    }
+    val posBranch = posRec.map { posDf =>
+      // size probe by COUNT of the limited subquery — no row payload
+      // ships to the driver just to be measured (round-20 review)
+      val small = posDf.limit(100001).count() <= 100000
+      fromDf.join(if (small) broadcast(posDf) else posDf,
+          substring_index(col("_file"), "/", -1) === col("_cf") &&
+            col("_pos") === col("_cp"))
+        .select(withIdent.toIndexedSeq: _*)
+    }
+    // UPDATE images (round 20, r19 verdict missing #1): with
+    // `updateImages` on, a keyed correction is typed as its two halves —
+    // the FROM row `update_preimage`, the TO row `update_postimage` —
+    // while a key deleted without replacement stays `delete` and a key
+    // inserted without a prior row stays `insert`. Classification is a
+    // pair of O(changes)-keyed joins per kind: a delete row is a
+    // preimage iff its key reappears on the insert side; an insert row
+    // is a postimage iff its key had a FROM-side row (the delete branch
+    // for that kind). Incremental MERGE consumers read the typed feed
+    // directly; an aggregate maintained from it equals full recompute.
+    val insertsTyped =
+      if (!updateImages || eqKinds.isEmpty) inserts
+      else {
+        var df = inserts
+        var isUpd = lit(false)
+        val dropCols = Seq.newBuilder[String]
+        eqKinds.zipWithIndex.foreach { case ((kcs, delRows), i) =>
+          val preKeys = delRows.select(kcs.zipWithIndex.map {
+            case (kc, j) => col(kc).as(s"_uk${i}_$j")
+          }.toIndexedSeq: _*).distinct()
+          val cond = kcs.zipWithIndex.map { case (kc, j) =>
+            col(kc) === col(s"_uk${i}_$j")
+          }.reduce(_ && _)
+          df = df.join(preKeys, cond, "left")
+          isUpd = isUpd || col(s"_uk${i}_0").isNotNull
+          dropCols ++= kcs.indices.map(j => s"_uk${i}_$j")
+        }
+        df.withColumn("_change_type",
+            when(isUpd, lit("update_postimage")).otherwise(lit("insert")))
+          .drop(dropCols.result(): _*)
+      }
+    val typedEq =
+      if (!updateImages) eqKinds.map { case (_, rows) =>
+        rows.withColumn("_ct", lit("delete"))
+      }
+      else eqKinds.map { case (kcs, rows) =>
+        val insKeys = inserts.select(kcs.zipWithIndex.map {
+          case (kc, j) => col(kc).as(s"_ik$j")
+        }.toIndexedSeq: _*).distinct()
+        val cond = kcs.zipWithIndex.map { case (kc, j) =>
+          col(kc) === col(s"_ik$j")
+        }.reduce(_ && _)
+        rows.join(insKeys, cond, "left")
+          .withColumn("_ct", when(col("_ik0").isNotNull,
+            lit("update_preimage")).otherwise(lit("delete")))
+          .drop(kcs.indices.map(j => s"_ik$j"): _*)
+      }
+    val branches = typedEq ++ posBranch.map(_.withColumn("_ct", lit("delete")))
+    val deletes = branches.reduceOption(_ unionByName _) match {
+      case None => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaAll)
+      case Some(d) =>
+        // a row killed by MULTIPLE kinds in one window is ONE delete:
+        // (_file, _pos) is its identity, and the surviving row is
+        // DETERMINISTIC (round-20 review): the update label wins the
+        // tie (lexically greatest _ct) and the MINIMUM kill stamp wins
+        // among equals — the same min-across-kinds the streaming
+        // changes reader computes, so drain == batch holds on
+        // multi-kind windows too (dropDuplicates keeps an arbitrary
+        // branch row, which made _change_stamp shuffle-dependent).
+        val one =
+          if (branches.lengthIs == 1) d.dropDuplicates("_file", "_pos")
+          else {
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy("_file", "_pos")
+              .orderBy(col("_ct").desc, col("_cs"))
+            d.withColumn("_rn", row_number().over(w))
+              .filter(col("_rn") === 1).drop("_rn")
+          }
+        one.select((tableCols :+ col("_ct").as("_change_type")
+          :+ col("_cs").as("_change_stamp")).toIndexedSeq: _*)
+    }
+    // COPY-ON-WRITE row diffs (round 20, r19 verdict #7; NET-corrected
+    // by the round-20 review): per CoW commit, the pre-commit view of
+    // the removed files EXCEPT ALL the survivor files' rows AS OF THE
+    // WINDOW END = the rows the window net-dropped through the rewrite;
+    // the symmetric difference = the rows it net-introduced (a CoW
+    // UPDATE's new images, typed insert — content diffs carry no key
+    // contract, so they never type as update images). Slicing the
+    // survivor side at TO (not at the CoW commit) applies any LATER
+    // in-window MoR kills to the rewrite's own rows, so a row the CoW
+    // introduced and a later epoch replaced is in neither side; and a
+    // pre-image whose key the window ALSO eq-deleted is anti-joined out
+    // (the eq branch already reports that row — reporting it twice
+    // would double a consumer's decrement). The pre-commit read applies
+    // that state's own MoR drop sets, so a row already dead before the
+    // rewrite is in neither side; multiset EXCEPT ALL keeps
+    // duplicate-row counts exact.
+    val cowBranches = win.cowDiffs.flatMap { d =>
+      def slice(stamp: Long, names: Seq[String]) =
+        reader.option("asOfStamp", stamp).load(path)
+          .filter(substring_index(col("_file"), "/", -1)
+            .isin(names.toIndexedSeq: _*))
+          .select(tableCols.toIndexedSeq: _*)
+      val oldRows = slice(d.preStamp, d.removed)
+      val newRows = slice(toStamp, d.added)
+      val killKeySpecs = keyDfs.map { case (ords, kdf) =>
+        (kdf.select(ords.map(o => col(compColOf(o)).as(s"_kk$o")).toIndexedSeq: _*),
+          ords.map(o => col(GraftLog.colName(o)) === col(s"_kk$o")).reduce(_ && _))
+      }
+      val cowDel = killKeySpecs.foldLeft(oldRows.exceptAll(newRows)) {
+        case (df, (kdf, cond)) => df.join(kdf, cond, "left_anti")
+      }
+      Seq(
+        cowDel
+          .withColumn("_change_type", lit("delete"))
+          .withColumn("_change_stamp", lit(d.stamp)),
+        newRows.exceptAll(oldRows)
+          .withColumn("_change_type", lit("insert"))
+          .withColumn("_change_stamp", lit(d.stamp)))
+    }
+    cowBranches.foldLeft(insertsTyped.unionByName(deletes))(_ unionByName _)
+  }
 }
 
 private[sources] class GraftLogChangesTable(path: String,
@@ -143,7 +628,7 @@ private[sources] class GraftLogChangesStream(path: String,
     val a = start.asInstanceOf[GraftLogChangesOffset].stamp
     val b = end.asInstanceOf[GraftLogChangesOffset].stamp
     if (b <= a) return Array.empty
-    val win = GraftLog.changesWindow(path, a, b) match {
+    val win = GraftLogChanges.changesWindow(path, a, b) match {
       case None => return Array.empty
       case Some(w) => w
     }

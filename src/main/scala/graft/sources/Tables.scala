@@ -174,10 +174,16 @@ object Tables {
     // The peek costs a driver-side listing and one footer read per file,
     // and a fixture dir's physical layout cannot change within a session,
     // so the physical ts type is a staged input: paid once, not once per
-    // streaming query execution.
+    // streaming query execution. The peek reads the glob's matches as
+    // literal paths: a batch read of the glob itself makes Spark look for
+    // a sink metadata directory under the literal glob name, which fails
+    // and logs a FileNotFoundException warning on every peek.
     val glob = s"$sfDir/events.parqu*"
     val physicalTs = graft.Scratch.staged(spark, sfDir, "events_stream_ts") {
-      val peek = spark.read.parquet(glob)
+      val matched = GraftFs.listNames(sfDir).filter(_.startsWith("events.parqu"))
+        .sorted.map(GraftFs.child(sfDir, _))
+      require(matched.nonEmpty, s"events stream glob $glob matches no files")
+      val peek = spark.read.parquet(matched.toIndexedSeq: _*)
       val top = peek.schema("ts").dataType
       val perFile = peek.inputFiles.toSeq
         .map(p => spark.read.parquet(p).schema("ts").dataType).distinct

@@ -219,6 +219,22 @@ class ContractSpec extends SparkTestBase {
     assert(hits.isEmpty, s"eq-delete codec named outside GraftDeletes:\n${hits.mkString("\n")}")
   }
 
+  test("one file per concern: no src/main test hook, no sources/ file over 1,200 lines") {
+    // graftlog is split along its seams (table, write, scan, stream,
+    // readers, codec, predicates, maintenance, changelog, snapshots,
+    // branches, stats); a file that grows past the bound has taken on a
+    // second concern. Spec hooks live under src/test.
+    val hooks = scalaFiles().filter(f => new String(java.nio.file.Files.readAllBytes(f),
+      java.nio.charset.StandardCharsets.UTF_8).contains("TestHook"))
+    assert(hooks.isEmpty, s"src/main files naming a test hook:\n${hooks.mkString("\n")}")
+    val sources = scalaFiles().filter(_.toString.contains("src/main/scala/graft/sources/"))
+    assert(sources.size >= 10, s"scanned ${sources.size} sources/ files; the scan is broken")
+    val long = sources.map(f => (f, java.nio.file.Files.readAllLines(f).size))
+      .filter(_._2 > 1200)
+    assert(long.isEmpty,
+      s"sources/ files over 1,200 lines:\n${long.map { case (f, n) => s"$f: $n" }.mkString("\n")}")
+  }
+
   test("one measured run: only Bench.scala builds a StageLog or registers a listener") {
     // Bench.measure owns the one stage log of every timed run: it
     // registers it, drains the bus after the clock stops and removes it

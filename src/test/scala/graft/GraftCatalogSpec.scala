@@ -1949,4 +1949,23 @@ class GraftCatalogSpec extends SparkTestBase with BeforeAndAfterAll {
       new java.io.File(spark.conf.get("spark.sql.catalog.graft.warehouse"),
         "tag_t").getPath))
   }
+
+  test("procedure table: every listed CALL name loads under that name; an unknown name lists exactly that set") {
+    import org.apache.spark.sql.connector.catalog.{Identifier, ProcedureCatalog}
+    val cat = spark.sessionState.catalogManager.catalog("graft")
+      .asInstanceOf[ProcedureCatalog]
+    val ns = Array("system")
+    val names = cat.listProcedures(ns).map(_.name()).toSeq
+    assert(names.size == 11 && names.distinct == names, s"listed ${names.mkString(", ")}")
+    names.foreach { n =>
+      val p = cat.loadProcedure(Identifier.of(ns, n))
+      assert(p.name() == n, s"'$n' loads a procedure named '${p.name()}'")
+      assert(p.description().nonEmpty, s"'$n' has no description")
+    }
+    val err = intercept[IllegalArgumentException](
+      cat.loadProcedure(Identifier.of(ns, "no_such_procedure")))
+    val available = """available: ([^)]*)\)""".r.findFirstMatchIn(err.getMessage)
+      .map(_.group(1).split(", ").toSeq)
+    assert(available.contains(names), s"unknown-name error: ${err.getMessage}")
+  }
 }

@@ -535,12 +535,18 @@ class PlanShapeSpec extends SparkTestBase {
     // Columnar read path (round 15, r14 verdict top item): the plain scan
     // mode decodes into reused 4K-row ColumnarBatches, so the executed
     // plan must carry a (codegen'd) ColumnarToRow above the BatchScan —
-    // the same shape parquet scans plan. The pushed-TopN scan emits O(k)
-    // rows per file and deliberately stays row-at-a-time: no ColumnarToRow.
+    // the same shape parquet scans plan. The pushed-offset scan is one
+    // plain chain that skips its prefix, so it reads columnar too. The
+    // pushed-TopN scan emits O(k) rows per file and deliberately stays
+    // row-at-a-time: no ColumnarToRow.
     val plain = executedPlan(graft.operators.StorageOps.dsv2Pushdown(spark, sfDir))
     assert(plain.contains("GraftLogScan"), s"no GraftLogScan in:\n$plain")
     assert(plain.contains("ColumnarToRow"),
       s"plain graftlog scan is not feeding codegen columnar:\n$plain")
+    val offset = executedPlan(graft.operators.StorageOps.dsv2Offset(spark, sfDir))
+    assert(offset.contains("offset=40"), s"offset not pushed into the scan:\n$offset")
+    assert(offset.contains("ColumnarToRow"),
+      s"pushed-offset graftlog scan is not feeding codegen columnar:\n$offset")
     val topn = executedPlan(graft.operators.StorageOps.dsv2TopN(spark, sfDir))
     assert(topn.contains("GraftLogScan"), s"no GraftLogScan in:\n$topn")
     assert(!topn.contains("ColumnarToRow"),
