@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.Query
 
 object Bench {
 
@@ -66,8 +67,7 @@ object Bench {
   /** Every query Bench can time: the registry plus the bench-only sketch
     * variants, which measure the sketch-path plan shape that the
     * oracle-checkable registered forms no longer exercise. */
-  val benchable: Map[String, (SparkSession, String) => DataFrame] =
-    SparkEntry.queries ++ BenchOnly.queries
+  val benchable: Map[String, Query] = SparkEntry.queries ++ BenchOnly.queries
 
   /** The positional basis of the q_cs tail line: benchable registry names
     * in ascending order. ContractSpec pins the artifact contract against
@@ -207,8 +207,9 @@ object Bench {
 
   /** Mutable per-query record; retry runs at session end append to the
     * same arrays, so the artifact keeps every sample (a storm run stays
-    * visible even after a clean retry replaces it as the best). */
-  private final class Rec(val warm: Run) {
+    * visible even after a clean retry replaces it as the best). `setupS`
+    * is the wall of the query's `prepare`, -1 if it threw. */
+  private final class Rec(val setupS: Double, val warm: Run) {
     val runs = scala.collection.mutable.ArrayBuffer.empty[Run]
     /** Wall per timed run, -1 for a run that threw. */
     def wall: Seq[Double] = runs.map(r => if (r.error.isEmpty) r.wallS else -1.0).toSeq
@@ -248,7 +249,8 @@ object Bench {
       if (args.isEmpty) benchable.keys.toSeq
       else benchable.keys.filter(args.toSet).toSeq
     // Steady-state measurement: each run is one `measure` of the query's
-    // whole plan. Run each query once untimed (pays one-off
+    // `run`, the whole plan. First its `prepare` stages its inputs, timed
+    // once as setup_s. Then each query runs once untimed (pays one-off
     // whole-stage-codegen compilation + file listing, both cached by Spark),
     // then time TIMED_RUNS further executions and report the MIN — the
     // figure that scales with data volume rather than with plan complexity
@@ -284,7 +286,7 @@ object Bench {
     def timedRun(name: String, rec: Rec): Unit = {
       rec.memMb += memAvailableMb
       rec.psi += memPsiSome10
-      rec.runs += measure(spark)(benchable(name)(spark, sfDir))
+      rec.runs += measure(spark)(benchable(name).run(spark, sfDir))
     }
 
     def stormSuspect(name: String, rec: Rec): Boolean =
@@ -292,7 +294,14 @@ object Bench {
 
     val deferred = scala.collection.mutable.ArrayBuffer.empty[String]
     selected.foreach { name =>
-      val rec = new Rec(measure(spark)(benchable(name)(spark, sfDir)))
+      // setup: the query's declared staging, once, before the warm run; a
+      // prepare that throws records -1 and its run re-raises the error
+      val q = benchable(name)
+      val t0 = System.nanoTime()
+      val setupS =
+        try { q.prepare(spark, sfDir); (System.nanoTime() - t0) / 1e9 }
+        catch { case _: Throwable => -1.0 }
+      val rec = new Rec(setupS, measure(spark)(q.run(spark, sfDir)))
       recs(name) = rec
       // JIT-drain barrier (round 11): the warm pass queues C2 compilation
       // of the plan's freshly generated classes, and a first timed run
@@ -378,6 +387,7 @@ object Bench {
     val js = perRun(_.jitMs)
     val ns = perRun(_.codegenN)
     val wn = jmap { case (_, r) => r.warm.codegenN.toString }
+    val su = jmap { case (_, r) => fmt(r.setupS) }
     val ws = jmap { case (_, r) => fmt(r.warm.wallS) }
     val wc = jmap { case (_, r) => fmt(r.warm.cpuS) }
     val hm = jmap { case (_, r) => r.memMb.mkString("[", ",", "]") }
@@ -415,7 +425,7 @@ object Bench {
         "a full run. A subset reads slower than the same query inside a larger run, so " +
         "compare subset with subset only")
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"runs":$rs,"gc_ms":$gs,"cpu_s":$cs,"stages":$ss,"spill_mb":$ps,"jit_ms":$js,"codegen_n":$ns,"warm_s":$ws,"warm_cpu_s":$wc,"codegen_warm_n":$wn,"host_mem_mb":$hm,"psi_some10":$hp,"deferred":$defJson,"storm_suspect":$suspectJson,"retry_failed":$retryFailJson,"reference_n":${reference.size},"session_drift":${fmt(drift)},"drift_n":$driftN,"drift_outliers":${outliers.map("\"" + _ + "\"").mkString("[", ",", "]")},"ref_stale":${stale.map("\"" + _ + "\"").mkString("[", ",", "]")},"written_at_ms":${System.currentTimeMillis()},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"runs":$rs,"gc_ms":$gs,"cpu_s":$cs,"stages":$ss,"spill_mb":$ps,"jit_ms":$js,"codegen_n":$ns,"setup_s":$su,"warm_s":$ws,"warm_cpu_s":$wc,"codegen_warm_n":$wn,"host_mem_mb":$hm,"psi_some10":$hp,"deferred":$defJson,"storm_suspect":$suspectJson,"retry_failed":$retryFailJson,"reference_n":${reference.size},"session_drift":${fmt(drift)},"drift_n":$driftN,"drift_outliers":${outliers.map("\"" + _ + "\"").mkString("[", ",", "]")},"ref_stale":${stale.map("\"" + _ + "\"").mkString("[", ",", "]")},"written_at_ms":${System.currentTimeMillis()},"sf":"$sfDir"}"""
     println(full)
     // Self-contained artifact: the full per-query JSON also lands in
     // bench_out.json next to the repo, so post-hoc analysis never depends

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.{Query, VectorOps}
 import graft.sources.Tables
 
 /** Bench-only sketch queries (NOT registered in SparkEntry — no oracle).
@@ -34,11 +35,15 @@ object BenchOnly {
         expr("approx_percentile(o_totalprice, 0.9, 1000)").as("a90"))
       .orderBy(col("c_mktsegment"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "bench_approx_distinct_sketch" -> (approxDistinctSketch _),
-    "bench_approx_percentile_sketch" -> (approxPercentileSketch _),
+  /** No oracle: these values are never registered in SparkEntry, and
+    * Bench reads only `prepare` and `run`. */
+  val queries: Map[String, Query] = Map(
+    "bench_approx_distinct_sketch" -> Query(approxDistinctSketch _, ""),
+    "bench_approx_percentile_sketch" -> Query(approxPercentileSketch _, ""),
     // PQ search with pre-trained codebooks: emb_pq_topk's bench time
     // includes the two training scans; this is the steady-state search
-    // cost alone (result-identical to emb_pq_topk — same codebooks)
-    "bench_pq_search_only" -> (graft.operators.VectorOps.pqTopKSearchOnly _))
+    // cost alone (result-identical to emb_pq_topk — same codebooks),
+    // with the training declared as the staging
+    "bench_pq_search_only" -> Query(VectorOps.pqTopKSearchOnly _, "",
+      VectorOps.pqCodebooks _))
 }

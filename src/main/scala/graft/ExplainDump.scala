@@ -7,10 +7,11 @@ package graft
   *
   * {{{ sbt "runMain graft.ExplainDump r21 before dedup_pagerank profile_lineitem" }}}
   *
-  * Note for queries whose construction runs eager jobs (iterative loops,
-  * PQ training collects, DSv2 fixture builds): the formatted plan shows the
-  * FINAL declared DataFrame only; the eager prefix is visible in the bench
-  * telemetry (stages per run) instead.
+  * Calling a query runs its `prepare`, which stages its inputs, before
+  * its `run` builds the plan. For queries whose construction runs eager
+  * jobs (iterative loops, PQ training collects), the formatted plan shows
+  * the FINAL declared DataFrame only; the eager prefix is visible in the
+  * bench telemetry (stages per run) instead.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {

@@ -31,6 +31,11 @@ import org.apache.spark.sql.SparkSession
   *    its input (DELETE/UPDATE/MERGE, compact, cluster, expire) reads a
   *    [[fresh]] copy, never the staged directory.
   * [[purge]] clears the memo together with the dirs its values point at.
+  *
+  * A registered query declares its staging: its
+  * [[graft.operators.Query]]'s `prepare` calls the same staged/fresh
+  * helper its `run` calls, so Bench can time the staging apart from the
+  * measured runs, and every later `run` gets a memo hit.
   */
 object Scratch {
 
@@ -89,31 +94,36 @@ object Scratch {
     * runs when the cell is forced, outside the map's bin lock, so a build
     * may stage other inputs, and concurrent callers for one key wait on
     * the cell and see a single build. A build that throws leaves the cell
-    * empty, and the next call retries it. */
-  private final class Input(build: () => AnyRef) {
+    * empty, and the next call retries it. Every access reports to
+    * [[onAccess]]; the access that built the value reports under the
+    * cell's lock, before any caller reads it. */
+  private final class Input(tag: String, build: () => AnyRef) {
     @volatile private var value: AnyRef = _
     def get: AnyRef = {
-      if (value == null) synchronized {
-        if (value == null) {
+      val built = value == null && synchronized {
+        value == null && {
           value = build()
-          onBuilt(value)
+          onAccess(tag, value, true)
+          true
         }
       }
+      if (!built) onAccess(tag, value, false)
       value
     }
   }
 
-  /** Observer of each staged value right after its build, before any
-    * query reads it — specs fingerprint the pristine staged directories
-    * here. */
-  @volatile private[graft] var onBuilt: AnyRef => Unit = _ => ()
+  /** Observer of every staged-input access: the tag, the value and
+    * whether this access built it. Specs record here which inputs a
+    * query's construction touches, and fingerprint each pristine staged
+    * directory at its build. */
+  @volatile private[graft] var onAccess: (String, AnyRef, Boolean) => Unit = (_, _, _) => ()
 
   /** The staged input `tag` of sfDir `dir`: built by `build` on the
     * session's first call, returned as is on every later call until
     * [[purge]]. See the object doc for what may be staged. */
   def staged[A <: AnyRef](s: SparkSession, dir: String, tag: String)(build: => A): A =
     inputs.computeIfAbsent(s.sparkContext.applicationId + "|" + dir + "|" + tag,
-      _ => new Input(() => build)).get.asInstanceOf[A]
+      _ => new Input(tag, () => build)).get.asInstanceOf[A]
 
   /** A staged input the query mutates. `build` writes the pristine
     * directory at `dst` and returns whatever handle the query needs; that

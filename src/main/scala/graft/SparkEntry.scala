@@ -4,8 +4,10 @@ import graft.operators._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * `queries` / `oracleSql` aggregate the per-module registries; each module
-  * under graft.operators owns one slice of the SURVEY.md §2 inventory.
+  * `queries` aggregates the per-module registries, one [[Query]] per name
+  * (its run, its oracle and its declared staging); each module under
+  * graft.operators owns one slice of the SURVEY.md §2 inventory.
+  * `oracleSql` is the oracle view of the same values.
   */
 object SparkEntry {
 
@@ -20,11 +22,9 @@ object SparkEntry {
     ProfileOps)
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_.queries).reduce(_ ++ _)
+  val queries: Map[String, Query] = modules.map(_.queries).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a rows-only check. */
-  def oracleSql: Map[String, String] =
-    modules.map(_.oracles).reduce(_ ++ _)
+    * the same parquet tables: the oracle each registered value carries. */
+  def oracleSql: Map[String, String] = queries.map { case (n, q) => n -> q.oracle }
 }

@@ -374,23 +374,13 @@ object CorpusOps extends QueryModule {
       |WHERE cum_tokens <= $TOKEN_BUDGET
       |ORDER BY lang, cum_tokens, doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "docs_chunk" -> (chunk _),
-    "docs_chunk_overlap" -> (chunkOverlap _),
-    "docs_pack" -> (pack _),
-    "docs_decontaminate" -> (decontaminate _),
-    "docs_sample_mix" -> (sampleMix _),
-    "docs_sample_stratified" -> (sampleStratified _),
-    "docs_token_budget" -> (tokenBudget _),
-    "docs_split" -> (split _))
-
-  def oracles: Map[String, String] = Map(
-    "docs_chunk" -> chunkSql,
-    "docs_chunk_overlap" -> chunkOverlapSql,
-    "docs_pack" -> packSql,
-    "docs_decontaminate" -> decontaminateSql,
-    "docs_sample_mix" -> sampleMixSql,
-    "docs_sample_stratified" -> sampleStratifiedSql,
-    "docs_token_budget" -> tokenBudgetSql,
-    "docs_split" -> splitSql)
+  val queries: Map[String, Query] = Map(
+    "docs_chunk" -> Query(chunk _, chunkSql),
+    "docs_chunk_overlap" -> Query(chunkOverlap _, chunkOverlapSql),
+    "docs_pack" -> Query(pack _, packSql),
+    "docs_decontaminate" -> Query(decontaminate _, decontaminateSql),
+    "docs_sample_mix" -> Query(sampleMix _, sampleMixSql),
+    "docs_sample_stratified" -> Query(sampleStratified _, sampleStratifiedSql),
+    "docs_token_budget" -> Query(tokenBudget _, tokenBudgetSql),
+    "docs_split" -> Query(split _, splitSql))
 }

@@ -59,9 +59,6 @@ object Curation extends QueryModule {
       |  AND NOT EXISTS (SELECT 1 FROM losers WHERE losers.doc_id = d.doc_id)
       |GROUP BY lang ORDER BY lang""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_curation" -> (curate _))
-
-  def oracles: Map[String, String] = Map(
-    "pipeline_curation" -> curateSql)
+  val queries: Map[String, Query] = Map(
+    "pipeline_curation" -> Query(curate _, curateSql))
 }

@@ -236,14 +236,17 @@ object DedupOps extends QueryModule {
     * query times its own graph algorithm rather than a replay of the
     * shingle/signature/band pipeline. It doubles as the clustering's first
     * lineage cut. */
-  private def edgesParquet(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(graft.Scratch.staged(s, dir, "dedup_edges") {
+  private def edgesPath(s: SparkSession, dir: String): String =
+    graft.Scratch.staged(s, dir, "dedup_edges") {
       val p = graft.Scratch.dir("graft_dedup_edges")
       minhashPairs(s, dir).filter(col("est_jaccard") >= 0.9)
         .select(col("d1"), col("d2"))
         .write.parquet(p)
       p
-    })
+    }
+
+  private def edgesParquet(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(edgesPath(s, dir))
 
   /** Min-label propagation to FIXPOINT over an undirected (d1, d2) pair
     * relation; returns the final (v, label) relation plus the scratch-
@@ -325,9 +328,12 @@ object DedupOps extends QueryModule {
   // keyed aggregations over a tiny relation, not a rerun of the iterative
   // clustering.
   // ------------------------------------------------------------------
+  private def ccLabels(s: SparkSession, dir: String): String =
+    graft.Scratch.staged(s, dir, "dedup_cc_labels")(
+      propagateMinLabels(s, edgesParquet(s, dir))._2)
+
   def clusterSizes(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(graft.Scratch.staged(s, dir, "dedup_cc_labels")(
-      propagateMinLabels(s, edgesParquet(s, dir))._2))
+    s.read.parquet(ccLabels(s, dir))
       .groupBy(col("label")).agg(count(lit(1)).as("csize"))
       .groupBy(col("csize")).agg(count(lit(1)).as("n_clusters"))
       .orderBy(col("csize"))
@@ -1113,7 +1119,12 @@ object DedupOps extends QueryModule {
   /** (exact-hash store, band-index store) of the historical corpus side,
     * parquet-backed; built on first use, read thereafter. */
   private def corpusStore(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val (hPath, bPath) = graft.Scratch.staged(s, dir, "dedup_store") {
+    val (hPath, bPath) = storePaths(s, dir)
+    (s.read.parquet(hPath), s.read.parquet(bPath))
+  }
+
+  private def storePaths(s: SparkSession, dir: String): (String, String) =
+    graft.Scratch.staged(s, dir, "dedup_store") {
       val h = graft.Scratch.dir("graft_dedup_store_hash")
       val b = graft.Scratch.dir("graft_dedup_store_bands")
       graft.sources.Tables.loadParallel(s, dir, "documents").filter(!isNewDoc)
@@ -1124,8 +1135,6 @@ object DedupOps extends QueryModule {
         .write.parquet(b)
       (h, b)
     }
-    (s.read.parquet(hPath), s.read.parquet(bPath))
-  }
 
   /** incremental() probing the PERSISTED store instead of recomputing the
     * historical index inline. The batch side still computes its own hashes
@@ -1213,45 +1222,27 @@ object DedupOps extends QueryModule {
       |WHERE p.est_jaccard >= 0.9 AND s1.split <> s2.split
       |ORDER BY d1, d2""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_rate_by_lang" -> (dupRateByLang _),
-    "dedup_minhash_pairs" -> (minhashPairs _),
-    "dedup_minhash_clusters" -> (minhashClusters _),
-    "dedup_cluster_sizes" -> (clusterSizes _),
-    "dedup_triangles" -> (triangleCount _),
-    "dedup_span_coverage" -> (spanCoverage _),
-    "dedup_ensemble" -> (ensembleVerdict _),
-    "dedup_degree_hist" -> (degreeHist _),
-    "dedup_pagerank" -> (pageRank _),
-    "dedup_kcore" -> (kcore _),
-    "dedup_minhash_losers" -> ((s, dir) => minhashLosers(s, dir, 0.9).orderBy(col("doc_id"))),
-    "dedup_ngram_jaccard" -> (ngramJaccard _),
-    "dedup_containment" -> (containment _),
-    "dedup_simhash" -> (simhash _),
-    "dedup_simhash_pairs" -> (simhashPairs _),
-    "dedup_incremental" -> (incremental _),
-    "dedup_incremental_store" -> (incrementalStored _),
-    "dedup_split_leakage" -> (splitLeakage _))
-
-  def oracles: Map[String, String] = Map(
-    "dedup_rate_by_lang" -> dupRateByLangSql,
-    "dedup_minhash_pairs" -> minhashPairsSql,
-    "dedup_minhash_clusters" -> minhashClustersSql,
-    "dedup_cluster_sizes" -> clusterSizesSql,
-    "dedup_triangles" -> triangleCountSql,
-    "dedup_span_coverage" -> spanCoverageSql,
-    "dedup_ensemble" -> ensembleVerdictSql,
-    "dedup_degree_hist" -> degreeHistSql,
-    "dedup_pagerank" -> pageRankSql,
-    "dedup_kcore" -> kcoreSql,
-    "dedup_minhash_losers" -> (minhashLosersSql(0.9) + "\nORDER BY doc_id"),
-    "dedup_ngram_jaccard" -> ngramJaccardSql,
-    "dedup_containment" -> containmentSql,
-    "dedup_simhash" -> simhashSql,
-    "dedup_simhash_pairs" -> simhashPairsSql,
-    "dedup_incremental" -> incrementalSql,
+  val queries: Map[String, Query] = Map(
+    "dedup_rate_by_lang" -> Query(dupRateByLang _, dupRateByLangSql),
+    "dedup_minhash_pairs" -> Query(minhashPairs _, minhashPairsSql),
+    "dedup_minhash_clusters" -> Query(minhashClusters _, minhashClustersSql, edgesPath _),
+    "dedup_cluster_sizes" -> Query(clusterSizes _, clusterSizesSql, ccLabels _),
+    "dedup_triangles" -> Query(triangleCount _, triangleCountSql, edgesPath _),
+    "dedup_span_coverage" -> Query(spanCoverage _, spanCoverageSql),
+    "dedup_ensemble" -> Query(ensembleVerdict _, ensembleVerdictSql),
+    "dedup_degree_hist" -> Query(degreeHist _, degreeHistSql, edgesPath _),
+    "dedup_pagerank" -> Query(pageRank _, pageRankSql, edgesPath _),
+    "dedup_kcore" -> Query(kcore _, kcoreSql, edgesPath _),
+    "dedup_minhash_losers" -> Query(
+      (s, dir) => minhashLosers(s, dir, 0.9).orderBy(col("doc_id")),
+      minhashLosersSql(0.9) + "\nORDER BY doc_id"),
+    "dedup_ngram_jaccard" -> Query(ngramJaccard _, ngramJaccardSql),
+    "dedup_containment" -> Query(containment _, containmentSql),
+    "dedup_simhash" -> Query(simhash _, simhashSql),
+    "dedup_simhash_pairs" -> Query(simhashPairs _, simhashPairsSql),
+    "dedup_incremental" -> Query(incremental _, incrementalSql),
     // the store variant has the same output contract; the same oracle
     // proves the persisted-store probe returns what the inline form does
-    "dedup_incremental_store" -> incrementalSql,
-    "dedup_split_leakage" -> splitLeakageSql)
+    "dedup_incremental_store" -> Query(incrementalStored _, incrementalSql, storePaths _),
+    "dedup_split_leakage" -> Query(splitLeakage _, splitLeakageSql))
 }

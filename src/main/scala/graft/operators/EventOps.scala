@@ -566,31 +566,17 @@ object EventOps extends QueryModule {
       |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
       |ORDER BY user_id, hour""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_ffill" -> (ffill _),
-    "events_dau_wau" -> (dauWau _),
-    "events_ewma" -> (ewma _),
-    "events_pareto" -> (pareto _),
-    "events_streaks" -> (streaks _),
-    "events_transitions" -> (transitions _),
-    "events_rolling7" -> (rolling7 _),
-    "events_ohlc" -> (ohlcBars _),
-    "events_anomaly" -> (anomalies _),
-    "events_user_growth" -> (userGrowth _),
-    "events_attribution" -> (attribution _),
-    "events_value_histogram" -> (valueHistogram _))
-
-  def oracles: Map[String, String] = Map(
-    "events_ffill" -> ffillSql,
-    "events_ewma" -> ewmaSql,
-    "events_dau_wau" -> dauWauSql,
-    "events_pareto" -> paretoSql,
-    "events_streaks" -> streaksSql,
-    "events_transitions" -> transitionsSql,
-    "events_rolling7" -> rolling7Sql,
-    "events_ohlc" -> ohlcBarsSql,
-    "events_anomaly" -> anomaliesSql,
-    "events_user_growth" -> userGrowthSql,
-    "events_attribution" -> attributionSql,
-    "events_value_histogram" -> valueHistogramSql)
+  val queries: Map[String, Query] = Map(
+    "events_ffill" -> Query(ffill _, ffillSql),
+    "events_dau_wau" -> Query(dauWau _, dauWauSql),
+    "events_ewma" -> Query(ewma _, ewmaSql),
+    "events_pareto" -> Query(pareto _, paretoSql),
+    "events_streaks" -> Query(streaks _, streaksSql),
+    "events_transitions" -> Query(transitions _, transitionsSql),
+    "events_rolling7" -> Query(rolling7 _, rolling7Sql),
+    "events_ohlc" -> Query(ohlcBars _, ohlcBarsSql),
+    "events_anomaly" -> Query(anomalies _, anomaliesSql),
+    "events_user_growth" -> Query(userGrowth _, userGrowthSql),
+    "events_attribution" -> Query(attribution _, attributionSql),
+    "events_value_histogram" -> Query(valueHistogram _, valueHistogramSql))
 }

@@ -265,11 +265,7 @@ object LshOps extends QueryModule {
        |WHERE rank <= $TOPK ORDER BY qid, rank""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_minhash_ml" -> (minhashMl _),
-    "emb_ann_brp_lsh" -> (annBrpLsh _))
-
-  def oracles: Map[String, String] = Map(
-    "dedup_minhash_ml" -> minhashMlSql,
-    "emb_ann_brp_lsh" -> annBrpLshSql)
+  val queries: Map[String, Query] = Map(
+    "dedup_minhash_ml" -> Query(minhashMl _, minhashMlSql),
+    "emb_ann_brp_lsh" -> Query(annBrpLsh _, annBrpLshSql))
 }

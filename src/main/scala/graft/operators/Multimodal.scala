@@ -286,19 +286,11 @@ object Multimodal extends QueryModule {
       |WHERE bit_count(xor(s1.simhash, s2.simhash)) <= 3
       |ORDER BY d1, d2""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_ahash" -> (ahash _),
-    "mm_dedup_phash" -> (dedupPhash _),
-    "mm_binary_meta" -> (binaryMeta _),
-    "mm_decode_stub" -> (decodeBatch _),
-    "mm_frame_sample" -> (frameSample _),
-    "mm_feature_extract" -> (featureExtract _))
-
-  def oracles: Map[String, String] = Map(
-    "mm_ahash" -> ahashSql,
-    "mm_dedup_phash" -> dedupPhashSql,
-    "mm_binary_meta" -> binaryMetaSql,
-    "mm_decode_stub" -> decodeBatchSql,
-    "mm_frame_sample" -> frameSampleSql,
-    "mm_feature_extract" -> featureExtractSql)
+  val queries: Map[String, Query] = Map(
+    "mm_ahash" -> Query(ahash _, ahashSql),
+    "mm_dedup_phash" -> Query(dedupPhash _, dedupPhashSql),
+    "mm_binary_meta" -> Query(binaryMeta _, binaryMetaSql),
+    "mm_decode_stub" -> Query(decodeBatch _, decodeBatchSql),
+    "mm_frame_sample" -> Query(frameSample _, frameSampleSql),
+    "mm_feature_extract" -> Query(featureExtract _, featureExtractSql))
 }

@@ -191,13 +191,8 @@ object ProfileOps extends QueryModule {
       |  FROM i1 FULL OUTER JOIN i2 USING (event_id))
       |GROUP BY status ORDER BY status""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "profile_lineitem" -> (profileLineitem _),
-    "dq_checks" -> (dqChecks _),
-    "table_diff" -> (tableDiff _))
-
-  def oracles: Map[String, String] = Map(
-    "profile_lineitem" -> profileLineitemSql,
-    "dq_checks" -> dqChecksSql,
-    "table_diff" -> tableDiffSql)
+  val queries: Map[String, Query] = Map(
+    "profile_lineitem" -> Query(profileLineitem _, profileLineitemSql),
+    "dq_checks" -> Query(dqChecks _, dqChecksSql),
+    "table_diff" -> Query(tableDiff _, tableDiffSql))
 }

@@ -2,10 +2,33 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One slice of the SURVEY.md §2 operator inventory: named queries plus
-  * their DuckDB oracle SQL (keys without oracle SQL get a rows-only check).
+/** One registered query, named once in its module's map.
+  *
+  *  - `run` builds the DataFrame from a fixture dir;
+  *  - `oracle` is its DuckDB twin over the same parquet tables;
+  *  - `prepare` stages the inputs `run` reads, through the same memoized
+  *    [[graft.Scratch.staged]] / [[graft.Scratch.fresh]] helper `run`
+  *    calls, so `run` stays self-sufficient and gets a memo hit. It does
+  *    nothing by default.
+  *
+  * Calling the value runs `prepare`, then `run`. Bench calls the two apart:
+  * it times `prepare` once as setup and `run` per measured run.
   */
+final case class Query(run: (SparkSession, String) => DataFrame, oracle: String,
+    prepare: (SparkSession, String) => Any = Query.nothing)
+    extends ((SparkSession, String) => DataFrame) {
+  def apply(s: SparkSession, dir: String): DataFrame = {
+    prepare(s, dir)
+    run(s, dir)
+  }
+}
+
+object Query {
+  /** The default `prepare`: a query that reads only the fixture files. */
+  val nothing: (SparkSession, String) => Any = (_, _) => ()
+}
+
+/** One slice of the SURVEY.md §2 operator inventory: its queries by name. */
 trait QueryModule {
-  def queries: Map[String, (SparkSession, String) => DataFrame]
-  def oracles: Map[String, String]
+  def queries: Map[String, Query]
 }

@@ -275,29 +275,16 @@ object ReferenceOps extends QueryModule {
       |  o_orderpriority AS priority
       |FROM orders WHERE o_orderkey % 7 = 0 ORDER BY order_key""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ref_flagship" -> ((s, dir) => Flagship.pipeline(s, dir)),
-    "ref_csv_roundtrip" -> (csvRoundtrip _),
-    "ref_sheet_scan" -> (sheetScan _),
-    "ref_json_flatten" -> (jsonFlatten _),
-    "ref_window_gen" -> (windowGen _),
-    "ref_json_construct" -> (jsonConstruct _),
-    "ref_json_extract" -> (jsonExtract _),
-    "ref_limit_concat" -> (limitConcat _),
-    "ref_switch_account" -> (switchAccount _),
-    "ref_funds_map" -> (fundsMap _),
-    "ref_dedup_latest" -> (dedupKeepLatest _))
-
-  def oracles: Map[String, String] = Map(
-    "ref_flagship" -> Flagship.oracleSql,
-    "ref_csv_roundtrip" -> csvRoundtripSql,
-    "ref_sheet_scan" -> sheetScanSql,
-    "ref_json_flatten" -> jsonFlattenSql,
-    "ref_window_gen" -> windowGenSql,
-    "ref_json_construct" -> jsonConstructSql,
-    "ref_json_extract" -> jsonExtractSql,
-    "ref_limit_concat" -> limitConcatSql,
-    "ref_switch_account" -> switchAccountSql,
-    "ref_funds_map" -> fundsMapSql,
-    "ref_dedup_latest" -> dedupKeepLatestSql)
+  val queries: Map[String, Query] = Map(
+    "ref_flagship" -> Query((s, dir) => Flagship.pipeline(s, dir), Flagship.oracleSql),
+    "ref_csv_roundtrip" -> Query(csvRoundtrip _, csvRoundtripSql),
+    "ref_sheet_scan" -> Query(sheetScan _, sheetScanSql),
+    "ref_json_flatten" -> Query(jsonFlatten _, jsonFlattenSql),
+    "ref_window_gen" -> Query(windowGen _, windowGenSql),
+    "ref_json_construct" -> Query(jsonConstruct _, jsonConstructSql),
+    "ref_json_extract" -> Query(jsonExtract _, jsonExtractSql),
+    "ref_limit_concat" -> Query(limitConcat _, limitConcatSql),
+    "ref_switch_account" -> Query(switchAccount _, switchAccountSql),
+    "ref_funds_map" -> Query(fundsMap _, fundsMapSql),
+    "ref_dedup_latest" -> Query(dedupKeepLatest _, dedupKeepLatestSql))
 }

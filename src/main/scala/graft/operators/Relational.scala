@@ -2188,133 +2188,68 @@ object Relational extends QueryModule {
 
   // Registry -----------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q21_waiting_suppliers" -> (q21WaitingSuppliers _),
-    "q4_order_priority" -> (q4OrderPriority _),
-    "q6_forecast_revenue" -> (q6ForecastRevenue _),
-    "q7_volume_shipping" -> (q7VolumeShipping _),
-    "q10_returned_items" -> (q10ReturnedItems _),
-    "q14_promo_effect" -> (q14PromoEffect _),
-    "q15_top_supplier" -> (q15TopSupplier _),
-    "q17_small_qty_revenue" -> (q17SmallQtyRevenue _),
-    "q19_discounted_revenue" -> (q19DiscountedRevenue _),
-    "q22_global_sales" -> (q22GlobalSales _),
-    "q2_min_cost_supp" -> (q2MinCostSupp _),
-    "q20_potential_promo" -> (q20PotentialPromo _),
-    "q11_important_stock" -> (q11ImportantStock _),
-    "q12_ship_priority" -> (q12ShipPriority _),
-    "q16_supplier_cnt" -> (q16SupplierCnt _),
-    "q8_market_share" -> (q8MarketShare _),
-    "q9_product_profit" -> (q9ProductProfit _),
-    "q18_large_volume_cust" -> (q18LargeVolumeCust _),
-    "q13_custdist" -> (q13CustDist _),
-    "q18_large_orders" -> (q18LargeOrders _),
-    "orders_rfm" -> (rfm _),
-    "orders_mom" -> (momRevenue _),
-    "merge_upsert" -> (mergeUpsert _),
-    "agg_weighted_avg" -> (weightedAvg _),
-    "q1_agg" -> (q1Agg _),
-    "q3_join_topk" -> (q3JoinTopK _),
-    "q5_star_join" -> (q5StarJoin _),
-    "join_left_outer" -> (joinLeftOuter _),
-    "join_full_outer" -> (joinFullOuter _),
-    "join_salted" -> (joinSalted _),
-    "sql_correlated" -> (sqlCorrelated _),
-    "scalar_arrays" -> (scalarArrays _),
-    "join_semi" -> (joinSemi _),
-    "join_anti" -> (joinAnti _),
-    "join_not_in" -> (joinNotIn _),
-    "join_bloom_runtime" -> (joinBloomRuntime _),
-    "join_range" -> (joinRange _),
-    "join_asof" -> (joinAsOf _),
-    "join_asof2" -> (joinAsOf2 _),
-    "agg_distinct" -> (aggDistinct _),
-    "agg_approx_distinct" -> (aggApproxDistinct _),
-    "agg_sketch_union" -> (aggSketchUnion _),
-    "agg_rollup" -> (aggRollup _),
-    "agg_cube" -> (aggCube _),
-    "agg_pivot" -> (aggPivot _),
-    "agg_unpivot" -> (aggUnpivot _),
-    "scalar_safe" -> (scalarSafe _),
-    "agg_percentile" -> (aggPercentile _),
-    "agg_approx_percentile" -> (aggApproxPercentile _),
-    "window_range_frame" -> (windowRangeFrame _),
-    "set_ops_all" -> (setOpsAll _),
-    "udf_scalar" -> (udfScalar _),
-    "window_rank" -> (windowRank _),
-    "window_navigation" -> (windowNavigation _),
-    "window_running" -> (windowRunning _),
-    "topk_per_group" -> (topKPerGroup _),
-    "set_ops" -> (setOps _),
-    "scalar_funcs" -> (scalarFuncs _),
-    "scalar_dates" -> (scalarDates _),
-    "scalar_maps" -> (scalarMaps _),
-    "sql_grouping_sets" -> (sqlGroupingSets _),
-    "sql_recursive_spine" -> (sqlRecursiveSpine _),
-    "join_interval_overlap" -> (joinIntervalOverlap _))
-
-  def oracles: Map[String, String] = Map(
-    "merge_upsert" -> mergeUpsertSql,
-    "agg_weighted_avg" -> weightedAvgSql,
-    "q1_agg" -> q1AggSql,
-    "q3_join_topk" -> q3JoinTopKSql,
-    "q5_star_join" -> q5StarJoinSql,
-    "q13_custdist" -> q13CustDistSql,
-    "orders_rfm" -> rfmSql,
-    "orders_mom" -> momRevenueSql,
-    "q18_large_orders" -> q18LargeOrdersSql,
-    "q21_waiting_suppliers" -> q21WaitingSuppliersSql,
-    "q4_order_priority" -> q4OrderPrioritySql,
-    "q6_forecast_revenue" -> q6ForecastRevenueSql,
-    "q7_volume_shipping" -> q7VolumeShippingSql,
-    "q10_returned_items" -> q10ReturnedItemsSql,
-    "q14_promo_effect" -> q14PromoEffectSql,
-    "q15_top_supplier" -> q15TopSupplierSql,
-    "q17_small_qty_revenue" -> q17SmallQtyRevenueSql,
-    "q19_discounted_revenue" -> q19DiscountedRevenueSql,
-    "q22_global_sales" -> q22GlobalSalesSql,
-    "q2_min_cost_supp" -> q2MinCostSuppSql,
-    "q20_potential_promo" -> q20PotentialPromoSql,
-    "q11_important_stock" -> q11ImportantStockSql,
-    "q12_ship_priority" -> q12ShipPrioritySql,
-    "q16_supplier_cnt" -> q16SupplierCntSql,
-    "q8_market_share" -> q8MarketShareSql,
-    "q9_product_profit" -> q9ProductProfitSql,
-    "q18_large_volume_cust" -> q18LargeVolumeCustSql,
-    "join_left_outer" -> joinLeftOuterSql,
-    "join_full_outer" -> joinFullOuterSql,
-    "join_salted" -> joinSaltedSql,
-    "sql_correlated" -> sqlCorrelatedSql,
-    "scalar_arrays" -> scalarArraysSql,
-    "join_semi" -> joinSemiSql,
-    "join_anti" -> joinAntiSql,
-    "join_not_in" -> joinNotInSql,
-    "join_bloom_runtime" -> joinBloomRuntimeSql,
-    "join_range" -> joinRangeSql,
-    "join_asof" -> joinAsOfSql,
-    "join_asof2" -> joinAsOf2Sql,
-    "agg_distinct" -> aggDistinctSql,
-    "agg_rollup" -> aggRollupSql,
-    "agg_cube" -> aggCubeSql,
-    "agg_pivot" -> aggPivotSql,
-    "agg_unpivot" -> aggUnpivotSql,
-    "scalar_safe" -> scalarSafeSql,
-    "agg_percentile" -> aggPercentileSql,
-    "agg_approx_distinct" -> aggApproxDistinctSql,
-    "agg_sketch_union" -> aggSketchUnionSql,
-    "agg_approx_percentile" -> aggApproxPercentileSql,
-    "window_range_frame" -> windowRangeFrameSql,
-    "set_ops_all" -> setOpsAllSql,
-    "udf_scalar" -> udfScalarSql,
-    "window_rank" -> windowRankSql,
-    "window_navigation" -> windowNavigationSql,
-    "window_running" -> windowRunningSql,
-    "topk_per_group" -> topKPerGroupSql,
-    "set_ops" -> setOpsSql,
-    "scalar_funcs" -> scalarFuncsSql,
-    "scalar_dates" -> scalarDatesSql,
-    "scalar_maps" -> scalarMapsSql,
-    "sql_grouping_sets" -> sqlGroupingSetsSql,
-    "sql_recursive_spine" -> sqlRecursiveSpineSql,
-    "join_interval_overlap" -> joinIntervalOverlapSql)
+  val queries: Map[String, Query] = Map(
+    "q21_waiting_suppliers" -> Query(q21WaitingSuppliers _, q21WaitingSuppliersSql),
+    "q4_order_priority" -> Query(q4OrderPriority _, q4OrderPrioritySql),
+    "q6_forecast_revenue" -> Query(q6ForecastRevenue _, q6ForecastRevenueSql),
+    "q7_volume_shipping" -> Query(q7VolumeShipping _, q7VolumeShippingSql),
+    "q10_returned_items" -> Query(q10ReturnedItems _, q10ReturnedItemsSql),
+    "q14_promo_effect" -> Query(q14PromoEffect _, q14PromoEffectSql),
+    "q15_top_supplier" -> Query(q15TopSupplier _, q15TopSupplierSql),
+    "q17_small_qty_revenue" -> Query(q17SmallQtyRevenue _, q17SmallQtyRevenueSql),
+    "q19_discounted_revenue" -> Query(q19DiscountedRevenue _, q19DiscountedRevenueSql),
+    "q22_global_sales" -> Query(q22GlobalSales _, q22GlobalSalesSql),
+    "q2_min_cost_supp" -> Query(q2MinCostSupp _, q2MinCostSuppSql),
+    "q20_potential_promo" -> Query(q20PotentialPromo _, q20PotentialPromoSql),
+    "q11_important_stock" -> Query(q11ImportantStock _, q11ImportantStockSql),
+    "q12_ship_priority" -> Query(q12ShipPriority _, q12ShipPrioritySql),
+    "q16_supplier_cnt" -> Query(q16SupplierCnt _, q16SupplierCntSql),
+    "q8_market_share" -> Query(q8MarketShare _, q8MarketShareSql),
+    "q9_product_profit" -> Query(q9ProductProfit _, q9ProductProfitSql),
+    "q18_large_volume_cust" -> Query(q18LargeVolumeCust _, q18LargeVolumeCustSql),
+    "q13_custdist" -> Query(q13CustDist _, q13CustDistSql),
+    "q18_large_orders" -> Query(q18LargeOrders _, q18LargeOrdersSql),
+    "orders_rfm" -> Query(rfm _, rfmSql),
+    "orders_mom" -> Query(momRevenue _, momRevenueSql),
+    "merge_upsert" -> Query(mergeUpsert _, mergeUpsertSql),
+    "agg_weighted_avg" -> Query(weightedAvg _, weightedAvgSql),
+    "q1_agg" -> Query(q1Agg _, q1AggSql),
+    "q3_join_topk" -> Query(q3JoinTopK _, q3JoinTopKSql),
+    "q5_star_join" -> Query(q5StarJoin _, q5StarJoinSql),
+    "join_left_outer" -> Query(joinLeftOuter _, joinLeftOuterSql),
+    "join_full_outer" -> Query(joinFullOuter _, joinFullOuterSql),
+    "join_salted" -> Query(joinSalted _, joinSaltedSql),
+    "sql_correlated" -> Query(sqlCorrelated _, sqlCorrelatedSql),
+    "scalar_arrays" -> Query(scalarArrays _, scalarArraysSql),
+    "join_semi" -> Query(joinSemi _, joinSemiSql),
+    "join_anti" -> Query(joinAnti _, joinAntiSql),
+    "join_not_in" -> Query(joinNotIn _, joinNotInSql),
+    "join_bloom_runtime" -> Query(joinBloomRuntime _, joinBloomRuntimeSql),
+    "join_range" -> Query(joinRange _, joinRangeSql),
+    "join_asof" -> Query(joinAsOf _, joinAsOfSql),
+    "join_asof2" -> Query(joinAsOf2 _, joinAsOf2Sql),
+    "agg_distinct" -> Query(aggDistinct _, aggDistinctSql),
+    "agg_approx_distinct" -> Query(aggApproxDistinct _, aggApproxDistinctSql),
+    "agg_sketch_union" -> Query(aggSketchUnion _, aggSketchUnionSql),
+    "agg_rollup" -> Query(aggRollup _, aggRollupSql),
+    "agg_cube" -> Query(aggCube _, aggCubeSql),
+    "agg_pivot" -> Query(aggPivot _, aggPivotSql),
+    "agg_unpivot" -> Query(aggUnpivot _, aggUnpivotSql),
+    "scalar_safe" -> Query(scalarSafe _, scalarSafeSql),
+    "agg_percentile" -> Query(aggPercentile _, aggPercentileSql),
+    "agg_approx_percentile" -> Query(aggApproxPercentile _, aggApproxPercentileSql),
+    "window_range_frame" -> Query(windowRangeFrame _, windowRangeFrameSql),
+    "set_ops_all" -> Query(setOpsAll _, setOpsAllSql),
+    "udf_scalar" -> Query(udfScalar _, udfScalarSql),
+    "window_rank" -> Query(windowRank _, windowRankSql),
+    "window_navigation" -> Query(windowNavigation _, windowNavigationSql),
+    "window_running" -> Query(windowRunning _, windowRunningSql),
+    "topk_per_group" -> Query(topKPerGroup _, topKPerGroupSql),
+    "set_ops" -> Query(setOps _, setOpsSql),
+    "scalar_funcs" -> Query(scalarFuncs _, scalarFuncsSql),
+    "scalar_dates" -> Query(scalarDates _, scalarDatesSql),
+    "scalar_maps" -> Query(scalarMaps _, scalarMapsSql),
+    "sql_grouping_sets" -> Query(sqlGroupingSets _, sqlGroupingSetsSql),
+    "sql_recursive_spine" -> Query(sqlRecursiveSpine _, sqlRecursiveSpineSql),
+    "join_interval_overlap" -> Query(joinIntervalOverlap _, joinIntervalOverlapSql))
 }

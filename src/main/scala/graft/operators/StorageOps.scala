@@ -39,6 +39,65 @@ object StorageOps extends QueryModule {
     wh
   }
 
+  /** The 4-column slice of events that every graftlog landing and graftq
+    * table here is written from. */
+  private def events4(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "events")
+      .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
+
+  private val Bucket8 = "PARTITIONED BY (bucket(8, user_id))"
+  private val Retain = "TBLPROPERTIES ('snapshot.retain' = 'true')"
+
+  /** graftq.`name`, the 4-column events table: dropped, created with
+    * `spec` (its PARTITIONED BY / TBLPROPERTIES clauses), then `waves`
+    * appended in order. Returns the table's directory. */
+  private def eventsTable(s: SparkSession, name: String, spec: String,
+      waves: DataFrame*): String = {
+    val wh = catalog(s)
+    s.sql(s"DROP TABLE IF EXISTS graftq.$name")
+    s.sql(s"CREATE TABLE graftq.$name (event_id BIGINT, user_id BIGINT, value DOUBLE, " +
+      s"event_type STRING) USING graftlog $spec")
+    waves.foreach(_.writeTo(s"graftq.$name").append())
+    GraftFs.child(wh, name)
+  }
+
+  /** A graftq table the query only reads, staged under its own name. */
+  private def stagedTable[A <: AnyRef](s: SparkSession, dir: String, name: String)(
+      build: => A): A = {
+    catalog(s)
+    Scratch.staged(s, dir, name)(build)
+  }
+
+  /** A graftq events table the query mutates: [[eventsTable]] of `waves`
+    * built once, and a fresh byte copy of it for every later execution.
+    * Its handle is empty: the staged value names only the pristine copy. */
+  private def freshTable(s: SparkSession, dir: String, name: String, spec: String,
+      waves: => Seq[DataFrame]): Unit =
+    Scratch.fresh(s, dir, name, GraftFs.child(catalog(s), name)) {
+      eventsTable(s, name, spec, waves: _*)
+      ()
+    }
+
+  /** `rows` landed as a graftlog directory: a staged input under `tag`. */
+  private def stagedLog(s: SparkSession, dir: String, tag: String)(rows: => DataFrame): String =
+    Scratch.staged(s, dir, tag) {
+      val p = scratch(s"graft_$tag")
+      rows.write.format("graftlog").mode("append").save(p)
+      p
+    }
+
+  /** Events landed as four graftlog files, read-only input of the scan
+    * pushdown queries (OR, TopN, aggregate, manifest aggregate, runtime
+    * filter). */
+  private def logLanding4(s: SparkSession, dir: String): String =
+    stagedLog(s, dir, "log_events4")(events4(s, dir).repartition(4))
+
+  /** The event_id < 20000 slice landed as four graftlog files, read-only
+    * input of the streaming source and sink queries. */
+  private def logSlice(s: SparkSession, dir: String): String =
+    stagedLog(s, dir, "log_slice")(
+      events4(s, dir).filter(col("event_id") < 20000).repartition(4))
+
   // ------------------------------------------------------------------
   // S2/K-json: JSON-lines write + schema'd read roundtrip (the reference's
   // JSON surface, trading212.py:59,81,92, driver-checked end to end).
@@ -93,15 +152,17 @@ object StorageOps extends QueryModule {
   // on the executed plan in StorageSpec). At 100 TB with a date-partitioned
   // layout this is the difference between reading a day and reading a year.
   // ------------------------------------------------------------------
-  def partitionPruned(s: SparkSession, dir: String): DataFrame = {
-    val landing = Scratch.staged(s, dir, "part_landing") {
+  private def partLanding(s: SparkSession, dir: String): String =
+    Scratch.staged(s, dir, "part_landing") {
       val p = scratch("graft_part_landing")
       Tables.load(s, dir, "events")
         .select("event_id", "ts", "user_id", "value", "event_type")
         .write.partitionBy("event_type").parquet(p)
       p
     }
-    s.read.parquet(landing)
+
+  def partitionPruned(s: SparkSession, dir: String): DataFrame = {
+    s.read.parquet(partLanding(s, dir))
       .filter(col("event_type") === "purchase")
       .select("event_id", "ts", "user_id", "value", "event_type")
       .orderBy("event_id")
@@ -119,8 +180,8 @@ object StorageOps extends QueryModule {
   // Run-unique table names: the metastore is per-JVM and Verify/Bench run
   // many queries in one session.
   // ------------------------------------------------------------------
-  def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    val (custT, ordT) = Scratch.staged(s, dir, "bucketed_tables") {
+  private def bucketedTables(s: SparkSession, dir: String): (String, String) =
+    Scratch.staged(s, dir, "bucketed_tables") {
       val cT = graft.Scratch.table(s, "cust_bq")
       val oT = graft.Scratch.table(s, "ord_bq")
       Tables.load(s, dir, "customer")
@@ -134,6 +195,9 @@ object StorageOps extends QueryModule {
         .mode("overwrite").saveAsTable(oT)
       (cT, oT)
     }
+
+  def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
+    val (custT, ordT) = bucketedTables(s, dir)
     s.table(custT)
       .join(s.table(ordT), col("c_custkey") === col("o_custkey"))
       .select(col("c_custkey"), col("c_mktsegment"), col("n_orders"))
@@ -169,9 +233,11 @@ object StorageOps extends QueryModule {
     landing
   }
 
+  private def rangeLanding(s: SparkSession, dir: String): String =
+    Scratch.staged(s, dir, "range_landing")(writeRangeClustered(s, dir))
+
   def rangeClusteredScan(s: SparkSession, dir: String): DataFrame = {
-    val landing = Scratch.staged(s, dir, "range_landing")(writeRangeClustered(s, dir))
-    s.read.parquet(landing)
+    s.read.parquet(rangeLanding(s, dir))
       .filter(col("ts") >= lit("2024-01-10").cast("timestamp") &&
         col("ts") < lit("2024-01-11").cast("timestamp"))
       .select("event_id", "ts", "user_id", "event_type", "value")
@@ -226,9 +292,11 @@ object StorageOps extends QueryModule {
     landing
   }
 
+  private def zorderLanding(s: SparkSession, dir: String): String =
+    Scratch.staged(s, dir, "zorder_landing")(writeZOrdered(s, dir))
+
   def zorderScan(s: SparkSession, dir: String): DataFrame = {
-    val landing = Scratch.staged(s, dir, "zorder_landing")(writeZOrdered(s, dir))
-    s.read.parquet(landing)
+    s.read.parquet(zorderLanding(s, dir))
       .filter(col("user_id") >= 4 && col("user_id") <= 7 &&
         col("ts") >= lit("2024-01-08").cast("timestamp") &&
         col("ts") < lit("2024-01-12").cast("timestamp"))
@@ -268,9 +336,11 @@ object StorageOps extends QueryModule {
     landing
   }
 
+  private def datePartLanding(s: SparkSession, dir: String): String =
+    Scratch.staged(s, dir, "date_part_landing")(writeDatePartitioned(s, dir))
+
   def datePartitionPrune(s: SparkSession, dir: String): DataFrame = {
-    val landing = Scratch.staged(s, dir, "date_part_landing")(writeDatePartitioned(s, dir))
-    s.read.parquet(landing)
+    s.read.parquet(datePartLanding(s, dir))
       .filter(col("event_date") >= lit("2024-01-03").cast("date") &&
         col("event_date") < lit("2024-01-10").cast("date"))
       .groupBy(col("event_date"), col("event_type"))
@@ -305,15 +375,11 @@ object StorageOps extends QueryModule {
   // pushed predicate. PlanShapeSpec pins both. See sources/GraftLogCodec.scala
   // for the format and sources/GraftLogScan.scala for the 100 TB scan story.
   // ------------------------------------------------------------------
+  private def logLanding(s: SparkSession, dir: String): String =
+    stagedLog(s, dir, "log_landing")(events4(s, dir))
+
   def dsv2Pushdown(s: SparkSession, dir: String): DataFrame = {
-    val landing = Scratch.staged(s, dir, "log_landing") {
-      val p = scratch("graft_log_landing")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .write.format("graftlog").mode("append").save(p)
-      p
-    }
-    s.read.format("graftlog").load(landing)
+    s.read.format("graftlog").load(logLanding(s, dir))
       .filter(col("event_type") === "purchase" && col("value") >= 100.0)
       .select(col("event_id"), col("user_id"), col("value"))
       .orderBy(col("event_id"))
@@ -336,15 +402,7 @@ object StorageOps extends QueryModule {
   // post-scan Filter.
   // ------------------------------------------------------------------
   def dsv2OrPushdown(s: SparkSession, dir: String): DataFrame = {
-    val landing = Scratch.staged(s, dir, "log_or") {
-      val p = scratch("graft_log_or")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .repartition(4)
-        .write.format("graftlog").mode("append").save(p)
-      p
-    }
-    s.read.format("graftlog").load(landing)
+    s.read.format("graftlog").load(logLanding4(s, dir))
       .filter((col("event_type") === "purchase" && col("value") >= 300.0) ||
         (col("event_type").startsWith("sig") && col("value") < 50.0))
       .orderBy(col("event_id"))
@@ -370,22 +428,17 @@ object StorageOps extends QueryModule {
   // return); at fixture scale the optimizer would otherwise broadcast the
   // small side, which is exactly the plan the pin must exclude.
   // ------------------------------------------------------------------
-  def dsv2PartitionedJoin(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    Scratch.staged(s, dir, "spj_tables") {
-      val cols = "(event_id BIGINT, user_id BIGINT, value DOUBLE, event_type STRING)"
-      Seq("spj_events", "spj_signups").foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS graftq.$t")
-        s.sql(s"CREATE TABLE graftq.$t $cols USING graftlog " +
-          "PARTITIONED BY (bucket(16, user_id))")
-      }
-      val ev = Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-      ev.writeTo("graftq.spj_events").append()
-      ev.filter(col("event_type") === "signup").writeTo("graftq.spj_signups").append()
-      (GraftFs.child(wh, "spj_events"), GraftFs.child(wh, "spj_signups"))
+  private def spjTables(s: SparkSession, dir: String): (String, String) =
+    stagedTable(s, dir, "spj_tables") {
+      val bucket16 = "PARTITIONED BY (bucket(16, user_id))"
+      val ev = events4(s, dir)
+      (eventsTable(s, "spj_events", bucket16, ev),
+        eventsTable(s, "spj_signups", bucket16, ev.filter(col("event_type") === "signup")))
     }
+
+  def dsv2PartitionedJoin(s: SparkSession, dir: String): DataFrame = {
+    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    spjTables(s, dir)
     s.table("graftq.spj_events")
       .join(s.table("graftq.spj_signups").select(col("user_id")).hint("merge"), "user_id")
       .groupBy(col("user_id"))
@@ -416,20 +469,28 @@ object StorageOps extends QueryModule {
   // the CDC-style "everything published since my last run" batch read a
   // 100 TB landing needs to avoid rescanning its own history.
   // ------------------------------------------------------------------
-  def dsv2Since(s: SparkSession, dir: String): DataFrame = {
-    val (landing, t) = Scratch.staged(s, dir, "log_since") {
+  /** Two ingest chunks (event_id % 3 == 0, then the rest) appended to the
+    * graftlog directory `p`; returns the high-water stamp between them. */
+  private def twoChunks(s: SparkSession, dir: String, p: String): Long = {
+    val ev = events4(s, dir)
+    ev.filter(col("event_id") % 3 === 0)
+      .write.format("graftlog").mode("append").save(p)
+    val hw = GraftFs.listNames(p)
+      .filter(_.endsWith(".graftlog"))
+      .map(graft.sources.GraftLog.stampOf).max
+    ev.filter(col("event_id") % 3 =!= 0)
+      .write.format("graftlog").mode("append").save(p)
+    hw
+  }
+
+  private def sinceLanding(s: SparkSession, dir: String): (String, Long) =
+    Scratch.staged(s, dir, "log_since") {
       val p = scratch("graft_log_since")
-      val ev = Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-      ev.filter(col("event_id") % 3 === 0)
-        .write.format("graftlog").mode("append").save(p)
-      val hw = graft.sources.GraftFs.listNames(p)
-        .filter(_.endsWith(".graftlog"))
-        .map(graft.sources.GraftLog.stampOf).max
-      ev.filter(col("event_id") % 3 =!= 0)
-        .write.format("graftlog").mode("append").save(p)
-      (p, hw)
+      (p, twoChunks(s, dir, p))
     }
+
+  def dsv2Since(s: SparkSession, dir: String): DataFrame = {
+    val (landing, t) = sinceLanding(s, dir)
     s.read.format("graftlog").load(landing)
       .filter(col("_pub_stamp") > t)
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
@@ -451,19 +512,12 @@ object StorageOps extends QueryModule {
   // compaction must be invisible to every query. GraftCatalogSpec pins
   // the file counts, layout survival, order preservation, idempotence.
   // ------------------------------------------------------------------
+  private def cmpTable(s: SparkSession, dir: String): Unit =
+    freshTable(s, dir, "cmp_ev", Bucket8,
+      (0 until 5).map(i => events4(s, dir).filter(col("event_id") % 5 === i)))
+
   def dsv2Compact(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    Scratch.fresh(s, dir, "cmp_ev", GraftFs.child(wh, "cmp_ev")) {
-      s.sql("DROP TABLE IF EXISTS graftq.cmp_ev")
-      s.sql("CREATE TABLE graftq.cmp_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog " +
-        "PARTITIONED BY (bucket(8, user_id))")
-      val ev = Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-      (0 until 5).foreach { i =>
-        ev.filter(col("event_id") % 5 === i).writeTo("graftq.cmp_ev").append()
-      }
-    }
+    cmpTable(s, dir)
     s.sql("CALL graftq.system.compact(table => 'cmp_ev', target_mb => 64)").collect()
     s.table("graftq.cmp_ev").orderBy(col("event_id"))
   }
@@ -484,22 +538,16 @@ object StorageOps extends QueryModule {
   // the boundary semantics (legacy unstamped names never expire; orphan
   // tmps age out behind a grace window).
   // ------------------------------------------------------------------
-  def dsv2Expire(s: SparkSession, dir: String): DataFrame = {
-    // the two-chunk landing is staged input; every execution expires its
-    // own fresh copy of it, so the expire deletes chunk 1 every time
+  /** The two-chunk landing, staged; every execution expires its own fresh
+    * copy of it, so the expire deletes chunk 1 every time. Returns the copy
+    * and the high-water stamp between the chunks. */
+  private def expireLanding(s: SparkSession, dir: String): (String, Long) = {
     val landing = scratch("graft_log_expire")
-    val t = Scratch.fresh(s, dir, "log_expire", landing) {
-      val ev = Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-      ev.filter(col("event_id") % 3 === 0)
-        .write.format("graftlog").mode("append").save(landing)
-      val hw = graft.sources.GraftFs.listNames(landing)
-        .filter(_.endsWith(".graftlog"))
-        .map(graft.sources.GraftLog.stampOf).max
-      ev.filter(col("event_id") % 3 =!= 0)
-        .write.format("graftlog").mode("append").save(landing)
-      hw
-    }
+    (landing, Scratch.fresh(s, dir, "log_expire", landing)(twoChunks(s, dir, landing)))
+  }
+
+  def dsv2Expire(s: SparkSession, dir: String): DataFrame = {
+    val (landing, t) = expireLanding(s, dir)
     // path landing (no catalog table needed): call the engine entry the
     // procedure wraps — the procedure surface itself is spec-covered
     graft.sources.GraftLog.expire(landing, t + 1)
@@ -523,18 +571,11 @@ object StorageOps extends QueryModule {
   // published file is stamped), keeping them in the scanned plan while
   // the compared values stay run-independent (paths and stamps are not).
   // ------------------------------------------------------------------
+  private def metaTable(s: SparkSession, dir: String): String =
+    stagedTable(s, dir, "meta_ev")(eventsTable(s, "meta_ev", Bucket8, events4(s, dir)))
+
   def dsv2Meta(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    Scratch.staged(s, dir, "meta_ev") {
-      s.sql("DROP TABLE IF EXISTS graftq.meta_ev")
-      s.sql("CREATE TABLE graftq.meta_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog " +
-        "PARTITIONED BY (bucket(8, user_id))")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .writeTo("graftq.meta_ev").append()
-      GraftFs.child(wh, "meta_ev")
-    }
+    metaTable(s, dir)
     s.table("graftq.meta_ev")
       .filter(col("_file").isNotNull && col("_pub_stamp") > 0L)
       .groupBy(col("_bucket"))
@@ -560,17 +601,11 @@ object StorageOps extends QueryModule {
   // for row. GraftCatalogSpec pins the file-level provenance (untouched
   // files keep their names); this query pins the end-to-end semantics.
   // ------------------------------------------------------------------
+  private def delTable(s: SparkSession, dir: String): Unit =
+    freshTable(s, dir, "del_ev", Bucket8, Seq(events4(s, dir)))
+
   def dsv2Delete(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    Scratch.fresh(s, dir, "del_ev", GraftFs.child(wh, "del_ev")) {
-      s.sql("DROP TABLE IF EXISTS graftq.del_ev")
-      s.sql("CREATE TABLE graftq.del_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog " +
-        "PARTITIONED BY (bucket(8, user_id))")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .writeTo("graftq.del_ev").append()
-    }
+    delTable(s, dir)
     s.sql("DELETE FROM graftq.del_ev WHERE event_type = 'click' OR value < 120.0")
     s.table("graftq.del_ev").orderBy(col("event_id"))
   }
@@ -587,17 +622,11 @@ object StorageOps extends QueryModule {
   // every row of the affected files. Doubling is exact in binary
   // floating point, so the DuckDB CASE twin hashes identically.
   // ------------------------------------------------------------------
+  private def updTable(s: SparkSession, dir: String): Unit =
+    freshTable(s, dir, "upd_ev", Bucket8, Seq(events4(s, dir)))
+
   def dsv2Update(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    Scratch.fresh(s, dir, "upd_ev", GraftFs.child(wh, "upd_ev")) {
-      s.sql("DROP TABLE IF EXISTS graftq.upd_ev")
-      s.sql("CREATE TABLE graftq.upd_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog " +
-        "PARTITIONED BY (bucket(8, user_id))")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .writeTo("graftq.upd_ev").append()
-    }
+    updTable(s, dir)
     s.sql("UPDATE graftq.upd_ev SET value = value * 2 WHERE event_type = 'error'")
     s.table("graftq.upd_ev").orderBy(col("event_id"))
   }
@@ -616,17 +645,12 @@ object StorageOps extends QueryModule {
   // is one group-based ReplaceData; the oracle reproduces the post-merge
   // table as a CASE + UNION ALL over the parquet twin.
   // ------------------------------------------------------------------
+  private def mrgTable(s: SparkSession, dir: String): Unit =
+    freshTable(s, dir, "mrg_ev", Bucket8, Seq(events4(s, dir)))
+
   def dsv2Merge(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    val ev = Tables.load(s, dir, "events")
-      .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-    Scratch.fresh(s, dir, "mrg_ev", GraftFs.child(wh, "mrg_ev")) {
-      s.sql("DROP TABLE IF EXISTS graftq.mrg_ev")
-      s.sql("CREATE TABLE graftq.mrg_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog " +
-        "PARTITIONED BY (bucket(8, user_id))")
-      ev.writeTo("graftq.mrg_ev").append()
-    }
+    mrgTable(s, dir)
+    val ev = events4(s, dir)
     ev.filter(col("event_type") === "signup").withColumn("value", lit(0.0))
       .unionByName(ev.filter(col("event_type") === "error")
         .withColumn("event_id", col("event_id") + 1000000L)
@@ -735,18 +759,12 @@ object StorageOps extends QueryModule {
   // cannot cancel out. GraftCatalogSpec pins the mechanics (no data file
   // moved, one .graftdel published, compaction absorbs).
   // ------------------------------------------------------------------
+  private def morTable(s: SparkSession, dir: String): Unit =
+    freshTable(s, dir, "mor_ev", s"$Bucket8 TBLPROPERTIES ('delete.mode' = 'merge-on-read')",
+      Seq(events4(s, dir)))
+
   def dsv2DeleteMor(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    Scratch.fresh(s, dir, "mor_ev", GraftFs.child(wh, "mor_ev")) {
-      s.sql("DROP TABLE IF EXISTS graftq.mor_ev")
-      s.sql("CREATE TABLE graftq.mor_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog " +
-        "PARTITIONED BY (bucket(8, user_id)) " +
-        "TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .writeTo("graftq.mor_ev").append()
-    }
+    morTable(s, dir)
     s.sql("DELETE FROM graftq.mor_ev WHERE event_type = 'signup' OR value >= 450.0")
     s.table("graftq.mor_ev").orderBy(col("event_id"))
   }
@@ -767,25 +785,24 @@ object StorageOps extends QueryModule {
   // IDENTICAL to the uncompacted one instead of re-delivering the whole
   // file (r15's documented gap). The oracle is the second chunk.
   // ------------------------------------------------------------------
-  def dsv2SinceCompact(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    // fixture = two ingests + the mid-window compaction (the layout being
-    // read through); the timed operator is the stamp-pushed segment scan
-    val (_, t) = Scratch.staged(s, dir, "sincec_ev") {
-      s.sql("DROP TABLE IF EXISTS graftq.sincec_ev")
-      s.sql("CREATE TABLE graftq.sincec_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog")
-      val landing = GraftFs.child(wh, "sincec_ev")
-      val ev = Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-      ev.filter(col("event_id") % 3 === 0).writeTo("graftq.sincec_ev").append()
-      val hw = graft.sources.GraftFs.listNames(landing)
+  /** Fixture = two ingests + the mid-window compaction (the layout being
+    * read through); returns the table's directory and the stamp between
+    * the ingests. */
+  private def sincecTable(s: SparkSession, dir: String): (String, Long) =
+    stagedTable(s, dir, "sincec_ev") {
+      val ev = events4(s, dir)
+      val landing = eventsTable(s, "sincec_ev", "", ev.filter(col("event_id") % 3 === 0))
+      val hw = GraftFs.listNames(landing)
         .filter(_.endsWith(".graftlog"))
         .map(graft.sources.GraftLog.stampOf).max
       ev.filter(col("event_id") % 3 =!= 0).writeTo("graftq.sincec_ev").append()
       s.sql("CALL graftq.system.compact(table => 'sincec_ev', target_mb => 64)").collect()
       (landing, hw)
     }
+
+  def dsv2SinceCompact(s: SparkSession, dir: String): DataFrame = {
+    // the timed operator is the stamp-pushed segment scan
+    val (_, t) = sincecTable(s, dir)
     s.table("graftq.sincec_ev")
       .filter(col("_pub_stamp") > t)
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
@@ -807,22 +824,20 @@ object StorageOps extends QueryModule {
   // acceptable evolution cost at 100 TB). The oracle reproduces both
   // generations as a UNION ALL with CAST(NULL AS ...) for the old one.
   // ------------------------------------------------------------------
-  def dsv2Evolved(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    Scratch.staged(s, dir, "evo_ev") {
-      s.sql("DROP TABLE IF EXISTS graftq.evo_ev")
-      s.sql("CREATE TABLE graftq.evo_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog")
-      val ev = Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-      ev.filter(col("event_id") % 2 === 0).writeTo("graftq.evo_ev").append()
+  private def evoTable(s: SparkSession, dir: String): String =
+    stagedTable(s, dir, "evo_ev") {
+      val ev = events4(s, dir)
+      val p = eventsTable(s, "evo_ev", "", ev.filter(col("event_id") % 2 === 0))
       s.sql("ALTER TABLE graftq.evo_ev ADD COLUMNS (score DOUBLE, tag STRING)")
       ev.filter(col("event_id") % 2 =!= 0)
         .withColumn("score", col("value") * 2)
         .withColumn("tag", upper(col("event_type")))
         .writeTo("graftq.evo_ev").append()
-      GraftFs.child(wh, "evo_ev")
+      p
     }
+
+  def dsv2Evolved(s: SparkSession, dir: String): DataFrame = {
+    evoTable(s, dir)
     s.table("graftq.evo_ev").orderBy(col("event_id"))
   }
 
@@ -847,18 +862,12 @@ object StorageOps extends QueryModule {
   // twin shape as the copy-on-write update, different predicate/factor
   // so a path confusion cannot cancel out.
   // ------------------------------------------------------------------
+  private def updmTable(s: SparkSession, dir: String): Unit =
+    freshTable(s, dir, "updm_ev", s"$Bucket8 TBLPROPERTIES ('update.mode' = 'merge-on-read')",
+      Seq(events4(s, dir)))
+
   def dsv2UpdateMor(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    Scratch.fresh(s, dir, "updm_ev", GraftFs.child(wh, "updm_ev")) {
-      s.sql("DROP TABLE IF EXISTS graftq.updm_ev")
-      s.sql("CREATE TABLE graftq.updm_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog " +
-        "PARTITIONED BY (bucket(8, user_id)) " +
-        "TBLPROPERTIES ('update.mode' = 'merge-on-read')")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .writeTo("graftq.updm_ev").append()
-    }
+    updmTable(s, dir)
     s.sql("UPDATE graftq.updm_ev SET value = value * 4 WHERE event_type = 'click'")
     s.table("graftq.updm_ev").orderBy(col("event_id"))
   }
@@ -877,18 +886,13 @@ object StorageOps extends QueryModule {
   // different actions (purchase values negated, click events re-keyed),
   // so the two paths cannot be confused.
   // ------------------------------------------------------------------
+  private def mrgmTable(s: SparkSession, dir: String): Unit =
+    freshTable(s, dir, "mrgm_ev", s"$Bucket8 TBLPROPERTIES ('merge.mode' = 'merge-on-read')",
+      Seq(events4(s, dir)))
+
   def dsv2MergeMor(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    val ev = Tables.load(s, dir, "events")
-      .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-    Scratch.fresh(s, dir, "mrgm_ev", GraftFs.child(wh, "mrgm_ev")) {
-      s.sql("DROP TABLE IF EXISTS graftq.mrgm_ev")
-      s.sql("CREATE TABLE graftq.mrgm_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog " +
-        "PARTITIONED BY (bucket(8, user_id)) " +
-        "TBLPROPERTIES ('merge.mode' = 'merge-on-read')")
-      ev.writeTo("graftq.mrgm_ev").append()
-    }
+    mrgmTable(s, dir)
+    val ev = events4(s, dir)
     ev.filter(col("event_type") === "purchase").withColumn("value", -col("value"))
       .unionByName(ev.filter(col("event_type") === "click")
         .withColumn("event_id", col("event_id") + 2000000L)
@@ -923,20 +927,19 @@ object StorageOps extends QueryModule {
   // TIMESTAMP AS OF and the path-read `.option("asOfStamp", t)` are the
   // same resolution (GraftCatalogSpec pins all three surfaces).
   // ------------------------------------------------------------------
-  def dsv2AsOf(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    val (_, t) = Scratch.staged(s, dir, "asof_ev") {
-      s.sql("DROP TABLE IF EXISTS graftq.asof_ev")
-      s.sql("CREATE TABLE graftq.asof_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog")
-      val landing = GraftFs.child(wh, "asof_ev")
-      val ev = Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-      ev.filter(col("event_id") % 3 === 0).writeTo("graftq.asof_ev").append()
+  /** Two ingests; returns the table's directory and the snapshot stamp
+    * between them. */
+  private def asofTable(s: SparkSession, dir: String): (String, Long) =
+    stagedTable(s, dir, "asof_ev") {
+      val ev = events4(s, dir)
+      val landing = eventsTable(s, "asof_ev", "", ev.filter(col("event_id") % 3 === 0))
       val mid = graft.sources.GraftLog.latestSnapshotStamp(landing)
       ev.filter(col("event_id") % 3 =!= 0).writeTo("graftq.asof_ev").append()
       (landing, mid)
     }
+
+  def dsv2AsOf(s: SparkSession, dir: String): DataFrame = {
+    val (_, t) = asofTable(s, dir)
     s.sql(s"SELECT event_id, user_id, value, event_type " +
       s"FROM graftq.asof_ev VERSION AS OF '$t' ORDER BY event_id")
   }
@@ -957,23 +960,20 @@ object StorageOps extends QueryModule {
   // the CURRENT read (survivors only) would fail the hash, so the query
   // proves the historical read really bypasses the delete.
   // ------------------------------------------------------------------
-  def dsv2AsOfRetained(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    // fixture = ingest + the retained DELETE (the history being read
-    // through); the timed operator is the VERSION AS OF resolution + scan
-    val (_, t) = Scratch.staged(s, dir, "ret_ev") {
-      s.sql("DROP TABLE IF EXISTS graftq.ret_ev")
-      s.sql("CREATE TABLE graftq.ret_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog " +
-        "TBLPROPERTIES ('snapshot.retain' = 'true')")
-      val landing = GraftFs.child(wh, "ret_ev")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .writeTo("graftq.ret_ev").append()
+  /** Fixture = ingest + the retained DELETE (the history being read
+    * through); returns the table's directory and the snapshot stamp
+    * before the DELETE. */
+  private def retTable(s: SparkSession, dir: String): (String, Long) =
+    stagedTable(s, dir, "ret_ev") {
+      val landing = eventsTable(s, "ret_ev", Retain, events4(s, dir))
       val mid = graft.sources.GraftLog.latestSnapshotStamp(landing)
       s.sql("DELETE FROM graftq.ret_ev WHERE event_type = 'click'")
       (landing, mid)
     }
+
+  def dsv2AsOfRetained(s: SparkSession, dir: String): DataFrame = {
+    // the timed operator is the VERSION AS OF resolution + scan
+    val (_, t) = retTable(s, dir)
     s.sql(s"SELECT event_id, user_id, value, event_type " +
       s"FROM graftq.ret_ev VERSION AS OF '$t' ORDER BY event_id")
   }
@@ -995,8 +995,7 @@ object StorageOps extends QueryModule {
   // ------------------------------------------------------------------
   def dsv2Concurrent(s: SparkSession, dir: String): DataFrame = {
     val landing = scratch("graft_log_concurrent")
-    val ev = Tables.load(s, dir, "events")
-      .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
+    val ev = events4(s, dir)
     val halves = Seq(ev.filter(col("event_id") % 2 === 0),
       ev.filter(col("event_id") % 2 =!= 0))
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -1025,12 +1024,10 @@ object StorageOps extends QueryModule {
   // fails if any link mis-applies. artifacts/MANIFEST_SCALE_r17.json
   // carries the latency/bytes measurements at 10^3..10^5 files.
   // ------------------------------------------------------------------
-  def dsv2Chain(s: SparkSession, dir: String): DataFrame = {
-    val landing = Scratch.staged(s, dir, "log_chain") {
+  private def chainLanding(s: SparkSession, dir: String): String =
+    Scratch.staged(s, dir, "log_chain") {
       val p = scratch("graft_log_chain")
-      val ev = Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .cache()
+      val ev = events4(s, dir).cache()
       try {
         (0 until 18).foreach { k =>
           ev.filter(col("event_id") % 18 === k)
@@ -1042,8 +1039,9 @@ object StorageOps extends QueryModule {
       } finally { ev.unpersist(); () }
       p
     }
-    s.read.format("graftlog").load(landing).orderBy(col("event_id"))
-  }
+
+  def dsv2Chain(s: SparkSession, dir: String): DataFrame =
+    s.read.format("graftlog").load(chainLanding(s, dir)).orderBy(col("event_id"))
 
   val dsv2ChainSql: String =
     """SELECT event_id, user_id, value, event_type FROM events
@@ -1065,9 +1063,7 @@ object StorageOps extends QueryModule {
     val landing = scratch("graft_stream_compact")
     val out = scratch("graft_stream_compact_out")
     val ckpt = graft.Scratch.streamCkptDir("graft_stream_compact_ckpt")
-    val ev = Tables.load(s, dir, "events")
-      .filter(col("event_id") < 30000)
-      .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
+    val ev = events4(s, dir).filter(col("event_id") < 30000)
     def drain(): Unit = Streams.drain(s.readStream.format("graftlog").load(landing),
       Streams.Sink.Parquet(out), Trigger.AvailableNow(), ckpt = Some(ckpt))
     ev.filter(col("event_id") % 2 === 0)
@@ -1116,9 +1112,7 @@ object StorageOps extends QueryModule {
     val src = scratch("graft_upsert_src")
     val sink = scratch("graft_upsert_sink")
     val ckpt = graft.Scratch.streamCkptDir("graft_upsert_ckpt")
-    val ev = Tables.load(s, dir, "events")
-      .filter(col("event_id") < 30000)
-      .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
+    val ev = events4(s, dir).filter(col("event_id") < 30000)
     def drain(): Unit = upsertDrain(s, src, sink, "event_id", ckpt)
     ev.repartition(3).write.format("graftlog").mode("append").save(src)
     drain() // two epochs (3 files at maxFilesPerTrigger=2): inserts
@@ -1166,8 +1160,7 @@ object StorageOps extends QueryModule {
     val src = scratch("graft_upsert_ck_src")
     val sink = scratch("graft_upsert_ck_sink")
     val ckpt = graft.Scratch.streamCkptDir("graft_upsert_ck_ckpt")
-    val ev = Tables.load(s, dir, "events")
-      .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
+    val ev = events4(s, dir)
     def drain(): Unit = upsertDrain(s, src, sink, "user_id,event_type", ckpt)
     ev.repartition(1).sortWithinPartitions(col("event_id"))
       .write.format("graftlog").mode("append").save(src)
@@ -1209,23 +1202,22 @@ object StorageOps extends QueryModule {
   // decline for any value predicate). GraftLogSpec pins the planned-
   // partition counts; this oracle pins the rows.
   // ------------------------------------------------------------------
-  def dsv2StatsEvolved(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    Scratch.staged(s, dir, "stats_ev") {
-      s.sql("DROP TABLE IF EXISTS graftq.stats_ev")
-      s.sql("CREATE TABLE graftq.stats_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog")
+  private def statsTable(s: SparkSession, dir: String): String =
+    stagedTable(s, dir, "stats_ev") {
+      val p = eventsTable(s, "stats_ev", "")
       s.sql("ALTER TABLE graftq.stats_ev ADD COLUMN score DOUBLE")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
+      events4(s, dir)
         .withColumn("score",
           when(col("event_id") % 7 === 0, lit(null).cast("double"))
             .otherwise(col("value") * lit(0.5)))
         .repartitionByRange(6, col("score"))
         .sortWithinPartitions("score")
         .writeTo("graftq.stats_ev").append()
-      GraftFs.child(wh, "stats_ev")
+      p
     }
+
+  def dsv2StatsEvolved(s: SparkSession, dir: String): DataFrame = {
+    statsTable(s, dir)
     s.table("graftq.stats_ev")
       .filter(col("score") > 40.0)
       .orderBy(col("event_id"))
@@ -1246,16 +1238,11 @@ object StorageOps extends QueryModule {
   // opens ~1/N² of the landing (GraftLogSpec pins the planned-partition
   // skipping; this oracle pins the rows and the CALL surface).
   // ------------------------------------------------------------------
+  private def mclTable(s: SparkSession, dir: String): Unit =
+    freshTable(s, dir, "mcl_ev", "", Seq(events4(s, dir).repartition(5)))
+
   def dsv2ClusterMulti(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    Scratch.fresh(s, dir, "mcl_ev", GraftFs.child(wh, "mcl_ev")) {
-      s.sql("DROP TABLE IF EXISTS graftq.mcl_ev")
-      s.sql("CREATE TABLE graftq.mcl_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .repartition(5).writeTo("graftq.mcl_ev").append()
-    }
+    mclTable(s, dir)
     s.sql("CALL graftq.system.cluster(table => 'mcl_ev', " +
       "by => 'event_id,user_id', target_mb => 1)").collect()
     s.table("graftq.mcl_ev")
@@ -1279,25 +1266,22 @@ object StorageOps extends QueryModule {
   // (wall-clock); everything else is deterministic, so a mis-applied
   // chain link or a wrong change record fails the hash.
   // ------------------------------------------------------------------
-  def dsv2Snapshots(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    // fixture = the deterministic commit sequence whose history is being
-    // introspected; the timed operator is the snapshots procedure (a
-    // read-only walk of the manifest chain)
-    Scratch.staged(s, dir, "snap_ev") {
-      s.sql("DROP TABLE IF EXISTS graftq.snap_ev")
-      s.sql("CREATE TABLE graftq.snap_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog")
-      val ev = Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-      (0 until 3).foreach { k =>
-        ev.filter(col("event_id") % 3 === k).repartition(1)
-          .writeTo("graftq.snap_ev").append()
-      }
+  /** Fixture = the deterministic commit sequence whose history is being
+    * introspected. */
+  private def snapTable(s: SparkSession, dir: String): String =
+    stagedTable(s, dir, "snap_ev") {
+      val ev = events4(s, dir)
+      val p = eventsTable(s, "snap_ev", "",
+        (0 until 3).map(k => ev.filter(col("event_id") % 3 === k).repartition(1)): _*)
       s.sql("DELETE FROM graftq.snap_ev WHERE event_type = 'click'")
       s.sql("CALL graftq.system.compact(table => 'snap_ev', target_mb => 1024)").collect()
-      GraftFs.child(wh, "snap_ev")
+      p
     }
+
+  def dsv2Snapshots(s: SparkSession, dir: String): DataFrame = {
+    // the timed operator is the snapshots procedure (a read-only walk of
+    // the manifest chain)
+    snapTable(s, dir)
     s.sql("CALL graftq.system.snapshots(table => 'snap_ev')")
       .drop("stamp").orderBy(col("version"))
   }
@@ -1328,17 +1312,12 @@ object StorageOps extends QueryModule {
   // no-decode zone-map merge across compaction), this oracle pins the
   // rows.
   // ------------------------------------------------------------------
+  private def statsLanding(s: SparkSession, dir: String): String =
+    stagedLog(s, dir, "log_stats")(events4(s, dir)
+      .repartitionByRange(6, col("event_id")).sortWithinPartitions("event_id"))
+
   def dsv2StatsPruned(s: SparkSession, dir: String): DataFrame = {
-    val landing = Scratch.staged(s, dir, "log_stats") {
-      val p = scratch("graft_log_stats")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .repartitionByRange(6, col("event_id"))
-        .sortWithinPartitions("event_id")
-        .write.format("graftlog").mode("append").save(p)
-      p
-    }
-    s.read.format("graftlog").load(landing)
+    s.read.format("graftlog").load(statsLanding(s, dir))
       .filter(col("event_id") < 2000 && col("value") >= 1.0d)
       .orderBy(col("event_id"))
   }
@@ -1357,15 +1336,7 @@ object StorageOps extends QueryModule {
   // stats-served aggregates.
   // ------------------------------------------------------------------
   def dsv2AggStats(s: SparkSession, dir: String): DataFrame = {
-    val landing = Scratch.staged(s, dir, "log_metaagg") {
-      val p = scratch("graft_log_metaagg")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .repartition(4)
-        .write.format("graftlog").mode("append").save(p)
-      p
-    }
-    s.read.format("graftlog").load(landing)
+    s.read.format("graftlog").load(logLanding4(s, dir))
       .agg(count(lit(1)).as("n"),
         min(col("event_id")).as("eid_min"), max(col("event_id")).as("eid_max"),
         min(col("user_id")).as("uid_min"), max(col("user_id")).as("uid_max"),
@@ -1389,17 +1360,12 @@ object StorageOps extends QueryModule {
   // clusters by event_id, then range-scans; the oracle pins the rows and
   // GraftCatalogSpec pins the planned-file counts before/after.
   // ------------------------------------------------------------------
+  /** Hash-landed: every file spans the whole event_id domain. */
+  private def cluTable(s: SparkSession, dir: String): Unit =
+    freshTable(s, dir, "clu_ev", "", Seq(events4(s, dir).repartition(6)))
+
   def dsv2Cluster(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    Scratch.fresh(s, dir, "clu_ev", GraftFs.child(wh, "clu_ev")) {
-      s.sql("DROP TABLE IF EXISTS graftq.clu_ev")
-      s.sql("CREATE TABLE graftq.clu_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .repartition(6) // hash: every file spans the whole event_id domain
-        .writeTo("graftq.clu_ev").append()
-    }
+    cluTable(s, dir)
     s.sql("CALL graftq.system.cluster(table => 'clu_ev', by => 'event_id', " +
       "target_mb => 1)").collect()
     s.sql("SELECT event_id, user_id, value, event_type FROM graftq.clu_ev " +
@@ -1420,17 +1386,12 @@ object StorageOps extends QueryModule {
   // ORDER BY event_id OFFSET 40 in DuckDB. GraftLogSpec pins the
   // element-exact drop semantics; PlanShapeSpec pins offset-in-scan.
   // ------------------------------------------------------------------
+  private def offsetLanding(s: SparkSession, dir: String): String =
+    stagedLog(s, dir, "log_offset")(events4(s, dir)
+      .repartitionByRange(3, col("event_id")).sortWithinPartitions("event_id"))
+
   def dsv2Offset(s: SparkSession, dir: String): DataFrame = {
-    val landing = Scratch.staged(s, dir, "log_offset") {
-      val p = scratch("graft_log_offset")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .repartitionByRange(3, col("event_id"))
-        .sortWithinPartitions("event_id")
-        .write.format("graftlog").mode("append").save(p)
-      p
-    }
-    s.read.format("graftlog").load(landing)
+    s.read.format("graftlog").load(offsetLanding(s, dir))
       .filter(col("event_type") === "purchase")
       .offset(40)
       .orderBy(col("event_id"))
@@ -1453,14 +1414,7 @@ object StorageOps extends QueryModule {
   // PlanShapeSpec; per-file heap honesty pinned in GraftLogSpec.
   // ------------------------------------------------------------------
   def dsv2TopN(s: SparkSession, dir: String): DataFrame = {
-    val landing = Scratch.staged(s, dir, "log_topn") {
-      val p = scratch("graft_log_topn")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .repartition(4)
-        .write.format("graftlog").mode("append").save(p)
-      p
-    }
+    val landing = logLanding4(s, dir)
     s.read.format("graftlog").load(landing)
       .filter(col("event_type") === "purchase")
       .orderBy(col("value").desc, col("event_id"))
@@ -1484,14 +1438,7 @@ object StorageOps extends QueryModule {
   // discipline). Plan + scan-output-row-count pinned in the specs.
   // ------------------------------------------------------------------
   def dsv2Agg(s: SparkSession, dir: String): DataFrame = {
-    val landing = Scratch.staged(s, dir, "log_agg") {
-      val p = scratch("graft_log_agg")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .repartition(4)
-        .write.format("graftlog").mode("append").save(p)
-      p
-    }
+    val landing = logLanding4(s, dir)
     s.read.format("graftlog").load(landing)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -1519,14 +1466,7 @@ object StorageOps extends QueryModule {
   // condition, so a dropped filter can never change the answer.
   // ------------------------------------------------------------------
   def dsv2RuntimeFilter(s: SparkSession, dir: String): DataFrame = {
-    val landing = Scratch.staged(s, dir, "log_rtf") {
-      val p = scratch("graft_log_rtf")
-      Tables.load(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .repartition(4)
-        .write.format("graftlog").mode("append").save(p)
-      p
-    }
+    val landing = logLanding4(s, dir)
     val dim = Tables.load(s, dir, "customer")
       .filter(col("c_mktsegment") === "BUILDING")
       .select(col("c_custkey"))
@@ -1557,15 +1497,7 @@ object StorageOps extends QueryModule {
   def dsv2StreamSink(s: SparkSession, dir: String): DataFrame = {
     // the INPUT landing is a staged input; the V2 StreamingWrite drain into
     // a fresh sink + checkpoint is the operator and re-runs per execution
-    val in = Scratch.staged(s, dir, "log_sink_in") {
-      val p = scratch("graft_log_sink_in")
-      Tables.load(s, dir, "events")
-        .filter(col("event_id") < 20000)
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .repartition(4)
-        .write.format("graftlog").mode("append").save(p)
-      p
-    }
+    val in = logSlice(s, dir)
     val out = scratch("graft_log_sink_out")
     Streams.drain(s.readStream.format("graftlog").load(in), Streams.Sink.GraftLog(out),
       Trigger.AvailableNow())
@@ -1593,21 +1525,17 @@ object StorageOps extends QueryModule {
   // log's fixed schema (count -> event_id slot etc.) and renamed on
   // read-back.
   // ------------------------------------------------------------------
+  /** Two input files x one-file triggers = two data epochs: the minimum
+    * that PROVES replacement (epoch 2's snapshot must replace epoch 1's)
+    * without paying fixture-scale per-epoch machinery twice more. */
+  private def completeLanding(s: SparkSession, dir: String): String =
+    stagedLog(s, dir, "log_complete_in")(
+      events4(s, dir).filter(col("event_id") < 20000).repartition(2))
+
   def dsv2StreamComplete(s: SparkSession, dir: String): DataFrame = {
     // the INPUT landing is a staged input; the truncate-per-epoch drain
     // into a fresh sink + checkpoint is the operator, per execution
-    val in = Scratch.staged(s, dir, "log_complete_in") {
-      val p = scratch("graft_log_complete_in")
-      // two input files x one-file triggers = two data epochs: the minimum
-      // that PROVES replacement (epoch 2's snapshot must replace epoch 1's)
-      // without paying fixture-scale per-epoch machinery twice more
-      Tables.load(s, dir, "events")
-        .filter(col("event_id") < 20000)
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .repartition(2)
-        .write.format("graftlog").mode("append").save(p)
-      p
-    }
+    val in = completeLanding(s, dir)
     val out = scratch("graft_log_complete_out")
     val agg = s.readStream.format("graftlog")
       .option("maxFilesPerTrigger", "1").load(in)
@@ -1638,16 +1566,7 @@ object StorageOps extends QueryModule {
   // oracle; decimal-accumulate / double-render house discipline.
   // ------------------------------------------------------------------
   def dsv2StreamSource(s: SparkSession, dir: String): DataFrame = {
-    val landing = Scratch.staged(s, dir, "log_stream") {
-      val p = scratch("graft_log_stream")
-      Tables.load(s, dir, "events")
-        .filter(col("event_id") < 20000)
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .repartition(4)
-        .write.format("graftlog").mode("append").save(p)
-      p
-    }
-    val agg = s.readStream.format("graftlog").load(landing)
+    val agg = s.readStream.format("graftlog").load(logSlice(s, dir))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,4)")).cast("double").as("total_value"))
@@ -1689,19 +1608,12 @@ object StorageOps extends QueryModule {
     * wave for every fifth key, mid-window compaction). Returns the table
     * path and the window's two snapshot stamps. */
   private def changesFixture(s: SparkSession, dir: String)
-      : (String, java.lang.Long, java.lang.Long) = {
-    val wh = catalog(s)
-    Scratch.staged(s, dir, "cdf_ev") {
-      s.sql("DROP TABLE IF EXISTS graftq.cdf_ev")
-      s.sql("CREATE TABLE graftq.cdf_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog " +
-        "TBLPROPERTIES ('snapshot.retain'='true')")
-      val snk = wh + "/cdf_ev"
+      : (String, java.lang.Long, java.lang.Long) =
+    stagedTable(s, dir, "cdf_ev") {
+      val snk = eventsTable(s, "cdf_ev", Retain)
       val src = scratch("graft_cdf_src")
       val ckpt = graft.Scratch.streamCkptDir("graft_cdf_ckpt")
-      val ev = Tables.load(s, dir, "events")
-        .filter(col("event_id") < 30000)
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
+      val ev = events4(s, dir).filter(col("event_id") < 30000)
       ev.repartition(2).write.format("graftlog").mode("append").save(src)
       upsertDrain(s, src, snk, "event_id", ckpt) // wave 1: the baseline snapshot
       val a = graft.sources.GraftLog.latestSnapshotStamp(snk)
@@ -1716,7 +1628,6 @@ object StorageOps extends QueryModule {
       val b = graft.sources.GraftLog.latestSnapshotStamp(snk)
       (snk, java.lang.Long.valueOf(a), java.lang.Long.valueOf(b))
     }
-  }
 
   val dsv2ChangesSql: String =
     """SELECT event_id, user_id, value, event_type, _change_type FROM (
@@ -1774,23 +1685,16 @@ object StorageOps extends QueryModule {
   // delete killed in-window: NET leaves only the FROM row as a delete,
   // and a fresh row born and killed in-window appears on neither side).
   // ------------------------------------------------------------------
-  def dsv2ChangesU(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    // fixture = the standing-table history (baseline, correction + insert
-    // waves, MoR DELETE); the timed operator is the typed changelog
-    // derivation (readChanges with update images) over that window
-    val (sink, s1, s2) = Scratch.staged(s, dir, "cdfu_ev") {
-      s.sql("DROP TABLE IF EXISTS graftq.cdfu_ev")
-      s.sql("CREATE TABLE graftq.cdfu_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog " +
-        "TBLPROPERTIES ('snapshot.retain'='true', " +
-        "'delete.mode'='merge-on-read')")
-      val snk = wh + "/cdfu_ev"
+  /** Fixture = the standing-table history (baseline, correction + insert
+    * waves, MoR DELETE); returns the table path and the window's stamps. */
+  private def changesUFixture(s: SparkSession, dir: String)
+      : (String, java.lang.Long, java.lang.Long) =
+    stagedTable(s, dir, "cdfu_ev") {
+      val snk = eventsTable(s, "cdfu_ev",
+        "TBLPROPERTIES ('snapshot.retain'='true', 'delete.mode'='merge-on-read')")
       val src = scratch("graft_cdfu_src")
       val ckpt = graft.Scratch.streamCkptDir("graft_cdfu_ckpt")
-      val ev = Tables.load(s, dir, "events")
-        .filter(col("event_id") < 30000)
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
+      val ev = events4(s, dir).filter(col("event_id") < 30000)
       def drain(): Unit = upsertDrain(s, src, snk, "event_id", ckpt)
       ev.repartition(2).write.format("graftlog").mode("append").save(src)
       drain() // baseline
@@ -1807,6 +1711,11 @@ object StorageOps extends QueryModule {
       val b = graft.sources.GraftLog.latestSnapshotStamp(snk)
       (snk, java.lang.Long.valueOf(a), java.lang.Long.valueOf(b))
     }
+
+  def dsv2ChangesU(s: SparkSession, dir: String): DataFrame = {
+    // the timed operator is the typed changelog derivation (readChanges
+    // with update images) over the fixture's window
+    val (sink, s1, s2) = changesUFixture(s, dir)
     graft.sources.GraftLog.readChanges(s, sink, s1, s2,
         updateImages = true)
       .select(col("event_id"), col("user_id"), col("value"),
@@ -1844,16 +1753,11 @@ object StorageOps extends QueryModule {
   // `quality`, writes a second wave under the new name with a DIFFERENT
   // formula, and filters on `quality`: both generations must answer.
   // ------------------------------------------------------------------
-  def dsv2Renamed(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    Scratch.staged(s, dir, "ren_ev") {
-      s.sql("DROP TABLE IF EXISTS graftq.ren_ev")
-      s.sql("CREATE TABLE graftq.ren_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog")
+  private def renTable(s: SparkSession, dir: String): String =
+    stagedTable(s, dir, "ren_ev") {
+      val p = eventsTable(s, "ren_ev", "")
       s.sql("ALTER TABLE graftq.ren_ev ADD COLUMN score DOUBLE")
-      val ev = Tables.load(s, dir, "events")
-        .filter(col("event_id") < 30000)
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
+      val ev = events4(s, dir).filter(col("event_id") < 30000)
       ev.filter(col("event_id") % 2 === 0)
         .withColumn("score",
           when(col("event_id") % 7 === 0, lit(null).cast("double"))
@@ -1865,8 +1769,11 @@ object StorageOps extends QueryModule {
         .withColumn("quality", col("value") * lit(0.25))
         .repartitionByRange(4, col("quality")).sortWithinPartitions("quality")
         .writeTo("graftq.ren_ev").append()
-      GraftFs.child(wh, "ren_ev")
+      p
     }
+
+  def dsv2Renamed(s: SparkSession, dir: String): DataFrame = {
+    renTable(s, dir)
     s.table("graftq.ren_ev")
       .filter(col("quality") > 40.0)
       .orderBy(col("event_id"))
@@ -1899,21 +1806,15 @@ object StorageOps extends QueryModule {
   // content becomes main's tip at the fast-forward publish, so phase b
   // reads the retained publish snapshot — the branch view, lazily.
   // ------------------------------------------------------------------
-  def dsv2Branch(s: SparkSession, dir: String): DataFrame = {
-    val wh = catalog(s)
-    // fixture = the write-audit-publish commit SEQUENCE (append, branch,
-    // staged append, publish) whose three observable states the query
-    // reads; the timed operator is the stamp-pinned three-phase read
-    val (sink, stagedStamp, publishStamp) = Scratch.staged(s, dir, "br_ev") {
-      s.sql("DROP TABLE IF EXISTS graftq.br_ev")
-      s.sql("CREATE TABLE graftq.br_ev (event_id BIGINT, user_id BIGINT, " +
-        "value DOUBLE, event_type STRING) USING graftlog " +
-        "TBLPROPERTIES ('snapshot.retain'='true')")
-      val snk = wh + "/br_ev"
-      val ev = Tables.load(s, dir, "events")
-        .filter(col("event_id") < 30000)
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-      ev.filter(col("event_id") % 2 === 0).writeTo("graftq.br_ev").append()
+  /** Fixture = the write-audit-publish commit SEQUENCE (append, branch,
+    * staged append, publish) whose three observable states the query
+    * reads; returns the table path, main's stamp while staged and the
+    * publish stamp. */
+  private def branchFixture(s: SparkSession, dir: String)
+      : (String, java.lang.Long, java.lang.Long) =
+    stagedTable(s, dir, "br_ev") {
+      val ev = events4(s, dir).filter(col("event_id") < 30000)
+      val snk = eventsTable(s, "br_ev", Retain, ev.filter(col("event_id") % 2 === 0))
       val staged = graft.sources.GraftLog.latestSnapshotStamp(snk)
       s.sql("CALL graftq.system.branch(table => 'br_ev', name => 'fix')").collect()
       ev.filter(col("event_id") % 2 === 1)
@@ -1922,6 +1823,10 @@ object StorageOps extends QueryModule {
       val pub = graft.sources.GraftLog.latestSnapshotStamp(snk)
       (snk, java.lang.Long.valueOf(staged), java.lang.Long.valueOf(pub))
     }
+
+  def dsv2Branch(s: SparkSession, dir: String): DataFrame = {
+    // the timed operator is the stamp-pinned three-phase read
+    val (sink, stagedStamp, publishStamp) = branchFixture(s, dir)
     def phase(stamp: Long, label: String) =
       s.read.format("graftlog").option("asOfStamp", stamp).load(sink)
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
@@ -1945,103 +1850,54 @@ object StorageOps extends QueryModule {
       |  FROM events WHERE event_id < 30000
       |) ORDER BY phase, event_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "scan_dsv2_branch" -> (dsv2Branch _),
-    "scan_dsv2_renamed" -> (dsv2Renamed _),
-    "scan_dsv2_changes" -> (dsv2Changes _),
-    "scan_dsv2_changes_u" -> (dsv2ChangesU _),
-    "stream_dsv2_upsert_ck" -> (dsv2StreamUpsertCk _),
-    "stream_dsv2_changes" -> (dsv2StreamChanges _),
-    "json_roundtrip" -> (jsonRoundtrip _),
-    "orc_roundtrip" -> (orcRoundtrip _),
-    "scan_partition_pruned" -> (partitionPruned _),
-    "storage_partition_prune" -> (datePartitionPrune _),
-    "scan_range_clustered" -> (rangeClusteredScan _),
-    "scan_zorder" -> (zorderScan _),
-    "join_bucketed" -> (bucketedJoin _),
-    "scan_dsv2_pushdown" -> (dsv2Pushdown _),
-    "scan_dsv2_or" -> (dsv2OrPushdown _),
-    "scan_dsv2_offset" -> (dsv2Offset _),
-    "pipeline_dsv2_flagship" -> (dsv2Flagship _),
-    "join_dsv2_partitioned" -> (dsv2PartitionedJoin _),
-    "scan_dsv2_meta" -> (dsv2Meta _),
-    "scan_dsv2_since" -> (dsv2Since _),
-    "call_dsv2_compact" -> (dsv2Compact _),
-    "call_dsv2_expire" -> (dsv2Expire _),
-    "delete_dsv2_rewrite" -> (dsv2Delete _),
-    "delete_dsv2_mor" -> (dsv2DeleteMor _),
-    "scan_dsv2_since_compact" -> (dsv2SinceCompact _),
-    "scan_dsv2_evolved" -> (dsv2Evolved _),
-    "scan_dsv2_asof" -> (dsv2AsOf _),
-    "scan_dsv2_asof_retained" -> (dsv2AsOfRetained _),
-    "scan_dsv2_concurrent" -> (dsv2Concurrent _),
-    "scan_dsv2_chain" -> (dsv2Chain _),
-    "stream_dsv2_compact" -> (dsv2StreamCompact _),
-    "stream_dsv2_upsert" -> (dsv2StreamUpsert _),
-    "scan_dsv2_stats_evolved" -> (dsv2StatsEvolved _),
-    "call_dsv2_cluster_multi" -> (dsv2ClusterMulti _),
-    "call_dsv2_snapshots" -> (dsv2Snapshots _),
-    "scan_dsv2_stats_pruned" -> (dsv2StatsPruned _),
-    "agg_dsv2_stats" -> (dsv2AggStats _),
-    "call_dsv2_cluster" -> (dsv2Cluster _),
-    "update_dsv2_rewrite" -> (dsv2Update _),
-    "update_dsv2_mor" -> (dsv2UpdateMor _),
-    "merge_dsv2_upsert" -> (dsv2Merge _),
-    "merge_dsv2_mor" -> (dsv2MergeMor _),
-    "scan_dsv2_topn" -> (dsv2TopN _),
-    "scan_dsv2_agg" -> (dsv2Agg _),
-    "join_dsv2_runtime" -> (dsv2RuntimeFilter _),
-    "stream_dsv2_source" -> (dsv2StreamSource _),
-    "stream_dsv2_sink" -> (dsv2StreamSink _),
-    "stream_dsv2_complete" -> (dsv2StreamComplete _))
-
-  def oracles: Map[String, String] = Map(
-    "scan_dsv2_branch" -> dsv2BranchSql,
-    "scan_dsv2_renamed" -> dsv2RenamedSql,
-    "scan_dsv2_changes" -> dsv2ChangesSql,
-    "scan_dsv2_changes_u" -> dsv2ChangesUSql,
-    "stream_dsv2_upsert_ck" -> dsv2StreamUpsertCkSql,
-    "stream_dsv2_changes" -> dsv2StreamChangesSql,
-    "json_roundtrip" -> jsonRoundtripSql,
-    "orc_roundtrip" -> orcRoundtripSql,
-    "scan_partition_pruned" -> partitionPrunedSql,
-    "storage_partition_prune" -> datePartitionPruneSql,
-    "scan_range_clustered" -> rangeClusteredScanSql,
-    "scan_zorder" -> zorderScanSql,
-    "join_bucketed" -> bucketedJoinSql,
-    "scan_dsv2_pushdown" -> dsv2PushdownSql,
-    "scan_dsv2_or" -> dsv2OrPushdownSql,
-    "scan_dsv2_offset" -> dsv2OffsetSql,
-    "pipeline_dsv2_flagship" -> dsv2FlagshipSql,
-    "join_dsv2_partitioned" -> dsv2PartitionedJoinSql,
-    "scan_dsv2_meta" -> dsv2MetaSql,
-    "scan_dsv2_since" -> dsv2SinceSql,
-    "call_dsv2_compact" -> dsv2CompactSql,
-    "call_dsv2_expire" -> dsv2ExpireSql,
-    "delete_dsv2_rewrite" -> dsv2DeleteSql,
-    "delete_dsv2_mor" -> dsv2DeleteMorSql,
-    "scan_dsv2_since_compact" -> dsv2SinceCompactSql,
-    "scan_dsv2_evolved" -> dsv2EvolvedSql,
-    "scan_dsv2_asof" -> dsv2AsOfSql,
-    "scan_dsv2_asof_retained" -> dsv2AsOfRetainedSql,
-    "scan_dsv2_concurrent" -> dsv2ConcurrentSql,
-    "scan_dsv2_chain" -> dsv2ChainSql,
-    "stream_dsv2_compact" -> dsv2StreamCompactSql,
-    "stream_dsv2_upsert" -> dsv2StreamUpsertSql,
-    "scan_dsv2_stats_evolved" -> dsv2StatsEvolvedSql,
-    "call_dsv2_cluster_multi" -> dsv2ClusterMultiSql,
-    "call_dsv2_snapshots" -> dsv2SnapshotsSql,
-    "scan_dsv2_stats_pruned" -> dsv2StatsPrunedSql,
-    "agg_dsv2_stats" -> dsv2AggStatsSql,
-    "call_dsv2_cluster" -> dsv2ClusterSql,
-    "update_dsv2_rewrite" -> dsv2UpdateSql,
-    "update_dsv2_mor" -> dsv2UpdateMorSql,
-    "merge_dsv2_mor" -> dsv2MergeMorSql,
-    "merge_dsv2_upsert" -> dsv2MergeSql,
-    "scan_dsv2_topn" -> dsv2TopNSql,
-    "scan_dsv2_agg" -> dsv2AggSql,
-    "join_dsv2_runtime" -> dsv2RuntimeFilterSql,
-    "stream_dsv2_source" -> dsv2StreamSourceSql,
-    "stream_dsv2_sink" -> dsv2StreamSinkSql,
-    "stream_dsv2_complete" -> dsv2StreamCompleteSql)
+  val queries: Map[String, Query] = Map(
+    "scan_dsv2_branch" -> Query(dsv2Branch _, dsv2BranchSql, branchFixture _),
+    "scan_dsv2_renamed" -> Query(dsv2Renamed _, dsv2RenamedSql, renTable _),
+    "scan_dsv2_changes" -> Query(dsv2Changes _, dsv2ChangesSql, changesFixture _),
+    "scan_dsv2_changes_u" -> Query(dsv2ChangesU _, dsv2ChangesUSql, changesUFixture _),
+    "stream_dsv2_upsert_ck" -> Query(dsv2StreamUpsertCk _, dsv2StreamUpsertCkSql),
+    "stream_dsv2_changes" -> Query(dsv2StreamChanges _, dsv2StreamChangesSql, changesFixture _),
+    "json_roundtrip" -> Query(jsonRoundtrip _, jsonRoundtripSql),
+    "orc_roundtrip" -> Query(orcRoundtrip _, orcRoundtripSql),
+    "scan_partition_pruned" -> Query(partitionPruned _, partitionPrunedSql, partLanding _),
+    "storage_partition_prune" -> Query(datePartitionPrune _, datePartitionPruneSql,
+      datePartLanding _),
+    "scan_range_clustered" -> Query(rangeClusteredScan _, rangeClusteredScanSql, rangeLanding _),
+    "scan_zorder" -> Query(zorderScan _, zorderScanSql, zorderLanding _),
+    "join_bucketed" -> Query(bucketedJoin _, bucketedJoinSql, bucketedTables _),
+    "scan_dsv2_pushdown" -> Query(dsv2Pushdown _, dsv2PushdownSql, logLanding _),
+    "scan_dsv2_or" -> Query(dsv2OrPushdown _, dsv2OrPushdownSql, logLanding4 _),
+    "scan_dsv2_offset" -> Query(dsv2Offset _, dsv2OffsetSql, offsetLanding _),
+    "pipeline_dsv2_flagship" -> Query(dsv2Flagship _, dsv2FlagshipSql),
+    "join_dsv2_partitioned" -> Query(dsv2PartitionedJoin _, dsv2PartitionedJoinSql, spjTables _),
+    "scan_dsv2_meta" -> Query(dsv2Meta _, dsv2MetaSql, metaTable _),
+    "scan_dsv2_since" -> Query(dsv2Since _, dsv2SinceSql, sinceLanding _),
+    "call_dsv2_compact" -> Query(dsv2Compact _, dsv2CompactSql, cmpTable _),
+    "call_dsv2_expire" -> Query(dsv2Expire _, dsv2ExpireSql, expireLanding _),
+    "delete_dsv2_rewrite" -> Query(dsv2Delete _, dsv2DeleteSql, delTable _),
+    "delete_dsv2_mor" -> Query(dsv2DeleteMor _, dsv2DeleteMorSql, morTable _),
+    "scan_dsv2_since_compact" -> Query(dsv2SinceCompact _, dsv2SinceCompactSql, sincecTable _),
+    "scan_dsv2_evolved" -> Query(dsv2Evolved _, dsv2EvolvedSql, evoTable _),
+    "scan_dsv2_asof" -> Query(dsv2AsOf _, dsv2AsOfSql, asofTable _),
+    "scan_dsv2_asof_retained" -> Query(dsv2AsOfRetained _, dsv2AsOfRetainedSql, retTable _),
+    "scan_dsv2_concurrent" -> Query(dsv2Concurrent _, dsv2ConcurrentSql),
+    "scan_dsv2_chain" -> Query(dsv2Chain _, dsv2ChainSql, chainLanding _),
+    "stream_dsv2_compact" -> Query(dsv2StreamCompact _, dsv2StreamCompactSql),
+    "stream_dsv2_upsert" -> Query(dsv2StreamUpsert _, dsv2StreamUpsertSql),
+    "scan_dsv2_stats_evolved" -> Query(dsv2StatsEvolved _, dsv2StatsEvolvedSql, statsTable _),
+    "call_dsv2_cluster_multi" -> Query(dsv2ClusterMulti _, dsv2ClusterMultiSql, mclTable _),
+    "call_dsv2_snapshots" -> Query(dsv2Snapshots _, dsv2SnapshotsSql, snapTable _),
+    "scan_dsv2_stats_pruned" -> Query(dsv2StatsPruned _, dsv2StatsPrunedSql, statsLanding _),
+    "agg_dsv2_stats" -> Query(dsv2AggStats _, dsv2AggStatsSql, logLanding4 _),
+    "call_dsv2_cluster" -> Query(dsv2Cluster _, dsv2ClusterSql, cluTable _),
+    "update_dsv2_rewrite" -> Query(dsv2Update _, dsv2UpdateSql, updTable _),
+    "update_dsv2_mor" -> Query(dsv2UpdateMor _, dsv2UpdateMorSql, updmTable _),
+    "merge_dsv2_upsert" -> Query(dsv2Merge _, dsv2MergeSql, mrgTable _),
+    "merge_dsv2_mor" -> Query(dsv2MergeMor _, dsv2MergeMorSql, mrgmTable _),
+    "scan_dsv2_topn" -> Query(dsv2TopN _, dsv2TopNSql, logLanding4 _),
+    "scan_dsv2_agg" -> Query(dsv2Agg _, dsv2AggSql, logLanding4 _),
+    "join_dsv2_runtime" -> Query(dsv2RuntimeFilter _, dsv2RuntimeFilterSql, logLanding4 _),
+    "stream_dsv2_source" -> Query(dsv2StreamSource _, dsv2StreamSourceSql, logSlice _),
+    "stream_dsv2_sink" -> Query(dsv2StreamSink _, dsv2StreamSinkSql, logSlice _),
+    "stream_dsv2_complete" -> Query(dsv2StreamComplete _, dsv2StreamCompleteSql, completeLanding _))
 }

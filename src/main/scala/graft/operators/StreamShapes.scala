@@ -177,10 +177,10 @@ object StreamShapes extends QueryModule {
     * function of the input table, so re-executions (Bench runs every
     * query several times; Verify and specs again) reuse the first write
     * instead of re-materializing 1.1x the events table each time. */
-  private def dedupLanding(s: SparkSession, dir: String, cols: Seq[org.apache.spark.sql.Column]): String =
-    graft.Scratch.staged(s, dir, "stream_dedup") {
+  private def dedupLanding(s: SparkSession, dir: String): String =
+    graft.Scratch.staged(s, dir, "dedup_landing") {
       val path = graft.Scratch.dir("graft_stream_dedup")
-      val evs = ev(s, dir).filter(col("event_id") < STREAM_BOUND).select(cols: _*)
+      val evs = ev(s, dir).filter(col("event_id") < STREAM_BOUND).select(streamCols: _*)
       evs.unionAll(evs.filter(pmod(col("event_id"), lit(13)) === 0)) // inject dupes
         .write.parquet(path)
       path
@@ -192,12 +192,12 @@ object StreamShapes extends QueryModule {
         Tables.events.filterNot(_.name == "props")))
       .parquet(landing))
 
-  def streamDedup(s: SparkSession, dir: String): DataFrame = {
-    val cols = Seq("event_id", "ts", "user_id", "event_type", "value").map(col)
-    Streams.runToCompletion(dedupedStream(s, dedupLanding(s, dir, cols)), OutputMode.Append())
-      .select(cols: _*)
+  private def streamCols = Seq("event_id", "ts", "user_id", "event_type", "value").map(col)
+
+  def streamDedup(s: SparkSession, dir: String): DataFrame =
+    Streams.runToCompletion(dedupedStream(s, dedupLanding(s, dir)), OutputMode.Append())
+      .select(streamCols: _*)
       .orderBy(col("event_id"))
-  }
 
   // ------------------------------------------------------------------
   // ST3 + §2.9 pacing, driver-visible: the same watermark+dedup transform,
@@ -208,13 +208,11 @@ object StreamShapes extends QueryModule {
   // the AvailableNow-style run, so the SAME batch oracle hash-checks the
   // paced execution path.
   // ------------------------------------------------------------------
-  def streamPaced(s: SparkSession, dir: String): DataFrame = {
-    val cols = Seq("event_id", "ts", "user_id", "event_type", "value").map(col)
-    Streams.runToCompletion(dedupedStream(s, dedupLanding(s, dir, cols)), OutputMode.Append(),
+  def streamPaced(s: SparkSession, dir: String): DataFrame =
+    Streams.runToCompletion(dedupedStream(s, dedupLanding(s, dir)), OutputMode.Append(),
       Trigger.ProcessingTime("100 milliseconds"))
-      .select(cols: _*)
+      .select(streamCols: _*)
       .orderBy(col("event_id"))
-  }
 
   val streamDedupSql: String =
     """SELECT event_id, ts, user_id, event_type, value
@@ -295,15 +293,17 @@ object StreamShapes extends QueryModule {
     * machinery (file-source manifest, checkpoint replay) rather than
     * re-deriving the identical chunk parquet with two Spark write jobs
     * every execution. */
-  def streamIncremental(s: SparkSession, dir: String): DataFrame = {
-    val cols = Seq("event_id", "ts", "user_id", "event_type", "value").map(col)
-    val (stage1, stage2) = graft.Scratch.staged(s, dir, "stream_incr_chunks") {
+  private def incrChunks(s: SparkSession, dir: String): (String, String) =
+    graft.Scratch.staged(s, dir, "stream_incr_chunks") {
       val (a, b) = (graft.Scratch.dir("graft_incr_c1"), graft.Scratch.dir("graft_incr_c2"))
-      val evs = ev(s, dir).filter(col("event_id") < STREAM_BOUND).select(cols: _*)
+      val evs = ev(s, dir).filter(col("event_id") < STREAM_BOUND).select(streamCols: _*)
       evs.filter(pmod(col("event_id"), lit(2)) === 0).write.parquet(a) // chunk 1
       evs.filter(pmod(col("event_id"), lit(2)) === 1).write.parquet(b) // chunk 2
       (a, b)
     }
+
+  def streamIncremental(s: SparkSession, dir: String): DataFrame = {
+    val (stage1, stage2) = incrChunks(s, dir)
     val base = graft.Scratch.dir("graft_stream_incr")
     // data landing + sink stay on disk (they are the data plane); only the
     // checkpoint — ephemeral per-run progress metadata — goes to tmpfs
@@ -318,7 +318,7 @@ object StreamShapes extends QueryModule {
     drainOnce()
     arrive(stage2, landing, "c2") // chunk 2 lands
     drainOnce()          // resume
-    s.read.schema(schema).parquet(out).select(cols: _*).orderBy("event_id")
+    s.read.schema(schema).parquet(out).select(streamCols: _*).orderBy("event_id")
   }
 
   /** Lands a staged chunk: copies its `part-` files into `landing` under
@@ -356,7 +356,7 @@ object StreamShapes extends QueryModule {
     * self-pair space is pure bench ballast. The oracles apply the
     * identical bound. */
   private def joinLandings(s: SparkSession, dir: String): (String, String) =
-    graft.Scratch.staged(s, dir, "stream_join") {
+    graft.Scratch.staged(s, dir, "join_landings") {
       val (a, b) = (graft.Scratch.dir("graft_stream_join_a"), graft.Scratch.dir("graft_stream_join_b"))
       val evs = ev(s, dir).select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value")).filter(col("event_id") < 20000)
@@ -620,7 +620,7 @@ object StreamShapes extends QueryModule {
   // by user instead of coalescing).
   // ------------------------------------------------------------------
   private def sessionLanding(s: SparkSession, dir: String): String =
-    graft.Scratch.staged(s, dir, "stream_sessions") {
+    graft.Scratch.staged(s, dir, "session_landing") {
       val path = graft.Scratch.dir("graft_stream_sess")
       val evs = ev(s, dir).filter(col("event_id") < STREAM_BOUND)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
@@ -927,14 +927,17 @@ object StreamShapes extends QueryModule {
   // checkpoint + state generations stay per-call (a reused checkpoint
   // would see no new files and merge nothing).
   // ------------------------------------------------------------------
-  def streamMergeUpsert(s: SparkSession, dir: String): DataFrame = {
-    val landing = graft.Scratch.staged(s, dir, "stream_merge") {
+  private def mergeLanding(s: SparkSession, dir: String): String =
+    graft.Scratch.staged(s, dir, "stream_merge") {
       val p = graft.Scratch.dir("graft_stream_merge_landing")
       ev(s, dir).filter(col("event_id") < STREAM_BOUND)
         .select(col("user_id"), col("ts"), col("event_id"), col("value"))
         .repartition(6).write.mode("overwrite").parquet(p)
       p
     }
+
+  def streamMergeUpsert(s: SparkSession, dir: String): DataFrame = {
+    val landing = mergeLanding(s, dir)
     val stateBase = graft.Scratch.dir("graft_stream_merge_state")
     var cur: Option[String] = None
     var gen = 0
@@ -1068,60 +1071,39 @@ object StreamShapes extends QueryModule {
       |FROM range(0, ${RATE_ROWS * RATE_BATCHES}) t(v)
       |GROUP BY 1 ORDER BY bucket""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_rate_source" -> (streamRateSource _),
-    "stream_static_join" -> (streamStaticJoin _),
-    "stream_merge_upsert" -> (streamMergeUpsert _),
-    "stream_tumbling" -> (streamTumbling _),
-    "stream_tumbling_append" -> (streamTumblingAppend _),
-    "stream_session_append" -> (streamSessionAppend _),
-    "events_session_conversion" -> (sessionConversion _),
-    "stream_sliding" -> (streamSliding _),
-    "events_gapfill" -> (gapfill _),
-    "events_retention" -> (retention _),
-    "stream_sessions" -> (streamSessions _),
-    "events_funnel" -> (funnel _),
-    "events_scd2" -> (scd2Intervals _),
-    "stream_join" -> (streamStreamJoin _),
-    "stream_join_full" -> (streamStreamJoinFull _),
-    "stream_join_outer" -> (streamStreamJoinOuter _),
-    "stream_tumbling_full" -> (streamTumblingFull _),
-    "events_tumbling" -> (tumbling _),
-    "events_sliding" -> (sliding _),
-    "events_session" -> (sessions _),
-    "stream_dedup" -> (streamDedup _),
-    "stream_paced" -> (streamPaced _),
-    "stream_user_state" -> (streamUserState _),
-    "stream_user_state_tws" -> (streamUserStateTws _),
-    "stream_incremental" -> (streamIncremental _))
-
-  def oracles: Map[String, String] = Map(
+  val queries: Map[String, Query] = Map(
     // stream_* oracles carry the SAME event_id bound as the bounded
     // landing (inert at the sf0.001/sf0.01 spec+oracle scales — the slice
     // IS the whole table there); batch twins stay unbounded.
-    "stream_rate_source" -> streamRateSourceSql,
-    "stream_static_join" -> streamStaticJoinSql,
-    "stream_merge_upsert" -> boundedSql(streamMergeUpsertSql),
-    "stream_tumbling" -> boundedSql(tumblingSql),
-    "stream_tumbling_append" -> boundedSql(streamTumblingAppendSql),
-    "stream_session_append" -> boundedSql(streamSessionAppendSql),
-    "events_session_conversion" -> sessionConversionSql,
-    "stream_sliding" -> boundedSql(slidingSql),
-    "events_gapfill" -> gapfillSql,
-    "events_retention" -> retentionSql,
-    "stream_sessions" -> boundedSql(streamSessionsSql),
-    "events_funnel" -> funnelSql,
-    "events_scd2" -> scd2IntervalsSql,
-    "stream_join" -> streamStreamJoinSql,
-    "stream_join_full" -> streamStreamJoinFullSql,
-    "stream_join_outer" -> streamStreamJoinOuterSql,
-    "stream_tumbling_full" -> tumblingSql,
-    "events_tumbling" -> tumblingSql,
-    "events_sliding" -> slidingSql,
-    "events_session" -> sessionsSql,
-    "stream_dedup" -> boundedSql(streamDedupSql),
-    "stream_paced" -> boundedSql(streamDedupSql),
-    "stream_user_state" -> streamUserStateSql,
-    "stream_user_state_tws" -> boundedSql(streamUserStateSql),
-    "stream_incremental" -> boundedSql(streamIncrementalSql))
+    "stream_rate_source" -> Query(streamRateSource _, streamRateSourceSql),
+    "stream_static_join" -> Query(streamStaticJoin _, streamStaticJoinSql, boundedLanding _),
+    "stream_merge_upsert" -> Query(streamMergeUpsert _, boundedSql(streamMergeUpsertSql),
+      mergeLanding _),
+    "stream_tumbling" -> Query(streamTumbling _, boundedSql(tumblingSql), boundedLanding _),
+    "stream_tumbling_append" -> Query(streamTumblingAppend _, boundedSql(streamTumblingAppendSql),
+      boundedLanding _),
+    "stream_session_append" -> Query(streamSessionAppend _, boundedSql(streamSessionAppendSql),
+      boundedLanding _),
+    "events_session_conversion" -> Query(sessionConversion _, sessionConversionSql),
+    "stream_sliding" -> Query(streamSliding _, boundedSql(slidingSql), boundedLanding _),
+    "events_gapfill" -> Query(gapfill _, gapfillSql),
+    "events_retention" -> Query(retention _, retentionSql),
+    "stream_sessions" -> Query(streamSessions _, boundedSql(streamSessionsSql), sessionLanding _),
+    "events_funnel" -> Query(funnel _, funnelSql),
+    "events_scd2" -> Query(scd2Intervals _, scd2IntervalsSql),
+    "stream_join" -> Query(streamStreamJoin _, streamStreamJoinSql, joinLandings _),
+    "stream_join_full" -> Query(streamStreamJoinFull _, streamStreamJoinFullSql,
+      Tables.eventsStreamTs _),
+    "stream_join_outer" -> Query(streamStreamJoinOuter _, streamStreamJoinOuterSql, joinLandings _),
+    "stream_tumbling_full" -> Query(streamTumblingFull _, tumblingSql, Tables.eventsStreamTs _),
+    "events_tumbling" -> Query(tumbling _, tumblingSql),
+    "events_sliding" -> Query(sliding _, slidingSql),
+    "events_session" -> Query(sessions _, sessionsSql),
+    "stream_dedup" -> Query(streamDedup _, boundedSql(streamDedupSql), dedupLanding _),
+    "stream_paced" -> Query(streamPaced _, boundedSql(streamDedupSql), dedupLanding _),
+    "stream_user_state" -> Query(streamUserState _, streamUserStateSql, Tables.eventsStreamTs _),
+    "stream_user_state_tws" -> Query(streamUserStateTws _, boundedSql(streamUserStateSql),
+      boundedLanding _),
+    "stream_incremental" -> Query(streamIncremental _, boundedSql(streamIncrementalSql),
+      incrChunks _))
 }

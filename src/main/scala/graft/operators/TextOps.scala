@@ -706,39 +706,21 @@ object TextOps extends QueryModule {
       |  1.0 - CAST(SUM(c*c) AS DOUBLE) / CAST(SUM(c)*SUM(c) AS DOUBLE) AS gini
       |FROM tc GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "docs_token_gini" -> (tokenGini _),
-    "docs_collocations" -> (collocations _),
-    "docs_repetition" -> (repetition _),
-    "docs_vocab_topk" -> (vocabTopK _),
-    "docs_freq_sketch" -> (freqSketch _),
-    "docs_tfidf_topk" -> (tfidfTopK _),
-    "docs_rrf_fusion" -> (rrfFusion _),
-    "docs_oov_rate" -> (oovRate _),
-    "docs_pii_scrub" -> (piiScrub _),
-    "docs_rolling_fp" -> (rollingFingerprint _),
-    "docs_bpe_tokens" -> (bpeTokens _),
-    "docs_token_stats" -> (tokenStats _),
-    "docs_lang_profile" -> (langProfile _),
-    "docs_quality" -> (quality _),
-    "docs_langid" -> (langId _),
-    "docs_fingerprint" -> (fingerprint _))
-
-  def oracles: Map[String, String] = Map(
-    "docs_token_gini" -> tokenGiniSql,
-    "docs_collocations" -> collocationsSql,
-    "docs_repetition" -> repetitionSql,
-    "docs_vocab_topk" -> vocabTopKSql,
-    "docs_freq_sketch" -> freqSketchSql,
-    "docs_tfidf_topk" -> tfidfTopKSql,
-    "docs_rrf_fusion" -> rrfFusionSql,
-    "docs_oov_rate" -> oovRateSql,
-    "docs_pii_scrub" -> piiScrubSql,
-    "docs_rolling_fp" -> rollingFingerprintSql,
-    "docs_bpe_tokens" -> bpeTokensSql,
-    "docs_token_stats" -> tokenStatsSql,
-    "docs_lang_profile" -> langProfileSql,
-    "docs_quality" -> qualitySql,
-    "docs_langid" -> langIdSql,
-    "docs_fingerprint" -> fingerprintSql)
+  val queries: Map[String, Query] = Map(
+    "docs_token_gini" -> Query(tokenGini _, tokenGiniSql),
+    "docs_collocations" -> Query(collocations _, collocationsSql),
+    "docs_repetition" -> Query(repetition _, repetitionSql),
+    "docs_vocab_topk" -> Query(vocabTopK _, vocabTopKSql),
+    "docs_freq_sketch" -> Query(freqSketch _, freqSketchSql),
+    "docs_tfidf_topk" -> Query(tfidfTopK _, tfidfTopKSql),
+    "docs_rrf_fusion" -> Query(rrfFusion _, rrfFusionSql),
+    "docs_oov_rate" -> Query(oovRate _, oovRateSql),
+    "docs_pii_scrub" -> Query(piiScrub _, piiScrubSql),
+    "docs_rolling_fp" -> Query(rollingFingerprint _, rollingFingerprintSql),
+    "docs_bpe_tokens" -> Query(bpeTokens _, bpeTokensSql),
+    "docs_token_stats" -> Query(tokenStats _, tokenStatsSql),
+    "docs_lang_profile" -> Query(langProfile _, langProfileSql),
+    "docs_quality" -> Query(quality _, qualitySql),
+    "docs_langid" -> Query(langId _, langIdSql),
+    "docs_fingerprint" -> Query(fingerprint _, fingerprintSql))
 }

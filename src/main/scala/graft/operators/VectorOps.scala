@@ -500,22 +500,25 @@ object VectorOps extends QueryModule {
       .orderBy(col("qid"), col("rank"))
   }
 
+  private def pqInput(s: SparkSession, dir: String): DataFrame =
+    emb(s, dir).select(col("vec_id"), col("embedding").cast("array<double>").as("de"))
+
   def pqTopK(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("de"))
+    val e = pqInput(s, dir)
     pqSearch(s, e, pqTrain(e))
   }
 
-  /** Bench-only: the search path alone, over codebooks staged as an input
-    * (trained once per (session, dir) — plain driver-side arrays, no Spark
-    * resources to leak). Registered via BenchOnly so BENCH_r{N}.json
-    * carries an honest steady-state search cost next to emb_pq_topk's
-    * train+search cost. */
-  private[graft] def pqTopKSearchOnly(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("de"))
-    pqSearch(s, e, graft.Scratch.staged(s, dir, "pq_codebooks")(pqTrain(e)))
-  }
+  /** PQ codebooks staged as an input (trained once per (session, dir) —
+    * plain driver-side arrays, no Spark resources to leak). */
+  private[graft] def pqCodebooks(s: SparkSession, dir: String)
+      : IndexedSeq[Seq[(Long, Array[Double])]] =
+    graft.Scratch.staged(s, dir, "pq_codebooks")(pqTrain(pqInput(s, dir)))
+
+  /** Bench-only: the search path alone, over the staged codebooks.
+    * Registered via BenchOnly so BENCH_r{N}.json carries an honest
+    * steady-state search cost next to emb_pq_topk's train+search cost. */
+  private[graft] def pqTopKSearchOnly(s: SparkSession, dir: String): DataFrame =
+    pqSearch(s, pqInput(s, dir), pqCodebooks(s, dir))
 
   /** Shared oracle fragments: the PQ train/encode CTE chain (`e`, `s`,
     * init/assign/update per subspace, `enc`) plus the ADC helpers — used
@@ -1262,33 +1265,18 @@ object VectorOps extends QueryModule {
       |  FROM v)
       |WHERE vr = 1 ORDER BY qid""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "emb_knn_classify" -> (knnClassify _),
-    "emb_ann_binary" -> (annBinary _),
-    "emb_ann_sq8" -> (annSq8 _),
-    "emb_mmr_topk" -> (mmrTopK _),
-    "emb_cosine_topk" -> (cosineTopK _),
-    "emb_ann_recall" -> (annRecall _),
-    "emb_cosine_topk_fast" -> (cosineTopKFast _),
-    "emb_ann_ivf" -> (annIvf _),
-    "emb_kmeans" -> (kmeansTrain _),
-    "emb_pq_topk" -> (pqTopK _),
-    "emb_ann_ivfpq" -> (annIvfPq _),
-    "emb_ann_ivfpq_res" -> (annIvfPqResidual _),
-    "dedup_embedding_cosine" -> (embeddingNearDupBlocked _))
-
-  def oracles: Map[String, String] = Map(
-    "emb_knn_classify" -> knnClassifySql,
-    "emb_ann_binary" -> annBinarySql,
-    "emb_ann_sq8" -> annSq8Sql,
-    "emb_mmr_topk" -> mmrTopKSql,
-    "emb_cosine_topk" -> cosineTopKSql,
-    "emb_ann_recall" -> annRecallSql,
-    "emb_cosine_topk_fast" -> cosineTopKSql,
-    "emb_ann_ivf" -> annIvfSql,
-    "emb_kmeans" -> kmeansTrainSql,
-    "emb_pq_topk" -> pqTopKSql,
-    "emb_ann_ivfpq" -> annIvfPqSql,
-    "emb_ann_ivfpq_res" -> annIvfPqResidualSql,
-    "dedup_embedding_cosine" -> embeddingNearDupSql)
+  val queries: Map[String, Query] = Map(
+    "emb_knn_classify" -> Query(knnClassify _, knnClassifySql),
+    "emb_ann_binary" -> Query(annBinary _, annBinarySql),
+    "emb_ann_sq8" -> Query(annSq8 _, annSq8Sql),
+    "emb_mmr_topk" -> Query(mmrTopK _, mmrTopKSql),
+    "emb_cosine_topk" -> Query(cosineTopK _, cosineTopKSql),
+    "emb_ann_recall" -> Query(annRecall _, annRecallSql),
+    "emb_cosine_topk_fast" -> Query(cosineTopKFast _, cosineTopKSql),
+    "emb_ann_ivf" -> Query(annIvf _, annIvfSql),
+    "emb_kmeans" -> Query(kmeansTrain _, kmeansTrainSql),
+    "emb_pq_topk" -> Query(pqTopK _, pqTopKSql),
+    "emb_ann_ivfpq" -> Query(annIvfPq _, annIvfPqSql),
+    "emb_ann_ivfpq_res" -> Query(annIvfPqResidual _, annIvfPqResidualSql),
+    "dedup_embedding_cosine" -> Query(embeddingNearDupBlocked _, embeddingNearDupSql))
 }

@@ -164,6 +164,15 @@ object Tables {
     * regeneration invalidates. */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
     requireNanosAsLong(spark)
+    val streamSchema = StructType(events.map(f =>
+      if (f.name == "ts") StructField("ts", eventsStreamTs(spark, sfDir)) else f))
+    normalizeTs(spark.readStream.schema(streamSchema).parquet(s"$sfDir/events.parqu*"), "ts")
+  }
+
+  /** The physical `ts` type of the events stream's files, a staged input
+    * that a query streaming through [[eventsStream]] declares in its
+    * `prepare`. */
+  def eventsStreamTs(spark: SparkSession, sfDir: String): DataType = {
     // Peek the schema over the SAME glob the stream reads (round-9 advice:
     // peeking events.parquet alone while streaming events.parqu* mirrors
     // the wrong physical type if the glob ever matches files from a
@@ -179,7 +188,7 @@ object Tables {
     // a sink metadata directory under the literal glob name, which fails
     // and logs a FileNotFoundException warning on every peek.
     val glob = s"$sfDir/events.parqu*"
-    val physicalTs = graft.Scratch.staged(spark, sfDir, "events_stream_ts") {
+    graft.Scratch.staged(spark, sfDir, "events_stream_ts") {
       val matched = GraftFs.listNames(sfDir).filter(_.startsWith("events.parqu"))
         .sorted.map(GraftFs.child(sfDir, _))
       require(matched.nonEmpty, s"events stream glob $glob matches no files")
@@ -193,8 +202,5 @@ object Tables {
           "split the landing by writer generation")
       top
     }
-    val streamSchema = StructType(events.map(f =>
-      if (f.name == "ts") StructField("ts", physicalTs) else f))
-    normalizeTs(spark.readStream.schema(streamSchema).parquet(glob), "ts")
   }
 }

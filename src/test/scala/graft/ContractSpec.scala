@@ -5,25 +5,6 @@ package graft
   * loudly here first. */
 class ContractSpec extends SparkTestBase {
 
-  /** Queries intentionally WITHOUT oracle SQL — each needs a reason.
-    * EMPTY as of round 11: the last two entries (dedup_minhash_ml,
-    * emb_ann_brp_lsh — "MLlib hash family not reproducible in SQL") came
-    * off when LshOps started generating DuckDB oracles with the
-    * seed-deterministic hash coefficients inlined as literals.
-    * (round 2: the multimodal stub queries moved off — the stub is byte
-    * arithmetic over verified-ASCII text, so DuckDB reproduces it.
-    * round 3: the approx sketches moved off — they emit exact values plus
-    * a within-bound verdict the oracle reproduces as literal TRUE.) */
-  private val rowsOnlyAllowlist = Map.empty[String, String]
-
-  test("every query has oracle SQL or a documented rows-only reason") {
-    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    val undocumented = noOracle -- rowsOnlyAllowlist.keySet
-    assert(undocumented.isEmpty, s"queries missing oracle AND allowlist entry: $undocumented")
-    val stale = rowsOnlyAllowlist.keySet -- SparkEntry.queries.keySet
-    assert(stale.isEmpty, s"allowlist entries with no query: $stale")
-  }
-
   test("registry size matches the counts documented in SURVEY §2 / README") {
     // The round-6 verdict caught the docs drifting from the registry
     // (127/125 documented vs 128/126 actual), and round 8 caught this pin
@@ -33,6 +14,8 @@ class ContractSpec extends SparkTestBase {
       s"queries registered: ${SparkEntry.queries.size}; update docs + this pin together")
     assert(SparkEntry.oracleSql.size == 226,
       s"oracle-checked: ${SparkEntry.oracleSql.size}; update docs + this pin together")
+    val blank = SparkEntry.oracleSql.collect { case (n, sql) if sql.trim.isEmpty => n }
+    assert(blank.isEmpty, s"registered queries with blank oracle SQL: $blank")
     def documented(path: String): (Int, Int) = {
       val text = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
@@ -272,21 +255,42 @@ class ContractSpec extends SparkTestBase {
       s"measured run recorded wall ${run.wallS} s and ${run.stages.size} stages")
   }
 
-  test("every oracle key has a query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")
-  }
-
   test("entry (driver smoke) returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("each registered query is named once under operators/") {
+    // a query is one value: its name, run, oracle and staging are written
+    // together, so a second literal of a name means a second registry
+    val texts = scalaFiles("src/main/scala/graft/operators").map(f =>
+      new String(java.nio.file.Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8))
+    val counts = SparkEntry.queries.keys.toSeq.sorted.map { n =>
+      n -> texts.map(_.split(java.util.regex.Pattern.quote("\"" + n + "\""), -1).length - 1).sum
+    }
+    val off = counts.filter(_._2 != 1)
+    assert(off.isEmpty, s"query names not written exactly once under operators/: " +
+      off.map { case (n, c) => s"$n x$c" }.mkString(", "))
+  }
+
   test("every query builds and resolves (analysis succeeds) on sf0.001") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sfDir)
+    // every staged or fresh input a query's construction touches must
+    // already have been touched by its own prepare, or Bench's setup_s
+    // misses it and its warm run pays it
+    import scala.jdk.CollectionConverters._
+    val touched = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    Scratch.onAccess = (tag, _, _) => { touched.add(tag); () }
+    try Bench.benchable.toSeq.sortBy(_._1).foreach { case (name, q) =>
+      touched.clear()
+      q.prepare(spark, sfDir)
+      val prepared = touched.asScala.toSet
+      touched.clear()
+      val df = q.run(spark, sfDir)
+      val undeclared = touched.asScala.toSet -- prepared
+      assert(undeclared.isEmpty,
+        s"$name's run stages ${undeclared.toSeq.sorted.mkString(", ")}, which its prepare does not")
       assert(df.schema.fields.nonEmpty, s"$name produced empty schema")
       assert(df.schema.fieldNames.distinct.length == df.schema.fieldNames.length,
         s"$name has duplicate column names (breaks the driver's column-sorted hash)")
-    }
+    } finally Scratch.onAccess = (_, _, _) => ()
   }
 }

@@ -11,31 +11,9 @@ import scala.jdk.CollectionConverters._
   * build; purge forgets every staged input. */
 class StagedInputSpec extends SparkTestBase {
 
-  /** Every registered query that reads a staged input (directly, or via
-    * a StreamShapes landing or Tables.eventsStream). A new query that
-    * stages its input belongs on this list. */
-  private val stagingQueries = Seq(
-    // StorageOps
-    "scan_partition_pruned", "join_bucketed", "scan_range_clustered", "scan_zorder",
-    "storage_partition_prune", "scan_dsv2_pushdown", "scan_dsv2_or",
-    "join_dsv2_partitioned", "scan_dsv2_since", "call_dsv2_compact", "call_dsv2_expire",
-    "scan_dsv2_meta", "delete_dsv2_rewrite", "update_dsv2_rewrite", "merge_dsv2_upsert",
-    "delete_dsv2_mor", "scan_dsv2_since_compact", "scan_dsv2_evolved", "update_dsv2_mor",
-    "merge_dsv2_mor", "scan_dsv2_asof", "scan_dsv2_asof_retained", "scan_dsv2_chain",
-    "scan_dsv2_stats_evolved", "call_dsv2_cluster_multi", "call_dsv2_snapshots",
-    "scan_dsv2_stats_pruned", "agg_dsv2_stats", "call_dsv2_cluster", "scan_dsv2_offset",
-    "scan_dsv2_topn", "scan_dsv2_agg", "join_dsv2_runtime", "stream_dsv2_sink",
-    "stream_dsv2_complete", "stream_dsv2_source", "scan_dsv2_changes",
-    "stream_dsv2_changes", "scan_dsv2_changes_u", "scan_dsv2_renamed", "scan_dsv2_branch",
-    // StreamShapes
-    "stream_dedup", "stream_paced", "stream_user_state", "stream_user_state_tws",
-    "stream_incremental", "stream_join", "stream_join_full", "stream_join_outer",
-    "stream_sessions", "stream_tumbling", "stream_tumbling_full", "stream_sliding",
-    "stream_tumbling_append", "stream_session_append", "stream_merge_upsert",
-    "stream_static_join",
-    // DedupOps
-    "dedup_minhash_clusters", "dedup_cluster_sizes", "dedup_triangles",
-    "dedup_degree_hist", "dedup_pagerank", "dedup_kcore", "dedup_incremental_store")
+  /** Every benchable query that declares staging: a non-empty `prepare`. */
+  private def stagingQueries: Seq[(String, graft.operators.Query)] =
+    Bench.benchable.toSeq.sortBy(_._1).filter(_._2.prepare ne graft.operators.Query.nothing)
 
   /** Directories a staged value points at (paths, or tuples of them). */
   private def dirsIn(v: Any): Seq[String] = v match {
@@ -55,11 +33,11 @@ class StagedInputSpec extends SparkTestBase {
   }
 
   test("two executions of every staging query leave each staged directory unchanged") {
-    val missing = stagingQueries.filterNot(SparkEntry.queries.contains)
-    assert(missing.isEmpty, s"not registered: $missing")
-    def runAll(): Unit = stagingQueries.foreach { q =>
-      try SparkEntry.queries(q)(spark, sfDir).collect()
-      catch { case e: Throwable => fail(s"$q failed", e) }
+    assert(stagingQueries.nonEmpty && stagingQueries.size < Bench.benchable.size,
+      s"${stagingQueries.size} of ${Bench.benchable.size} queries declare staging; the filter is broken")
+    def runAll(): Unit = stagingQueries.foreach { case (name, q) =>
+      try q(spark, sfDir).collect()
+      catch { case e: Throwable => fail(s"$name failed", e) }
     }
     // A query that mutates its staged input during the execution that
     // built it leaves the same mutated state after every later execution,
@@ -67,9 +45,11 @@ class StagedInputSpec extends SparkTestBase {
     val atBuild = new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long, Long)]]()
     val builds = new AtomicInteger()
     Scratch.purge(spark) // every input below is built under the observer
-    Scratch.onBuilt = { v =>
-      builds.incrementAndGet()
-      dirsIn(v).foreach(d => atBuild.put(d, fingerprint(d)))
+    Scratch.onAccess = { (_, v, built) =>
+      if (built) {
+        builds.incrementAndGet()
+        dirsIn(v).foreach(d => atBuild.put(d, fingerprint(d)))
+      }
     }
     try {
       runAll()
@@ -90,7 +70,7 @@ class StagedInputSpec extends SparkTestBase {
       val bySecond = report(beforeSecond)
       assert(bySecond.isEmpty,
         s"staged directories changed by a second execution: ${bySecond.mkString("; ")}")
-    } finally Scratch.onBuilt = _ => ()
+    } finally Scratch.onAccess = (_, _, _) => ()
   }
 
   test("a staged build may stage another input") {
