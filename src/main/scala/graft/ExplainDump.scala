@@ -7,8 +7,8 @@ package graft
   *
   * {{{ sbt "runMain graft.ExplainDump r21 before dedup_pagerank profile_lineitem" }}}
   *
-  * Calling a query runs its `prepare`, which stages its inputs, before
-  * its `run` builds the plan. For queries whose construction runs eager
+  * Calling a query runs its `run`, which stages its inputs on first use
+  * and builds the plan. For queries whose construction runs eager
   * jobs (iterative loops, PQ training collects), the formatted plan shows
   * the FINAL declared DataFrame only; the eager prefix is visible in the
   * bench telemetry (stages per run) instead.

@@ -4,8 +4,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Shared text derivations for the [EXT] LLM-data-pipeline operators
-  * (SURVEY.md §2.10 L2x/L4x). Everything is built-in-function composition —
-  * codegen'd, no UDFs — with exact DuckDB twins for the oracle.
+  * (SURVEY.md §2.10 L2x/L4x). Everything is built-in-function composition,
+  * no UDFs, with exact DuckDB twins for the oracle. `tokens` is codegen'd;
+  * `shingles` is built on `transform`, a higher-order function that is
+  * `CodegenFallback`: its lambda is interpreted per row inside the
+  * generated stage (ROADMAP Direction 14).
   */
 object TextFns {
 

@@ -4,8 +4,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Vector math over `array<float>` embedding columns via higher-order
-  * functions (SURVEY.md §2.10 L3x). Everything runs inside codegen'd
-  * built-ins — no UDF, no serialization round-trip.
+  * functions (SURVEY.md §2.10 L3x): built-ins only, no UDF, no
+  * serialization round-trip. `zip_with` and `aggregate` are
+  * `CodegenFallback`, so their lambdas are interpreted per row inside the
+  * generated stage (ROADMAP Direction 14); `graft.plans.CosineSimilarity` is
+  * the codegen'd form of [[cosine]].
   *
   * Determinism contract: elements are cast float->double (exact), products
   * and the fold accumulate IN ARRAY ORDER in double precision — the same

@@ -384,41 +384,43 @@ object TextOps extends QueryModule {
   // ------------------------------------------------------------------
   // Lexical retrieval: TF-IDF top-K for a fixed query term set — the
   // inverted-index probe expressed relationally (the engine's vector
-  // search gets a keyword-search sibling). Postings for ONLY the query
-  // terms survive the explode filter, so what shuffles is linear in the
-  // matching postings, never the corpus token stream; document length
-  // rides the same single tokenize pass; idf joins broadcast (bounded by
-  // |terms|); the top-K is a TakeOrdered. Scoring is deliberately
-  // LOG-FREE — tf/len * N/df as pure integer ratios — because ln() is
-  // not guaranteed bit-identical across libm implementations, while
-  // single double divisions/multiplications in a fixed left-assoc order
-  // are; per-term contributions are pivoted to columns and added in
-  // literal term order, mirrored exactly in the oracle.
+  // search gets a keyword-search sibling). Shuffle-free: each document's
+  // term counts come from its own token array (no explode, no postings
+  // exchange), one global aggregate yields the corpus size and the
+  // per-term document frequencies (|terms| + 1 numbers, broadcast), and
+  // the top-K is a TakeOrdered over the documents holding a term.
+  // Scoring is deliberately LOG-FREE — tf/len * N/df as pure integer
+  // ratios — because ln() is not guaranteed bit-identical across libm
+  // implementations, while single double divisions/multiplications in a
+  // fixed left-assoc order are; per-term contributions (0.0 for an absent
+  // term) are added in literal term order, mirrored exactly in the oracle.
   // ------------------------------------------------------------------
   private val TFIDF_TERMS = Seq("join", "vector", "stream")
   private val TFIDF_K = 10
 
   /** The (doc_id, score) relation shared by docs_tfidf_topk and
-    * docs_rrf_fusion: scores exist only for documents matching at least
-    * one query term (the postings explode filters everything else), so
-    * downstream consumers take a partial top-K, never a global sort. */
+    * docs_rrf_fusion (doc_id is the documents key): scores exist only for
+    * documents holding at least one query term, so downstream consumers
+    * take a partial top-K, never a global sort. */
   private def tfidfScored(s: SparkSession, dir: String): DataFrame = {
-    val post = docs(s, dir)
-      .select(col("doc_id"), size(toks).as("len"), explode(toks).as("token"))
-      .filter(col("token").isin(TFIDF_TERMS: _*))
-    val tf = post.groupBy(col("doc_id"), col("len"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-    val dfs = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val n = docs(s, dir).agg(count(lit(1)).as("n_docs"))
-    val contrib = tf.join(broadcast(dfs), Seq("token")).crossJoin(broadcast(n))
-      .withColumn("c",
-        (col("tf").cast("double") / col("len").cast("double")) *
-          (col("n_docs").cast("double") / col("df").cast("double")))
-    val pivoted = contrib.groupBy(col("doc_id"))
-      .pivot("token", TFIDF_TERMS).agg(first(col("c")))
-    val score = TFIDF_TERMS.map(t => coalesce(col(t), lit(0.0))).reduceLeft(_ + _)
-    pivoted.withColumn("score", score)
-      .select(col("doc_id"), col("score"))
+    def tf(t: String): Column = col(s"tf_$t")
+    // occurrences of t: the elements array_remove drops (null text: null)
+    val counted = docs(s, dir).select(col("doc_id"), toks.as("tk"))
+      .select(col("doc_id") +: size(col("tk")).as("len") +:
+        TFIDF_TERMS.map(t => (size(col("tk")) - size(array_remove(col("tk"), t))).as(s"tf_$t")): _*)
+    val stats = counted.agg(count(lit(1)).as("n_docs"),
+      TFIDF_TERMS.map(t => count(when(tf(t) > 0, 1)).as(s"df_$t")): _*)
+    def contrib(t: String): Column =
+      when(tf(t) > 0,
+        (tf(t).cast("double") / col("len").cast("double")) *
+          (col("n_docs").cast("double") / col(s"df_$t").cast("double")))
+        .otherwise(lit(0.0))
+    // a document holding a term scores > 0, every other one exactly 0.0;
+    // filtering on the score keeps the token array's derivations out of
+    // the filter, which Catalyst would otherwise inline below the project
+    counted.crossJoin(broadcast(stats))
+      .select(col("doc_id"), TFIDF_TERMS.map(contrib).reduceLeft(_ + _).as("score"))
+      .filter(col("score") > 0.0)
   }
 
   def tfidfTopK(s: SparkSession, dir: String): DataFrame =
@@ -462,46 +464,49 @@ object TextOps extends QueryModule {
   // ranking and the dense cosine ranking for one query vector (vec_id 0),
   // aligned on doc_id = vec_id. The production hybrid-search shape: each
   // retriever independently produces a BOUNDED candidate pool (lexical
-  // pool via TakeOrdered over the postings-matched docs; dense pool via
-  // the exact scorer here, an ANN probe at corpus scale — both partial
-  // top-K, no global sort or single-partition window anywhere), and the
-  // fusion itself runs on the driver over the two collected 50-row lists
-  // — the MMR/codebook bounded-collect pattern; rank positions come from
-  // Spark-ordered collects, so no float ever crosses engines. Fusion
-  // scores are INTEGER-SCALED: contribution = 1e12 div (60 + rank) in
-  // exact integer division on both engines (the standard RRF k=60), so
-  // the fused key is a BIGINT and hash parity is structural.
+  // pool via TakeOrdered over the term-matched docs; dense pool via the
+  // exact scorer here, an ANN probe at corpus scale — both partial top-K,
+  // no global sort or single-partition window anywhere). The whole fusion
+  // is ONE lazy plan: each 50-row pool is ranked inside Spark by sorting
+  // its collected (score, -id) pairs in the pool's own (score DESC, id)
+  // order, so no float ever crosses engines, and the two ranked pools
+  // meet in a full outer join on the id. Both sides are single-partition
+  // aggregates, so the join plans no exchange. Fusion scores are
+  // INTEGER-SCALED: contribution = 1e12 div (60 + rank) in exact integer
+  // division on both engines (the standard RRF k=60), so the fused key is
+  // a BIGINT and hash parity is structural.
   // ------------------------------------------------------------------
   private val RRF_POOL = 50
   private val RRF_K = 10
   private val RRF_C = 60            // the canonical RRF damping constant
   private val RRF_SCALE = 1000000000000L
 
+  /** A top-[[RRF_POOL]] pool as (`id`, `rank`), rank 1..n in the pool's
+    * (`score` DESC, `id`) order. The score is sorted as is, never
+    * negated: NaN sorts first descending, but -NaN would sort last. */
+  private def ranked(pool: DataFrame, score: String, id: String, rank: String): DataFrame =
+    pool.orderBy(col(score).desc, col(id)).limit(RRF_POOL)
+      .agg(sort_array(collect_list(struct(col(score), (-col(id)).as("nid"))), asc = false).as("p"))
+      .select(posexplode(col("p")))
+      .select((-col("col.nid")).as(id), (col("pos") + 1).as(rank))
+
   def rrfFusion(s: SparkSession, dir: String): DataFrame = {
-    val lexIds = tfidfScored(s, dir)
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(RRF_POOL)
-      .select(col("doc_id")).collect().map(_.getLong(0))
+    val lex = ranked(tfidfScored(s, dir), "score", "doc_id", "lex_rank")
     val e = Tables.load(s, dir, "embeddings")
     val q = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("qe"))
-    val vecIds = e.filter(col("vec_id") =!= 0)
+    val vec = ranked(e.filter(col("vec_id") =!= 0)
       .select(col("vec_id").as("did"), col("embedding").as("de"))
       .crossJoin(broadcast(q))
-      .select(col("did"), VectorFns.cosine(col("qe"), col("de")).as("cos"))
-      .orderBy(col("cos").desc, col("did"))
-      .limit(RRF_POOL)
-      .select(col("did")).collect().map(_.getLong(0))
-    val lexRank = lexIds.zipWithIndex.map { case (d, i) => d -> (i + 1) }.toMap
-    val vecRank = vecIds.zipWithIndex.map { case (d, i) => d -> (i + 1) }.toMap
-    def contrib(r: Option[Int]): Long = r.fold(0L)(x => RRF_SCALE / (RRF_C + x))
-    val fused = (lexRank.keySet ++ vecRank.keySet).toSeq.map { d =>
-      (d, contrib(lexRank.get(d)) + contrib(vecRank.get(d)),
-        lexRank.get(d), vecRank.get(d))
-    }.sortBy { case (d, f, _, _) => (-f, d) }.take(RRF_K)
-    import s.implicits._
-    fused.toDF("doc_id", "fused", "lex_rank", "vec_rank")
+      .select(col("did"), VectorFns.cosine(col("qe"), col("de")).as("cos")),
+      "cos", "did", "vec_rank")
+    def contrib(rank: String): Column = coalesce(expr(s"$RRF_SCALE div ($RRF_C + $rank)"), lit(0L))
+    lex.join(vec, col("doc_id") === col("did"), "full_outer")
+      .select(coalesce(col("doc_id"), col("did")).as("doc_id"),
+        (contrib("lex_rank") + contrib("vec_rank")).as("fused"),
+        col("lex_rank"), col("vec_rank"))
       .orderBy(col("fused").desc, col("doc_id"))
+      .limit(RRF_K)
   }
 
   val rrfFusionSql: String =

@@ -1,24 +1,36 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types._
 
 /** Typed loaders for the driver-shipped fixture tables
   * (`/root/testdata/sf*`, see TESTDATA.md / FIXTURES.md §B).
   *
-  * Schemas are declared explicitly — never inferred — mirroring the survey's
-  * conclusion (SURVEY.md §1.4) that the reference's schema-on-read
-  * (`pd.read_csv`, trading212.py:108) must become explicit `StructType`s at
-  * 100 TB scale: inference requires an extra pass over data and is
-  * nondeterministic under schema drift.
+  * The declared schemas below are the contract every query is written
+  * against (SURVEY.md §1.4: the reference's schema-on-read `pd.read_csv`,
+  * trading212.py:108, becomes explicit `StructType`s). They serve as
+  * documentation, as anchors for the typed Dataset views and as a guard:
+  * `load` fails fast when the on-disk schema lacks a declared column.
   *
-  * All loaders are thin `spark.read.parquet` wrappers: Parquet footers carry
-  * the physical schema, and Catalyst's vectorized reader + column pruning +
-  * row-group predicate pushdown do the heavy lifting. The explicit schemas
-  * below serve as (a) documentation, (b) compile-time anchors for the typed
-  * Dataset views, and (c) a guard: `load` verifies the on-disk schema contains
-  * the expected columns so drift fails fast instead of mid-query.
+  * The physical schema comes from ONE parquet footer, read on the driver
+  * ([[footerSchema]]), and the scan is handed that schema. A plain
+  * `spark.read.parquet` infers it instead, which submits a one-task Spark
+  * job per load — a fixed cost paid before every plan that reads a
+  * fixture. The footer is converted by the same Spark routine inference
+  * uses, under the session's conf, so Spark's own row metadata, the
+  * nanos-as-long timestamps and TIMESTAMP_NTZ come out exactly as
+  * inference gives them. The file is the one inference reads: the table
+  * file itself, or the first data file in path order of a Spark-written
+  * directory (which holds no parquet summary file). Catalyst's
+  * vectorized reader, column pruning and row-group pushdown do the rest.
   */
 object Tables {
 
@@ -71,7 +83,7 @@ object Tables {
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
-  private val expected: Map[String, StructType] = Map(
+  private[graft] val expected: Map[String, StructType] = Map(
     "region" -> region, "nation" -> nation, "customer" -> customer,
     "supplier" -> supplier, "part" -> part, "orders" -> orders,
     "lineitem" -> lineitem, "events" -> events, "documents" -> documents,
@@ -144,7 +156,11 @@ object Tables {
     // a NANOS o_orderdate would have crashed every orders query).
     if (expected.get(name).exists(_.fields.exists(_.dataType == TimestampType)))
       requireNanosAsLong(spark)
-    val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val conf = spark.sessionState.newHadoopConf()
+    val first = dataFiles(conf, path).headOption.getOrElse(
+      throw new IllegalArgumentException(s"table $name: no parquet data file at $path"))
+    val raw = spark.read.schema(footerSchema(spark, conf, first)).parquet(path)
     val tsCols = expected.get(name).toSeq.flatMap(_.fields)
       .collect { case f if f.dataType == TimestampType && raw.columns.contains(f.name) => f.name }
     val df = tsCols.foldLeft(raw)((d, c) => normalizeTs(d, c))
@@ -155,9 +171,36 @@ object Tables {
     df
   }
 
+  /** The parquet data files of `path`, in the order Spark's schema
+    * inference considers them: the file itself, or the directory's
+    * visible files (Spark's listing skips `_`- and `.`-prefixed names:
+    * `_SUCCESS`, checksums) sorted by path. Empty if `path` is missing. */
+  private def dataFiles(conf: Configuration, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    try {
+      val top = fs.getFileStatus(p)
+      if (!top.isDirectory) Seq(top)
+      else fs.listStatus(p).toSeq
+        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+        .sortBy(_.getPath.toString)
+    } catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  /** The Spark schema of one parquet file, from its footer alone: the
+    * conversion schema inference applies to the file it picks, with the
+    * session's parquet conf, and no Spark job. */
+  private def footerSchema(spark: SparkSession, conf: Configuration,
+      file: FileStatus): StructType = {
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
   /** Events as a file STREAM with the same type-adaptive `ts` handling as
     * the batch [[load]]. Structured Streaming requires an explicit schema,
-    * so this peeks the parquet footer via a batch read (metadata-only),
+    * so this reads the physical `ts` type from the files' footers,
     * mirrors the physical `ts` type into the stream schema, then normalizes
     * to canonical TimestampType — the four real-streaming queries share this
     * instead of hard-coding a physical type that the next fixture
@@ -180,27 +223,22 @@ object Tables {
     // one physical ts type — mixed generations under ONE stream schema
     // would silently misread some files, which is exactly the drift
     // normalizeTs exists to absorb, so fail loudly instead.
-    // The peek costs a driver-side listing and one footer read per file,
-    // and a fixture dir's physical layout cannot change within a session,
-    // so the physical ts type is a staged input: paid once, not once per
-    // streaming query execution. The peek reads the glob's matches as
-    // literal paths: a batch read of the glob itself makes Spark look for
-    // a sink metadata directory under the literal glob name, which fails
-    // and logs a FileNotFoundException warning on every peek.
+    // The peek costs a driver-side listing and one footer read per file
+    // (no Spark job), and a fixture dir's physical layout cannot change
+    // within a session, so the physical ts type is a staged input: paid
+    // once, not once per streaming query execution.
     val glob = s"$sfDir/events.parqu*"
     graft.Scratch.staged(spark, sfDir, "events_stream_ts") {
+      val conf = spark.sessionState.newHadoopConf()
       val matched = GraftFs.listNames(sfDir).filter(_.startsWith("events.parqu"))
-        .sorted.map(GraftFs.child(sfDir, _))
+        .sorted.flatMap(n => dataFiles(conf, GraftFs.child(sfDir, n)))
       require(matched.nonEmpty, s"events stream glob $glob matches no files")
-      val peek = spark.read.parquet(matched.toIndexedSeq: _*)
-      val top = peek.schema("ts").dataType
-      val perFile = peek.inputFiles.toSeq
-        .map(p => spark.read.parquet(p).schema("ts").dataType).distinct
-      require(perFile.forall(_ == top),
+      val perFile = matched.map(f => footerSchema(spark, conf, f)("ts").dataType).distinct
+      require(perFile.size == 1,
         s"events stream glob $glob matches files with mixed physical ts types " +
           s"(${perFile.mkString(", ")}); one stream schema cannot read them all — " +
           "split the landing by writer generation")
-      top
+      perFile.head
     }
   }
 }

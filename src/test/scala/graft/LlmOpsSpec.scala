@@ -438,6 +438,37 @@ class LlmOpsSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(withTerm == ids.length, "every returned doc must contain a query term")
   }
 
+  test("tfidf scoring: repeated terms count, documents without a term or text score nothing") {
+    val dir = Scratch.register(java.nio.file.Files.createTempDirectory("tfidf-edge").toString)
+    val texts = Seq(
+      1L -> "join join vector alpha",    // a repeated term
+      2L -> "stream",
+      3L -> "nothing to see here",       // no term
+      4L -> null,                        // no text
+      5L -> "  JOIN   Stream  beta ",    // case and whitespace normalize
+      6L -> "vectors joined streams")    // near misses are not terms
+    val s = spark
+    import s.implicits._
+    texts.map { case (id, t) => (id, t, "en", "src0", Option(t).fold(0L)(_.length.toLong)) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    // the oracle's arithmetic: (tf / len) * (N / df) per term, 0.0 when
+    // absent, added in term order
+    val toks = texts.collect { case (id, t) if t != null => id -> t.trim.toLowerCase.split("\\s+").toSeq }
+    val terms = Seq("join", "vector", "stream")
+    val n = texts.size.toDouble
+    val df = terms.map(t => t -> toks.count(_._2.contains(t)).toDouble).toMap
+    val expected = toks.map { case (id, tk) =>
+      id -> terms.map { t =>
+        val tf = tk.count(_ == t)
+        if (tf == 0) 0.0 else (tf.toDouble / tk.size.toDouble) * (n / df(t))
+      }.reduceLeft(_ + _)
+    }.filter(_._2 > 0.0).sortBy { case (id, sc) => (-sc, id) }
+    assert(expected.map(_._1) == Seq(1L, 2L, 5L))
+    val out = TextOps.tfidfTopK(spark, dir).collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    assert(out == expected)
+  }
+
   test("rrf fusion: fused score is exactly the integer RRF of the row's own ranks") {
     val out = TextOps.rrfFusion(spark, sfDir).collect()
     assert(out.nonEmpty && out.length <= 10)

@@ -613,6 +613,20 @@ class PlanShapeSpec extends SparkTestBase {
     assert(scans >= 3, s"expected 3 graftlog phase scans, got $scans:\n$plan")
   }
 
+  test("lexical retrieval is shuffle-free: two narrow passes over documents, no postings exchange") {
+    // term counts come from each document's own token array and the corpus
+    // statistics from one broadcast aggregate, so neither query plans the
+    // (doc_id, len, token) postings exchange, and documents is read twice:
+    // once for the statistics, once for the scored rows
+    Seq("docs_tfidf_topk", "docs_rrf_fusion").foreach { name =>
+      val plan = executedPlan(SparkEntry.queries(name)(spark, sfDir))
+        .split("== Initial Plan ==")(0)
+      val scans = plan.split("\n").count(l => l.contains("FileScan") && l.contains("/documents.parquet"))
+      assert(scans >= 1 && scans <= 2, s"$name scans documents $scans times:\n$plan")
+      assert(!plan.contains("hashpartitioning"), s"$name plans a hash exchange:\n$plan")
+    }
+  }
+
   test("pq search joins codebooks as broadcasts; the corpus never shuffles pre-rank") {
     val plan = executedPlan(graft.operators.VectorOps.pqTopK(spark, sfDir))
       .split("== Initial Plan ==")(0)

@@ -73,6 +73,26 @@ class StagedInputSpec extends SparkTestBase {
     } finally Scratch.onAccess = (_, _, _) => ()
   }
 
+  test("calling a query restores its fresh input 0 times on the first call, once on each later call") {
+    // Scratch.fresh restores the pristine copy on every access that does
+    // not build it, so its non-building accesses count the restores
+    val q = Bench.benchable("delete_dsv2_rewrite")
+    val restores = new AtomicInteger()
+    Scratch.purge(spark)
+    Scratch.onAccess = { (tag, _, built) =>
+      if (tag == "del_ev" && !built) restores.incrementAndGet()
+      ()
+    }
+    try {
+      val first = q(spark, sfDir).collect().toSeq
+      assert(restores.get == 0, s"the first call restored its input ${restores.get} times")
+      (1 to 2).foreach { i =>
+        assert(q(spark, sfDir).collect().toSeq == first, s"call ${i + 1} read a different input")
+        assert(restores.get == i, s"${i + 1} calls restored the input ${restores.get} times")
+      }
+    } finally Scratch.onAccess = (_, _, _) => ()
+  }
+
   test("a staged build may stage another input") {
     val v = Scratch.staged(spark, "nested", "outer") {
       Scratch.staged(spark, "nested", "inner")("in") + "+out"
